@@ -1,11 +1,13 @@
 """inpe_queimadas_etl_spark — a PySpark-native analytics engine.
 
-A from-scratch re-expression of the query and data-processing
-capabilities of the reference ETL system
-(rafaelparanhoss/inpe-queimadas-etl, surveyed in /root/repo/SURVEY.md)
-as an idiomatic Spark DataFrame/SQL engine, plus the large-scale
-training-data operators (dedup, similarity search, text analysis,
-multimodal plumbing) such an engine needs at 100 TB scale.
+A ground-up re-expression of the reference INPE fire-hotspot ETL
+system (rafaelparanhoss/inpe-queimadas-etl, surveyed in SURVEY.md) as
+an idiomatic Spark DataFrame/SQL engine: daily CSVs are ingested,
+curated and deduplicated, enriched by point-in-polygon, rolled up
+into marts, published to a partitioned warehouse and served to a
+dashboard. Alongside it sit the large-scale training-data operators
+(dedup, similarity-search kernels, text analysis, multimodal
+plumbing) exercised by the query suite.
 
 Layout
 ------
@@ -17,13 +19,19 @@ Layout
                  resolution (reference: src/etl/extract, transform).
 - ``functions``  scalar column helpers (event hash, cleansing,
                  decimal-comma cast, event-day coalesce).
+- ``transform`` / ``enrich`` / ``marts``
+                 curation, spatial attribution and the mart rollups.
+- ``pipeline``   the batch orchestration and the warehouse publish.
+- ``queries`` / ``geoqueries`` / ``api`` / ``serving_cache``
+                 the dashboard read path and its HTTP front.
+- ``cli``        ``run``, ``checks``, ``validate-repo`` and the
+                 corpus commands.
 - ``operators``  reusable distributed operators: relational helpers
                  (zero-fill, top-1-per-group, moving averages),
                  dedup family, similarity search, text analysis,
                  multimodal column plumbing, geo joins.
-- ``plans``      explain/inspection helpers for plan review.
-- ``streaming``  Structured Streaming foreachBatch wrapper over the
-                 batch pipeline.
+- ``streaming``  Structured Streaming foreachBatch wrappers over the
+                 batch pipeline and the corpus dedup drains.
 - ``suite``      the declared query suite: name -> (Spark callable,
                  DuckDB oracle SQL) consumed by __spark_entry__.py.
 """

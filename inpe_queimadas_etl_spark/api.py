@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import math
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -49,29 +50,7 @@ class ApiContext:
     # and the web municipality PolyFeature list
     chart_uf: DataFrame | None = None
     mun_web_feats: list | None = None
-    # optional ANN serving artifacts (r9): a save_ann_model JSON +
-    # its build_ann_store dir, and (optionally) a raw-vector table
-    # for exact rerank — /api/ann/topk 404s when absent
-    ann_model_path: str | None = None
-    ann_store_path: str | None = None
-    ann_rerank: DataFrame | None = None
-    # OR a rebuild_ann deployment dir (r10): when explicit paths are
-    # absent, /api/ann/topk resolves this dir's CURRENT pointer and
-    # PINS the pointer's model sha — the publish -> serve loop with
-    # no way to serve a mid-swap state
-    ann_base_dir: str | None = None
-    # how often (seconds) a long-lived server re-checks the CURRENT
-    # pointer and the tombstone file between requests — the
-    # rebuild/gc/takedown -> serve loop WITHOUT a restart. Each state
-    # stays sha-pinned and atomic (a reload swaps whole states, and a
-    # mid-swap pair is refused exactly like at first load); None
-    # freezes the context to what it first resolved (the r9 stance)
-    ann_follow_s: float | None = 5.0
     cache: ServingCache = field(default_factory=ServingCache)
-    # lazily-populated (model, store_df, sizes) for /api/ann/topk —
-    # loaded once, then refreshed at most every ann_follow_s by the
-    # cheap pointer/tombstone re-reads (never re-parsed per request)
-    _ann_state: dict = field(default_factory=dict, repr=False)
 
 
 _FILTER_KEYS = ("uf", "bioma", "mun", "uc", "ti")
@@ -242,25 +221,31 @@ def _ep_bounds(ctx: ApiContext, params: dict) -> dict:
     return out
 
 
+def _tol_m(params: dict) -> float:
+    tol = float(params.get("tol_m", GQ.GEO_SIMPLIFY_DEFAULT_TOL_M))
+    # NaN would skip simplification and serialize as a bare NaN
+    if not math.isfinite(tol):
+        raise ValueError("tol_m must be a finite number")
+    return tol
+
+
 def _ep_geo(ctx: ApiContext, params: dict) -> dict:
     entity = params.get("entity") or "uc"
     f, t = _parse_range(params)
     flt = _filters(params)
     simplify = params.get("simplify", "1") not in ("0", "false", "no")
-    tol = float(params.get("tol_m", GQ.GEO_SIMPLIFY_DEFAULT_TOL_M))
     return GQ.geo_overlay(
         entity, params.get("key", ""), _feats_for(ctx, entity), ctx.fact,
-        f, t, flt, simplify=simplify, tol_m=tol,
+        f, t, flt, simplify=simplify, tol_m=_tol_m(params),
     )
 
 
 def _ep_geo_qa(ctx: ApiContext, params: dict) -> dict:
     entity = params.get("entity") or "uc"
     simplify = params.get("simplify", "1") not in ("0", "false", "no")
-    tol = float(params.get("tol_m", GQ.GEO_SIMPLIFY_DEFAULT_TOL_M))
     return GQ.geo_overlay_qa(
         entity, params.get("key", ""), _feats_for(ctx, entity),
-        simplify=simplify, tol_m=tol,
+        simplify=simplify, tol_m=_tol_m(params),
     )
 
 
@@ -319,1086 +304,6 @@ def _ep_validate(ctx: ApiContext, params: dict) -> dict:
     return out
 
 
-def _ann_budget_probes(
-    cents3: list, query_vecs: list, sizes: dict, frac: float
-) -> list:
-    """Driver-side replay of THE budgeted multi-probe rule
-    (`suite.llmdata._budgeted_probe_filter` — probe centroids in
-    (desc csim, asc centroid_id) order until the cumulative assigned
-    cluster size reaches ``max(1, int(corpus * frac))``), over
-    CALLER-SUPPLIED query vectors. Bit-faithful to the Spark form:
-    the cosine is the same left-associated dot chain / one multiply /
-    one divide (`_np_dot`, `_vec_norm_replay` — the IEEE replay
-    argument), try_divide's NULL on a zero denominator maps to
-    rank-last exactly like desc-nulls-last, and the budget integer is
-    the same ``int()`` truncation. K-row x Q work on the driver — the
-    probe list is bounded serving state, never a Spark job.
-
-    Returns ``[(query_id, centroid_id, qv), ...]`` — the
-    `pq_ivf_adc_search_scan` probe contract."""
-    from .operators.pq import _np_dot, _vec_norm_replay
-
-    target = max(1, int(sum(sizes.values()) * frac))
-    probes = []
-    for qid, qv in query_vecs:
-        qv = [float(x) for x in qv]
-        nq = _vec_norm_replay(qv)
-        ranked = []
-        for cid, cv, cn in cents3:
-            den = nq * cn
-            csim = None if den == 0.0 else _np_dot(qv, cv) / den
-            ranked.append((cid, csim))
-        ranked.sort(
-            key=lambda t: (t[1] is None, -(t[1] or 0.0), t[0])
-        )
-        cum = 0
-        for cid, _csim in ranked:
-            if cum >= target:
-                break
-            probes.append((int(qid), int(cid), qv))
-            cum += sizes.get(cid, 0)
-    return probes
-
-
-def ann_topk(
-    spark: SparkSession,
-    store_path: str,
-    model_path: str,
-    query_vecs: list,
-    k: int = 5,
-    rerank_with: DataFrame | None = None,
-    expected_sha256: str | None = None,
-    among: DataFrame | None = None,
-) -> DataFrame:
-    """Parameterized ANN serving over FROZEN artifacts (VERDICT r8 #1
-    — the §2.11 posture, reference api/app/main.py:1509-1594's
-    parameterized top-k, applied to similarity search): load a
-    `save_ann_model` artifact, probe CALLER-SUPPLIED query vectors
-    against its coarse codebook under the budgeted multi-probe rule,
-    ADC-score ONLY probed clusters of the persisted
-    centroid_id-partitioned code store (physically partition pruning
-    — only probed clusters' files are read), and return top-``k`` per
-    query.
-
-    ``query_vecs`` is ``[(query_id, [float, ...]), ...]`` — few-row
-    serving state by contract (each query's LUT rides the scan
-    closure). A store row whose vec_id equals a query_id is treated
-    as that query's self-match and skipped (the sim8/sim9
-    convention). ``rerank_with`` (optional ``(vec_id, v)`` DataFrame,
-    e.g. the raw embeddings table) switches the tail to exact cosine
-    rerank over the top-``cand`` ADC candidates — the shared
-    `_score_rank_top5` tail with ``k`` passed through, so served
-    rows CANNOT drift from the oracle-pinned sim9/sim10 semantics;
-    without it, results rank by ADC score alone (the store carries no
-    raw vectors — 100 TB serving reads 12-16 B/vector of codes).
-
-    CONTRACT (ADVICE r9): ``rerank_with`` must cover every store
-    vec_id — the rerank is an inner join, so a candidate absent from
-    the table (e.g. a drain-appended doc missing from an older
-    embeddings snapshot) is dropped and the query returns fewer than
-    ``k`` rows. Detecting the drop in-plan would force an outer join
-    whose preserved side is the bounded one, i.e. a corpus-side
-    build/shuffle — wrong at 100 TB — so the contract is enforced at
-    the collecting fronts instead: `_ep_ann_topk` flags short results
-    in the response and `cmd_ann_search` logs them.
-
-    ``among`` (optional ``vec_id`` DataFrame) SCOPES the search: only
-    store rows whose vec_id the frame names are scored — the
-    vector-store "filtered search" shape (find neighbors among docs
-    where lang='en'), PRE-filter semantics: the filter lands below
-    the ADC scan as a semi join, so the top-``cand`` cut and the
-    rank/rerank tail all operate within the allowed subset and a
-    heavily-filtered query cannot starve (post-filtering k rows
-    would). The probe budget is unchanged — probing is geometric, the
-    filter is set membership. AQE picks the join strategy (broadcast
-    for bounded filters, shuffle when corpus-scale).
-
-    Refusals (the load_tokenizer stance): a model artifact failing
-    ``expected_sha256``, and a store stamped with a DIFFERENT model's
-    sha (`read_ann_store` — build-time meta OR the drain's append
-    marker) — mismatched codes decode to plausible garbage, so they
-    must never be served."""
-    st = _load_ann_state(
-        spark, model_path, store_path, expected_sha256=expected_sha256
-    )
-    return _ann_topk_loaded(
-        spark, st["store"], st["sizes"], st["model"], query_vecs, k,
-        rerank_with, tombstones=st["tombstones"], among=among,
-    )
-
-
-def _load_ann_state(
-    spark: SparkSession,
-    model_path: str,
-    store_path: str,
-    expected_sha256: str | None = None,
-) -> dict:
-    """THE artifact-loading path (VERDICT r9 #6 — one code path, so a
-    refusal or fallback change cannot fork between entry points):
-    load the model (sha-checked), open the stamped store (mismatch
-    refused), and resolve cluster sizes — from the build-time stamp
-    when present (immutable store: exact by construction), else one
-    K-row aggregate (drain-maintained dirs, where appends would stale
-    a baked table) — plus the store's tombstone set (retired ids must
-    never be served). Returns ``{"model", "store", "sizes",
-    "tombstones"}``. The HTTP front caches this state and refreshes
-    the pointer/tombstone facts on the `_ensure_ann_state` follow
-    interval; batch entry points (`ann_topk`, the CLI) re-read per
-    call."""
-    from .operators.pq import (
-        load_ann_model,
-        read_ann_store,
-        read_ann_tombstones,
-    )
-    from .suite.llmdata import _cluster_sizes
-
-    model = load_ann_model(model_path, expected_sha256=expected_sha256)
-    store, sizes = read_ann_store(spark, store_path, model)
-    if sizes is None:
-        sizes = _cluster_sizes(store)
-    return {
-        "model": model,
-        "store": store,
-        "store_path": store_path,
-        "sizes": sizes,
-        "tombstones": read_ann_tombstones(store_path),
-    }
-
-
-def _ensure_ann_state(ctx: ApiContext) -> dict:
-    """Resolve and cache the context's (model, store) pair — the one
-    lazy-load shared by every ANN endpoint. Direct (model_path,
-    store_path) wins; else the deployment dir's CURRENT pointer is
-    resolved with its sha pinned, so a hand-mangled or mid-swap pair
-    is refused, never served.
-
-    ``ctx.ann_follow_s`` makes a long-lived server FOLLOW lifecycle
-    changes without a restart: at most once per interval it re-reads
-    the two cheap facts — the CURRENT pointer (a rebuild or GC flipped
-    the version: reload the whole state under the new sha) and the
-    tombstone file (a takedown landed: swap in the new set, the
-    store/model untouched). Between checks every request reads the
-    cached state; a reload that fails (mid-swap CURRENT, missing
-    file) raises to the endpoint exactly like a first load — the old
-    state is replaced only by a complete new one."""
-    import time
-
-    # every mutation below is either a single-key assignment on the
-    # live dict or a whole-dict REFERENCE swap: handler threads run
-    # concurrently, and an in-flight request must keep seeing the
-    # complete state it grabbed (never a mid-rebuild half-dict)
-    st = ctx._ann_state
-    now = time.monotonic()
-    fresh = (
-        st
-        and (
-            ctx.ann_follow_s is None
-            or now - st.get("_checked", now) < ctx.ann_follow_s
-        )
-    )
-    if fresh:
-        return st
-    if ctx.ann_model_path is not None and ctx.ann_store_path is not None:
-        if not st:
-            new = _load_ann_state(
-                ctx.spark, ctx.ann_model_path, ctx.ann_store_path
-            )
-            new["version"] = None
-            new["_checked"] = now
-            ctx._ann_state = new
-            return new
-        # fixed paths: only the tombstone set can move underneath
-        from .operators.pq import read_ann_tombstones
-
-        st["tombstones"] = read_ann_tombstones(ctx.ann_store_path)
-        st["_checked"] = now
-        return st
-    if ctx.ann_base_dir is None:
-        raise LookupError("ANN model/store not loaded")
-    from .operators.pq import read_ann_tombstones, resolve_ann_current
-
-    cur = resolve_ann_current(ctx.ann_base_dir)
-    if st and st.get("version") == cur.get("version"):
-        st["tombstones"] = read_ann_tombstones(st["store_path"])
-        st["_checked"] = now
-        return st
-    new = _load_ann_state(
-        ctx.spark,
-        cur["model_path"],
-        cur["store_path"],
-        expected_sha256=cur["model_sha256"],
-    )
-    new["version"] = cur.get("version")
-    new["_checked"] = now
-    ctx._ann_state = new
-    return new
-
-
-def _ann_topk_loaded(
-    spark: SparkSession,
-    store: DataFrame,
-    sizes: dict,
-    model: dict,
-    query_vecs: list,
-    k: int,
-    rerank_with: DataFrame | None,
-    tombstones: "list[int] | None" = None,
-    among: DataFrame | None = None,
-) -> DataFrame:
-    """`ann_topk`'s body over ALREADY-LOADED artifacts — the HTTP
-    front holds (model, store, sizes) once per context (they are
-    frozen by the sha-stamp design) so repeated requests never re-pay
-    the model parse / meta read / size aggregate (review r9)."""
-    from pyspark.sql import functions as F
-
-    from .operators.pq import pq_ivf_adc_search_scan
-
-    if k <= 0:
-        raise ValueError("k must be positive")
-    qids = [int(qid) for qid, _ in query_vecs]
-    if len(set(qids)) != len(qids):
-        # duplicate ids would double-score their probes and inflate
-        # ranks — refuse rather than return silently wrong top-k
-        raise ValueError("query_vecs ids must be unique")
-    if any(len(qv) != model["dim"] for _, qv in query_vecs):
-        raise ValueError(
-            f"query vectors must have dim {model['dim']} (the model's)"
-        )
-    import math
-
-    if any(
-        not math.isfinite(x) for _, qv in query_vecs for x in qv
-    ):
-        # the artifact-level non-finite refusal, mirrored at query
-        # time (ADVICE r9): a NaN component makes the probe sort's
-        # cosine key order-UNDEFINED (NaN comparisons are all False),
-        # so the budgeted probe set would be arbitrary — and the HTTP
-        # front would then cache the garbage response for its TTL
-        raise ValueError(
-            "query vectors must be finite (no NaN/Infinity components)"
-        )
-    probes = _ann_budget_probes(
-        model["cents3"], query_vecs, sizes, model["frac"]
-    )
-    probed_cids = sorted({cid for _, cid, _ in probes})
-    # literal IN below the scan == partition pruning on the
-    # partitioned store (the sim9 PartitionFilter pin, now physical)
-    pruned = store.filter(F.col("centroid_id").isin(probed_cids))
-    if tombstones:
-        # retired ids (delete_from_ann_store): a bounded literal
-        # NOT-IN below the scan — pushed to the parquet reader, never
-        # a corpus-side join; compaction empties the set again
-        pruned = pruned.filter(~F.col("vec_id").isin(tombstones))
-    if among is not None:
-        # scoped search: a semi join BELOW the ADC scan — the cand
-        # cut and tail operate within the allowed subset (pre-filter
-        # semantics; see ann_topk's docstring)
-        pruned = pruned.join(among.select("vec_id"), "vec_id", "semi")
-    cand = max(int(model["cand"]), k)
-    rot = model.get("rot")
-    if rot is None:
-        scan_cents = model["cents"]
-    else:
-        # OPQ model (sim11's tier): the store's codes quantize the
-        # ROTATED residual, so the scan's centroid/query vectors move
-        # to rotated coordinates too (probe SELECTION above stayed in
-        # original space — rotation sits below the coarse quantizer)
-        from .operators.pq import rot_apply
-
-        scan_cents = [
-            (cid, rot_apply(rot, cv)) for cid, cv in model["cents"]
-        ]
-        probes = [
-            (qid, cid, rot_apply(rot, qv)) for qid, cid, qv in probes
-        ]
-    scored = pq_ivf_adc_search_scan(
-        pruned, model["cb"], scan_cents, probes, cand
-    )
-    q = spark.createDataFrame(
-        [(int(qid), [float(x) for x in qv]) for qid, qv in query_vecs],
-        "query_id long, qv array<double>",
-    )
-    return _ann_rank_tail(
-        scored, q, k, cand, rerank_with, hint_broadcast=True
-    )
-
-
-def _ann_rank_tail(
-    scored: DataFrame,
-    q: DataFrame,
-    k: int,
-    cand: int,
-    rerank_with: DataFrame | None,
-    hint_broadcast: bool,
-) -> DataFrame:
-    """The ranking tail shared by serving (`ann_topk`) and batch
-    (`ann_topk_batch`) — ONE code path so the two forms cannot drift
-    (the _score_rank_top5 stance). ``q`` is the (query_id, qv) frame;
-    ``hint_broadcast`` marks the bounded-Q serving regime, where the
-    Q x cand candidate set and the query table are explicitly
-    broadcast so the corpus-sized vector table never shuffles for the
-    rerank; a batch job's candidate set (Q up to 10^6 x cand) is left
-    to AQE, which picks broadcast when it fits and a shuffle join
-    when it must."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from .operators.similarity import vec_norm
-    from .suite.llmdata import _score_rank_top5
-
-    if rerank_with is None:
-        # FINAL user-facing ranking (review r9): null scores —
-        # degenerate zero-reconstruction store rows, whose NaN became
-        # null across Arrow — are dropped, not served as rank 1. The
-        # nulls-FIRST convention below is the internal candidate-
-        # superset order (it must match the per-batch prune); a
-        # served result must never lead with garbage. Degenerate
-        # rows can still consume per-batch prune slots (the pinned
-        # convention); a store with cand-many such rows per batch is
-        # pathological and surfaces here as fewer than k rows.
-        w_out = Window.partitionBy("query_id").orderBy(
-            F.desc("pq_score"), F.asc("vec_id")
-        )
-        return (
-            scored.filter(F.col("pq_score").isNotNull())
-            .withColumn("rn", F.row_number().over(w_out))
-            .filter(F.col("rn") <= k)
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("rn").cast("long").alias("rank"),
-                F.col("pq_score").alias("score"),
-            )
-        )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.desc_nulls_first("pq_score"), F.asc("vec_id")
-    )
-    ranked = scored.withColumn("rn", F.row_number().over(w_global))
-    qn = q.withColumn("nq", vec_norm("qv"))
-    cand_ids = ranked.filter(F.col("rn") <= cand).select(
-        "query_id", "vec_id"
-    )
-    if "nrm" in rerank_with.columns:
-        vecs = rerank_with.select("vec_id", "v", F.col("nrm").alias("nv"))
-    else:
-        vecs = rerank_with.select("vec_id", "v").withColumn(
-            "nv", vec_norm("v")
-        )
-    if hint_broadcast:
-        # candidates are bounded serving state (Q x cand rows) —
-        # broadcast BOTH small sides so the big vector table never
-        # shuffles for the rerank (at 100 TB the rerank fetch must be
-        # a broadcast probe, not an exchange of the corpus)
-        paired = vecs.join(F.broadcast(cand_ids), "vec_id").join(
-            F.broadcast(qn), "query_id"
-        )
-    else:
-        paired = vecs.join(cand_ids, "vec_id").join(qn, "query_id")
-    return _score_rank_top5(paired, k=k)
-
-
-def ann_assign_probes(
-    queries: DataFrame,
-    model: dict,
-    sizes: dict,
-    query_id_check=None,
-) -> DataFrame:
-    """Distributed probe assignment for a (query_id, qv) DataFrame:
-    one narrow Arrow scan emitting ``(query_id, qvr, qclusters)`` —
-    ONE row per query, carrying the rotated scan-coordinate vector
-    once and the budgeted probe clusters as an array (a query's
-    vector must never be materialized per probe: at Q=10^6 that
-    nprobe-fold duplication is the difference between a ~0.6 GB and
-    a ~3 GB driver collect in `ann_topk_batch`). ``qvr`` is in SCAN
-    coordinates (rotated when the model carries an OPQ rotation; the
-    probe SELECTION itself stays in original space, exactly like the
-    serving path — rotation sits below the coarse quantizer).
-
-    Bit-faithful by IEEE replay (pinned against `_ann_budget_probes`
-    + `rot_apply` over random and degenerate vectors in
-    tests/test_ann_batch.py): the query norm, the K query-centroid
-    dots, and the rotation are the serving path's left-to-right
-    chains VECTORIZED over the batch (same per-element operation
-    sequence; IEEE multiply commutes bit-exactly), and the
-    rank-then-budget loop runs the identical sort key and cumulative
-    cut per query (K-element Python work — the scan cost is the
-    numpy part). At Q=10^6, dim 64, K=64 that is a few GEMM-shaped
-    passes per batch instead of ~10^10 interpreted float ops. The
-    closure carries model-sized state only (K centroids + sizes +
-    the rotation); nothing scales with Q. Dim/finiteness violations
-    surface as ValueError from the executors (a batch job's per-row
-    422).
-
-    ``query_id_check`` (optional, serialized to the executors) gets
-    each batch's query_id numpy array and raises ValueError on a
-    caller-specific id-contract violation — this is where a consumer
-    like `semantic_decontamination_store` validates its remapped id
-    range INSIDE the scan that is already running, instead of paying
-    a separate full-corpus action for the check (VERDICT r10 #3)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    cents3 = model["cents3"]
-    frac = model["frac"]
-    rot = model.get("rot")
-    dim = model["dim"]
-    target = max(1, int(sum(sizes.values()) * frac))
-    cids = [int(cid) for cid, _, _ in cents3]
-    CM = np.array([cv for _, cv, _ in cents3], dtype=np.float64)  # K,dim
-    CN = np.array([cn for _, _, cn in cents3], dtype=np.float64)
-    RM = None if rot is None else np.array(rot, dtype=np.float64)
-    csz = [int(sizes.get(cid, 0)) for cid in cids]
-
-    def assign(it):
-        import pandas as pd
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            if pdf["query_id"].isna().any():
-                # a null id survives the long cast and would die rows
-                # later at int(None) in the chunk collector — refuse
-                # at the scan with the contract named (review r11)
-                raise ValueError(
-                    "null query_id — query ids must be non-null"
-                )
-            if query_id_check is not None:
-                query_id_check(pdf["query_id"].to_numpy())
-            V = np.array(pdf["qv"].tolist(), dtype=np.float64)
-            if V.ndim != 2 or V.shape[1] != dim:
-                raise ValueError(
-                    f"query vectors must match the model dim {dim}; "
-                    "got a batch shaped "
-                    f"{V.shape if V.ndim == 2 else 'ragged'}"
-                )
-            if not np.isfinite(V).all():
-                bad = pdf["query_id"].iloc[
-                    int(np.nonzero(~np.isfinite(V).all(axis=1))[0][0])
-                ]
-                raise ValueError(
-                    f"query {bad}: non-finite component — probe "
-                    "ordering would be undefined"
-                )
-            # _vec_norm_replay's chain, vectorized (0.0 + x0*x0 is
-            # exact, so the seedless start matches the 0.0 seed)
-            acc = V[:, 0] * V[:, 0]
-            for i in range(1, dim):
-                acc = acc + V[:, i] * V[:, i]
-            nq = np.sqrt(acc)
-            # _np_dot's chain over every centroid at once
-            dots = V[:, 0:1] * CM[:, 0][None, :]
-            for i in range(1, dim):
-                dots = dots + V[:, i : i + 1] * CM[:, i][None, :]
-            den = nq[:, None] * CN[None, :]
-            if RM is not None:
-                # rot_apply's chain (pq_ivf_encode's rot step):
-                # input component j's contribution added in j order
-                racc = V[:, 0:1] * RM[:, 0][None, :]
-                for j in range(1, dim):
-                    racc = racc + V[:, j : j + 1] * RM[:, j][None, :]
-                VR = racc
-            else:
-                VR = V
-            oq, ov, ocs = [], [], []
-            for r in range(V.shape[0]):
-                qid = int(pdf["query_id"].iloc[r])
-                # the EXACT _ann_budget_probes rank + budget cut:
-                # (csim is None, -csim_or_0, cid) then cumulative
-                # cluster sizes until the target
-                ranked = sorted(
-                    range(len(cids)),
-                    key=lambda j: (
-                        den[r, j] == 0.0,
-                        -(
-                            (dots[r, j] / den[r, j])
-                            if den[r, j] != 0.0
-                            else 0.0
-                        ),
-                        cids[j],
-                    ),
-                )
-                probe_cids = []
-                cum = 0
-                for j in ranked:
-                    if cum >= target:
-                        break
-                    probe_cids.append(cids[j])
-                    cum += csz[j]
-                oq.append(qid)
-                ov.append([float(x) for x in VR[r]])
-                ocs.append(probe_cids)
-            yield pd.DataFrame(
-                {"query_id": oq, "qvr": ov, "qclusters": ocs}
-            )
-
-    return queries.select(
-        F.col("query_id").cast("long").alias("query_id"), "qv"
-    ).mapInPandas(
-        assign,
-        "query_id long, qvr array<double>, qclusters array<long>",
-    )
-
-
-def ann_topk_batch(
-    spark: SparkSession,
-    store_path: str,
-    model_path: str,
-    queries: DataFrame | None = None,
-    k: int | None = 5,
-    rerank_with: DataFrame | None = None,
-    expected_sha256: str | None = None,
-    chunk_queries: int | None = None,
-    among: DataFrame | None = None,
-    query_id_check=None,
-    queries_text: DataFrame | None = None,
-) -> DataFrame:
-    """BATCH-scale `ann_topk` (VERDICT r9 #1): queries arrive as a
-    ``(query_id, qv)`` DataFrame instead of a driver list, for the
-    consumers where Q is 10^4..10^6 — decontaminating a benchmark set
-    against the corpus store, semantic dedup of new shards against
-    frozen artifacts. Results are IDENTICAL to looping `ann_topk`
-    over the same vectors (pinned in tests/test_ann_serving.py): the
-    probe rule, scoring chains, tie orders, tombstone filter, and
-    ranking tail are the same code or its exact IEEE replay.
-
-    What changes is WHERE query state lives (the reference's posture:
-    set-based, one plan for all rows — enrich is a join, not a loop):
-
-    - probe assignment is a distributed Arrow scan over the query
-      frame (`ann_assign_probes`), not a driver loop;
-    - per-query LUTs are computed EXECUTOR-side, once per (task,
-      cluster), from the broadcast model
-      (`pq_ivf_adc_search_scan_grouped`) — the looped form's
-      O(Q*nprobe*m*ks) LUT closure (GBs at Q=10^5) never exists;
-    - the probe table ships as ONE torrent broadcast of numpy arrays
-      grouped by cluster (O(Q*nprobe*dim) floats — ~0.5 GB at Q=10^6,
-      dim 64: the documented driver/executor budget for this entry
-      point);
-    - the rerank tail drops the serving path's broadcast hints and
-      lets AQE pick the join strategy (a 10^6 x cand candidate set
-      must be allowed to shuffle-join the corpus).
-
-    Beyond that budget, pass ``chunk_queries``: probe rows stream to
-    the driver through `toLocalIterator` in chunks of that many
-    queries, each chunk gets its own bounded broadcast + pruned scan,
-    and the scans union under ONE ranking tail — driver memory is
-    O(chunk) instead of O(Q) and each executor-side broadcast block
-    is bounded (MEMORY_AND_DISK: a block evicts to disk instead of
-    OOMing). Results are identical to the unchunked form (pinned) —
-    chunking partitions the QUERIES, and no scoring chain crosses a
-    query boundary. The cost is one store scan per chunk, so size
-    chunks to the budget, not small: chunking exists for Q ≈ 10^7+,
-    not as a default.
-
-    The store still partition-prunes to probed clusters (with batch-Q
-    budgets that usually means every cluster — correct: the work IS
-    corpus-scale) and never shuffles; scan volume stays 12-16
-    B/vector of codes. ``among`` scopes the search exactly as in
-    `ann_topk` (pre-filter semantics: a semi join below each chunk's
-    ADC scan).
-
-    ``queries_text`` (instead of ``queries``): a ``(query_id, text)``
-    frame embedded by `hashed_doc_vectors` — the drain's corpus
-    encoder, bit-identical to the ``?text=`` serving path's
-    `hashed_text_vector` — so a TEXT benchmark decontaminates and a
-    text shard dedups against a hashed-encoder store without a
-    hand-rolled pre-embedding step (pinned equal to the vec-frame
-    form in tests/test_ann_batch.py). Hashed-encoder stores only."""
-    st = _load_ann_state(
-        spark, model_path, store_path, expected_sha256=expected_sha256
-    )
-    return _ann_topk_batch_loaded(
-        spark, st, queries, k=k, rerank_with=rerank_with,
-        chunk_queries=chunk_queries, among=among,
-        query_id_check=query_id_check, queries_text=queries_text,
-    )
-
-
-def _ann_topk_batch_loaded(
-    spark: SparkSession,
-    st: dict,
-    queries: DataFrame | None = None,
-    k: int | None = 5,
-    rerank_with: DataFrame | None = None,
-    chunk_queries: int | None = None,
-    among: DataFrame | None = None,
-    query_id_check=None,
-    queries_text: DataFrame | None = None,
-) -> DataFrame:
-    """`ann_topk_batch`'s body over ALREADY-LOADED artifacts (the
-    `_ann_topk_loaded` convention): per-call consumers load via
-    `ann_topk_batch`; long-lived ones — the HTTP front, the streaming
-    search — hold the frozen ``_load_ann_state`` dict once and call
-    this per batch, never re-paying the model parse / meta read /
-    size resolution."""
-    model, store, sizes = st["model"], st["store"], st["sizes"]
-    if (queries is None) == (queries_text is None):
-        raise ValueError(
-            "exactly one of queries (query_id, qv) / queries_text "
-            "(query_id, text) is required"
-        )
-    if queries_text is not None:
-        # text-in for the BATCH consumers (VERDICT r10 #5 —
-        # decontaminating a TEXT benchmark, deduping a text shard):
-        # embed with `hashed_doc_vectors`, the SAME Arrow encoder the
-        # streaming drain runs over the corpus and the one
-        # `hashed_text_vector` (the ?text= serving path) is pinned
-        # bit-identical to — the only geometry under which text
-        # queries against a hashed-encoder store mean anything. A
-        # store built from external embeddings wants `queries`.
-        from pyspark.sql import functions as F
-
-        from .suite.llmdata import hashed_doc_vectors
-
-        missing = {"query_id", "text"} - set(queries_text.columns)
-        if missing:
-            raise ValueError(
-                f"queries_text frame must carry columns query_id, "
-                f"text (missing: {sorted(missing)})"
-            )
-        queries = hashed_doc_vectors(
-            queries_text.select(
-                F.col("query_id").cast("long").alias("doc_id"),
-                "text",
-            ),
-            dim=model["dim"],
-        ).select(
-            F.col("doc_id").alias("query_id"), F.col("v").alias("qv")
-        )
-    if k is None:
-        # exhaustive mode (the decontamination consumers): rank every
-        # candidate the probe budget reaches — the stamped row count
-        # is an upper bound on candidates, which is all the rank tail
-        # needs (asking for more rows than exist just returns fewer)
-        k = max(1, sum(sizes.values()))
-    if k <= 0:
-        raise ValueError("k must be positive")
-    missing = {"query_id", "qv"} - set(queries.columns)
-    if missing:
-        raise ValueError(
-            f"queries frame must carry columns query_id, qv "
-            f"(missing: {sorted(missing)})"
-        )
-    import numpy as np
-
-    from pyspark.sql import functions as F
-
-    from .operators.pq import pq_ivf_adc_search_scan_grouped, rot_apply
-
-    if chunk_queries is not None and chunk_queries <= 0:
-        raise ValueError("chunk_queries must be positive")
-    qcast = queries.select(
-        F.col("query_id").cast("long").alias("query_id"), "qv"
-    )
-    cand = max(int(model["cand"]), k)
-    rot = model.get("rot")
-    scan_cents = (
-        model["cents"]
-        if rot is None
-        else [(cid, rot_apply(rot, cv)) for cid, cv in model["cents"]]
-    )
-    assigned = ann_assign_probes(
-        qcast, model, sizes, query_id_check=query_id_check
-    )
-
-    def _row_chunks():
-        if chunk_queries is None:
-            rows = assigned.collect()
-            if rows:
-                yield rows
-            return
-        # the Q ≈ 10^7+ regime: stream probe rows partition by
-        # partition — the driver holds one chunk's arrays, never Q's
-        buf = []
-        for r in assigned.toLocalIterator():
-            buf.append(r)
-            if len(buf) >= chunk_queries:
-                yield buf
-                buf = []
-        if buf:
-            yield buf
-
-    scoreds = []
-    broadcasts = []
-    id_chunks = []
-    try:
-        for probe_rows in _row_chunks():
-            # each vector once (chunk x dim), clusters as index
-            # lists — each broadcast is O(chunk*dim + chunk*nprobe),
-            # never nprobe-fold duplicated
-            qids_arr = np.array(
-                [int(r["query_id"]) for r in probe_rows],
-                dtype=np.int64,
-            )
-            # duplicate ids would double-score their probes and
-            # inflate ranks — refuse rather than return silently
-            # wrong top-k. WITHIN-chunk duplicates (adjacent rows —
-            # the common case) fail fast before this chunk ships
-            # anything; the cross-chunk sweep runs ONCE after the
-            # loop (review r10 round 4: an incremental
-            # union1d/isin per chunk was O(Q²/chunk·log Q) driver
-            # work at the 10^7-query scale chunking exists for —
-            # one concatenate+unique is O(Q log Q) total, and both
-            # checks still precede every scoring ACTION: the scans
-            # are lazy)
-            uniq, counts = np.unique(qids_arr, return_counts=True)
-            if len(uniq) != len(qids_arr):
-                raise ValueError(
-                    "queries ids must be unique (duplicate: "
-                    f"{int(uniq[counts > 1][0])})"
-                )
-            id_chunks.append(qids_arr)
-            qv_mat = np.array(
-                [list(r["qvr"]) for r in probe_rows], dtype=np.float64
-            )
-            by_cluster: dict = {}
-            for i, r in enumerate(probe_rows):
-                for cid in r["qclusters"]:
-                    by_cluster.setdefault(int(cid), []).append(i)
-            if not by_cluster:
-                continue
-            grouped = {
-                "qids": qids_arr,
-                "qv": qv_mat,
-                "by_cluster": {
-                    cid: np.array(idx, dtype=np.int64)
-                    for cid, idx in by_cluster.items()
-                },
-            }
-            pruned = store.filter(
-                F.col("centroid_id").isin(sorted(by_cluster))
-            )
-            if st["tombstones"]:
-                pruned = pruned.filter(
-                    ~F.col("vec_id").isin(st["tombstones"])
-                )
-            if among is not None:
-                # scoped search, pre-filter semantics (the ann_topk
-                # contract): the semi join sits below the ADC scan
-                pruned = pruned.join(
-                    among.select("vec_id"), "vec_id", "semi"
-                )
-            probes_bc = spark.sparkContext.broadcast(grouped)
-            broadcasts.append(probes_bc)
-            scoreds.append(
-                pq_ivf_adc_search_scan_grouped(
-                    pruned, model["cb"], scan_cents, probes_bc, cand
-                )
-            )
-        all_ids = (
-            np.concatenate(id_chunks)
-            if id_chunks
-            else np.empty(0, dtype=np.int64)
-        )
-        if len(np.unique(all_ids)) != len(all_ids):
-            # a duplicate split ACROSS chunks is the same silent
-            # double-score; caught here, still before any action
-            uniq, counts = np.unique(all_ids, return_counts=True)
-            raise ValueError(
-                "queries ids must be unique (duplicate: "
-                f"{int(uniq[counts > 1][0])})"
-            )
-    except BaseException:
-        # refusal or Spark failure mid-stream: release every chunk
-        # broadcast already shipped — nothing downstream will ever
-        # reference them (the plans in `scoreds` are dropped too)
-        for bc in broadcasts:
-            try:
-                bc.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 - best-effort cleanup
-                pass
-        raise
-    if not scoreds:
-        # empty query frame (e.g. an empty shard): nothing to score
-        scored = spark.createDataFrame(
-            [], "query_id long, vec_id long, pq_score double"
-        )
-    else:
-        scored = scoreds[0]
-        for s in scoreds[1:]:
-            scored = scored.unionByName(s)
-    return _ann_rank_tail(
-        scored, qcast, k, cand, rerank_with, hint_broadcast=False
-    )
-
-
-def semantic_decontamination_store(
-    spark: SparkSession,
-    corpus: DataFrame,
-    store_path: str,
-    model_path: str,
-    eval_vectors: DataFrame,
-    tau: float = 0.35,
-    k: int | None = None,
-    expected_sha256: str | None = None,
-    chunk_queries: int | None = None,
-) -> DataFrame:
-    """cur7 semantic decontamination re-platformed onto FROZEN
-    benchmark artifacts (VERDICT r9 #8 — the serving tier composing
-    with the curation tier): flag corpus documents semantically close
-    to a benchmark whose embeddings live as a persisted, sha-stamped
-    ANN store, via one `ann_topk_batch` pass. Returns the cur7
-    contract ``(vec_id, n_eval_hits, max_sim)`` — one row per
-    contaminated corpus vector.
-
-    Why a store, when `semantic_decontamination` already broadcasts
-    small eval sets: governance and scale. The benchmark becomes a
-    versioned artifact (sha-pinned model + 12-16 B/vector codes +
-    tombstones + `rebuild_ann` refresh) instead of raw vectors shipped
-    to every pipeline, and a MULTI-MILLION-item held-out set — where
-    the all-pairs broadcast form's Q x |eval| cosine wall gets
-    expensive — probes only the budgeted clusters.
-
-    Exactness dial: with the store's model trained at ``frac=1.0``
-    and ``cand >= |eval|`` (and ``k=None`` — exhaustive mode: rank
-    everything the budget reaches), every eval item reaches the
-    exact rerank and the output EQUALS
-    `cur7_semantic_decontamination`'s all-pairs form (pinned in
-    tests/test_ann_batch.py) — production dials frac/cand down for
-    approximate-but-cheap screening (missed flags bounded by probe
-    recall; the measured recall@budget lives in SCALING.md). One
-    caveat inherited from the serving tail: hit counting runs on
-    the tail's 4-dp-rounded sims, so a sim within 5e-5 of ``tau``
-    can classify differently from the unrounded all-pairs form.
-    ``eval_vectors`` is the rerank table and must cover every store
-    vec_id (the `ann_topk` coverage contract).
-
-    Corpus ids are remapped into the NEGATIVE namespace (``-1 -
-    vec_id``) before the search and mapped back after (review r10
-    round 2): corpus and benchmark stores are independently numbered
-    tables, and a corpus id that happened to equal its matching eval
-    item's store id — the verbatim-copy case decontamination exists
-    to catch — used to be skipped as a self-match: a silent false
-    negative. Store ids are non-negative by the `build_ann_store`
-    contract, so the remapped range can never collide; corpus ids
-    must be non-negative for the remap to be invertible (refused
-    otherwise)."""
-    from pyspark.sql import functions as F
-
-    def _refuse_positive_remap(qids):
-        # remapped query_id = -1 - vec_id, so a NON-negative remapped
-        # id means the original corpus vec_id was negative. Validated
-        # inside the probe-assignment scan that is already running
-        # (VERDICT r10 #3): the old driver-side
-        # `corpus.filter(vec_id < 0).first()` paid one FULL corpus
-        # action per run in the common valid-input case just to
-        # return None
-        bad = qids[qids >= 0]
-        if len(bad):
-            raise ValueError(
-                "corpus vec_ids must be non-negative (got "
-                f"{-1 - int(bad[0])}) — the self-match-proof id "
-                "remap reserves the negative range"
-            )
-
-    # k=None passes straight through: ann_topk_batch's exhaustive
-    # mode ranks every candidate the probe budget reaches (review
-    # r10: computing a "live row count" here double-loaded the
-    # artifacts AND undercounted when tombstones named ids not in the
-    # store — an upper bound is what the rank tail actually needs)
-    hits = ann_topk_batch(
-        spark,
-        store_path,
-        model_path,
-        corpus.select(
-            (-1 - F.col("vec_id").cast("long")).alias("query_id"),
-            F.col("v").alias("qv"),
-        ),
-        k=k,
-        rerank_with=eval_vectors,
-        expected_sha256=expected_sha256,
-        chunk_queries=chunk_queries,
-        query_id_check=_refuse_positive_remap,
-    )
-    return (
-        hits.filter(F.col("sim") >= tau)
-        .groupBy("query_id")
-        .agg(
-            F.count("*").alias("n_eval_hits"),
-            F.max("sim").alias("max_sim"),
-        )
-        .select(
-            (-1 - F.col("query_id")).alias("vec_id"),
-            "n_eval_hits",
-            "max_sim",
-        )
-    )
-
-
-def semdedup_store(
-    spark: SparkSession,
-    emb: DataFrame,
-    model_path: str,
-    tau: float = 0.40,
-    expected_sha256: str | None = None,
-    block: int = 2048,
-) -> DataFrame:
-    """dd12 SemDeDup re-platformed onto FROZEN ANN artifacts — the
-    dedup twin of `semantic_decontamination_store`: partition the
-    embedding space with a persisted model's coarse quantizer
-    (sha-pinned, `rebuild_ann`-refreshed) instead of a per-run demo
-    codebook, then run the exact within-cluster sweep and greedy
-    keeper rule (Abbas et al. 2023; `suite.llmdata.
-    semantic_dedup_removals` — csim ASC / vec_id ASC precedence at
-    ``tau``). Returns the removal list ``(vec_id, centroid_id,
-    n_dups, max_sim)``.
-
-    Why the frozen clustering matters: dedup and serving now agree on
-    the space's partitioning BY CONSTRUCTION — the removal list's ids
-    feed `delete_from_ann_store` on a store encoded under the same
-    artifact, so "dedup retires served vectors" is one governance
-    loop under one sha, and nightly dedup runs stop paying (and
-    drifting with) a KMeans retrain. Same scale shape as the
-    in-session form: driver-side K-row centroids, one Arrow argmax
-    scan (zero corpus shuffle), ONE hash exchange on centroid_id,
-    blocked numpy sweep per cluster.
-
-    The sweep needs raw vectors (exact cosines — the SemDeDup
-    contract), so ``emb`` is the corpus embedding table, not the
-    store's PQ codes; the MODEL is what's frozen here. Assignment
-    uses the artifact's centroids verbatim; rotation (sim11/OPQ)
-    never enters — it rotates RESIDUALS for the code stage, while
-    coarse assignment and vector-to-vector cosines live in the
-    original space (and cosines are rotation-invariant anyway)."""
-    from .operators.pq import load_ann_model
-    from .suite.llmdata import semantic_dedup_removals
-
-    model = load_ann_model(model_path, expected_sha256=expected_sha256)
-    return semantic_dedup_removals(
-        emb, tau=tau, block=block, cents3=model["cents3"]
-    )
-
-
-def _ep_ann_topk(
-    ctx: ApiContext, params: dict, st: dict | None = None
-) -> dict:
-    """GET /api/ann/topk?vec=<comma floats>&k=5 — the parameterized
-    similarity search over the context's frozen artifacts (the
-    reference's parameterized-top-k posture, main.py:1509-1594,
-    applied to vectors). The ad-hoc query gets id -1 (store ids are
-    non-negative, so the self-match skip never fires).
-
-    ``?text=<raw query>`` instead of ``vec``: the text is embedded
-    DRIVER-side by `hashed_text_vector` — bit-identical to the
-    encoder the streaming drain used to embed the corpus into the
-    store (`hashed_doc_vectors`), which is the only geometry under
-    which a text query against that store means anything. Only valid
-    for stores whose corpus went through that encoder; a store built
-    from external embeddings wants ``vec``.
-
-    ``st`` is the ann state snapshot `handle_request` built the cache
-    key from — resolving it AGAIN here could observe a NEWER state if
-    a follow refresh lands between the two calls, caching the new
-    version's response under the old version's key (a later pointer
-    rollback would then serve the wrong version's result for the
-    TTL, ADVICE r10). The direct-call path (tests) resolves it
-    itself."""
-    if st is None:
-        st = _ensure_ann_state(ctx)
-    raw = params.get("vec")
-    text = params.get("text")
-    if bool(raw) == bool(text):
-        raise ValueError(
-            "exactly one of vec (comma-separated floats) / text "
-            "(raw query, hashed-encoder stores only) is required"
-        )
-    if text:
-        from .suite.llmdata import hashed_text_vector
-
-        vec = hashed_text_vector(text, dim=st["model"]["dim"])
-    else:
-        try:
-            vec = [float(x) for x in raw.split(",")]
-        except ValueError as exc:
-            raise ValueError(
-                "vec must be comma-separated floats"
-            ) from exc
-    k = int(params.get("k", 5))
-    if k <= 0 or k > 1000:
-        raise ValueError("k must be in 1..1000")
-    df = _ann_topk_loaded(
-        ctx.spark,
-        st["store"],
-        st["sizes"],
-        st["model"],
-        [(-1, vec)],
-        k,
-        ctx.ann_rerank,
-        tombstones=st["tombstones"],
-    )
-    score_col = "sim" if ctx.ann_rerank is not None else "score"
-    items = [
-        {
-            "neighbor_id": int(r["neighbor_id"]),
-            "rank": int(r["rank"]),
-            "score": None if r[score_col] is None else float(r[score_col]),
-        }
-        for r in df.orderBy("rank").collect()
-    ]
-    body = {
-        "k": k,
-        "reranked": ctx.ann_rerank is not None,
-        "items": items,
-    }
-    if len(items) < k:
-        # fewer than k rows: tiny probed set, or — on the rerank path
-        # — ADC candidates missing from the rerank table (the
-        # rerank_with coverage contract, ADVICE r9); surfaced in-band
-        # so a client can tell a short store from a snapshot mismatch
-        body["short"] = (
-            f"{len(items)} of {k} requested rows; probed clusters may "
-            "be small" + (
-                ", or the rerank table is missing store vec_ids "
-                "(stale embeddings snapshot?)"
-                if ctx.ann_rerank is not None
-                else ""
-            )
-        )
-    return body
-
-
-def _ep_ann_stats(ctx: ApiContext, params: dict) -> dict:
-    """GET /api/ann/stats — the ANN deployment's observability card:
-    which model serves (shas, version when CURRENT-resolved, geometry
-    and serving knobs), how big the store is (clusters, rows — from
-    the same size state the probe budget uses), how many ids are
-    tombstoned, and the incremental-merge watermark. Steady-state
-    polls run no Spark job — everything comes from driver-side
-    context state plus two tiny file reads; the exception is the
-    context's one-time lazy load (shared with /api/ann/topk), which
-    for a size-less drain store pays the usual K-row size aggregate
-    on the FIRST request after a restart. NOT cached (unlike
-    /api/ann/topk): a tombstone or merge landing between polls must
-    show up — this endpoint exists to watch exactly that.
-    Tombstone/watermark reads hit the store dir per call for the
-    same reason; the heavyweight (model, store, sizes) state stays
-    frozen with the context, so a just-merged store shows its new
-    watermark here but serves new rows only after a context
-    restart — ``stale_sizes`` says when the two have diverged."""
-    from .operators.pq import (
-        ann_stats_card,
-        read_ann_store_stamp,
-        read_ann_tombstones,
-    )
-
-    st = _ensure_ann_state(ctx)
-    stamp, stamped_sizes = read_ann_store_stamp(st["store_path"])
-    card = ann_stats_card(
-        stamp or {},
-        st["sizes"],
-        model=st["model"],
-        version=st.get("version"),
-        store_path=st["store_path"],
-    )
-    card["tombstones"] = len(read_ann_tombstones(st["store_path"]))
-    # a merge that landed after this context loaded leaves the
-    # served sizes behind the stamped ones — restart to pick up
-    card["stale_sizes"] = (
-        stamped_sizes is not None and stamped_sizes != st["sizes"]
-    )
-    return card
-
-
 _ROUTES = {
     "/health": (_ep_health, False),
     "/api/timeseries/total": (_ep_timeseries_total, True),
@@ -1413,8 +318,6 @@ _ROUTES = {
     "/api/geo/qa": (_ep_geo_qa, True),
     "/api/points": (_ep_points, False),  # dedicated points cache
     "/api/validate": (_ep_validate, False),  # never cached (a check)
-    "/api/ann/topk": (_ep_ann_topk, True),  # frozen artifacts: cacheable
-    "/api/ann/stats": (_ep_ann_stats, False),  # must see live tombstones
 }
 
 
@@ -1440,26 +343,9 @@ def handle_request(
             body, _hit = cached(ctx.cache.points, key, lambda: fn(ctx, params))
         elif cacheable:
             key = cache_key_params(norm.removeprefix("/api/"), params)
-            compute = lambda: fn(ctx, params)  # noqa: E731
-            if norm == "/api/ann/topk":
-                # the ann state can move under a live server (CURRENT
-                # flip, takedown — the ann_follow_s loop): bind the
-                # cached response to the STATE it was computed from,
-                # or a flip/takedown would be masked for the cache
-                # TTL. version + sha pin the pair; the tombstone set
-                # (bounded by contract) pins takedowns. The SAME
-                # snapshot is passed to the endpoint — letting it
-                # re-resolve could compute from a NEWER state than
-                # the key names if a follow refresh lands between
-                # the two reads (ADVICE r10)
-                st = _ensure_ann_state(ctx)
-                key += (
-                    f"#v={st.get('version')}"
-                    f"&sha={st['model']['sha256'][:16]}"
-                    f"&tombs={','.join(map(str, st['tombstones']))}"
-                )
-                compute = lambda: fn(ctx, params, st)  # noqa: E731
-            body, _hit = cached(ctx.cache.general, key, compute)
+            body, _hit = cached(
+                ctx.cache.general, key, lambda: fn(ctx, params)
+            )
         else:
             body = fn(ctx, params)
         return 200, body

@@ -20,7 +20,6 @@ import argparse
 import datetime as dt
 import json
 import logging
-import os
 import sys
 from pathlib import Path
 
@@ -133,20 +132,6 @@ def cmd_run(args) -> int:
     from .pipeline import Warehouse, run_range
     from .session import get_spark
 
-    if not args.ann_base_dir and (
-        args.ann_drain_dir
-        or args.ann_apply_maintenance
-        or args.ann_keep_versions is not None
-    ):
-        # an orphaned maintenance flag silently doing nothing is how
-        # a drain quietly grows forever — refuse with the fix named
-        log.error(
-            "--ann-drain-dir/--ann-apply-maintenance/"
-            "--ann-keep-versions need --ann-base-dir (the deployment "
-            "the maintenance round runs against)"
-        )
-        return 2
-
     if args.date:
         start = end = dt.date.fromisoformat(args.date)
     elif args.start and args.end:
@@ -168,14 +153,6 @@ def cmd_run(args) -> int:
     state = args.state_file
     if args.reset_state and state and Path(state).exists():
         Path(state).unlink()
-    ann_cfg = None
-    if args.ann_base_dir:
-        ann_cfg = {
-            "base_dir": args.ann_base_dir,
-            "drain_dir": args.ann_drain_dir,
-            "apply": args.ann_apply_maintenance,
-            "keep_versions": args.ann_keep_versions,
-        }
     results = run_range(
         spark,
         wh,
@@ -183,7 +160,6 @@ def cmd_run(args) -> int:
         dims,
         state_path=state,
         write_report=args.checks,
-        ann_maintenance=ann_cfg,
     )
     for r in results:
         log.info("run ok | %s", json.dumps(r, default=str))
@@ -262,13 +238,9 @@ def cmd_corpus_dedup(args) -> int:
     # --bpe-tokenizer vs --embeddings incompatibility is validated
     # ONCE, at argument-parse time in main() (ADVICE r8 + review r9:
     # a second in-function copy of the rule can only drift).
-    # --ann-model applies to BOTH drains (r9): the embedding drain's
-    # accepted rows already are vectors.
     extra = {}
     if not args.embeddings and args.bpe_tokenizer:
         extra["tokenizer_path"] = args.bpe_tokenizer
-    if args.ann_model:
-        extra["ann_model_path"] = args.ann_model
     q = starter(
         spark,
         **{src_kw: args.docs_dir},
@@ -342,591 +314,10 @@ def cmd_corpus_curate(args) -> int:
     return 0
 
 
-def _load_emb(spark, emb_dir: str):
-    """(vec_id, v, nrm) from a dir holding embeddings.parquet — the
-    shared contract every ANN path consumes."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .operators.similarity import vec_norm
-
-    return (
-        spark.read.parquet(os.path.join(emb_dir, "embeddings.parquet"))
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("v"),
-        )
-        .withColumn("nrm", vec_norm("v"))
-    )
-
-
-def cmd_ann_train(args) -> int:
-    """Train an IVF-PQ model (trained coarse + residual PQ — the
-    sim10 composition) and persist it as a sha256-stamped artifact
-    (VERDICT r8 #1's train-once half)."""
-    from .operators.pq import save_ann_model, train_ann_model
-    from .session import get_spark
-
-    spark = get_spark(app_name="ann-train")
-    model = train_ann_model(
-        _load_emb(spark, args.embeddings_dir),
-        k=args.k,
-        m=args.m,
-        ks=args.ks,
-        frac=args.frac,
-        cand=args.cand,
-        opq=args.opq,
-        coarse_sample_n=args.coarse_sample,
-    )
-    art = save_ann_model(
-        args.out, model["cents"], model["cb"], model["frac"],
-        model["cand"], rot=model["rot"],
-    )
-    log.info("ann-train | artifact | %s", json.dumps(art))
-    return 0
-
-
-def cmd_ann_retune(args) -> int:
-    """Re-save a model artifact with new serving knobs (frac/cand)
-    under the SAME encoding sha — stores encoded by the original
-    serve under the retuned artifact with no re-encode (VERDICT r10
-    #4: cand is the cheapest recall lever; see SCALING.md's measured
-    cand sweep). With --base-dir, the retune publishes as a NEW
-    deployment version whose store is hard-linked (no code bytes
-    copied) and flips CURRENT — serving follows, rollback is the
-    pointer. Spark-free either way."""
-    if args.frac is None and args.cand is None:
-        print("pass --frac and/or --cand (nothing to retune)")
-        return 2
-    if args.base_dir and (args.model or args.out):
-        # ambiguous intent must not flip a LIVE deployment pointer:
-        # the user who passed --model/--out expected a bare artifact
-        # written, not a serving change
-        print(
-            "pass EITHER --base-dir (deployment retune: publishes a "
-            "new version and flips CURRENT) OR --model/--out (bare "
-            "artifact retune) — not both"
-        )
-        return 2
-    if args.base_dir:
-        from .operators.pq import retune_ann_version
-
-        res = retune_ann_version(
-            args.base_dir, frac=args.frac, cand=args.cand
-        )
-    else:
-        if not (args.model and args.out):
-            print(
-                "pass --base-dir (deployment retune) or both "
-                "--model and --out (bare artifact retune)"
-            )
-            return 2
-        from .operators.pq import retune_ann_model
-
-        res = retune_ann_model(
-            args.model, args.out, frac=args.frac, cand=args.cand
-        )
-    log.info("ann-retune | %s", json.dumps(res))
-    print(json.dumps(res))
-    return 0
-
-
-def cmd_ann_rebuild(args) -> int:
-    """Atomic retrain -> re-encode -> (model, store) pair swap under
-    a versioned base dir with a CURRENT pointer (the WAP convention at
-    the pair level) — the supported way to refresh a codebook, closing
-    the by-hand ann-train/ann-build crash window."""
-    from .operators.pq import rebuild_ann
-    from .session import get_spark
-
-    spark = get_spark(app_name="ann-rebuild")
-    res = rebuild_ann(
-        _load_emb(spark, args.embeddings_dir),
-        args.base_dir,
-        k=args.k,
-        m=args.m,
-        ks=args.ks,
-        frac=args.frac,
-        cand=args.cand,
-        opq=args.opq,
-        coarse_sample_n=args.coarse_sample,
-    )
-    log.info("ann-rebuild | published | %s", json.dumps(res))
-    print(json.dumps(res))
-    return 0
-
-
-def cmd_ann_build(args) -> int:
-    """Materialize the serving code store under a FROZEN model: one
-    fused Arrow scan, parquet partitioned by centroid_id, stamped
-    with the model sha."""
-    from .operators.pq import build_ann_store, load_ann_model
-    from .session import get_spark
-
-    model = load_ann_model(args.model)  # fail BEFORE Spark startup
-    spark = get_spark(app_name="ann-build")
-    build_ann_store(
-        _load_emb(spark, args.embeddings_dir),
-        model,
-        args.store,
-        mode="overwrite" if args.overwrite else "error",
-    )
-    log.info(
-        "ann-build | store | %s",
-        json.dumps({"store": args.store, "model_sha256": model["sha256"]}),
-    )
-    return 0
-
-
-def cmd_ann_compact(args) -> int:
-    """Rewrite a streaming-drain ANN sink into the serving layout
-    (centroid_id-partitioned + sha/size-stamped) — the append ->
-    compact -> serve maintenance loop's compaction step."""
-    from .operators.pq import compact_ann_store, load_ann_model
-    from .session import get_spark
-
-    model = load_ann_model(args.model)  # fail BEFORE Spark startup
-    spark = get_spark(app_name="ann-compact")
-    compact_ann_store(
-        spark,
-        args.drain_dir,
-        args.store,
-        model,
-        mode="overwrite" if args.overwrite else "error",
-    )
-    log.info(
-        "ann-compact | store | %s",
-        json.dumps({"store": args.store, "model_sha256": model["sha256"]}),
-    )
-    return 0
-
-
-def cmd_ann_merge(args) -> int:
-    """Fold new drain appends into a serving store at delta cost —
-    the maintenance step between full ann-compact runs. Prints the
-    merge summary (batches folded, rows, new watermark) as JSON."""
-    from .operators.pq import load_ann_model, merge_ann_appends
-    from .session import get_spark
-
-    model = load_ann_model(args.model)  # fail BEFORE Spark startup
-    spark = get_spark(app_name="ann-merge")
-    res = merge_ann_appends(
-        spark, args.store, args.drain_dir, model, recover=args.recover
-    )
-    out = {"store": args.store, **res}
-    log.info("ann-merge | %s", json.dumps(out))
-    print(json.dumps(out))
-    return 0
-
-
-def cmd_ann_stats(args) -> int:
-    """Print an ANN deployment's observability card as JSON — no
-    Spark session: everything comes from the store's stamp, tombstone
-    and journal files, the model artifact, and (for --base-dir) the
-    CURRENT pointer. Rows/clusters reflect the STAMPED sizes (null
-    for a drain dir, whose sizes are only known at serve time)."""
-    import os
-
-    from .operators.pq import (
-        ANN_MERGE_JOURNAL,
-        ann_stats_card,
-        load_ann_model,
-        read_ann_store_stamp,
-        read_ann_tombstones,
-        resolve_ann_current,
-    )
-
-    if bool(args.store) == bool(args.base_dir):
-        raise SystemExit("exactly one of --store / --base-dir is required")
-    version = None
-    model_path = args.model
-    store = args.store
-    if args.base_dir:
-        cur = resolve_ann_current(args.base_dir)
-        store = cur["store_path"]
-        model_path = model_path or cur["model_path"]
-        version = cur["version"]
-    stamp, sizes = read_ann_store_stamp(store)
-    if stamp is None:
-        raise SystemExit(f"{store!r} carries no ANN store stamp")
-    model = load_ann_model(model_path) if model_path else None
-    out = ann_stats_card(
-        stamp, sizes, model=model, version=version, store_path=store
-    )
-    out["tombstones"] = len(read_ann_tombstones(store))
-    # arbiter-routed (review r12): an os.path probe on a CAS store
-    # would report every journal as absent
-    from .operators.metaplane import join as _mjoin
-    from .operators.metaplane import resolve_metadata_arbiter
-
-    out["pending_merge"] = resolve_metadata_arbiter(
-        store, "ann-stats"
-    ).exists(_mjoin(store, ANN_MERGE_JOURNAL))
-    if model is not None:
-        out["model_matches_store"] = (
-            model["encoding_sha256"] == stamp.get("encoding_sha256")
-            if stamp.get("encoding_sha256") is not None
-            else model["sha256"] == stamp.get("model_sha256")
-        )
-    log.info("ann-stats | %s", json.dumps(out))
-    print(json.dumps(out))
-    return 0
-
-
-def cmd_ann_search_stream(args) -> int:
-    """Drain landed (query_id, qv) snapshots through the streaming
-    ANN search (`start_ann_search_stream`) — frozen artifacts loaded
-    once, per-batch top-k results at out_dir/results/batch_id=N.
-    Default is the cron shape (sweep everything landed, exit);
-    --continuous stays live."""
-    from .session import get_spark
-    from .streaming import start_ann_search_stream
-
-    spark = get_spark(app_name="ann-search-stream")
-    batches: list[int] = []
-
-    def on_batch(batch_id: int, m: dict) -> None:
-        batches.append(batch_id)
-        log.info(
-            "ann-search-stream | batch %s | %s", batch_id, json.dumps(m)
-        )
-
-    rerank = (
-        _load_emb(spark, args.rerank_embeddings_dir)
-        if args.rerank_embeddings_dir
-        else None
-    )
-    q = start_ann_search_stream(
-        spark,
-        queries_dir=args.queries_dir,
-        out_dir=args.out_dir,
-        checkpoint_dir=args.checkpoint_dir,
-        store_path=args.store,
-        model_path=args.model,
-        k=args.k,
-        rerank_with=rerank,
-        available_now=not args.continuous,
-        chunk_queries=args.chunk_queries,
-        on_batch=on_batch,
-        queries_are_text=args.queries_are_text,
-    )
-    q.awaitTermination()
-    summary = {
-        "batches": batches,
-        "results": f"{args.out_dir}/results",
-    }
-    log.info("ann-search-stream | summary | %s", json.dumps(summary))
-    print(json.dumps(summary))
-    return 0
-
-
-def cmd_ann_maintain(args) -> int:
-    """One maintenance round for an ANN deployment: plan from file
-    metadata (no Spark — safe for a tight cron), and with --apply run
-    the named actions in order (recover -> merge -> gc -> prune). A
-    Spark session starts only if an applied action moves data."""
-    from .operators.annmaint import run_ann_maintenance
-
-    def factory():
-        from .session import get_spark
-
-        return get_spark(app_name="ann-maintain")
-
-    res = run_ann_maintenance(
-        factory,
-        store_path=args.store,
-        drain_dir=args.drain,
-        base_dir=args.base_dir,
-        model_path=args.model,
-        apply=args.apply,
-        recover=args.recover,
-        tomb_gc_frac=args.tomb_gc_frac,
-        min_merge_batches=args.min_merge_batches,
-        keep_versions=args.keep,
-        drain_keep_batches=args.drain_keep,
-    )
-    log.info("ann-maintain | %s", json.dumps(res))
-    print(json.dumps(res))
-    return 0
-
-
-def cmd_ann_prune(args) -> int:
-    """Version retention for a rebuild_ann deployment — keep CURRENT
-    + the N most recent pairs, remove the rest. No Spark session."""
-    from .operators.pq import prune_ann_versions
-
-    res = prune_ann_versions(
-        args.base_dir, keep=args.keep, prune_staging=args.prune_staging
-    )
-    out = {"base_dir": args.base_dir, **res}
-    log.info("ann-prune | %s", json.dumps(out))
-    print(json.dumps(out))
-    return 0
-
-
-def cmd_ann_delete(args) -> int:
-    """Tombstone vec_ids in an ANN store (takedown/dedup removals):
-    they stop being served immediately and are dropped physically at
-    the next ann-compact. No Spark session needed — the tombstone set
-    is a driver-side artifact."""
-    from .operators.pq import delete_from_ann_store
-
-    ids = [int(x) for x in args.ids.split(",") if x.strip()]
-    res = delete_from_ann_store(args.store, ids)
-    log.info(
-        "ann-delete | %s",
-        json.dumps({"store": args.store, **res}),
-    )
-    print(json.dumps(res))
-    return 0
-
-
-def cmd_ann_decontaminate(args) -> int:
-    """Store-backed semantic decontamination (cur7 against frozen
-    benchmark artifacts, `api.semantic_decontamination_store`): flag
-    corpus vectors within tau of any benchmark item. The shell face
-    of the nightly curation job — corpus-scale runs must use --out
-    (results stay distributed); the JSON print path is bounded by
-    --print-bound and refuses beyond it (VERDICT r12 #4)."""
-    from .api import semantic_decontamination_store
-    from .session import get_spark
-
-    spark = get_spark(app_name="ann-decontaminate")
-    res = semantic_decontamination_store(
-        spark,
-        _load_emb(spark, args.corpus_embeddings_dir),
-        args.store,
-        args.model,
-        _load_emb(spark, args.eval_embeddings_dir),
-        tau=args.tau,
-        chunk_queries=args.chunk_queries,
-    )
-    if args.out:
-        res.write.parquet(args.out)
-        n = spark.read.parquet(args.out).count()
-        summary = {"out": args.out, "flagged": int(n), "tau": args.tau}
-        log.info("ann-decontaminate | %s", json.dumps(summary))
-        print(json.dumps(summary))
-    else:
-        # the JSON print path collects to the driver — bounded, like
-        # ann-semdedup's --apply-bound (VERDICT r12 #4): a flag set
-        # over the bound names --out instead of OOMing the driver
-        rows = [
-            r.asDict()
-            for r in res.orderBy("vec_id")
-            .limit(args.print_bound + 1)
-            .collect()
-        ]
-        if len(rows) > args.print_bound:
-            raise SystemExit(
-                f"more than --print-bound {args.print_bound} flagged "
-                "rows — the no---out path prints via a driver "
-                "collect; write corpus-scale results with --out "
-                "(distributed parquet) instead"
-            )
-        print(json.dumps({"flagged": rows, "tau": args.tau}))
-    return 0
-
-
-def cmd_ann_semdedup(args) -> int:
-    """Store-backed SemDeDup (dd12 under a frozen coarse quantizer,
-    `api.semdedup_store`): the removal list, optionally fed straight
-    into the serving store's tombstones (`--apply-to-store`) so dedup
-    and takedown share one governance loop under one model sha. The
-    apply path is BOUNDED by the tombstone contract — corpus-scale
-    removal lists must go through a rebuild instead."""
-    from .api import semdedup_store
-    from .session import get_spark
-
-    spark = get_spark(app_name="ann-semdedup")
-    res = semdedup_store(
-        spark,
-        _load_emb(spark, args.embeddings_dir),
-        args.model,
-        tau=args.tau,
-        block=args.block,
-    )
-    if args.out:
-        res.write.parquet(args.out)
-        res = spark.read.parquet(args.out)  # don't recompute below
-    summary = {"tau": args.tau}
-    if args.out:
-        summary["out"] = args.out
-    if args.apply_to_store:
-        from .operators.pq import delete_from_ann_store
-
-        ids = [
-            int(r["vec_id"])
-            for r in res.select("vec_id")
-            .limit(args.apply_bound + 1)
-            .collect()
-        ]
-        if len(ids) > args.apply_bound:
-            raise SystemExit(
-                f"removal list exceeds --apply-bound "
-                f"{args.apply_bound} — tombstones are bounded by "
-                "contract; corpus-scale dedup removals should go "
-                "through a rebuild (ann-rebuild over the deduped "
-                "corpus), not the takedown path"
-            )
-        summary["applied"] = delete_from_ann_store(
-            args.apply_to_store, ids
-        )
-        summary["removed_ids"] = len(ids)
-    else:
-        summary["removals"] = int(res.count())
-    log.info("ann-semdedup | %s", json.dumps(summary))
-    print(json.dumps(summary))
-    return 0
-
-
-def cmd_ann_search(args) -> int:
-    """Top-k search over the frozen artifacts — serving shape
-    (``--queries`` JSON ``[[id, [floats...]], ...]`` through
-    `api.ann_topk`) or batch shape (``--queries-parquet`` with
-    (query_id, qv) columns through `api.ann_topk_batch`, for
-    10^4..10^6-query jobs where a driver-side list is wrong). The
-    batch shape should pair with ``--out`` (results written as
-    parquet, DISTRIBUTED — never collected to the driver; a Q=10^6
-    job's result is itself a table); without ``--out`` the rows are
-    collected and printed, which only fits small Q."""
-    from pyspark.sql import functions as F
-
-    from .api import ann_topk, ann_topk_batch
-    from .session import get_spark
-
-    n_shapes = sum(
-        1
-        for x in (
-            args.queries,
-            args.queries_parquet,
-            args.text,
-            args.queries_text_parquet,
-        )
-        if x
-    )
-    if n_shapes != 1:
-        raise SystemExit(
-            "exactly one of --queries / --queries-parquet / "
-            "--queries-text-parquet / --text is required"
-        )
-    spark = get_spark(app_name="ann-search")
-    rerank = (
-        _load_emb(spark, args.rerank_embeddings_dir)
-        if args.rerank_embeddings_dir
-        else None
-    )
-    if args.queries_parquet or args.queries_text_parquet:
-        if args.queries_parquet:
-            qdf = spark.read.parquet(args.queries_parquet)
-            res = ann_topk_batch(
-                spark, args.store, args.model, qdf, k=args.k,
-                rerank_with=rerank, chunk_queries=args.chunk_queries,
-            )
-        else:
-            # TEXT batch (VERDICT r10 #5): embedded inside
-            # ann_topk_batch by the drain's hashed encoder —
-            # hashed-encoder stores only
-            qdf = spark.read.parquet(args.queries_text_parquet)
-            res = ann_topk_batch(
-                spark, args.store, args.model, k=args.k,
-                rerank_with=rerank, chunk_queries=args.chunk_queries,
-                queries_text=qdf,
-            )
-        expected_df = qdf.select(
-            F.col("query_id").cast("long").alias("query_id")
-        ).distinct()
-    else:
-        from .api import _ann_topk_loaded, _load_ann_state
-
-        # load the (model, store) pair ONCE — the --text branch needs
-        # the model's dim BEFORE the search, and re-loading the
-        # multi-megabyte artifact inside ann_topk would double the
-        # parse/sha cost of every one-shot query (review r10 round 4)
-        st = _load_ann_state(spark, args.model, args.store)
-        if args.text:
-            # one ad-hoc TEXT query, embedded by the same hashed
-            # encoder the drain used on the corpus (id -1: store ids
-            # are non-negative, the self-skip never fires)
-            from .suite.llmdata import hashed_text_vector
-
-            query_vecs = [
-                (-1, hashed_text_vector(args.text, dim=st["model"]["dim"]))
-            ]
-        else:
-            with open(args.queries, encoding="utf-8") as f:
-                query_vecs = [
-                    (int(q[0]), [float(x) for x in q[1]])
-                    for q in json.load(f)
-                ]
-        res = _ann_topk_loaded(
-            spark, st["store"], st["sizes"], st["model"], query_vecs,
-            args.k, rerank, tombstones=st["tombstones"],
-        )
-        expected_df = None
-    if args.out:
-        # the deployment shape for either input: results stay
-        # distributed (review r10 round 2: --out used to be silently
-        # ignored on the --queries path — no file, no warning)
-        res.write.parquet(args.out)
-        n = spark.read.parquet(args.out).count()
-        summary = {"out": args.out, "rows": int(n), "k": args.k}
-        log.info("ann-search | batch | %s", json.dumps(summary))
-        print(json.dumps(summary))
-        return 0
-    if expected_df is not None:
-        expected = [int(r["query_id"]) for r in expected_df.collect()]
-    else:
-        expected = [qid for qid, _ in query_vecs]
-    rows = res.collect()
-    # seed with EVERY query id (review r10): a query returning zero
-    # rows — the worst coverage violation — must be flagged, not
-    # silently absent from the count
-    per_q: dict[int, int] = {qid: 0 for qid in expected}
-    for r in rows:
-        per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + 1
-        log.info("ann-search | hit | %s", json.dumps(r.asDict()))
-    short = {q: n for q, n in per_q.items() if n < args.k}
-    if short:
-        # the rerank_with coverage contract (ADVICE r9): fewer than k
-        # rows means a tiny probed set — or, when reranking, ADC
-        # candidates missing from the rerank table
-        log.warning(
-            "ann-search | short results (%s of %d rows) — probed "
-            "clusters may be small%s | %s",
-            sorted(set(short.values())),
-            args.k,
-            (
-                ", or the rerank embeddings are missing store vec_ids"
-                if rerank is not None
-                else ""
-            ),
-            json.dumps(sorted(short)),
-        )
-    print(json.dumps([r.asDict() for r in rows]))
-    return 0
-
-
 def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(
         prog="python -m inpe_queimadas_etl_spark",
         description="Spark-native rebuild of the daily fire-focus ETL",
-    )
-    ap.add_argument(
-        "--metadata-adapter",
-        action="append",
-        default=None,
-        metavar="SCHEME=MODULE:FACTORY",
-        help="register a conditional-put metadata arbiter for a URI "
-        "scheme before the command runs (repeatable; also read from "
-        "$SPARK_GRAFT_METADATA_ADAPTERS, comma-separated). The "
-        "factory is imported and called with the scheme; it must "
-        "return a metaplane.MetadataArbiter. This is how the ANN "
-        "lifecycle faces (ann-rebuild/-prune/-maintain/-search/"
-        "-delete/-stats) operate on an object-store deployment dir; "
-        "unregistered schemes refuse with the metadata-plane "
-        "contract message",
     )
     sub = ap.add_subparsers(dest="cmd", required=True)
 
@@ -943,29 +334,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     run.add_argument(
         "--checks", action="store_true", help="write the validation report"
-    )
-    run.add_argument(
-        "--ann-base-dir",
-        help="opt-in post-run ANN maintenance against this rebuild_ann "
-        "deployment: the plan (file metadata only, ~1 ms) rides the "
-        "run's metrics; actions move data only under "
-        "--ann-apply-maintenance",
-    )
-    run.add_argument(
-        "--ann-drain-dir",
-        help="streaming drain to inspect/fold for the post-run ANN "
-        "maintenance round",
-    )
-    run.add_argument(
-        "--ann-apply-maintenance",
-        action="store_true",
-        help="execute the planned ANN maintenance actions (default: "
-        "plan-only); journal recovery still needs ann-maintain "
-        "--recover",
-    )
-    run.add_argument(
-        "--ann-keep-versions", type=int, default=None,
-        help="version retention bound for the post-run round",
     )
     run.add_argument("--log-dir", help="also log to <dir>/etl.log")
 
@@ -1024,16 +392,6 @@ def build_parser() -> argparse.ArgumentParser:
         "additionally encoded under it into OUT_DIR/tokens — ids "
         "identical to the training run's, never a retrain (document "
         "drain only)",
-    )
-    cdp.add_argument(
-        "--ann-model",
-        default=None,
-        help="frozen IVF-PQ model artifact (save_ann_model): each "
-        "batch's accepted survivors are encoded under it into "
-        "OUT_DIR/ann_store (documents are embedded first; embedding "
-        "snapshots encode directly) — append-only serving-store "
-        "maintenance under frozen codebooks; a different model "
-        "against an existing ann_store is refused",
     )
     cdp.add_argument("--log-dir")
 
@@ -1163,355 +521,12 @@ def build_parser() -> argparse.ArgumentParser:
     )
     cur.add_argument("--log-dir")
 
-    at = sub.add_parser(
-        "ann-train",
-        help="train an IVF-PQ model (trained coarse + residual PQ) "
-        "and persist it as a sha256-stamped artifact",
-    )
-    at.add_argument(
-        "--embeddings-dir", required=True,
-        help="dir holding embeddings.parquet (vec_id, embedding)",
-    )
-    at.add_argument("--out", required=True, help="artifact JSON path")
-    at.add_argument("--k", type=int, default=64, help="coarse centroids")
-    at.add_argument("--m", type=int, default=8, help="PQ subspaces")
-    at.add_argument("--ks", type=int, default=16, help="codes per subspace")
-    at.add_argument(
-        "--frac", type=float, default=0.1,
-        help="multi-probe candidate budget as a corpus fraction",
-    )
-    at.add_argument(
-        "--cand", type=int, default=100,
-        help="rerank candidate cut (default 100). The cheapest "
-        "recall lever on structured corpora: the measured 1M sweep "
-        "(SCALING.md) read recall@5 0.219/0.619/0.825 at cand "
-        "100/1000/4000 for ~+50%% serving cost — sweep it, then "
-        "'ann-retune' the artifact without re-encoding",
-    )
-    at.add_argument(
-        "--opq",
-        action="store_true",
-        help="learn an OPQ rotation for the residual stage (sim11's "
-        "tier — lower quantization error at identical store bytes)",
-    )
-    at.add_argument(
-        "--coarse-sample", type=int, default=None,
-        help="bound the MLlib KMeans coarse fit to the first-N "
-        "vectors (deterministic sample; default: full corpus). At "
-        "corpus scale this is the retrain-cadence lever — see "
-        "SCALING.md r10",
-    )
-    at.add_argument("--log-dir")
-
-    ar = sub.add_parser(
-        "ann-rebuild",
-        help="atomic model refresh: retrain + re-encode into a "
-        "versioned dir, then flip the CURRENT pointer (no window "
-        "where store and model disagree)",
-    )
-    ar.add_argument(
-        "--embeddings-dir", required=True,
-        help="dir holding embeddings.parquet (vec_id, embedding)",
-    )
-    ar.add_argument(
-        "--base-dir", required=True,
-        help="deployment dir (gets versions/vN + CURRENT)",
-    )
-    ar.add_argument("--k", type=int, default=64)
-    ar.add_argument("--m", type=int, default=8)
-    ar.add_argument("--ks", type=int, default=16)
-    ar.add_argument("--frac", type=float, default=0.1)
-    ar.add_argument(
-        "--cand", type=int, default=100,
-        help="rerank candidate cut — the measured recall lever "
-        "(see ann-train --cand); retunable later without a rebuild "
-        "via ann-retune",
-    )
-    ar.add_argument("--opq", action="store_true")
-    ar.add_argument("--coarse-sample", type=int, default=None)
-    ar.add_argument("--log-dir")
-
-    art_p = sub.add_parser(
-        "ann-retune",
-        help="re-save a model artifact with new SERVING knobs "
-        "(frac/cand) under the same encoding sha — existing stores "
-        "serve under it with no re-encode (the measured cand recall "
-        "lever, SCALING.md). Spark-free",
-    )
-    art_p.add_argument("--model", help="ann-train artifact (bare mode)")
-    art_p.add_argument(
-        "--out", help="retuned artifact path (bare mode)"
-    )
-    art_p.add_argument(
-        "--base-dir",
-        help="rebuild_ann deployment: publish the retune as a new "
-        "version (store hard-linked, CURRENT flipped, rollback kept)",
-    )
-    art_p.add_argument("--frac", type=float, default=None)
-    art_p.add_argument("--cand", type=int, default=None)
-    art_p.add_argument("--log-dir")
-
-    ab = sub.add_parser(
-        "ann-build",
-        help="encode a corpus into the serving code store under a "
-        "frozen model (centroid_id-partitioned, model-sha-stamped)",
-    )
-    ab.add_argument("--embeddings-dir", required=True)
-    ab.add_argument("--model", required=True, help="ann-train artifact")
-    ab.add_argument("--store", required=True, help="output store dir")
-    ab.add_argument("--overwrite", action="store_true")
-    ab.add_argument("--log-dir")
-
-    ac = sub.add_parser(
-        "ann-compact",
-        help="rewrite a drain ann_store (batch appends) into the "
-        "partition-pruned serving layout under the same frozen model",
-    )
-    ac.add_argument("--drain-dir", required=True, help="drain ann_store dir")
-    ac.add_argument("--model", required=True, help="ann-train artifact")
-    ac.add_argument("--store", required=True, help="output store dir")
-    ac.add_argument("--overwrite", action="store_true")
-    ac.add_argument("--log-dir")
-
-    am = sub.add_parser(
-        "ann-merge",
-        help="fold NEW drain appends (past the store's merged_through "
-        "watermark) into an existing serving store — delta-cost "
-        "maintenance between full compactions",
-    )
-    am.add_argument("--store", required=True, help="serving store dir")
-    am.add_argument("--drain-dir", required=True, help="drain ann_store dir")
-    am.add_argument("--model", required=True, help="ann-train artifact")
-    am.add_argument(
-        "--recover",
-        action="store_true",
-        help="resolve a crashed merge's pending journal first "
-        "(only when no other merge is running)",
-    )
-    am.add_argument("--log-dir")
-
-    ast = sub.add_parser(
-        "ann-stats",
-        help="print an ANN deployment's observability card (shas, "
-        "stamped sizes, tombstones, merge watermark) — no Spark",
-    )
-    ast.add_argument("--store", help="store dir (stamped)")
-    ast.add_argument(
-        "--base-dir", help="rebuild_ann deployment dir (CURRENT pointer)"
-    )
-    ast.add_argument("--model", help="optional artifact for geometry/knobs")
-    ast.add_argument("--log-dir")
-
-    ass = sub.add_parser(
-        "ann-search-stream",
-        help="stream landed (query_id, qv) snapshots through the "
-        "frozen-artifact ANN search; per-batch results parquet",
-    )
-    ass.add_argument("--queries-dir", required=True)
-    ass.add_argument("--out-dir", required=True)
-    ass.add_argument("--checkpoint-dir", required=True)
-    ass.add_argument("--store", required=True)
-    ass.add_argument("--model", required=True)
-    ass.add_argument("-k", type=int, default=5)
-    ass.add_argument("--rerank-embeddings-dir")
-    ass.add_argument("--chunk-queries", type=int)
-    ass.add_argument(
-        "--continuous",
-        action="store_true",
-        help="stay live instead of the sweep-and-exit cron shape",
-    )
-    ass.add_argument(
-        "--queries-are-text",
-        action="store_true",
-        help="snapshots carry (query_id, text): each batch embeds "
-        "in-plan with the drain's hashed encoder (hashed-encoder "
-        "stores only)",
-    )
-    ass.add_argument("--log-dir")
-
-    amt = sub.add_parser(
-        "ann-maintain",
-        help="plan (and with --apply run) one ANN maintenance round: "
-        "recover -> merge -> gc -> prune, decided from on-disk state",
-    )
-    grp = amt.add_mutually_exclusive_group(required=True)
-    grp.add_argument("--base-dir", help="rebuild_ann deployment dir")
-    grp.add_argument("--store", help="bare store dir (no version swap)")
-    amt.add_argument("--drain", help="streaming drain dir (backlog)")
-    amt.add_argument(
-        "--model", help="artifact path — needed to merge a bare store"
-    )
-    amt.add_argument("--apply", action="store_true")
-    amt.add_argument(
-        "--recover",
-        action="store_true",
-        help="allow journal recovery (assert no merge is running)",
-    )
-    amt.add_argument("--tomb-gc-frac", type=float, default=0.01)
-    amt.add_argument("--min-merge-batches", type=int, default=1)
-    amt.add_argument(
-        "--drain-keep",
-        type=int,
-        default=2,
-        help="replay window: consumed drain batches kept above the "
-        "retention cutoff",
-    )
-    amt.add_argument(
-        "--keep", type=int, help="version retention bound (enables prune)"
-    )
-    amt.add_argument("--log-dir")
-
-    apr = sub.add_parser(
-        "ann-prune",
-        help="retention for a rebuild_ann deployment dir: keep "
-        "CURRENT + the N most recent versions, remove the rest "
-        "— no Spark",
-    )
-    apr.add_argument("--base-dir", required=True)
-    apr.add_argument("--keep", type=int, default=2)
-    apr.add_argument(
-        "--prune-staging",
-        action="store_true",
-        help="also clear .staging-* crash residue (only when no "
-        "rebuild is running)",
-    )
-    apr.add_argument("--log-dir")
-
-    adc = sub.add_parser(
-        "ann-decontaminate",
-        help="flag corpus vectors within tau of a frozen benchmark "
-        "store's items (store-backed cur7) — distributed with --out",
-    )
-    adc.add_argument(
-        "--corpus-embeddings-dir", required=True,
-        help="dir holding the CORPUS embeddings.parquet to screen",
-    )
-    adc.add_argument("--store", required=True, help="benchmark store dir")
-    adc.add_argument("--model", required=True, help="ann-train artifact")
-    adc.add_argument(
-        "--eval-embeddings-dir", required=True,
-        help="dir holding the benchmark's raw embeddings.parquet "
-        "(the exact-rerank table — must cover every store vec_id)",
-    )
-    adc.add_argument("--tau", type=float, default=0.35)
-    adc.add_argument("--chunk-queries", type=int, default=None)
-    adc.add_argument(
-        "--out", help="write flags as parquet (distributed)"
-    )
-    adc.add_argument(
-        "--print-bound", type=int, default=10_000,
-        help="without --out, refuse to print beyond this many "
-        "flagged rows (the JSON path collects to the driver; "
-        "corpus-scale results belong in --out)",
-    )
-    adc.add_argument("--log-dir")
-
-    asd = sub.add_parser(
-        "ann-semdedup",
-        help="SemDeDup removal list under a frozen model's coarse "
-        "quantizer (store-backed dd12); --apply-to-store feeds the "
-        "removals into a serving store's tombstones (bounded)",
-    )
-    asd.add_argument("--embeddings-dir", required=True)
-    asd.add_argument("--model", required=True, help="ann-train artifact")
-    asd.add_argument("--tau", type=float, default=0.40)
-    asd.add_argument("--block", type=int, default=2048)
-    asd.add_argument(
-        "--out", help="write the removal list as parquet"
-    )
-    asd.add_argument(
-        "--apply-to-store",
-        help="also tombstone the removed ids in this serving store "
-        "(delete_from_ann_store — same sha governance loop)",
-    )
-    asd.add_argument(
-        "--apply-bound", type=int, default=100_000,
-        help="refuse --apply-to-store beyond this many removals "
-        "(tombstones are bounded by contract; rebuild instead)",
-    )
-    asd.add_argument("--log-dir")
-
-    asr = sub.add_parser(
-        "ann-search",
-        help="top-k ANN over a frozen model + store for query vectors "
-        "from a JSON file [[id, [floats...]], ...]",
-    )
-    asr.add_argument("--store", required=True)
-    asr.add_argument("--model", required=True)
-    asr.add_argument("--queries", help="query JSON path (serving shape)")
-    asr.add_argument(
-        "--queries-parquet",
-        help="parquet dir/file with (query_id, qv) columns — batch "
-        "shape via ann_topk_batch (use for 10^4+ queries)",
-    )
-    asr.add_argument(
-        "--queries-text-parquet",
-        help="parquet dir/file with (query_id, text) columns — batch "
-        "shape with the embedding done in-plan by the corpus drain's "
-        "hashed encoder (hashed-encoder stores only)",
-    )
-    asr.add_argument(
-        "--text",
-        help="one raw text query, embedded by the corpus drain's "
-        "hashed encoder (hashed-encoder stores only)",
-    )
-    asr.add_argument("-k", type=int, default=5)
-    asr.add_argument(
-        "--rerank-embeddings-dir",
-        help="optional raw-vector dir for exact rerank of the ADC "
-        "candidates",
-    )
-    asr.add_argument(
-        "--out",
-        help="write results as parquet (distributed, never collected "
-        "to the driver) — pair with --queries-parquet for batch jobs",
-    )
-    asr.add_argument(
-        "--chunk-queries",
-        type=int,
-        help="batch shape only: stream probe rows to the driver in "
-        "chunks of this many queries (bounded broadcasts, one store "
-        "scan per chunk) — for Q beyond the one-broadcast budget",
-    )
-    asr.add_argument("--log-dir")
-
-    ad = sub.add_parser(
-        "ann-delete",
-        help="tombstone vec_ids in an ANN store (served no more; "
-        "dropped physically at the next ann-compact)",
-    )
-    ad.add_argument("--store", required=True)
-    ad.add_argument(
-        "--ids", required=True, help="comma-separated vec_ids to retire"
-    )
-    ad.add_argument("--log-dir")
     return ap
 
 
 def main(argv: list[str] | None = None) -> int:
     parser = build_parser()
     args = parser.parse_args(argv)
-    from .operators.metaplane import load_metadata_adapter_spec
-
-    # env first, flags last: registration is per-scheme
-    # last-writer-wins, so an explicit --metadata-adapter must beat
-    # a stale exported SPARK_GRAFT_METADATA_ADAPTERS (review r12)
-    adapter_specs = [
-        s.strip()
-        for s in os.environ.get(
-            "SPARK_GRAFT_METADATA_ADAPTERS", ""
-        ).split(",")
-        if s.strip()
-    ]
-    adapter_specs += list(getattr(args, "metadata_adapter", None) or [])
-    for spec in adapter_specs:
-        try:
-            load_metadata_adapter_spec(spec)
-        except Exception as exc:
-            # refuse BEFORE Spark startup, naming the spec — a typo'd
-            # factory must not surface later as the unregistered-
-            # scheme refusal with the wrong remedy in it
-            parser.error(f"--metadata-adapter {spec!r}: {exc}")
     if args.cmd == "corpus-dedup" and args.embeddings:
         # reject incompatible pairs BEFORE Spark session startup
         # (ADVICE r8): the runtime check inside cmd_corpus_dedup made
@@ -1532,34 +547,6 @@ def main(argv: list[str] | None = None) -> int:
         return cmd_corpus_dedup(args)
     if args.cmd == "corpus-curate":
         return cmd_corpus_curate(args)
-    if args.cmd == "ann-train":
-        return cmd_ann_train(args)
-    if args.cmd == "ann-retune":
-        return cmd_ann_retune(args)
-    if args.cmd == "ann-decontaminate":
-        return cmd_ann_decontaminate(args)
-    if args.cmd == "ann-semdedup":
-        return cmd_ann_semdedup(args)
-    if args.cmd == "ann-rebuild":
-        return cmd_ann_rebuild(args)
-    if args.cmd == "ann-build":
-        return cmd_ann_build(args)
-    if args.cmd == "ann-compact":
-        return cmd_ann_compact(args)
-    if args.cmd == "ann-merge":
-        return cmd_ann_merge(args)
-    if args.cmd == "ann-stats":
-        return cmd_ann_stats(args)
-    if args.cmd == "ann-maintain":
-        return cmd_ann_maintain(args)
-    if args.cmd == "ann-prune":
-        return cmd_ann_prune(args)
-    if args.cmd == "ann-search-stream":
-        return cmd_ann_search_stream(args)
-    if args.cmd == "ann-search":
-        return cmd_ann_search(args)
-    if args.cmd == "ann-delete":
-        return cmd_ann_delete(args)
     return 2
 
 

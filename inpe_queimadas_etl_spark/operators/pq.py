@@ -95,11 +95,10 @@ def train_pq_codebook(
 
 
 def _pq_lloyd(X, m: int, ks: int, iters: int) -> list[list[list[float]]]:
-    """The per-subspace Lloyd loop over an in-memory sample matrix —
-    extracted so `train_pq_codebook` (DataFrame front) and
-    `train_ann_model` (residual-sample front) fit codebooks through
-    ONE implementation (identical init, tie and empty-centroid rules,
-    so the same training matrix always yields the same codebook)."""
+    """The per-subspace Lloyd loop of `train_pq_codebook` over an
+    in-memory sample matrix (deterministic init, tie and
+    empty-centroid rules, so the same training matrix always yields
+    the same codebook)."""
     import numpy as np
 
     dim = X.shape[1]
@@ -864,223 +863,6 @@ def pq_ivf_adc_search_scan(
     )
 
 
-def pq_ivf_adc_search_scan_grouped(
-    codes: DataFrame,
-    cb: Codebook,
-    cents: Sequence[tuple[int, Sequence[float]]],
-    probes_bc,
-    cand: int,
-    query_block: int = 512,
-) -> DataFrame:
-    """BATCH-scale Arrow IVF-PQ ADC scoring (VERDICT r9 #1): same
-    semantics as `pq_ivf_adc_search_scan`, but query state arrives as
-    a Spark BROADCAST — ``probes_bc.value`` is ``{"qids": int64 (Q,),
-    "qv": float64 (Q, dim) in SCAN coordinates (rotated when OPQ),
-    "by_cluster": {centroid_id: int64 row indices}}`` (each vector
-    shipped ONCE; clusters reference it by index, so the broadcast is
-    O(Q*dim + Q*nprobe), never nprobe-fold duplicated) — and every
-    per-query quantity the looped scan
-    precomputed driver-side (the m x ks LUT, the query-centroid inner
-    product) is computed EXECUTOR-side, once per (task, cluster),
-    from the model state that rides the closure (K centroids + the
-    codebook). Nothing in the closure scales with Q: the looped
-    form's O(Q * nprobe * m * ks) LUT closure becomes O(K * dim +
-    m * ks * dsub) closure + an O(sum_c nq_c * dim) torrent broadcast
-    — the contract that lets Q reach 10^4..10^6 (benchmark
-    decontamination, semantic dedup of new shards) instead of the
-    serving-sized handful.
-
-    Bit-exactness is by IEEE replay of the SAME chains the looped
-    scan runs (pinned equal in tests/test_pq.py):
-
-    - LUT: per subspace, term i added in ascending-i order —
-      `_np_lut`'s chain vectorized over the cluster's queries (the
-      multiply operand swap commutes bit-exactly);
-    - qip_c: `_np_dot`'s left-to-right chain vectorized over queries;
-    - cross/rn2/den/score: the exact `pq_ivf_adc_search_scan`
-      accumulation orders, including the den==0 -> NaN
-      neutralization;
-    - the per-batch top-``cand`` cut replays `_prune_topk`'s exact
-      order — (NaN first, score DESC, vec_id ASC) — via one batch
-      pre-sort by id plus a stable vectorized argsort per query
-      block, with the self-match row dropped AFTER selection over a
-      ``cand+1`` cut (a query's self row can displace at most one
-      candidate, so the kept set equals pruning a pre-masked array).
-
-    EVERY per-query panel is blocked (review r10): scores, the LUT,
-    and qip_c all materialize per (cluster, query-block) as
-    (<=query_block, ...) arrays computed from the broadcast matrices
-    on demand — so a hot cluster probed by 10^6 queries costs a few
-    hundred KB of working set per task, never a cached
-    nq_c x m x ks LUT (which would be ~1 GB at that skew; the LUT
-    recompute is O(nq_blk * dim * ks) per batch, an order below the
-    scoring gather's O(nq_blk * rows * m), so caching bought memory
-    risk for negligible time). Only K-bounded per-cluster constants
-    (cvn2, cvlut) are cached per task."""
-    import numpy as np
-    import pandas as pd
-
-    m, ks, dsub = len(cb), len(cb[0]), len(cb[0][0])
-    nsq = np.array(pq_centroid_sqnorms(cb), dtype=np.float64)
-    C = np.array(cb, dtype=np.float64)  # (m, ks, dsub)
-    cvd = {int(cid): np.asarray(cv, dtype=np.float64) for cid, cv in cents}
-
-    def _cluster_state(cache: dict, cid: int):
-        """K-bounded constants only: (probe row indices, cvn2,
-        cvlut) — per-query state is computed per block."""
-        st = cache.get(cid)
-        if st is not None:
-            return st
-        cv = cvd[cid]
-        st = (
-            probes_bc.value["by_cluster"][cid],
-            _np_dot(cv, cv),
-            _np_lut(cb, cv),
-            cv,
-        )
-        cache[cid] = st
-        return st
-
-    def _query_block(idx_blk, cv):
-        """(qids, qip_c, LUT) for one query block, gathered from the
-        broadcast matrices: qip_c replays `_np_dot`'s left-to-right
-        chain and LUT `_np_lut`'s ascending-i chain, vectorized over
-        the block (the multiply operand swap commutes bit-exactly)."""
-        p = probes_bc.value
-        blk_q = p["qids"][idx_blk]
-        QV = p["qv"][idx_blk]
-        qip = QV[:, 0] * cv[0]
-        for i in range(1, QV.shape[1]):
-            qip = qip + QV[:, i] * cv[i]
-        lut = np.empty((QV.shape[0], m, ks), dtype=np.float64)
-        for j in range(m):
-            acc = QV[:, j * dsub, None] * C[j][None, :, 0]
-            for i in range(1, dsub):
-                acc = acc + QV[:, j * dsub + i, None] * C[j][None, :, i]
-            lut[:, j, :] = acc
-        return blk_q, qip, lut
-
-    def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
-        probed = probes_bc.value["by_cluster"]
-        for pdf in it:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            cids = pdf["centroid_id"].to_numpy(np.int64)
-            cm = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            oq, oi, os = [], [], []
-            for cid in np.unique(cids):
-                if int(cid) not in probed:
-                    continue
-                sel = cids == cid
-                sub_ids, sub_cm = ids[sel], cm[sel]
-                # ONE pre-sort by vec_id: ties under every later
-                # stable sort then break id-ASC, _prune_topk's least-
-                # significant key
-                ordid = np.argsort(sub_ids, kind="stable")
-                sub_ids, sub_cm = sub_ids[ordid], sub_cm[ordid]
-                idx, cvn2, cvlut, cv = _cluster_state(cache, int(cid))
-                # den: per ROW, query-independent — the exact
-                # pq_ivf_adc_search_scan chains
-                cross = cvlut[0][sub_cm[:, 0]]
-                for j in range(1, m):
-                    cross = cross + cvlut[j][sub_cm[:, j]]
-                rn2 = nsq[0][sub_cm[:, 0]]
-                for j in range(1, m):
-                    rn2 = rn2 + nsq[j][sub_cm[:, j]]
-                den = np.sqrt((cvn2 + (2.0 * cross)) + rn2)
-                den = np.where(den == 0.0, np.nan, den)
-                # NaN-scored rows (den==0) rank FIRST for EVERY query
-                # (Spark: NaN is the largest double), ordered id-ASC
-                # among themselves — split them out once per batch
-                nanrow = np.isnan(den)
-                nan_ids = sub_ids[nanrow]
-                fin_ids = sub_ids[~nanrow]
-                fin_cm = sub_cm[~nanrow]
-                fin_den = den[~nanrow]
-                n_nan, n_fin = len(nan_ids), len(fin_ids)
-                take = min(cand + 1, n_nan + n_fin)
-                fin_take = max(0, min(take - n_nan, n_fin))
-                nan_take = min(n_nan, take)
-                for lo in range(0, len(idx), query_block):
-                    hi = min(lo + query_block, len(idx))
-                    blk_q, qip, lut = _query_block(idx[lo:hi], cv)
-                    nq = hi - lo
-                    if n_fin:
-                        ip = lut[:, 0, :][:, fin_cm[:, 0]]
-                        for j in range(1, m):
-                            ip = ip + lut[:, j, :][:, fin_cm[:, j]]
-                        scores = (qip[:, None] + ip) / fin_den[None, :]
-                    else:
-                        scores = np.empty((nq, 0), dtype=np.float64)
-                    if fin_take:
-                        # stable argsort on -score == (score DESC, id
-                        # ASC) after the id pre-sort; -0.0 == 0.0 ties
-                        # fall through to id order exactly like
-                        # _prune_topk's lexsort
-                        ordf = np.argsort(
-                            -scores, axis=1, kind="stable"
-                        )[:, :fin_take]
-                        f_ids = fin_ids[ordf]
-                        f_s = np.take_along_axis(scores, ordf, axis=1)
-                    else:
-                        f_ids = np.empty((nq, 0), dtype=np.int64)
-                        f_s = np.empty((nq, 0), dtype=np.float64)
-                    if nan_take:
-                        t_ids = np.concatenate(
-                            [
-                                np.tile(nan_ids[:nan_take], (nq, 1)),
-                                f_ids,
-                            ],
-                            axis=1,
-                        )
-                        t_s = np.concatenate(
-                            [
-                                np.full(
-                                    (nq, nan_take),
-                                    np.nan,
-                                    dtype=np.float64,
-                                ),
-                                f_s,
-                            ],
-                            axis=1,
-                        )
-                    else:
-                        t_ids, t_s = f_ids, f_s
-                    w = t_ids.shape[1]
-                    if w == 0:
-                        continue
-                    # drop each query's self row AFTER the cand+1 cut
-                    # (at most one per query), preserving order, then
-                    # trim back to cand
-                    self_mask = t_ids == blk_q[:, None]
-                    ord3 = np.argsort(self_mask, axis=1, kind="stable")
-                    t_ids = np.take_along_axis(t_ids, ord3, axis=1)
-                    t_s = np.take_along_axis(t_s, ord3, axis=1)
-                    valid = ~np.take_along_axis(self_mask, ord3, axis=1)
-                    if w == cand + 1:
-                        # rows that lost no self row: drop the extra
-                        # (cand+1)-th candidate instead
-                        valid[:, cand] &= self_mask.any(axis=1)
-                    rowidx, _ = np.nonzero(valid)
-                    oq.append(blk_q[rowidx])
-                    oi.append(t_ids[valid])
-                    os.append(t_s[valid])
-            if oq:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(oq),
-                        "vec_id": np.concatenate(oi),
-                        "pq_score": np.concatenate(os),
-                    }
-                )
-
-    return codes.select("vec_id", "centroid_id", "codes").mapInPandas(
-        scan, "query_id long, vec_id long, pq_score double"
-    )
-
-
 # --------------------------------------------------------------------------
 # the DuckDB search mirror
 # --------------------------------------------------------------------------
@@ -1326,2095 +1108,3 @@ FROM (
     ) AS rank FROM rerank
 ) WHERE rank <= 5
 """
-
-
-# --------------------------------------------------------------------------
-# the persisted ANN model artifact + store (VERDICT r8 #1)
-# --------------------------------------------------------------------------
-# The tokenizer pattern (operators/bpe.py save_tokenizer/load_tokenizer)
-# applied to the PQ tier: an IVF-PQ model — coarse centroids + residual
-# codebook + the serving knobs (frac, cand) — becomes ONE canonical,
-# sha256-stamped JSON artifact. Train once, serve forever: a fresh
-# session loads the frozen model and searches the persisted code store
-# with results identical to the training session (floats round-trip
-# exactly through JSON repr; everything downstream is the same IEEE
-# replay). The store itself is stamped with the model's sha at build
-# time, so serving a store under the WRONG model is refused instead of
-# silently returning garbage codes decoded by mismatched tables.
-
-ANN_MODEL_FORMAT = "ann-ivfpq-v1"
-ANN_STORE_META = "_ann_model.json"  # underscore: parquet readers skip it
-
-
-def require_local_metadata_path(path: str, op: str) -> str:
-    """THE metadata-plane contract check (VERDICT r10 #1), shared by
-    every ANN lifecycle reader and writer: refuse URI-schemed paths
-    (``s3://``, ``hdfs://``, ``gs://``, ...) loudly instead of
-    degrading silently.
-
-    Every crash-safety and concurrency guarantee in the lifecycle
-    tier rests on POSIX primitives — atomic ``os.replace`` (store
-    meta, tombstone set, CURRENT pointer, merge journal) and
-    ``O_EXCL`` creation as the single-writer arbiter (tombstone lock,
-    journal acquire) — none of which exist on object stores (no
-    atomic rename, no exclusive create). Worse than the writers, the
-    ``os.path``-based READERS would return "absent" for every
-    metadata file on a URI path: a tombstone set that reads as empty
-    serves retired ids, a stamp that reads as missing skips the
-    model-mismatch refusal. So reads refuse too.
-
-    The supported deployment shape (documented in SCALING.md
-    "metadata plane"): the DATA plane (parquet codes, raw corpus) may
-    live anywhere Spark can read; the METADATA plane — store meta,
-    tombstones, journals, CURRENT pointers, version/drain dirs — is
-    a local filesystem or a shared POSIX mount (NFS with proper
-    O_EXCL semantics). The reference's analogous posture keeps all
-    such state in one transactional Postgres
-    (src/etl/load/postgis.py:69-94). As of r12 the seam is PLUGGABLE
-    for the rename-free subset (store stamp, tombstone takedown set,
-    applied history, CURRENT resolve): those route through
-    `metaplane.resolve_metadata_arbiter`, so a scheme registered
-    with a conditional-put adapter
-    (`metaplane.register_metadata_adapter`) serves and administers
-    takedowns with its metadata on the object store, and the FULL
-    rebuild deployment loop (r12b: `rebuild_ann`'s claim/commit/
-    pointer-CAS publish, `resolve_ann_current`, serving,
-    `prune_ann_versions`) runs there too. An UNregistered scheme
-    still lands here — the refusal stays the contract. The
-    incremental maintenance rungs (merge journal moves, gc, compact,
-    retune) remain POSIX-only BY DESIGN: their whole value is
-    rename/hard-link O(files) data movement that object stores do
-    not have — the object-store remedy for each is the rebuild loop,
-    which is exactly what the reference's full-refresh posture does.
-
-    The scheme match requires 2+ leading chars so Windows drive
-    letters (``C:\\...``) never false-positive. Returns ``path``
-    unchanged so call sites can wrap in-line."""
-    import re
-
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.\-]+)://", str(path))
-    if m:
-        raise ValueError(
-            f"{op} requires a local-filesystem (or POSIX-mount) "
-            f"path for the ANN metadata plane — got {path!r} "
-            f"(scheme '{m.group(1)}://'). The lifecycle's atomicity "
-            "and single-writer guarantees (os.replace, O_EXCL) do "
-            "not exist on object stores, and os.path-based metadata "
-            "reads would silently see every stamp/tombstone/journal "
-            "as absent. Keep store metadata on local FS/NFS (the "
-            "data plane may stay remote); see SCALING.md 'metadata "
-            "plane'."
-        )
-    return path
-def require_rename_capable(path: str, op: str) -> str:
-    """The INCREMENTAL-rung guard (r12b): merge journal moves, gc
-    staging, compact, and retune hard-links need atomic rename /
-    link — POSIX primitives. On an UNregistered scheme this refuses
-    with the r10 metadata-plane message (via the resolver); on a
-    REGISTERED conditional-put scheme it refuses with the design
-    answer instead: the object-store deployment's maintenance path
-    is the rebuild loop (`rebuild_ann`'s claim/commit/pointer-CAS
-    publish runs natively there), with takedowns staying bounded
-    tombstones in between — pointing the operator at the remedy
-    rather than at a mount they do not have. Local paths pass
-    through unchanged."""
-    from .metaplane import resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(path, op)
-    if not arb.native_rename:
-        raise ValueError(
-            f"{op} is an incremental maintenance rung that needs "
-            f"atomic rename/hard-link (POSIX); {path!r} resolves to "
-            "a conditional-put (object-store) metadata arbiter, "
-            "which has neither. The object-store remedy is the "
-            "rebuild loop: rebuild_ann publishes fresh codes there "
-            "natively (claim -> commit -> pointer CAS), takedowns "
-            "remain bounded tombstones until it runs, and "
-            "prune_ann_versions bounds the history; see SCALING.md "
-            "'metadata plane'."
-        )
-    return path
-
-
-# LEGACY (pre-r10) drain stamp filename: one line, the model sha.
-# r10 unified the writers on ANN_STORE_META (VERDICT r9 #5 — two
-# formats for one fact is a maintenance trap); the marker was READ
-# for one back-compat round and the read path is now GONE (r12, as
-# the r11 comment promised). The name survives ONLY so a leftover
-# marker refuses loudly with the migration remedy instead of reading
-# as "unstamped" and sending the operator down the wrong diagnosis.
-_LEGACY_SHA_MARKER = "_ann_model_sha"
-
-
-def write_ann_store_meta(
-    store_path: str,
-    model_sha256: str,
-    sizes: dict | None = None,
-    encoding_sha256: str | None = None,
-    merged_through: int | None = None,
-) -> None:
-    """THE one store-stamp writer (VERDICT r9 #5): every ANN store
-    dir — built, compacted, or drain-maintained — carries the same
-    ``_ann_model.json`` with the producing model's full sha256
-    (provenance) AND its ENCODING sha256 (the refusal key, r10 —
-    codes depend only on centroids/codebook/rotation, so a model
-    retuned in frac/cand serves the same store without a re-encode),
-    plus the K-row cluster-size table when the store is immutable
-    (build/compact; a drain dir omits it — appends would stale it, so
-    serving computes sizes with one K-row aggregate instead). Atomic
-    publish (the WAP convention): a crash mid-write leaves either no
-    meta or a complete one, never truncated JSON that reads as
-    corruption."""
-    import json
-    import os
-
-    meta: dict = {
-        "format": ANN_MODEL_FORMAT,
-        "model_sha256": model_sha256,
-    }
-    if encoding_sha256 is not None:
-        meta["encoding_sha256"] = encoding_sha256
-    if sizes is not None:
-        meta["cluster_sizes"] = {str(k): int(v) for k, v in sizes.items()}
-    if merged_through is not None:
-        # the incremental-merge watermark (`merge_ann_appends`): the
-        # highest drain batch_id whose codes this store already holds.
-        # It lives in the SAME atomically-replaced meta as the sizes
-        # so one os.replace commits both — a separate watermark file
-        # would reopen the torn-state window the WAP convention closes
-        meta["merged_through"] = int(merged_through)
-    # arbiter-routed (r12 metaplane seam): POSIX paths keep the exact
-    # tmp+os.replace; a registered CAS scheme gets its conditional-put
-    # adapter; an unregistered scheme refuses with the r10 message
-    from .metaplane import join, put_json, resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(store_path, "write_ann_store_meta")
-    put_json(arb, join(store_path, ANN_STORE_META), meta)
-
-
-def read_ann_store_stamp(
-    store_path: str,
-) -> tuple[dict | None, dict | None]:
-    """Read a store dir's model stamp: ``(stamp_or_None,
-    cluster_sizes_or_None)`` where ``stamp`` carries
-    ``model_sha256`` and — for r10+ writers — ``encoding_sha256``.
-    Honors the unified JSON meta; r9 metas without the encoding key
-    compare by full model sha (one back-compat round). The pre-r10
-    one-line marker's read support ended in r12 — a marker-only dir
-    refuses loudly with the re-stamp remedy."""
-    from .metaplane import join, read_json, resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(store_path, "read_ann_store_stamp")
-    meta = read_json(arb, join(store_path, ANN_STORE_META))
-    if meta is not None:
-        raw = meta.get("cluster_sizes")
-        sizes = (
-            None
-            if raw is None
-            else {int(k): int(v) for k, v in raw.items()}
-        )
-        stamp = {
-            "model_sha256": meta.get("model_sha256"),
-            "encoding_sha256": meta.get("encoding_sha256"),
-        }
-        if "merged_through" in meta:
-            # only surfaced when a merge has stamped it, so stamp
-            # dicts for never-merged stores keep their r10 shape
-            stamp["merged_through"] = int(meta["merged_through"])
-        return stamp, sizes
-    if arb.exists(join(store_path, _LEGACY_SHA_MARKER)):
-        # pre-r10 marker-only dir: the content-read back-compat ended
-        # in r12. Refuse with the remedy rather than reporting the
-        # store unstamped — "no stamp" sends the operator rebuilding
-        # a store whose model is in fact known and recorded.
-        raise ValueError(
-            f"store {store_path!r} carries only the pre-r10 legacy "
-            f"sha marker ({_LEGACY_SHA_MARKER}); its read support "
-            "ended — re-stamp with write_ann_store_meta(store_path, "
-            "model_sha256, encoding_sha256=...) from the model that "
-            "built it (the marker's one line is that model's sha), "
-            "then delete the marker file"
-        )
-    return None, None
-
-
-def _ann_payload(
-    cents: Sequence[tuple[int, Sequence[float]]],
-    cb: Codebook,
-    frac: float,
-    cand: int,
-    rot: Rotation | None = None,
-) -> bytes:
-    """Canonical artifact bytes (sorted keys, no whitespace — the
-    save_tokenizer convention): the sha256 identifies model CONTENT,
-    not formatting. Floats serialize via json's repr-shortest form,
-    which round-trips every IEEE double exactly. ``rot`` is the
-    optional OPQ rotation (sim11) — null for plain IVF-PQ."""
-    import json
-
-    return json.dumps(
-        {
-            "format": ANN_MODEL_FORMAT,
-            "dim": len(cents[0][1]),
-            "m": len(cb),
-            "ks": len(cb[0]),
-            "frac": float(frac),
-            "cand": int(cand),
-            "coarse": [
-                [int(cid), [float(x) for x in cv]] for cid, cv in cents
-            ],
-            "codebook": [
-                [[float(x) for x in c] for c in sub] for sub in cb
-            ],
-            "rot": (
-                None
-                if rot is None
-                else [[float(x) for x in row] for row in rot]
-            ),
-        },
-        sort_keys=True,
-        separators=(",", ":"),
-    ).encode()
-
-
-def ann_model_sha256(
-    cents: Sequence[tuple[int, Sequence[float]]],
-    cb: Codebook,
-    frac: float,
-    cand: int = 100,
-    rot: Rotation | None = None,
-) -> str:
-    """Content fingerprint — identical whether the model was just
-    trained or loaded from an artifact (same canonical payload), so a
-    consumer verifies two runs used the SAME model by hash equality
-    (the tokenizer_sha256 convention)."""
-    import hashlib
-
-    return hashlib.sha256(
-        _ann_payload(cents, cb, frac, cand, rot)
-    ).hexdigest()
-
-
-def ann_encoding_sha256(
-    cents: Sequence[tuple[int, Sequence[float]]],
-    cb: Codebook,
-    rot: Rotation | None = None,
-) -> str:
-    """Fingerprint of the CODE-AFFECTING model fields only — coarse
-    centroids, residual codebook, rotation, geometry — excluding the
-    serving knobs (frac, cand). Two models with the same encoding sha
-    produce byte-identical stores, so a store is stamped with THIS
-    hash (r10): retuning the probe budget or the rerank cut is a new
-    artifact but NOT a 1M-row re-encode — the full-model sha would
-    have forced exactly that pointless rebuild."""
-    import hashlib
-    import json
-
-    payload = json.dumps(
-        {
-            "format": "ann-ivfpq-enc-v1",
-            "dim": len(cents[0][1]),
-            "m": len(cb),
-            "ks": len(cb[0]),
-            "coarse": [
-                [int(cid), [float(x) for x in cv]] for cid, cv in cents
-            ],
-            "codebook": [
-                [[float(x) for x in c] for c in sub] for sub in cb
-            ],
-            "rot": (
-                None
-                if rot is None
-                else [[float(x) for x in row] for row in rot]
-            ),
-        },
-        sort_keys=True,
-        separators=(",", ":"),
-    ).encode()
-    return hashlib.sha256(payload).hexdigest()
-
-
-def save_ann_model(
-    path: str,
-    cents: Sequence[tuple[int, Sequence[float]]],
-    cb: Codebook,
-    frac: float,
-    cand: int = 100,
-    rot: Rotation | None = None,
-) -> dict:
-    """Persist a trained IVF-PQ model and return ``{"path", "sha256"}``
-    for the manifest. ``cents`` is the K-row coarse codebook as
-    ``(centroid_id, cv)`` pairs ascending with ids 0..K-1 (the
-    `_ivf_centroids` contract — enforced, because `pq_ivf_encode` and
-    the probe replay index it positionally); centroid norms are NOT
-    stored — they are derived at load time by the same IEEE chain
-    `vec_norm` runs, so they cannot drift from the vectors. ``rot``
-    persists an OPQ rotation (sim11's tier): it must be square over
-    ``dim`` and orthogonal (checked — a corrupt rotation breaks the
-    ADC reconstruction algebra silently, so it is refused at save
-    time)."""
-    import hashlib
-
-    ids = [int(cid) for cid, _ in cents]
-    if ids != list(range(len(ids))):
-        raise ValueError(
-            f"coarse codebook must ascend with centroid_id 0..K-1, "
-            f"got {ids[:8]}..."
-        )
-    dim = len(cents[0][1])
-    if any(len(cv) != dim for _, cv in cents):
-        raise ValueError("coarse centroids must share one dimension")
-    if dim != len(cb) * len(cb[0][0]):
-        raise ValueError(
-            f"codebook geometry m*dsub = {len(cb)}*{len(cb[0][0])} "
-            f"does not cover dim {dim}"
-        )
-    if rot is not None:
-        _check_rotation(rot, dim)
-    import math
-
-    bad = [
-        x
-        for seq in (
-            [x for _, cv in cents for x in cv],
-            [x for sub in cb for c in sub for x in c],
-            [frac],
-            # rot rides the scan too (ADVICE r9): _check_rotation
-            # already refuses non-finite entries, but the artifact-
-            # level guard must not depend on a geometry check's
-            # incidental coverage
-            [] if rot is None else [x for row in rot for x in row],
-        )
-        for x in seq
-        if not math.isfinite(x)
-    ]
-    if bad:
-        # the _flit stance at artifact level: json.dumps would emit
-        # non-standard Infinity/NaN tokens, and a non-finite model
-        # component is a training bug — name it at save time
-        raise ValueError(
-            f"non-finite model component {bad[0]!r} — refusing to "
-            "persist a degenerate model"
-        )
-    payload = _ann_payload(cents, cb, frac, cand, rot)
-    # arbiter-routed (r12 metaplane seam): POSIX keeps the exact
-    # tmp+os.replace WAP publish; a registered CAS scheme persists
-    # via conditional-put; an unregistered scheme refuses loudly
-    from .metaplane import resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(path, "save_ann_model")
-    arb.put(path, payload)
-    return {"path": path, "sha256": hashlib.sha256(payload).hexdigest()}
-
-
-def _check_rotation(rot: Rotation, dim: int) -> None:
-    """Refuse a non-square, non-finite, or non-orthogonal rotation:
-    ``||R@R^T - I||_max < 1e-9`` (train_opq_rotation's output is
-    exactly orthogonal up to SVD rounding; anything looser means the
-    matrix was corrupted or hand-edited). Non-finite entries are
-    refused EXPLICITLY and the orthogonality test is phrased as
-    ``not (err < tol)`` (ADVICE r9): a NaN-poisoned R makes the
-    residual ``>= tol`` comparison False — NaN comparisons are all
-    False — so the naive form would silently accept exactly the
-    corrupt matrix this check exists to catch."""
-    import numpy as np
-
-    R = np.array(rot, dtype=np.float64)
-    if R.shape != (dim, dim):
-        raise ValueError(
-            f"rotation must be {dim}x{dim}, got {R.shape}"
-        )
-    if not np.isfinite(R).all():
-        raise ValueError(
-            "non-finite model component in rotation — refusing a "
-            "degenerate model"
-        )
-    if not (np.abs(R @ R.T - np.eye(dim)).max() < 1e-9):
-        raise ValueError("rotation is not orthogonal (corrupt model?)")
-
-
-def _vec_norm_replay(v: Sequence[float]) -> float:
-    """`vec_norm`'s fold in Python floats: sqrt of the left-to-right
-    sum of squares (the 0.0 seed is exact, math.sqrt and the JVM sqrt
-    are both correctly rounded) — bit-identical to the Spark column,
-    so norms derived from artifact floats equal the training
-    session's."""
-    import math
-
-    acc = 0.0
-    for x in v:
-        acc = acc + x * x
-    return math.sqrt(acc)
-
-
-def load_ann_model(path: str, expected_sha256: str | None = None) -> dict:
-    """Load a `save_ann_model` artifact: ``{"cents": [(cid, cv)],
-    "cents3": [(cid, cv, cn)], "cb", "frac", "cand", "dim", "m", "ks",
-    "sha256"}`` — the exact shapes `pq_ivf_encode` /
-    `pq_ivf_adc_search_scan` / the probe replay consume.
-
-    Refuses non-artifacts (wrong format tag), geometry-inconsistent
-    payloads, and — when ``expected_sha256`` is given — content drift
-    (the load_tokenizer stance: a serving path pinned to a manifest
-    hash must fail loudly on a swapped model, never search under
-    it)."""
-    import hashlib
-    import json
-
-    from .metaplane import resolve_metadata_arbiter
-
-    raw = resolve_metadata_arbiter(path, "load_ann_model").read(path)
-    if raw is None:
-        raise FileNotFoundError(path)
-    sha = hashlib.sha256(raw).hexdigest()
-    if expected_sha256 is not None and sha != expected_sha256:
-        raise ValueError(
-            f"ANN model {path!r} sha256 {sha[:12]}... does not match "
-            f"expected {expected_sha256[:12]}... — the artifact "
-            "changed since it was pinned; retrain/re-pin instead of "
-            "serving under a drifted model"
-        )
-    data = json.loads(raw)
-    if data.get("format") != ANN_MODEL_FORMAT:
-        raise ValueError(
-            f"not an {ANN_MODEL_FORMAT} artifact: {path!r} "
-            f"(format={data.get('format')!r})"
-        )
-    cents = [(int(cid), [float(x) for x in cv]) for cid, cv in data["coarse"]]
-    cb = [
-        [[float(x) for x in c] for c in sub] for sub in data["codebook"]
-    ]
-    dim, m, ks = int(data["dim"]), int(data["m"]), int(data["ks"])
-    if (
-        len(cb) != m
-        or any(len(sub) != ks for sub in cb)
-        or dim != m * len(cb[0][0])
-        or any(len(cv) != dim for _, cv in cents)
-    ):
-        raise ValueError(f"ANN model {path!r} geometry is inconsistent")
-    rot = data.get("rot")
-    if rot is not None:
-        rot = [[float(x) for x in row] for row in rot]
-        _check_rotation(rot, dim)
-    return {
-        "cents": cents,
-        "cents3": [(cid, cv, _vec_norm_replay(cv)) for cid, cv in cents],
-        "cb": cb,
-        "frac": float(data["frac"]),
-        "cand": int(data["cand"]),
-        "dim": dim,
-        "m": m,
-        "ks": ks,
-        "rot": rot,
-        "sha256": sha,
-        "encoding_sha256": ann_encoding_sha256(cents, cb, rot),
-    }
-
-
-def retune_ann_model(
-    path: str,
-    out: str,
-    frac: float | None = None,
-    cand: int | None = None,
-    expected_sha256: str | None = None,
-) -> dict:
-    """Re-save a model artifact with new SERVING knobs — ``frac``
-    (probe budget) and/or ``cand`` (rerank candidate cut) — under the
-    SAME encoding (VERDICT r10 #4). Codes depend only on
-    centroids/codebook/rotation, and stores are refused by ENCODING
-    sha (`read_ann_store`), so a retuned model serves every store the
-    original encoded — retuning is a metadata write, never a corpus
-    re-encode.
-
-    Why you'd want to: ``cand`` is the cheapest recall lever on
-    structured corpora. The r10 recall study (SCALING.md) measured
-    recall@5 at 1M going 0.219 -> 0.619 -> 0.825 as cand went
-    100 -> 1000 -> 4000 for only ~+50 % serving cost — and the
-    default (`train_ann_model`'s 100) sits at the bottom of that
-    curve. Sweep cand against a labeled sample, then retune the
-    production artifact; the encoding-sha stamp makes the swap free.
-
-    Returns ``{"path", "sha256", "encoding_sha256", "frac",
-    "cand"}`` — the new FULL sha differs (serving pins that used
-    ``expected_sha256`` must re-pin; that is the point of pinning),
-    the encoding sha is asserted unchanged. ``expected_sha256`` pins
-    the SOURCE artifact (the load_tokenizer stance) — a retune must
-    refuse a drifted input rather than launder it into a
-    fresh-looking artifact. Spark-free."""
-    model = load_ann_model(path, expected_sha256=expected_sha256)
-    new_frac = model["frac"] if frac is None else float(frac)
-    new_cand = model["cand"] if cand is None else int(cand)
-    if new_frac <= 0 or new_frac > 1:
-        raise ValueError(f"frac must be in (0, 1], got {new_frac}")
-    if new_cand < 1:
-        raise ValueError(f"cand must be >= 1, got {new_cand}")
-    art = save_ann_model(
-        out, model["cents"], model["cb"], new_frac, new_cand,
-        rot=model["rot"],
-    )
-    new = load_ann_model(out)
-    # structurally impossible to fail (knobs are outside the encoding
-    # payload) — asserted anyway because serving correctness hangs
-    # on it
-    if new["encoding_sha256"] != model["encoding_sha256"]:
-        raise AssertionError(
-            "retune changed the encoding sha — artifact layout bug"
-        )
-    return {
-        "path": art["path"],
-        "sha256": art["sha256"],
-        "encoding_sha256": new["encoding_sha256"],
-        "frac": new_frac,
-        "cand": new_cand,
-    }
-
-
-def retune_ann_version(
-    base_dir: str,
-    frac: float | None = None,
-    cand: int | None = None,
-) -> dict:
-    """`retune_ann_model` at the DEPLOYMENT level: publish the
-    retuned artifact as a NEW version whose store is the CURRENT
-    store's files HARD-LINKED (same inodes, no code bytes copied, no
-    re-encode — legal because the encoding sha is unchanged and
-    stores are refused by encoding sha), then flip the pointer with
-    the shared atomic pair publish. Serving follows on the next
-    `ann_follow_s` tick; rollback is pointing CURRENT back — the old
-    pair is untouched, exactly like a rebuild's.
-
-    Mutable METADATA is copied, never linked: the tombstone set and
-    applied-history are per-version state going forward (a takedown
-    filed later lands only in the version it was filed against —
-    `os.replace` rewrites break the link by design, but a shared
-    inode would make the pre-replace set ambiguous), and the store
-    meta rides over with its sizes + merge watermark so merges
-    against the new version keep composing. The merge journal and
-    its staging dir are deliberately NOT carried: a pending journal
-    on the source refuses the retune outright (mid-merge layout must
-    not be duplicated into a new version).
-
-    Spark-free and O(files) — at 100 TB this publishes a retuned
-    serving tier in directory-walk time instead of a ~3 TB codes
-    copy. Falls back to byte copies when the filesystem refuses
-    cross-device links (staging lives inside base_dir, so same-FS is
-    the norm). Returns the new `resolve_ann_current` dict."""
-    import os
-    import shutil
-    import uuid
-
-    require_rename_capable(base_dir, "retune_ann_version")
-    cur = resolve_ann_current(base_dir)
-    jp = os.path.join(cur["store_path"], ANN_MERGE_JOURNAL)
-    if os.path.exists(jp):
-        raise ValueError(
-            f"store {cur['store_path']!r} has a pending merge "
-            "journal — finish or recover the merge before retuning "
-            "(a mid-merge layout must not be linked into a new "
-            "version)"
-        )
-    stamp0, _ = read_ann_store_stamp(cur["store_path"])
-    mb0 = (
-        None
-        if stamp0 is None or stamp0.get("merged_through") is None
-        else int(stamp0["merged_through"])
-    )
-    versions = os.path.join(base_dir, "versions")
-    n = cur["version"] + 1
-    while os.path.isdir(os.path.join(versions, f"v{n}")):
-        n += 1
-    staging = os.path.join(
-        versions, f".staging-v{n}-{uuid.uuid4().hex[:8]}"
-    )
-    os.makedirs(staging)
-    # everything between here and publish cleans up its own staging
-    # residue on ANY failure (ADVICE r11: a refused retune — bad
-    # frac/cand, pinned-sha mismatch on a hand-mangled artifact — or
-    # a failed link walk used to leak the .staging-* dir silently;
-    # only the watermark-race branch removed it). publish_ann_version
-    # stays outside: its rename failure names the residue path by its
-    # own convention.
-    try:
-        art = retune_ann_model(
-            cur["model_path"],
-            os.path.join(staging, "model.json"),
-            frac=frac,
-            cand=cand,
-            # pin the source to the pointer's sha: a hand-mangled
-            # artifact must refuse here, not get republished as a
-            # legitimate-looking new version
-            expected_sha256=cur["model_sha256"],
-        )
-        src_store = cur["store_path"]
-        dst_store = os.path.join(staging, "store")
-        copy_names = {ANN_STORE_META, ANN_TOMBSTONES, ANN_TOMBS_APPLIED}
-        for root, dirs, files in os.walk(src_store):
-            rel = os.path.relpath(root, src_store)
-            dirs[:] = [d for d in dirs if d != ANN_MERGE_STAGE]
-            out_root = (
-                dst_store if rel == "." else os.path.join(dst_store, rel)
-            )
-            os.makedirs(out_root, exist_ok=True)
-            for fn in files:
-                if fn == ANN_MERGE_JOURNAL or fn.endswith(".lock"):
-                    continue
-                src = os.path.join(root, fn)
-                dst = os.path.join(out_root, fn)
-                if fn in copy_names:
-                    shutil.copy2(src, dst)  # mutable metadata: own bytes
-                else:
-                    try:
-                        os.link(src, dst)  # immutable codes: same inode
-                    except OSError:
-                        shutil.copy2(src, dst)
-        # the gc x merge commit-window stance, applied to the link walk
-        # (r11): a merge fully committing between the entry checks and
-        # the walk could leave the walk LINKING merged code files while
-        # the copied meta still carries the pre-merge watermark — the
-        # next merge against the new version would re-fold those batches
-        # and duplicate vec_ids. ORDER is load-bearing (review r11): the
-        # journal must be checked BEFORE the stamp re-read — a merge's
-        # commit sequence is moves -> meta replace -> journal unlink, so
-        # "journal absent at Tj" implies any walk-overlapping merge had
-        # already replaced the meta before Tj, and the stamp read at
-        # T1 > Tj must see the moved watermark. Read the other way, a
-        # commit landing between the stamp read and the journal check
-        # passes both.
-        journal_seen = os.path.exists(jp)
-        stamp1, _ = read_ann_store_stamp(cur["store_path"])
-        mb1 = (
-            None
-            if stamp1 is None or stamp1.get("merged_through") is None
-            else int(stamp1["merged_through"])
-        )
-        if journal_seen or mb1 != mb0:
-            raise ValueError(
-                f"a merge moved {cur['store_path']!r} while retuning "
-                f"(journal present: {journal_seen}, watermark "
-                f"{mb0} -> {mb1}) — retry the retune after it finishes"
-            )
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    publish_ann_version(base_dir, staging, n, art["sha256"])
-    out = resolve_ann_current(base_dir)
-    out["from_version"] = cur["version"]
-    out["frac"] = art["frac"]
-    out["cand"] = art["cand"]
-    out["encoding_sha256"] = art["encoding_sha256"]
-    return out
-
-
-def build_ann_store(
-    emb: DataFrame,
-    model: dict,
-    store_path: str,
-    mode: str = "error",
-) -> None:
-    """Materialize the serving code store under a FROZEN model: one
-    fused Arrow scan (`pq_ivf_encode`) writing ``(vec_id, codes)``
-    parquet PARTITIONED BY centroid_id — the physical layout that
-    turns the probed-cluster filter into partition pruning (only
-    probed clusters' files are read; the deployment shape the sim9
-    PartitionFilter pin documents). The model's sha256 is stamped
-    into ``store_path/_ann_model.json`` so `ann_topk` can refuse a
-    store/model mismatch — along with the K-row cluster-size table
-    (a side artifact of the build, read back by `ann_topk`'s probe
-    budgeting so SERVING never pays a full store scan to learn
-    sizes; at 100 TB that scan would dominate every request)."""
-    from pyspark.sql import functions as F
-
-    from .metaplane import resolve_metadata_arbiter
-
-    # data-plane addressing (r12b): Spark writes the parquet at the
-    # arbiter's data_path face (identity on POSIX; the mapped root on
-    # the CAS simulator; s3a:// on a real adapter) while the meta
-    # stamp rides the metadata plane under the same logical prefix
-    dp = resolve_metadata_arbiter(
-        store_path, "build_ann_store"
-    ).data_path(store_path)
-    pq_ivf_encode(
-        emb, model["cents3"], model["cb"], rot=model.get("rot")
-    ).write.mode(mode).partitionBy("centroid_id").parquet(dp)
-    spark = emb.sparkSession
-    sizes = {
-        int(r["centroid_id"]): int(r["n"])
-        for r in spark.read.parquet(dp)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    write_ann_store_meta(
-        store_path, model["sha256"], sizes,
-        encoding_sha256=model["encoding_sha256"],
-    )
-
-
-def read_ann_store(
-    spark, store_path: str, model: dict
-) -> tuple[DataFrame, dict | None]:
-    """Open a `build_ann_store` parquet, refusing a model mismatch:
-    the codes are meaningless under any other codebook, so a swapped
-    model must fail loudly, not return plausible garbage. Returns
-    ``(store_df, cluster_sizes_or_None)`` — the sizes come from the
-    build-time meta when present (immutable store: exact by
-    construction), None for stores without the size stamp (e.g. a
-    drain-maintained dir, where appends would stale a baked table),
-    where the caller computes them.
-
-    The stamp comes through `read_ann_store_stamp` — ONE reader for
-    the unified JSON meta (the pre-r10 marker now refuses there with
-    the re-stamp remedy) — so a drain store under the wrong model is
-    refused exactly like a built one. The refusal key is the ENCODING sha
-    (r10): codes depend only on centroids/codebook/rotation, so a
-    model that differs ONLY in serving knobs (frac, cand) legally
-    serves the same store — retuning never forces a re-encode.
-    Legacy stamps without the encoding key compare by full model sha
-    (strictly safer: they refuse some stores a retuned model could
-    have served)."""
-    from .metaplane import resolve_metadata_arbiter
-
-    stamp, sizes = read_ann_store_stamp(store_path)
-    if stamp is not None:
-        _refuse_stamp_mismatch(store_path, stamp, model)
-    if _merge_journal_mid_move(store_path):
-        raise ValueError(
-            f"store {store_path!r} has a pending merge journal "
-            f"({ANN_MERGE_JOURNAL}) with moves in flight — a "
-            "merge is publishing or crashed mid-publish; wait "
-            "for it, or rerun merge_ann_appends with "
-            "recover=True after checking none is running"
-        )
-    dp = resolve_metadata_arbiter(
-        store_path, "read_ann_store"
-    ).data_path(store_path)
-    return spark.read.parquet(dp), sizes
-
-
-def _merge_journal_mid_move(
-    store_path: str, op: str = "read_ann_store"
-) -> bool:
-    """True when the store carries a PHASE-1 merge journal (moves
-    listed): files may be mid-move and the size stamp mid-update — a
-    detectable inconsistent state is never served (the
-    rebuild_ann/WAP stance). A phase-0 stub ({"moves": []}) means a
-    merge is only STAGING — the store is untouched and fully
-    servable; refusing it would black out serving for the whole
-    staging job, minutes at scale (review r10 round 4). Unparsable =
-    a rewrite caught mid-flight — transient, treated as mid-move.
-    Shared by `read_ann_store` and `compact_ann_store`'s post-listing
-    re-check (ADVICE r11). Arbiter-routed (r12b) so a CAS-hosted
-    store answers honestly too — merges themselves refuse CAS paths,
-    so the answer there is structurally False, but the reader must
-    not encode that assumption with an os.path probe that reads every
-    URI as absent. ``op`` names the CALLER in a resolver refusal
-    (review r12: compact's post-listing re-check must not point an
-    operator at read_ann_store)."""
-    import json
-
-    from .metaplane import join as mjoin
-    from .metaplane import resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(store_path, op)
-    raw = arb.read(mjoin(store_path, ANN_MERGE_JOURNAL))
-    if raw is None:
-        return False
-    try:
-        return bool(json.loads(raw.decode("utf-8")).get("moves"))
-    except ValueError:
-        return True
-
-
-def _refuse_stamp_mismatch(
-    store_path: str, stamp: dict, model: dict
-) -> None:
-    """The one store/model drift refusal, shared by `read_ann_store`
-    and `merge_ann_appends` (which must check the DRAIN's stamp
-    without eagerly opening its parquet root — an in-flight streaming
-    batch may be half-written there)."""
-    enc = stamp.get("encoding_sha256")
-    if enc is not None:
-        # compare encoding shas AND name them as such — printing
-        # an encoding sha labeled as a model sha sends the
-        # operator grepping manifests for a hash that is in
-        # neither (review r10)
-        if enc != model["encoding_sha256"]:
-            raise ValueError(
-                f"store {store_path!r} was encoded under model "
-                f"with encoding {enc[:12]}..., not the loaded "
-                f"model's encoding "
-                f"{model['encoding_sha256'][:12]}... (model sha "
-                f"{model['sha256'][:12]}...) — rebuild the store "
-                "or load the matching artifact"
-            )
-    elif (
-        stamp.get("model_sha256") is not None
-        and stamp["model_sha256"] != model["sha256"]
-    ):
-        raise ValueError(
-            f"store {store_path!r} was encoded under model "
-            f"{stamp['model_sha256'][:12]}..., not the "
-            f"loaded {model['sha256'][:12]}... — rebuild the "
-            "store or load the matching artifact"
-        )
-
-
-ANN_TOMBSTONES = "_ann_tombstones.json"  # underscore: parquet skips it
-
-
-def delete_from_ann_store(
-    store_path: str, ids: Sequence[int], lock_timeout_s: float = 10.0
-) -> dict:
-    """Retire vectors from a built/drained ANN store WITHOUT touching
-    its immutable parquet (VERDICT r9 #3 — the lifecycle gap): append
-    vec_ids to the store's tombstone set, honored by every serving
-    path (`ann_topk` filters them below the scan) and dropped
-    PHYSICALLY at the next `compact_ann_store`. Dedup and
-    decontamination removals (dd7 clusters, cur2/cur10 hits) and
-    takedown obligations land here — bounded-by-contract sets (a
-    takedown batch, a dedup cluster), kept as one sorted JSON list so
-    serving loads them as driver-side state and the NOT-IN pushes
-    into the parquet scan; a corpus-scale deletion is a REBUILD
-    (`rebuild_ann`), not a million tombstones.
-
-    Idempotent (set union), atomic (tmp+replace — the store-meta WAP
-    convention), and append-only until compaction: a tombstoned id
-    stays dead even if a drain later re-appends codes under it
-    (vec_ids are unique by contract; re-using one is a bug upstream).
-    Returns ``{"added", "total"}``. Cluster sizes stamped at build
-    time intentionally keep counting tombstoned rows until
-    compaction — the probe budget is a read-volume heuristic and the
-    stamped sizes stay exact for what the SCAN still reads.
-
-    The read-merge-write runs under an O_EXCL lock file (review r10
-    round 2): tmp+replace alone prevents torn FILES, not lost
-    UPDATES — two concurrent deletes (a takedown batch racing a
-    dedup job) would both read the same base set and the second
-    replace would silently resurrect the first's retired ids, which
-    for a takedown mechanism is silent non-compliance. Contention
-    waits up to ~10 s then raises naming the lock path (a crashed
-    holder leaves a stale lock an operator removes by hand — the
-    loud failure, never the silent lost update)."""
-    import time
-
-    from .metaplane import join, put_json, resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(store_path, "delete_from_ann_store")
-    new = {int(x) for x in ids}
-    if not new:
-        return {"added": 0, "total": len(read_ann_tombstones(store_path))}
-    if not arb.isdir(store_path):
-        raise ValueError(f"not a store dir: {store_path!r}")
-    path = join(store_path, ANN_TOMBSTONES)
-    lock = f"{path}.lock"
-    deadline = time.monotonic() + lock_timeout_s
-    # the single-writer arbiter is put_if_absent — O_EXCL on POSIX,
-    # PUT If-None-Match:* on a conditional-put adapter (r12 seam)
-    while not arb.put_if_absent(lock, b""):
-        if time.monotonic() >= deadline:
-            raise TimeoutError(
-                f"tombstone lock {lock!r} held for "
-                f">{lock_timeout_s:g}s — another delete is "
-                "running, or a crashed one left a stale lock "
-                "(remove it by hand after checking)"
-            )
-        time.sleep(0.05)
-    try:
-        existing = set(read_ann_tombstones(store_path))
-        merged = sorted(existing | new)
-        put_json(arb, path, merged)
-    finally:
-        arb.delete(lock)
-    return {"added": len(new - existing), "total": len(merged)}
-
-
-def read_ann_tombstones(store_path: str) -> list[int]:
-    """The store's retired vec_ids, sorted ([] when none) — driver-
-    side bounded state by the `delete_from_ann_store` contract."""
-    from .metaplane import join, read_json, resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(store_path, "read_ann_tombstones")
-    raw = read_json(arb, join(store_path, ANN_TOMBSTONES))
-    return [] if raw is None else sorted(int(x) for x in raw)
-
-
-ANN_TOMBS_APPLIED = "_ann_tombs_applied.json"  # underscore: hidden
-
-
-def write_ann_applied_tombstones(store_path: str, ids) -> None:
-    """Record the tombstones a compaction has applied PHYSICALLY —
-    rows these ids named are gone from this store's parquet, so
-    `merge_ann_appends` must not re-propagate them from the drain's
-    (necessarily persistent) takedown history into the fresh store's
-    serve-time NOT-IN (review r10 round 4). Same atomic-replace and
-    bounded-set contract as the tombstone file itself."""
-    from .metaplane import join, put_json, resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(
-        store_path, "write_ann_applied_tombstones"
-    )
-    put_json(
-        arb,
-        join(store_path, ANN_TOMBS_APPLIED),
-        sorted(int(x) for x in ids),
-    )
-
-
-def read_ann_applied_tombstones(store_path: str) -> list[int]:
-    """Ids physically dropped from this store at its compaction —
-    [] for built/drain stores (nothing was ever dropped from them)."""
-    from .metaplane import join, read_json, resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(
-        store_path, "read_ann_applied_tombstones"
-    )
-    raw = read_json(arb, join(store_path, ANN_TOMBS_APPLIED))
-    return [] if raw is None else sorted(int(x) for x in raw)
-
-
-def train_ann_model(
-    emb: DataFrame,
-    k: int = 64,
-    m: int = 8,
-    ks: int = 16,
-    frac: float = 0.1,
-    cand: int = 100,
-    sample_n: int = 4096,
-    opq: bool = False,
-    coarse_sample_n: int | None = None,
-) -> dict:
-    """One-call IVF-PQ model training over ``(vec_id, v, nrm)`` — the
-    sim10 composition (MLlib-KMeans coarse quantizer + residual PQ,
-    Jégou et al. 2011 §V) packaged for the artifact path: returns the
-    same dict shape `load_ann_model` yields, ready for
-    `save_ann_model` / `build_ann_store` / `api.ann_topk`.
-
-    The residual codebook trains on the first ``sample_n`` vectors'
-    residuals (the train_pq_codebook sampling convention — a codebook
-    is fit on a bounded sample, never the corpus), assigned and
-    subtracted through the same numpy replay the fused store build
-    runs, then fit by the shared `_pq_lloyd` loop — so a model trained
-    here and a store encoded under it are consistent by construction.
-    ``opq=True`` upgrades the residual stage to sim11's tier: the
-    rotation + codebook come from `train_opq_rotation` on the SAME
-    residual sample (quantization error <= the plain codebook's by
-    construction), persisted in the artifact's ``rot`` field.
-    ``coarse_sample_n`` bounds the MLlib KMeans coarse fit to the
-    first-N sample (None = the historical full-corpus fit — every
-    pinned demo model; at corpus scale the sampled fit is the
-    `rebuild_ann` retrain-cadence lever, measured in SCALING.md)."""
-    import numpy as np
-
-    from .similarity import assign_nearest_block, train_ivf_codebook
-
-    cent = train_ivf_codebook(emb, k=k, sample_n=coarse_sample_n)
-    cents3 = sorted(
-        (int(r["centroid_id"]), [float(x) for x in r["cv"]], float(r["cn"]))
-        for r in cent.select("centroid_id", "cv", "cn").collect()
-    )
-    rows = (
-        emb.select("vec_id", "v", "nrm")
-        .orderBy("vec_id")
-        .limit(sample_n)
-        .collect()
-    )
-    X = np.array([list(r["v"]) for r in rows], dtype=np.float64)
-    nrm = np.array([r["nrm"] for r in rows], dtype=np.float64)
-    cmat = np.array([c[1] for c in cents3], dtype=np.float64).T
-    cns = np.array([c[2] for c in cents3], dtype=np.float64)
-    _, best_id = assign_nearest_block(X, nrm, cmat, cns)
-    R = X - cmat.T[best_id]
-    if opq:
-        rot, cb, _err_opq, _err_id = train_opq_rotation(R, m, ks)
-    else:
-        rot, cb = None, _pq_lloyd(R, m, ks, iters=8)
-    cents = [(cid, cv) for cid, cv, _ in cents3]
-    return {
-        "cents": cents,
-        "cents3": cents3,
-        "cb": cb,
-        "frac": float(frac),
-        "cand": int(cand),
-        "dim": X.shape[1],
-        "m": m,
-        "ks": ks,
-        "rot": rot,
-        "sha256": ann_model_sha256(cents, cb, frac, cand, rot),
-        "encoding_sha256": ann_encoding_sha256(cents, cb, rot),
-    }
-
-
-ANN_CURRENT = "CURRENT"  # the deployment pointer inside a base dir
-# conditional-put version lifecycle markers (r12b): on a CAS scheme
-# there is no rename to be the publish arbiter, so a version prefix
-# is CLAIMED with put_if_absent (exclusivity) and COMMITTED with an
-# explicit marker (completeness); the underscore keeps parquet
-# readers from tripping on them, same convention as the store meta
-ANN_VERSION_CLAIM = "_ann_version_claim.json"
-ANN_VERSION_COMMIT = "_ann_version_committed.json"
-
-
-def rebuild_ann(
-    emb: DataFrame,
-    base_dir: str,
-    k: int = 64,
-    m: int = 8,
-    ks: int = 16,
-    frac: float = 0.1,
-    cand: int = 100,
-    sample_n: int = 4096,
-    opq: bool = False,
-    coarse_sample_n: int | None = None,
-) -> dict:
-    """Atomic model refresh (VERDICT r9 #4): retrain -> fused
-    re-encode into a STAGING version dir -> publish the (model,
-    store) PAIR with two atomic renames — the `pipeline.py` WAP
-    convention applied at the pair level, closing the by-hand
-    ann-train/ann-build sequence's crash window where a store and a
-    manifest point at different shas.
-
-    Layout under ``base_dir``::
-
-        versions/v<N>/model.json   the sha-stamped artifact
-        versions/v<N>/store/       centroid_id-partitioned codes
-        CURRENT                    JSON pointer {version, model,
-                                   store, model_sha256}
-
-    Crash analysis (tested by injection): a crash while training or
-    encoding leaves only a ``versions/.staging-v<N>-<token>`` dir —
-    CURRENT still names the previous complete pair; stale staging
-    dirs are inert residue an operator may delete whenever no rebuild
-    is running. A crash between the version rename and the CURRENT
-    update leaves a complete-but-unreferenced v<N> — CURRENT still
-    consistent; the next rebuild takes N+1. The CURRENT write itself
-    is tmp+rename. CONCURRENT rebuilds (review r10): each attempt
-    stages under a unique token (no attempt can delete another's live
-    staging), and the version-dir rename is the arbiter — the loser's
-    rename fails against the existing v<N> and surfaces as a clear
-    error instead of publishing a half-built pair; rerunning takes
-    N+1. Serving resolves through `resolve_ann_current` and pins
-    ``expected_sha256`` from the pointer, so even a hand-mangled
-    mid-state is refused, never served. Old versions are kept for
-    rollback (point CURRENT back) — pruning them is an operator
-    decision, not this job's.
-
-    Returns the resolved pointer (same shape `resolve_ann_current`
-    yields). Cost at scale = one bounded retrain + ONE fused encode
-    scan of the corpus — the unavoidable price of new codes; nothing
-    else moves.
-
-    Object-store base dirs (r12b): on a registered conditional-put
-    scheme there is no rename, so the WAP pair-publish is replaced by
-    the pointer-commit protocol pq's metadata-plane docs named as the
-    remaining rung — ``put_if_absent`` a per-version CLAIM marker
-    (the concurrency arbiter the rename used to be; losers increment
-    N, exactly the rerun-takes-N+1 shape), build the pair IN PLACE
-    under the claimed ``versions/v<N>/`` prefix (the data plane rides
-    ``arbiter.data_path``), write a COMMIT marker, then CAS the
-    CURRENT pointer with a monotone guard — the pointer never moves
-    backward, so two concurrent rebuilds finishing out of order leave
-    the lower version complete-but-unreferenced (the same crash shape
-    POSIX documents) instead of briefly un-publishing the higher one.
-    A crash before the commit marker leaves a claimed prefix that is
-    GC residue (`prune_ann_versions(prune_staging=True)`); a crash
-    between commit and flip leaves a complete-but-unreferenced
-    version; the pointer is always consistent."""
-    import json
-    import os
-    import re
-    import uuid
-
-    from .metaplane import join as mjoin
-    from .metaplane import put_json, resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(base_dir, "rebuild_ann")
-    versions = mjoin(base_dir, "versions")
-    # acquire a build target: POSIX stages under a unique token dir
-    # (the later rename is the commit), CAS claims the final prefix
-    # with put_if_absent (the rename-arbiter's rerun-takes-N+1,
-    # renameless). ONE train/save/build block serves both — the
-    # protocols differ only in where they build and how they publish
-    # (review r12: a forked build block is how a new kwarg or
-    # refusal gets applied to one protocol and missed in the other)
-    existing = [
-        int(mm.group(1))
-        for e in arb.list_prefix(versions)
-        if (mm := re.fullmatch(r"v(\d+)", e))
-    ]
-    n = max(existing, default=0) + 1
-    if arb.native_rename:
-        os.makedirs(versions, exist_ok=True)
-        vdir = os.path.join(
-            versions, f".staging-v{n}-{uuid.uuid4().hex[:8]}"
-        )
-        os.makedirs(vdir)
-    else:
-        claim = json.dumps({"claim": uuid.uuid4().hex}).encode()
-        while not arb.put_if_absent(
-            mjoin(versions, f"v{n}", ANN_VERSION_CLAIM), claim
-        ):
-            n += 1
-        vdir = mjoin(versions, f"v{n}")
-    model = train_ann_model(
-        emb, k=k, m=m, ks=ks, frac=frac, cand=cand,
-        sample_n=sample_n, opq=opq, coarse_sample_n=coarse_sample_n,
-    )
-    save_ann_model(
-        mjoin(vdir, "model.json"),
-        model["cents"],
-        model["cb"],
-        model["frac"],
-        model["cand"],
-        rot=model["rot"],
-    )
-    build_ann_store(emb, model, mjoin(vdir, "store"))
-    if arb.native_rename:
-        publish_ann_version(base_dir, vdir, n, model["sha256"])
-    else:
-        # the pair is complete: the commit marker is what prune (and
-        # an operator's eye) distinguishes from crashed-claim residue
-        put_json(
-            arb,
-            mjoin(vdir, ANN_VERSION_COMMIT),
-            {"version": n, "model_sha256": model["sha256"]},
-        )
-        _flip_ann_current_cas(arb, base_dir, n, model["sha256"])
-    return resolve_ann_current(base_dir)
-
-
-def _flip_ann_current_cas(
-    arb, base_dir: str, n: int, model_sha256: str
-) -> bool:
-    """CAS the CURRENT pointer to version ``n``, monotonically: a
-    pointer already at >= n is left alone (True = flipped). The retry
-    loop re-reads on every failed CAS, so a racing flip to n-1 vs n
-    converges on n and a racing flip to n+1 wins outright — the
-    pointer can only move forward, which is the property the POSIX
-    rename arbiter provides by serializing version numbers."""
-    import json
-
-    from .metaplane import join as mjoin
-
-    pointer = json.dumps(
-        {
-            "version": n,
-            "model": f"versions/v{n}/model.json",
-            "store": f"versions/v{n}/store",
-            "model_sha256": model_sha256,
-        }
-    ).encode()
-    cur = mjoin(base_dir, ANN_CURRENT)
-    while True:
-        raw, tok = arb.read_versioned(cur)
-        if raw is None:
-            if arb.put_if_absent(cur, pointer):
-                return True
-            continue  # lost the first-pointer race: re-read
-        if int(json.loads(raw.decode("utf-8"))["version"]) >= n:
-            return False  # newer (or same) already serving
-        if arb.put_if_match(cur, pointer, tok):
-            return True
-
-
-def publish_ann_version(
-    base_dir: str, staging: str, n: int, model_sha256: str
-) -> None:
-    """The atomic tail every version writer shares (`rebuild_ann`,
-    `annmaint.gc_ann_version`): rename the staged pair into
-    ``versions/v<N>`` (the concurrency arbiter — a loser's rename
-    fails against the winner's published dir instead of mixing two
-    half-built pairs), then flip the CURRENT pointer with a
-    tmp+replace. Crash between the two renames leaves a complete-
-    but-unreferenced v<N> and a still-consistent pointer."""
-    import json
-    import os
-
-    require_rename_capable(base_dir, "publish_ann_version")
-    final = os.path.join(base_dir, "versions", f"v{n}")
-    try:
-        os.rename(staging, final)  # atomic publish of the PAIR
-    except OSError as exc:
-        # the concurrency arbiter: another writer published v{n}
-        # between our version scan and this rename
-        raise RuntimeError(
-            f"another rebuild published v{n} first — rerun (the next "
-            f"attempt takes v{n + 1}); this attempt's staging is "
-            f"left at {staging}"
-        ) from exc
-    pointer = {
-        "version": n,
-        "model": os.path.join("versions", f"v{n}", "model.json"),
-        "store": os.path.join("versions", f"v{n}", "store"),
-        "model_sha256": model_sha256,
-    }
-    cur = os.path.join(base_dir, ANN_CURRENT)
-    tmp = f"{cur}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(pointer, f)
-    os.replace(tmp, cur)  # atomic pointer flip
-
-
-def resolve_ann_current(base_dir: str) -> dict:
-    """Resolve a `rebuild_ann` base dir's CURRENT pointer to absolute
-    paths: ``{"version", "model_path", "store_path", "model_sha256"}``
-    — feed model_path/store_path/model_sha256 straight into
-    `api.ann_topk(..., expected_sha256=...)`. Raises LookupError when
-    no version was ever published (a mid-first-rebuild crash leaves
-    no pointer — by design, there is nothing consistent to serve)."""
-    from .metaplane import join, read_json, resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(base_dir, "resolve_ann_current")
-    p = read_json(arb, join(base_dir, ANN_CURRENT))
-    if p is None:
-        raise LookupError(
-            f"no published ANN version under {base_dir!r} (run "
-            "rebuild_ann / ann-rebuild first)"
-        )
-    return {
-        "version": int(p["version"]),
-        "model_path": join(base_dir, p["model"]),
-        "store_path": join(base_dir, p["store"]),
-        "model_sha256": p["model_sha256"],
-    }
-
-
-def list_ann_versions(
-    base_dir: str, current_version: int
-) -> tuple[list[int], list[str]]:
-    """THE version census, arbiter-routed and shared by
-    `prune_ann_versions` and `annmaint.ann_maintenance_plan` so a
-    retention count at plan time can never drift from what prune
-    would actually remove. Returns ``(committed_versions_sorted,
-    residue_entry_names)``. On POSIX the publish rename WAS the
-    commit, so every ``v<N>`` dir counts; on a conditional-put
-    scheme only prefixes carrying the commit marker — or the CURRENT
-    pointer's own target — count, and the rest are
-    claimed-but-uncommitted crash residue."""
-    import re
-
-    from .metaplane import join as mjoin
-    from .metaplane import resolve_metadata_arbiter
-
-    arb = resolve_metadata_arbiter(base_dir, "list_ann_versions")
-    versions_dir = mjoin(base_dir, "versions")
-    versions: list[int] = []
-    residue: list[str] = []
-    for e in arb.list_prefix(versions_dir):
-        mm = re.fullmatch(r"v(\d+)", e)
-        if not mm:
-            continue
-        n = int(mm.group(1))
-        if (
-            arb.native_rename  # POSIX: the rename WAS the commit
-            or n == current_version  # the pointer's target is real
-            or arb.exists(mjoin(versions_dir, e, ANN_VERSION_COMMIT))
-        ):
-            versions.append(n)
-        else:
-            residue.append(e)
-    versions.sort()
-    return versions, residue
-
-
-def prune_ann_versions(
-    base_dir: str, keep: int = 2, prune_staging: bool = False
-) -> dict:
-    """Retention for a `rebuild_ann` deployment dir: every rebuild
-    leaves the previous (model, store) pair behind for pointer
-    rollback, and at scale each pair is a full code store (~3 TB per
-    100 TB corpus) — unbounded history is a disk leak an operator
-    hits within weeks. Keeps the CURRENT pointer's version plus the
-    ``keep`` most recent versions (CURRENT is kept even when it is
-    the oldest — a rolled-back pointer must never have its target
-    deleted under it) and removes the rest. ``prune_staging`` also
-    clears inert ``.staging-*`` crash residue — only pass it when no
-    rebuild is running (a live rebuild's staging dir is
-    indistinguishable from residue by name alone).
-
-    Arbiter-routed (r12b). On a conditional-put scheme a "version"
-    is a ``v<N>`` prefix carrying the COMMIT marker (the rename that
-    used to be the commit doesn't exist there), and crash residue is
-    a claimed-but-uncommitted prefix instead of a ``.staging-*``
-    dir — ``prune_staging`` clears those, under the same only-when-
-    no-rebuild-is-running caveat (a live rebuild's claim looks
-    identical). The keep-window math never counts residue.
-
-    Returns ``{"kept": [...], "removed": [...],
-    "staging_removed": n}``."""
-    from .metaplane import join as mjoin
-    from .metaplane import resolve_metadata_arbiter
-
-    if keep < 1:
-        raise ValueError("keep must be >= 1")
-    arb = resolve_metadata_arbiter(base_dir, "prune_ann_versions")
-    cur = resolve_ann_current(base_dir)  # refuses pointerless dirs
-    versions_dir = mjoin(base_dir, "versions")
-    versions, residue = list_ann_versions(base_dir, cur["version"])
-    keep_set = set(versions[-keep:]) | {cur["version"]}
-    removed = []
-    for n in versions:
-        if n in keep_set:
-            continue
-        arb.delete_prefix(mjoin(versions_dir, f"v{n}"))
-        removed.append(n)
-    staging_removed = 0
-    if prune_staging:
-        if arb.native_rename:
-            for e in arb.list_prefix(versions_dir):
-                if e.startswith(".staging-"):
-                    arb.delete_prefix(mjoin(versions_dir, e))
-                    staging_removed += 1
-        else:
-            for e in residue:
-                arb.delete_prefix(mjoin(versions_dir, e))
-                staging_removed += 1
-    return {
-        "kept": sorted(keep_set & set(versions)),
-        "removed": removed,
-        "staging_removed": staging_removed,
-    }
-
-
-def compact_ann_store(
-    spark,
-    drain_dir: str,
-    out_store: str,
-    model: dict,
-    mode: str = "error",
-) -> None:
-    """Rewrite a streaming-drain ANN sink (batch_id-partitioned
-    appends, `streaming.start_corpus_dedup_stream`'s ann_model_path
-    path) into the SERVING layout `build_ann_store` produces:
-    parquet partitioned by centroid_id with the model sha AND the
-    K-row cluster-size table stamped — so `ann_topk` over the
-    compacted store gets physical partition pruning and stamp-read
-    probe budgeting instead of a data-column filter plus a per-call
-    size aggregate. The append-maintenance loop closes here: drain
-    appends under the frozen model between compactions; a compaction
-    is ONE shuffle-by-centroid_id rewrite of pure codes (12-16
-    bytes/row — at 100 TB of raw vectors this moves ~3 TB, a
-    maintenance job, not a rebuild, and the MODEL stays frozen
-    throughout).
-
-    Refuses a drain dir stamped under a different model (the
-    `read_ann_store` check — compacting mixed-codebook codes would
-    launder the corruption into a 'clean' store).
-
-    Tombstones (`delete_from_ann_store`) are dropped PHYSICALLY here:
-    retired rows never reach ``out_store`` and the tombstone file is
-    not carried over (the compacted store starts with a clean slate),
-    so the serving-time NOT-IN filter shrinks back to empty and the
-    stamped cluster sizes are exact net of deletions."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    require_rename_capable(out_store, "compact_ann_store")
-    stamp, _sizes = read_ann_store_stamp(drain_dir)
-    if stamp is not None:
-        _refuse_stamp_mismatch(drain_dir, stamp, model)
-    batch_layout = os.path.isdir(drain_dir) and any(
-        e.startswith("batch_id=") for e in os.listdir(drain_dir)
-    )
-    if batch_layout:
-        # read ONLY the contiguous committed run (review r10 rounds
-        # 3-4): the root read pulled rows from an in-flight/
-        # crash-truncated batch AND stamped its id into the
-        # watermark — the stream's replay of that batch would then be
-        # skipped by every later merge, silently dropping the rows
-        # the partial read missed; and a committed batch ABOVE an
-        # uncommitted gap would bury the gap the same way. The
-        # watermark may only ever name batches consumed WHOLE, with
-        # nothing consumable missing below it.
-        consumable = _consumable_drain_batches(drain_dir, -1)
-        data_paths = [
-            os.path.join(drain_dir, f"batch_id={b}")
-            for b in consumable
-            if _drain_batch_has_data(drain_dir, b)
-        ]
-        if not data_paths:
-            raise ValueError(
-                f"{drain_dir!r} has no committed batch with data — "
-                "nothing to compact yet"
-            )
-        src = spark.read.parquet(*data_paths)
-        mb = max(consumable)
-    else:
-        # store->store compaction (the tombstone-GC shape): the
-        # source is a SERVING store, and its stamp's merge watermark
-        # must ride into the output — a GC that reset merged_through
-        # would let the next `merge_ann_appends` re-add every drain
-        # batch the store already holds, duplicating rows silently
-        src, _ = read_ann_store(spark, drain_dir, model)
-        mb = (
-            None
-            if stamp is None or stamp.get("merged_through") is None
-            else int(stamp["merged_through"])
-        )
-        # re-check the merge journal AFTER read_ann_store froze the
-        # parquet file listing, BEFORE the watermark compare (ADVICE
-        # r11 — the same journal-then-stamp order retune_ann_version
-        # documents as load-bearing at pq's retune walk): a merge can
-        # write its phase-1 journal and run its moves between
-        # read_ann_store's own journal check and the listing, then
-        # commit meta only after the stamp re-read below — journal
-        # check (stale) and watermark check (early) would BOTH pass
-        # while the listing contains merged rows under the pre-merge
-        # watermark. A mid-move merge still HOLDS its journal here
-        # (unlink comes only after the meta replace), so: phase-1
-        # journal present -> refuse; journal absent or phase-0 ->
-        # any move-running merge must already have replaced meta,
-        # which the watermark re-read below catches. Phase-0 stays
-        # allowed for the read_ann_store reason: its moves have not
-        # run, so the frozen listing cannot contain them.
-        if _merge_journal_mid_move(drain_dir, "compact_ann_store"):
-            raise ValueError(
-                f"{drain_dir!r} grew a phase-1 merge journal while "
-                "compacting — a concurrent merge is moving files; "
-                "retry the compaction to take a consistent snapshot"
-            )
-        # then re-read the stamp (ADVICE r10): a concurrent
-        # merge_ann_appends that fully commits (moves done, meta
-        # replaced, journal unlinked) between the entry-time stamp
-        # read and the listing leaves the listing CONTAINING the
-        # merged rows while `mb` still carries the pre-merge
-        # watermark — the next merge against the compacted output
-        # would re-fold those batches and silently duplicate vec_ids.
-        # Commit order (moves -> meta replace -> journal unlink)
-        # makes journal-absence + unmoved-watermark decisive: rows
-        # can only have entered the listing through moves, moves run
-        # only under a phase-1 journal, and every commit replaces
-        # meta before the journal disappears. A commit landing AFTER
-        # these re-reads is safe for the same frozen-listing reason.
-        stamp2, _ = read_ann_store_stamp(drain_dir)
-        mb2 = (
-            None
-            if stamp2 is None or stamp2.get("merged_through") is None
-            else int(stamp2["merged_through"])
-        )
-        if mb2 != mb:
-            raise ValueError(
-                f"{drain_dir!r}'s merge watermark moved "
-                f"({mb} -> {mb2}) while compacting — a concurrent "
-                "merge committed between the stamp read and the file "
-                "listing; retry the compaction to take a consistent "
-                "snapshot"
-            )
-    codes = src.select("vec_id", "centroid_id", "codes")
-    tombs = read_ann_tombstones(drain_dir)
-    if tombs:
-        codes = codes.filter(~F.col("vec_id").isin(tombs))
-        if codes.first() is None:
-            # an all-tombstoned store would compact to a parquet dir
-            # with no data files — unreadable (schema inference
-            # fails), i.e. a store that LOOKS built but serves
-            # nothing. Refuse with the real remedy named.
-            raise ValueError(
-                f"every row of {drain_dir!r} is tombstoned — nothing "
-                "to compact; start a fresh store (rebuild_ann) "
-                "instead"
-            )
-    codes.repartition("centroid_id").write.mode(mode).partitionBy(
-        "centroid_id"
-    ).parquet(out_store)
-    sizes = {
-        int(r["centroid_id"]): int(r["n"])
-        for r in spark.read.parquet(out_store)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    # stamp the merge watermark with the highest COMMITTED drain batch
-    # this compaction consumed, so compact -> merge composes: a later
-    # `merge_ann_appends` of the SAME drain starts past these batches
-    # instead of re-adding every row it already holds
-    write_ann_store_meta(
-        out_store, model["sha256"], sizes,
-        encoding_sha256=model["encoding_sha256"],
-        merged_through=mb,
-    )
-    # applied history = what THIS compaction dropped physically,
-    # unioned with everything the source already dropped in earlier
-    # cycles (store->store GC chains): losing the prior set would let
-    # merges re-propagate the drain's persistent takedown history as
-    # row-less serve-time tombstones, regrowing the NOT-IN every GC
-    # cycle (review r10 round 4's regrowth fix, extended to chains)
-    applied = set(tombs) | set(read_ann_applied_tombstones(drain_dir))
-    if applied:
-        write_ann_applied_tombstones(out_store, sorted(applied))
-
-
-ANN_MERGE_JOURNAL = "_ann_merge_pending.json"  # underscore: hidden
-ANN_MERGE_STAGE = "_merge_stage"
-
-
-def pairing_refusal(
-    store_path: str,
-    stamp: dict | None,
-    drain_dir: str,
-    dstamp: dict | None,
-) -> str | None:
-    """Why the (store, drain) PAIRING would refuse a merge/retention
-    action — or None. The drain-side half of `merge_refusal`, split
-    out because the planner also gates prune-drain on it."""
-    if dstamp is None:
-        return (
-            f"drain {drain_dir!r} carries no model stamp — not a "
-            "drain ANN sink"
-        )
-    if stamp is None:
-        return None  # store-side problems reported by merge_refusal
-    s_enc = stamp.get("encoding_sha256") or stamp.get("model_sha256")
-    d_enc = dstamp.get("encoding_sha256") or dstamp.get("model_sha256")
-    if s_enc != d_enc:
-        # name BOTH sides (ADVICE r11: store_path must participate,
-        # not just decorate the signature) — the operator fixing a
-        # mispairing needs the exact two dirs in hand
-        return (
-            f"drain {drain_dir!r} is stamped under a DIFFERENT "
-            f"encoding than store {store_path!r} — fix the pairing "
-            "first (merge/retention refuse it)"
-        )
-    return None
-
-
-def merge_refusal(
-    store_path: str,
-    stamp: dict | None,
-    sizes: dict | None,
-    drain_dir: str | None = None,
-    dstamp: dict | None = None,
-) -> str | None:
-    """Why `merge_ann_appends` would refuse this (store, drain) input
-    before touching data — or None when it would proceed. ONE
-    predicate shared by the executor (which raises it) and
-    `annmaint.ann_maintenance_plan` (which reports it as a
-    non-executable action): r10 and r11 each shipped a fix for these
-    two drifting apart — a plan calling executable an action the
-    merge refuses mid-apply — so the check lives once (review
-    r11). The model-vs-stamp sha comparison stays in
-    `_refuse_stamp_mismatch` (the plan has no model in hand;
-    store-vs-drain encoding equality covers it transitively)."""
-    if stamp is None:
-        return (
-            f"store {store_path!r} carries no model stamp — not an "
-            "ANN store dir"
-        )
-    if sizes is None:
-        return (
-            f"store {store_path!r} has no cluster-size stamp — not "
-            "a serving-layout store; build_ann_store or "
-            "compact_ann_store it first"
-        )
-    if drain_dir is not None:
-        return pairing_refusal(store_path, stamp, drain_dir, dstamp)
-    return None
-
-
-def merge_ann_appends(
-    spark,
-    store_path: str,
-    drain_dir: str,
-    model: dict,
-    recover: bool = False,
-) -> dict:
-    """Fold NEW drain appends into an existing serving-layout store
-    at a cost proportional to the DELTA, not the corpus: where
-    `compact_ann_store` rewrites every batch the drain holds (one
-    full codes shuffle each time, growing with drain history), this
-    reads only the batches past the store's ``merged_through``
-    watermark — a physically pruned read of the batch_id-partitioned
-    sink — shuffles just those codes by centroid_id, and publishes
-    the files into the store's existing partition dirs. At 100 TB
-    with a 0.1 %/day append rate that is ~3 GB moved per day instead
-    of ~3 TB per compaction.
-
-    Crash safety is a two-phase publish journaled in the store dir
-    (the `rebuild_ann` WAP stance at file level): the delta stages
-    under a hidden dir, a journal lists every (src, dst) move plus
-    the delta sizes, the moves run, and ONE atomic meta replace —
-    sizes += delta, ``merged_through`` = new watermark — is the
-    commit point; the journal is removed after it. Any crash leaves
-    a state recovery classifies exactly: meta watermark >= journal
-    target means committed (cleanup only), anything else rolls the
-    listed destination files back and re-stages from the drain —
-    the drain remains the source of truth until commit. Serving
-    REFUSES a store with a pending journal (`read_ann_store`), so a
-    mid-merge state is never served; a second merge against the
-    same store refuses too unless ``recover=True`` (the journal is
-    the single-writer arbiter — auto-recovery would roll back a
-    LIVE merge's moves).
-
-    Only batches with a ``_SUCCESS`` marker are merged (an in-flight
-    streaming batch is half-written by definition); tombstoned ids
-    (store's and drain's sets) are dropped from the delta, and the
-    store's tombstone file is kept as-is — it still masks base rows
-    until the next full compaction. vec_ids must be unique across
-    base + delta (the drain's ingest dedup contract). The store must
-    carry a cluster-size stamp (serving layout — `build_ann_store`,
-    `compact_ann_store`, or a prior merge); the base store must not
-    already hold the drain's rows through any path the watermark
-    does not know about (build it from the pre-drain corpus, or let
-    `compact_ann_store` stamp the watermark for you).
-
-    Returns ``{"merged_batches", "rows", "merged_through",
-    "recovered"}``."""
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    require_rename_capable(store_path, "merge_ann_appends")
-    require_rename_capable(drain_dir, "merge_ann_appends")
-    journal_path = os.path.join(store_path, ANN_MERGE_JOURNAL)
-    stage_dir = os.path.join(store_path, ANN_MERGE_STAGE)
-    recovered = None
-    if os.path.exists(journal_path):
-        if not recover:
-            raise ValueError(
-                f"store {store_path!r} has a pending merge journal — "
-                "another merge is running or a crashed one needs "
-                "recovery; rerun with recover=True after checking "
-                "none is running"
-            )
-        recovered = _recover_pending_merge(store_path)
-
-    stamp, sizes = read_ann_store_stamp(store_path)
-    dstamp, _ = read_ann_store_stamp(drain_dir)
-    reason = merge_refusal(store_path, stamp, sizes, drain_dir, dstamp)
-    if reason is not None:
-        raise ValueError(reason)
-    # model-vs-stamp comparisons AFTER the shared pairing predicate:
-    # both stamps are known present here, and the sha messages name
-    # the artifact the operator actually loaded
-    _refuse_stamp_mismatch(store_path, stamp, model)
-    _refuse_stamp_mismatch(drain_dir, dstamp, model)
-
-    # acquire the journal BEFORE reading the watermark (review r10
-    # round 3): with read-then-acquire, two overlapping merges could
-    # both read the same stale watermark — the loser would re-publish
-    # the winner's delta under fresh file names, silently duplicating
-    # every row. O_EXCL creation is the single-writer arbiter (the
-    # tombstone-lock stance); the phase-0 content below parses as
-    # "no moves ran", so a crash anywhere before the full journal
-    # rewrite recovers as a clean rollback.
-    try:
-        fd = os.open(
-            journal_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-        )
-    except FileExistsError:
-        # the losing merge must get the DOCUMENTED refusal, not a
-        # naked errno: the two-crons-racing contract (annmaint module
-        # docstring, pinned by the concurrent-rounds soak) classifies
-        # merge x merge losers by this message — a raw
-        # FileExistsError here surfaced as an unclassified crash
-        # whenever both rounds passed planning before either acquired
-        # (caught live by the soak under host load, r12)
-        raise ValueError(
-            f"store {store_path!r} has a pending merge journal "
-            f"({ANN_MERGE_JOURNAL}) — another merge is running (or "
-            "crashed mid-publish); wait for it, or rerun with "
-            "recover=True after checking none is running"
-        ) from None
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump({"from": None, "to": None, "moves": []}, f)
-    except BaseException:
-        # a failed stub write (ENOSPC and kin) must not leave a
-        # journal that forces recover=True for a merge that never
-        # started (review r10 round 4)
-        os.unlink(journal_path)
-        raise
-    moves_published = False
-    try:
-        # authoritative reads UNDER the journal: any earlier merge
-        # either committed its meta before unlinking its journal (we
-        # see its watermark) or left a journal (our O_EXCL failed)
-        stamp, sizes = read_ann_store_stamp(store_path)
-        watermark = int(stamp.get("merged_through", -1))
-        # drain tombstones propagate to the STORE's set even when no
-        # new batch merges (review r10 round 3): a takedown filed
-        # against the drain may target rows a PREVIOUS merge already
-        # published — compact honors it (it rebuilds from the drain),
-        # so merge must too, or the two paths diverge on takedowns.
-        # Recorded before any move: extra tombstones for never-merged
-        # ids are harmless (a NOT-IN of absent ids), lost ones are
-        # not. Ids the store's COMPACTION already dropped physically
-        # (the _ann_tombs_applied sidecar) are skipped (review r10
-        # round 4): re-propagating the drain's full takedown history
-        # onto every freshly-compacted store would regrow the NOT-IN
-        # with ids that match no row, unboundedly across compactions
-        drain_tombs = set(read_ann_tombstones(drain_dir)) - set(
-            read_ann_applied_tombstones(store_path)
-        )
-        tombstoned = 0
-        if drain_tombs:
-            tombstoned = delete_from_ann_store(
-                store_path, sorted(drain_tombs)
-            )["added"]
-        delta_batches = _consumable_drain_batches(drain_dir, watermark)
-        if not delta_batches:
-            os.unlink(journal_path)
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            return {
-                "merged_batches": [],
-                "rows": 0,
-                "merged_through": watermark,
-                "tombstoned": tombstoned,
-                "recovered": recovered,
-            }
-        to = max(delta_batches)
-        # explicit batch-dir paths, never the drain root: the root
-        # listing would pull footers from an in-flight batch's
-        # half-written files. Data-less batches (zero-survivor
-        # streaming batches write only _SUCCESS) are CONSUMED by the
-        # watermark but excluded from the read — schema inference
-        # over them would fail (review r10 round 3)
-        data_paths = [
-            os.path.join(drain_dir, f"batch_id={b}")
-            for b in delta_batches
-            if _drain_batch_has_data(drain_dir, b)
-        ]
-        shutil.rmtree(stage_dir, ignore_errors=True)  # stale residue
-        if data_paths:
-            delta = spark.read.parquet(*data_paths).select(
-                "vec_id", "centroid_id", "codes"
-            )
-            dead = sorted(set(read_ann_tombstones(store_path)))
-            if dead:
-                delta = delta.filter(~F.col("vec_id").isin(dead))
-            delta.repartition("centroid_id").write.partitionBy(
-                "centroid_id"
-            ).parquet(stage_dir)
-        has_parts = os.path.isdir(stage_dir) and any(
-            e.startswith("centroid_id=") for e in os.listdir(stage_dir)
-        )
-        # an all-tombstoned/all-empty delta stages zero partitions —
-        # still a valid merge (it CONSUMES the batches by advancing
-        # the watermark)
-        delta_sizes = (
-            {
-                int(r["centroid_id"]): int(r["n"])
-                for r in spark.read.parquet(stage_dir)
-                .groupBy("centroid_id")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            if has_parts
-            else {}
-        )
-        moves = []
-        for cid in sorted(delta_sizes):
-            src_dir = os.path.join(stage_dir, f"centroid_id={cid}")
-            dst_dir = os.path.join(store_path, f"centroid_id={cid}")
-            for i, fn in enumerate(sorted(os.listdir(src_dir))):
-                if fn.startswith(("_", ".")):
-                    continue
-                moves.append(
-                    [
-                        os.path.join(src_dir, fn),
-                        # `to` keys the name: a retry of the same
-                        # window only runs after rollback deleted
-                        # these, and two different windows can never
-                        # collide
-                        os.path.join(dst_dir, f"merge{to}-{i:05d}-{fn}"),
-                    ]
-                )
-        with open(journal_path, "w") as f:
-            # in-place rewrite, not replace: we own the O_EXCL file.
-            # A crash mid-rewrite leaves truncated JSON, which
-            # recovery reads as "no moves ran" — true, moves only
-            # start after this block completes
-            json.dump(
-                {
-                    "from": watermark,
-                    "to": to,
-                    "moves": moves,
-                    "delta_sizes": {
-                        str(k): v for k, v in delta_sizes.items()
-                    },
-                },
-                f,
-            )
-        moves_published = True
-        _merge_apply_moves(moves)
-        new_sizes = dict(sizes)
-        for cid, n in delta_sizes.items():
-            new_sizes[cid] = new_sizes.get(cid, 0) + n
-        write_ann_store_meta(  # THE commit point: one atomic replace
-            store_path,
-            stamp["model_sha256"],
-            sizes=new_sizes,
-            encoding_sha256=stamp.get("encoding_sha256"),
-            merged_through=to,
-        )
-    except BaseException:
-        if not moves_published:
-            # nothing moved yet: release the arbiter so the refusal
-            # (bad drain, Spark failure) does not demand recover=True
-            os.unlink(journal_path)
-            shutil.rmtree(stage_dir, ignore_errors=True)
-        # after moves start, the journal MUST stay for recovery —
-        # deleting it would orphan the files already published
-        raise
-    os.unlink(journal_path)
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    return {
-        "merged_batches": delta_batches,
-        "rows": sum(delta_sizes.values()),
-        "merged_through": to,
-        "tombstoned": tombstoned,
-        "recovered": recovered,
-    }
-
-
-def ann_stats_card(
-    stamp: dict,
-    sizes: dict | None,
-    model: dict | None = None,
-    version: int | None = None,
-    store_path: str | None = None,
-) -> dict:
-    """The ONE builder of the ANN observability card's shared fields
-    (review r10 round 3: the HTTP endpoint and the Spark-free CLI
-    assembled the same keys by hand and had already drifted) — shas,
-    version, store path, size summary, merge watermark, and (when a
-    loaded model is in hand) geometry + serving knobs, with the
-    model's shas overriding the stamp's as the more authoritative
-    source. Callers append their surface-specific fields (live
-    tombstone count, pending_merge, stale_sizes)."""
-    card = {
-        "store_path": store_path,
-        "version": version,
-        "model_sha256": stamp.get("model_sha256"),
-        "encoding_sha256": stamp.get("encoding_sha256"),
-        "clusters": None if sizes is None else len(sizes),
-        "rows": None if sizes is None else sum(sizes.values()),
-        "merged_through": stamp.get("merged_through"),
-    }
-    if model is not None:
-        card.update(
-            {
-                "model_sha256": model["sha256"],
-                "encoding_sha256": model["encoding_sha256"],
-                "dim": model["dim"],
-                "m": model["m"],
-                "ks": model["ks"],
-                "frac": model["frac"],
-                "cand": model["cand"],
-                "opq": model.get("rot") is not None,
-            }
-        )
-    return card
-
-
-def prune_ann_drain(
-    drain_dir: str, store_path, keep_batches: int = 2
-) -> dict:
-    """Retention for a streaming ANN drain: remove batch dirs the
-    serving store has ALREADY consumed (id <= the store's
-    ``merged_through`` watermark, minus a ``keep_batches`` safety
-    window for replay/debug). Without this the drain grows without
-    bound — every appended batch lives forever even after a merge
-    folded it and a compaction would re-read it all. The watermark
-    walk tolerates the holes this leaves (`_consumable_drain_batches`
-    skips ids below the lowest present dir), so retention and
-    merging compose in either order.
-
-    The watermark is read from ``store_path``'s meta — the single
-    committed source of truth: batches above it are NEVER touched
-    (a rolled-back merge re-reads them; deleting uncommitted history
-    would lose rows), and only COMMITTED dirs are ever removed — an
-    uncommitted dir at or below the watermark is a corrupt state
-    (the watermark only advances over committed batches) whose rows
-    were never folded anywhere, so it is skipped and reported
-    (``skipped_uncommitted``), never deleted. The drain's model stamp
-    must match every consumer's encoding (pairing a drain with the
-    wrong store would delete batches that store never consumed). A
-    drain feeding SEVERAL consumers (a serving store plus a
-    batch-analytics store) passes them all as a list: the effective
-    watermark is the MINIMUM over the consumers, so no batch
-    disappears before its slowest consumer folded it.
-
-    Spark-free (directory removals only). Returns
-    ``{"removed": [...], "kept": [...], "skipped_uncommitted": [...],
-    "watermark"}`` — ``watermark`` is the effective (minimum)
-    consumed watermark."""
-    import os
-    import shutil
-
-    stores = (
-        [store_path] if isinstance(store_path, str) else list(store_path)
-    )
-    if not stores:
-        raise ValueError("pass at least one consumer store")
-    dstamp, _ = read_ann_store_stamp(drain_dir)
-    if dstamp is None:
-        raise ValueError(
-            f"drain {drain_dir!r} carries no model stamp — not a "
-            "drain ANN sink"
-        )
-    d_enc = dstamp.get("encoding_sha256") or dstamp.get("model_sha256")
-    watermark = None
-    for sp in stores:
-        stamp, _ = read_ann_store_stamp(sp)
-        if stamp is None:
-            raise ValueError(
-                f"store {sp!r} carries no model stamp — cannot "
-                "establish a consumed watermark to prune against"
-            )
-        s_enc = stamp.get("encoding_sha256") or stamp.get("model_sha256")
-        if s_enc != d_enc:
-            raise ValueError(
-                f"drain {drain_dir!r} and store {sp!r} are "
-                "stamped under different encodings — refusing to "
-                "prune a drain this store never consumed"
-            )
-        w = (
-            -1
-            if stamp.get("merged_through") is None
-            else int(stamp["merged_through"])
-        )
-        watermark = w if watermark is None else min(watermark, w)
-    cutoff = watermark - max(0, int(keep_batches))
-    present = sorted(
-        int(e.split("=", 1)[1])
-        for e in os.listdir(drain_dir)
-        if e.startswith("batch_id=")
-        and os.path.isdir(os.path.join(drain_dir, e))
-    )
-    committed = set(_complete_drain_batches(drain_dir))
-    removed = []
-    skipped_uncommitted = []
-    for b in present:
-        if b > cutoff:
-            continue
-        if b not in committed:
-            # a consumed watermark only ever advances over COMMITTED
-            # batches, so an uncommitted dir at or below it is a
-            # corrupt state (hand-edited meta, crossed wires) — its
-            # rows were never folded anywhere, and retention must
-            # not be the thing that destroys them. Skip loudly.
-            skipped_uncommitted.append(b)
-            continue
-        shutil.rmtree(os.path.join(drain_dir, f"batch_id={b}"))
-        removed.append(b)
-    return {
-        "removed": removed,
-        "kept": [b for b in present if b not in set(removed)],
-        "skipped_uncommitted": skipped_uncommitted,
-        "watermark": watermark,
-    }
-
-
-def _complete_drain_batches(drain_dir: str) -> list:
-    """Sorted batch ids of COMMITTED drain appends — only dirs whose
-    Spark job finished (_SUCCESS marker). An in-flight or
-    crash-truncated batch is invisible to merge/compact watermarks,
-    so its replay is picked up whole later instead of being half-read
-    and then skipped forever."""
-    import os
-
-    return sorted(
-        int(e.split("=", 1)[1])
-        for e in os.listdir(drain_dir)
-        if e.startswith("batch_id=")
-        and os.path.isdir(os.path.join(drain_dir, e))
-        and os.path.exists(os.path.join(drain_dir, e, "_SUCCESS"))
-    )
-
-
-def _consumable_drain_batches(drain_dir: str, watermark: int) -> list:
-    """The CONTIGUOUS committed run above ``watermark`` — the only
-    batches a watermark may ever consume (review r10 round 4):
-    ``max(committed)`` alone would let a committed batch ABOVE an
-    uncommitted gap bury the gap batch below the watermark forever
-    (its _SUCCESS lands later / the stream replays it, but
-    ``b > watermark`` already excludes it — silent row loss). Batch
-    ids are sequential by the Structured Streaming contract, so the
-    walk starts at watermark+1 (or the lowest present dir on a fresh
-    store) and stops at the first id that is absent or uncommitted;
-    everything above the stop waits for the gap to commit.
-
-    One deliberate exception: ids missing BELOW the lowest present
-    dir are skipped, not waited for. Batches commit in order, so an
-    in-flight or crash-truncated batch is always at the TOP of the
-    drain — a hole under every present dir can only be retention
-    cleanup of already-consumed history, and refusing it would wedge
-    the merge forever on a drain that pruned its old batch dirs."""
-    import os
-
-    present = sorted(
-        int(e.split("=", 1)[1])
-        for e in os.listdir(drain_dir)
-        if e.startswith("batch_id=")
-        and os.path.isdir(os.path.join(drain_dir, e))
-    )
-    if not present:
-        return []
-    committed = set(_complete_drain_batches(drain_dir))
-    b = max(watermark + 1, min(present))
-    out = []
-    while b <= max(present):
-        if b not in committed:
-            break
-        out.append(b)
-        b += 1
-    return out
-
-
-def _drain_batch_has_data(drain_dir: str, batch_id: int) -> bool:
-    """True when the batch dir holds at least one data file (a
-    zero-survivor batch writes only _SUCCESS — readable by nothing,
-    consumable by the watermark)."""
-    import os
-
-    d = os.path.join(drain_dir, f"batch_id={batch_id}")
-    return any(not fn.startswith(("_", ".")) for fn in os.listdir(d))
-
-
-def _merge_apply_moves(moves: list) -> None:
-    """Publish staged delta files into the store's partition dirs —
-    module-level so crash-injection tests can fail it mid-loop."""
-    import os
-
-    for src, dst in moves:
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.replace(src, dst)
-
-
-def _recover_pending_merge(store_path: str) -> str:
-    """Classify and resolve a pending merge journal. ``committed``:
-    the meta's watermark already reached the journal's target — the
-    single atomic commit happened, only cleanup remained. Anything
-    else — a truncated journal or the phase-0 ``{"to": null}`` stub
-    (both mean the crash hit before any move ran), or a full journal
-    whose meta never committed — deletes whichever destination files
-    the journal lists; the drain still holds every delta row, so
-    rollback loses nothing, and the caller re-merges."""
-    import json
-    import os
-    import shutil
-
-    journal_path = os.path.join(store_path, ANN_MERGE_JOURNAL)
-    stage_dir = os.path.join(store_path, ANN_MERGE_STAGE)
-    try:
-        with open(journal_path) as f:
-            j = json.load(f)
-    except ValueError:
-        j = None
-    stamp, _ = read_ann_store_stamp(store_path)
-    committed = (
-        j is not None
-        and j.get("to") is not None
-        and stamp is not None
-        and int(stamp.get("merged_through", -1)) >= int(j["to"])
-    )
-    if j is not None and not committed:
-        for _src, dst in j.get("moves", []):
-            if os.path.exists(dst):
-                os.unlink(dst)
-    os.unlink(journal_path)
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    return "committed" if committed else "rolled_back"

@@ -442,10 +442,7 @@ def cosine_block(V, nv, W, nw):
     return sim
 
 
-def train_ivf_codebook(
-    emb, k: int, max_iter: int = 20, seed: int = 13,
-    sample_n: int | None = None,
-):
+def train_ivf_codebook(emb, k: int, max_iter: int = 20, seed: int = 13):
     """Train an IVF coarse codebook with MLlib KMeans over ``(vec_id,
     v, nrm)`` and return it in the shared ``(centroid_id, cv, cn)``
     contract `_ivf_centroids` established — so a TRAINED codebook
@@ -455,25 +452,14 @@ def train_ivf_codebook(
     Scale design: KMeans is the one genuinely iterative step in the
     similarity tier and MLlib already implements it Spark-shaped
     (per-iteration broadcast of K centers + map-side partial sums —
-    the same aggregation shape our assignment uses); a codebook needs
-    ~256*K training vectors, not the corpus, so ``sample_n`` bounds
-    the fit to the FIRST sample_n vectors in vec_id order (the
-    train_pq_codebook sampling convention — deterministic for a given
-    table; None keeps the historical full-corpus fit, which every
-    pinned demo model was trained with). At 1M vectors the full fit
-    dominates `rebuild_ann` (161 s wall, SCALING.md r10) — the
-    sampled fit is the retrain-cadence lever. The exported K-row
-    table is the only artifact. Determinism: fixed seed + fixed init
-    mode (+ the deterministic sample); the returned centroid_id is
-    the KMeans center index."""
+    the same aggregation shape our assignment uses). The exported
+    K-row table is the only artifact. Determinism: fixed seed + fixed
+    init mode; the returned centroid_id is the KMeans center index."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
     from pyspark.sql import functions as F
 
-    src = emb
-    if sample_n is not None:
-        src = emb.orderBy("vec_id").limit(int(sample_n))
-    vecs = src.select(array_to_vector(F.col("v")).alias("features"))
+    vecs = emb.select(array_to_vector(F.col("v")).alias("features"))
     model = KMeans(
         k=k, maxIter=max_iter, seed=seed, initMode="k-means||"
     ).fit(vecs)

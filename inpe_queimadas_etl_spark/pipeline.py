@@ -458,42 +458,6 @@ def write_validation_report(
     )
 
 
-def post_run_ann_maintenance(
-    spark: SparkSession, config: dict
-) -> dict:
-    """The ANN tier's rung in the orchestration (VERDICT r10 #6): the
-    reference's app.py decides which stage to run from on-disk state
-    after each daily run; the Spark engine's equivalent moving part
-    is the ANN store lifecycle (drain backlog, tombstones, versions,
-    crash journals). This hook runs ONE `annmaint.run_ann_maintenance`
-    round against the deployment named by ``config``:
-
-    - the PLAN is always computed — file metadata only, ~1 ms, so it
-      is free to attach to every run and surfaces backlog/pairing
-      problems in the run's own metrics;
-    - data-moving actions execute only under ``config["apply"]``
-      (and journal recovery only under ``config["recover"]`` — the
-      operator must assert no live merge, exactly as at the CLI);
-    - the ALREADY-RUNNING session is reused (`run_ann_maintenance`'s
-      spark_factory), so a plan-only or prune-only round stays free
-      and an applied merge shares the run's executors.
-
-    ``config`` passes through: one of ``base_dir``/``store_path``,
-    plus ``drain_dir``, ``model_path``, ``apply``, ``recover``,
-    ``tomb_gc_frac``, ``min_merge_batches``, ``keep_versions``,
-    ``drain_keep_batches``. Returns run_ann_maintenance's
-    ``{"plan", "applied", "blocked", "results"}``."""
-    from .operators.annmaint import run_ann_maintenance
-
-    cfg = dict(config)
-    return run_ann_maintenance(
-        lambda: spark,
-        apply=bool(cfg.pop("apply", False)),
-        recover=bool(cfg.pop("recover", False)),
-        **cfg,
-    )
-
-
 def read_resume_state(state_path: str | None) -> set[str]:
     """S8 resume marker read-back (reference backfill.py:151-162): the
     set of ISO days already completed in a previous run."""
@@ -513,7 +477,6 @@ def run_range(
     dims: dict,
     state_path: str | None = None,
     write_report: bool = True,
-    ann_maintenance: dict | None = None,
 ) -> list[dict]:
     """Multi-day backfill as ONE batch per call, resuming from the S8
     state file: days recorded as done by a previous run are skipped
@@ -524,14 +487,7 @@ def run_range(
     skipped = [str(d) for d, _ in day_files if str(d) in done]
     todo = [(d, p) for d, p in day_files if str(d) not in done]
     if not todo:
-        out = {"rows_in_batch": 0, "rows_new": 0, "days_skipped": skipped}
-        if ann_maintenance is not None:
-            # the drain accrues backlog whether or not new CSV days
-            # landed — an all-skipped (resumed) run still maintains
-            out["ann_maintenance"] = post_run_ann_maintenance(
-                spark, ann_maintenance
-            )
-        return [out]
+        return [{"rows_in_batch": 0, "rows_new": 0, "days_skipped": skipped}]
     batches = []
     for file_date, path in todo:
         raw = read_csv_all_string(spark, path)
@@ -558,17 +514,5 @@ def run_range(
                 },
                 default=str,
             )
-        )
-    if ann_maintenance is not None:
-        # opt-in post-run ANN lifecycle rung, AFTER the resume-state
-        # write: the data plane is committed by this point, so a
-        # maintenance failure stays loud (propagates, run exits
-        # nonzero) without un-marking the day — re-running would
-        # reprocess days the warehouse already holds just because a
-        # drain merge hiccuped. Plan rides every run's metrics (but
-        # not the state file's snapshot of them); actions move data
-        # only under the config's "apply".
-        result["ann_maintenance"] = post_run_ann_maintenance(
-            spark, ann_maintenance
         )
     return [result]

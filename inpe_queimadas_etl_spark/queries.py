@@ -12,6 +12,7 @@ guardrail caps k at 10 without a UF filter (main.py:76,1537-1539).
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -65,9 +66,13 @@ def parse_bbox(bbox: str) -> tuple[float, float, float, float]:
     if len(parts) != 4:
         raise ValueError("bbox must be minLon,minLat,maxLon,maxLat")
     try:
-        min_lon, min_lat, max_lon, max_lat = (float(p) for p in parts)
+        vals = [float(p) for p in parts]
     except ValueError as exc:
         raise ValueError("bbox values must be numeric") from exc
+    # float() parses "nan"/"inf", and NaN fails every comparison below
+    if not all(map(math.isfinite, vals)):
+        raise ValueError("bbox values must be numeric")
+    min_lon, min_lat, max_lon, max_lat = vals
     if min_lon >= max_lon or min_lat >= max_lat:
         raise ValueError("invalid bbox: require min < max")
     if min_lon < -180 or max_lon > 180 or min_lat < -90 or max_lat > 90:

@@ -98,18 +98,13 @@ def make_points_cache(timer=time.monotonic) -> TTLCache:
     return TTLCache(POINTS_MAXSIZE, POINTS_TTL_SECONDS, timer)
 
 
-def cache_key(endpoint: str, **params) -> str:
+def cache_key_params(endpoint: str, params: dict) -> str:
     """Deterministic URL-style key (the reference keys on
     str(request.url), main.py:103-104): None params drop out, the rest
-    serialize sorted so equivalent calls share an entry."""
-    return cache_key_params(endpoint, params)
-
-
-def cache_key_params(endpoint: str, params: dict) -> str:
-    """cache_key with the params as a dict — for callers forwarding
-    UNTRUSTED client query strings, where **-splatting could collide
-    with this function's own argument names (a request param literally
-    named 'endpoint')."""
+    serialize sorted so equivalent requests share an entry. The params
+    stay a dict, never **-splatted: they are UNTRUSTED client query
+    strings, and a request param literally named 'endpoint' must not
+    collide with this function's own argument names."""
     parts = [
         f"{k}={params[k]}" for k in sorted(params) if params[k] is not None
     ]
@@ -165,19 +160,3 @@ class ServingCache:
     def __init__(self, timer=time.monotonic):
         self.general = make_general_cache(timer)
         self.points = make_points_cache(timer)
-
-    def get_or_run(self, endpoint: str, run: Callable[[], Any], **params):
-        key = cache_key(endpoint, **params)
-        return cached(self.general, key, run)
-
-    def get_or_run_points(
-        self,
-        run: Callable[[], Any],
-        day,
-        bbox: tuple[float, float, float, float] | None = None,
-        limit: int | None = None,
-        **filters,
-    ):
-        base = cache_key("points", day=day, bbox=bbox, limit=limit, **filters)
-        key = points_cache_key(base, bbox)
-        return cached(self.points, key, run)

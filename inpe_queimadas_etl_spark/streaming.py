@@ -433,98 +433,6 @@ def _bind_drain_identity(
         )
 
 
-def _bind_ann_model_sha(
-    ann_dir: str, sha: str, encoding_sha: str | None = None
-) -> None:
-    """Stamp the drain's ANN code sink with the frozen model's sha256
-    on first use; REFUSE a later drain run under a different model
-    (VERDICT r8 #2). Codes are only meaningful under the codebook
-    that produced them — appending batches encoded under model B to a
-    store built under model A yields a store where every search
-    silently mixes two incompatible geometries. Retraining means a
-    NEW store (fresh ann sink dir), never an append.
-
-    The stamp is the SAME ``_ann_model.json`` meta every other store
-    writer uses (`operators.pq.write_ann_store_meta`, VERDICT r9 #5 —
-    one writer format), with cluster_sizes omitted because appends
-    would stale a baked table; serving computes sizes with one K-row
-    aggregate instead. The pre-r10 one-line marker's read support
-    ended in r12: binding over a marker-only dir refuses with the
-    re-stamp remedy (read_ann_store_stamp's migration message).
-
-    The mismatch key is the ENCODING sha when both sides carry one
-    (r10): codes depend only on centroids/codebook/rotation, so a
-    model retuned in frac/cand keeps appending to the same store;
-    legacy stamps compare by full model sha (strictly safer).
-
-    The bind itself is NON-destructive (review r10 round 2): a
-    matching stamp is left alone and a rewrite (first bind / legacy
-    marker upgrade) carries any existing cluster_sizes through — a
-    drain pointed at a built store used to lose the store's
-    exact-by-construction size stamp at stream START, before any
-    batch ran, downgrading every later serving call to a full-store
-    size aggregate even when the stream appended nothing. Sizes are
-    dropped where they actually go stale: at the first append
-    (:func:`_drop_store_sizes` in the batch path)."""
-    from .operators.pq import read_ann_store_stamp, write_ann_store_meta
-
-    prev, prev_sizes = read_ann_store_stamp(ann_dir)
-    if prev is not None:
-        prev_enc = prev.get("encoding_sha256")
-        if prev_enc is not None and encoding_sha is not None:
-            ok = prev_enc == encoding_sha
-            kind, have, mine = "encoding ", prev_enc, encoding_sha
-        else:
-            ok = prev.get("model_sha256") == sha
-            kind, have, mine = "", prev.get("model_sha256"), sha
-        if not ok:
-            raise RuntimeError(
-                f"ann_store {ann_dir!r} was built under model "
-                f"{kind}{str(have)[:12]}... but this drain loaded "
-                f"{kind}{str(mine)[:12]}... — appending "
-                "mixed-codebook codes would corrupt the store. Point "
-                "the drain at the original artifact, or start a "
-                "fresh ann sink dir for the new model."
-            )
-        if (
-            prev.get("model_sha256") == sha
-            and prev.get("encoding_sha256") == encoding_sha
-        ):
-            return  # stamp already current — nothing to write
-    write_ann_store_meta(
-        ann_dir,
-        sha,
-        sizes=prev_sizes,
-        encoding_sha256=encoding_sha,
-        merged_through=(
-            None if prev is None else prev.get("merged_through")
-        ),
-    )  # first bind / legacy upgrade — sizes + watermark carried through
-
-
-def _drop_store_sizes(ann_dir: str) -> None:
-    """Invalidate a store's baked cluster-size table the moment it
-    would go stale — right BEFORE the first drain append lands — by
-    rewriting the meta without ``cluster_sizes`` (shas kept).
-    Ordering makes the crash window harmless: drop-then-write means a
-    crash between the two leaves a size-less stamp on an unchanged
-    store (serving pays one K-row aggregate it didn't need — mere
-    pessimism), while write-then-drop would leave sizes that
-    UNDERCOUNT the appended rows, and `ann_topk_batch`'s exhaustive
-    mode sizes-derived k would silently stop being exhaustive."""
-    from .operators.pq import read_ann_store_stamp, write_ann_store_meta
-
-    stamp, sizes = read_ann_store_stamp(ann_dir)
-    if stamp is None or sizes is None:
-        return
-    write_ann_store_meta(
-        ann_dir,
-        stamp["model_sha256"],
-        encoding_sha256=stamp.get("encoding_sha256"),
-        merged_through=stamp.get("merged_through"),
-    )
-
-
 def _refuse_checkpoint_reset(sinks, batch_id: int) -> None:
     """A genuine crash-replay re-delivers the LATEST batch, so sink
     partitions can only carry ids <= the current one; ids beyond it
@@ -593,7 +501,6 @@ def start_corpus_dedup_stream(
     on_batch=None,
     schema: T.StructType | None = None,
     tokenizer_path: str | None = None,
-    ann_model_path: str | None = None,
 ):
     """Streaming incremental corpus dedup: each micro-batch of newly
     landed document files is flagged against the ever-growing accepted
@@ -645,22 +552,7 @@ def start_corpus_dedup_stream(
     curate run that trained the artifact — hash-verifiable via
     tokenizer_sha256.
 
-    ``ann_model_path`` (optional, VERDICT r8 #2 — the dedup-index
-    stance applied to ANN serving): a `save_ann_model` IVF-PQ
-    artifact. Each batch's accepted survivors are embedded (the emb1
-    hashed encoder at the model's dim), then assigned + residual-PQ
-    encoded UNDER THE FROZEN MODEL in one fused Arrow scan
-    (`pq_ivf_encode`) and appended to ``out_dir/ann_store`` as
-    ``(vec_id=doc_id, centroid_id, codes)`` — at 100 TB you APPEND
-    codes under frozen codebooks, never rebuild the store. The sink
-    dir is stamped with the model's sha256 on first use and a later
-    drain passing a DIFFERENT model is REFUSED (codes under mixed
-    codebooks are garbage); a drain started WITHOUT the model after
-    ann history exists warns loudly (the stale-tokens-sink
-    convention). The drain-built store is row-identical to a
-    one-shot `build_ann_store` over the same accepted docs under the
-    same artifact (pinned in tests/test_streaming_ann.py). Returns
-    the StreamingQuery.
+    Returns the StreamingQuery.
     """
     from .incremental import (
         NEAR_DUP_THRESHOLD,
@@ -675,29 +567,11 @@ def start_corpus_dedup_stream(
         from .operators.bpe import load_tokenizer
 
         tok = load_tokenizer(tokenizer_path)  # load ONCE, never retrain
-    ann = None
-    if ann_model_path is not None:
-        from .operators.pq import load_ann_model
-
-        ann = load_ann_model(ann_model_path)  # load ONCE, never retrain
-        if ann["dim"] % 4:
-            # the drain embeds via the emb1 hashed encoder, whose md5
-            # slicing needs dim % 4 == 0 — refuse at START, not on
-            # the first accepted batch deep inside a foreachBatch
-            raise ValueError(
-                f"ann model dim {ann['dim']} is not a multiple of 4; "
-                "the drain's hashed encoder cannot produce it"
-            )
     schema = _resolve_stream_schema(spark, docs_dir, schema)
     tokens_dir = f"{out_dir}/tokens"
-    ann_dir = f"{out_dir}/ann_store"
-
-    def _has_history(d: str) -> bool:
-        return os.path.isdir(d) and any(
-            e.startswith("batch_id=") for e in os.listdir(d)
-        )
-
-    if tok is None and _has_history(tokens_dir):
+    if tok is None and os.path.isdir(tokens_dir) and any(
+        e.startswith("batch_id=") for e in os.listdir(tokens_dir)
+    ):
         # the drain previously wrote tokens; running WITHOUT the
         # tokenizer leaves that sink stale while accepted keeps
         # growing — loud, because a trainer joining tokens on doc_id
@@ -708,24 +582,6 @@ def start_corpus_dedup_stream(
             "tokenizer_path to keep encoding accepted batches",
             tokens_dir,
         )
-    if ann is None and _has_history(ann_dir):
-        # same hazard, ANN flavor: a search over a stale store
-        # silently misses every newly accepted document
-        log.warning(
-            "corpus drain started without ann_model_path but %s has "
-            "code history — it will NOT be updated this run; pass "
-            "ann_model_path to keep appending accepted batches' codes",
-            ann_dir,
-        )
-    if ann is not None:
-        _bind_ann_model_sha(
-            ann_dir, ann["sha256"], ann["encoding_sha256"]
-        )
-    optional = ()
-    if tok is not None:
-        optional += (tokens_dir,)
-    if ann is not None:
-        optional += (ann_dir,)
     _bind_drain_identity(
         checkpoint_dir,
         (
@@ -734,7 +590,7 @@ def start_corpus_dedup_stream(
             f"{index_dir}/exact",
             f"{index_dir}/bands",
         ),
-        optional_sink_dirs=optional,
+        optional_sink_dirs=(tokens_dir,) if tok is not None else (),
     )
     src = spark.readStream.schema(schema).parquet(docs_dir)
     empty_docs = spark.createDataFrame([], schema)
@@ -805,31 +661,6 @@ def start_corpus_dedup_stream(
                 f"{out_dir}/tokens",
                 batch_id,
             )
-        if ann is not None:
-            from .operators.pq import pq_ivf_encode
-            from .operators.similarity import vec_norm
-            from .suite.llmdata import hashed_doc_vectors
-
-            # embed (emb1's hashed encoder at the model's dim) and
-            # encode under the FROZEN artifact — one Arrow scan each,
-            # appended with the same batch-partition idempotency as
-            # every other sink; vec_id IS doc_id, so serving joins
-            # back to accepted text directly
-            emb_b = (
-                hashed_doc_vectors(
-                    survivors.select("doc_id", "text"), dim=ann["dim"]
-                )
-                .withColumn("nrm", vec_norm("v"))
-                .select(F.col("doc_id").alias("vec_id"), "v", "nrm")
-            )
-            _drop_store_sizes(ann_dir)  # stale from this append on
-            _write_partition(
-                pq_ivf_encode(
-                    emb_b, ann["cents3"], ann["cb"], rot=ann.get("rot")
-                ),
-                ann_dir,
-                batch_id,
-            )
         if on_batch is not None:
             on_batch(
                 batch_id,
@@ -859,7 +690,6 @@ def start_embedding_dedup_stream(
     threshold: float | None = None,
     on_batch=None,
     schema: T.StructType | None = None,
-    ann_model_path: str | None = None,
 ):
     """Embedding twin of :func:`start_corpus_dedup_stream`: micro-
     batches of landed embedding snapshots (vec_id, embedding, ...)
@@ -874,15 +704,6 @@ def start_embedding_dedup_stream(
     sim 1.0). Same idempotency contract as the text drain: per-
     batch_id overwrite sinks, current-batch exclusion on reads, and
     checkpoint-reset refusal.
-
-    ``ann_model_path`` — the text drain's ANN-store maintenance
-    (VERDICT r8 #2), on the drain whose accepted rows already ARE
-    vectors: each batch's surviving embeddings are assigned +
-    residual-PQ encoded under the FROZEN `save_ann_model` artifact
-    (one fused Arrow scan) and appended to ``out_dir/ann_store``;
-    same sha stamp, drift refusal and stale-sink warning as the text
-    drain. Vectors whose dim differs from the model's kill the batch
-    loudly (numpy shape error) — land snapshots at the model's dim.
     """
     from .incremental import (
         EMB_NEAR_DUP_THRESHOLD,
@@ -891,30 +712,10 @@ def start_embedding_dedup_stream(
     )
 
     thr = EMB_NEAR_DUP_THRESHOLD if threshold is None else threshold
-    ann = None
-    if ann_model_path is not None:
-        from .operators.pq import load_ann_model
-
-        ann = load_ann_model(ann_model_path)  # load ONCE, never retrain
     schema = _resolve_stream_schema(spark, vecs_dir, schema)
-    ann_dir = f"{out_dir}/ann_store"
-    if ann is None and os.path.isdir(ann_dir) and any(
-        e.startswith("batch_id=") for e in os.listdir(ann_dir)
-    ):
-        log.warning(
-            "embedding drain started without ann_model_path but %s "
-            "has code history — it will NOT be updated this run; pass "
-            "ann_model_path to keep appending accepted batches' codes",
-            ann_dir,
-        )
-    if ann is not None:
-        _bind_ann_model_sha(
-            ann_dir, ann["sha256"], ann["encoding_sha256"]
-        )
     _bind_drain_identity(
         checkpoint_dir,
         (f"{out_dir}/flags", f"{out_dir}/accepted", f"{index_dir}/bands"),
-        optional_sink_dirs=(ann_dir,) if ann is not None else (),
     )
     src = spark.readStream.schema(schema).parquet(vecs_dir)
     empty_vecs = spark.createDataFrame([], schema)
@@ -998,22 +799,6 @@ def start_embedding_dedup_stream(
             f"{index_dir}/bands",
             batch_id,
         )
-        if ann is not None:
-            from .operators.pq import pq_ivf_encode
-            from .operators.similarity import vec_norm
-
-            emb_b = survivors.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("v"),
-            ).withColumn("nrm", vec_norm("v"))
-            _drop_store_sizes(ann_dir)  # stale from this append on
-            _write_partition(
-                pq_ivf_encode(
-                    emb_b, ann["cents3"], ann["cb"], rot=ann.get("rot")
-                ),
-                ann_dir,
-                batch_id,
-            )
         if on_batch is not None:
             on_batch(
                 batch_id,
@@ -1194,111 +979,6 @@ def start_quality_gate_stream(
                     "n_accepted": keep.count(),
                 },
             )
-
-    writer = (
-        src.writeStream.foreachBatch(run_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_ann_search_stream(
-    spark: SparkSession,
-    queries_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    store_path: str,
-    model_path: str,
-    k: int | None = 5,
-    rerank_with: DataFrame | None = None,
-    available_now: bool = True,
-    chunk_queries: int | None = None,
-    expected_sha256: str | None = None,
-    schema: T.StructType | None = None,
-    on_batch=None,
-    queries_are_text: bool = False,
-):
-    """Streaming face of `api.ann_topk_batch` — the third corner of
-    the serving triangle (HTTP for ad-hoc vectors, batch for 10^4+
-    query jobs, THIS for a continuous feed): micro-batches of landed
-    query snapshots ``(query_id, qv)`` parquet are searched against a
-    FROZEN (model, store) pair and each batch's top-k rows land at
-    ``out_dir/results/batch_id=N`` — the standard idempotent
-    per-batch overwrite sink, so a crash-replayed batch rewrites its
-    own partition and nothing else.
-
-    Artifacts load ONCE at stream start (`api._load_ann_state` — the
-    HTTP front's frozen stance): the model is sha-checked, the store
-    stamp verified, sizes and tombstones resolved, and every batch
-    reuses them. The store is served AS OF stream start — an
-    `merge_ann_appends`/tombstone landing mid-stream is invisible
-    until restart (a merge only adds files, so in-flight reads stay
-    consistent); this is the same snapshot semantics the HTTP
-    context documents. Duplicate query ids WITHIN a batch are
-    refused (kills the batch loudly — the `ann_topk_batch`
-    contract); the same id in different batches is fine: batches are
-    independent searches, each in its own result partition.
-
-    Scale shape per batch is exactly `ann_topk_batch`'s: probe
-    assignment is an Arrow scan over the batch, one bounded probe
-    broadcast (or ``chunk_queries``-bounded chunks), LUTs
-    executor-side, store partition-pruned to probed clusters, one
-    ranking tail. Returns the StreamingQuery.
-
-    ``queries_are_text=True`` switches the feed to ``(query_id,
-    text)`` snapshots: each batch embeds in-plan with the drain's
-    hashed encoder (`ann_topk_batch`'s ``queries_text`` path, pinned
-    equal to the vec form and priced free-or-better in SCALING.md
-    r11) — a continuous text feed searches a hashed-encoder store
-    with no pre-embedding job in front of it."""
-    from .api import _ann_topk_batch_loaded, _load_ann_state
-
-    st = _load_ann_state(
-        spark, model_path, store_path, expected_sha256=expected_sha256
-    )
-    schema = _resolve_stream_schema(spark, queries_dir, schema)
-    qcols = (
-        {"query_id", "text"} if queries_are_text else {"query_id", "qv"}
-    )
-    missing = qcols - set(schema.fieldNames())
-    if missing:
-        raise ValueError(
-            f"queries schema must carry {', '.join(sorted(qcols))} "
-            f"(missing: {sorted(missing)})"
-        )
-    res_dir = f"{out_dir}/results"
-    _bind_drain_identity(checkpoint_dir, (res_dir,))
-    src = spark.readStream.schema(schema).parquet(queries_dir)
-
-    def run_batch(batch: DataFrame, batch_id: int) -> None:
-        existing = _read_or_empty(
-            spark, res_dir, spark.createDataFrame([], "query_id long")
-        )
-        _refuse_checkpoint_reset(((res_dir, existing),), batch_id)
-        if queries_are_text:
-            res = _ann_topk_batch_loaded(
-                spark,
-                st,
-                k=k,
-                rerank_with=rerank_with,
-                chunk_queries=chunk_queries,
-                queries_text=batch.select("query_id", "text"),
-            )
-        else:
-            res = _ann_topk_batch_loaded(
-                spark,
-                st,
-                batch.select("query_id", "qv"),
-                k=k,
-                rerank_with=rerank_with,
-                chunk_queries=chunk_queries,
-            )
-        _write_partition(res, res_dir, batch_id)
-        if on_batch is not None:
-            on_batch(batch_id, {"n_queries": batch.count()})
 
     writer = (
         src.writeStream.foreachBatch(run_batch)

@@ -1723,10 +1723,7 @@ def _score_rank_top5(paired: DataFrame, k: int = 5) -> DataFrame:
     _cosine_top5 so IVF-style paths (sim6), which pair by a cluster
     equi-join instead of a crossJoin, share the EXACT same scoring
     expression, tie-break and k — the drift-proofing VERDICT r5 #3
-    asks for. ``k`` defaults to the suite's top-5 contract; the
-    parameterized serving front (`api.ann_topk`, VERDICT r8 #1) passes
-    the caller's k through the SAME tail so served results can never
-    drift from the oracle-pinned demo queries."""
+    asks for. ``k`` defaults to the suite's top-5 contract."""
     dot = F.aggregate(
         F.zip_with("qv", "v", lambda a, b: a * b),
         F.lit(0.0),
@@ -3769,7 +3766,6 @@ def semantic_dedup_removals(
     k: int = _IVF_K,
     tau: float = _DD12_TAU,
     block: int = 2048,
-    cents3: list | None = None,
 ) -> DataFrame:
     """SemDeDup removal list over ``(vec_id, v, nrm)``: ``(vec_id,
     centroid_id, n_dups, max_sim)`` — one row per PRUNED vector, with
@@ -3793,34 +3789,12 @@ def semantic_dedup_removals(
     ~constant as the corpus grows, so per-group memory (bounded to
     ``block**2`` sims regardless of cluster size) and per-group time
     hold; runaway clusters are re-sharded upstream, exactly as the
-    paper does.
-
-    ``cents3`` (driver-side ``[(centroid_id, cv, cn), ...]`` — the
-    ANN artifact's coarse-quantizer field) replaces the first-K
-    demo codebook with a FROZEN clustering: `api.semdedup_store`
-    passes a persisted model's centroids here so dedup partitions the
-    space exactly like the serving tier does, with no per-run
-    retrain."""
+    paper does."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    if cents3 is not None:
-        from ..operators.similarity import nearest_centroid
-
-        dim = len(cents3[0][1]) if cents3 else _EMB_DIM
-        a = emb.select(
-            "vec_id", "v", "nrm",
-            nearest_centroid("v", "nrm", sorted(cents3), dim).alias(
-                "best"
-            ),
-        ).select(
-            "vec_id", "v", "nrm",
-            F.col("best.centroid_id").alias("centroid_id"),
-            F.col("best.csim").alias("csim"),
-        )
-    else:
-        a = _ivf_assign(emb, k)
+    a = _ivf_assign(emb, k)
     out_schema = T.StructType(
         [
             a.schema["vec_id"],
@@ -4171,7 +4145,7 @@ TX8_SQL = _tx8_sql()
 
 
 def _tx8_map_to_vocab(
-    df: DataFrame, vocab_toks: list, *cols: str
+    df: DataFrame, vocab_toks: list[str], *cols: str
 ) -> DataFrame:
     """Replace each of ``cols`` with '<unk>' where the value is not in
     ``vocab_toks`` — a codegen'd InSet hash-set probe per column (r13;
@@ -4181,7 +4155,13 @@ def _tx8_map_to_vocab(
     1.75 s for the full tx8 against this expression (alternating A/B,
     checksum MATCH at sf0.001/0.01/0.1 — guide §3.1/§2.4: the best
     join is no join). V is vocab-gated (512), far past the In→InSet
-    conversion threshold (10), so each probe is O(1)."""
+    conversion threshold (10), so each probe is O(1). The V literals
+    are inlined into the plan once per mapped column, so plan size
+    (not only the probe) scales with the vocab gate. A name in
+    ``cols`` that is not a column of ``df`` raises ValueError."""
+    missing = sorted(set(cols) - set(df.columns))
+    if missing:
+        raise ValueError(f"_tx8_map_to_vocab: no such column(s) {missing}")
     return df.select(
         *[
             (
@@ -5011,12 +4991,8 @@ def hashed_doc_vectors(docs: DataFrame, dim: int = _EMB1_DIM) -> DataFrame:
 
 
 def _hashed_word_components(w: str, dim: int):
-    """THE word-component formula of the hashed encoder — one
-    definition shared by the Arrow corpus scan
-    (`hashed_doc_vectors`) and the driver-side serving replay
-    (`hashed_text_vector`), because their contract is BIT-identity:
-    a tweak applied to one copy would silently break text-in serving
-    for every existing store (review r10 round 4)."""
+    """THE word-component formula of the hashed encoder used by the
+    Arrow corpus scan (`hashed_doc_vectors`)."""
     import hashlib
 
     import numpy as np
@@ -5029,31 +5005,6 @@ def _hashed_word_components(w: str, dim: int):
             for i in range(4)
         )
     return np.array(comps, dtype=np.float64)
-
-
-def hashed_text_vector(text: str, dim: int = _EMB1_DIM) -> list:
-    """Driver-side single-text replay of :func:`hashed_doc_vectors` —
-    same md5 slicing, same dyadic components, same word sum — for the
-    serving path: a caller's raw TEXT query must be embedded by
-    exactly the encoder that embedded the corpus into the ANN store
-    (the drain's embed step), or the cosine geometry is meaningless.
-    Bit-identical to the Arrow scan for the same text (components are
-    dyadic rationals; sums are exact in every order — pinned in
-    tests); both paths take the formula from
-    `_hashed_word_components`, so they cannot drift."""
-    import numpy as np
-
-    if dim % 4 != 0:
-        raise ValueError(f"dim must be a multiple of 4 (md5 slicing): {dim}")
-    acc = np.zeros(dim, dtype=np.float64)
-    memo: dict = {}
-    for w in text.split(" "):
-        v = memo.get(w)
-        if v is None:
-            v = _hashed_word_components(w, dim)
-            memo[w] = v
-        acc += v
-    return [float(x) for x in acc]
 
 
 def emb1_hashed_encoder(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -542,183 +542,6 @@ def main() -> None:
             print(f"# 1M recall@5: {out['recall_1m']}", file=sys.stderr)
             store11.unpersist()
 
-            # r9: the FROZEN-ARTIFACT serving surface end to end —
-            # save_ann_model -> build_ann_store (fused encode +
-            # size-stamped partitioned store) -> api.ann_topk (model
-            # load, budgeted probes from stamped sizes, partition-
-            # pruned Arrow ADC, broadcast-probe exact rerank) — the
-            # productized path a real deployment calls per request
-            from inpe_queimadas_etl_spark.api import ann_topk
-            from inpe_queimadas_etl_spark.operators.pq import (
-                build_ann_store,
-                load_ann_model,
-                save_ann_model,
-            )
-
-            model_path = os.path.join(tmp, "ann_model.json")
-            save_ann_model(
-                model_path, sorted(cents9), rescb, NPROBE / K, CAND
-            )
-            ann_store = os.path.join(tmp, "ann_store")
-            t0 = time.perf_counter()
-            build_ann_store(emb, load_ann_model(model_path), ann_store)
-            out["sim9_1m"]["ann_store_build_sec"] = round(
-                time.perf_counter() - t0, 3
-            )
-            qvecs = [
-                (r["vec_id"], list(r["v"]))
-                for r in emb.filter(
-                    (F.col("vec_id") >= K) & (F.col("vec_id") < K + 8)
-                ).collect()
-            ]
-
-            def ann_serve():
-                ann_topk(
-                    spark, ann_store, model_path, qvecs, k=5,
-                    rerank_with=emb,
-                ).collect()
-
-            out["sim9_1m"]["ann_topk_sec"] = _t(ann_serve)
-
-            # r10 (VERDICT r9 #1): batch-scale search — Q=10k caller
-            # vectors through ann_topk_batch over the SAME frozen
-            # artifacts, exact-rerank tail included. The looped form
-            # at this Q would carry Q*nprobe m x ks LUTs in the scan
-            # closure (~GBs); the batch form ships ONE probe
-            # broadcast and computes LUTs executor-side, so the
-            # measured number IS the end-to-end batch-consumer cost
-            # (benchmark decontamination, shard-level semantic dedup).
-            from inpe_queimadas_etl_spark.api import ann_topk_batch
-
-            QN = 10_000
-            rngq = np.random.default_rng(17)
-            QM = rngq.normal(0, 1, size=(QN, EMB_DIM))
-            qdf_batch = spark.createDataFrame(
-                [
-                    (10_000_000 + i, [float(x) for x in QM[i]])
-                    for i in range(QN)
-                ],
-                "query_id long, qv array<double>",
-            ).localCheckpoint(eager=True)
-            t0 = time.perf_counter()
-            nrows = ann_topk_batch(
-                spark, ann_store, model_path, qdf_batch, k=5,
-                rerank_with=emb,
-            ).count()
-            out["sim9_1m"]["ann_topk_batch_10k_sec"] = round(
-                time.perf_counter() - t0, 3
-            )
-            out["sim9_1m"]["ann_topk_batch_10k_rows"] = int(nrows)
-            print(
-                f"# 1M ann_topk_batch Q={QN}: "
-                f"{out['sim9_1m']['ann_topk_batch_10k_sec']}s, "
-                f"{nrows} rows",
-                file=sys.stderr,
-            )
-
-            # r10 (VERDICT r9 #4): the atomic refresh job's full cost
-            # at 1M — retrain (MLlib KMeans coarse + sampled residual
-            # PQ) + fused re-encode + store write + pointer flip. The
-            # one number an operator needs to size the retrain cadence.
-            from inpe_queimadas_etl_spark.operators.pq import (
-                rebuild_ann,
-            )
-
-            t0 = time.perf_counter()
-            rebuild_ann(
-                emb, os.path.join(tmp, "ann_base"), k=K, m=8, ks=16,
-                frac=NPROBE / K, cand=CAND,
-            )
-            out["sim9_1m"]["ann_rebuild_sec"] = round(
-                time.perf_counter() - t0, 3
-            )
-            print(
-                f"# 1M ann_rebuild: "
-                f"{out['sim9_1m']['ann_rebuild_sec']}s",
-                file=sys.stderr,
-            )
-
-            # r10 round 2: incremental merge — fold a 2 % drain delta
-            # (20k new vectors, two streaming-shaped batch_id
-            # partitions) into the 1M serving store. The number to
-            # compare against is the full store build above
-            # (ann_store_build_sec): compaction re-pays that on every
-            # run and grows with drain history; the merge pays only
-            # the delta.
-            from inpe_queimadas_etl_spark.operators.pq import (
-                merge_ann_appends,
-                write_ann_store_meta,
-            )
-
-            DN = 20_000
-            rngm = np.random.default_rng(23)
-            DM = rngm.normal(0, 1, size=(DN, EMB_DIM))
-            drain_dir = os.path.join(tmp, "ann_drain")
-            half = DN // 2
-            loaded = load_ann_model(model_path)
-            for b in range(2):
-                sl = DM[b * half : (b + 1) * half]
-                ddf = spark.createDataFrame(
-                    [
-                        (
-                            1_000_000 + b * half + i,
-                            [float(x) for x in sl[i]],
-                        )
-                        for i in range(half)
-                    ],
-                    "vec_id long, v array<double>",
-                ).withColumn("nrm", vec_norm("v"))
-                pq_ivf_encode(
-                    ddf, loaded["cents3"], loaded["cb"]
-                ).write.mode("overwrite").parquet(
-                    os.path.join(drain_dir, f"batch_id={b}")
-                )
-            write_ann_store_meta(
-                drain_dir,
-                loaded["sha256"],
-                encoding_sha256=loaded["encoding_sha256"],
-            )
-            t0 = time.perf_counter()
-            mres = merge_ann_appends(spark, ann_store, drain_dir, loaded)
-            out["sim9_1m"]["ann_merge_20k_sec"] = round(
-                time.perf_counter() - t0, 3
-            )
-            out["sim9_1m"]["ann_merge_rows"] = int(mres["rows"])
-            # serving over the merged store: same path, same cost band
-            out["sim9_1m"]["ann_topk_after_merge_sec"] = _t(ann_serve)
-            print(
-                f"# 1M ann_merge (+{DN} rows): "
-                f"{out['sim9_1m']['ann_merge_20k_sec']}s vs "
-                f"{out['sim9_1m']['ann_store_build_sec']}s full build; "
-                f"serve after merge "
-                f"{out['sim9_1m']['ann_topk_after_merge_sec']}s",
-                file=sys.stderr,
-            )
-
-            # r10 round 2: scoped (filtered) search — the among= semi
-            # join's cost at a CORPUS-scale allowed set (50 % of 1M
-            # ids), batch shape, exact-rerank tail. The scope is a
-            # DataFrame, so AQE picks the join strategy; the number
-            # is the filter's whole price since probe budgeting and
-            # scan volume are unchanged.
-            among_half = emb.filter(
-                F.col("vec_id") % 2 == 0
-            ).select("vec_id").localCheckpoint(eager=True)
-            t0 = time.perf_counter()
-            n_sc = ann_topk_batch(
-                spark, ann_store, model_path, qdf_batch.limit(1000),
-                k=5, rerank_with=emb, among=among_half,
-            ).count()
-            out["sim9_1m"]["ann_scoped_50pct_1k_sec"] = round(
-                time.perf_counter() - t0, 3
-            )
-            out["sim9_1m"]["ann_scoped_rows"] = int(n_sc)
-            print(
-                f"# 1M scoped search (50% corpus scope, Q=1k): "
-                f"{out['sim9_1m']['ann_scoped_50pct_1k_sec']}s, "
-                f"{n_sc} rows",
-                file=sys.stderr,
-            )
             print(
                 f"# 1M sim9 K={K}/nprobe={NPROBE}: build "
                 f"{out['sim9_1m']['build_sec']}s fused (compositional "
@@ -726,10 +549,7 @@ def main() -> None:
                 f"{out['sim9_1m']['search_sec']}s pruned "
                 f"({out['sim9_1m']['n_probed_clusters']}/{K} clusters; "
                 f"unpruned {out['sim9_1m']['search_unpruned_sec']}s, "
-                f"jvm {out['sim9_1m']['search_jvm_sec']}s); ann_topk "
-                f"serve {out['sim9_1m']['ann_topk_sec']}s over the "
-                f"{out['sim9_1m']['ann_store_build_sec']}s artifact "
-                "store",
+                f"jvm {out['sim9_1m']['search_jvm_sec']}s)",
                 file=sys.stderr,
             )
 

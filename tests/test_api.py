@@ -187,8 +187,21 @@ def test_error_mapping(base_url):
         base_url, "/api/points?date=2024-05-02&bbox=1,2,3&limit=10"
     )
     assert status == 422
+    # float() parses nan/inf; NaN fails every bound check, so it must
+    # be refused up front rather than answer 200 with zero points
+    for bbox in ("nan,nan,nan,nan", "-60,nan,-50,-5", "-60,-10,inf,-5"):
+        status, body = _get(
+            base_url, f"/api/points?date=2024-05-02&bbox={bbox}&limit=10"
+        )
+        assert status == 422 and body["detail"] == "bbox values must be numeric"
     status, _ = _get(base_url, "/api/points?bbox=0,0,1,1")
     assert status == 422  # date required
+    # a valid key with a non-finite tolerance: 422, never a bare NaN body
+    status, _ = _get(base_url, "/api/geo/qa?entity=uc&key=U1")
+    assert status == 200
+    for path in (f"/api/geo?from={FROM}&to={TO}&", "/api/geo/qa?"):
+        status, _ = _get(base_url, f"{path}entity=uc&key=U1&tol_m=nan")
+        assert status == 422
     status, _ = _get(base_url, f"/api/top?group=nope&from={FROM}&to={TO}")
     assert status == 422
     status, _ = _get(base_url, "/api/bounds?entity=uc&key=NOPE")

@@ -1,0 +1,64 @@
+"""Layering guard for the fire-hotspot path: the modules that ingest,
+enrich, publish and serve the INPE data must not import the vector
+search kernels. Spark-free: the check reads each module's source."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+import inpe_queimadas_etl_spark as pkg
+
+PKG = pkg.__name__
+PKG_DIR = Path(pkg.__file__).parent
+
+FIRE_PATH = (
+    "pipeline",
+    "api",
+    "cli",
+    "streaming",
+    "enrich",
+    "marts",
+    "queries",
+    "geoqueries",
+    "serving_cache",
+)
+FORBIDDEN = tuple(
+    f"{PKG}.operators.{m}" for m in ("pq", "annmaint", "metaplane")
+)
+
+
+def _imported_modules(module: str) -> set[str]:
+    """Absolute names of every module ``module`` imports, anywhere in
+    its body (function-local imports included). ``from X import y``
+    yields both X and X.y, since y may itself be a module."""
+    tree = ast.parse((PKG_DIR / f"{module}.py").read_text())
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                # every fire-path module sits at the package top level
+                base = f"{PKG}.{node.module}" if node.module else PKG
+            else:
+                base = node.module or ""
+            out.add(base)
+            out.update(f"{base}.{a.name}" for a in node.names)
+    return out
+
+
+def test_fire_path_does_not_import_vector_search_modules():
+    # the scan must see through the package's relative-import style,
+    # or the guard would pass vacuously
+    assert f"{PKG}.serving_cache.cached" in _imported_modules("api")
+    offenders = {
+        module: sorted(
+            name
+            for name in _imported_modules(module)
+            if name.startswith(FORBIDDEN)
+        )
+        for module in FIRE_PATH
+    }
+    offenders = {m: names for m, names in offenders.items() if names}
+    assert not offenders, offenders

@@ -440,6 +440,19 @@ def test_tx8_model_joins_broadcast_corpus_never_token_shuffled(spark):
     assert "partial" in plan.lower(), plan
 
 
+def test_tx8_vocab_mapping_refuses_unknown_column(spark):
+    """The InSet vocab mapping must fail fast on a misspelled column
+    (the broadcast-join form it replaced raised on one) instead of
+    silently returning the column unmapped."""
+    from inpe_queimadas_etl_spark.suite.llmdata import _tx8_map_to_vocab
+
+    df = spark.createDataFrame([("a", "b")], "w1 string, w2 string")
+    with pytest.raises(ValueError, match="w3"):
+        _tx8_map_to_vocab(df, ["a"], "w1", "w3")
+    mapped = _tx8_map_to_vocab(df, ["a"], "w1", "w2").collect()
+    assert [tuple(r) for r in mapped] == [("a", "<unk>")]
+
+
 def test_cur8_model_broadcasts_corpus_never_feature_shuffled(spark):
     """cur8's 100-TB contract: the model is B rows by construction, so
     the B-row log-ratio table BROADCASTS into the scoring pass and the

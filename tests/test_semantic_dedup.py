@@ -127,83 +127,3 @@ def test_cur7_flags_planted_paraphrase_only(spark):
     assert set(out) == {1}
     assert out[1]["n_eval_hits"] == 2
     assert out[1]["max_sim"] >= 0.99
-
-
-def test_semdedup_store_pins_to_in_session_form(spark, tmp_path):
-    """`api.semdedup_store` (frozen-artifact clustering) must equal
-    the in-session `semantic_dedup_removals` EXACTLY when the
-    persisted model's coarse centroids are the same vectors the demo
-    codebook uses — artifact round-trip (float round-trip + derived
-    norms) included."""
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.api import semdedup_store
-    from inpe_queimadas_etl_spark.operators.pq import save_ann_model
-
-    emb = _emb(spark)
-    cents = [(0, _VECS[0]), (1, _VECS[1])]  # == _ivf_centroids(emb, 2)
-    cb = [
-        [[0.0, 0.0], [1.0, 1.0]],
-        [[0.0, 0.0], [1.0, 1.0]],
-    ]  # valid geometry; irrelevant to assignment
-    model_path = str(tmp_path / "model.json")
-    saved = save_ann_model(model_path, cents, cb, frac=1.0, cand=100)
-
-    got = (
-        semdedup_store(
-            spark, emb, model_path, tau=0.9,
-            expected_sha256=saved["sha256"],
-        )
-        .toPandas()
-        .sort_values("vec_id", ignore_index=True)
-    )
-    want = (
-        semantic_dedup_removals(emb, k=2, tau=0.9)
-        .toPandas()
-        .sort_values("vec_id", ignore_index=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
-    assert set(got["vec_id"]) == {0, 10, 11}  # 12 is the keeper
-
-
-def test_semdedup_store_retires_served_vectors(spark, tmp_path):
-    """The governance loop under ONE sha: dedup removals from the
-    frozen model feed `delete_from_ann_store` on a store encoded
-    under the same artifact, and the retired ids stop being served
-    immediately."""
-    from inpe_queimadas_etl_spark.api import ann_topk, semdedup_store
-    from inpe_queimadas_etl_spark.operators.pq import (
-        build_ann_store,
-        delete_from_ann_store,
-        load_ann_model,
-        save_ann_model,
-    )
-
-    emb = _emb(spark)
-    cents = [(0, _VECS[0]), (1, _VECS[1])]
-    cb = [[[0.0, 0.0], [1.0, 1.0]], [[0.0, 0.0], [1.0, 1.0]]]
-    model_path = str(tmp_path / "model.json")
-    saved = save_ann_model(model_path, cents, cb, frac=1.0, cand=100)
-    store = str(tmp_path / "store")
-    build_ann_store(emb, load_ann_model(model_path), store)
-
-    removals = [
-        int(r["vec_id"])
-        for r in semdedup_store(
-            spark, emb, model_path, tau=0.9,
-            expected_sha256=saved["sha256"],
-        ).collect()
-    ]
-    assert sorted(removals) == [0, 10, 11]
-    delete_from_ann_store(store, removals)
-
-    served = {
-        int(r["neighbor_id"])
-        for r in ann_topk(
-            spark, store, model_path,
-            [(1_000, [1.0, 0.11, 0.0, 0.0])], k=4,
-            rerank_with=emb, expected_sha256=saved["sha256"],
-        ).collect()
-    }
-    assert not set(removals) & served
-    assert 12 in served  # the keeper still serves

@@ -7,7 +7,7 @@ from inpe_queimadas_etl_spark.serving_cache import (
     POINTS_TTL_SECONDS,
     ServingCache,
     TTLCache,
-    cache_key,
+    cache_key_params,
     cached,
     points_cache_key,
     points_zoom_bucket,
@@ -107,10 +107,15 @@ def test_maxsize_evicts_oldest():
 
 
 def test_cache_key_deterministic_and_null_free():
-    k1 = cache_key("totals", uf="MT", to="2024-06-01", bioma=None)
-    k2 = cache_key("totals", to="2024-06-01", uf="MT")
-    assert k1 == k2
+    k1 = cache_key_params(
+        "totals", {"uf": "MT", "to": "2024-06-01", "bioma": None}
+    )
+    k2 = cache_key_params("totals", {"to": "2024-06-01", "uf": "MT"})
+    assert k1 == k2 == "/api/totals?to=2024-06-01&uf=MT"
     assert "bioma" not in k1
+    # a client param named like the function's own argument is data
+    k3 = cache_key_params("totals", {"endpoint": "x", "uf": "MT"})
+    assert k3 == "/api/totals?endpoint=x&uf=MT"
 
 
 def test_zoom_buckets_reference_thresholds():
@@ -124,7 +129,7 @@ def test_zoom_buckets_reference_thresholds():
 
 
 def test_points_key_appends_zoom_bucket():
-    base = cache_key("points", day="2024-05-02", bbox=(0, 0, 1, 1))
+    base = cache_key_params("points", {"date": "2024-05-02", "bbox": "0,0,1,1"})
     assert points_cache_key(base, (0, 0, 1, 1)).endswith("|zb=local")
     assert points_cache_key(base, None).endswith("|zb=world")
 
@@ -138,16 +143,22 @@ def test_serving_cache_points_ttl_shorter():
         calls.append(1)
         return [{"lat": 0.5}]
 
-    _, h1 = sc.get_or_run_points(run, day="2024-05-02", bbox=(0, 0, 1, 1))
-    _, h2 = sc.get_or_run_points(run, day="2024-05-02", bbox=(0, 0, 1, 1))
+    bbox = (0, 0, 1, 1)
+    pkey = points_cache_key(
+        cache_key_params("points", {"date": "2024-05-02", "bbox": "0,0,1,1"}),
+        bbox,
+    )
+    _, h1 = cached(sc.points, pkey, run)
+    _, h2 = cached(sc.points, pkey, run)
     assert (h1, h2) == (False, True) and len(calls) == 1
 
     clock.advance(POINTS_TTL_SECONDS + 1)
-    _, h3 = sc.get_or_run_points(run, day="2024-05-02", bbox=(0, 0, 1, 1))
+    _, h3 = cached(sc.points, pkey, run)
     assert h3 is False and len(calls) == 2
 
     # general cache still holds at the same age (300 s TTL)
-    _, g1 = sc.get_or_run("totals", lambda: {"total": 1}, uf="MT")
+    gkey = cache_key_params("totals", {"uf": "MT"})
+    _, g1 = cached(sc.general, gkey, lambda: {"total": 1})
     clock.advance(POINTS_TTL_SECONDS + 1)
-    _, g2 = sc.get_or_run("totals", lambda: {"total": 1}, uf="MT")
+    _, g2 = cached(sc.general, gkey, lambda: {"total": 1})
     assert (g1, g2) == (False, True)
