@@ -24,14 +24,15 @@ Layout
 - ``pipeline``   the batch orchestration and the warehouse publish.
 - ``queries`` / ``geoqueries`` / ``api`` / ``serving_cache``
                  the dashboard read path and its HTTP front.
-- ``cli``        ``run``, ``checks``, ``validate-repo`` and the
-                 corpus commands.
+- ``cli``        ``run``, ``checks``, ``validate-repo`` and
+                 ``corpus-curate``.
 - ``operators``  reusable distributed operators: relational helpers
                  (zero-fill, top-1-per-group, moving averages),
                  dedup family, similarity search, text analysis,
                  multimodal column plumbing, geo joins.
-- ``streaming``  Structured Streaming foreachBatch wrappers over the
-                 batch pipeline and the corpus dedup drains.
+- ``streaming``  the landing stream: a Structured Streaming
+                 foreachBatch over the landing dir that runs the batch
+                 pipeline step per landed daily CSV.
 - ``suite``      the declared query suite: name -> (Spark callable,
                  DuckDB oracle SQL) consumed by __spark_entry__.py.
 """

@@ -132,12 +132,18 @@ def cmd_run(args) -> int:
     from .pipeline import Warehouse, run_range
     from .session import get_spark
 
+    if args.date and (args.start or args.end):
+        log.error("run takes --date or --start/--end, not both")
+        return 2
     if args.date:
         start = end = dt.date.fromisoformat(args.date)
     elif args.start and args.end:
         start, end = dt.date.fromisoformat(args.start), dt.date.fromisoformat(args.end)
     else:
         log.error("run requires --date or --start/--end")
+        return 2
+    if start > end:
+        log.error("run --start %s is later than --end %s", start, end)
         return 2
 
     day_files = discover_landing_files(args.landing_dir, start, end)
@@ -202,81 +208,6 @@ def cmd_validate_repo(args) -> int:
             json.dumps(r, default=str),
         )
     return 0 if ok else 1
-
-
-def cmd_corpus_dedup(args) -> int:
-    """Drain landed snapshots through the streaming incremental-dedup
-    loop and log a per-kind verdict summary. ``--embeddings`` switches
-    to the vector drain (vec_id + embedding snapshots, sign-LSH band
-    index) instead of the document drain. With ``--continuous`` the
-    drain stays live (blocks until externally stopped); otherwise it
-    sweeps everything currently landed and exits — the cron/scheduler
-    shape."""
-    from .session import get_spark
-    from .streaming import (
-        start_corpus_dedup_stream,
-        start_embedding_dedup_stream,
-    )
-
-    spark = get_spark(app_name="corpus-dedup")
-    schema = None
-    if args.schema_from:
-        schema = spark.read.parquet(args.schema_from).schema
-
-    run_batch_ids: list[int] = []
-
-    def on_batch(batch_id: int, m: dict) -> None:
-        run_batch_ids.append(batch_id)
-        log.info("corpus-dedup | batch %s | %s", batch_id, json.dumps(m))
-
-    starter = (
-        start_embedding_dedup_stream
-        if args.embeddings
-        else start_corpus_dedup_stream
-    )
-    src_kw = "vecs_dir" if args.embeddings else "docs_dir"
-    # --bpe-tokenizer vs --embeddings incompatibility is validated
-    # ONCE, at argument-parse time in main() (ADVICE r8 + review r9:
-    # a second in-function copy of the rule can only drift).
-    extra = {}
-    if not args.embeddings and args.bpe_tokenizer:
-        extra["tokenizer_path"] = args.bpe_tokenizer
-    q = starter(
-        spark,
-        **{src_kw: args.docs_dir},
-        index_dir=args.index_dir,
-        out_dir=args.out_dir,
-        checkpoint_dir=args.checkpoint_dir,
-        available_now=not args.continuous,
-        threshold=args.threshold,
-        on_batch=on_batch,
-        schema=schema,
-        **extra,
-    )
-    q.awaitTermination()
-    if not run_batch_ids:
-        log.info("corpus-dedup | summary | nothing new landed")
-        return 0
-    from pyspark.sql import functions as F
-
-    # THIS run's verdicts only (flags accumulate per batch_id across
-    # the stream's whole history)
-    flags = spark.read.parquet(f"{args.out_dir}/flags").filter(
-        F.col("batch_id").isin(run_batch_ids)
-    )
-    if args.embeddings:
-        kind = F.when(F.col("dup_of").isNotNull(), F.lit("near_or_exact"))
-    else:
-        kind = F.col("dup_kind")
-    by_kind = {
-        (r["k"] or "accepted"): r["n"]
-        for r in flags.select(kind.alias("k"))
-        .groupBy("k")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    log.info("corpus-dedup | summary | %s", json.dumps(by_kind))
-    return 0
 
 
 def cmd_corpus_curate(args) -> int:
@@ -346,54 +277,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     vrepo.add_argument("--warehouse", help="also validate this warehouse")
     vrepo.add_argument("--log-dir")
-
-    cdp = sub.add_parser(
-        "corpus-dedup",
-        help="drain landed document snapshots through incremental "
-        "dedup against the persistent index",
-    )
-    cdp.add_argument(
-        "--docs-dir", required=True, help="landing dir of parquet snapshots"
-    )
-    cdp.add_argument("--index-dir", required=True, help="dedup index root")
-    cdp.add_argument(
-        "--out-dir", required=True, help="accepted/flags output root"
-    )
-    cdp.add_argument(
-        "--checkpoint-dir", required=True, help="streaming checkpoint"
-    )
-    cdp.add_argument(
-        "--threshold",
-        type=float,
-        default=None,
-        help="near-dup jaccard floor (default 0.5)",
-    )
-    cdp.add_argument(
-        "--continuous",
-        action="store_true",
-        help="keep the drain live instead of stopping after a sweep",
-    )
-    cdp.add_argument(
-        "--schema-from",
-        help="parquet file/dir whose schema to use (lets the drain "
-        "start before the first snapshot lands)",
-    )
-    cdp.add_argument(
-        "--embeddings",
-        action="store_true",
-        help="dedup embedding snapshots (vec_id + embedding) via the "
-        "sign-LSH band index instead of documents",
-    )
-    cdp.add_argument(
-        "--bpe-tokenizer",
-        default=None,
-        help="frozen tokenizer artifact (a corpus-curate run's "
-        "tokenizer.json): each batch's accepted survivors are "
-        "additionally encoded under it into OUT_DIR/tokens — ids "
-        "identical to the training run's, never a retrain (document "
-        "drain only)",
-    )
-    cdp.add_argument("--log-dir")
 
     cur = sub.add_parser(
         "corpus-curate",
@@ -527,15 +410,6 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     parser = build_parser()
     args = parser.parse_args(argv)
-    if args.cmd == "corpus-dedup" and args.embeddings:
-        # reject incompatible pairs BEFORE Spark session startup
-        # (ADVICE r8): the runtime check inside cmd_corpus_dedup made
-        # the user pay JVM spin-up to learn the flags don't combine
-        if args.bpe_tokenizer:
-            parser.error(
-                "--bpe-tokenizer applies to the document drain only "
-                "(drop it or drop --embeddings)"
-            )
     _setup_logging(getattr(args, "log_dir", None))
     if args.cmd == "run":
         return cmd_run(args)
@@ -543,8 +417,6 @@ def main(argv: list[str] | None = None) -> int:
         return cmd_checks(args)
     if args.cmd == "validate-repo":
         return cmd_validate_repo(args)
-    if args.cmd == "corpus-dedup":
-        return cmd_corpus_dedup(args)
     if args.cmd == "corpus-curate":
         return cmd_corpus_curate(args)
     return 2

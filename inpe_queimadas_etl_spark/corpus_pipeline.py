@@ -157,9 +157,8 @@ def _resolve_corpus(
     """(documents frame, table dir) for ``corpus_dir``.
 
     A dir holding ``documents.parquet`` (the testdata layout) is used
-    as-is. Any OTHER input — a parquet dir (e.g. a streaming dedup
-    drain's ``out/accepted`` sink, the natural upstream of this
-    pipeline) or a dir of JSONL shards (`*.jsonl`/`*.jsonl.gz`, the
+    as-is. Any OTHER input — a parquet dir (``batch_id``-partitioned
+    ones included) or a dir of JSONL shards (`*.jsonl`/`*.jsonl.gz`, the
     crawl-dump interchange format; must carry ``text``, with
     ``doc_id`` synthesized from the line position when absent) — is
     normalized once into ``out_dir/_staged/documents.parquet``:
@@ -596,8 +595,8 @@ def run_corpus_pipeline(
             merges = train_bpe(counts, bpe_merges)
             vocab = bpe_vocab(counts, merges)
             # persist the trained tokenizer next to the export so a
-            # later run (or the streaming drain) encodes new documents
-            # under THIS table, never a retrain
+            # later run encodes new documents under THIS table, never
+            # a retrain
             artifact = save_tokenizer(
                 os.path.join(out_dir, "tokenizer.json"), merges, vocab
             )

@@ -297,10 +297,10 @@ def save_tokenizer(
     canonical JSON artifact and return ``{"path", "sha256"}`` for the
     manifest — the weights-as-artifact stance tx7/tx10/sim8 take,
     applied to the tokenizer (VERDICT r7 #4): a corpus is tokenized
-    ONCE under a frozen table; later runs (or the streaming drain)
-    must load it, never retrain, or the id space silently shifts
-    under the trainer. Canonical form: sorted keys, no whitespace —
-    the sha256 identifies the tokenizer content, not a formatting."""
+    ONCE under a frozen table; later runs must load it, never
+    retrain, or the id space silently shifts under the trainer.
+    Canonical form: sorted keys, no whitespace — the sha256
+    identifies the tokenizer content, not a formatting."""
     import hashlib
     import os
 

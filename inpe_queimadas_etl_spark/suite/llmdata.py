@@ -120,20 +120,15 @@ def _shingles_spark(df: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def _shingles_sql(tbl: str) -> str:
-    """DuckDB twin of _shingles_spark, parameterized on the table so
-    incremental.py's corpus/batch oracle reuses it verbatim."""
-    return f"""
+# DuckDB twin of _shingles_spark
+_SHINGLES_SQL = """
     SELECT doc_id,
            list_distinct(list_transform(
                generate_series(1, len(w) - 2),
                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingles
-    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM {tbl})
+    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
     WHERE len(w) >= 3
 """
-
-
-_SHINGLES_SQL = _shingles_sql("documents")
 
 
 # ---------------------------------------------------------------------------
@@ -531,9 +526,8 @@ def _minhash_sig_cols():
     return cols
 
 
-# shingle string -> 31-bit int, the dd3 mapping; shared with
-# incremental.py so persisted index rows and batch probes agree
-# byte-for-byte (and so the DuckDB oracles can reproduce the keys)
+# shingle string -> 31-bit int, the dd3 mapping (the DuckDB oracles
+# reproduce the keys byte-for-byte)
 _SHINGLE_INT_EXPR = (
     f"transform(shingles, s -> conv(substring(md5(s), 1, 8), 16, 10) % {_MH_P}L)"
 )
@@ -544,25 +538,23 @@ _SIG_MINS_SQL = ", ".join(
 )
 
 
-def _sig_select_sql(src: str) -> str:
-    """DuckDB: MinHash signature SELECT over a shingle CTE ``src``
-    (columns doc_id, shingles) — the SQL twin of _minhash_sig_cols +
-    _SHINGLE_INT_EXPR, parameterized so incremental.py's two-table
-    oracle reuses the exact same expressions."""
-    return f"""
+# DuckDB: MinHash signature SELECT over the shingle CTE ``sh``
+# (columns doc_id, shingles) — the SQL twin of _minhash_sig_cols +
+# _SHINGLE_INT_EXPR
+_SIG_SELECT_SQL = f"""
         SELECT doc_id, {_SIG_MINS_SQL}
         FROM (
             SELECT doc_id,
                    list_transform(shingles,
                        s -> {_hex_to_int_sql("substr(md5(s),1,8)")} % {_MH_P}) AS xs
-            FROM {src}
+            FROM sh
         )
     """
 
 
 _MINHASH_SQL_BODY = f"""
     WITH sh AS ({_SHINGLES_SQL}),
-    sig AS ({_sig_select_sql('sh')})
+    sig AS ({_SIG_SELECT_SQL})
 """
 
 
@@ -600,20 +592,17 @@ _BAND_HASH_SQL = "md5({})".format(
 )
 
 
-def _bands_select_sql(sig: str) -> str:
-    """DuckDB: (doc_id, band_idx, band_hash) over a signature CTE —
-    the SQL twin of _band_struct_cols, shared with incremental.py."""
-    return f"""
+# DuckDB: (doc_id, band_idx, band_hash) over the signature CTE
+# ``sig`` — the SQL twin of _band_struct_cols
+_BANDS_SELECT_SQL = f"""
         SELECT doc_id, band_idx, {_BAND_HASH_SQL} AS band_hash
-        FROM {sig} CROSS JOIN (SELECT unnest(range({_MH_BANDS})) AS band_idx)
+        FROM sig CROSS JOIN (SELECT unnest(range({_MH_BANDS})) AS band_idx)
     """
 
 
 def _band_struct_cols() -> list:
     """Spark: array of (band_idx, band_hash) structs over the mh*
-    signature columns — the banding used by dd4's self-join AND by
-    incremental.py's persistent index, factored so the two can never
-    drift (index rows must stay joinable across versions)."""
+    signature columns — the banding used by dd4's self-join."""
     band_structs = []
     for bi in range(_MH_BANDS):
         row_cols = [
@@ -630,7 +619,7 @@ def _band_struct_cols() -> list:
 
 
 _LSH_CAND_SQL = f"""
-    , bands AS ({_bands_select_sql('sig')}),
+    , bands AS ({_BANDS_SELECT_SQL}),
     cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a JOIN bands b
@@ -840,17 +829,10 @@ def _emb_band_rows(
     id_col: str,
     n_bands: int,
     band_bits: int,
-    dim: int = _EMB_DIM,
 ) -> DataFrame:
     """``(id_col, band_idx, band_bucket)`` rows over an array<double>
-    column named ``v`` — the sign-LSH banding shared by dd6's
-    self-join and incremental.py's persistent embedding index
-    (factored so index rows and batch probes can never drift; the
-    hyperplanes are deterministic in (plane index, dim), so ``dim``
-    is part of the geometry — banding a corpus at the wrong dim maps
-    every vector to one bucket and the index degenerates to
-    all-pairs; incremental.py records dim in the index and validates
-    probes against it). Uses the Arrow-batched
+    column named ``v`` — dd6's sign-LSH banding at ``_EMB_DIM``. Uses
+    the Arrow-batched
     :func:`..operators.similarity.lsh_band_buckets` fast path —
     bit-identical to the `_emb_band_structs` JVM expressions the
     DuckDB oracle states, measured ~7x faster (the HOF folds are
@@ -860,7 +842,7 @@ def _emb_band_rows(
     return vecs.select(
         id_col,
         F.posexplode(
-            lsh_band_buckets("v", dim, n_bands, band_bits)
+            lsh_band_buckets("v", _EMB_DIM, n_bands, band_bits)
         ).alias("band_idx", "band_bucket"),
     )
 

@@ -177,6 +177,33 @@ def test_run_errors_without_files_or_range(tmp_path, dims_dir):
         ]
     )
     assert rc == 2
+    common = [
+        "--landing-dir",
+        str(empty),
+        "--warehouse",
+        str(tmp_path / "w"),
+        "--dims-dir",
+        dims_dir,
+    ]
+    # --date with a range is ambiguous, not "day D only"
+    rc = cli.main(
+        [
+            "run",
+            "--date",
+            "2030-01-01",
+            "--start",
+            "2030-01-01",
+            "--end",
+            "2030-01-03",
+            *common,
+        ]
+    )
+    assert rc == 2
+    # an inverted range is a usage error, not "no landed CSVs"
+    rc = cli.main(
+        ["run", "--start", "2030-01-03", "--end", "2030-01-01", *common]
+    )
+    assert rc == 2
 
 
 def test_validate_repo_structure_and_warehouse(spark, dims_dir, tmp_path):

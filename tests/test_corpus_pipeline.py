@@ -232,10 +232,11 @@ def test_pack_rows_are_contiguous_within_files(pipeline_out):
 
 
 def test_drain_accepted_sink_feeds_pipeline(spark, tmp_path):
-    """The streaming dedup drain's out/accepted sink (batch_id
-    partitions, minimal doc schema) is a valid corpus_dir: the
-    pipeline stages it into the table layout, fills the optional
-    columns, and materializes normally — the drain -> curate chain."""
+    """A batch_id-partitioned parquet dir with the minimal doc schema
+    (the shape of an upstream sink that writes one partition per
+    batch) is a valid corpus_dir: the pipeline stages it into the
+    table layout, fills the optional columns, and materializes
+    normally."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -1,6 +1,8 @@
 """Layering guard for the fire-hotspot path: the modules that ingest,
 enrich, publish and serve the INPE data must not import the vector
-search kernels. Spark-free: the check reads each module's source."""
+search kernels, the LLM-corpus operator suite (``suite``, the BPE
+tokenizer, the quality classifier) or the incremental dedup index.
+Spark-free: the check reads each module's source."""
 
 from __future__ import annotations
 
@@ -24,8 +26,21 @@ FIRE_PATH = (
     "serving_cache",
 )
 FORBIDDEN = tuple(
-    f"{PKG}.operators.{m}" for m in ("pq", "annmaint", "metaplane")
+    f"{PKG}.{m}"
+    for m in (
+        "operators.pq",
+        "operators.annmaint",
+        "operators.metaplane",
+        "operators.bpe",
+        "operators.classifier",
+        "incremental",
+        "suite",
+    )
 )
+
+
+def _is_forbidden(name: str) -> bool:
+    return any(name == f or name.startswith(f"{f}.") for f in FORBIDDEN)
 
 
 def _imported_modules(module: str) -> set[str]:
@@ -56,7 +71,7 @@ def test_fire_path_does_not_import_vector_search_modules():
         module: sorted(
             name
             for name in _imported_modules(module)
-            if name.startswith(FORBIDDEN)
+            if _is_forbidden(name)
         )
         for module in FIRE_PATH
     }

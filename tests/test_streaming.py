@@ -90,13 +90,14 @@ def test_landing_stream_drains_and_checkpoints(spark, tmp_path):
 def test_end_to_end_stream_with_midstream_restart_matches_batch(
     spark, tmp_path
 ):
-    """VERDICT r3 #8: landing stream -> stateful first-seen dedup ->
-    process_batch, one foreachBatch pipeline, killed MID-STREAM (the
-    batch step dies after the first file has already been applied to
-    the warehouse) and restarted on the same checkpoint. The failed
-    micro-batch replays in full; the already-applied file's rows
-    anti-join to zero; final warehouse state is IDENTICAL to a pure
-    batch run over the same files — the reference's
+    """VERDICT r3 #8: landing stream -> process_batch, one
+    foreachBatch pipeline with no stream-side dedup, killed
+    MID-STREAM (the batch step dies after the first file has already
+    been applied to the warehouse) and restarted on the same
+    checkpoint. The failed micro-batch replays in full; the
+    already-applied file's rows anti-join to zero; final warehouse
+    state is IDENTICAL to a pure batch run over the same files — the
+    reference's
     exactly-once-by-key idempotency contract (backfill.py:69-135)."""
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -126,7 +127,7 @@ def test_end_to_end_stream_with_midstream_restart_matches_batch(
 
     q = streaming.start_landing_stream(
         spark, str(landing), wh, dims, checkpoint_dir=ckpt,
-        on_batch=bomb, stateful_dedup=True,
+        on_batch=bomb,
     )
     with pytest.raises(Exception):
         q.awaitTermination(180)
@@ -137,11 +138,12 @@ def test_end_to_end_stream_with_midstream_restart_matches_batch(
     assert applied_rows > 0
 
     # restart on the SAME checkpoint: the failed batch replays whole;
-    # the already-applied file must contribute rows_new == 0
+    # the already-applied file must contribute rows_new == 0 (the
+    # event_hash anti-join in process_batch absorbs the replay)
     seen.clear()
     q2 = streaming.start_landing_stream(
         spark, str(landing), wh, dims, checkpoint_dir=ckpt,
-        on_batch=lambda d, m: seen.append((d, m["rows_new"])), stateful_dedup=True,
+        on_batch=lambda d, m: seen.append((d, m["rows_new"])),
     )
     q2.awaitTermination(180)
     replayed = dict(seen)
@@ -179,158 +181,46 @@ def test_end_to_end_stream_with_midstream_restart_matches_batch(
     assert snapshot(wh) == snapshot(wh_batch)
 
 
-def _drain_dedup(spark, src_dir, ckpt, out: list):
-    """One availableNow pass of the stateful dedup over the parquet
-    landing dir, collecting emitted rows via foreachBatch."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_hash", T.StringType()),
-            T.StructField("event_id", T.LongType()),
-        ]
+def test_landing_stream_skips_monthly_cache_and_zip(spark, tmp_path):
+    """The extract cache lands ``focos_mensal_YYYYMM.{zip,csv}`` next to
+    the daily files. The drain must neither parse the zip as CSV nor
+    die on the undated monthly name (an uncommitted batch would replay
+    and fail on every restart): only the daily file is applied."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    write_fixture_csv(
+        str(landing / "focos_mensal_202405.csv"),
+        G.FOCOS_HEADER,
+        G.FOCOS_ROWS[3:6],
+        sep=";",
     )
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    deduped = streaming.streaming_first_seen_dedup(
-        stream, "event_hash", order_cols=["event_id"]
+    (landing / "focos_mensal_202405.zip").write_bytes(b"PK\x03\x04not a csv")
+    write_fixture_csv(
+        str(landing / "focos_diario_br_20240501.csv"),
+        G.FOCOS_HEADER,
+        G.FOCOS_ROWS[:3],
+        sep=";",
     )
-    q = (
-        deduped.writeStream.foreachBatch(
-            lambda bdf, bid: out.extend(
-                (r["event_hash"], r["event_id"]) for r in bdf.collect()
-            )
-        )
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    dims = {
+        "municipios": G.municipios(),
+        "biomas": G.biomas(),
+        "ucs": G.ucs(),
+        "tis": G.tis(),
+        "uf_area": spark.createDataFrame(G.uf_area_rows(), UF_AREA),
+    }
+    wh = pipeline.Warehouse(str(tmp_path / "wh"))
+    seen: list[tuple[dt.date, dict]] = []
 
-
-def test_stateful_dedup_across_batches_and_restarts(spark, tmp_path):
-    """First-seen-per-key survives micro-batch boundaries AND query
-    restarts (state lives in the checkpointed state store); within a
-    batch the emitted row is the order_cols-minimum."""
-    src = tmp_path / "events"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt_dedup")
-
-    df1 = spark.createDataFrame(
-        [("a", 7), ("a", 3), ("b", 1)], "event_hash string, event_id long"
-    )
-    df1.coalesce(1).write.parquet(str(src / "f1"))
-    out: list = []
-    _drain_dedup(spark, str(src) + "/*", ckpt, out)
-    # 'a' dupes within the first batch: only the event_id-min row emits
-    assert sorted(out) == [("a", 3), ("b", 1)]
-
-    # second file replays 'a' and 'b', introduces 'c' — a NEW query on
-    # the same checkpoint must suppress the replayed keys
-    df2 = spark.createDataFrame(
-        [("a", 9), ("b", 8), ("c", 2)], "event_hash string, event_id long"
-    )
-    df2.coalesce(1).write.parquet(str(src / "f2"))
-    out.clear()
-    _drain_dedup(spark, str(src) + "/*", ckpt, out)
-    assert out == [("c", 2)]
-
-
-def _drain_windowed(spark, src_dir, ckpt, out: list):
-    """One availableNow pass of the watermarked windowed aggregation,
-    collecting APPEND-mode (finalized-only) rows via foreachBatch."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    agg = streaming.windowed_event_counts(
-        stream, window_duration="1 hour", watermark="2 hours"
-    )
-    q = (
-        agg.writeStream.foreachBatch(
-            lambda bdf, bid: out.extend(
-                (
-                    str(r["window_start"]),
-                    str(r["window_end"]),
-                    r["event_type"],
-                    r["n_events"],
-                    r["total_value"],
-                )
-                for r in bdf.collect()
-            )
-        )
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    q = streaming.start_landing_stream(
+        spark,
+        str(landing),
+        wh,
+        dims,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        on_batch=lambda d, m: seen.append((d, m)),
     )
     q.awaitTermination(120)
-
-
-def test_windowed_counts_watermark_finalization_and_late_drop(
-    spark, tmp_path
-):
-    """Append mode emits a window only after the watermark passes its
-    end (every emitted row is final), and a row arriving later than
-    the watermark allows is dropped — the late-data contract."""
-    src = tmp_path / "wevents"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt_win")
-    schema = "event_type string, ts string, value double"
-
-    # batch 1: two A rows in [10:00, 11:00) + a B row that pushes max
-    # event time to 12:30 (watermark will become 10:30 after commit)
-    spark.createDataFrame(
-        [
-            ("A", "2024-05-02 10:15:00", 1.0),
-            ("A", "2024-05-02 10:45:00", 2.0),
-            ("B", "2024-05-02 12:30:00", 3.0),
-        ],
-        schema,
-    ).selectExpr(
-        "event_type", "CAST(ts AS TIMESTAMP) ts", "value"
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    out: list = []
-    _drain_windowed(spark, str(src) + "/*", ckpt, out)
-    assert out == []  # nothing finalized yet
-
-    # batch 2: max event time -> 14:30; at batch START the watermark is
-    # 10:30, so the 11:00-ending window is still open -> still nothing
-    spark.createDataFrame(
-        [("B", "2024-05-02 14:30:00", 4.0)], schema
-    ).selectExpr(
-        "event_type", "CAST(ts AS TIMESTAMP) ts", "value"
-    ).coalesce(1).write.parquet(str(src / "f2"))
-    out.clear()
-    _drain_windowed(spark, str(src) + "/*", ckpt, out)
-    # availableNow runs a trailing no-data batch after f2, so the
-    # watermark advances to 12:30 within this drain and the [10:00,
-    # 11:00) window finalizes here — count 2, sum 3.0, and FINAL
-    assert out == [
-        ("2024-05-02 10:00:00", "2024-05-02 11:00:00", "A", 2, 3.0)
-    ]
-
-    # batch 3: the late A@10:20 row is behind the 12:30 watermark and
-    # must be dropped — the already-emitted A window must NOT re-emit
-    # or grow; meanwhile the [12:00, 13:00) B window finalizes once
-    # the watermark passes 13:00 (max event 16:00 -> watermark 14:00)
-    spark.createDataFrame(
-        [
-            ("A", "2024-05-02 10:20:00", 100.0),  # too late: dropped
-            ("C", "2024-05-02 16:00:00", 5.0),
-        ],
-        schema,
-    ).selectExpr(
-        "event_type", "CAST(ts AS TIMESTAMP) ts", "value"
-    ).coalesce(1).write.parquet(str(src / "f3"))
-    out.clear()
-    _drain_windowed(spark, str(src) + "/*", ckpt, out)
-    assert out == [
-        ("2024-05-02 12:00:00", "2024-05-02 13:00:00", "B", 1, 3.0)
-    ]
+    assert q.exception() is None
+    assert [d for d, _ in seen] == [dt.date(2024, 5, 1)]
+    assert seen[0][1]["rows_new"] == 3
+    assert wh.read(spark, "curated_focos").count() == 3
