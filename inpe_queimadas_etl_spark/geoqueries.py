@@ -9,8 +9,10 @@ its union->makevalid->simplify QA pipeline).
 
 The polygon work runs driver-side on the dim features (<= 5,570
 shapes, exactly the scale PostGIS handled per request); fact
-aggregates run as Spark plans over the day-dim MV with the same
-range/filter predicates as the non-geometry endpoints. Divergence
+aggregates read the serving context's fact cube (queries.FactCube)
+with the same range/filter rules as the non-geometry endpoints. Only
+the municipality lookup probes a DataFrame (the geometry dim).
+Divergence
 note: the reference's bbox_ratio divides a degree-squared bbox area
 by a m^2 polygon area (main.py:781-783); this engine computes both in
 m^2 so the ratio is the dimensionless bbox-overestimate factor the
@@ -30,7 +32,6 @@ from pyspark.sql import functions as F
 from .functions.geojson import to_feature
 from .functions.labels import clean_display_label
 from .functions.legend import compute_breaks
-from .geoprep import latest_uf_geometry
 from .operators.geo import PolyFeature
 from .operators.geometry import (
     _DEG_M,
@@ -46,7 +47,7 @@ from .operators.geometry import (
     polygon_coords,
     simplify_feature,
 )
-from .queries import TOP_GROUP_EXPR, _base, _norm
+from .queries import FactCube, _norm, mun_totals, uf_totals
 
 GEO_SIMPLIFY_DEFAULT_TOL_M = 10.0  # api/app/main.py:82 default
 CHORO_SIMPLIFY_TOL_DEG = 0.01  # serve-time mun tol (main.py:80,1074)
@@ -96,35 +97,29 @@ def bounds(feats: list[PolyFeature], key: str, uf: str | None = None) -> dict:
     }
 
 
-def lookup_mun(mun_web: DataFrame, fact: DataFrame, key: str) -> dict:
-    """/api/lookup/mun (main.py:1133-1208): geometry-dim key probe left
-    joined to the fact dim for the display name; UF upper-cased. ONE
-    plan / ONE collect, like the reference's single left-join query
-    (main.py:1165-1180)."""
+def lookup_mun(mun_web: DataFrame, cube: FactCube, key: str) -> dict:
+    """/api/lookup/mun (main.py:1133-1208): geometry-dim key probe,
+    named by the fact's max(mun_nm_mun) for the key over all days (the
+    reference's left join, main.py:1165-1180); UF upper-cased."""
     key_norm = (key or "").strip()
     if not key_norm:
         raise ValueError("key is required")
-    gm = (
+    rows = (
         mun_web.filter(F.col("cd_mun").cast("string") == key_norm)
         .select(F.col("cd_mun").cast("string").alias("mun"), "uf")
         .limit(1)
+        .collect()
     )
-    named = (
-        fact.filter(F.col("cd_mun").cast("string") == key_norm)
-        .groupBy(F.col("cd_mun").cast("string").alias("mun"))
-        .agg(F.max("mun_nm_mun").alias("mun_nome"))
-    )
-    rows = gm.join(named, "mun", "left").collect()
     if not rows:
         raise LookupError("municipality not found")
     row = rows[0]
-    mun_nome = row["mun_nome"] if row["mun_nome"] else row["mun"]
+    _, mun_nome = cube.dims["mun"].code_total(slice(None), cube.n, key_norm)
     uf = (row["uf"] or "").upper()
     if not uf:
         raise LookupError("municipality uf not found")
     return {
         "mun": str(row["mun"]),
-        "mun_nome": str(mun_nome),
+        "mun_nome": str(mun_nome or row["mun"]),
         "uf": uf,
         "uf_nome": uf,
     }
@@ -200,7 +195,7 @@ def geo_overlay(
     entity: str,
     key: str,
     feats: list[PolyFeature],
-    fact: DataFrame,
+    cube: FactCube,
     from_date: dt.date,
     to: dt.date,
     filters: dict | None = None,
@@ -211,22 +206,12 @@ def geo_overlay(
     total under the same filters, label run through P12."""
     metrics = geo_shape_metrics(feats, key, simplify=simplify, tol_m=tol_m)
     key_norm = metrics["key"]
-    code_col, name_col = TOP_GROUP_EXPR[entity]
     # The reference ANDs the context filter (code-or-name, key as-is,
     # main.py:1294-1296) with the exact code predicate (:1305) — the
     # conjunction reduces to the exact code match, applied here
     # without upper-normalizing the key (keys are codes, not labels).
-    row = (
-        _base(fact, from_date, to, filters or {})
-        .filter(F.col(code_col).cast("string") == key_norm)
-        .agg(
-            F.coalesce(F.max(name_col).cast("string"), F.lit(key_norm)).alias(
-                "label"
-            ),
-            F.coalesce(F.sum("n_focos"), F.lit(0)).alias("n_focos"),
-        )
-        .collect()[0]
-    )
+    sel = cube.window(from_date, to, filters)
+    n_focos, fact_label = cube.dims[entity].code_total(sel, cube.n, key_norm)
     source_label = next(
         (
             str(f.props["label"])
@@ -235,14 +220,14 @@ def geo_overlay(
         ),
         None,
     )
-    label = clean_display_label(source_label or row["label"] or key_norm)
+    label = clean_display_label(source_label or fact_label or key_norm)
     feature = {
         "type": "Feature",
         "properties": {
             "entity": entity,
             "key": key_norm,
             "label": label,
-            "n_focos": int(row["n_focos"]),
+            "n_focos": n_focos,
         },
         "geometry": metrics["geometry"],
     }
@@ -297,40 +282,35 @@ def geo_overlay_qa(
 
 
 def choropleth_uf_geo(
-    fact: DataFrame,
-    chart_uf: DataFrame,
+    cube: FactCube,
+    uf_geometry: dict[str, str],
     from_date: dt.date,
     to: dt.date,
     filters: dict | None = None,
-) -> tuple[DataFrame, dict]:
-    """/api/choropleth/uf with geometry (main.py:930-1017): latest
-    poly_coords per UF (J10) left-joined to the filtered aggregate,
-    zero-filled, mean_per_day over the range. Returns the DataFrame
-    (uf, n_focos, mean_per_day, poly_coords ordered by uf) plus the
-    {geojson, legend} response dict."""
+) -> tuple[list[dict], dict]:
+    """/api/choropleth/uf with geometry (main.py:930-1017): the latest
+    poly_coords per UF (J10, ``uf_geometry``: uf -> poly_coords JSON,
+    geoprep.latest_uf_geometry collected) left-joined to the filtered
+    aggregate, zero-filled, mean_per_day over the range. Returns the
+    rows (uf, n_focos, mean_per_day, poly_coords ordered by uf) plus
+    the {geojson, legend} response dict."""
     days = max(1, (to - from_date).days)
-    agg = (
-        _base(fact, from_date, to, filters)
-        .groupBy("uf")
-        .agg(F.sum("n_focos").alias("n_focos"))
-    )
-    geom = latest_uf_geometry(chart_uf)
-    dense = (
-        geom.join(agg, "uf", "left")
-        .withColumn("n_focos", F.coalesce(F.col("n_focos"), F.lit(0)).cast("long"))
-        .withColumn(
-            "mean_per_day", F.col("n_focos").cast("double") / F.lit(float(days))
-        )
-        .select("uf", "n_focos", "mean_per_day", "poly_coords")
-        .orderBy("uf")
-    )
-    rows = dense.collect()
-    values = [int(r["n_focos"]) for r in rows]
+    agg = uf_totals(cube, from_date, to, filters)
+    rows = [
+        {
+            "uf": uf,
+            "n_focos": agg.get(uf, 0),
+            "mean_per_day": agg.get(uf, 0) / float(days),
+            "poly_coords": coords,
+        }
+        for uf, coords in sorted(uf_geometry.items())
+    ]
+    values = [r["n_focos"] for r in rows]
     features = [
         to_feature(
             uf=str(r["uf"]),
-            n_focos=int(r["n_focos"]),
-            mean_per_day=float(r["mean_per_day"]),
+            n_focos=r["n_focos"],
+            mean_per_day=r["mean_per_day"],
             poly_coords=json.loads(r["poly_coords"]),
         )
         for r in rows
@@ -342,11 +322,11 @@ def choropleth_uf_geo(
         "geojson": {"type": "FeatureCollection", "features": features},
     }
     out.update(legend)
-    return dense, out
+    return rows, out
 
 
 def choropleth_mun_geo(
-    fact: DataFrame,
+    cube: FactCube,
     mun_web_feats: list[PolyFeature],
     from_date: dt.date,
     to: dt.date,
@@ -358,28 +338,13 @@ def choropleth_mun_geo(
     municipality shapes serve-time simplified, left-joined to the
     filtered aggregate, ordered n_focos desc / key asc, P12-cleaned
     labels, quantile legend."""
-    from .queries import CHORO_MAX_DAYS_MUN, validate_range
-
     uf_norm = _norm(uf)
     if not uf_norm:
         raise ValueError("uf is required for municipal choropleth")
-    validate_range(from_date, to)
-    if (to - from_date).days > CHORO_MAX_DAYS_MUN:
-        raise ValueError(f"range too large: max {CHORO_MAX_DAYS_MUN} days")
-
-    f = dict(filters or {})
-    f["uf"] = uf_norm
-    agg_rows = (
-        _base(fact, from_date, to, f)
-        .filter(F.col("cd_mun").isNotNull())
-        .groupBy(F.col("cd_mun").cast("string").alias("key"))
-        .agg(
-            F.max("mun_nm_mun").alias("label"),
-            F.sum("n_focos").alias("n_focos"),
-        )
-        .collect()
-    )
-    agg = {r["key"]: r for r in agg_rows}
+    agg = {
+        key: (label, n)
+        for key, label, n in mun_totals(cube, from_date, to, uf_norm, filters)
+    }
 
     shapes: dict[str, list[PolyFeature]] = {}
     for feat in mun_web_feats:
@@ -402,9 +367,8 @@ def choropleth_mun_geo(
                 "type": "MultiPolygon",
                 "coordinates": multipolygon_coords(simplified),
             }
-        a = agg.get(key)
-        n = int(a["n_focos"]) if a else 0
-        label = clean_display_label(str(a["label"]) if a and a["label"] else key)
+        fact_label, n = agg.get(key, (None, 0))
+        label = clean_display_label(fact_label or key)
         items.append((key, label, n, geometry))
 
     items.sort(key=lambda t: (-t[2], t[0]))  # n_focos desc, key asc

@@ -1,8 +1,15 @@
-"""Serving-layer query surface (§2.11) over the day-dim fact table.
+"""Serving-layer query surface (§2.11) over an in-memory fact cube.
 
-Each reference API endpoint (api/app/main.py) becomes a parameterized
-DataFrame function over the `mv_focos_day_dim` equivalent. Range
-semantics are [from, to) with `to` exclusive, max 365 days
+Every reference API endpoint (api/app/main.py) is a function over a
+:class:`FactCube`: the `mv_focos_day_dim` rows (and, for /api/points,
+the payload and filter columns of the enriched events) collected once
+by the serving context, sorted by day, with each dimension's
+(code, name) pairs dictionary-encoded. A request's `[from, to)` window
+is a ``searchsorted`` slice of the day column, a filter is a lookup
+table over the dictionary codes applied as a mask, and a group-by is a
+``bincount`` over the slice: no Spark plan per request.
+
+Range semantics are [from, to) with `to` exclusive, max 365 days
 (main.py:77,89-93); filters normalize strip/upper and match code OR
 name (main.py:136-158,171-215); granularity downshifts day -> week ->
 month at 92/273 days (main.py:78-79,392-397); the municipality top-k
@@ -14,11 +21,11 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .functions.legend import compute_breaks
-from .session import local_df
 
 MAX_RANGE_DAYS = 365
 TS_WEEK_THRESHOLD_DAYS = 92
@@ -29,7 +36,7 @@ POINTS_LIMIT_HARD_CAP = 50_000
 POINTS_LIMIT_DEFAULT = 20_000
 BBOX_RATIO_WARN_VALIDATE = 50.0  # main.py:1831
 
-# group key -> (code expr, name expr), mirroring TOP_GROUP_EXPR
+# group key -> (code column, name column), mirroring TOP_GROUP_EXPR
 # (api/app/main.py:60-66)
 TOP_GROUP_EXPR = {
     "uf": ("uf", "uf"),
@@ -38,6 +45,30 @@ TOP_GROUP_EXPR = {
     "uc": ("cd_cnuc", "uc_nome"),
     "ti": ("terrai_cod", "ti_nome"),
 }
+
+# fact-mart filter column -> its name on the enriched events table
+# (the points scan runs on enriched events, whose municipality-derived
+# columns carry the mun_/enr prefixes before the mart rename)
+_EVENTS_COL_FALLBACK = {
+    "uf": "mun_uf",
+    "cd_mun": "mun_cd_mun",
+    "bioma": "bioma_enr",
+}
+
+# the enriched-event columns a points request can select
+POINT_COLUMNS = (
+    "event_hash",
+    "event_day",
+    "lat",
+    "lon",
+    "mun_uf",
+    "mun_cd_mun",
+    "mun_nm_mun",
+    "cd_bioma",
+    "bioma_enr",
+)
+
+_EPOCH = dt.date(1970, 1, 1)
 
 
 def validate_range(from_date: dt.date, to: dt.date) -> None:
@@ -96,224 +127,409 @@ def _norm(v: str | None) -> str | None:
     return v or None
 
 
-def _range_pred(from_date: dt.date, to: dt.date):
-    return (F.col("day") >= F.lit(str(from_date)).cast("date")) & (
-        F.col("day") < F.lit(str(to)).cast("date")
-    )
+def _ord(day: dt.date) -> int:
+    return (day - _EPOCH).days
 
 
-# fact-mart filter column -> its name on the enriched events table
-# (the points scan runs on enriched events, whose municipality-derived
-# columns carry the mun_/enr prefixes before the mart rename)
-_EVENTS_COL_FALLBACK = {
-    "uf": "mun_uf",
-    "cd_mun": "mun_cd_mun",
-    "bioma": "bioma_enr",
-}
+def _date(ordinal) -> dt.date:
+    return _EPOCH + dt.timedelta(days=int(ordinal))
 
 
-def _filter_pred(filters: dict[str, str | None], columns: list[str] | None = None):
-    """Code-or-name match per entity (P11, main.py:171-215). Mirrors
-    `_build_fact_where` exactly: `uf` is plain equality against the
-    upper-normalized filter value; other entities compare the code
-    column exactly (no upper()) OR `upper(coalesce(name, '')) = v`.
-    ``columns`` (the target DataFrame's schema) lets the same predicate
-    run on the enriched events table, whose pre-mart column names
-    differ (_EVENTS_COL_FALLBACK)."""
+def _days(col) -> np.ndarray:
+    """A non-null date column -> int32 days since the epoch."""
+    return np.asarray(pc.cast(col, pa.int32()).to_numpy(), dtype=np.int32)
 
-    def resolve(col: str) -> str:
-        if columns is not None and col not in columns:
-            return _EVENTS_COL_FALLBACK.get(col, col)
-        return col
 
-    pred = F.lit(True)
-    for key, (code_col, name_col) in TOP_GROUP_EXPR.items():
-        v = _norm(filters.get(key)) if filters else None
-        if v is None:
-            continue
-        if key == "uf":
-            pred = pred & (F.col(resolve("uf")) == v)
+def _column(tbl: pa.Table, name: str) -> pa.Array:
+    """``name`` as a string array; a column the table lacks reads null."""
+    if name not in tbl.column_names:
+        return pa.nulls(tbl.num_rows, pa.string())
+    return pc.cast(tbl[name], pa.string()).combine_chunks()
+
+
+def _ranks(values: list) -> tuple[list, np.ndarray]:
+    """Sorted distinct non-null values, and each value's position in
+    that list (-1 for None). Python's str order is code-point order,
+    the UTF-8 byte order Spark sorts and compares strings in."""
+    table = sorted({v for v in values if v is not None})
+    pos = {v: i for i, v in enumerate(table)}
+    return table, np.array([pos.get(v, -1) for v in values], dtype=np.int64)
+
+
+def _groups(values: list) -> dict:
+    out: dict = {}
+    for i, v in enumerate(values):
+        if v is not None:
+            out.setdefault(v, []).append(i)
+    return {v: np.array(ix, dtype=np.int64) for v, ix in out.items()}
+
+
+class _Dim:
+    """One dimension's (code, name) pairs, dictionary-encoded.
+    ``rows`` holds each row's pair index; the per-pair tables answer
+    the filter and group-by rules for every row sharing the pair."""
+
+    def __init__(self, code: pa.Array, name: pa.Array, by_name: bool):
+        enc_c, enc_n = pc.dictionary_encode(code), pc.dictionary_encode(name)
+        ci = np.asarray(enc_c.indices.fill_null(-1).to_numpy(), dtype=np.int64)
+        ni = np.asarray(enc_n.indices.fill_null(-1).to_numpy(), dtype=np.int64)
+        width = len(enc_n.dictionary) + 1
+        pairs, rows = np.unique((ci + 1) * width + (ni + 1), return_inverse=True)
+        self.rows = rows.astype(np.int32)
+        self.size = len(pairs)
+        cv, nv = enc_c.dictionary.to_pylist(), enc_n.dictionary.to_pylist()
+        codes = [cv[p // width - 1] if p // width else None for p in pairs]
+        names = [nv[p % width - 1] if p % width else None for p in pairs]
+        # filter: cast(code as string) = v OR upper(coalesce(name, '')) = v;
+        # uf compares the code alone (_build_fact_where)
+        self._by_code = _groups(codes)
+        upper = [n.upper() if n is not None else None for n in names]
+        self._by_name = _groups(upper) if by_name else {}
+        self.codes, self.code = _ranks(codes)
+        self.names, self.name = _ranks(names)
+        # top-k key coalesce(code, name), empty keys dropped; label
+        # coalesce(name, code)
+        keys = [c if c is not None else n for c, n in zip(codes, names)]
+        self.keys, self.key = _ranks([k if k else None for k in keys])
+        self.labels, self.label = _ranks(
+            [n if n is not None else c for c, n in zip(codes, names)]
+        )
+
+    def matches(self, v: str) -> np.ndarray:
+        """Per-pair lookup table: does the pair pass the filter ``v``
+        (already strip/upper-normalized)?"""
+        hit = np.zeros(self.size, dtype=bool)
+        hit[self._by_code.get(v, [])] = True
+        hit[self._by_name.get(v, [])] = True
+        return hit
+
+    def pair_sums(self, sel, n: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Sum of ``n`` and whether any row is selected, per pair."""
+        rows = self.rows[sel]
+        sums = np.bincount(rows, weights=n[sel], minlength=self.size)
+        return sums, np.bincount(rows, minlength=self.size) > 0
+
+    def rollup(self, sel, n: np.ndarray, by: str) -> list[tuple]:
+        """(group, label, total) per non-null group with selected rows,
+        ordered by group. ``by="key"`` groups on coalesce(code, name)
+        labelled by max(coalesce(name, code)) (the top-k shape);
+        ``by="code"`` groups on the code labelled by max(name)."""
+        if by == "key":
+            g, table, lab, labels = self.key, self.keys, self.label, self.labels
         else:
-            pred = pred & (
-                (F.col(resolve(code_col)).cast("string") == v)
-                | (F.upper(F.coalesce(F.col(resolve(name_col)), F.lit(""))) == v)
+            g, table, lab, labels = self.code, self.codes, self.name, self.names
+        sums, present = self.pair_sums(sel, n)
+        ok = present & (g >= 0)
+        total = np.bincount(g[ok], weights=sums[ok], minlength=len(table))
+        has = np.bincount(g[ok], minlength=len(table)) > 0
+        best = np.full(len(table), -1, dtype=np.int64)
+        np.maximum.at(best, g[ok], lab[ok])
+        return [
+            (table[i], labels[best[i]] if best[i] >= 0 else None, int(total[i]))
+            for i in np.flatnonzero(has)
+        ]
+
+    def null_total(self, sel, n: np.ndarray) -> int | None:
+        """Total of the selected rows whose code is null; None when
+        there are none (Spark's null group of a GROUP BY code)."""
+        sums, present = self.pair_sums(sel, n)
+        ok = present & (self.code < 0)
+        return int(sums[ok].sum()) if ok.any() else None
+
+    def code_total(self, sel, n: np.ndarray, code: str) -> tuple[int, str | None]:
+        """sum(n) and max(name) over the selected rows whose code is
+        exactly ``code``."""
+        sums, present = self.pair_sums(sel, n)
+        pairs = [p for p in self._by_code.get(code, []) if present[p]]
+        named = [self.names[self.name[p]] for p in pairs if self.name[p] >= 0]
+        return int(sums[pairs].sum()), max(named) if named else None
+
+
+class _DayColumns:
+    """Rows sorted by day (int32 days since the epoch) with one
+    :class:`_Dim` per filterable dimension."""
+
+    day: np.ndarray
+    dims: dict[str, _Dim]
+
+    def _encode_dims(self, tbl: pa.Table, resolve) -> None:
+        self.dims = {
+            key: _Dim(
+                _column(tbl, resolve(code)), _column(tbl, resolve(name)),
+                by_name=key != "uf",
             )
-    return pred
+            for key, (code, name) in TOP_GROUP_EXPR.items()
+        }
+
+    def select(self, lo: int, hi: int, filters: dict | None):
+        """Positions of the rows in ``[lo, hi)`` that pass ``filters``
+        (code-or-name per entity, P11, main.py:171-215): a slice when
+        nothing filters, else an index array."""
+        mask = None
+        for key in TOP_GROUP_EXPR:
+            v = _norm((filters or {}).get(key))
+            if v is None:
+                continue
+            dim = self.dims[key]
+            m = dim.matches(v)[dim.rows[lo:hi]]
+            mask = m if mask is None else mask & m
+        return slice(lo, hi) if mask is None else np.flatnonzero(mask) + lo
+
+    def day_bounds(self, first: int, end: int) -> tuple[int, int]:
+        lo, hi = np.searchsorted(self.day, [first, end], side="left")
+        return int(lo), int(hi)
 
 
-def _base(fact: DataFrame, from_date: dt.date, to: dt.date, filters=None) -> DataFrame:
-    validate_range(from_date, to)
-    return fact.filter(_range_pred(from_date, to)).filter(_filter_pred(filters or {}))
+class _Events(_DayColumns):
+    """The enriched events a points request reads, sorted by day and
+    then ``event_hash``; string payload columns dictionary-encoded."""
+
+    def __init__(self, tbl: pa.Table):
+        tbl = tbl.filter(pc.is_valid(tbl["event_day"])).sort_by(
+            [("event_day", "ascending"), ("event_hash", "ascending")]
+        )
+        self.day = _days(tbl["event_day"])
+        self.lon = np.asarray(tbl["lon"].to_numpy(), dtype=np.float64)
+        self.lat = np.asarray(tbl["lat"].to_numpy(), dtype=np.float64)
+        cols = tbl.column_names
+        self._encode_dims(tbl, lambda c: _event_column(c, cols))
+        payload = tbl.select(list(POINT_COLUMNS)).combine_chunks()
+        self.payload = pa.table(
+            {
+                c: pc.dictionary_encode(a)
+                if c != "event_hash"
+                and (pa.types.is_string(a.type) or pa.types.is_large_string(a.type))
+                else a
+                for c, a in zip(payload.column_names, payload.columns)
+            }
+        )
+
+
+def _event_column(col: str, columns: list[str]) -> str:
+    """A fact filter column's name on the enriched events table: the
+    column itself when the table has it, else its pre-mart name."""
+    return col if col in columns else _EVENTS_COL_FALLBACK.get(col, col)
+
+
+def event_columns(columns: list[str]) -> list[str]:
+    """The enriched-event columns a :class:`FactCube` keeps: the points
+    payload plus each filter's code and name column."""
+    wanted = [
+        _event_column(c, columns) for pair in TOP_GROUP_EXPR.values() for c in pair
+    ]
+    return list(dict.fromkeys([*POINT_COLUMNS, *(c for c in wanted if c in columns)]))
+
+
+class FactCube(_DayColumns):
+    """The serving context's columnar copy of `mv_focos_day_dim`
+    (``fact``: day, n_focos and the code/name columns of
+    TOP_GROUP_EXPR; a missing one reads null), the UF dim for zero
+    fill, and optionally the enriched events for /api/points
+    (``events``: :func:`event_columns`). Read-only once built, so any
+    number of request threads may share it."""
+
+    def __init__(
+        self, fact: pa.Table, all_ufs: list[str], events: pa.Table | None = None
+    ):
+        fact = fact.filter(pc.is_valid(fact["day"])).sort_by("day")
+        self.day = _days(fact["day"])
+        self.n = np.asarray(
+            pc.fill_null(fact["n_focos"], 0).to_numpy(), dtype=np.int64
+        )
+        self._encode_dims(fact, lambda c: c)
+        self.all_ufs = list(all_ufs)
+        self.events = _Events(events) if events is not None else None
+
+    def window(self, from_date: dt.date, to: dt.date, filters: dict | None = None):
+        """Rows of the validated range ``[from, to)`` under ``filters``."""
+        validate_range(from_date, to)
+        return self.select(*self.day_bounds(_ord(from_date), _ord(to)), filters)
+
+
+def _daily(cube: FactCube, sel) -> tuple[np.ndarray, np.ndarray]:
+    """(days with rows, their sums) for the selected fact rows."""
+    days, inv = np.unique(cube.day[sel], return_inverse=True)
+    return days, np.bincount(inv, weights=cube.n[sel], minlength=len(days))
+
+
+def _peak(days: np.ndarray, sums: np.ndarray) -> tuple[dt.date | None, int]:
+    """Largest daily sum, ties to the earliest day (days ascending)."""
+    if not len(days):
+        return None, 0
+    i = int(np.argmax(sums))
+    return _date(days[i]), int(sums[i])
+
+
+def _bucket(days: np.ndarray, gran: str) -> np.ndarray:
+    """date_trunc(gran, day) as days since the epoch."""
+    if gran == "day":
+        return days
+    if gran == "week":  # ISO week start; 1970-01-01 was a Thursday
+        return days - (days + 3) % 7
+    if gran == "month":
+        months = days.astype("datetime64[D]").astype("datetime64[M]")
+        return months.astype("datetime64[D]").astype(np.int64)
+    raise ValueError(f"granularity must be day|week|month, got {gran!r}")
 
 
 def timeseries_total(
-    fact: DataFrame,
+    cube: FactCube,
     from_date: dt.date,
     to: dt.date,
     filters: dict | None = None,
     granularity: str | None = None,
-) -> DataFrame:
-    """A9 (main.py:1448-1506): sum per adaptive time bucket."""
+) -> list[dict]:
+    """A9 (main.py:1448-1506): sum per adaptive time bucket, ordered
+    by bucket; buckets without rows are absent."""
     gran = granularity or timeseries_granularity((to - from_date).days)
-    base = _base(fact, from_date, to, filters)
-    bucket = (
-        F.col("day")
-        if gran == "day"
-        else F.to_date(F.date_trunc(gran, F.col("day")))
-    )
-    return (
-        base.groupBy(bucket.alias("bucket"))
-        .agg(F.sum("n_focos").alias("n_focos"))
-        .orderBy("bucket")
-    )
+    sel = cube.window(from_date, to, filters)
+    buckets, inv = np.unique(_bucket(cube.day[sel], gran), return_inverse=True)
+    sums = np.bincount(inv, weights=cube.n[sel], minlength=len(buckets))
+    return [
+        {"bucket": _date(b), "n_focos": int(s)} for b, s in zip(buckets, sums)
+    ]
 
 
 def top_groups(
-    fact: DataFrame,
+    cube: FactCube,
     group: str,
     from_date: dt.date,
     to: dt.date,
     filters: dict | None = None,
     k: int = 10,
-) -> DataFrame:
+) -> list[dict]:
     """A10 (main.py:1532-1579): top-k groups by total, key coalesce of
-    code/name, null/empty keys dropped, deterministic tie-break."""
-    code_col, name_col = TOP_GROUP_EXPR[group]
-    if group == "mun" and not (filters or {}).get("uf"):
+    code/name, null/empty keys dropped, ordered n desc then key asc."""
+    if group not in TOP_GROUP_EXPR:
+        raise ValueError(f"unknown group {group!r}")
+    if group == "mun" and not _norm((filters or {}).get("uf")):
         k = min(k, MUN_GUARDRAIL_LIMIT)  # main.py:1537-1539
-    key = F.coalesce(F.col(code_col).cast("string"), F.col(name_col))
-    label = F.coalesce(F.col(name_col), F.col(code_col).cast("string"))
-    base = _base(fact, from_date, to, filters)
-    return (
-        base.filter(key.isNotNull() & (key != ""))
-        .groupBy(key.alias("key"))
-        .agg(F.max(label).alias("label"), F.sum("n_focos").alias("n_focos"))
-        .orderBy(F.desc("n_focos"), F.asc("key"))
-        .limit(k)
-    )
+    sel = cube.window(from_date, to, filters)
+    rows = cube.dims[group].rollup(sel, cube.n, by="key")
+    # stable sort: equal totals keep the key-ascending rollup order
+    rows.sort(key=lambda r: -r[2])
+    return [
+        {"key": key, "label": label, "n_focos": n}
+        for key, label, n in rows[: max(k, 0)]
+    ]
 
 
 def totals(
-    fact: DataFrame, from_date: dt.date, to: dt.date, filters: dict | None = None
-) -> DataFrame:
+    cube: FactCube, from_date: dt.date, to: dt.date, filters: dict | None = None
+) -> int:
     """A11 totals (main.py:1615-1627)."""
-    return _base(fact, from_date, to, filters).agg(
-        F.coalesce(F.sum("n_focos"), F.lit(0)).alias("total")
-    )
+    return int(cube.n[cube.window(from_date, to, filters)].sum())
 
 
 def summary(
-    fact: DataFrame, from_date: dt.date, to: dt.date, filters: dict | None = None
+    cube: FactCube, from_date: dt.date, to: dt.date, filters: dict | None = None
 ) -> dict:
     """A11 summary (main.py:1656-1702): total, mean_per_day =
     total/greatest(1, days), peak day (ties -> earliest)."""
-    days = (to - from_date).days
-    daily = (
-        _base(fact, from_date, to, filters)
-        .groupBy("day")
-        .agg(F.sum("n_focos").alias("n"))
-    )
-    rows = daily.collect()
-    total = sum(r["n"] for r in rows)
-    peak = min(
-        (r for r in rows), key=lambda r: (-r["n"], r["day"]), default=None
-    )
+    days, sums = _daily(cube, cube.window(from_date, to, filters))
+    total = int(sums.sum())
+    peak_day, peak_n = _peak(days, sums)
     return {
-        "total": int(total),
+        "total": total,
         # full-precision quotient (total::double / greatest(1, days),
         # main.py:1684-1696); rounding is a presentation concern
-        "mean_per_day": total / max(1, days),
-        "peak_day": peak["day"] if peak else None,
-        "peak_n": int(peak["n"]) if peak else 0,
+        "mean_per_day": total / max(1, (to - from_date).days),
+        "peak_day": peak_day,
+        "peak_n": peak_n,
     }
 
 
+def uf_totals(
+    cube: FactCube, from_date: dt.date, to: dt.date, filters: dict | None = None
+) -> dict[str, int]:
+    """Sum per non-null UF over the range."""
+    sel = cube.window(from_date, to, filters)
+    return {uf: n for uf, _, n in cube.dims["uf"].rollup(sel, cube.n, by="code")}
+
+
 def choropleth_uf(
-    fact: DataFrame,
-    all_ufs: DataFrame,
+    cube: FactCube,
     from_date: dt.date,
     to: dt.date,
     filters: dict | None = None,
-) -> tuple[DataFrame, dict]:
-    """Choropleth by UF (main.py:930-1017): aggregate per UF with
-    zero-fill against the full UF dim (J7) + exact quantile legend
-    (A13). Returns (DataFrame, legend dict)."""
-    agg = (
-        _base(fact, from_date, to, filters)
-        .filter(F.col("uf").isNotNull())
-        .groupBy("uf")
-        .agg(F.sum("n_focos").alias("n_focos"))
-    )
-    dense = (
-        all_ufs.select("uf")
-        .join(agg, "uf", "left")
-        .withColumn("n_focos", F.coalesce(F.col("n_focos"), F.lit(0)))
-    )
-    values = [int(r["n_focos"]) for r in dense.collect()]
-    legend = compute_breaks(values, method="quantile", k=5, zero_class=True)
-    return dense, legend
+) -> tuple[list[dict], dict]:
+    """Choropleth by UF (main.py:930-1017): sum per UF zero-filled
+    against the full UF dim (J7), ordered by UF, + exact quantile
+    legend (A13)."""
+    agg = uf_totals(cube, from_date, to, filters)
+    dense = [{"uf": uf, "n_focos": agg.get(uf, 0)} for uf in cube.all_ufs]
+    dense.sort(key=lambda r: (r["uf"] is not None, r["uf"] or ""))
+    values = [r["n_focos"] for r in dense]
+    return dense, compute_breaks(values, method="quantile", k=5, zero_class=True)
 
 
-def choropleth_mun(
-    fact: DataFrame,
+def mun_totals(
+    cube: FactCube,
     from_date: dt.date,
     to: dt.date,
-    uf: str,
+    uf: str | None,
     filters: dict | None = None,
-) -> tuple[DataFrame, dict]:
-    """Choropleth by municipality (main.py:1020-1130): requires a UF
-    filter, range capped at 180 days."""
+) -> list[tuple[str, str | None, int]]:
+    """(cd_mun, max(mun_nm_mun), sum) per non-null municipality of the
+    UF, ordered by cd_mun; the municipal map's checks (uf required,
+    range capped at 180 days)."""
+    uf = _norm(uf)
     if not uf:
         raise ValueError("uf filter required for municipality choropleth")
     if (to - from_date).days > CHORO_MAX_DAYS_MUN:
         raise ValueError(f"range too large: max {CHORO_MAX_DAYS_MUN} days")
-    f = dict(filters or {})
-    f["uf"] = uf
-    agg = (
-        _base(fact, from_date, to, f)
-        .filter(F.col("cd_mun").isNotNull())
-        .groupBy("cd_mun")
-        .agg(F.max("mun_nm_mun").alias("mun_nm_mun"), F.sum("n_focos").alias("n_focos"))
-    )
-    values = [int(r["n_focos"]) for r in agg.collect()]
-    legend = compute_breaks(values, method="quantile", k=5, zero_class=True)
-    return agg, legend
+    sel = cube.window(from_date, to, {**(filters or {}), "uf": uf})
+    return cube.dims["mun"].rollup(sel, cube.n, by="code")
+
+
+def choropleth_mun(
+    cube: FactCube,
+    from_date: dt.date,
+    to: dt.date,
+    uf: str,
+    filters: dict | None = None,
+) -> tuple[list[dict], dict]:
+    """Choropleth by municipality (main.py:1020-1130): requires a UF
+    filter, range capped at 180 days; rows ordered by cd_mun."""
+    rows = [
+        {"cd_mun": key, "mun_nm_mun": label, "n_focos": n}
+        for key, label, n in mun_totals(cube, from_date, to, uf, filters)
+    ]
+    values = [r["n_focos"] for r in rows]
+    return rows, compute_breaks(values, method="quantile", k=5, zero_class=True)
 
 
 def points(
-    events: DataFrame,
+    cube: FactCube,
     day: dt.date,
     bbox: tuple[float, float, float, float] | None = None,
     limit: int = POINTS_LIMIT_DEFAULT,
     filters: dict | None = None,
     select_cols: list[str] | None = None,
-) -> tuple[DataFrame, bool]:
+) -> tuple[list[dict], bool]:
     """Per-day bbox point scan with limit+1 truncation detection
-    (main.py:1401-1445,498-526). ``filters`` applies the same
-    code-or-name entity predicates as the aggregate endpoints — the
-    reference's `_run_points_query` takes the active filters too
-    (main.py:498-526). ``select_cols`` widens the projection (the API
-    layer's point payload carries uf/mun/bioma labels,
-    schemas.PointItem). Returns (DataFrame, truncated)."""
+    (main.py:1401-1445,498-526): the day's events in ``event_hash``
+    order, under the same code-or-name entity filters as the
+    aggregate endpoints (the reference's `_run_points_query` takes the
+    active filters too) and the inclusive bbox; the first ``limit``
+    rows, and whether more matched. ``select_cols`` (a subset of
+    POINT_COLUMNS) widens the projection: the API layer's payload
+    carries uf/mun/bioma labels (schemas.PointItem)."""
+    ev = cube.events
+    if ev is None:
+        raise LookupError("enriched events table not loaded")
     limit = min(limit, POINTS_LIMIT_HARD_CAP)
-    df = events.filter(F.col("event_day") == F.lit(str(day)).cast("date"))
-    if filters:
-        df = df.filter(_filter_pred(filters, columns=events.columns))
+    sel = ev.select(*ev.day_bounds(_ord(day), _ord(day) + 1), filters)
+    idx = np.arange(sel.start, sel.stop) if isinstance(sel, slice) else sel
     if bbox is not None:
         min_lon, min_lat, max_lon, max_lat = bbox
-        df = df.filter(
-            F.col("lon").between(min_lon, max_lon)
-            & F.col("lat").between(min_lat, max_lat)
-        )
-    # Fetch once and slice (main.py:1428-1431): a second .limit() scan
-    # would re-execute nondeterministically and could disagree with the
-    # truncated flag computed from the first fetch.
+        lon, lat = ev.lon[idx], ev.lat[idx]
+        idx = idx[
+            (lon >= min_lon) & (lon <= max_lon) & (lat >= min_lat) & (lat <= max_lat)
+        ]
     cols = select_cols or ["event_hash", "lat", "lon", "event_day"]
-    probe = df.select(*cols).limit(limit + 1)
-    rows = probe.collect()
-    truncated = len(rows) > limit
-    out = local_df(events.sparkSession, rows[:limit], probe.schema)
-    return out, truncated
+    rows = ev.payload.select(cols).take(idx[:limit]).to_pylist()
+    return rows, len(idx) > limit
 
 
 POINTS_SMOKE_LIMIT = 200  # main.py:86
@@ -328,9 +544,17 @@ def _legend_breaks_monotonic(values: list[int]) -> bool:
     return all(breaks[i] > breaks[i - 1] for i in range(1, len(breaks)))
 
 
+def _group_values(dim: _Dim, sel, n: np.ndarray) -> list[int]:
+    """Per-code sums with the null-code group included, as GROUP BY
+    code yields them."""
+    values = [total for _, _, total in dim.rollup(sel, n, by="code")]
+    null = dim.null_total(sel, n)
+    return values + ([null] if null is not None else [])
+
+
 def _points_smoke(
-    events: DataFrame,
-    base: DataFrame,
+    cube: FactCube,
+    sel,
     from_date: dt.date,
     to: dt.date,
     smoke_bbox: tuple[float, float, float, float],
@@ -342,37 +566,28 @@ def _points_smoke(
     filters, as the reference's _points_smoke_validate passes them to
     _run_points_query (ADVICE r3 #3) — and check the returned count
     respects the limit."""
-    peak = (
-        base.groupBy("day")
-        .agg(F.sum("n_focos").alias("n"))
-        .orderBy(F.desc("n"), F.asc("day"))
-        .limit(1)
-        .collect()
-    )
-    test_day = peak[0]["day"] if peak else None
+    test_day, _ = _peak(*_daily(cube, sel))
     if test_day is None:
         test_day = max(from_date, to - dt.timedelta(days=1))
     try:
-        df, _truncated = points(
-            events,
+        rows, _truncated = points(
+            cube,
             test_day,
             bbox=smoke_bbox,
             limit=max(1, POINTS_SMOKE_LIMIT),
             filters=filters,
         )
-        returned = df.count()
-        return True, returned <= POINTS_SMOKE_LIMIT, test_day, int(returned)
+        returned = len(rows)
+        return True, returned <= POINTS_SMOKE_LIMIT, test_day, returned
     except Exception:
         return False, False, test_day, 0
 
 
 def validate_consistency(
-    fact: DataFrame,
-    all_ufs: DataFrame,
+    cube: FactCube,
     from_date: dt.date,
     to: dt.date,
     filters: dict | None = None,
-    events: DataFrame | None = None,
     feats: list | None = None,
     smoke_bbox: tuple[float, float, float, float] = POINTS_SMOKE_BBOX,
 ) -> dict:
@@ -380,35 +595,25 @@ def validate_consistency(
     sum(timeseries) == sum(choropleth); legend break monotonicity over
     uf (and mun, under a uf filter) group sums; bounds-vs-geo bbox
     ratio <= 50 when a uc/ti filter keys a geometry (`feats`); points
-    smoke over a fixed bbox when `events` is given."""
+    smoke over a fixed bbox when the cube holds the events."""
     filters = filters or {}
-    base = _base(fact, from_date, to, filters)
-    total = totals(fact, from_date, to, filters).collect()[0]["total"]
-    ts_sum = (
-        timeseries_total(fact, from_date, to, filters)
-        .agg(F.coalesce(F.sum("n_focos"), F.lit(0)).alias("s"))
-        .collect()[0]["s"]
-    )
+    sel = cube.window(from_date, to, filters)
+    total = totals(cube, from_date, to, filters)
+    ts_sum = sum(r["n_focos"] for r in timeseries_total(cube, from_date, to, filters))
     # choropleth component: group by uf INCLUDING the null-uf group,
     # exactly as the reference's ufagg CTE (main.py:1752-1760) — so
     # unattributed rows cannot break totals == sum(choropleth)
-    uf_rows = base.groupBy("uf").agg(F.sum("n_focos").alias("n")).collect()
-    choro_sum = sum(int(r["n"] or 0) for r in uf_rows)
-    _, legend = choropleth_uf(fact, all_ufs, from_date, to, filters)
+    uf_values = _group_values(cube.dims["uf"], sel, cube.n)
+    choro_sum = sum(uf_values)
+    _, legend = choropleth_uf(cube, from_date, to, filters)
     breaks = legend["breaks"]
     legend_ok = all(breaks[i] > breaks[i - 1] for i in range(1, len(breaks)))
 
     # Break monotonicity over the raw group sums (main.py:1782-1799):
     # uf values always; mun values too when a uf filter is active.
-    uf_values = [int(r["n"] or 0) for r in uf_rows]
     break_ok = _legend_breaks_monotonic(uf_values) if uf_values else True
     if _norm(filters.get("uf")):
-        mun_values = [
-            int(r["n"] or 0)
-            for r in base.groupBy("cd_mun")
-            .agg(F.sum("n_focos").alias("n"))
-            .collect()
-        ]
+        mun_values = _group_values(cube.dims["mun"], sel, cube.n)
         if mun_values:
             break_ok = break_ok and _legend_breaks_monotonic(mun_values)
 
@@ -438,10 +643,10 @@ def validate_consistency(
             bounds_consistent = False
 
     out = {
-        "totals": int(total),
-        "timeseries_sum": int(ts_sum),
-        "choropleth_sum": int(choro_sum),
-        "consistent": int(total) == int(ts_sum) == int(choro_sum),
+        "totals": total,
+        "timeseries_sum": ts_sum,
+        "choropleth_sum": choro_sum,
+        "consistent": total == ts_sum == choro_sum,
         "legend_monotonic": legend_ok,
         "invalid_filter_state": bool(
             _norm(filters.get("mun")) and not _norm(filters.get("uf"))
@@ -450,9 +655,9 @@ def validate_consistency(
         "bounds_vs_geo_bbox_ratio": bbox_ratio,
         "bounds_consistent": bounds_consistent,
     }
-    if events is not None:
+    if cube.events is not None:
         ok, le_limit, day_used, returned = _points_smoke(
-            events, base, from_date, to, smoke_bbox, filters=filters
+            cube, sel, from_date, to, smoke_bbox, filters=filters
         )
         out.update(
             {

@@ -178,7 +178,7 @@ def test_hostile_and_edge_params(base_url):
     assert status == status2 == 200 and p1 == p2
 
 
-def test_error_mapping(base_url):
+def test_error_mapping(spark, base_url):
     """Reference validation semantics: bad range/bbox -> 422 (pydantic
     422 analog), unknown keys/endpoints -> 404."""
     status, _ = _get(base_url, "/api/totals?from=2024-05-05&to=2024-05-01")
@@ -213,6 +213,29 @@ def test_error_mapping(base_url):
     # mun filter without uf -> invalid filter state (422 at validation)
     status, _ = _get(base_url, f"/api/totals?from={FROM}&to={TO}&mun=m100")
     assert status == 422
+    # a blank filter value is no filter, for the checks as for the
+    # query: the municipal map still needs a uf, the municipality
+    # guardrail still caps, and a mun filter still needs a uf
+    rng = f"from={FROM}&to={TO}"
+    status, _ = _get(base_url, f"/api/choropleth/mun?{rng}&uf=%20")
+    assert status == 422
+    status, body = _get(base_url, f"/api/top?group=mun&uf=%20&limit=50&{rng}")
+    assert status == 200 and len(body["items"]) <= 10
+    status, _ = _get(base_url, f"/api/totals?{rng}&mun=m100&uf=%20")
+    assert status == 422
+    # the fixture has fewer than ten municipalities with fires; on
+    # twelve, the blank uf must still cap the list at ten
+    wide = ApiContext(
+        spark=spark,
+        fact=spark.createDataFrame(
+            [(dt.date(2024, 5, 2), "AA", f"m{i:02d}", f"Mun {i}", 1) for i in range(12)],
+            "day date, uf string, cd_mun string, mun_nm_mun string, n_focos long",
+        ),
+        all_ufs=spark.createDataFrame([("AA",)], "uf string"),
+    )
+    params = {"from": FROM, "to": TO, "group": "mun", "uf": " ", "limit": "50"}
+    status, body = handle_request(wide, "/api/top", params)
+    assert status == 200 and len(body["items"]) == 10
 
 
 def test_choropleth_geojson_variants(spark, ctx):
@@ -266,7 +289,8 @@ def test_choropleth_geojson_variants(spark, ctx):
 
 def test_caching_second_hit_serves_from_cache(ctx):
     """The serving cache fronts cacheable endpoints exactly like the
-    reference's TTLCache (same URL key -> no second Spark job)."""
+    reference's TTLCache (same URL key -> the second call reads the
+    stored response, no second computation)."""
     # a range no other test uses, so the first call is a genuine miss
     params = {"from": "2024-04-20", "to": "2024-05-04"}
     before_hits = ctx.cache.general.hits
@@ -278,10 +302,110 @@ def test_caching_second_hit_serves_from_cache(ctx):
     assert ctx.cache.general.misses == before_miss + 1
 
 
+# one request per dashboard route (the benchmark's route cycle) plus
+# the consistency check, on the fixture's range and keys
+DASHBOARD_REQUESTS = [
+    ("/api/summary", {"from": FROM, "to": TO}),
+    ("/api/timeseries/total", {"from": FROM, "to": TO}),
+    ("/api/top", {"from": FROM, "to": TO, "group": "mun", "uf": "AA"}),
+    ("/api/totals", {"from": FROM, "to": TO, "bioma": "cerrado"}),
+    ("/api/choropleth/uf", {"from": FROM, "to": TO}),
+    ("/api/choropleth/mun", {"from": FROM, "to": TO, "uf": "AA"}),
+    ("/api/points", {"date": "2024-05-02", "bbox": "0,0,4,3", "limit": "5"}),
+    ("/api/geo", {"from": FROM, "to": TO, "entity": "uc", "key": "U1"}),
+    ("/api/validate", {"from": FROM, "to": TO, "uc": "U1"}),
+]
+
+
+def test_warm_context_answers_without_spark_jobs(spark, ctx):
+    """Once a context is built, every dashboard route answers from its
+    cube: no request starts a Spark job."""
+    import dataclasses
+
+    from inpe_queimadas_etl_spark.serving_cache import ServingCache
+
+    warm = dataclasses.replace(ctx, cache=ServingCache())  # every call a miss
+    sc = spark.sparkContext
+    group = "test-warm-context-requests"
+    sc.setJobGroup(group, "dashboard requests on a warm context")
+    try:
+        answers = [handle_request(warm, path, p) for path, p in DASHBOARD_REQUESTS]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [status for status, _ in answers] == [200] * len(DASHBOARD_REQUESTS), answers
+    assert answers[6][1]["returned"] > 0 and answers[8][1]["ok"]
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_context_serves_across_publish(spark, tmp_path):
+    """A context keeps answering, with its own snapshot, after a later
+    publish rewrites the tables it was built from; a new context sees
+    the published day."""
+    from inpe_queimadas_etl_spark.pipeline import Warehouse, run_day
+    from inpe_queimadas_etl_spark.schemas import UF_AREA
+    from inpe_queimadas_etl_spark.serving_cache import ServingCache
+
+    dims = {
+        "municipios": G.municipios(),
+        "biomas": G.biomas(),
+        "ucs": G.ucs(),
+        "tis": G.tis(),
+        "uf_area": spark.createDataFrame(G.uf_area_rows(), UF_AREA),
+    }
+    wh = Warehouse(str(tmp_path / "warehouse"))
+    csv1 = str(tmp_path / "focos_20240502.csv")
+    write_fixture_csv(csv1, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    run_day(spark, wh, csv1, FILE_DATE, dims)
+
+    def context():
+        return ApiContext(
+            spark=spark,
+            fact=wh.read(spark, "mv_focos_day_dim"),
+            all_ufs=dims["uf_area"].select("uf"),
+            enriched=wh.read(spark, "enriched_focos"),
+            feats={"uc": G.ucs(), "ti": G.tis()},
+        )
+
+    requests = [
+        ("/api/summary", {"from": FROM, "to": TO}),
+        ("/api/top", {"from": FROM, "to": TO, "group": "uf"}),
+        ("/api/choropleth/uf", {"from": FROM, "to": TO}),
+        ("/api/choropleth/mun", {"from": FROM, "to": TO, "uf": "AA"}),
+        ("/api/points", {"date": "2024-05-02", "bbox": "-1,-2,4,4"}),
+    ]
+    old = context()
+    before = [handle_request(old, path, p) for path, p in requests]
+    assert [status for status, _ in before] == [200] * len(requests), before
+
+    # the next day, with a spillover row dated on the served day, so the
+    # publish rewrites that day's partitions as well as adding its own
+    csv2 = str(tmp_path / "focos_20240503.csv")
+    write_fixture_csv(
+        csv2,
+        G.FOCOS_HEADER,
+        [
+            ["0.5", "0.5", "2024-05-03 10:00:00", "AQUA_M-T", "Mun m100", "AA", "Amazonia", "1.1"],
+            ["1.5", "1.5", "2024-05-02 23:30:00", "NOAA-20", "Mun m201", "BB", "Amazonia", ""],
+        ],
+        sep=";",
+    )
+    assert run_day(spark, wh, csv2, dt.date(2024, 5, 3), dims)["rows_new"] == 2
+
+    old.cache = ServingCache()  # every request below is a miss
+    assert [handle_request(old, path, p) for path, p in requests] == before
+
+    new = context()
+    status, summary = handle_request(new, *requests[0])
+    assert status == 200
+    assert summary["total_n_focos"] == before[0][1]["total_n_focos"] + 2
+    status, points = handle_request(new, "/api/points", {"date": "2024-05-03"})
+    assert status == 200 and points["returned"] == 1
+
+
 def test_server_bounds_concurrent_handler_threads(monkeypatch):
     """VERDICT r4 #8: handler threads come from a fixed pool — a slow
-    (Spark-bound) endpoint queues further requests instead of piling
-    up a thread per connection."""
+    endpoint queues further requests instead of piling up a thread per
+    connection."""
     import json as _json
     import urllib.request
 

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from inpe_queimadas_etl_spark import marts, queries
+from inpe_queimadas_etl_spark.api import fact_cube
 from inpe_queimadas_etl_spark.enrich import enrich
 from inpe_queimadas_etl_spark.schemas import UF_AREA
 from inpe_queimadas_etl_spark.sources.csv_ingest import (
@@ -35,8 +36,25 @@ def uf_area(spark):
 
 
 @pytest.fixture(scope="module")
-def fact(enriched):
+def fact_df(enriched):
     return marts.mv_focos_day_dim(enriched).cache()
+
+
+@pytest.fixture(scope="module")
+def all_ufs(spark):
+    return spark.createDataFrame([(u,) for u in G.UFS], "uf string")
+
+
+@pytest.fixture(scope="module")
+def fact(fact_df, all_ufs):
+    """The serving cube over the fact table alone."""
+    return fact_cube(fact_df, all_ufs)
+
+
+@pytest.fixture(scope="module")
+def cube(fact_df, all_ufs, enriched):
+    """The serving cube with the enriched events (points)."""
+    return fact_cube(fact_df, all_ufs, enriched)
 
 
 def test_daily_municipio_counts_and_density(enriched):
@@ -149,7 +167,7 @@ def test_parse_bbox_reference_validation():
 def test_timeseries_total(fact):
     ts = queries.timeseries_total(
         fact, dt.date(2024, 5, 1), dt.date(2024, 5, 5)
-    ).collect()
+    )
     by_day = {str(r["bucket"]): r["n_focos"] for r in ts}
     assert by_day == {"2024-05-01": 1, "2024-05-02": 12}
 
@@ -157,24 +175,24 @@ def test_timeseries_total(fact):
 def test_filters_code_or_name(fact):
     ts = queries.timeseries_total(
         fact, dt.date(2024, 5, 1), dt.date(2024, 5, 5), filters={"uf": " aa "}
-    ).collect()
+    )
     assert sum(r["n_focos"] for r in ts) == 7
     ts2 = queries.timeseries_total(
         fact, dt.date(2024, 5, 1), dt.date(2024, 5, 5), filters={"bioma": "CERRADO"}
-    ).collect()
+    )
     assert sum(r["n_focos"] for r in ts2) == 5
 
 
 def test_top_groups_and_guardrail(fact):
     top = queries.top_groups(
         fact, "uf", dt.date(2024, 5, 1), dt.date(2024, 5, 5), k=2
-    ).collect()
+    )
     assert [r["key"] for r in top] == ["AA", "BB"]
     assert top[0]["n_focos"] == 7
     # mun without uf filter -> k capped at 10
     top_mun = queries.top_groups(
         fact, "mun", dt.date(2024, 5, 1), dt.date(2024, 5, 5), k=50
-    ).collect()
+    )
     assert len(top_mun) <= 10
 
 
@@ -185,33 +203,32 @@ def test_summary_peak(fact):
     assert s["mean_per_day"] == round(13 / 4, 2)
 
 
-def test_choropleth_zero_fill_and_legend(spark, fact):
-    all_ufs = spark.createDataFrame([(u,) for u in G.UFS], "uf string")
+def test_choropleth_zero_fill_and_legend(fact):
     dense, legend = queries.choropleth_uf(
-        fact, all_ufs, dt.date(2024, 5, 1), dt.date(2024, 5, 5)
+        fact, dt.date(2024, 5, 1), dt.date(2024, 5, 5)
     )
-    rows = {r["uf"]: r["n_focos"] for r in dense.collect()}
+    rows = {r["uf"]: r["n_focos"] for r in dense}
     assert set(rows) == set(G.UFS)  # every UF present (J7)
     assert rows == {"AA": 7, "BB": 3, "CC": 2}
     assert legend["breaks"] == sorted(legend["breaks"])
 
 
-def test_points_bbox_and_truncation(enriched):
+def test_points_bbox_and_truncation(cube):
     df, truncated = queries.points(
-        enriched, dt.date(2024, 5, 2), bbox=(0.0, 0.0, 1.0, 1.0), limit=2
+        cube, dt.date(2024, 5, 2), bbox=(0.0, 0.0, 1.0, 1.0), limit=2
     )
     assert truncated  # 3 points in [0,1]x[0,1] on 05-02 > limit 2
-    assert df.count() == 2
-    df2, trunc2 = queries.points(enriched, dt.date(2024, 5, 1))
-    assert not trunc2 and df2.count() == 1
+    assert len(df) == 2
+    df2, trunc2 = queries.points(cube, dt.date(2024, 5, 1))
+    assert not trunc2 and len(df2) == 1
 
 
-def test_points_applies_entity_filters(enriched):
+def test_points_applies_entity_filters(cube, enriched):
     """points() takes the active filters like the reference's
     _run_points_query (ADVICE r3 #3): a uf filter must shrink the scan
     to that UF's rows, and the smoke path exercises the FILTERED scan."""
-    all_df, _ = queries.points(enriched, dt.date(2024, 5, 2))
-    n_all = all_df.count()
+    all_df, _ = queries.points(cube, dt.date(2024, 5, 2))
+    n_all = len(all_df)
     ufs = [
         r["mun_uf"]
         for r in enriched.select("mun_uf").distinct().collect()
@@ -221,18 +238,17 @@ def test_points_applies_entity_filters(enriched):
     per_uf = 0
     for uf in ufs:
         df_uf, _ = queries.points(
-            enriched, dt.date(2024, 5, 2), filters={"uf": uf}
+            cube, dt.date(2024, 5, 2), filters={"uf": uf}
         )
-        c = df_uf.count()
+        c = len(df_uf)
         assert c <= n_all
         per_uf += c
     assert per_uf <= n_all  # filters partition (minus null-uf rows)
 
 
-def test_validate_consistency(spark, fact):
-    all_ufs = spark.createDataFrame([(u,) for u in G.UFS], "uf string")
+def test_validate_consistency(fact):
     res = queries.validate_consistency(
-        fact, all_ufs, dt.date(2024, 5, 1), dt.date(2024, 5, 5)
+        fact, dt.date(2024, 5, 1), dt.date(2024, 5, 5)
     )
     assert res["consistent"], res
     assert res["legend_monotonic"], res
@@ -244,18 +260,15 @@ def test_validate_consistency(spark, fact):
     assert "points_endpoint_ok" not in res
 
 
-def test_validate_bounds_vs_geo_and_points_smoke(spark, fact, enriched):
+def test_validate_bounds_vs_geo_and_points_smoke(cube):
     """main.py:1801-1845: uc-filtered validate computes the bounds-vs-geo
     bbox ratio (same geometry pipeline both sides -> ratio 1, <= 50) and
     the points smoke runs over the fixture bbox."""
-    all_ufs = spark.createDataFrame([(u,) for u in G.UFS], "uf string")
     res = queries.validate_consistency(
-        fact,
-        all_ufs,
+        cube,
         dt.date(2024, 5, 1),
         dt.date(2024, 5, 5),
         filters={"uc": "U1"},
-        events=enriched,
         feats=G.ucs(),
         smoke_bbox=(0.0, 0.0, 4.0, 3.0),
     )
@@ -267,13 +280,11 @@ def test_validate_bounds_vs_geo_and_points_smoke(spark, fact, enriched):
     assert res["points_date_used"] is not None
 
 
-def test_validate_missing_geometry_marks_inconsistent(spark, fact):
+def test_validate_missing_geometry_marks_inconsistent(fact):
     """A uc filter whose key has no geometry -> bounds_consistent False
     (reference catches the 404 path, main.py:1829-1831)."""
-    all_ufs = spark.createDataFrame([(u,) for u in G.UFS], "uf string")
     res = queries.validate_consistency(
         fact,
-        all_ufs,
         dt.date(2024, 5, 1),
         dt.date(2024, 5, 5),
         filters={"uc": "NOPE"},
@@ -283,16 +294,15 @@ def test_validate_missing_geometry_marks_inconsistent(spark, fact):
     assert res["bounds_vs_geo_bbox_ratio"] is None
 
 
-def test_validate_invalid_filter_state(spark, fact):
-    all_ufs = spark.createDataFrame([(u,) for u in G.UFS], "uf string")
+def test_validate_invalid_filter_state(fact):
     res = queries.validate_consistency(
-        fact, all_ufs, dt.date(2024, 5, 1), dt.date(2024, 5, 5),
+        fact, dt.date(2024, 5, 1), dt.date(2024, 5, 5),
         filters={"mun": "m100"},
     )
     assert res["invalid_filter_state"] is True
 
 
-def test_fact_cube_totals_match_enriched(fact, enriched):
+def test_fact_cube_totals_match_enriched(fact_df, enriched):
     assert (
-        fact.agg(F.sum("n_focos")).collect()[0][0] == enriched.count()
+        fact_df.agg(F.sum("n_focos")).collect()[0][0] == enriched.count()
     )

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from inpe_queimadas_etl_spark import checks, geoprep, geoqueries
+from inpe_queimadas_etl_spark.queries import FactCube
 from inpe_queimadas_etl_spark.operators.geometry import ring_signed_area_deg2
 
 from . import fixtures_geo as G
@@ -59,6 +60,12 @@ def fact(spark):
 
 
 @pytest.fixture(scope="module")
+def cube(fact):
+    """The serving cube over the fact slice (no UF dim, no events)."""
+    return FactCube(fact.toArrow(), [])
+
+
+@pytest.fixture(scope="module")
 def daily_uf(fact):
     return fact.groupBy("day", "uf").agg(F.sum("n_focos").alias("n_focos"))
 
@@ -66,6 +73,15 @@ def daily_uf(fact):
 @pytest.fixture(scope="module")
 def chart_uf(daily_uf, polycoords_df):
     return geoprep.v_chart_uf_choropleth_day(daily_uf, polycoords_df).cache()
+
+
+@pytest.fixture(scope="module")
+def uf_geometry(chart_uf):
+    """uf -> latest poly_coords, as the serving context collects it."""
+    return {
+        r["uf"]: r["poly_coords"]
+        for r in geoprep.latest_uf_geometry(chart_uf).collect()
+    }
 
 
 class TestGeoPrep:
@@ -127,8 +143,8 @@ class TestBoundsLookup:
         with pytest.raises(LookupError):
             geoqueries.bounds(mun_feats, "m201", uf="AA")
 
-    def test_lookup_mun(self, mun_web, fact):
-        out = geoqueries.lookup_mun(mun_web, fact, "m100")
+    def test_lookup_mun(self, mun_web, cube):
+        out = geoqueries.lookup_mun(mun_web, cube, "m100")
         assert out == {
             "mun": "m100",
             "mun_nome": "Mun m100",
@@ -136,14 +152,14 @@ class TestBoundsLookup:
             "uf_nome": "AA",
         }
 
-    def test_lookup_mun_no_fact_rows_falls_back_to_key(self, mun_web, fact):
-        out = geoqueries.lookup_mun(mun_web, fact, "m301")
+    def test_lookup_mun_no_fact_rows_falls_back_to_key(self, mun_web, cube):
+        out = geoqueries.lookup_mun(mun_web, cube, "m301")
         assert out["mun_nome"] == "m301"
         assert out["uf"] == "CC"
 
-    def test_lookup_mun_missing(self, mun_web, fact):
+    def test_lookup_mun_missing(self, mun_web, cube):
         with pytest.raises(LookupError):
-            geoqueries.lookup_mun(mun_web, fact, "nope")
+            geoqueries.lookup_mun(mun_web, cube, "nope")
 
 
 class TestGeoOverlay:
@@ -167,9 +183,9 @@ class TestGeoOverlay:
         assert q["bbox"] == [0.0, 0.0, 4.0, 1.0]
         assert q["bbox_ratio"] == pytest.approx(1.0, rel=1e-6)
 
-    def test_geo_overlay_totals_and_label(self, mun_feats, fact):
+    def test_geo_overlay_totals_and_label(self, mun_feats, cube):
         out = geoqueries.geo_overlay(
-            "mun", "m100", mun_feats, fact, D1, dt.date(2024, 5, 3)
+            "mun", "m100", mun_feats, cube, D1, dt.date(2024, 5, 3)
         )
         feat = out["geojson"]["features"][0]
         assert feat["properties"]["n_focos"] == 8  # 3 + 5
@@ -185,11 +201,11 @@ class TestGeoOverlay:
 
 
 class TestChoroplethGeo:
-    def test_uf_choropleth_geo(self, fact, chart_uf):
+    def test_uf_choropleth_geo(self, cube, uf_geometry):
         dense, resp = geoqueries.choropleth_uf_geo(
-            fact, chart_uf, D1, dt.date(2024, 5, 3)
+            cube, uf_geometry, D1, dt.date(2024, 5, 3)
         )
-        rows = {r["uf"]: r for r in dense.collect()}
+        rows = {r["uf"]: r for r in dense}
         assert sorted(rows) == ["AA", "BB", "CC"]
         assert rows["AA"]["n_focos"] == 10
         assert rows["AA"]["mean_per_day"] == pytest.approx(5.0)
@@ -198,17 +214,17 @@ class TestChoroplethGeo:
         assert all(f["geometry"]["type"] == "Polygon" for f in feats)
         assert "breaks" in resp
 
-    def test_uf_choropleth_geo_with_filter(self, fact, chart_uf):
+    def test_uf_choropleth_geo_with_filter(self, cube, uf_geometry):
         dense, _ = geoqueries.choropleth_uf_geo(
-            fact, chart_uf, D1, dt.date(2024, 5, 3), filters={"uf": "BB"}
+            cube, uf_geometry, D1, dt.date(2024, 5, 3), filters={"uf": "BB"}
         )
-        rows = {r["uf"]: r["n_focos"] for r in dense.collect()}
+        rows = {r["uf"]: r["n_focos"] for r in dense}
         assert rows == {"AA": 0, "BB": 3, "CC": 0}  # zero-filled others
 
-    def test_mun_choropleth_geo(self, fact, mun_feats):
+    def test_mun_choropleth_geo(self, cube, mun_feats):
         web = geoprep.municipios_web(mun_feats)
         resp = geoqueries.choropleth_mun_geo(
-            fact, web, D1, dt.date(2024, 5, 3), uf="AA"
+            cube, web, D1, dt.date(2024, 5, 3), uf="AA"
         )
         feats = resp["geojson"]["features"]
         assert len(feats) == 4  # all AA municipalities, zero-filled
@@ -217,10 +233,10 @@ class TestChoroplethGeo:
         assert feats[-1]["properties"]["n_focos"] == 0
         assert "note" in resp
 
-    def test_mun_choropleth_requires_uf(self, fact, mun_feats):
+    def test_mun_choropleth_requires_uf(self, cube, mun_feats):
         with pytest.raises(ValueError):
             geoqueries.choropleth_mun_geo(
-                fact, mun_feats, D1, dt.date(2024, 5, 3), uf="  "
+                cube, mun_feats, D1, dt.date(2024, 5, 3), uf="  "
             )
 
 

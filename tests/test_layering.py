@@ -2,6 +2,8 @@
 enrich, publish and serve the INPE data must not import the vector
 search kernels, the LLM-corpus operator suite (``suite``, the BPE
 tokenizer, the quality classifier) or the incremental dedup index.
+The dashboard query layer (``queries``) answers from the serving
+context's in-memory cube, so it must not import Spark at all.
 Spark-free: the check reads each module's source."""
 
 from __future__ import annotations
@@ -77,3 +79,10 @@ def test_fire_path_does_not_import_vector_search_modules():
     }
     offenders = {m: names for m, names in offenders.items() if names}
     assert not offenders, offenders
+
+
+def test_query_layer_does_not_import_spark():
+    names = _imported_modules("queries")
+    # the scan must see the module's imports, or the guard is vacuous
+    assert "numpy" in names and "pyarrow" in names
+    assert not sorted(n for n in names if n.split(".")[0] == "pyspark")
