@@ -25,22 +25,12 @@ from pathlib import Path
 
 log = logging.getLogger("inpe_queimadas_etl_spark")
 
+# feature-loader arguments of the biome/UC/TI dims; the municipality
+# dim's come from sources.shapefile.MUNICIPIO_FIELDS
 _DIM_SPECS = {
-    # table -> (id candidates, prop_fields, prop_aliases) for the
-    # feature loaders. Candidates carry the IBGE vintage fallbacks the
-    # typed municipality dim builders already accept
-    # (ensure_ref_ibge.py renames across vintages: cd_mun|cd_geocmu|
-    # geocodigo, nm_mun|nm_municip, sigla_uf|uf), so an alternate-
-    # vintage dim file loads identically through both paths
-    # (ADVICE r3 #2).
-    "municipios": (
-        ("cd_mun", "cd_geocmu", "geocodigo"),
-        ("nm_mun", "uf", "area_km2"),
-        {"nm_mun": ("nm_mun", "nm_municip"), "uf": ("sigla_uf", "uf")},
-    ),
-    "biomas": (("cd_bioma",), ("bioma",), {}),
-    "ucs": (("cd_cnuc",), ("nome_uc",), {}),
-    "tis": (("terrai_cod",), ("terrai_nom",), {}),
+    "biomas": {"id_field": "cd_bioma", "prop_fields": ("bioma",)},
+    "ucs": {"id_field": "cd_cnuc", "prop_fields": ("nome_uc",)},
+    "tis": {"id_field": "terrai_cod", "prop_fields": ("terrai_nom",)},
 }
 
 
@@ -67,46 +57,27 @@ def load_dims(spark, dims_dir: str) -> dict:
     (<name>.geojson) — the two ogr2ogr-style formats the reference's
     dim loader accepts — and formats can mix within one directory."""
     from .marts import ref_uf_area
-    from .sources.geojson_source import (
-        features_from_geojson,
-        municipios_dim_from_geojson,
-    )
+    from .sources.geojson_source import features_from_geojson
     from .sources.shapefile import (
+        MUNICIPIO_FIELDS,
         features_from_shapefile,
-        municipios_dim_from_shapefile,
+        municipios_dim,
     )
 
     d = Path(dims_dir)
     dims: dict = {}
-    fmt: dict[str, str] = {}
-    for name, (id_field, props, aliases) in _DIM_SPECS.items():
+    for name, spec in {"municipios": MUNICIPIO_FIELDS, **_DIM_SPECS}.items():
         shp = d / f"{name}.shp"
         gj = d / f"{name}.geojson"
         if shp.exists():
-            fmt[name] = "shp"
-            dims[name] = features_from_shapefile(
-                str(shp),
-                id_field=id_field,
-                prop_fields=props,
-                prop_aliases=aliases,
-            )
+            dims[name] = features_from_shapefile(str(shp), **spec)
         elif gj.exists():
-            fmt[name] = "geojson"
-            dims[name] = features_from_geojson(
-                str(gj),
-                id_field=id_field,
-                prop_fields=props,
-                prop_aliases=aliases,
-            )
+            dims[name] = features_from_geojson(str(gj), **spec)
         else:
             raise FileNotFoundError(
                 f"missing dim: {shp} (or {gj.name}) in {dims_dir}"
             )
-    if fmt["municipios"] == "shp":
-        mun_dim = municipios_dim_from_shapefile(spark, str(d / "municipios.shp"))
-    else:
-        mun_dim = municipios_dim_from_geojson(spark, str(d / "municipios.geojson"))
-    dims["uf_area"] = ref_uf_area(mun_dim)
+    dims["uf_area"] = ref_uf_area(municipios_dim(spark, dims["municipios"]))
     return dims
 
 

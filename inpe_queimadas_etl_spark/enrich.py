@@ -8,102 +8,154 @@ with dynamic partition overwrite — same outcome (first-match
 attribution, stable under re-runs, checked flags all true after a
 pass), no mutable state (SURVEY.md §7.1).
 
-Attribution semantics preserved:
+The whole enrichment is one mapInPandas. The four polygon dims are
+indexed once on the driver (:func:`enrich_dims`) and ship in the task
+closure; :func:`enrich_batch` attributes every dimension of a batch in
+one traversal, with the kernels of operators.geo, and takes names, uf
+and area from per-id dicts instead of joins:
+
 - municipality: point-in-polygon first (st_intersects,
-  20_enrich_municipio.sql:43-54), then nearest-within-2km fallback
-  (20:56-74);
+  20_enrich_municipio.sql:43-54), then nearest-within-2km over the
+  batch's misses only (20:56-74);
 - biome/UC/TI: first-match by dimension id — the reference's
   `distinct on (event_hash) ... order by event_hash, b.id`
-  (21_enrich_biomas_ucs_tis.sql:22-119) — which is exactly the
-  lowest-id-wins rule of operators.geo.point_in_polygon_join.
+  (21_enrich_biomas_ucs_tis.sql:22-119) — i.e. lowest id wins;
+- names and uf come from the first feature per id, the municipality
+  area from operators.geometry.area_km2_by_id (the typed dim's rule).
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .functions.core import event_day
-from .session import local_df
-from .operators.geo import PolyFeature, knn_nearest_within, point_in_polygon_join
+from .operators.geo import (
+    PolyFeature,
+    PolyGridIndex,
+    _rebalance_for_compute,
+    first_match,
+    knn_index,
+    nearest_within,
+)
+from .operators.geometry import area_km2_by_id
+from .schemas import CURATED_FOCOS, ENRICHED_FOCOS
+
+# the benchmark's traced run wraps these two names in this module
+from .operators.geo import knn_nearest_within, point_in_polygon_join  # noqa: F401
+
+# nearest-municipality fallback radius (20_enrich_municipio.sql:56-74)
+KNN_RADIUS_M = 2000.0
+
+# enriched_focos column layout: these ids, then the curated columns and
+# event_day, then the attributes in schemas.ENRICHED_FOCOS order
+_ID_COLUMNS = ["terrai_cod", "cd_cnuc", "cd_bioma", "mun_cd_mun"]
+_ATTR_FIELDS = [
+    f
+    for f in ENRICHED_FOCOS.fields
+    if f.name not in CURATED_FOCOS.names + ["event_day"] + _ID_COLUMNS
+]
 
 
-def _dim_lookup(spark, feats: list[PolyFeature], id_name: str, attr_map: dict[str, str]):
-    """Small broadcastable DataFrame of polygon attributes."""
-    rows = []
-    seen = set()
+@dataclass(frozen=True)
+class DimLayer:
+    """One polygon dim: its grid index and, per id, the output
+    attribute values of its first feature."""
+
+    index: PolyGridIndex
+    attrs: dict[str, tuple]
+
+
+@dataclass(frozen=True)
+class EnrichDims:
+    """The four dims as one batch needs them; built once per pass."""
+
+    mun: DimLayer
+    mun_knn: PolyGridIndex
+    bioma: DimLayer
+    uc: DimLayer
+    ti: DimLayer
+
+
+def _first_props(feats: list[PolyFeature], props: tuple[str, ...]) -> dict[str, tuple]:
+    """poly_id -> str() of the given props of its first feature."""
+    out: dict[str, tuple] = {}
     for f in feats:
-        if f.poly_id in seen:
-            continue
-        seen.add(f.poly_id)
-        vals = [f.props.get(src) for src in attr_map.values()]
-        # the schema below declares every attr as string; prop values
-        # may be numeric (e.g. area_km2 double from wkt.features_from_dim)
-        rows.append(
-            tuple([f.poly_id] + [None if v is None else str(v) for v in vals])
-        )
-    schema = ", ".join(
-        [f"{id_name} string"] + [f"{dst} string" for dst in attr_map]
-    )
-    return local_df(spark, rows, T.StructType.fromDDL(schema))
+        if f.poly_id not in out:
+            values = (f.props.get(p) for p in props)
+            out[f.poly_id] = tuple(None if v is None else str(v) for v in values)
+    return out
 
 
-def attribute_municipality(
-    curated: DataFrame,
+def enrich_dims(
     municipios: list[PolyFeature],
-    knn_radius_m: float = 2000.0,
-) -> DataFrame:
-    """J2 + J3: point-in-polygon municipality attribution with
-    nearest-within-radius fallback for coastal/edge points."""
-    spark = curated.sparkSession
-    pip = point_in_polygon_join(
-        curated, municipios, x_col="lon", y_col="lat", id_alias="mun_cd_mun"
-    )
-    matched = pip.filter(F.col("mun_cd_mun").isNotNull())
-    unmatched = pip.filter(F.col("mun_cd_mun").isNull()).drop("mun_cd_mun")
-    fallback = knn_nearest_within(
-        unmatched,
-        municipios,
-        max_dist_m=knn_radius_m,
-        x_col="lon",
-        y_col="lat",
-        id_alias="mun_cd_mun",
-        dist_alias="__dist_m",
-    ).drop("__dist_m")
-    both = matched.unionByName(fallback)
-
-    attrs = F.broadcast(
-        _dim_lookup(
-            spark,
-            municipios,
-            "mun_cd_mun",
-            {"mun_nm_mun": "nm_mun", "mun_uf": "uf", "__area": "area_km2"},
-        ).withColumn("mun_area_km2", F.col("__area").cast("double"))
-        .drop("__area")
-    )
-    return both.join(attrs, "mun_cd_mun", "left").withColumn(
-        "mun_checked", F.lit(True)
+    biomas: list[PolyFeature],
+    ucs: list[PolyFeature],
+    tis: list[PolyFeature],
+) -> EnrichDims:
+    """Index the four dims for :func:`enrich_batch` (driver side)."""
+    areas = area_km2_by_id(municipios)
+    mun_attrs = {
+        pid: (*names, areas[pid])
+        for pid, names in _first_props(municipios, ("nm_mun", "uf")).items()
+    }
+    return EnrichDims(
+        mun=DimLayer(PolyGridIndex(municipios), mun_attrs),
+        mun_knn=knn_index(municipios, KNN_RADIUS_M),
+        bioma=DimLayer(PolyGridIndex(biomas), _first_props(biomas, ("bioma",))),
+        uc=DimLayer(PolyGridIndex(ucs), _first_props(ucs, ("nome_uc",))),
+        ti=DimLayer(PolyGridIndex(tis), _first_props(tis, ("terrai_nom",))),
     )
 
 
-def attribute_dim(
-    df: DataFrame,
-    feats: list[PolyFeature],
-    id_alias: str,
-    name_alias: str,
-    name_prop: str,
-    checked_alias: str,
-) -> DataFrame:
-    """J4/J8: first-match (lowest dim id) point-in-polygon attribution
-    for biome/UC/TI; rows are marked checked even on miss
-    (21_enrich_biomas_ucs_tis.sql:45-59)."""
-    spark = df.sparkSession
-    out = point_in_polygon_join(df, feats, x_col="lon", y_col="lat", id_alias=id_alias)
-    attrs = F.broadcast(
-        _dim_lookup(spark, feats, id_alias, {name_alias: name_prop})
+def _lookup(layer: DimLayer, ids: np.ndarray, width: int) -> list[list]:
+    """Per-row attribute values as ``width`` columns (None on a miss)."""
+    missing = (None,) * width
+    rows = [layer.attrs.get(i, missing) for i in ids]
+    return [[r[k] for r in rows] for k in range(width)]
+
+
+def enrich_batch(pdf: pd.DataFrame, dims: EnrichDims) -> pd.DataFrame:
+    """One batch of curated rows (with ``event_day``) -> enriched rows:
+    the id columns, the input columns, then the attribute columns.
+    Non-finite coordinates get no attribution; every row is checked."""
+    px = pdf["lon"].to_numpy(dtype="float64")
+    py = pdf["lat"].to_numpy(dtype="float64")
+    mun = first_match(dims.mun.index, px, py)
+    miss = np.flatnonzero(pd.isna(mun))
+    if miss.size:
+        mun[miss] = nearest_within(dims.mun_knn, px[miss], py[miss], KNN_RADIUS_M)[0]
+    bioma = first_match(dims.bioma.index, px, py)
+    uc = first_match(dims.uc.index, px, py)
+    ti = first_match(dims.ti.index, px, py)
+    nm_mun, uf, area = _lookup(dims.mun, mun, 3)
+    (bioma_enr,) = _lookup(dims.bioma, bioma, 1)
+    (uc_nome,) = _lookup(dims.uc, uc, 1)
+    (ti_nome,) = _lookup(dims.ti, ti, 1)
+    ids = pd.DataFrame(
+        {"terrai_cod": ti, "cd_cnuc": uc, "cd_bioma": bioma, "mun_cd_mun": mun},
+        index=pdf.index,
     )
-    return out.join(attrs, id_alias, "left").withColumn(checked_alias, F.lit(True))
+    attrs = pd.DataFrame(
+        {
+            "mun_nm_mun": nm_mun,
+            "mun_uf": uf,
+            "mun_area_km2": np.array(area, dtype="float64"),
+            "mun_checked": True,
+            "bioma_enr": bioma_enr,
+            "bioma_checked": True,
+            "uc_nome": uc_nome,
+            "uc_checked": True,
+            "ti_nome": ti_nome,
+            "ti_checked": True,
+        },
+        index=pdf.index,
+    )
+    return pd.concat([ids, pdf, attrs], axis=1)
 
 
 def enrich(
@@ -112,16 +164,23 @@ def enrich(
     biomas: list[PolyFeature],
     ucs: list[PolyFeature],
     tis: list[PolyFeature],
-    knn_radius_m: float = 2000.0,
 ) -> DataFrame:
-    """Full enrichment pass: event day + municipality (PIP + KNN) +
-    biome/UC/TI first-match attribution."""
+    """Full enrichment pass: event day on the JVM, then one
+    mapInPandas attributing municipality (PIP + KNN), biome, UC and TI."""
     df = curated.withColumn("event_day", event_day("view_ts", "file_date"))
-    df = attribute_municipality(df, municipios, knn_radius_m)
-    df = attribute_dim(df, biomas, "cd_bioma", "bioma_enr", "bioma", "bioma_checked")
-    df = attribute_dim(df, ucs, "cd_cnuc", "uc_nome", "nome_uc", "uc_checked")
-    df = attribute_dim(df, tis, "terrai_cod", "ti_nome", "terrai_nom", "ti_checked")
-    return df
+    df = _rebalance_for_compute(df, municipios + biomas + ucs + tis)
+    dims = enrich_dims(municipios, biomas, ucs, tis)
+    schema = T.StructType(
+        [T.StructField(c, T.StringType()) for c in _ID_COLUMNS]
+        + df.schema.fields
+        + _ATTR_FIELDS
+    )
+
+    def attribute(batches):
+        for pdf in batches:
+            yield enrich_batch(pdf, dims)
+
+    return df.mapInPandas(attribute, schema=schema)
 
 
 def new_rows_only(curated_batch: DataFrame, existing: DataFrame | None) -> DataFrame:

@@ -22,10 +22,15 @@ the engine implements the same filter-refine strategy directly:
   differ negligibly at 2 km scale) and keeps the nearest polygon
   within the radius.
 
-At 100 TB the point side stays partitioned and never shuffles: both
-operators are mapInPandas over the fact table with the dims shipped in
-the closure (a broadcast in cluster terms). That is the same plan
-Sedona would pick for a small dim side (broadcast spatial join).
+The two kernels, :func:`first_match` and :func:`nearest_within`, are
+numpy functions over a :class:`PolyGridIndex`. Two callers share them:
+the DataFrame operators here (:func:`point_in_polygon_join`,
+:func:`knn_nearest_within`), each one mapInPandas over the points, and
+the fused enrichment pass in ``enrich.py``, which runs both kernels
+for all four dims inside one mapInPandas. At 100 TB the point side
+stays partitioned and never shuffles: the dims ship in the task
+closure (a broadcast in cluster terms), the plan Sedona would pick for
+a small dim side (broadcast spatial join).
 """
 
 from __future__ import annotations
@@ -33,9 +38,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 EARTH_RADIUS_M = 6_371_008.8
@@ -186,9 +189,8 @@ class PolyGridIndex:
         cell; points in cells with no candidates are skipped."""
         if not self.cells or not mask.any():
             return
-        cc = self.point_cells(px, py)
         live = np.nonzero(mask)[0]
-        keys = cc[live]
+        keys = self.point_cells(px[live], py[live])
         order = np.lexsort((keys[:, 1], keys[:, 0]))
         sorted_keys = keys[order]
         sorted_idx = live[order]
@@ -299,6 +301,32 @@ def _size_conf_bytes(spark, key: str, default: int) -> int:
         return default
 
 
+def first_match(index: PolyGridIndex, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    """Id of the first polygon containing each point (lowest poly_id),
+    None where none does or a coordinate is not finite. Each occupied
+    grid cell tests only its O(1) candidate polygons; candidates come
+    back id-sorted, so the first hit is the lowest poly_id."""
+    assigned = np.full(px.shape[0], None, dtype=object)
+    finite = np.isfinite(px) & np.isfinite(py)
+    for cands, idx in index.group_points(px, py, finite):
+        open_idx = idx
+        for k in cands:
+            if open_idx.shape[0] == 0:
+                break
+            bx0, by0, bx1, by1 = index.bboxes[k]
+            cx, cy = px[open_idx], py[open_idx]
+            box = (cx >= bx0) & (cx <= bx1) & (cy >= by0) & (cy <= by1)
+            if not box.any():
+                continue
+            probe = open_idx[box]
+            hit = _contains(index.polys[k], px[probe], py[probe])
+            hit_idx = probe[hit]
+            if hit_idx.shape[0]:
+                assigned[hit_idx] = index.polys[k].poly_id
+                open_idx = open_idx[~np.isin(open_idx, hit_idx)]
+    return assigned
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polygons: list[PolyFeature],
@@ -323,31 +351,12 @@ def point_in_polygon_join(
 
     def attribute(batches):
         for pdf in batches:
-            px = pdf[x_col].to_numpy(dtype="float64")
-            py = pdf[y_col].to_numpy(dtype="float64")
-            assigned = np.full(px.shape[0], None, dtype=object)
-            finite = np.isfinite(px) & np.isfinite(py)
-            # grid lookup: each occupied cell tests only its O(1)
-            # candidate polygons; candidates come back id-sorted, so
-            # first-match == lowest poly_id exactly as before
-            for cands, idx in index.group_points(px, py, finite):
-                open_idx = idx
-                for k in cands:
-                    if open_idx.shape[0] == 0:
-                        break
-                    bx0, by0, bx1, by1 = index.bboxes[k]
-                    cx, cy = px[open_idx], py[open_idx]
-                    box = (cx >= bx0) & (cx <= bx1) & (cy >= by0) & (cy <= by1)
-                    if not box.any():
-                        continue
-                    probe = open_idx[box]
-                    hit = _contains(index.polys[k], px[probe], py[probe])
-                    hit_idx = probe[hit]
-                    if hit_idx.shape[0]:
-                        assigned[hit_idx] = index.polys[k].poly_id
-                        open_idx = open_idx[~np.isin(open_idx, hit_idx)]
             pdf = pdf.copy()
-            pdf[id_alias] = assigned
+            pdf[id_alias] = first_match(
+                index,
+                pdf[x_col].to_numpy(dtype="float64"),
+                pdf[y_col].to_numpy(dtype="float64"),
+            )
             yield pdf
 
     return points.mapInPandas(attribute, schema=out_schema)
@@ -400,6 +409,50 @@ def _boundary_distance_m(
     return best
 
 
+def knn_index(polygons: list[PolyFeature], max_dist_m: float) -> PolyGridIndex:
+    """Grid index whose cells list every polygon with a bbox within
+    ``max_dist_m`` of the cell, as :func:`nearest_within` requires."""
+    return PolyGridIndex(polygons, pad_deg=max_dist_m / 111_000.0 * 1.5)
+
+
+def nearest_within(
+    index: PolyGridIndex, px: np.ndarray, py: np.ndarray, max_dist_m: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, distances in meters) of the polygon nearest each point
+    within ``max_dist_m`` (containment = distance 0); None and NaN
+    where nothing is within the radius or a coordinate is not finite.
+    ``index`` comes from :func:`knn_index` for at least this radius.
+    Candidates arrive id-sorted and only strict improvements update,
+    so ties keep the lowest poly_id."""
+    pad_deg = index.pad
+    best_d = np.full(px.shape[0], np.inf)
+    best_id = np.full(px.shape[0], None, dtype=object)
+    finite = np.isfinite(px) & np.isfinite(py)
+    for cands, idx in index.group_points(px, py, finite):
+        for k in cands:
+            bx0, by0, bx1, by1 = index.bboxes[k]
+            cx, cy = px[idx], py[idx]
+            near = (
+                (cx >= bx0 - pad_deg)
+                & (cx <= bx1 + pad_deg)
+                & (cy >= by0 - pad_deg)
+                & (cy <= by1 + pad_deg)
+            )
+            if not near.any():
+                continue
+            probe = idx[near]
+            poly = index.polys[k]
+            d = _boundary_distance_m(poly, px[probe], py[probe])
+            inside = _contains(poly, px[probe], py[probe])
+            d = np.where(inside, 0.0, d)
+            better = d < best_d[probe]
+            upd = probe[better]
+            best_d[upd] = d[better]
+            best_id[upd] = poly.poly_id
+    ok = best_d <= max_dist_m
+    return np.where(ok, best_id, None), np.where(ok, best_d, np.nan)
+
+
 def knn_nearest_within(
     points: DataFrame,
     polygons: list[PolyFeature],
@@ -417,8 +470,7 @@ def knn_nearest_within(
     Narrow inputs rebalance across cores first (same CPU-bound-stage
     rationale as point_in_polygon_join)."""
     points = _rebalance_for_compute(points, polygons)
-    pad_deg = max_dist_m / 111_000.0 * 1.5
-    index = PolyGridIndex(polygons, pad_deg=pad_deg)
+    index = knn_index(polygons, max_dist_m)
     out_schema = T.StructType(
         points.schema.fields
         + [
@@ -429,52 +481,13 @@ def knn_nearest_within(
 
     def nearest(batches):
         for pdf in batches:
-            px = pdf[x_col].to_numpy(dtype="float64")
-            py = pdf[y_col].to_numpy(dtype="float64")
-            best_d = np.full(px.shape[0], np.inf)
-            best_id = np.full(px.shape[0], None, dtype=object)
-            finite = np.isfinite(px) & np.isfinite(py)
-            # padded grid lookup: a cell's candidate list already
-            # includes every polygon whose bbox comes within the
-            # radius, so the per-point scan is O(candidates), not
-            # O(|dim|); candidates arrive id-sorted and only strict
-            # improvements update, so ties keep the lowest poly_id
-            for cands, idx in index.group_points(px, py, finite):
-                for k in cands:
-                    bx0, by0, bx1, by1 = index.bboxes[k]
-                    cx, cy = px[idx], py[idx]
-                    near = (
-                        (cx >= bx0 - pad_deg)
-                        & (cx <= bx1 + pad_deg)
-                        & (cy >= by0 - pad_deg)
-                        & (cy <= by1 + pad_deg)
-                    )
-                    if not near.any():
-                        continue
-                    probe = idx[near]
-                    poly = index.polys[k]
-                    d = _boundary_distance_m(poly, px[probe], py[probe])
-                    inside = _contains(poly, px[probe], py[probe])
-                    d = np.where(inside, 0.0, d)
-                    better = d < best_d[probe]
-                    upd = probe[better]
-                    best_d[upd] = d[better]
-                    best_id[upd] = poly.poly_id
-            ok = best_d <= max_dist_m
             pdf = pdf.copy()
-            pdf[id_alias] = np.where(ok, best_id, None)
-            pdf[dist_alias] = np.where(ok, best_d, np.nan)
+            pdf[id_alias], pdf[dist_alias] = nearest_within(
+                index,
+                pdf[x_col].to_numpy(dtype="float64"),
+                pdf[y_col].to_numpy(dtype="float64"),
+                max_dist_m,
+            )
             yield pdf
 
     return points.mapInPandas(nearest, schema=out_schema)
-
-
-def haversine_m(lat1, lon1, lat2, lon2):
-    """Great-circle distance in meters as a Spark Column (JVM-side)."""
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = (
-        F.sin(dlat / 2) ** 2
-        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) ** 2
-    )
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))

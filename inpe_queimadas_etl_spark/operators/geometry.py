@@ -86,6 +86,24 @@ def feature_area_m2(feat: PolyFeature) -> float:
     return area
 
 
+def area_km2_by_id(feats: list[PolyFeature]) -> dict[str, float]:
+    """poly_id -> area in km2, rounded to 3 decimals: the first
+    ``area_km2`` prop seen for the id (the authoritative total, often
+    repeated on every part), else the summed geodesic area of the
+    parts that carry none (the reference's ``st_area(geography)/1e6``
+    fallback when the source has no area column)."""
+    attr: dict[str, float] = {}
+    fallback: dict[str, float] = {}
+    for f in feats:
+        value = f.props.get("area_km2")
+        fallback.setdefault(f.poly_id, 0.0)
+        if value is None:
+            fallback[f.poly_id] += feature_area_m2(f) / 1e6
+        else:
+            attr.setdefault(f.poly_id, float(value))
+    return {pid: round(attr.get(pid, area), 3) for pid, area in fallback.items()}
+
+
 def features_area_m2(feats: list[PolyFeature]) -> float:
     return sum(feature_area_m2(f) for f in feats)
 

@@ -98,64 +98,11 @@ def features_from_geojson(
 
 
 def municipios_dim_from_geojson(spark, path: str):
-    """Typed municipality dim (cd_mun, nm_mun, uf, area_km2) from a
-    GeoJSON FeatureCollection — same contract as
-    municipios_dim_from_shapefile, including its IBGE attribute
-    fallback chains (cd_mun|cd_geocmu|geocodigo, nm_mun|nm_municip,
-    sigla_uf|uf; shapefile.py:265-288): an area_km2 property is
-    authoritative (first seen wins); otherwise the shoelace-geodesic
-    area of the feature's parts accumulates as the fallback."""
-    from pyspark.sql import types as T
+    """Typed municipality dim from a GeoJSON FeatureCollection — same
+    fields and rules as shapefile.municipios_dim_from_shapefile."""
+    from .shapefile import MUNICIPIO_FIELDS, municipios_dim
 
-    from ..operators.geometry import feature_area_m2
-    from ..session import local_df
-
-    feats = features_from_geojson(
-        path,
-        id_field=("cd_mun", "cd_geocmu", "geocodigo"),
-        prop_fields=("nm_mun", "uf", "area_km2"),
-        prop_aliases={
-            "nm_mun": ("nm_mun", "nm_municip"),
-            "uf": ("sigla_uf", "uf"),
-        },
-    )
-    by_id: dict[str, dict] = {}
-    for f in feats:
-        entry = by_id.setdefault(
-            f.poly_id,
-            {
-                "cd_mun": f.poly_id,
-                "nm_mun": f.props.get("nm_mun"),
-                "uf": f.props.get("uf"),
-                "area_attr": None,
-                "area_fallback": 0.0,
-            },
-        )
-        area_attr = f.props.get("area_km2")
-        if area_attr is not None:
-            if entry["area_attr"] is None:
-                entry["area_attr"] = float(area_attr)
-        else:
-            entry["area_fallback"] += feature_area_m2(f) / 1e6
-    rows = [
-        (
-            v["cd_mun"],
-            v["nm_mun"],
-            v["uf"],
-            round(
-                v["area_attr"] if v["area_attr"] is not None else v["area_fallback"],
-                3,
-            ),
-        )
-        for v in by_id.values()
-    ]
-    return local_df(
-        spark,
-        rows,
-        T.StructType.fromDDL(
-            "cd_mun string, nm_mun string, uf string, area_km2 double"
-        ),
-    )
+    return municipios_dim(spark, features_from_geojson(path, **MUNICIPIO_FIELDS))
 
 
 def write_geojson(

@@ -44,7 +44,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.geo import PolyFeature
-from ..operators.geometry import feature_area_m2, ring_signed_area_deg2
+from ..operators.geometry import area_km2_by_id, ring_signed_area_deg2
 
 SHP_POLYGON = 5
 SHP_POLYGONZ = 15
@@ -268,78 +268,36 @@ def features_from_shapefile(
     return feats
 
 
-def municipios_dim_from_shapefile(
-    spark: SparkSession,
-    shp_path: str,
-    dbf_path: str | None = None,
-    encoding: str = "latin-1",
-) -> DataFrame:
-    """Typed municipality dim from an IBGE-style shapefile — the Spark
-    analog of the reference's ogr2ogr load + typed insert
-    (ensure_ref_ibge.py:185-254): columns (cd_mun, nm_mun, uf,
-    area_km2), with shoelace-geodesic area / 1e6 standing in for the
-    ``st_area(geography)/1e6`` fallback when the attribute table has no
-    area column.
-    """
-    by_id: dict[str, dict] = {}
-    for rec in read_shapefile(shp_path, dbf_path, encoding):
-        if not rec.parts:
-            continue
-        a = rec.attrs
-        pid = a.get("cd_mun") or a.get("cd_geocmu") or a.get("geocodigo")
-        if pid is None:
-            raise KeyError(
-                f"record {rec.recno}: no municipality code field in .dbf "
-                "(tried cd_mun, cd_geocmu, geocodigo)"
-            )
-        area_attr = a.get("area_km2")
-        area = (
-            float(area_attr)
-            if area_attr is not None
-            else sum(
-                feature_area_m2(
-                    PolyFeature(poly_id=str(pid), rings=tuple(part))
-                )
-                for part in rec.parts
-            )
-            / 1e6
-        )
-        entry = by_id.setdefault(
-            str(pid),
-            {
-                "cd_mun": str(pid),
-                "nm_mun": a.get("nm_mun") or a.get("nm_municip"),
-                "uf": a.get("sigla_uf") or a.get("uf"),
-                "area_attr": None,
-                "area_fallback": 0.0,
-            },
-        )
-        # attribute and shoelace-fallback areas accumulate SEPARATELY:
-        # an attribute value (the authoritative total, typically
-        # repeated on every record of the municipality) is kept
-        # first-seen and wins; fallback areas sum per geometry part
-        # and are used only when no record ever carried the attribute
-        if area_attr is not None:
-            if entry["area_attr"] is None:
-                entry["area_attr"] = area
-        else:
-            entry["area_fallback"] += area
-    rows = [
-        (
-            v["cd_mun"],
-            v["nm_mun"],
-            v["uf"],
-            round(
-                v["area_attr"] if v["area_attr"] is not None else v["area_fallback"],
-                3,
-            ),
-        )
-        for v in by_id.values()
-    ]
+# the municipality dim's fields across IBGE vintages (ensure_ref_ibge.py
+# renames cd_mun|cd_geocmu|geocodigo, nm_mun|nm_municip, sigla_uf|uf):
+# the feature-loader arguments of both dim formats and cli.load_dims
+MUNICIPIO_FIELDS = {
+    "id_field": ("cd_mun", "cd_geocmu", "geocodigo"),
+    "prop_fields": ("nm_mun", "uf", "area_km2"),
+    "prop_aliases": {"nm_mun": ("nm_mun", "nm_municip"), "uf": ("sigla_uf", "uf")},
+}
+
+
+def municipios_dim(spark: SparkSession, feats: list[PolyFeature]) -> DataFrame:
+    """Typed municipality dim (cd_mun, nm_mun, uf, area_km2) from
+    features loaded with :data:`MUNICIPIO_FIELDS` — the Spark analog of
+    the reference's typed insert after its ogr2ogr load
+    (ensure_ref_ibge.py:185-254). Names come from the first feature of
+    an id; the area follows operators.geometry.area_km2_by_id, whose
+    geodesic fallback stands in for ``st_area(geography)/1e6`` when the
+    source has no area column."""
     from pyspark.sql import types as T
 
     from ..session import local_df
 
+    areas = area_km2_by_id(feats)
+    first: dict[str, dict] = {}
+    for f in feats:
+        first.setdefault(f.poly_id, f.props)
+    rows = [
+        (pid, props.get("nm_mun"), props.get("uf"), areas[pid])
+        for pid, props in first.items()
+    ]
     return local_df(
         spark,
         rows,
@@ -347,6 +305,19 @@ def municipios_dim_from_shapefile(
             "cd_mun string, nm_mun string, uf string, area_km2 double"
         ),
     )
+
+
+def municipios_dim_from_shapefile(
+    spark: SparkSession,
+    shp_path: str,
+    dbf_path: str | None = None,
+    encoding: str = "latin-1",
+) -> DataFrame:
+    """Typed municipality dim from an IBGE-style shapefile."""
+    feats = features_from_shapefile(
+        shp_path, dbf_path, encoding=encoding, **MUNICIPIO_FIELDS
+    )
+    return municipios_dim(spark, feats)
 
 
 # ---------------------------------------------------------------------------

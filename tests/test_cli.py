@@ -434,3 +434,67 @@ def test_validate_repo_structure_catches_bench_registry_drift(monkeypatch):
     s = validate_repo_structure()
     assert not s["ok"]
     assert any("q99_renamed_away" in f for f in s["failures"])
+
+
+@pytest.mark.parametrize("fmt", ["shp", "geojson"])
+def test_enriched_area_falls_back_to_geometry(spark, dims_dir, tmp_path, fmt):
+    """A municipality dim without an area column: enrichment takes the
+    typed dim's fallback (summed geodesic part area / 1e6) instead of
+    leaving mun_area_km2, and with it the municipal density, null."""
+    import shutil
+
+    from inpe_queimadas_etl_spark.enrich import enrich
+    from inpe_queimadas_etl_spark.sources.csv_ingest import read_csv_all_string
+    from inpe_queimadas_etl_spark.sources.geojson_source import (
+        municipios_dim_from_geojson,
+        write_geojson,
+    )
+    from inpe_queimadas_etl_spark.transform import curated_from_raw
+
+    d = tmp_path / "no_area"
+    d.mkdir()
+    for name in ("biomas", "ucs", "tis"):
+        for ext in (".shp", ".dbf"):
+            shutil.copy(f"{dims_dir}/{name}{ext}", d / f"{name}{ext}")
+    feats = [
+        type(f)(
+            poly_id=f.poly_id,
+            rings=f.rings,
+            props={"nm_mun": f.props["nm_mun"], "uf": f.props["uf"]},
+        )
+        for f in G.municipios()
+    ]
+    if fmt == "shp":
+        _write_dim(
+            d,
+            "municipios",
+            feats,
+            [("CD_MUN", "C", 10, 0), ("NM_MUN", "C", 20, 0), ("UF", "C", 2, 0)],
+            lambda f: {"cd_mun": f.poly_id, **f.props},
+        )
+        typed = shp.municipios_dim_from_shapefile(spark, str(d / "municipios.shp"))
+    else:
+        write_geojson(str(d / "municipios.geojson"), feats, id_field="cd_mun")
+        typed = municipios_dim_from_geojson(spark, str(d / "municipios.geojson"))
+    dims = cli.load_dims(spark, str(d))
+
+    # one fire at the centre of every municipality cell
+    centres = [
+        [str(f.rings[0][:, 1].mean()), str(f.rings[0][:, 0].mean()),
+         "2024-05-02 10:00:00", "AQUA_M-T", "", "", "", ""]
+        for f in feats
+    ]
+    path = str(tmp_path / "focos.csv")
+    write_fixture_csv(path, G.FOCOS_HEADER, centres, sep=";")
+    curated = curated_from_raw(read_csv_all_string(spark, path), dt.date(2024, 5, 2))
+    enriched = enrich(
+        curated, dims["municipios"], dims["biomas"], dims["ucs"], dims["tis"]
+    )
+    got = {
+        r["mun_cd_mun"]: r["mun_area_km2"]
+        for r in enriched.select("mun_cd_mun", "mun_area_km2").collect()
+    }
+    want = {r["cd_mun"]: r["area_km2"] for r in typed.collect()}
+    assert len(want) == len(feats)
+    assert all(a > 0 for a in want.values())
+    assert got == want

@@ -516,3 +516,65 @@ def test_cur10_eval_broadcasts_corpus_rolls_up_once(spark):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "partial" in plan.lower(), plan
+
+
+# the enriched table's layout: existing enriched_focos partitions and
+# process_batch's select(*prior.columns) depend on it
+ENRICHED_LAYOUT = [
+    ("terrai_cod", "string"),
+    ("cd_cnuc", "string"),
+    ("cd_bioma", "string"),
+    ("mun_cd_mun", "string"),
+    ("event_hash", "string"),
+    ("file_date", "date"),
+    ("view_ts", "string"),
+    ("satelite", "string"),
+    ("municipio", "string"),
+    ("estado", "string"),
+    ("bioma", "string"),
+    ("lat", "double"),
+    ("lon", "double"),
+    ("props", "string"),
+    ("event_day", "date"),
+    ("mun_nm_mun", "string"),
+    ("mun_uf", "string"),
+    ("mun_area_km2", "double"),
+    ("mun_checked", "boolean"),
+    ("bioma_enr", "string"),
+    ("bioma_checked", "boolean"),
+    ("uc_nome", "string"),
+    ("uc_checked", "boolean"),
+    ("ti_nome", "string"),
+    ("ti_checked", "boolean"),
+]
+
+
+def test_enrich_is_one_map_in_pandas_pass(spark, tmp_path):
+    """enrich() attributes municipality (PIP + KNN), biome, UC and TI
+    in a single mapInPandas: no join for the names, no union for the
+    KNN fallback, and the enriched table keeps its column layout. The
+    curated batch is checkpointed as process_batch does, so the plan
+    holds enrich's own nodes only."""
+    import datetime as dt
+
+    from inpe_queimadas_etl_spark.enrich import enrich
+    from inpe_queimadas_etl_spark.sources.csv_ingest import (
+        read_csv_all_string,
+        write_fixture_csv,
+    )
+    from inpe_queimadas_etl_spark.transform import curated_from_raw
+
+    from . import fixtures_geo as G
+
+    path = str(tmp_path / "focos.csv")
+    write_fixture_csv(path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    curated = curated_from_raw(
+        read_csv_all_string(spark, path), dt.date(2024, 5, 2)
+    ).localCheckpoint(eager=True)
+    out = enrich(curated, G.municipios(), G.biomas(), G.ucs(), G.tis())
+    plan = out._jdf.queryExecution().executedPlan().treeString()
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+    assert not re.search(r"Join|Union", plan), plan
+    assert [
+        (f.name, f.dataType.simpleString()) for f in out.schema.fields
+    ] == ENRICHED_LAYOUT
