@@ -1,10 +1,18 @@
 """Mart builders: daily/monthly/period aggregates + trend + fact MV.
 
-Each mart is a pure DataFrame function of the enriched fact table
-(reference sql/marts/*.sql, sqlm/marts/canonical/*.sql). The pipeline
-persists them partitioned by day/month with dynamic partition
-overwrite — the Spark analog of the reference's delete+insert-by-day
-idempotency (K2/K3).
+The marts are a tree of rollups (reference sql/marts/*.sql,
+sqlm/marts/canonical/*.sql); each builder is a pure DataFrame
+function of the level below it:
+
+- events (the enriched rows of the affected days) -> the five daily
+  marts and the serving fact MV;
+- daily municipality / UF marts -> the monthly marts (counts summed,
+  names, UF and areas carried by ``max``);
+- daily UF mart -> the moving-average trend and the period stats.
+
+The pipeline persists them partitioned by day/month with dynamic
+partition overwrite — the Spark analog of the reference's
+delete+insert-by-day idempotency (K2/K3).
 
 Density formula parity (A1/A3): round(100 * n / nullif(area, 0), 4)
 (sql/marts/10_focos_diario_municipio.sql:44-47).
@@ -26,37 +34,43 @@ def _density(n, area):
     )
 
 
-def focos_diario_municipio(enriched: DataFrame) -> DataFrame:
-    """A1 (sql/marts/10_focos_diario_municipio.sql:37-51)."""
-    n = F.count("*")
+def _by_municipality(df: DataFrame, key, n) -> DataFrame:
+    """Count ``n`` per (key, municipality), with the municipality's
+    name, UF, area and density."""
     area = F.max("mun_area_km2")
-    return (
-        enriched.filter(F.col("mun_cd_mun").isNotNull())
-        .groupBy(F.col("event_day").alias("day"), "mun_cd_mun")
-        .agg(
-            F.max("mun_nm_mun").alias("mun_nm_mun"),
-            F.max("mun_uf").alias("mun_uf"),
-            area.alias("mun_area_km2"),
-            n.alias("n_focos"),
-            _density(n, area).alias("focos_por_100km2"),
-        )
+    return df.groupBy(key, "mun_cd_mun").agg(
+        F.max("mun_nm_mun").alias("mun_nm_mun"),
+        F.max("mun_uf").alias("mun_uf"),
+        area.alias("mun_area_km2"),
+        n.alias("n_focos"),
+        _density(n, area).alias("focos_por_100km2"),
     )
 
 
-def focos_mensal_municipio(enriched: DataFrame) -> DataFrame:
-    """A2 (sql/marts/11_focos_mensal_municipio.sql:37-51)."""
-    n = F.count("*")
-    area = F.max("mun_area_km2")
-    return (
-        enriched.filter(F.col("mun_cd_mun").isNotNull())
-        .groupBy(F.trunc("event_day", "month").alias("month"), "mun_cd_mun")
-        .agg(
-            F.max("mun_nm_mun").alias("mun_nm_mun"),
-            F.max("mun_uf").alias("mun_uf"),
-            area.alias("mun_area_km2"),
-            n.alias("n_focos"),
-            _density(n, area).alias("focos_por_100km2"),
-        )
+def focos_diario_municipio(enriched: DataFrame) -> DataFrame:
+    """A1 (sql/marts/10_focos_diario_municipio.sql:37-51)."""
+    return _by_municipality(
+        enriched.filter(F.col("mun_cd_mun").isNotNull()),
+        F.col("event_day").alias("day"),
+        F.count("*"),
+    )
+
+
+def focos_mensal_municipio(daily_mun: DataFrame) -> DataFrame:
+    """A2 (sql/marts/11_focos_mensal_municipio.sql:37-51), rolled up
+    from the daily municipality mart rows of the months it covers."""
+    return _by_municipality(
+        daily_mun, F.trunc("day", "month").alias("month"), F.sum("n_focos")
+    )
+
+
+def _with_uf_density(df: DataFrame, key: str) -> DataFrame:
+    return df.select(
+        key,
+        "uf",
+        "n_focos",
+        "uf_area_km2",
+        _density(F.col("n_focos"), F.col("uf_area_km2")).alias("focos_por_100km2"),
     )
 
 
@@ -68,31 +82,21 @@ def focos_diario_uf(enriched: DataFrame, uf_area: DataFrame) -> DataFrame:
         .groupBy(F.col("event_day").alias("day"), F.col("mun_uf").alias("uf"))
         .agg(F.count("*").alias("n_focos"))
     )
-    joined = counts.join(F.broadcast(uf_area), "uf", "left")
-    return joined.select(
-        "day",
-        "uf",
-        "n_focos",
-        F.col("area_km2").alias("uf_area_km2"),
-        _density(F.col("n_focos"), F.col("area_km2")).alias("focos_por_100km2"),
+    joined = counts.join(
+        F.broadcast(uf_area.withColumnRenamed("area_km2", "uf_area_km2")), "uf", "left"
     )
+    return _with_uf_density(joined, "day")
 
 
-def focos_mensal_uf(enriched: DataFrame, uf_area: DataFrame) -> DataFrame:
-    """A3 monthly (sql/marts/21_focos_mensal_uf.sql:30-43)."""
-    counts = (
-        enriched.filter(F.col("mun_uf").isNotNull())
-        .groupBy(F.trunc("event_day", "month").alias("month"), F.col("mun_uf").alias("uf"))
-        .agg(F.count("*").alias("n_focos"))
+def focos_mensal_uf(daily_uf: DataFrame) -> DataFrame:
+    """A3 monthly (sql/marts/21_focos_mensal_uf.sql:30-43), rolled up
+    from the daily UF mart rows of the months it covers; the UF area
+    is the one the daily rows carry."""
+    rolled = daily_uf.groupBy(F.trunc("day", "month").alias("month"), "uf").agg(
+        F.sum("n_focos").alias("n_focos"),
+        F.max("uf_area_km2").alias("uf_area_km2"),
     )
-    joined = counts.join(F.broadcast(uf_area), "uf", "left")
-    return joined.select(
-        "month",
-        "uf",
-        "n_focos",
-        F.col("area_km2").alias("uf_area_km2"),
-        _density(F.col("n_focos"), F.col("area_km2")).alias("focos_por_100km2"),
-    )
+    return _with_uf_density(rolled, "month")
 
 
 def ref_uf_area(municipios_dim: DataFrame) -> DataFrame:
@@ -108,16 +112,11 @@ def ref_uf_area(municipios_dim: DataFrame) -> DataFrame:
     )
 
 
-def _focos_by_dim(enriched: DataFrame, code_col: str, name_col: str, monthly: bool) -> DataFrame:
-    """A4 (sql/marts/40/41/50/51/60/61): count per biome/UC/TI."""
-    key = (
-        F.trunc("event_day", "month").alias("month")
-        if monthly
-        else F.col("event_day").alias("day")
-    )
+def _focos_by_dim(enriched: DataFrame, code_col: str, name_col: str) -> DataFrame:
+    """A4 (sql/marts/40/50/60): daily count per biome/UC/TI."""
     return (
         enriched.filter(F.col(code_col).isNotNull())
-        .groupBy(key, F.col(code_col).alias("code"))
+        .groupBy(F.col("event_day").alias("day"), F.col(code_col).alias("code"))
         .agg(
             F.max(name_col).alias("name"),
             F.count("*").cast("int").alias("focos"),
@@ -126,27 +125,15 @@ def _focos_by_dim(enriched: DataFrame, code_col: str, name_col: str, monthly: bo
 
 
 def focos_diario_bioma(enriched: DataFrame) -> DataFrame:
-    return _focos_by_dim(enriched, "cd_bioma", "bioma_enr", monthly=False)
-
-
-def focos_mensal_bioma(enriched: DataFrame) -> DataFrame:
-    return _focos_by_dim(enriched, "cd_bioma", "bioma_enr", monthly=True)
+    return _focos_by_dim(enriched, "cd_bioma", "bioma_enr")
 
 
 def focos_diario_uc(enriched: DataFrame) -> DataFrame:
-    return _focos_by_dim(enriched, "cd_cnuc", "uc_nome", monthly=False)
-
-
-def focos_mensal_uc(enriched: DataFrame) -> DataFrame:
-    return _focos_by_dim(enriched, "cd_cnuc", "uc_nome", monthly=True)
+    return _focos_by_dim(enriched, "cd_cnuc", "uc_nome")
 
 
 def focos_diario_ti(enriched: DataFrame) -> DataFrame:
-    return _focos_by_dim(enriched, "terrai_cod", "ti_nome", monthly=False)
-
-
-def focos_mensal_ti(enriched: DataFrame) -> DataFrame:
-    return _focos_by_dim(enriched, "terrai_cod", "ti_nome", monthly=True)
+    return _focos_by_dim(enriched, "terrai_cod", "ti_nome")
 
 
 def focos_periodo_uf(daily_uf: DataFrame) -> DataFrame:
@@ -165,24 +152,6 @@ def focos_periodo_uf(daily_uf: DataFrame) -> DataFrame:
         .select("uf", F.col("day").alias("dia_pico"), F.col("n_focos").alias("focos_pico"))
     )
     return stats.join(peaks, "uf")
-
-
-def focos_periodo_municipio(daily_mun: DataFrame) -> DataFrame:
-    """A5 municipality variant (sql/marts/41_focos_periodo_mun.sql:24-83)."""
-    stats = daily_mun.groupBy("mun_cd_mun").agg(
-        F.max("mun_nm_mun").alias("mun_nm_mun"),
-        F.max("mun_uf").alias("mun_uf"),
-        F.sum("n_focos").alias("total_focos"),
-        F.round(F.avg("n_focos"), 2).alias("media_diaria"),
-        F.max("n_focos").alias("max_diario"),
-    )
-    w = Window.partitionBy("mun_cd_mun").orderBy(F.desc("n_focos"), F.asc("day"))
-    peaks = (
-        daily_mun.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("mun_cd_mun", F.col("day").alias("dia_pico"), F.col("n_focos").alias("focos_pico"))
-    )
-    return stats.join(peaks, "mun_cd_mun")
 
 
 def focos_diario_uf_trend(daily_uf: DataFrame) -> DataFrame:

@@ -256,7 +256,7 @@ def dissolve(feats: list[PolyFeature], poly_id: str) -> list[PolyFeature]:
     boundary. Surviving CCW rings are exterior parts, CW rings are
     holes, attached to the part whose exterior contains them. Returns
     one PolyFeature per part (multi-part unions share ``poly_id``,
-    exactly like operators.wkt multi-polygons).
+    the package's multi-part convention).
 
     Falls back to st_collect semantics (the input parts re-labeled,
     unmerged) when the inputs are not a vertex-matched tiling.

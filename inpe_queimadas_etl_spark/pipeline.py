@@ -5,12 +5,18 @@ delete+insert per date (app.py:276-300, backfill.py:138-224). In Spark
 the same guarantees come from:
 
 - idempotent append: left anti-join on event_hash against the existing
-  curated table before appending (K1);
+  curated table (K1). The curated append is the batch's last write,
+  so a batch that fails before it is new again to the rerun;
 - dynamic partition overwrite for enriched + daily marts (partitioned
   by event day) and monthly marts (partitioned by month) — re-running
   a day replaces exactly the affected partitions (K2/K3);
 - event-day spillover handled by recomputing every event day present
   in the batch, not just the file date (SURVEY.md §7.6).
+
+Each batch aggregates events once: the daily marts and the fact MV
+read the affected days' enriched rows the batch already holds, the
+monthly marts roll up the published daily marts of the affected
+months, and the trend reads the whole daily UF mart.
 
 A whole date range is therefore ONE Spark job over all days — the
 per-day loop disappears; `run_range` just iterates extraction and
@@ -285,17 +291,21 @@ def process_batch(
     curated_batch: DataFrame,
     dims: dict,
 ) -> dict:
-    """Core incremental step: curated batch -> curated/enriched tables
-    -> marts, idempotently. ``dims`` carries PolyFeature lists
+    """Core incremental step: curated batch -> enriched table -> marts
+    -> curated table, idempotently. ``dims`` carries PolyFeature lists
     ('municipios','biomas','ucs','tis') and the uf_area DataFrame.
+
+    ``curated_focos`` is appended last: it is the record of which rows
+    are done, so a batch that fails at any earlier step is new again to
+    the rerun's anti-join and is enriched and published whole.
     """
     t0 = time.perf_counter()
     existing = warehouse.read(spark, "curated_focos")
-    # localCheckpoint truncates lineage BEFORE the append below —
-    # otherwise any recomputation re-lists curated_focos, sees its own
-    # freshly appended files, and the anti-join silently empties the
-    # batch (the classic read-your-own-append hazard). On a cluster
-    # this would be a staging-table write instead.
+    # localCheckpoint pins the new rows once: enrichment and the final
+    # curated append both read them, and a recomputation after the
+    # append would re-list curated_focos, find the rows there and
+    # silently empty the batch (the read-your-own-append hazard). On a
+    # cluster this would be a staging-table write instead.
     fresh = new_rows_only(curated_batch, existing).localCheckpoint(eager=True)
     n_new = fresh.count()
 
@@ -303,8 +313,6 @@ def process_batch(
     if n_new == 0:
         metrics["seconds"] = round(time.perf_counter() - t0, 3)
         return metrics
-
-    warehouse.append(fresh, "curated_focos", partition_col="file_date")
 
     enriched_new = enrich(
         fresh,
@@ -319,8 +327,12 @@ def process_batch(
     day_strs = [str(d) for d in affected_days]
     prior = warehouse.read(spark, "enriched_focos")
     if prior is not None:
-        prior_affected = prior.filter(
-            F.col("event_day").cast("string").isin(day_strs)
+        # a rerun after a crash past the enriched publish finds the
+        # batch's rows published already: the batch's copy replaces them
+        prior_affected = (
+            prior.filter(F.col("event_day").cast("string").isin(day_strs))
+            .join(enriched_new.select("event_hash"), "event_hash", "left_anti")
+            .select(*prior.columns)
         )
         # materialize before overwriting the same partitions we read
         enriched_days = (
@@ -331,51 +343,59 @@ def process_batch(
         enriched_days = enriched_new
     warehouse.overwrite_partitions(enriched_days, "enriched_focos", "event_day")
 
-    # marts over the affected days (reload from the table so re-runs
-    # see the merged state)
-    enriched_all = warehouse.read(spark, "enriched_focos")
-    affected = enriched_all.filter(
-        F.col("event_day").cast("string").isin(day_strs)
-    )
-    daily_mun = marts.focos_diario_municipio(affected)
-    daily_uf = marts.focos_diario_uf(affected, dims["uf_area"])
-    warehouse.overwrite_partitions(daily_mun, "focos_diario_municipio", "day")
-    warehouse.overwrite_partitions(daily_uf, "focos_diario_uf", "day")
+    # daily marts: the affected days' events, which enriched_days holds
+    # exactly as the partitions just published
     warehouse.overwrite_partitions(
-        marts.focos_diario_bioma(affected), "focos_diario_bioma", "day"
+        marts.focos_diario_municipio(enriched_days), "focos_diario_municipio", "day"
     )
     warehouse.overwrite_partitions(
-        marts.focos_diario_uc(affected), "focos_diario_uc", "day"
+        marts.focos_diario_uf(enriched_days, dims["uf_area"]), "focos_diario_uf", "day"
     )
     warehouse.overwrite_partitions(
-        marts.focos_diario_ti(affected), "focos_diario_ti", "day"
+        marts.focos_diario_bioma(enriched_days), "focos_diario_bioma", "day"
+    )
+    warehouse.overwrite_partitions(
+        marts.focos_diario_uc(enriched_days), "focos_diario_uc", "day"
+    )
+    warehouse.overwrite_partitions(
+        marts.focos_diario_ti(enriched_days), "focos_diario_ti", "day"
     )
 
-    # monthly marts: recompute affected months from the enriched table
+    # monthly marts: roll up the published daily rows of affected months
     affected_months = sorted({dt.date(d.year, d.month, 1) for d in affected_days})
-    month_df = enriched_all.filter(
-        F.trunc("event_day", "month").cast("string").isin(
-            [str(m) for m in affected_months]
+    month_strs = [str(m) for m in affected_months]
+
+    def daily_rows_of_months(table: str) -> DataFrame:
+        return warehouse.read(spark, table).filter(
+            F.trunc("day", "month").cast("string").isin(month_strs)
         )
+
+    warehouse.overwrite_partitions(
+        marts.focos_mensal_municipio(daily_rows_of_months("focos_diario_municipio")),
+        "focos_mensal_municipio",
+        "month",
     )
     warehouse.overwrite_partitions(
-        marts.focos_mensal_municipio(month_df), "focos_mensal_municipio", "month"
-    )
-    warehouse.overwrite_partitions(
-        marts.focos_mensal_uf(month_df, dims["uf_area"]), "focos_mensal_uf", "month"
+        marts.focos_mensal_uf(daily_rows_of_months("focos_diario_uf")),
+        "focos_mensal_uf",
+        "month",
     )
 
-    # serving fact MV + trend view (full recompute — small aggregates)
+    # serving fact MV over the affected days; trend over the whole
+    # daily UF mart (full recompute — a small aggregate)
     warehouse.overwrite_partitions(
-        marts.mv_focos_day_dim(affected), "mv_focos_day_dim", "day"
+        marts.mv_focos_day_dim(enriched_days), "mv_focos_day_dim", "day"
     )
     full_daily_uf = warehouse.read(spark, "focos_diario_uf")
     warehouse.overwrite(marts.focos_diario_uf_trend(full_daily_uf), "focos_diario_uf_trend")
 
+    # last: the batch is done
+    warehouse.append(fresh, "curated_focos", partition_col="file_date")
+
     metrics.update(
         {
-            "affected_days": [str(d) for d in affected_days],
-            "affected_months": [str(m) for m in affected_months],
+            "affected_days": day_strs,
+            "affected_months": month_strs,
             "seconds": round(time.perf_counter() - t0, 3),
         }
     )

@@ -227,17 +227,3 @@ def local_df(spark: SparkSession, rows, schema: T.StructType):
         return spark.createDataFrame(pdf, schema)
     except Exception:
         return spark.createDataFrame(rows, schema)
-
-
-def register_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use.
-
-    The internal ``__{col}_ns`` raw-long siblings load_table keeps for
-    pushdown-friendly date bounds are dropped here: SQL view consumers
-    (SELECT *, positional unions) must see only the public schema."""
-    for name in TABLE_NAMES:
-        df = load_table(spark, sf_dir, name)
-        internal = [c for c in df.columns if c.startswith("__") and c.endswith("_ns")]
-        if internal:
-            df = df.drop(*internal)
-        df.createOrReplaceTempView(name)

@@ -20,9 +20,10 @@ Ring grouping follows the spec: exterior rings are clockwise (negative
 shoelace signed area), holes counter-clockwise; each hole attaches to
 the exterior part whose ring contains its first vertex (file-order
 fallback). One :class:`~..operators.geo.PolyFeature` is emitted per
-exterior part — the same multi-part convention as the WKT loader
-(operators/wkt.py) — so everything downstream (PIP join, geo prep
-chain, serving surface) consumes shapefile dims unchanged.
+exterior part, the parts sharing one id — the same multi-part
+convention as the GeoJSON loader (sources/geojson_source.py) — so
+everything downstream (PIP join, geo prep chain, serving surface)
+consumes shapefile dims unchanged.
 
 The writer exists for round-tripping dims back out (and for building
 test fixtures without GDAL); it emits the same subset it reads.

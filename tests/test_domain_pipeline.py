@@ -95,6 +95,150 @@ def test_incremental_second_file(spark, wh_and_csv, dims, tmp_path):
     assert aa["2024-05-03"]["ma7"] == round((1 + 6 + 1) / 3, 2)
 
 
+@pytest.mark.parametrize(
+    "module, attr",
+    [("pipeline", "enrich"), ("marts", "mv_focos_day_dim")],
+    ids=["enrich", "mv_focos_day_dim"],
+)
+def test_rerun_completes_a_failed_batch(spark, tmp_path, dims, monkeypatch, module, attr):
+    """A batch that fails after its rows are curated must not be
+    stranded: the rerun enriches and publishes it whole, and replaces
+    (never doubles) enriched rows an earlier attempt already published."""
+    from inpe_queimadas_etl_spark import marts, pipeline
+    from inpe_queimadas_etl_spark.checks import REQUIRED_TABLES
+
+    owner = {"pipeline": pipeline, "marts": marts}[module]
+    real = getattr(owner, attr)
+    calls = {"n": 0}
+
+    def fails_once(*args, **kwargs):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise RuntimeError("simulated crash")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(owner, attr, fails_once)
+    csv_path = str(tmp_path / "focos_20240502.csv")
+    write_fixture_csv(csv_path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    wh = Warehouse(str(tmp_path / "wh"))
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_day(spark, wh, csv_path, FILE_DATE, dims)
+    run_day(spark, wh, csv_path, FILE_DATE, dims)
+
+    assert wh.read(spark, "enriched_focos").count() == G.N_VALID_UNIQUE
+    assert [t for t in REQUIRED_TABLES if not wh.exists(t)] == []
+    assert wh.read(spark, "curated_focos").count() == G.N_VALID_UNIQUE
+    daily_uf = wh.read(spark, "focos_diario_uf")
+    assert daily_uf.agg(F.sum("n_focos")).collect()[0][0] == 12
+
+
+def test_batch_reads_enriched_once(spark, tmp_path, dims, monkeypatch):
+    """The marts aggregate the batch's own rows: enriched_focos is read
+    once per batch (the prior partitions it merges with), never again
+    after the batch publishes it."""
+    csv1 = str(tmp_path / "focos_20240502.csv")
+    write_fixture_csv(csv1, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    wh = Warehouse(str(tmp_path / "wh"))
+    run_day(spark, wh, csv1, FILE_DATE, dims)
+
+    reads = []
+    real_read = Warehouse.read
+
+    def spy(self, spark_, table):
+        reads.append(table)
+        return real_read(self, spark_, table)
+
+    monkeypatch.setattr(Warehouse, "read", spy)
+    rows = [["0.5", "0.5", "2024-05-02 18:00:00", "AQUA_M-T", "Mun m100", "AA", "Amazonia", "1.0"]]
+    csv2 = str(tmp_path / "focos_20240503.csv")
+    write_fixture_csv(csv2, G.FOCOS_HEADER, rows, sep=";")
+    metrics = run_day(spark, wh, csv2, dt.date(2024, 5, 3), dims)
+    assert metrics["rows_new"] == 1
+    assert reads.count("enriched_focos") == 1
+
+
+def _month_rows(day: str, spill: str) -> list[list]:
+    """The fixture rows moved to ``day``; the spillover row to ``spill``."""
+    return [
+        [r[0], r[1], r[2].replace("2024-05-02", day).replace("2024-05-01", spill), *r[3:]]
+        for r in G.FOCOS_ROWS
+    ]
+
+
+def test_monthly_marts_across_a_month_boundary(spark, tmp_path, dims):
+    """Two files whose events fall on both sides of 2024-06-01: each
+    month's monthly marts equal the counts grouped straight from the
+    events and the sums of their daily rows, with the same density
+    rule; a replay of both files leaves them unchanged."""
+    from collections import Counter
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    files = [
+        (dt.date(2024, 5, 31), _month_rows("2024-05-31", "2024-05-30")),
+        # a June file whose spillover row is a May event
+        (dt.date(2024, 6, 1), _month_rows("2024-06-01", "2024-05-31")),
+    ]
+    paths = []
+    for day, rows in files:
+        path = str(tmp_path / f"focos_{day:%Y%m%d}.csv")
+        write_fixture_csv(path, G.FOCOS_HEADER, rows, sep=";")
+        paths.append((day, path))
+        assert run_day(spark, wh, path, day, dims)["rows_new"] == G.N_VALID_UNIQUE
+
+    def month(d):
+        return str(d.replace(day=1))
+
+    def density(n, area):
+        return None if area in (None, 0) else round(100.0 * n / area, 4)
+
+    def monthly_tables():
+        mun = {
+            (str(r["month"]), r["mun_cd_mun"]): r.asDict()
+            for r in wh.read(spark, "focos_mensal_municipio").collect()
+        }
+        uf = {
+            (str(r["month"]), r["uf"]): r.asDict()
+            for r in wh.read(spark, "focos_mensal_uf").collect()
+        }
+        return mun, uf
+
+    mun, uf = monthly_tables()
+    events = wh.read(spark, "enriched_focos").collect()
+    assert {k[0] for k in mun} == {k[0] for k in uf} == {"2024-05-01", "2024-06-01"}
+
+    mun_n = Counter((month(e["event_day"]), e["mun_cd_mun"]) for e in events if e["mun_cd_mun"])
+    mun_meta = {
+        (month(e["event_day"]), e["mun_cd_mun"]): (e["mun_nm_mun"], e["mun_uf"], e["mun_area_km2"])
+        for e in events
+        if e["mun_cd_mun"]
+    }
+    daily_mun = Counter()
+    for r in wh.read(spark, "focos_diario_municipio").collect():
+        daily_mun[(month(r["day"]), r["mun_cd_mun"])] += r["n_focos"]
+    assert {k: r["n_focos"] for k, r in mun.items()} == dict(mun_n) == dict(daily_mun)
+    for k, r in mun.items():
+        name, uf_code, area = mun_meta[k]
+        assert (r["mun_nm_mun"], r["mun_uf"], r["mun_area_km2"]) == (name, uf_code, area)
+        assert r["focos_por_100km2"] == density(r["n_focos"], area)
+
+    uf_area = dict(G.uf_area_rows())
+    uf_n = Counter((month(e["event_day"]), e["mun_uf"]) for e in events if e["mun_uf"])
+    daily_uf = Counter()
+    for r in wh.read(spark, "focos_diario_uf").collect():
+        daily_uf[(month(r["day"]), r["uf"])] += r["n_focos"]
+    assert {k: r["n_focos"] for k, r in uf.items()} == dict(uf_n) == dict(daily_uf)
+    for (_, code), r in uf.items():
+        assert r["uf_area_km2"] == uf_area[code]
+        assert r["focos_por_100km2"] == density(r["n_focos"], uf_area[code])
+    # May holds both files' May events, June only the June file's
+    assert uf[("2024-05-01", "AA")]["n_focos"] == 6 + 1 + 1
+    assert uf[("2024-06-01", "AA")]["n_focos"] == 6
+
+    for day, path in paths:
+        assert run_day(spark, wh, path, day, dims)["rows_new"] == 0
+    assert monthly_tables() == (mun, uf)
+
+
 class TestWriteAuditPublish:
     """VERDICT r3 #3: overwrites are write-audit-publish — a Spark job
     dying mid-write must leave the live partition byte-identical."""

@@ -4,7 +4,8 @@ search kernels, the LLM-corpus operator suite (``suite``, the BPE
 tokenizer, the quality classifier) or the incremental dedup index.
 The dashboard query layer (``queries``) answers from the serving
 context's in-memory cube, so it must not import Spark at all.
-Spark-free: the check reads each module's source."""
+Spark-free: the checks read each module's source, and the traced
+benchmark's wrap list is checked against the package's attributes."""
 
 from __future__ import annotations
 
@@ -86,3 +87,42 @@ def test_query_layer_does_not_import_spark():
     # the scan must see the module's imports, or the guard is vacuous
     assert "numpy" in names and "pyarrow" in names
     assert not sorted(n for n in names if n.split(".")[0] == "pyspark")
+
+
+class _RecordingTracer:
+    """Stands in for perfbench's tracer: records what it is asked to
+    wrap and wraps nothing."""
+
+    def __init__(self):
+        self.wrapped: list[tuple[object, str]] = []
+        self._patches: list[tuple[object, str, object]] = []
+
+    def wrap(self, owner, attr, name, **kwargs):
+        self.wrapped.append((owner, attr))
+
+
+def test_traced_benchmark_wraps_only_existing_attributes():
+    """The traced benchmark wraps package functions by name; a rename
+    or deletion must fail here rather than crash the traced run."""
+    import importlib.util
+
+    from inpe_queimadas_etl_spark import api
+
+    path = PKG_DIR.parent / "perfbench" / "layers.py"
+    spec = importlib.util.spec_from_file_location("perfbench_layers", path)
+    layers = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layers)
+
+    tracer = _RecordingTracer()
+    orig_cached = api.cached
+    try:
+        layers.instrument(tracer)
+    finally:
+        api.cached = orig_cached
+    assert len(tracer.wrapped) > 20
+    missing = [
+        f"{getattr(owner, '__name__', owner)}.{attr}"
+        for owner, attr in tracer.wrapped
+        if not hasattr(owner, attr)
+    ]
+    assert missing == []
