@@ -13,14 +13,24 @@ the same guarantees come from:
 - event-day spillover handled by recomputing every event day present
   in the batch, not just the file date (SURVEY.md §7.6).
 
-Each batch aggregates events once: the daily marts and the fact MV
-read the affected days' enriched rows the batch already holds, the
-monthly marts roll up the published daily marts of the affected
-months, and the trend reads the whole daily UF mart.
+A batch runs in four steps:
 
-A whole date range is therefore ONE Spark job over all days — the
-per-day loop disappears; `run_range` just iterates extraction and
-feeds a single multi-day batch through the same `process_batch`.
+1. the curated batch is pinned (``localCheckpoint``) once, so the CSV
+   scan, canonicalization and dedup run once; its new rows are pinned
+   after the anti-join against ``curated_focos``;
+2. the new rows are enriched in one pass and merged with the prior
+   rows of the affected event days (``enriched_days``, pinned);
+3. the tables are published in two waves of concurrent Spark jobs
+   (``_run_concurrently``): first ``enriched_focos``, the five daily
+   marts and the fact MV, each from ``enriched_days``; then the two
+   monthly marts, which roll up the published daily marts of the
+   affected months, and the trend over the whole daily UF mart. The
+   waves are separated by a barrier, and each wave's tables are
+   independent of each other;
+4. ``curated_focos`` is appended alone and last.
+
+``run_range`` feeds a multi-day date range through the same
+``process_batch`` as one batch, so there is no per-day loop.
 """
 
 from __future__ import annotations
@@ -28,8 +38,10 @@ from __future__ import annotations
 import datetime as dt
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -231,9 +243,11 @@ class Warehouse:
         tmp = self._stage_dir(table)
         # staging dir is fresh, so static overwrite is correct — and
         # unlike the dynamic committer it writes the _SUCCESS marker
-        # the audit requires as commit evidence
+        # the audit requires as commit evidence. One task per partition
+        # value writes one file per partition.
         (
-            df.write.mode("overwrite")
+            df.repartition(partition_col)
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "static")
             .partitionBy(partition_col)
             .parquet(str(tmp))
@@ -262,7 +276,8 @@ class Warehouse:
     def append(self, df: DataFrame, table: str, partition_col: str | None = None) -> None:
         w = df.write.mode("append")
         if partition_col:
-            w = w.partitionBy(partition_col)
+            # one file per partition, as overwrite_partitions writes
+            w = df.repartition(partition_col).write.mode("append").partitionBy(partition_col)
         w.parquet(self.path(table))
 
     def overwrite(self, df: DataFrame, table: str) -> None:
@@ -285,6 +300,21 @@ class Warehouse:
         shutil.rmtree(trash, ignore_errors=True)
 
 
+def _run_concurrently(tasks: list) -> list:
+    """Run each thunk on a thread of its own and return their results
+    in order. Every thunk finishes before the first error, in
+    submission order, is raised, so nothing is still writing when the
+    caller sees it. Each thread inherits the caller's Spark job group
+    and local properties."""
+    session = SparkSession.getActiveSession()
+    inherit = inheritable_thread_target
+    if session is not None:
+        inherit = inheritable_thread_target(session)
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = [pool.submit(inherit(task)) for task in tasks]
+    return [f.result() for f in futures]
+
+
 def process_batch(
     spark: SparkSession,
     warehouse: Warehouse,
@@ -300,16 +330,21 @@ def process_batch(
     the rerun's anti-join and is enriched and published whole.
     """
     t0 = time.perf_counter()
+    # localCheckpoint pins the batch once: its count, the anti-join and
+    # the final curated append all read the pinned rows, so the CSV
+    # scan, canonicalization and dedup run once. The new rows are
+    # pinned too: a recomputation after the append would re-list
+    # curated_focos, find the rows there and silently empty the batch
+    # (the read-your-own-append hazard). On a cluster this would be a
+    # staging-table write instead.
+    batch = curated_batch.localCheckpoint(eager=True)
     existing = warehouse.read(spark, "curated_focos")
-    # localCheckpoint pins the new rows once: enrichment and the final
-    # curated append both read them, and a recomputation after the
-    # append would re-list curated_focos, find the rows there and
-    # silently empty the batch (the read-your-own-append hazard). On a
-    # cluster this would be a staging-table write instead.
-    fresh = new_rows_only(curated_batch, existing).localCheckpoint(eager=True)
+    fresh = new_rows_only(batch, existing)
+    if existing is not None:
+        fresh = fresh.localCheckpoint(eager=True)
     n_new = fresh.count()
 
-    metrics = {"rows_in_batch": curated_batch.count(), "rows_new": n_new}
+    metrics = {"rows_in_batch": batch.count(), "rows_new": n_new}
     if n_new == 0:
         metrics["seconds"] = round(time.perf_counter() - t0, 3)
         return metrics
@@ -341,55 +376,61 @@ def process_batch(
         )
     else:
         enriched_days = enriched_new
-    warehouse.overwrite_partitions(enriched_days, "enriched_focos", "event_day")
 
-    # daily marts: the affected days' events, which enriched_days holds
-    # exactly as the partitions just published
-    warehouse.overwrite_partitions(
-        marts.focos_diario_municipio(enriched_days), "focos_diario_municipio", "day"
-    )
-    warehouse.overwrite_partitions(
-        marts.focos_diario_uf(enriched_days, dims["uf_area"]), "focos_diario_uf", "day"
-    )
-    warehouse.overwrite_partitions(
-        marts.focos_diario_bioma(enriched_days), "focos_diario_bioma", "day"
-    )
-    warehouse.overwrite_partitions(
-        marts.focos_diario_uc(enriched_days), "focos_diario_uc", "day"
-    )
-    warehouse.overwrite_partitions(
-        marts.focos_diario_ti(enriched_days), "focos_diario_ti", "day"
+    def publish_days(build, table: str, *args):
+        return lambda: warehouse.overwrite_partitions(
+            build(enriched_days, *args), table, "day"
+        )
+
+    # wave 1: the tables of the affected days, each from enriched_days,
+    # which holds exactly what the enriched partitions now hold
+    _run_concurrently(
+        [
+            lambda: warehouse.overwrite_partitions(
+                enriched_days, "enriched_focos", "event_day"
+            ),
+            publish_days(marts.focos_diario_municipio, "focos_diario_municipio"),
+            publish_days(marts.focos_diario_uf, "focos_diario_uf", dims["uf_area"]),
+            publish_days(marts.focos_diario_bioma, "focos_diario_bioma"),
+            publish_days(marts.focos_diario_uc, "focos_diario_uc"),
+            publish_days(marts.focos_diario_ti, "focos_diario_ti"),
+            publish_days(marts.mv_focos_day_dim, "mv_focos_day_dim"),
+        ]
     )
 
-    # monthly marts: roll up the published daily rows of affected months
+    # wave 2: roll up the daily marts wave 1 published. A daily mart
+    # that has no file yet (every batch so far unattributed: Spark
+    # writes no file for an empty partitioned frame) has nothing to
+    # roll up.
     affected_months = sorted({dt.date(d.year, d.month, 1) for d in affected_days})
     month_strs = [str(m) for m in affected_months]
 
-    def daily_rows_of_months(table: str) -> DataFrame:
-        return warehouse.read(spark, table).filter(
-            F.trunc("day", "month").cast("string").isin(month_strs)
-        )
+    def monthly(build, daily: str, table: str):
+        def publish():
+            rows = warehouse.read(spark, daily)
+            if rows is not None:
+                in_months = F.trunc("day", "month").cast("string").isin(month_strs)
+                warehouse.overwrite_partitions(build(rows.filter(in_months)), table, "month")
 
-    warehouse.overwrite_partitions(
-        marts.focos_mensal_municipio(daily_rows_of_months("focos_diario_municipio")),
-        "focos_mensal_municipio",
-        "month",
-    )
-    warehouse.overwrite_partitions(
-        marts.focos_mensal_uf(daily_rows_of_months("focos_diario_uf")),
-        "focos_mensal_uf",
-        "month",
+        return publish
+
+    def trend():
+        # full recompute over the whole daily UF mart — a small aggregate
+        daily_uf = warehouse.read(spark, "focos_diario_uf")
+        if daily_uf is not None:
+            warehouse.overwrite(marts.focos_diario_uf_trend(daily_uf), "focos_diario_uf_trend")
+
+    _run_concurrently(
+        [
+            monthly(
+                marts.focos_mensal_municipio, "focos_diario_municipio", "focos_mensal_municipio"
+            ),
+            monthly(marts.focos_mensal_uf, "focos_diario_uf", "focos_mensal_uf"),
+            trend,
+        ]
     )
 
-    # serving fact MV over the affected days; trend over the whole
-    # daily UF mart (full recompute — a small aggregate)
-    warehouse.overwrite_partitions(
-        marts.mv_focos_day_dim(enriched_days), "mv_focos_day_dim", "day"
-    )
-    full_daily_uf = warehouse.read(spark, "focos_diario_uf")
-    warehouse.overwrite(marts.focos_diario_uf_trend(full_daily_uf), "focos_diario_uf_trend")
-
-    # last: the batch is done
+    # last, alone: the batch is done
     warehouse.append(fresh, "curated_focos", partition_col="file_date")
 
     metrics.update(
@@ -454,22 +495,25 @@ def write_validation_report(
     if enriched is None or daily_mun is None or daily_uf is None:
         return None
 
-    results = [
-        C.check_mart_consistency(daily_mun, daily_uf, enriched),
-        C.check_enrichment_coverage(enriched),
-        C.check_checked_flags(enriched),
-    ]
-    report = C.run_checks(results)
+    def last_day_rows(daily: DataFrame):
+        def count():
+            day = daily.agg(F.max("day")).collect()[0][0]
+            return day, daily.filter(F.col("day") == day).count()
 
-    # last-day counts section (validate_marts.py _fetch_counts analog)
-    uf_day = daily_uf.agg(F.max("day")).collect()[0][0]
-    mun_day = daily_mun.agg(F.max("day")).collect()[0][0]
-    counts = {
-        "uf_day": uf_day,
-        "uf_rows": daily_uf.filter(F.col("day") == uf_day).count(),
-        "mun_day": mun_day,
-        "mun_rows": daily_mun.filter(F.col("day") == mun_day).count(),
-    }
+        return count
+
+    *results, (uf_day, uf_rows), (mun_day, mun_rows) = _run_concurrently(
+        [
+            lambda: C.check_mart_consistency(daily_mun, daily_uf, enriched),
+            lambda: C.check_enrichment_coverage(enriched),
+            lambda: C.check_checked_flags(enriched),
+            # last-day counts section (validate_marts.py _fetch_counts analog)
+            last_day_rows(daily_uf),
+            last_day_rows(daily_mun),
+        ]
+    )
+    report = C.run_checks(results)
+    counts = {"uf_day": uf_day, "uf_rows": uf_rows, "mun_day": mun_day, "mun_rows": mun_rows}
     return C.write_run_report(
         report,
         counts,

@@ -11,7 +11,9 @@ engine keeps the same shape: a driver-side fetch-to-landing-dir step
   default) — the sniff is driver-side; the distributed read uses the
   resolved delimiter.
 - All columns load as strings (transform casts), matching
-  `pd.read_csv(dtype=str)` (transform:87).
+  `pd.read_csv(dtype=str)` (transform:87). The header row is parsed
+  driver-side too, with Spark's own naming rule, so the read carries
+  its schema and no Spark job runs to infer it.
 - Monthly->daily extraction (S4, extract:116-156) finds the date
   column by name heuristics and filters rows whose ISO or dd/mm/yyyy
   date equals the target day — expressed as JVM regexp/filter so it
@@ -29,6 +31,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.core import find_col, norm_name
 
@@ -43,15 +46,29 @@ def sniff_delimiter(path: str, default: str = ";") -> str:
         return default
 
 
+def _spark_header(path: str, sep: str) -> list[str]:
+    """The column names Spark's CSV reader gives the header row of
+    ``path`` (``CSVDataSource.makeSafeHeader``, case-insensitive): the
+    first non-blank line after a UTF-8 BOM, split on ``sep``; an empty
+    name becomes ``_c{i}`` and a name repeated case-insensitively gets
+    its index ``i`` appended."""
+    with open(path, encoding="utf-8-sig", errors="replace") as fh:
+        line = next((ln for ln in fh if ln.strip()), "")
+    names = next(csv.reader([line], delimiter=sep), [])
+    lowered = [n.lower() for n in names]
+    repeated = {n for n in lowered if lowered.count(n) > 1}
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if n.lower() in repeated else n
+        for i, n in enumerate(names)
+    ]
+
+
 def read_csv_all_string(spark: SparkSession, path: str, sep: str | None = None) -> DataFrame:
-    """Header CSV -> all-string DataFrame (S6)."""
+    """Header CSV -> all-string DataFrame (S6). The header is parsed on
+    the driver, so the read starts no Spark job to infer it."""
     sep = sep or sniff_delimiter(path)
-    return (
-        spark.read.option("header", True)
-        .option("sep", sep)
-        .option("inferSchema", False)
-        .csv(path)
-    )
+    schema = StructType([StructField(n, StringType()) for n in _spark_header(path, sep)])
+    return spark.read.schema(schema).option("header", True).option("sep", sep).csv(path)
 
 
 def extract_zip_csv(zip_path: str, out_dir: str) -> str:

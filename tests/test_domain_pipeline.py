@@ -97,13 +97,21 @@ def test_incremental_second_file(spark, wh_and_csv, dims, tmp_path):
 
 @pytest.mark.parametrize(
     "module, attr",
-    [("pipeline", "enrich"), ("marts", "mv_focos_day_dim")],
-    ids=["enrich", "mv_focos_day_dim"],
+    [
+        ("pipeline", "enrich"),
+        ("marts", "mv_focos_day_dim"),
+        ("marts", "focos_diario_bioma"),
+        ("marts", "focos_mensal_uf"),
+    ],
+    ids=["enrich", "mv_focos_day_dim", "focos_diario_bioma", "focos_mensal_uf"],
 )
 def test_rerun_completes_a_failed_batch(spark, tmp_path, dims, monkeypatch, module, attr):
     """A batch that fails after its rows are curated must not be
     stranded: the rerun enriches and publishes it whole, and replaces
-    (never doubles) enriched rows an earlier attempt already published."""
+    (never doubles) enriched rows an earlier attempt already published.
+    A failure in either publish wave surfaces only after the wave's
+    other publishes finished: none is left staged, and the curated
+    append never runs."""
     from inpe_queimadas_etl_spark import marts, pipeline
     from inpe_queimadas_etl_spark.checks import REQUIRED_TABLES
 
@@ -123,6 +131,9 @@ def test_rerun_completes_a_failed_batch(spark, tmp_path, dims, monkeypatch, modu
     wh = Warehouse(str(tmp_path / "wh"))
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_day(spark, wh, csv_path, FILE_DATE, dims)
+    assert sorted((wh.root / "_tmp").glob("*__*")) == []
+    assert sorted((wh.root / "_trash").glob("*__*")) == []
+    assert not wh.exists("curated_focos")
     run_day(spark, wh, csv_path, FILE_DATE, dims)
 
     assert wh.read(spark, "enriched_focos").count() == G.N_VALID_UNIQUE
@@ -130,6 +141,108 @@ def test_rerun_completes_a_failed_batch(spark, tmp_path, dims, monkeypatch, modu
     assert wh.read(spark, "curated_focos").count() == G.N_VALID_UNIQUE
     daily_uf = wh.read(spark, "focos_diario_uf")
     assert daily_uf.agg(F.sum("n_focos")).collect()[0][0] == 12
+
+
+def test_run_concurrently_waits_for_every_task_before_raising():
+    """Spark-free: results come back in submission order, and the first
+    error (in submission order) is raised only after a slower sibling
+    finished."""
+    import threading
+    import time
+
+    from inpe_queimadas_etl_spark.pipeline import _run_concurrently
+
+    assert _run_concurrently([lambda: 1, lambda: time.sleep(0.05) or 2, lambda: 3]) == [1, 2, 3]
+
+    finished = threading.Event()
+
+    def slow():
+        time.sleep(0.3)
+        finished.set()
+
+    def fails(msg):
+        def run():
+            raise RuntimeError(msg)
+
+        return run
+
+    with pytest.raises(RuntimeError, match="first"):
+        _run_concurrently([fails("first"), slow, fails("second")])
+    assert finished.is_set()
+
+
+def test_run_concurrently_keeps_the_callers_job_group(spark):
+    """Jobs started on the worker threads run in the caller's job group."""
+    from inpe_queimadas_etl_spark.pipeline import _run_concurrently
+
+    sc = spark.sparkContext
+    sc.setJobGroup("concurrent-publish", "job group probe")
+    try:
+        counts = _run_concurrently([lambda: spark.range(10).count()] * 3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts == [10, 10, 10]
+    assert len(sc.statusTracker().getJobIdsForGroup("concurrent-publish")) >= 3
+
+
+def test_transform_runs_once_per_batch(spark, tmp_path, dims, monkeypatch):
+    """The curated batch is pinned once: the canonicalize pass sees each
+    input row once per run_day, not again for the batch's row count."""
+    from inpe_queimadas_etl_spark import transform
+
+    seen = spark.sparkContext.accumulator(0)
+    real = transform._canonicalize_batch
+
+    def counting(pdf, *args):
+        seen.add(len(pdf))
+        return real(pdf, *args)
+
+    monkeypatch.setattr(transform, "_canonicalize_batch", counting)
+    csv_path = str(tmp_path / "focos_20240502.csv")
+    write_fixture_csv(csv_path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    metrics = run_day(spark, Warehouse(str(tmp_path / "wh")), csv_path, FILE_DATE, dims)
+    assert metrics["rows_new"] == G.N_VALID_UNIQUE
+    # the rows with valid coordinates reach the pass: all but nan/95.0
+    assert seen.value == len(G.FOCOS_ROWS) - 2
+
+
+def test_unattributed_first_batch_completes(spark, tmp_path, dims):
+    """A first batch with no attributed row leaves the daily
+    municipality and UF marts without a file: the monthly roll-ups and
+    the trend have nothing to roll up, and the batch still completes.
+    A later attributed batch then builds every table."""
+    from inpe_queimadas_etl_spark.checks import REQUIRED_TABLES
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    offshore = [
+        ["0.5", "-1.0", "2024-05-02 14:30:00", "AQUA_M-T", "", "", "", ""],
+        ["0.6", "-2.0", "2024-05-02 15:30:00", "AQUA_M-T", "", "", "", ""],
+    ]
+    csv1 = str(tmp_path / "focos_20240502.csv")
+    write_fixture_csv(csv1, G.FOCOS_HEADER, offshore, sep=";")
+    assert run_day(spark, wh, csv1, FILE_DATE, dims)["rows_new"] == 2
+    assert wh.read(spark, "curated_focos").count() == 2
+    assert not wh.exists("focos_diario_uf")
+    assert run_day(spark, wh, csv1, FILE_DATE, dims)["rows_new"] == 0
+    assert wh.read(spark, "curated_focos").count() == 2
+
+    csv2 = str(tmp_path / "focos_20240503.csv")
+    write_fixture_csv(csv2, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    assert run_day(spark, wh, csv2, dt.date(2024, 5, 3), dims)["rows_new"] == G.N_VALID_UNIQUE
+    assert [t for t in REQUIRED_TABLES if not wh.exists(t)] == []
+    attributed = (
+        wh.read(spark, "enriched_focos").filter(F.col("mun_cd_mun").isNotNull()).count()
+    )
+    assert attributed == 12
+    for table in (
+        "focos_diario_municipio",
+        "focos_diario_uf",
+        "focos_mensal_municipio",
+        "focos_mensal_uf",
+        "focos_diario_uf_trend",
+    ):
+        total = wh.read(spark, table).agg(F.sum("n_focos")).collect()[0][0]
+        assert total == attributed, table
 
 
 def test_batch_reads_enriched_once(spark, tmp_path, dims, monkeypatch):

@@ -5,6 +5,8 @@ from __future__ import annotations
 import datetime as dt
 import zipfile
 
+import pytest
+
 from inpe_queimadas_etl_spark.functions.legend import compute_breaks
 from inpe_queimadas_etl_spark.sources.csv_ingest import (
     LandingCache,
@@ -21,6 +23,47 @@ def test_sniff_delimiter(tmp_path):
     p2 = write_fixture_csv(str(tmp_path / "b.csv"), ["a", "b"], [["1", "2"]], sep=",")
     assert sniff_delimiter(p1) == ";"
     assert sniff_delimiter(p2) == ","
+
+
+HEADER_CASES = {
+    "semicolon": "Lat;Lon;Data_Hora_GMT\n0,5;1,5;2024-05-02 10:00:00\n",
+    "comma": "latitude,longitude,satelite\n0.5,1.5,AQUA\n",
+    "quoted": '"lat";"lon ";" a;b"\n1;2;3\n',
+    "case_duplicates": "Lat;lat;LAT;x;x\n1;2;3;4;5\n",
+    "empty_name": "lat;;lon;\n1;2;3;4\n",
+    "bom": "\ufefflat,lon\n1,2\n",
+    "leading_blank_lines": "\n  \nlat,lon\n1,2\n",
+}
+
+
+@pytest.mark.parametrize("case", sorted(HEADER_CASES))
+def test_header_matches_spark_inference(spark, tmp_path, case):
+    """The driver-side header parse names the columns exactly as
+    Spark's own header inference does, and the rows read the same."""
+    path = tmp_path / f"{case}.csv"
+    path.write_text(HEADER_CASES[case], encoding="utf-8")
+    sep = sniff_delimiter(str(path))
+    ours = read_csv_all_string(spark, str(path))
+    inferred = spark.read.option("header", True).option("sep", sep).csv(str(path))
+    assert ours.columns == inferred.columns
+    assert [f.dataType.simpleString() for f in ours.schema] == ["string"] * len(ours.columns)
+    assert ours.collect() == inferred.collect()
+
+
+def test_read_csv_starts_no_spark_job(spark, tmp_path):
+    """Building the all-string read runs no Spark job: the header is
+    parsed on the driver."""
+    path = write_fixture_csv(
+        str(tmp_path / "d.csv"), ["Lat", "Lon"], [["0,5", "1,5"]], sep=";"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("read-csv-all-string", "header probe")
+    try:
+        read_csv_all_string(spark, path)
+        jobs = sc.statusTracker().getJobIdsForGroup("read-csv-all-string")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
 
 
 def test_monthly_to_daily_filter(spark, tmp_path):
