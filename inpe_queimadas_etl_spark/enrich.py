@@ -8,11 +8,13 @@ with dynamic partition overwrite — same outcome (first-match
 attribution, stable under re-runs, checked flags all true after a
 pass), no mutable state (SURVEY.md §7.1).
 
-The whole enrichment is one mapInPandas. The four polygon dims are
+The enrichment runs inside the batch pass (``pipeline.batch_pass``),
+right after each day's rows are curated. The four polygon dims are
 indexed once on the driver (:func:`enrich_dims`) and ship in the task
 closure; :func:`enrich_batch` attributes every dimension of a batch in
 one traversal, with the kernels of operators.geo, and takes names, uf
-and area from per-id dicts instead of joins:
+and area from per-id dicts instead of joins. :func:`enrich` is the
+same over a curated DataFrame, kept as the Spark reference path:
 
 - municipality: point-in-polygon first (st_intersects,
   20_enrich_municipio.sql:43-54), then nearest-within-2km over the
@@ -59,6 +61,16 @@ _ATTR_FIELDS = [
     for f in ENRICHED_FOCOS.fields
     if f.name not in CURATED_FOCOS.names + ["event_day"] + _ID_COLUMNS
 ]
+ENRICHED_LAYOUT = (
+    _ID_COLUMNS + CURATED_FOCOS.names + ["event_day"] + [f.name for f in _ATTR_FIELDS]
+)
+# the rows enrich_batch emits from curated rows without event_day, all
+# nullable, as enriched_focos has always been written
+BATCH_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in _ID_COLUMNS]
+    + [T.StructField(f.name, f.dataType) for f in CURATED_FOCOS.fields]
+    + _ATTR_FIELDS
+)
 
 
 @dataclass(frozen=True)

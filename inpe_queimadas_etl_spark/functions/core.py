@@ -37,9 +37,10 @@ def find_col(
 
 def decimal_comma_to_double(col: Column | str) -> Column:
     """Decimal-comma tolerant numeric cast: ',' -> '.' then cast,
-    invalid -> null (P3, transform/inpe_focos_diario.py:39-40)."""
+    invalid -> null (P3, transform/inpe_focos_diario.py:39-40). A
+    try_cast, so an unparseable value is null under ANSI mode too."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c.cast("string"), ",", ".").cast("double")
+    return F.regexp_replace(c.cast("string"), ",", ".").try_cast("double")
 
 
 def clean_text_value(col: Column | str) -> Column:

@@ -15,11 +15,16 @@ the same guarantees come from:
 
 A batch runs in four steps:
 
-1. the curated batch is pinned (``localCheckpoint``) once, so the CSV
-   scan, canonicalization and dedup run once; its new rows are pinned
-   after the anti-join against ``curated_focos``;
-2. the new rows are enriched in one pass and merged with the prior
-   rows of the affected event days (``enriched_days``, pinned);
+1. one Python pass reads, curates, dedups and enriches the batch's
+   landed files: a single ``mapInPandas`` with one task per
+   ``file_date`` (``transform.curate_file``, then
+   ``enrich.enrich_batch``). The JVM adds ``event_day`` and pins the
+   result (``localCheckpoint``) once. When ``curated_focos`` exists,
+   the pinned rows are anti-joined on ``event_hash`` against its
+   partitions of the batch's file dates, and the new rows are pinned
+   too. One group-by collect gives the new rows per event day;
+2. the new rows are merged with the prior rows of the affected event
+   days (``enriched_days``, pinned);
 3. the tables are published in two waves of concurrent Spark jobs
    (``_run_concurrently``): first ``enriched_focos``, the five daily
    marts and the fact MV, each from ``enriched_days``; then the two
@@ -30,7 +35,10 @@ A batch runs in four steps:
 4. ``curated_focos`` is appended alone and last.
 
 ``run_range`` feeds a multi-day date range through the same
-``process_batch`` as one batch, so there is no per-day loop.
+``process_batch`` as one batch, so there is no per-day loop. The hash
+payload starts with ``file_date``, so a row can only repeat one of the
+same date: dedup within one task, and pruning the anti-join to the
+batch's dates, are exact.
 """
 
 from __future__ import annotations
@@ -41,15 +49,21 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
+import pandas as pd
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import marts
-from .enrich import enrich, new_rows_only
+from .enrich import BATCH_SCHEMA, ENRICHED_LAYOUT, enrich_batch, enrich_dims
+from .functions.core import event_day
 from .schemas import CURATED_FOCOS
-from .sources.csv_ingest import read_csv_all_string
-from .transform import curated_from_raw
+from .transform import curate_file
+
+# the Spark reference path of the batch pass; no pipeline step calls it
+from .enrich import enrich, new_rows_only  # noqa: F401
+from .sources.csv_ingest import read_csv_all_string  # noqa: F401
+from .transform import curated_from_raw  # noqa: F401
 
 
 class PublishAuditError(RuntimeError):
@@ -315,50 +329,92 @@ def _run_concurrently(tasks: list) -> list:
     return [f.result() for f in futures]
 
 
+def batch_pass(
+    spark: SparkSession,
+    day_files: list[tuple[dt.date, str]],
+    dims: dict,
+    monthly: bool = False,
+) -> DataFrame:
+    """The batch's rows, read, curated, deduped and enriched in one
+    mapInPandas with one task per distinct ``file_date``, in
+    ENRICHED_LAYOUT. A date's files are curated in the given order and
+    deduped together. ``monthly``: each file is a monthly archive."""
+    paths_by_date: dict[dt.date, list[str]] = {}
+    for file_date, path in day_files:
+        paths_by_date.setdefault(file_date, []).append(path)
+    tasks = list(paths_by_date.items())
+    edims = enrich_dims(dims["municipios"], dims["biomas"], dims["ucs"], dims["tis"])
+
+    def curate_and_enrich(batches):
+        for ids in batches:
+            for i in ids["id"]:
+                file_date, paths = tasks[i]
+                rows = pd.concat(
+                    [curate_file(p, file_date, monthly) for p in paths], ignore_index=True
+                )
+                rows = rows[~rows["event_hash"].duplicated()]
+                if len(rows):
+                    yield enrich_batch(rows, edims)
+
+    return (
+        spark.range(len(tasks), numPartitions=len(tasks))
+        .mapInPandas(curate_and_enrich, schema=BATCH_SCHEMA)
+        .withColumn("event_day", event_day("view_ts", "file_date"))
+        .select(*ENRICHED_LAYOUT)
+    )
+
+
+def not_loaded(batch: DataFrame, curated: DataFrame, file_dates: list[dt.date]) -> DataFrame:
+    """J1/K1: the batch's rows whose ``event_hash`` is not in
+    ``curated``. A row's hash covers its file date, so only the
+    ``file_dates`` partitions of ``curated`` are read."""
+    done = curated.filter(F.col("file_date").isin(file_dates)).select("event_hash")
+    return batch.join(done, "event_hash", "left_anti").select(*batch.columns)
+
+
 def process_batch(
     spark: SparkSession,
     warehouse: Warehouse,
-    curated_batch: DataFrame,
+    day_files: list[tuple[dt.date, str]],
     dims: dict,
+    monthly: bool = False,
 ) -> dict:
-    """Core incremental step: curated batch -> enriched table -> marts
-    -> curated table, idempotently. ``dims`` carries PolyFeature lists
-    ('municipios','biomas','ucs','tis') and the uf_area DataFrame.
+    """Core incremental step: landed ``(file_date, path)`` files ->
+    enriched table -> marts -> curated table, idempotently. ``dims``
+    carries PolyFeature lists ('municipios','biomas','ucs','tis') and
+    the uf_area DataFrame; ``monthly`` marks the files as monthly
+    archives.
 
     ``curated_focos`` is appended last: it is the record of which rows
     are done, so a batch that fails at any earlier step is new again to
     the rerun's anti-join and is enriched and published whole.
     """
     t0 = time.perf_counter()
-    # localCheckpoint pins the batch once: its count, the anti-join and
-    # the final curated append all read the pinned rows, so the CSV
-    # scan, canonicalization and dedup run once. The new rows are
-    # pinned too: a recomputation after the append would re-list
-    # curated_focos, find the rows there and silently empty the batch
-    # (the read-your-own-append hazard). On a cluster this would be a
-    # staging-table write instead.
-    batch = curated_batch.localCheckpoint(eager=True)
+    # localCheckpoint pins the pass once, so the files are read, curated
+    # and enriched once. The new rows are pinned too: a recomputation
+    # after the append would re-list curated_focos, find the rows there
+    # and silently empty the batch (the read-your-own-append hazard). On
+    # a cluster this would be a staging-table write instead.
+    batch = batch_pass(spark, day_files, dims, monthly).localCheckpoint(eager=True)
     existing = warehouse.read(spark, "curated_focos")
-    fresh = new_rows_only(batch, existing)
+    enriched_new = batch
     if existing is not None:
-        fresh = fresh.localCheckpoint(eager=True)
-    n_new = fresh.count()
+        file_dates = sorted({d for d, _ in day_files})
+        enriched_new = not_loaded(batch, existing, file_dates).localCheckpoint(eager=True)
+    new_per_day = enriched_new.groupBy("event_day").count().collect()
+    n_new = sum(r["count"] for r in new_per_day)
 
-    metrics = {"rows_in_batch": batch.count(), "rows_new": n_new}
+    metrics = {
+        "rows_in_batch": n_new if existing is None else batch.count(),
+        "rows_new": n_new,
+    }
     if n_new == 0:
         metrics["seconds"] = round(time.perf_counter() - t0, 3)
         return metrics
-
-    enriched_new = enrich(
-        fresh,
-        dims["municipios"],
-        dims["biomas"],
-        dims["ucs"],
-        dims["tis"],
-    ).localCheckpoint(eager=True)
+    fresh = enriched_new.select(*CURATED_FOCOS.names)
 
     # spillover: recompute every event day touched by this batch
-    affected_days = [r["event_day"] for r in enriched_new.select("event_day").distinct().collect()]
+    affected_days = sorted(r["event_day"] for r in new_per_day)
     day_strs = [str(d) for d in affected_days]
     prior = warehouse.read(spark, "enriched_focos")
     if prior is not None:
@@ -451,9 +507,7 @@ def run_day(
     dims: dict,
 ) -> dict:
     """One daily file end-to-end: CSV -> transform -> batch."""
-    raw = read_csv_all_string(spark, csv_path)
-    curated = curated_from_raw(raw, file_date)
-    return process_batch(spark, warehouse, curated, dims)
+    return process_batch(spark, warehouse, [(file_date, csv_path)], dims)
 
 
 def run_day_auto(
@@ -465,15 +519,17 @@ def run_day_auto(
 ) -> dict:
     """The full reference daily run (§3.1): extract with retention
     routing + monthly fallback (S1/S2/S5, sources.csv_ingest
-    .InpeExtractor), monthly->daily Spark filter when the archive won
-    (S4), transform, and the idempotent batch step. Mirrors
-    etl.cli.run -> extract -> transform -> load."""
-    from .sources.csv_ingest import load_extracted_day
-
+    .InpeExtractor), then the idempotent batch step, whose task keeps
+    the day's rows of a monthly archive (S4). Mirrors etl.cli.run ->
+    extract -> transform -> load."""
     result = extractor.extract_day(file_date)
-    raw = load_extracted_day(spark, result)
-    curated = curated_from_raw(raw, file_date)
-    metrics = process_batch(spark, warehouse, curated, dims)
+    metrics = process_batch(
+        spark,
+        warehouse,
+        [(file_date, result.path)],
+        dims,
+        monthly=result.source == "monthly",
+    )
     metrics["extract_source"] = result.source
     metrics["extract_key"] = result.key
     return metrics
@@ -490,10 +546,16 @@ def write_validation_report(
     from . import checks as C
 
     enriched = warehouse.read(spark, "enriched_focos")
-    daily_mun = warehouse.read(spark, "focos_diario_municipio")
-    daily_uf = warehouse.read(spark, "focos_diario_uf")
-    if enriched is None or daily_mun is None or daily_uf is None:
+    if enriched is None:
         return None
+
+    def daily_mart(table: str) -> DataFrame:
+        # no file yet (every batch so far unattributed): an empty mart
+        mart = warehouse.read(spark, table)
+        return spark.createDataFrame([], "day date, n_focos long") if mart is None else mart
+
+    daily_mun = daily_mart("focos_diario_municipio")
+    daily_uf = daily_mart("focos_diario_uf")
 
     def last_day_rows(daily: DataFrame):
         def count():
@@ -552,15 +614,7 @@ def run_range(
     todo = [(d, p) for d, p in day_files if str(d) not in done]
     if not todo:
         return [{"rows_in_batch": 0, "rows_new": 0, "days_skipped": skipped}]
-    batches = []
-    for file_date, path in todo:
-        raw = read_csv_all_string(spark, path)
-        batches.append(curated_from_raw(raw, file_date))
-    combined = batches[0]
-    for b in batches[1:]:
-        combined = combined.unionByName(b)
-    combined = combined.select([f.name for f in CURATED_FOCOS.fields])
-    result = process_batch(spark, warehouse, combined, dims)
+    result = process_batch(spark, warehouse, todo, dims)
     if skipped:
         result["days_skipped"] = skipped
     if write_report:

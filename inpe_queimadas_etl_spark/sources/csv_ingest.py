@@ -3,21 +3,26 @@
 The reference downloads INPE daily CSVs with a file cache and
 monthly-archive fallback (extract/inpe_focos_diario.py). The Spark
 engine keeps the same shape: a driver-side fetch-to-landing-dir step
-(HTTP stays in the driver; Spark never fetches), then a schema-sniffed
-`spark.read.csv` over the landing file(s).
+(HTTP stays in the driver; Spark never fetches), then one pandas read
+of each landed file inside the batch's curate-and-enrich task
+(``transform.curate_file``).
 
 - Dialect sniffing reads the first 4 KiB and tries csv.Sniffer with
   ';'/',' candidates (extract:85-89), falling back to ';' (INPE's
-  default) — the sniff is driver-side; the distributed read uses the
-  resolved delimiter.
+  default).
 - All columns load as strings (transform casts), matching
-  `pd.read_csv(dtype=str)` (transform:87). The header row is parsed
-  driver-side too, with Spark's own naming rule, so the read carries
-  its schema and no Spark job runs to infer it.
+  `pd.read_csv(dtype=str)` (transform:87). :func:`read_landed_csv`
+  reads a file as Spark's CSV reader does: the header names follow
+  Spark's naming rule (they reach ``props``), blank lines are skipped,
+  an empty field is null, and a short or long row is padded or cut to
+  the header's width.
 - Monthly->daily extraction (S4, extract:116-156) finds the date
-  column by name heuristics and filters rows whose ISO or dd/mm/yyyy
-  date equals the target day — expressed as JVM regexp/filter so it
-  pushes into the scan.
+  column by name heuristics and keeps the rows whose ISO or dd/mm/yyyy
+  date equals the target day (:func:`filter_monthly_to_day`).
+
+:func:`read_csv_all_string` is the same read as a Spark DataFrame. It
+is the reference path the pandas reader is tested against, not a
+production step.
 """
 
 from __future__ import annotations
@@ -29,8 +34,9 @@ import zipfile
 from dataclasses import dataclass
 from pathlib import Path
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.core import find_col, norm_name
@@ -46,14 +52,22 @@ def sniff_delimiter(path: str, default: str = ";") -> str:
         return default
 
 
-def _spark_header(path: str, sep: str) -> list[str]:
-    """The column names Spark's CSV reader gives the header row of
-    ``path`` (``CSVDataSource.makeSafeHeader``, case-insensitive): the
-    first non-blank line after a UTF-8 BOM, split on ``sep``; an empty
-    name becomes ``_c{i}`` and a name repeated case-insensitively gets
-    its index ``i`` appended."""
+# what java.lang.String.trim() strips: every char up to U+0020
+_JAVA_WS = "".join(map(chr, range(33)))
+
+
+def _nonblank_lines(path: str) -> list[str]:
+    """The lines of ``path`` after a UTF-8 BOM, split at any line end,
+    without the lines Spark's CSV reader skips (blank after a Java
+    trim)."""
     with open(path, encoding="utf-8-sig", errors="replace") as fh:
-        line = next((ln for ln in fh if ln.strip()), "")
+        return [ln for ln in fh.read().split("\n") if ln.strip(_JAVA_WS)]
+
+
+def _safe_names(line: str, sep: str) -> list[str]:
+    """Spark's ``CSVDataSource.makeSafeHeader`` (case-insensitive) over
+    one header line: an empty name becomes ``_c{i}`` and a name repeated
+    case-insensitively gets its index ``i`` appended."""
     names = next(csv.reader([line], delimiter=sep), [])
     lowered = [n.lower() for n in names]
     repeated = {n for n in lowered if lowered.count(n) > 1}
@@ -63,9 +77,34 @@ def _spark_header(path: str, sep: str) -> list[str]:
     ]
 
 
+def _spark_header(path: str, sep: str) -> list[str]:
+    """The column names Spark's CSV reader gives the header row of
+    ``path``: its first non-blank line, named by :func:`_safe_names`."""
+    lines = _nonblank_lines(path)
+    return _safe_names(lines[0], sep) if lines else []
+
+
+def read_landed_csv(path: str, sep: str | None = None) -> pd.DataFrame:
+    """Header CSV -> all-string pandas DataFrame, row for row what
+    :func:`read_csv_all_string` reads: each line is one record, an empty
+    field is None, and a row is padded with None or cut to the header's
+    width. Quotes follow Python's csv module, which differs from Spark's
+    reader only on a quote escaped inside a quoted field (``""`` or
+    ``\\"``)."""
+    sep = sep or sniff_delimiter(path)
+    lines = _nonblank_lines(path)
+    names = _safe_names(lines[0], sep) if lines else []
+    rows = np.full((max(len(lines) - 1, 0), len(names)), None, dtype=object)
+    for i, line in enumerate(lines[1:]):
+        fields = next(csv.reader([line], delimiter=sep), [])[: len(names)]
+        rows[i, : len(fields)] = fields
+    rows[rows == ""] = None
+    return pd.DataFrame(rows, columns=names)
+
+
 def read_csv_all_string(spark: SparkSession, path: str, sep: str | None = None) -> DataFrame:
-    """Header CSV -> all-string DataFrame (S6). The header is parsed on
-    the driver, so the read starts no Spark job to infer it."""
+    """Header CSV -> all-string Spark DataFrame (S6). The header is
+    parsed on the driver, so the read starts no Spark job to infer it."""
     sep = sep or sniff_delimiter(path)
     schema = StructType([StructField(n, StringType()) for n in _spark_header(path, sep)])
     return spark.read.schema(schema).option("header", True).option("sep", sep).csv(path)
@@ -87,23 +126,24 @@ def extract_zip_csv(zip_path: str, out_dir: str) -> str:
     return str(target)
 
 
-def filter_monthly_to_day(df: DataFrame, day: dt.date) -> DataFrame:
-    """S4 (extract:116-156): locate the date column, extract an ISO
-    (yyyy-mm-dd) or Brazilian (dd/mm/yyyy) date, keep rows == day."""
-    cols = [norm_name(c) for c in df.columns]
-    df = df.toDF(*cols)
+def filter_monthly_to_day(raw: pd.DataFrame, day: dt.date) -> pd.DataFrame:
+    """S4 (extract:116-156): locate the date column, read the first ISO
+    (yyyy-mm-dd) date in it, else the first Brazilian (dd/mm/yyyy) one,
+    and keep the rows dated ``day``. Column names come back normalized."""
+    cols = [norm_name(c) for c in raw.columns]
+    raw = raw.set_axis(cols, axis=1)
     date_col = find_col(
         cols, ["data", "datahora", "data_hora_gmt", "data_pas"], ["data", "hora", "gmt"]
     )
     if date_col is None:
         raise ValueError(f"no date column found in {cols[:40]}")
-    iso = F.regexp_extract(F.col(date_col), r"(\d{4}-\d{2}-\d{2})", 1)
-    br = F.regexp_extract(F.col(date_col), r"(\d{2}/\d{2}/\d{4})", 1)
-    parsed = F.coalesce(
-        F.when(iso != "", F.to_date(iso, "yyyy-MM-dd")),
-        F.when(br != "", F.to_date(br, "dd/MM/yyyy")),
+    text = raw[date_col].astype(object)
+    iso = text.str.extract(r"([0-9]{4}-[0-9]{2}-[0-9]{2})", expand=False)
+    br = text.str.extract(r"([0-9]{2}/[0-9]{2}/[0-9]{4})", expand=False)
+    parsed = pd.to_datetime(iso, format="%Y-%m-%d", errors="coerce").fillna(
+        pd.to_datetime(br, format="%d/%m/%Y", errors="coerce")
     )
-    return df.filter(parsed == F.lit(str(day)).cast("date"))
+    return raw[(parsed == pd.Timestamp(day)).to_numpy()].reset_index(drop=True)
 
 
 class LandingCache:
@@ -148,7 +188,7 @@ DEFAULT_RETENTION_DAYS = 45  # settings.inpe_retention_days (config.py:16)
 class ExtractResult:
     """What the extract step resolved for a date: the landed file and
     whether it is the daily CSV or the monthly archive (the caller
-    applies the monthly->daily Spark filter for 'monthly')."""
+    applies the monthly->daily filter for 'monthly')."""
 
     file_date: dt.date
     source: str  # 'daily' | 'monthly'
@@ -261,8 +301,8 @@ def http_fetcher(
     ``urllib.request.urlopen``.
 
     HTTP stays on the driver by design: one small file per day lands
-    in the LandingCache and only then does Spark read it — executors
-    never see a URL.
+    in the LandingCache and only then is it read — executors never
+    see a URL.
     """
     import http.client as _hclient
     import time as _time
@@ -300,18 +340,6 @@ def http_fetcher(
         return None
 
     return fetch
-
-
-def load_extracted_day(
-    spark: SparkSession, result: ExtractResult
-) -> DataFrame:
-    """Landed file -> all-string DataFrame for the day: daily files
-    read directly; monthly archives go through the Spark-side
-    monthly->daily filter (S4)."""
-    df = read_csv_all_string(spark, result.path)
-    if result.source == "monthly":
-        df = filter_monthly_to_day(df, result.file_date)
-    return df
 
 
 def write_fixture_csv(path: str, header: list[str], rows: list[list], sep: str = ";") -> str:

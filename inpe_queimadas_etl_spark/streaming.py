@@ -9,11 +9,11 @@ same batch transform + enrich + marts step — no separate streaming
 code path, no watermarks needed (late data is already handled by the
 event-day recompute inside process_batch).
 
-Each micro-batch can contain several landed files; rows are routed to
-their file_date by ``input_file_name()`` (the landing naming carries
-the date, e.g. ``focos_diario_br_20240502.csv``), and every file runs
-through the identical ``curated_from_raw`` + ``process_batch`` the
-batch pipeline uses. Spark's streaming checkpoint guarantees each
+Each micro-batch can contain several landed files. Their paths come
+from ``input_file_name()``, their file_date from the landing naming
+(e.g. ``focos_diario_br_20240502.csv``), and every file runs through
+the identical ``process_batch`` the batch pipeline uses, which reads
+it again in its own pass. Spark's streaming checkpoint guarantees each
 landed file is processed once; the anti-join append makes even a
 replayed file harmless.
 """
@@ -24,6 +24,7 @@ import datetime as dt
 import logging
 import re
 from pathlib import Path
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +32,6 @@ from pyspark.sql import types as T
 
 from .pipeline import Warehouse, process_batch
 from .sources.csv_ingest import sniff_delimiter
-from .transform import curated_from_raw
 
 log = logging.getLogger(__name__)
 
@@ -120,9 +120,8 @@ def start_landing_stream(
             except ValueError:
                 log.warning("skipping undated landing file %s", src)
                 continue
-            one = batch_df.filter(F.col(_SRC_COL) == src).drop(_SRC_COL)
-            curated = curated_from_raw(one, fdate)
-            metrics = process_batch(spark, warehouse, curated, dims)
+            path = unquote(urlparse(src).path)
+            metrics = process_batch(spark, warehouse, [(fdate, path)], dims)
             if on_batch is not None:
                 on_batch(fdate, metrics)
 

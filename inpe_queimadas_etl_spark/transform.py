@@ -1,24 +1,26 @@
 """CSV -> curated transform (reference P1-P9).
 
-Re-expresses src/etl/transform/inpe_focos_diario.py:81-186 as a Spark
-pipeline:
+Re-expresses src/etl/transform/inpe_focos_diario.py:81-186 as one
+pandas function per landed file, :func:`curate_file`, which the batch
+runs inside its curate-and-enrich task (``pipeline.process_batch``):
 
-- column normalization + fuzzy resolution happen driver-side over
-  ``df.columns`` (P1/P2);
-- decimal-comma casts and coordinate filters are JVM expressions
-  (P3-P5), so predicate pushdown and codegen apply;
-- row canonicalization — value cleansing (P6), canonical JSON payload
-  assembly (P7), and the props JSON serialization (P9) — runs in ONE
-  Arrow-batched mapInPandas pass matching the reference's json.dumps
-  bytes; the MD5 itself runs JVM-side (F.md5 over the payload string),
-  so hashes and props are byte-identical to the reference while the
-  hash stays inside whole-stage codegen;
-- first-row-per-hash dedup (P8) uses the CSV row order captured
-  before any shuffle, so the kept row matches the reference's
-  seen-set semantics deterministically (SURVEY.md §7.2).
+- the file is read as all-string columns (``csv_ingest.read_landed_csv``,
+  with Spark's header naming); a monthly archive keeps the file date's
+  rows (S4);
+- column normalization and fuzzy resolution (P1/P2);
+- the decimal-comma cast takes exactly the syntax of Spark's
+  ``try_cast(string AS double)`` (:func:`spark_double`), and rows
+  without finite in-range coordinates are dropped (P3-P5);
+- value cleansing (P6), canonical JSON payload assembly (P7) and the
+  props serialization (P9) run column-wise (:func:`_canonicalize_batch`),
+  byte for byte the reference's json.dumps output;
+- the MD5 is ``hashlib.md5`` over the UTF-8 payload, and the first row
+  per hash in file order is kept (P8). The payload starts with the
+  file date, so dedup within one date is exact.
 
-At scale: one linear scan, no shuffle except the final per-hash
-window; the pandas stage is Arrow-batched (not per-row Python).
+:func:`curated_from_raw` is the same transform over a Spark DataFrame
+(JVM casts, JVM ``md5`` and a per-hash window). It is the reference
+path the pandas function is tested against, not a production step.
 """
 
 from __future__ import annotations
@@ -27,14 +29,17 @@ import datetime as dt
 import hashlib
 import json
 import math
+import re
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .functions.core import decimal_comma_to_double, find_col, normalize_columns
+from .functions.core import decimal_comma_to_double, find_col, norm_name, normalize_columns
 from .schemas import CURATED_FOCOS
+from .sources.csv_ingest import _JAVA_WS, filter_monthly_to_day, read_landed_csv
 
 _ROW_ID = "__row_id"
 
@@ -57,6 +62,50 @@ def resolve_focos_columns(columns: list[str]) -> dict[str, str | None]:
         "uf": find_col(columns, ["estado", "uf"], ["estado", "uf"]),
         "bio": find_col(columns, ["bioma"], ["bioma"]),
     }
+
+
+# java.lang.Double.parseDouble's grammar (after its trim); groups:
+# sign, NaN, Infinity, decimal literal, hex literal
+_JAVA_DOUBLE = re.compile(
+    r"([+-]?)(?:(NaN)|(Infinity)"
+    r"|([0-9]+\.?[0-9]*(?:[eE][+-]?[0-9]+)?|\.[0-9]+(?:[eE][+-]?[0-9]+)?)[fFdD]?"
+    r"|(0[xX](?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)[pP][+-]?[0-9]+)[fFdD]?)"
+)
+# the literals Spark's cast takes after parseDouble refuses them
+# (Cast.processFloatingPointSpecialLiterals), matched lowercased
+_SPECIAL_DOUBLES = {
+    "inf": math.inf, "+inf": math.inf, "infinity": math.inf, "+infinity": math.inf,
+    "-inf": -math.inf, "-infinity": -math.inf, "nan": math.nan,
+}
+
+
+def spark_double(text: str | None) -> float | None:
+    """``try_cast(text AS double)`` as Spark computes it: Java's
+    ``Double.parseDouble`` syntax after a Java trim (so ``1.5d``,
+    ``1.5F`` and ``0x1p3`` parse, ``1_0`` does not), then Spark's
+    special literals (``inf``, ``nan``, ... in any case); anything else
+    is None."""
+    if text is None:
+        return None
+    t = text.strip(_JAVA_WS)
+    m = _JAVA_DOUBLE.fullmatch(t)
+    if m is None:
+        return _SPECIAL_DOUBLES.get(t.lower())
+    sign, nan, inf, dec, hexa = m.groups()
+    if nan:
+        return math.nan
+    if inf:
+        return -math.inf if sign == "-" else math.inf
+    return float(sign + dec) if dec is not None else float.fromhex(sign + hexa)
+
+
+def decimal_comma_doubles(values: pd.Series) -> np.ndarray:
+    """P3 (transform/inpe_focos_diario.py:39-40): ',' -> '.' then
+    :func:`spark_double`; invalid -> NaN, like ``errors="coerce"``."""
+    return np.array(
+        [None if v is None else spark_double(v.replace(",", ".")) for v in values],
+        dtype="float64",
+    )
 
 
 def _clean_value(v):
@@ -113,8 +162,6 @@ def _repr_series(x: pd.Series) -> pd.Series:
     cutoffs (|v| < 1e-4 or >= 1e16) and the '-0.0' sign (verified over
     fuzzed boundaries; pinned by the parity fuzz gate). U32 is ample:
     a float64 repr is at most 24 characters."""
-    import numpy as np
-
     return pd.Series(
         x.to_numpy(dtype="float64").astype("U32"), index=x.index, dtype=object
     )
@@ -134,8 +181,6 @@ def _repr_round6_series(x: pd.Series) -> pd.Series:
     diverges from Python round ~36 % of the time, which is why the
     band test is on the UNROUNDED scaled value, not a post-hoc
     comparison."""
-    import numpy as np
-
     v = x.to_numpy(dtype="float64")
     scaled = np.abs(v) * 1e6
     frac = scaled - np.floor(scaled)
@@ -276,8 +321,47 @@ def _canonicalize_rows_reference(
     return rows
 
 
+def curate_file(path: str, file_date: dt.date, monthly: bool = False) -> pd.DataFrame:
+    """One landed CSV -> its curated rows (CURATED_FOCOS columns), in
+    file order, the first row per ``event_hash`` kept. ``monthly``: the
+    file is a monthly archive, and only ``file_date``'s rows count."""
+    raw = read_landed_csv(path)
+    if monthly:
+        raw = filter_monthly_to_day(raw, file_date)
+    raw = raw.set_axis([norm_name(c) for c in raw.columns], axis=1)
+    cols = resolve_focos_columns(list(raw.columns))
+    prop_cols = list(raw.columns)
+
+    # P3-P5: NaN and +-inf fail the inclusive range test
+    lat = decimal_comma_doubles(raw[cols["lat"]])
+    lon = decimal_comma_doubles(raw[cols["lon"]])
+    keep = (lat >= -90) & (lat <= 90) & (lon >= -180) & (lon <= 180)
+    valid = raw[keep].reset_index(drop=True)
+    valid["__lat"], valid["__lon"] = lat[keep], lon[keep]
+    valid[_ROW_ID] = np.arange(len(valid))
+
+    out = _canonicalize_batch(
+        valid,
+        prop_cols,
+        str(file_date),
+        cols["lat"],
+        cols["lon"],
+        cols["ts"],
+        cols["sat"],
+        cols["mun"],
+        cols["uf"],
+        cols["bio"],
+    )
+    # P7/P8: the reference's MD5, first row per hash in file order
+    out["event_hash"] = [hashlib.md5(p.encode("utf-8")).hexdigest() for p in out["__payload"]]
+    out = out[~out["event_hash"].duplicated()].reset_index(drop=True)
+    out["file_date"] = file_date
+    return out[CURATED_FOCOS.names]
+
+
 def curated_from_raw(raw: DataFrame, file_date: dt.date) -> DataFrame:
-    """All-string raw CSV DataFrame -> curated focos records.
+    """All-string raw CSV DataFrame -> curated focos records: the Spark
+    form of :func:`curate_file`, kept as its reference.
 
     ``raw`` must be read with header=True and string-typed columns
     (sources/csv_ingest.py). Returns the CURATED_FOCOS schema.

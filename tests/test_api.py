@@ -15,11 +15,8 @@ import pytest
 
 from inpe_queimadas_etl_spark import geoprep, marts
 from inpe_queimadas_etl_spark.api import ApiContext, handle_request, serve
-from inpe_queimadas_etl_spark.sources.csv_ingest import (
-    read_csv_all_string,
-    write_fixture_csv,
-)
-from inpe_queimadas_etl_spark.transform import curated_from_raw
+from inpe_queimadas_etl_spark.pipeline import batch_pass
+from inpe_queimadas_etl_spark.sources.csv_ingest import write_fixture_csv
 
 from . import fixtures_geo as G
 
@@ -29,14 +26,10 @@ FROM, TO = "2024-05-01", "2024-05-05"
 
 @pytest.fixture(scope="module")
 def ctx(spark, tmp_path_factory):
-    from inpe_queimadas_etl_spark.enrich import enrich
-
     path = str(tmp_path_factory.mktemp("csv") / "focos.csv")
     write_fixture_csv(path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
-    curated = curated_from_raw(read_csv_all_string(spark, path), FILE_DATE)
-    enriched = enrich(
-        curated, G.municipios(), G.biomas(), G.ucs(), G.tis()
-    ).cache()
+    dims = {"municipios": G.municipios(), "biomas": G.biomas(), "ucs": G.ucs(), "tis": G.tis()}
+    enriched = batch_pass(spark, [(FILE_DATE, path)], dims).cache()
     fact = marts.mv_focos_day_dim(enriched).cache()
     all_ufs = spark.createDataFrame([(u,) for u in G.UFS], "uf string")
     mun_feats = G.municipios()

@@ -443,13 +443,11 @@ def test_enriched_area_falls_back_to_geometry(spark, dims_dir, tmp_path, fmt):
     leaving mun_area_km2, and with it the municipal density, null."""
     import shutil
 
-    from inpe_queimadas_etl_spark.enrich import enrich
-    from inpe_queimadas_etl_spark.sources.csv_ingest import read_csv_all_string
+    from inpe_queimadas_etl_spark.pipeline import batch_pass
     from inpe_queimadas_etl_spark.sources.geojson_source import (
         municipios_dim_from_geojson,
         write_geojson,
     )
-    from inpe_queimadas_etl_spark.transform import curated_from_raw
 
     d = tmp_path / "no_area"
     d.mkdir()
@@ -486,10 +484,7 @@ def test_enriched_area_falls_back_to_geometry(spark, dims_dir, tmp_path, fmt):
     ]
     path = str(tmp_path / "focos.csv")
     write_fixture_csv(path, G.FOCOS_HEADER, centres, sep=";")
-    curated = curated_from_raw(read_csv_all_string(spark, path), dt.date(2024, 5, 2))
-    enriched = enrich(
-        curated, dims["municipios"], dims["biomas"], dims["ucs"], dims["tis"]
-    )
+    enriched = batch_pass(spark, [(dt.date(2024, 5, 2), path)], dims)
     got = {
         r["mun_cd_mun"]: r["mun_area_km2"]
         for r in enriched.select("mun_cd_mun", "mun_area_km2").collect()

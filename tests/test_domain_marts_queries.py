@@ -9,13 +9,9 @@ from pyspark.sql import functions as F
 
 from inpe_queimadas_etl_spark import marts, queries
 from inpe_queimadas_etl_spark.api import fact_cube
-from inpe_queimadas_etl_spark.enrich import enrich
+from inpe_queimadas_etl_spark.pipeline import batch_pass
 from inpe_queimadas_etl_spark.schemas import UF_AREA
-from inpe_queimadas_etl_spark.sources.csv_ingest import (
-    read_csv_all_string,
-    write_fixture_csv,
-)
-from inpe_queimadas_etl_spark.transform import curated_from_raw
+from inpe_queimadas_etl_spark.sources.csv_ingest import write_fixture_csv
 
 from . import fixtures_geo as G
 
@@ -26,8 +22,8 @@ FILE_DATE = dt.date(2024, 5, 2)
 def enriched(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("csv") / "focos.csv")
     write_fixture_csv(path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
-    curated = curated_from_raw(read_csv_all_string(spark, path), FILE_DATE)
-    return enrich(curated, G.municipios(), G.biomas(), G.ucs(), G.tis()).cache()
+    dims = {"municipios": G.municipios(), "biomas": G.biomas(), "ucs": G.ucs(), "tis": G.tis()}
+    return batch_pass(spark, [(FILE_DATE, path)], dims).cache()
 
 
 @pytest.fixture(scope="module")

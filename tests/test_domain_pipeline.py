@@ -98,7 +98,8 @@ def test_incremental_second_file(spark, wh_and_csv, dims, tmp_path):
 @pytest.mark.parametrize(
     "module, attr",
     [
-        ("pipeline", "enrich"),
+        # the enrichment step: its dims are indexed before the batch pass
+        ("pipeline", "enrich_dims"),
         ("marts", "mv_focos_day_dim"),
         ("marts", "focos_diario_bioma"),
         ("marts", "focos_mensal_uf"),
@@ -186,24 +187,25 @@ def test_run_concurrently_keeps_the_callers_job_group(spark):
 
 
 def test_transform_runs_once_per_batch(spark, tmp_path, dims, monkeypatch):
-    """The curated batch is pinned once: the canonicalize pass sees each
-    input row once per run_day, not again for the batch's row count."""
-    from inpe_queimadas_etl_spark import transform
+    """The batch pass is pinned once: each landed file is read and
+    curated once per run_day, not again for the batch's counts."""
+    from inpe_queimadas_etl_spark import pipeline
+    from inpe_queimadas_etl_spark.sources.csv_ingest import read_landed_csv
 
     seen = spark.sparkContext.accumulator(0)
-    real = transform._canonicalize_batch
+    real = pipeline.curate_file
 
-    def counting(pdf, *args):
-        seen.add(len(pdf))
-        return real(pdf, *args)
+    def counting(path, *args):
+        seen.add(len(read_landed_csv(path)))
+        return real(path, *args)
 
-    monkeypatch.setattr(transform, "_canonicalize_batch", counting)
+    monkeypatch.setattr(pipeline, "curate_file", counting)
     csv_path = str(tmp_path / "focos_20240502.csv")
     write_fixture_csv(csv_path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
     metrics = run_day(spark, Warehouse(str(tmp_path / "wh")), csv_path, FILE_DATE, dims)
     assert metrics["rows_new"] == G.N_VALID_UNIQUE
-    # the rows with valid coordinates reach the pass: all but nan/95.0
-    assert seen.value == len(G.FOCOS_ROWS) - 2
+    # the file's input rows, once
+    assert seen.value == len(G.FOCOS_ROWS)
 
 
 def test_unattributed_first_batch_completes(spark, tmp_path, dims):
@@ -753,3 +755,43 @@ def test_run_range_report_opt_out(spark, tmp_path, dims):
     )
     assert "report_md" not in result
     assert not (root / "docs").exists()
+
+
+def test_malformed_coordinates_drop_only_their_rows(spark, tmp_path, dims):
+    """A coordinate that is no number ('abc', '1,2,3') drops its row,
+    as the reference's errors='coerce' does; the batch keeps the rest
+    (an ANSI cast would fail the whole batch on it)."""
+    rows = [
+        ["abc", "0.5", "2024-05-02 10:00:00", "AQUA_M-T", "", "", "", ""],
+        ["0.5", "1,2,3", "2024-05-02 10:01:00", "AQUA_M-T", "", "", "", ""],
+        *G.FOCOS_ROWS,
+    ]
+    csv_path = str(tmp_path / "focos_20240502.csv")
+    write_fixture_csv(csv_path, G.FOCOS_HEADER, rows, sep=";")
+    wh = Warehouse(str(tmp_path / "wh"))
+    assert run_day(spark, wh, csv_path, FILE_DATE, dims)["rows_new"] == G.N_VALID_UNIQUE
+    assert wh.read(spark, "curated_focos").count() == G.N_VALID_UNIQUE
+
+
+def test_report_written_for_an_unattributed_first_batch(spark, tmp_path, dims):
+    """A warehouse whose daily municipality and UF marts have no file
+    yet (its one row is offshore) still gets its validation report: the
+    missing marts count as empty, so the mart sums agree at 0 and only
+    the coverage check fails."""
+    import json
+
+    from inpe_queimadas_etl_spark.pipeline import run_range
+
+    offshore = [["0.5", "-1.0", "2024-05-02 14:30:00", "AQUA_M-T", "", "", "", ""]]
+    csv_path = str(tmp_path / "focos_20240502.csv")
+    write_fixture_csv(csv_path, G.FOCOS_HEADER, offshore, sep=";")
+    wh = Warehouse(str(tmp_path / "wh"))
+    [result] = run_range(spark, wh, [(FILE_DATE, csv_path)], dims)
+    assert not wh.exists("focos_diario_uf")
+    assert result["report_md"] == str(wh.root / "docs" / "validation_last_run.md")
+    payload = json.loads(open(result["report_json"]).read())
+    checks = {c["name"]: c for c in payload["check_results"]}
+    assert checks["mart_sums_consistent"]["ok"]
+    assert checks["mart_sums_consistent"]["enriched_with_mun"] == 0
+    assert checks["checked_flags"]["ok"]
+    assert not checks["enrichment_coverage"]["ok"]  # 0 of 1 row attributed

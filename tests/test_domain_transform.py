@@ -8,11 +8,9 @@ import json
 
 import pytest
 
-from inpe_queimadas_etl_spark.sources.csv_ingest import (
-    read_csv_all_string,
-    write_fixture_csv,
-)
-from inpe_queimadas_etl_spark.transform import curated_from_raw
+from inpe_queimadas_etl_spark.sources.csv_ingest import write_fixture_csv
+from inpe_queimadas_etl_spark.schemas import CURATED_FOCOS
+from inpe_queimadas_etl_spark.transform import curate_file
 
 from .fixtures_geo import FOCOS_HEADER, FOCOS_ROWS, N_VALID_UNIQUE
 
@@ -20,20 +18,28 @@ FILE_DATE = dt.date(2024, 5, 2)
 
 
 @pytest.fixture(scope="module")
-def curated(spark, tmp_path_factory):
+def curated(tmp_path_factory):
     path = str(tmp_path_factory.mktemp("csv") / "focos_20240502.csv")
     write_fixture_csv(path, FOCOS_HEADER, FOCOS_ROWS, sep=";")
-    raw = read_csv_all_string(spark, path)
-    return curated_from_raw(raw, FILE_DATE).cache()
+    return curate_file(path, FILE_DATE)
+
+
+def _at(curated, lat, lon=None):
+    hit = curated["lat"] == lat
+    if lon is not None:
+        hit &= curated["lon"] == lon
+    return curated[hit].to_dict("records")
 
 
 def test_row_accounting(curated):
     # 16 raw rows - 1 nan-lat - 1 out-of-range - 1 exact dup = 13
-    assert curated.count() == N_VALID_UNIQUE
+    assert len(curated) == N_VALID_UNIQUE
+    assert list(curated.columns) == CURATED_FOCOS.names
+    assert set(curated["file_date"]) == {FILE_DATE}
 
 
 def test_decimal_comma_cast(curated):
-    row = curated.filter("lat = 0.55").collect()
+    row = _at(curated, 0.55)
     assert len(row) == 1
     assert row[0]["lon"] == 0.25
 
@@ -41,7 +47,7 @@ def test_decimal_comma_cast(curated):
 def test_hash_parity_with_reference_algorithm(curated):
     """The MD5 must equal the reference's canonical-JSON hash
     (transform/inpe_focos_diario.py:156-164) byte for byte."""
-    row = curated.filter("lat = 0.3 and lon = 0.3").collect()[0]
+    row = _at(curated, 0.3, 0.3)[0]
     payload = {
         "file_date": str(FILE_DATE),
         "lat": round(0.3, 6),
@@ -56,30 +62,29 @@ def test_hash_parity_with_reference_algorithm(curated):
 
 
 def test_props_preserves_extra_columns_and_cleans(curated):
-    row = json.loads(curated.filter("lat = 0.55").collect()[0]["props"])
+    row = json.loads(_at(curated, 0.55)[0]["props"])
     assert row["frp"] == "12.5"  # extra column preserved as string
     assert row["lat"] == 0.55  # floats substituted
-    nan_row = json.loads(curated.filter("lat = 1.5").collect()[0]["props"])
+    nan_row = json.loads(_at(curated, 1.5)[0]["props"])
     assert nan_row["frp"] is None  # 'nan' cleaned to null (P6)
 
 
 def test_empty_ts_becomes_null(curated):
-    row = curated.filter("lat = 0.6").collect()[0]
+    row = _at(curated, 0.6)[0]
     assert row["view_ts"] is None
 
 
 def test_dedup_keeps_single_row(curated):
-    assert curated.filter("lat = 1.1 and lon = 1.1").count() == 1
+    assert len(_at(curated, 1.1, 1.1)) == 1
 
 
-def test_fuzzy_column_variant(spark, tmp_path):
+def test_fuzzy_column_variant(tmp_path):
     """Variant header names + comma delimiter resolve identically."""
     header = ["latitude", "longitude", "datahora", "satelite", "municipio", "estado", "bioma"]
     rows = [["0.5", "0.5", "2024-05-02 10:00:00", "AQUA_M-T", "X", "AA", "Amazonia"]]
     path = str(tmp_path / "variant.csv")
     write_fixture_csv(path, header, rows, sep=",")
-    raw = read_csv_all_string(spark, path)
-    out = curated_from_raw(raw, FILE_DATE).collect()
+    out = curate_file(path, FILE_DATE).to_dict("records")
     assert len(out) == 1
     assert out[0]["lat"] == 0.5 and out[0]["satelite"] == "AQUA_M-T"
 

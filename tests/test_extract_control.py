@@ -15,8 +15,8 @@ from inpe_queimadas_etl_spark import pipeline
 from inpe_queimadas_etl_spark.sources.csv_ingest import (
     InpeExtractor,
     LandingCache,
-    load_extracted_day,
 )
+from inpe_queimadas_etl_spark.transform import curate_file
 
 TODAY = dt.date(2024, 6, 1)
 FRESH = dt.date(2024, 5, 20)  # within 45-day retention
@@ -165,22 +165,23 @@ class TestCache:
         assert fetcher.requests.count("focos_mensal_br_202402.csv") == 1
 
 
-class TestSparkSide:
-    def test_load_extracted_monthly_filters_to_day(self, spark, tmp_path):
+class TestCurateExtracted:
+    def test_monthly_archive_filters_to_day(self, tmp_path):
         ex, _ = _extractor(
             tmp_path, {"focos_mensal_br_202402.csv": MONTHLY_CSV}
         )
         res = ex.extract_day(OLD)
-        rows = load_extracted_day(spark, res).collect()
+        rows = curate_file(res.path, res.file_date, monthly=res.source == "monthly")
         assert len(rows) == 1
-        assert rows[0]["data"].startswith("2024-02-01")
+        assert json.loads(rows["props"][0])["data"].startswith("2024-02-01")
 
-    def test_load_extracted_daily_reads_all(self, spark, tmp_path):
+    def test_daily_file_reads_all(self, tmp_path):
         ex, _ = _extractor(
             tmp_path, {"focos_diario_br_20240520.csv": DAILY_CSV}
         )
         res = ex.extract_day(FRESH)
-        assert load_extracted_day(spark, res).count() == 1
+        assert res.source == "daily"
+        assert len(curate_file(res.path, res.file_date)) == 1
 
 
 class TestResume:

@@ -549,32 +549,53 @@ ENRICHED_LAYOUT = [
 ]
 
 
-def test_enrich_is_one_map_in_pandas_pass(spark, tmp_path):
-    """enrich() attributes municipality (PIP + KNN), biome, UC and TI
-    in a single mapInPandas: no join for the names, no union for the
-    KNN fallback, and the enriched table keeps its column layout. The
-    curated batch is checkpointed as process_batch does, so the plan
-    holds enrich's own nodes only."""
+def test_batch_is_one_map_in_pandas_pass(spark, tmp_path):
+    """The plan process_batch pins reads, curates, dedups and enriches
+    the landed files in a single mapInPandas over one row per file date:
+    no CSV scan, no Window for the dedup, no Exchange, no join for the
+    names, and the enriched table keeps its column layout."""
     import datetime as dt
 
-    from inpe_queimadas_etl_spark.enrich import enrich
-    from inpe_queimadas_etl_spark.sources.csv_ingest import (
-        read_csv_all_string,
-        write_fixture_csv,
-    )
-    from inpe_queimadas_etl_spark.transform import curated_from_raw
+    from inpe_queimadas_etl_spark.enrich import ENRICHED_LAYOUT as layout
+    from inpe_queimadas_etl_spark.pipeline import batch_pass
+    from inpe_queimadas_etl_spark.sources.csv_ingest import write_fixture_csv
 
     from . import fixtures_geo as G
 
-    path = str(tmp_path / "focos.csv")
-    write_fixture_csv(path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
-    curated = curated_from_raw(
-        read_csv_all_string(spark, path), dt.date(2024, 5, 2)
-    ).localCheckpoint(eager=True)
-    out = enrich(curated, G.municipios(), G.biomas(), G.ucs(), G.tis())
+    days = [dt.date(2024, 5, 2), dt.date(2024, 5, 3)]
+    day_files = []
+    for day in days:
+        path = str(tmp_path / f"focos_{day:%Y%m%d}.csv")
+        write_fixture_csv(path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+        day_files.append((day, path))
+    dims = {"municipios": G.municipios(), "biomas": G.biomas(), "ucs": G.ucs(), "tis": G.tis()}
+    out = batch_pass(spark, day_files, dims)
     plan = out._jdf.queryExecution().executedPlan().treeString()
     assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
-    assert not re.search(r"Join|Union", plan), plan
+    assert not re.search(r"Window|Exchange|Join|Union|FileScan", plan), plan
+    assert layout == [name for name, _ in ENRICHED_LAYOUT]
     assert [
         (f.name, f.dataType.simpleString()) for f in out.schema.fields
     ] == ENRICHED_LAYOUT
+    assert out.rdd.getNumPartitions() == len(days)
+
+
+def test_new_rows_scan_only_the_batch_file_dates(spark, tmp_path):
+    """The idempotency anti-join reads curated_focos through partition
+    filters on the batch's file dates, never the whole table."""
+    import datetime as dt
+
+    from inpe_queimadas_etl_spark.pipeline import not_loaded
+
+    curated = tmp_path / "curated_focos"
+    spark.createDataFrame(
+        [("a", dt.date(2024, 5, 1)), ("b", dt.date(2024, 5, 2))],
+        "event_hash string, file_date date",
+    ).write.partitionBy("file_date").parquet(str(curated))
+    batch = spark.createDataFrame([("b", 1.0), ("c", 2.0)], "event_hash string, lat double")
+    out = not_loaded(batch, spark.read.parquet(str(curated)), [dt.date(2024, 5, 2)])
+    plan = _plan(out)
+    scans = [p for p in plan.split("PartitionFilters: ")[1:] if "file_date" in p.split("]")[0]]
+    assert scans, plan
+    assert out.columns == batch.columns
+    assert sorted(r["event_hash"] for r in out.collect()) == ["c"]

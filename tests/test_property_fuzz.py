@@ -3,8 +3,9 @@ contracts are 'exactly equals the reference algorithm' — fuzz where
 handcrafted fixtures can miss an escape, a rounding halfway case, or a
 degenerate geometry.
 
-No SparkSession needed: these target the driver-side/Arrow-batch
-functions directly, so the fuzz loop stays fast.
+These target the driver-side/Arrow-batch functions directly, so the
+fuzz loop stays fast. The decimal parser is the exception: its oracle
+is Spark's own cast, one query per drawn list.
 """
 
 from __future__ import annotations
@@ -121,6 +122,54 @@ def test_vectorized_float_formatters_match_python_fuzz(vals):
     assert list(_repr_round6_series(s)) == [
         repr(round(float(v), 6)) for v in s
     ]
+
+
+# -- decimal-comma cast parity with Spark's try_cast ------------------------
+
+# fragments of the syntax Java's parseDouble and Spark's special
+# literals accept, and of what they refuse, glued at random
+_NUM_PIECES = [
+    "", "+", "-", "0", "1", "7", "09", "123", ".", ",", "e", "E", "e-", "E+",
+    "x", "0x", "0X", "a", "F", "p", "P", "p-", "f", "d", "D", "_", " ", "\t",
+    "\x01", "\xa0", "Infinity", "NaN", "inf", "nan", "INF", "-inf", "١",
+]
+_decimal_text = st.one_of(
+    st.lists(st.sampled_from(_NUM_PIECES), max_size=7).map("".join),
+    st.text(alphabet="0123456789.,+-eExXpPfFdD _", max_size=12),
+    st.floats(width=64).map(repr),
+    st.floats(width=64).map(lambda v: repr(v).replace(".", ",")),
+    st.floats(allow_nan=False, allow_infinity=False).map(float.hex),
+    st.none(),
+)
+
+
+def _same_double(a, b) -> bool:
+    if a is None or b is None:
+        return a is None and b is None
+    if math.isnan(a) or math.isnan(b):
+        return math.isnan(a) and math.isnan(b)
+    return a == b and math.copysign(1, a) == math.copysign(1, b)
+
+
+@settings(max_examples=8, deadline=None)
+@given(texts=st.lists(_decimal_text, min_size=1, max_size=200))
+def test_decimal_comma_cast_matches_spark_try_cast_fuzz(spark, texts):
+    """The pandas pass's decimal-comma cast gives, value for value, what
+    the Spark reference (``decimal_comma_to_double``: ',' -> '.' then
+    try_cast to double) gives: the same finite value and sign, the same
+    +-inf and NaN, and None where Spark returns null."""
+    from inpe_queimadas_etl_spark.functions.core import decimal_comma_to_double
+    from inpe_queimadas_etl_spark.transform import decimal_comma_doubles, spark_double
+
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = dict(df.select("i", decimal_comma_to_double("t").alias("d")).collect())
+    ours = [None if t is None else spark_double(t.replace(",", ".")) for t in texts]
+    bad = [(t, o, got[i]) for i, (t, o) in enumerate(zip(texts, ours)) if not _same_double(o, got[i])]
+    assert not bad
+    vec = decimal_comma_doubles(pd.Series(texts, dtype=object))
+    assert all(
+        _same_double(float(v), math.nan if o is None else o) for v, o in zip(vec, ours)
+    )
 
 
 # -- legend breaks invariants ------------------------------------------------

@@ -13,6 +13,7 @@ from inpe_queimadas_etl_spark.sources.csv_ingest import (
     extract_zip_csv,
     filter_monthly_to_day,
     read_csv_all_string,
+    read_landed_csv,
     sniff_delimiter,
     write_fixture_csv,
 )
@@ -39,7 +40,8 @@ HEADER_CASES = {
 @pytest.mark.parametrize("case", sorted(HEADER_CASES))
 def test_header_matches_spark_inference(spark, tmp_path, case):
     """The driver-side header parse names the columns exactly as
-    Spark's own header inference does, and the rows read the same."""
+    Spark's own header inference does, and the rows read the same, in
+    Spark and in the pandas reader."""
     path = tmp_path / f"{case}.csv"
     path.write_text(HEADER_CASES[case], encoding="utf-8")
     sep = sniff_delimiter(str(path))
@@ -48,6 +50,11 @@ def test_header_matches_spark_inference(spark, tmp_path, case):
     assert ours.columns == inferred.columns
     assert [f.dataType.simpleString() for f in ours.schema] == ["string"] * len(ours.columns)
     assert ours.collect() == inferred.collect()
+    landed = read_landed_csv(str(path))
+    assert list(landed.columns) == inferred.columns
+    assert [tuple(r) for r in landed.itertuples(index=False)] == [
+        tuple(r) for r in inferred.collect()
+    ]
 
 
 def test_read_csv_starts_no_spark_job(spark, tmp_path):
@@ -66,17 +73,20 @@ def test_read_csv_starts_no_spark_job(spark, tmp_path):
     assert jobs == []
 
 
-def test_monthly_to_daily_filter(spark, tmp_path):
+def test_monthly_to_daily_filter(tmp_path):
     header = ["DataHora", "valor"]
     rows = [
         ["2024-05-02 10:00:00", "1"],
         ["02/05/2024 11:00", "2"],  # Brazilian format, same day
         ["2024-05-03 10:00:00", "3"],
+        ["2024-13-40 02/05/2024", "4"],  # no valid ISO date: the Brazilian one
+        ["", "5"],
+        ["2024-05-03 02/05/2024", "6"],  # the ISO date wins
     ]
     path = write_fixture_csv(str(tmp_path / "monthly.csv"), header, rows, sep=";")
-    df = read_csv_all_string(spark, path)
-    out = filter_monthly_to_day(df, dt.date(2024, 5, 2)).collect()
-    assert sorted(r["valor"] for r in out) == ["1", "2"]
+    out = filter_monthly_to_day(read_landed_csv(path), dt.date(2024, 5, 2))
+    assert list(out.columns) == ["datahora", "valor"]
+    assert sorted(out["valor"]) == ["1", "2", "4"]
 
 
 def test_zip_extraction(tmp_path):
