@@ -66,8 +66,6 @@ HEADLINE = [
     "geo1_point_in_polygon_grid",
     "geo8_dense_pip",
     "geo4_uf_choropleth_day",
-    "skew_hot_distinct_naive",
-    "skew_hot_distinct_two_phase",
     "cur5_mixture_resample",
     "cur6_leakfree_split",
     "cur7_semantic_decontamination",
@@ -78,7 +76,6 @@ HEADLINE = [
     "cur8_dsir_selection",
     "cur9_dsir_resample",
     "tx9_bpe_tokenize",
-    "tx10_trained_quality_score",
     "sim7_trained_ivf_ann",
     "emb1_hashed_encoder",
     "cur10_substring_decontamination",
@@ -110,14 +107,12 @@ _EXTRA_RUNS = {
 
 # benched-but-unregistered queries (the suite registry is capped at 50
 # entries to fit the driver's correctness snapshot); main() resolves
-# these directly from their modules, and validate-repo checks that
-# every other HEADLINE entry exists in the registry
+# these directly from their modules, and scripts/qbench.py and
+# scripts/dump_plans.py resolve them the same way
 UNREGISTERED = (
     "p7_stable_event_hash",
     "j7_crossjoin_zerofill",
     "geo8_dense_pip",
-    "skew_hot_distinct_naive",
-    "skew_hot_distinct_two_phase",
     "dd8_passage_dedup",
     "dd9_canonical_keeper",
     "dd10_duplicate_spans",
@@ -133,7 +128,6 @@ UNREGISTERED = (
     "cur8_dsir_selection",
     "cur9_dsir_resample",
     "tx9_bpe_tokenize",
-    "tx10_trained_quality_score",
     "sim7_trained_ivf_ann",
     "emb1_hashed_encoder",
     "cur10_substring_decontamination",
@@ -358,7 +352,6 @@ def main() -> None:
         cur8_dsir_selection,
         cur9_dsir_resample,
         tx9_bpe_tokenize,
-        tx10_trained_quality_score,
         sim7_trained_ivf_ann,
         sim8_pq_adc,
         sim9_ivfpq_ann,
@@ -371,10 +364,6 @@ def main() -> None:
     from inpe_queimadas_etl_spark.suite.relational import (
         j7_crossjoin_zerofill,
         p7_stable_event_hash,
-    )
-    from inpe_queimadas_etl_spark.suite.skewdemo import (
-        skew_hot_distinct_naive,
-        skew_hot_distinct_two_phase,
     )
 
     queries.setdefault("p7_stable_event_hash", p7_stable_event_hash)
@@ -398,7 +387,6 @@ def main() -> None:
     queries.setdefault("cur8_dsir_selection", cur8_dsir_selection)
     queries.setdefault("cur9_dsir_resample", cur9_dsir_resample)
     queries.setdefault("tx9_bpe_tokenize", tx9_bpe_tokenize)
-    queries.setdefault("tx10_trained_quality_score", tx10_trained_quality_score)
     queries.setdefault("sim7_trained_ivf_ann", sim7_trained_ivf_ann)
     queries.setdefault("emb1_hashed_encoder", emb1_hashed_encoder)
     queries.setdefault("cur10_substring_decontamination", cur10_substring_decontamination)
@@ -412,10 +400,6 @@ def main() -> None:
     queries.setdefault("sim10_trained_ivfpq", sim10_trained_ivfpq)
     queries.setdefault("sim11_opq_ivfpq", sim11_opq_ivfpq)
     queries.setdefault("mm5_simhash_neardup", mm5_simhash_neardup)
-    # skew demo pair: the recorded gap (naive single hot reducer vs
-    # salted two-phase) is the artifact — see suite/skewdemo.py
-    queries.setdefault("skew_hot_distinct_naive", skew_hot_distinct_naive)
-    queries.setdefault("skew_hot_distinct_two_phase", skew_hot_distinct_two_phase)
 
     # Warm the JVM / session (codegen, parquet footer reads) so the
     # first timed query measures the plan, not session startup; keeps
@@ -442,15 +426,9 @@ def main() -> None:
                 f"bench HEADLINE entry {name!r} not found in the suite "
                 "registry; update HEADLINE or restore the query"
             )
-        if name.startswith("skew_"):
-            # collect() the (few) result rows directly: the demo's
-            # artifact is the naive-vs-two-phase gap and both already
-            # materialize every column
-            runner = lambda: fn(spark, SF_DIR).collect()
-        else:
-            # checksum-consume: every output column is referenced, so
-            # Catalyst cannot prune the timed work (VERDICT r4 #1)
-            runner = lambda: _consume_checksum(fn(spark, SF_DIR))
+        # checksum-consume: every output column is referenced, so
+        # Catalyst cannot prune the timed work (VERDICT r4 #1)
+        runner = lambda: _consume_checksum(fn(spark, SF_DIR))
         # Drop the previous query's lingering state (Python-held
         # localCheckpoint RDDs keep executor blocks alive until GC):
         # isolated dd7 reruns at 1.55 s while the same code inside a

@@ -5,9 +5,11 @@ system (rafaelparanhoss/inpe-queimadas-etl, surveyed in SURVEY.md) as
 an idiomatic Spark DataFrame/SQL engine: daily CSVs are ingested,
 curated and deduplicated, enriched by point-in-polygon, rolled up
 into marts, published to a partitioned warehouse and served to a
-dashboard. Alongside it sit the large-scale training-data operators
-(dedup, similarity-search kernels, text analysis, multimodal
-plumbing) exercised by the query suite.
+dashboard. Alongside it sits a training-corpus materialization
+(``corpus_pipeline`` over the ``corpus_ops`` dedup, curation, split,
+selection and packing operators) and the kernel suite: dedup,
+similarity-search, text-analysis and multimodal operators, each
+checked against a DuckDB oracle.
 
 Layout
 ------
@@ -26,15 +28,19 @@ Layout
                  the dashboard read path and its HTTP front.
 - ``cli``        ``run``, ``checks``, ``validate-repo`` and
                  ``corpus-curate``.
-- ``operators``  reusable distributed operators: relational helpers
-                 (zero-fill, top-1-per-group, moving averages),
-                 dedup family, similarity search, text analysis,
-                 multimodal column plumbing, geo joins.
+- ``operators``  reusable distributed operators: geo joins and
+                 geometry, BPE, rolling window hashes, mixture
+                 resampling, pack materialization, passage dedup,
+                 similarity search (sign-LSH, IVF, PQ), multimodal
+                 column plumbing.
+- ``corpus_pipeline`` / ``corpus_ops``
+                 the training-corpus materialization behind
+                 ``corpus-curate`` and the operators it composes.
 - ``streaming``  the landing stream: a Structured Streaming
                  foreachBatch over the landing dir that runs the batch
                  pipeline step per landed daily CSV.
-- ``suite``      the declared query suite: name -> (Spark callable,
-                 DuckDB oracle SQL) consumed by __spark_entry__.py.
+- ``suite``      the kernel suite: name -> (Spark callable, DuckDB
+                 oracle SQL), timed by bench.py.
 """
 
 __version__ = "0.1.0"

@@ -165,8 +165,8 @@ def check_mun_polycoords(chart_mun: DataFrame) -> dict:
 
 # Tables a fully-run warehouse must carry — the Spark analog of the
 # reference's REQUIRED_SQL_FILES manifest (validate_repo.py:25-53: its
-# SQL files ARE its executable surface; here the surface is the
-# registered query suite plus these materialized tables).
+# SQL files ARE its executable surface; here the surface is these
+# materialized tables).
 REQUIRED_TABLES = (
     "curated_focos",
     "enriched_focos",
@@ -180,92 +180,6 @@ REQUIRED_TABLES = (
     "mv_focos_day_dim",
     "focos_diario_uf_trend",
 )
-
-
-def validate_repo_structure() -> dict:
-    """Structural self-validation of the ENGINE (reference
-    validate_repo.py:25-53 + scripts/smoke.ps1 preflight): the suite
-    registry holds exactly the 50 declared queries, every query has an
-    oracle, and the driver entry module exposes the full contract.
-    Driver-side only; no SparkSession needed."""
-    failures: list[str] = []
-    n_queries = n_oracles = 0
-    q: dict = {}
-    try:
-        from .suite import all_oracles, all_queries
-
-        q, o = all_queries(), all_oracles()
-        n_queries, n_oracles = len(q), len(o)
-        if n_queries != 50:
-            failures.append(f"registry size {n_queries} != 50")
-        missing = sorted(set(q) - set(o))
-        if missing:
-            failures.append(f"queries without oracle: {missing}")
-    except Exception as ex:  # pragma: no cover - import-time breakage
-        failures.append(f"suite import failed: {ex}")
-    try:
-        import importlib
-
-        entry = importlib.import_module("__spark_entry__")
-        for fn in ("entry", "queries", "oracle_sql"):
-            if not callable(getattr(entry, fn, None)):
-                failures.append(f"__spark_entry__.{fn} missing")
-    except ImportError as ex:
-        if getattr(ex, "name", None) == "__spark_entry__":
-            # module absent: running outside the repo root is fine for
-            # library users
-            pass
-        else:
-            # the entry module EXISTS but failed importing something —
-            # exactly the breakage this check reports (ADVICE r4 #2)
-            failures.append(f"__spark_entry__ import failed: {ex!r}")
-    except Exception as ex:
-        # SyntaxError / AttributeError / anything else at import time
-        # is a structural failure, not a crash of validate-repo
-        failures.append(f"__spark_entry__ import failed: {ex!r}")
-    if q:
-        # bench integrity: a renamed/removed registry query must not
-        # silently vanish from the headline benchmark (bench.py also
-        # raises at runtime; this catches it without a Spark session)
-        try:
-            import bench as bench_mod
-
-            from pathlib import Path as _Path
-
-            repo_root = _Path(__file__).resolve().parent.parent
-            mod_file = getattr(bench_mod, "__file__", None)
-            if (
-                mod_file is None
-                or _Path(mod_file).resolve().parent != repo_root
-            ):
-                # an unrelated installed package named 'bench' (e.g.
-                # the frappe CLI) — not our harness; the check would
-                # be vacuously green, so skip it like module-absent
-                raise ModuleNotFoundError("foreign bench", name="bench")
-            extra = set(getattr(bench_mod, "UNREGISTERED", ()))
-            missing_bench = [
-                h
-                for h in getattr(bench_mod, "HEADLINE", ())
-                if h not in q and h not in extra
-            ]
-            if missing_bench:
-                failures.append(
-                    "bench HEADLINE entries missing from registry: "
-                    f"{missing_bench}"
-                )
-        except ImportError as ex:
-            if getattr(ex, "name", None) != "bench":
-                failures.append(f"bench import failed: {ex!r}")
-            # bench.py absent: running outside the repo root is fine
-        except Exception as ex:
-            failures.append(f"bench import failed: {ex!r}")
-    return {
-        "name": "repo_structure",
-        "ok": not failures,
-        "n_queries": n_queries,
-        "n_oracles": n_oracles,
-        "failures": failures,
-    }
 
 
 def validate_warehouse_layout(spark, warehouse) -> dict:

@@ -159,26 +159,19 @@ def cmd_checks(args) -> int:
 
 def cmd_validate_repo(args) -> int:
     """Structural validation (reference validate_repo.py + the smoke
-    preflight): engine registry invariants, plus — when --warehouse is
-    given — required tables and a clean staging area."""
-    from .checks import validate_repo_structure, validate_warehouse_layout
+    preflight): the warehouse carries every required table and a clean
+    staging area."""
+    from .checks import validate_warehouse_layout
+    from .pipeline import Warehouse
+    from .session import get_spark
 
-    results = [validate_repo_structure()]
-    if args.warehouse:
-        from .pipeline import Warehouse
-        from .session import get_spark
-
-        results.append(
-            validate_warehouse_layout(get_spark(), Warehouse(args.warehouse))
-        )
-    ok = all(r["ok"] for r in results)
-    for r in results:
-        log.log(
-            logging.INFO if r["ok"] else logging.ERROR,
-            "validate-repo | %s",
-            json.dumps(r, default=str),
-        )
-    return 0 if ok else 1
+    r = validate_warehouse_layout(get_spark(), Warehouse(args.warehouse))
+    log.log(
+        logging.INFO if r["ok"] else logging.ERROR,
+        "validate-repo | %s",
+        json.dumps(r, default=str),
+    )
+    return 0 if r["ok"] else 1
 
 
 def cmd_corpus_curate(args) -> int:
@@ -244,9 +237,9 @@ def build_parser() -> argparse.ArgumentParser:
     checks.add_argument("--log-dir")
 
     vrepo = sub.add_parser(
-        "validate-repo", help="structural engine/warehouse validation"
+        "validate-repo", help="structural warehouse validation"
     )
-    vrepo.add_argument("--warehouse", help="also validate this warehouse")
+    vrepo.add_argument("--warehouse", required=True, help="warehouse root dir")
     vrepo.add_argument("--log-dir")
 
     cur = sub.add_parser(

@@ -1,8 +1,8 @@
 """End-to-end training-corpus materialization: one pass from a raw
 document table to a packed, split-partitioned, sharded export.
 
-The suite's training-data operators are individually oracle-checked
-(suite/llmdata.py); this module composes them the way a real pipeline
+The training-data operators are individually oracle-checked
+(corpus_ops.py); this module composes them the way a real pipeline
 runs them, sharing expensive intermediates instead of recomputing:
 
 1. **dd7 labels once** — the iterative near-dup component labeling is
@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from .export import export_jsonl, export_sharded_parquet
 from .operators.mixture import mixture_resample
 from .session import load_table
-from .suite.llmdata import (
+from .corpus_ops import (
     curation_decisions,
     dd7_dedup_clusters,
     decontamination_report,
@@ -164,7 +164,7 @@ def _resolve_corpus(
     normalized once into ``out_dir/_staged/documents.parquet``:
     sink bookkeeping (batch_id) dropped, missing optional columns
     filled (lang 'und', source 'unknown', n_chars from the text), so
-    the suite operators (which read the table layout) run unchanged.
+    the corpus operators (which read the table layout) run unchanged.
     The staging write is one corpus copy, paid once per
     materialization; a deployment running this daily at scale would
     point corpus_dir at a maintained table instead."""
@@ -320,7 +320,7 @@ def run_corpus_pipeline(
     # Eval sets are tiny, so every eval side broadcasts.
     n_contaminated = 0
     if eval_dir is not None:
-        from .suite.llmdata import substring_contamination
+        from .corpus_ops import substring_contamination
 
         eval_docs = load_table(spark, eval_dir, "documents")
         flagged = []
@@ -354,7 +354,7 @@ def run_corpus_pipeline(
     # stance).
     pii_stats = {"enabled": False, "docs_redacted": 0, "matches": 0}
     if scrub_pii:
-        from .suite.llmdata import pii_redact
+        from .corpus_ops import pii_redact
 
         red = pii_redact(survivors.select("doc_id", "text")).localCheckpoint(
             eager=True
@@ -384,7 +384,7 @@ def run_corpus_pipeline(
     # DROPS them (sub-2-token docs are noise under any LM gate).
     lm_stats = {"enabled": False, "dropped": 0}
     if min_lm_logprob is not None:
-        from .suite.llmdata import ngram_lm_scores
+        from .corpus_ops import ngram_lm_scores
 
         passed = (
             ngram_lm_scores(survivors.select("doc_id", "text"))
@@ -412,7 +412,7 @@ def run_corpus_pipeline(
     # the user must ask for (the same stance as mixture).
     scrub_stats = {"enabled": False, "docs_scrubbed": 0, "tokens_removed": 0}
     if scrub_spans:
-        from .suite.llmdata import duplicate_spans, remove_duplicate_spans
+        from .corpus_ops import duplicate_spans, remove_duplicate_spans
 
         spans = duplicate_spans(survivors).localCheckpoint(eager=True)
         # checkpoint the rewrite too: the stats agg, the mixture
@@ -454,7 +454,7 @@ def run_corpus_pipeline(
     # re-running reproduces the same corpus.
     dsir_stats = {"enabled": False, "dropped": 0}
     if dsir_target_dir is not None:
-        from .suite.llmdata import dsir_gumbel_topk
+        from .corpus_ops import dsir_gumbel_topk
 
         target = load_table(spark, dsir_target_dir, "documents").select(
             "doc_id", "text"

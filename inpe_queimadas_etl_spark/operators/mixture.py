@@ -146,7 +146,7 @@ def mixture_resample(
     per document with its deterministic keep decision under the
     target mixture (see :func:`mixture_rates` for the allocation
     semantics; the keep hash is the salted convention
-    ``suite/llmdata.py`` oracle-pins for cur5).
+    ``corpus_ops._hash_frac_spark``, oracle-pinned for cur5).
 
     Two corpus scans (rate aggregate + keep projection), zero corpus
     shuffles: the K-row rate table is computed with map-side partials,
@@ -157,7 +157,7 @@ def mixture_resample(
     non-string sources survive); non-string weight keys are
     stringified to match, so ``{1: 3.0}`` works against an integer
     source column."""
-    from ..suite.llmdata import _hash_frac_spark
+    from ..corpus_ops import _hash_frac_spark
 
     if weights is not None:
         weights = {str(k): v for k, v in weights.items()}

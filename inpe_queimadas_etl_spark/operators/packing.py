@@ -1,5 +1,5 @@
 """Pack materialization and epoch ordering: the last mile between a
-packed corpus (suite/llmdata.pack_doc_assignments / corpus_pipeline)
+packed corpus (corpus_ops.pack_doc_assignments / corpus_pipeline)
 and a trainer's input stream.
 
 - :func:`materialize_packs` turns per-doc pack assignments into one

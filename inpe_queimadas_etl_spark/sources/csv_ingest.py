@@ -7,9 +7,9 @@ engine keeps the same shape: a driver-side fetch-to-landing-dir step
 of each landed file inside the batch's curate-and-enrich task
 (``transform.curate_file``).
 
-- Dialect sniffing reads the first 4 KiB and tries csv.Sniffer with
-  ';'/',' candidates (extract:85-89), falling back to ';' (INPE's
-  default).
+- Dialect sniffing tries csv.Sniffer with ';'/',' candidates
+  (extract:85-89) on the first 4 KiB of the non-blank lines after any
+  BOM, falling back to ';' (INPE's default).
 - All columns load as strings (transform casts), matching
   `pd.read_csv(dtype=str)` (transform:87). :func:`read_landed_csv`
   reads a file as Spark's CSV reader does: the header names follow
@@ -42,16 +42,6 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ..functions.core import find_col, norm_name
 
 
-def sniff_delimiter(path: str, default: str = ";") -> str:
-    """S6 dialect sniff (extract/inpe_focos_diario.py:85-89)."""
-    try:
-        with open(path, encoding="utf-8", errors="replace") as fh:
-            sample = fh.read(4096)
-        return csv.Sniffer().sniff(sample, delimiters=";,").delimiter
-    except (csv.Error, OSError):
-        return default
-
-
 # what java.lang.String.trim() strips: every char up to U+0020
 _JAVA_WS = "".join(map(chr, range(33)))
 
@@ -62,6 +52,29 @@ def _nonblank_lines(path: str) -> list[str]:
     trim)."""
     with open(path, encoding="utf-8-sig", errors="replace") as fh:
         return [ln for ln in fh.read().split("\n") if ln.strip(_JAVA_WS)]
+
+
+def _sniff(lines: list[str], default: str = ";") -> str:
+    """csv.Sniffer over the first 4 KiB of the lines the reader keeps,
+    so a BOM or blank lines before the header cannot sway it."""
+    sample, size = [], 0
+    for line in lines:
+        if size >= 4096:
+            break
+        sample.append(line)
+        size += len(line) + 1
+    try:
+        return csv.Sniffer().sniff("\n".join(sample)[:4096], delimiters=";,").delimiter
+    except csv.Error:
+        return default
+
+
+def sniff_delimiter(path: str, default: str = ";") -> str:
+    """S6 dialect sniff (extract/inpe_focos_diario.py:85-89)."""
+    try:
+        return _sniff(_nonblank_lines(path), default)
+    except OSError:
+        return default
 
 
 def _safe_names(line: str, sep: str) -> list[str]:
@@ -91,8 +104,8 @@ def read_landed_csv(path: str, sep: str | None = None) -> pd.DataFrame:
     width. Quotes follow Python's csv module, which differs from Spark's
     reader only on a quote escaped inside a quoted field (``""`` or
     ``\\"``)."""
-    sep = sep or sniff_delimiter(path)
     lines = _nonblank_lines(path)
+    sep = sep or _sniff(lines)
     names = _safe_names(lines[0], sep) if lines else []
     rows = np.full((max(len(lines) - 1, 0), len(names)), None, dtype=object)
     for i, line in enumerate(lines[1:]):

@@ -1,10 +1,10 @@
 """Declared query suite: name -> Spark callable + DuckDB oracle SQL.
 
 Every operator claimed as implemented (SURVEY.md §2 inventory + the
-training-data-pipeline extensions) registers here; ``__spark_entry__``
-exposes the registry to the driver, which runs each Spark query against
-its oracle SQL at sf=0.01 (row count + schema + order-insensitive
-value hash).
+training-data-pipeline extensions) registers here; ``bench.py`` times
+the registry and ``tests/test_suite_oracle.py`` runs each Spark query
+against its oracle SQL (row count + schema + order-insensitive
+values).
 
 Conventions (driver contract):
 - every computed column is aliased identically in the Spark plan and

@@ -32,10 +32,10 @@ def main() -> None:
     import bench
     from inpe_queimadas_etl_spark.session import get_spark, load_table
     from inpe_queimadas_etl_spark.suite import all_queries
+    import inpe_queimadas_etl_spark.corpus_ops as ops
     import inpe_queimadas_etl_spark.suite.llmdata as llm
     import inpe_queimadas_etl_spark.suite.multimodal as mmod
     import inpe_queimadas_etl_spark.suite.relational as rel
-    import inpe_queimadas_etl_spark.suite.skewdemo as skew
 
     spark = get_spark(
         app_name="ab_spread",
@@ -48,7 +48,7 @@ def main() -> None:
     from inpe_queimadas_etl_spark.suite.geo import geo8_dense_pip
 
     registry.setdefault("geo8_dense_pip", geo8_dense_pip)
-    for mod in (llm, mmod, rel, skew):
+    for mod in (llm, mmod, rel):
         for name in bench.UNREGISTERED:
             fn = getattr(mod, name, None)
             if fn is not None:
@@ -68,19 +68,19 @@ def main() -> None:
         bw: list[float] = []
         # one warm-up per side
         for side_fn in (real_spread, identity):
-            llm._spread = side_fn
+            llm._spread = ops._spread = side_fn
             bench._consume_checksum(fn(spark, SF_DIR))
         for _ in range(args.n):
             for side_fn, bucket in (
                 (real_spread, a_times),
                 (identity, b_times),
             ):
-                llm._spread = side_fn
+                llm._spread = ops._spread = side_fn
                 t0 = time.perf_counter()
                 bench._consume_checksum(fn(spark, SF_DIR))
                 bucket.append(time.perf_counter() - t0)
                 bw.append(bench._bw_sample())
-        llm._spread = real_spread
+        llm._spread = ops._spread = real_spread
         am, bm = statistics.median(a_times), statistics.median(b_times)
         print(
             f"{name:36s} A(spread) {am:7.3f}s {sorted(round(t,3) for t in a_times)}  "

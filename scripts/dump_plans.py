@@ -41,7 +41,6 @@ def main() -> None:
             "inpe_queimadas_etl_spark.suite.relational",
             "inpe_queimadas_etl_spark.suite.geo",
             "inpe_queimadas_etl_spark.suite.multimodal",
-            "inpe_queimadas_etl_spark.suite.skewdemo",
         )
         for m in mod_candidates:
             mod = importlib.import_module(m)

@@ -1,7 +1,7 @@
 """Targeted per-query micro-bench for optimization iterations (r12).
 
 Times ONLY the named queries with bench.py's own methodology —
-checksum-consume (or collect for skew_*), one warm-up, median of N,
+checksum-consume, one warm-up, median of N,
 per-run interleaved bandwidth probe — so a candidate change can be
 measured in seconds instead of re-running the full suite. Not part of
 the bench protocol; bench.py remains the round artifact.
@@ -45,11 +45,10 @@ def main() -> None:
     import inpe_queimadas_etl_spark.suite.llmdata as llm
     import inpe_queimadas_etl_spark.suite.multimodal as mmod
     import inpe_queimadas_etl_spark.suite.relational as rel
-    import inpe_queimadas_etl_spark.suite.skewdemo as skew
     from inpe_queimadas_etl_spark.suite.geo import geo8_dense_pip
 
     registry.setdefault("geo8_dense_pip", geo8_dense_pip)
-    for mod in (llm, mmod, rel, skew):
+    for mod in (llm, mmod, rel):
         for name in bench.UNREGISTERED:
             fn = getattr(mod, name, None)
             if fn is not None:
@@ -70,10 +69,7 @@ def main() -> None:
         if fn is None:
             print(f"!! unknown query {name}", file=sys.stderr)
             continue
-        if name.startswith("skew_"):
-            runner = lambda: fn(spark, SF_DIR).collect()
-        else:
-            runner = lambda: bench._consume_checksum(fn(spark, SF_DIR))
+        runner = lambda: bench._consume_checksum(fn(spark, SF_DIR))
         gc.collect()
         try:  # bench.py's convention; _jvm may be absent (ADVICE r12)
             jvm = spark.sparkContext._jvm

@@ -64,9 +64,11 @@ CASES = {
         "2.5;3.5;;c;;2024-05-02 11:00:00\n"
     ),
     "empty_names": "lat;;lon;;datahora\n0.5;u;0.5;v;2024-05-02 10:00:00\n1.5;;2.5;;\n",
+    # the delimiter is sniffed from the lines the reader keeps, so the
+    # BOM and the blank lines before the header do not hide the ','
     "bom_and_blank_lines": (
-        "\ufeff\n  \nlat;lon;datahora;satelite\n\n0.5;0.5;2024-05-02 10:00:00;AQUA\n"
-        " \t \n1.5;2.5;2024-05-02 11:00:00;TERRA\r\n2.5;3.5;2024-05-02 12:00:00;NPP\n"
+        "\ufeff\n  \nlat,lon,datahora,satelite\n\n0.5,0.5,2024-05-02 10:00:00,AQUA\n"
+        " \t \n1.5,2.5,2024-05-02 11:00:00,TERRA\r\n2.5,3.5,2024-05-02 12:00:00,NPP\n"
     ),
 }
 BASE = dt.date(2024, 5, 2)

@@ -207,18 +207,14 @@ def test_run_errors_without_files_or_range(tmp_path, dims_dir):
 
 
 def test_validate_repo_structure_and_warehouse(spark, dims_dir, tmp_path):
-    """validate-repo (reference validate_repo.py analog): structural
-    engine invariants always pass on this repo; the warehouse check
-    fails on an empty warehouse, passes after a full run, and flags
-    staged leftovers (the WAP invariant)."""
-    from inpe_queimadas_etl_spark.checks import (
-        validate_repo_structure,
-        validate_warehouse_layout,
-    )
+    """validate-repo (reference validate_repo.py analog) needs a
+    warehouse: the check fails on an empty warehouse, passes after a
+    full run, and flags staged leftovers (the WAP invariant)."""
+    from inpe_queimadas_etl_spark.checks import validate_warehouse_layout
 
-    s = validate_repo_structure()
-    assert s["ok"], s
-    assert s["n_queries"] == 50 and s["n_oracles"] == 50
+    with pytest.raises(SystemExit) as ex:
+        cli.main(["validate-repo"])
+    assert ex.value.code == 2
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -370,70 +366,6 @@ def test_load_dims_mixed_formats(spark, dims_dir, tmp_path):
     ref_area = {r["uf"]: r["area_km2"] for r in ref["uf_area"].collect()}
     got_area = {r["uf"]: r["area_km2"] for r in got["uf_area"].collect()}
     assert got_area == pytest.approx(ref_area)
-
-
-def test_validate_repo_structure_broken_entry_module(monkeypatch):
-    """ADVICE r4 #2: a broken __spark_entry__ (SyntaxError, or a failed
-    import INSIDE the module) must be recorded as a structural failure,
-    not crash validate-repo; only module-absent (running outside the
-    repo root) stays benign."""
-    import importlib
-
-    from inpe_queimadas_etl_spark.checks import validate_repo_structure
-
-    real_import = importlib.import_module
-
-    def raising(kind):
-        def _imp(name, *a, **kw):
-            if name == "__spark_entry__":
-                raise kind
-            return real_import(name, *a, **kw)
-        return _imp
-
-    # broken module body -> recorded failure
-    monkeypatch.setattr(
-        importlib, "import_module", raising(SyntaxError("bad entry"))
-    )
-    s = validate_repo_structure()
-    assert not s["ok"]
-    assert any("__spark_entry__ import failed" in f for f in s["failures"])
-
-    # a dependency missing inside the module -> recorded failure
-    monkeypatch.setattr(
-        importlib,
-        "import_module",
-        raising(ImportError("no mod", name="some_missing_dep")),
-    )
-    s = validate_repo_structure()
-    assert not s["ok"]
-    assert any("__spark_entry__ import failed" in f for f in s["failures"])
-
-    # module absent entirely (library user outside repo root) -> benign
-    monkeypatch.setattr(
-        importlib,
-        "import_module",
-        raising(ModuleNotFoundError("absent", name="__spark_entry__")),
-    )
-    s = validate_repo_structure()
-    assert s["ok"], s
-
-
-def test_validate_repo_structure_catches_bench_registry_drift(monkeypatch):
-    """A registry rename must not silently drop a bench HEADLINE entry
-    (bench's silent skip would read as a perf win)."""
-    import bench as bench_mod
-
-    from inpe_queimadas_etl_spark.checks import validate_repo_structure
-
-    s = validate_repo_structure()
-    assert s["ok"], s  # current HEADLINE fully resolvable
-
-    monkeypatch.setattr(
-        bench_mod, "HEADLINE", list(bench_mod.HEADLINE) + ["q99_renamed_away"]
-    )
-    s = validate_repo_structure()
-    assert not s["ok"]
-    assert any("q99_renamed_away" in f for f in s["failures"])
 
 
 @pytest.mark.parametrize("fmt", ["shp", "geojson"])

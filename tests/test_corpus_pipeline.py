@@ -492,7 +492,7 @@ def test_split_by_content_mode(spark, tmp_path):
     co-assign, assignments match the registered cur6 semantics
     (split_from_content), cluster_id lineage is still carried, and
     the manifest records the mode."""
-    from inpe_queimadas_etl_spark.suite.llmdata import split_from_content
+    from inpe_queimadas_etl_spark.corpus_ops import split_from_content
 
     out = str(tmp_path / "out_content")
     manifest = run_corpus_pipeline(
@@ -620,7 +620,7 @@ def test_lm_gate_and_dsir_selection_stages(spark, tmp_path):
 
     import pandas as pd
 
-    from inpe_queimadas_etl_spark.suite.llmdata import ngram_lm_scores
+    from inpe_queimadas_etl_spark.corpus_ops import ngram_lm_scores
 
     rng = random.Random(97)
     # 100 fixed word PAIRS: fluent docs draw 25 pairs each, so pair
@@ -882,7 +882,7 @@ def test_full_selection_stack_single_invocation(spark, tmp_path):
 
     import pandas as pd
 
-    from inpe_queimadas_etl_spark.suite.llmdata import (
+    from inpe_queimadas_etl_spark.corpus_ops import (
         ngram_lm_scores,
         pii_redact,
     )

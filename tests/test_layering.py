@@ -4,8 +4,10 @@ search kernels, the LLM-corpus operator suite (``suite``, the BPE
 tokenizer, the quality classifier) or the incremental dedup index.
 The dashboard query layer (``queries``) answers from the serving
 context's in-memory cube, so it must not import Spark at all.
-Spark-free: the checks read each module's source, and the traced
-benchmark's wrap list is checked against the package's attributes."""
+Every module of the package must be reachable by imports from its
+entry points, so code nothing runs cannot linger. Spark-free: the
+checks read each module's source, and the traced benchmark's wrap list
+is checked against the package's attributes."""
 
 from __future__ import annotations
 
@@ -46,21 +48,37 @@ def _is_forbidden(name: str) -> bool:
     return any(name == f or name.startswith(f"{f}.") for f in FORBIDDEN)
 
 
+def _module_file(module: str) -> Path | None:
+    """The source file of package module ``module`` (dotted name below
+    the package, "" for the package itself), or None."""
+    parts = module.split(".") if module else []
+    for path in (
+        PKG_DIR.joinpath(*parts[:-1], f"{parts[-1]}.py") if parts else None,
+        PKG_DIR.joinpath(*parts, "__init__.py"),
+    ):
+        if path is not None and path.is_file():
+            return path
+    return None
+
+
 def _imported_modules(module: str) -> set[str]:
     """Absolute names of every module ``module`` imports, anywhere in
-    its body (function-local imports included). ``from X import y``
+    its body (function-local imports included), with relative imports
+    resolved against the module's own package. ``from X import y``
     yields both X and X.y, since y may itself be a module."""
-    tree = ast.parse((PKG_DIR / f"{module}.py").read_text())
+    path = _module_file(module)
+    here = [PKG, *module.split(".")] if module else [PKG]
+    if path.name != "__init__.py":
+        here = here[:-1]
     out: set[str] = set()
-    for node in ast.walk(tree):
+    for node in ast.walk(ast.parse(path.read_text())):
         if isinstance(node, ast.Import):
             out.update(a.name for a in node.names)
         elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
             if node.level:
-                # every fire-path module sits at the package top level
-                base = f"{PKG}.{node.module}" if node.module else PKG
-            else:
-                base = node.module or ""
+                anchor = here[: len(here) - node.level + 1]
+                base = ".".join(anchor + ([base] if base else []))
             out.add(base)
             out.update(f"{base}.{a.name}" for a in node.names)
     return out
@@ -80,6 +98,55 @@ def test_fire_path_does_not_import_vector_search_modules():
     }
     offenders = {m: names for m, names in offenders.items() if names}
     assert not offenders, offenders
+
+
+# ``suite`` is the kernel-suite registry that bench.py times and
+# tests/test_suite_oracle.py checks against its DuckDB oracles
+ENTRY_POINTS = (
+    "__main__",
+    "cli",
+    "api",
+    "pipeline",
+    "streaming",
+    "corpus_pipeline",
+    "suite",
+)
+
+
+def _package_imports(module: str) -> set[str]:
+    """Package modules (dotted names below the package) that importing
+    ``module`` runs: each one it imports and their parent packages."""
+    out: set[str] = set()
+    for name in _imported_modules(module):
+        parts = name.split(".")
+        if parts[0] != PKG:
+            continue
+        out.update(
+            ".".join(parts[1:i])
+            for i in range(1, len(parts) + 1)
+            if _module_file(".".join(parts[1:i]))
+        )
+    return out
+
+
+def test_every_module_is_reachable_from_an_entry_point():
+    # the walk must see through relative imports in subpackages and
+    # function-local imports, or the guard would pass vacuously
+    assert "operators.geo" in _package_imports("operators.geometry")
+    assert "corpus_ops" in _package_imports("operators.mixture")
+    assert "suite.llmdata" in _package_imports("suite")
+    seen: set[str] = set()
+    todo = list(ENTRY_POINTS)
+    while todo:
+        module = todo.pop()
+        if module not in seen:
+            seen.add(module)
+            todo.extend(_package_imports(module))
+    modules = {
+        ".".join(p.relative_to(PKG_DIR).with_suffix("").parts).removesuffix("__init__").rstrip(".")
+        for p in PKG_DIR.rglob("*.py")
+    }
+    assert sorted(modules - seen) == []
 
 
 def test_query_layer_does_not_import_spark():

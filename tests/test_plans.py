@@ -102,35 +102,6 @@ def test_no_unintended_cross_products(spark, name):
         )
 
 
-def test_skew_two_phase_plan_spreads_hot_key(spark):
-    """The two-phase skew plan must shuffle on (k, __salt) first — the
-    hot key spread over N_SALTS reducers — and only then on k; the
-    naive plan's single aggregate exchange partitions on k alone, the
-    shape that funnels a hot key through one reducer (and OOMs at
-    REPLICATION=8, see suite/skewdemo.py)."""
-    from inpe_queimadas_etl_spark.suite.skewdemo import (
-        skew_hot_distinct_naive,
-        skew_hot_distinct_two_phase,
-    )
-
-    plan2 = _plan(skew_hot_distinct_two_phase(spark, SF0001))
-    salted = [
-        seg.split("\n")[0]
-        for seg in plan2.split("hashpartitioning(")[1:]
-        if seg.split("\n")[0].startswith("k#") and "__salt" in seg.split("\n")[0]
-    ]
-    assert salted, f"no (k, __salt) exchange in two-phase plan:\n{plan2}"
-
-    plan1 = _plan(skew_hot_distinct_naive(spark, SF0001))
-    assert "__salt" not in plan1
-    agg_parts = [
-        seg.split("\n")[0]
-        for seg in plan1.split("hashpartitioning(")[1:]
-        if seg.split("\n")[0].startswith("k#")
-    ]
-    assert agg_parts and all("__salt" not in p for p in agg_parts), plan1
-
-
 def test_map_side_curation_ops_shuffle_free(spark):
     """cur3/cur4/tx5 are scan-shaped passes: any Exchange appearing in
     their plans means a refactor broke the zero-shuffle property that
