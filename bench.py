@@ -76,15 +76,10 @@ HEADLINE = [
     "cur8_dsir_selection",
     "cur9_dsir_resample",
     "tx9_bpe_tokenize",
-    "sim7_trained_ivf_ann",
     "emb1_hashed_encoder",
     "cur10_substring_decontamination",
     "sim5_sq8_ann",
     "sim6_ivf_sq8_ann",
-    "sim8_pq_adc",
-    "sim9_ivfpq_ann",
-    "sim10_trained_ivfpq",
-    "sim11_opq_ivfpq",
     "mm5_simhash_neardup",
 ]
 
@@ -92,7 +87,7 @@ TRANSFORM_ROWS = 100_000
 
 # the two noisiest entries get a wider sample (VERDICT r4 #8): median
 # of 5 instead of 3, so one straggler run cannot move the recorded
-# number. sim5/sim6/sim7 joined for round 9 (VERDICT r8 #5): their
+# number. sim5/sim6 joined for round 9 (VERDICT r8 #5): their
 # r7->r8 moves (+9-17 %) sat at the edge of 3-run spread bands on
 # refactor-only code — one round of unconditional 5-run sampling
 # re-anchors the band so sim6's 0.99->1.16 two-round drift can be
@@ -102,7 +97,6 @@ _EXTRA_RUNS = {
     "transform_canonicalize_100k": 5,
     "sim5_sq8_ann": 5,
     "sim6_ivf_sq8_ann": 5,
-    "sim7_trained_ivf_ann": 5,
 }
 
 # benched-but-unregistered queries (the suite registry is capped at 50
@@ -128,15 +122,10 @@ UNREGISTERED = (
     "cur8_dsir_selection",
     "cur9_dsir_resample",
     "tx9_bpe_tokenize",
-    "sim7_trained_ivf_ann",
     "emb1_hashed_encoder",
     "cur10_substring_decontamination",
     "sim5_sq8_ann",
     "sim6_ivf_sq8_ann",
-    "sim8_pq_adc",
-    "sim9_ivfpq_ann",
-    "sim10_trained_ivfpq",
-    "sim11_opq_ivfpq",
     "mm5_simhash_neardup",
 )
 
@@ -352,11 +341,6 @@ def main() -> None:
         cur8_dsir_selection,
         cur9_dsir_resample,
         tx9_bpe_tokenize,
-        sim7_trained_ivf_ann,
-        sim8_pq_adc,
-        sim9_ivfpq_ann,
-        sim10_trained_ivfpq,
-        sim11_opq_ivfpq,
         emb1_hashed_encoder,
         cur10_substring_decontamination,
     )
@@ -387,7 +371,6 @@ def main() -> None:
     queries.setdefault("cur8_dsir_selection", cur8_dsir_selection)
     queries.setdefault("cur9_dsir_resample", cur9_dsir_resample)
     queries.setdefault("tx9_bpe_tokenize", tx9_bpe_tokenize)
-    queries.setdefault("sim7_trained_ivf_ann", sim7_trained_ivf_ann)
     queries.setdefault("emb1_hashed_encoder", emb1_hashed_encoder)
     queries.setdefault("cur10_substring_decontamination", cur10_substring_decontamination)
     queries.setdefault(
@@ -395,10 +378,6 @@ def main() -> None:
     )
     queries.setdefault("sim5_sq8_ann", sim5_sq8_ann)
     queries.setdefault("sim6_ivf_sq8_ann", sim6_ivf_sq8_ann)
-    queries.setdefault("sim8_pq_adc", sim8_pq_adc)
-    queries.setdefault("sim9_ivfpq_ann", sim9_ivfpq_ann)
-    queries.setdefault("sim10_trained_ivfpq", sim10_trained_ivfpq)
-    queries.setdefault("sim11_opq_ivfpq", sim11_opq_ivfpq)
     queries.setdefault("mm5_simhash_neardup", mm5_simhash_neardup)
 
     # Warm the JVM / session (codegen, parquet footer reads) so the

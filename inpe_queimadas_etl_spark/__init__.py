@@ -31,7 +31,7 @@ Layout
 - ``operators``  reusable distributed operators: geo joins and
                  geometry, BPE, rolling window hashes, mixture
                  resampling, pack materialization, passage dedup,
-                 similarity search (sign-LSH, IVF, PQ), multimodal
+                 similarity search (sign-LSH, IVF), multimodal
                  column plumbing.
 - ``corpus_pipeline`` / ``corpus_ops``
                  the training-corpus materialization behind

@@ -263,10 +263,8 @@ def cosine(a_col: str, b_col: str) -> Column:
 
 
 def assign_nearest_block(mat, nrm, cmat, cns, block: int = 1024):
-    """THE blocked nearest-centroid argmax core, shared by
-    :func:`nearest_centroid` (the Arrow assignment UDF) and the fused
-    IVF-PQ store build (``operators.pq.pq_ivf_encode``) so the two
-    paths are bit-identical by SHARED CODE, not by argument.
+    """The blocked nearest-centroid argmax core of
+    :func:`nearest_centroid` (the Arrow assignment UDF).
 
     ``mat`` is ``(n, dim)`` float64 vectors, ``nrm`` their ``(n,)``
     norms, ``cmat`` the ``(dim, K)`` centroid matrix, ``cns`` the
@@ -275,9 +273,7 @@ def assign_nearest_block(mat, nrm, cmat, cns, block: int = 1024):
     sequence identical to the JVM zip_with/fold expression (see
     :func:`nearest_centroid`'s docstring for the replay argument).
     A row with no finite csim (zero-norm vector) keeps
-    ``best_sim=-inf`` and ``best_id=0`` — the caller decides whether
-    that maps to NULL (the UDF) or stays centroid 0 (the encoder,
-    matching `_ivf_assign`'s join behavior)."""
+    ``best_sim=-inf`` and ``best_id=0``; the UDF maps that to NULL."""
     import numpy as np
 
     n = mat.shape[0]
@@ -390,13 +386,13 @@ def nearest_centroid(
     # equi-join pushes an isnotnull(centroid_id) filter below the
     # projection, and Catalyst satisfies it by DUPLICATING the UDF —
     # plans carried two ArrowEvalPython nodes running the full
-    # assignment twice per row (seen in sim6/sim7's store build,
+    # assignment twice per row (seen in sim6's store build,
     # plans/r12/sim6_ivf_sq8_ann_after.txt nodes (3)/(7) before this
     # fix). The function is pure — the marker only forbids the
     # optimizer to clone or reorder it, so values are unchanged
     # (pinned bit-identical to the JVM reference form either way).
     # Tradeoff (ADVICE r12): the marker applies to EVERY consumer of
-    # nearest_centroid (sim6/sim7 store builds, semdedup, dd12) and
+    # nearest_centroid (sim6's store build, semdedup, dd12) and
     # blocks legitimate filter pushdown THROUGH the projection for all
     # of them — a future consumer that must prune rows before
     # assignment has to pre-filter its input explicitly.
@@ -440,34 +436,3 @@ def cosine_block(V, nv, W, nw):
         sim = acc / denom
     sim[denom == 0.0] = -np.inf
     return sim
-
-
-def train_ivf_codebook(emb, k: int, max_iter: int = 20, seed: int = 13):
-    """Train an IVF coarse codebook with MLlib KMeans over ``(vec_id,
-    v, nrm)`` and return it in the shared ``(centroid_id, cv, cn)``
-    contract `_ivf_centroids` established — so a TRAINED codebook
-    drops into `_ivf_assign` / `sim6_code_store` / `_ivf_sq8_topk`
-    unchanged (sim7's path).
-
-    Scale design: KMeans is the one genuinely iterative step in the
-    similarity tier and MLlib already implements it Spark-shaped
-    (per-iteration broadcast of K centers + map-side partial sums —
-    the same aggregation shape our assignment uses). The exported
-    K-row table is the only artifact. Determinism: fixed seed + fixed
-    init mode; the returned centroid_id is the KMeans center index."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import functions as F
-
-    vecs = emb.select(array_to_vector(F.col("v")).alias("features"))
-    model = KMeans(
-        k=k, maxIter=max_iter, seed=seed, initMode="k-means||"
-    ).fit(vecs)
-    rows = [
-        (i, [float(x) for x in c])
-        for i, c in enumerate(model.clusterCenters())
-    ]
-    cdf = emb.sparkSession.createDataFrame(
-        rows, "centroid_id bigint, cv array<double>"
-    )
-    return cdf.withColumn("cn", vec_norm("cv"))

@@ -586,14 +586,18 @@ def write_validation_report(
 
 def read_resume_state(state_path: str | None) -> set[str]:
     """S8 resume marker read-back (reference backfill.py:151-162): the
-    set of ISO days already completed in a previous run."""
+    set of ISO days already completed in a previous run. A missing,
+    malformed or wrongly shaped state file means no state."""
     if not state_path or not Path(state_path).exists():
         return set()
     try:
         data = json.loads(Path(state_path).read_text())
     except (OSError, json.JSONDecodeError):
         return set()
-    return set(data.get("days", []))
+    days = data.get("days") if isinstance(data, dict) else None
+    if not isinstance(days, list):
+        return set()
+    return {d for d in days if isinstance(d, str)}
 
 
 def run_range(

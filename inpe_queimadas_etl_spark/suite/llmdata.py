@@ -2713,76 +2713,28 @@ def sim6_ivf_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_sq8_topk(emb, _ivf_centroids(emb))
 
 
-def _budgeted_probe_filter(
-    scored: DataFrame, qw, sizes: dict, candidate_frac: float
-) -> DataFrame:
-    """THE multi-probe budget rule, shared by every budgeted-probe
-    path (sim7's _ivf_sq8_topk branch, sim9/sim10's _sim9_probe) so
-    the cross-engine contract — probe centroids in ``qw`` order until
-    the cumulative cluster size reaches
-    ``max(1, int(corpus * candidate_frac))`` — can never drift
-    between operators (each is pinned against a DuckDB mirror of this
-    exact rule). ``sizes`` is the K-row cluster-size table."""
-    target = max(1, int(sum(sizes.values()) * candidate_frac))
-    size_map = F.create_map(
-        *[F.lit(x) for cid_n in sizes.items() for x in cid_n]
-    )
-    return (
-        scored.withColumn(
-            "csz", F.coalesce(size_map[F.col("centroid_id")], F.lit(0))
-        )
-        .withColumn(
-            "cum_before",
-            F.coalesce(
-                F.sum("csz").over(
-                    qw.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .filter(F.col("cum_before") < target)
-    )
-
-
 def _ivf_sq8_topk(
     emb: DataFrame,
     cent: DataFrame,
     k: int = _IVF_K,
     nprobe: int = _IVF_NPROBE,
-    candidate_frac: float | None = None,
 ) -> DataFrame:
-    """The IVF+SQ8 search tail shared by sim6 (first-K demo codebook)
-    and sim7 (KMeans-trained codebook) — one implementation, so the
-    two paths cannot drift: build the code store under ``cent``,
-    probe each query's nearest centroids, dequantize only probed
-    candidates, rerank with the shared _score_rank_top5.
-
-    Probe policy: with ``candidate_frac=None`` (sim6, the
-    oracle-stated contract) each query probes exactly ``nprobe``
-    centroids. With ``candidate_frac`` set (sim7, VERDICT r6 #4),
-    probing is MULTI-PROBE: centroids are taken in descending
-    query-centroid cosine order until the CUMULATIVE cluster size
-    reaches ``candidate_frac`` of the corpus — the candidate BUDGET
-    becomes the contract instead of the probe count, so a trained
-    codebook's balanced (smaller) clusters buy more probes rather
-    than silently shrinking recall (the r6 floor-pinned-at-0.5
-    finding). Cluster sizes are a K-row collect off the code store
-    (the codebook-collect convention); the per-query prefix is a
-    running sum over K rows on the few-queries side — the corpus
-    side stays window-free and is never fully scanned (plan-pinned:
-    the probe join is unchanged)."""
+    """sim6's IVF+SQ8 search tail: build the code store under
+    ``cent``, probe each query's ``nprobe`` nearest centroids (the
+    oracle-stated contract), dequantize only probed candidates,
+    rerank with the shared _score_rank_top5."""
     from ..operators.similarity import dot_product
 
-    # ONE driver collect per side serves every consumer (r12, the
-    # sim8/sim9 pattern — guide §2.4/§3.1): previously the probe
-    # ranking and the q broadcast build each re-executed their source
-    # scan (for sim6, a parquet scan of the embeddings table; the q
-    # build additionally re-ran the centroid join + ranking) inside
-    # the single-threaded BroadcastExchange thread. The K-row codebook
-    # and the 8-row query table come back once and are handed back as
-    # JVM LocalRelations — collected doubles round-trip bit-exactly,
-    # so csim, the probe order, and every downstream rank are
-    # unchanged (pinned by the sim6/sim7 oracle parity tests).
+    # ONE collect per side serves every consumer (r12, guide
+    # §2.4/§3.1): previously the probe ranking and the q broadcast
+    # build each re-executed their source scan (a parquet scan of the
+    # embeddings table; the q build additionally re-ran the centroid
+    # join + ranking) inside the single-threaded BroadcastExchange
+    # thread. The K-row codebook and the 8-row query table come back
+    # once and are handed back as JVM LocalRelations — collected
+    # doubles round-trip bit-exactly, so csim, the probe order, and
+    # every downstream rank are unchanged (pinned by the sim6 oracle
+    # parity test).
     spark = emb.sparkSession
     cents3 = sorted(
         (r["centroid_id"], list(r["cv"]), r["cn"]) for r in cent.collect()
@@ -2804,8 +2756,6 @@ def _ivf_sq8_topk(
         ),
     )
     store = sim6_code_store(emb, k, centroids=cent_local)
-    if candidate_frac is not None:
-        store = store.localCheckpoint(eager=True)
 
     q_rows = (
         emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
@@ -2834,14 +2784,9 @@ def _ivf_sq8_topk(
         "csim",
         F.try_divide(dot_product("v", "cv"), F.col("nrm") * F.col("cn")),
     )
-    if candidate_frac is None:
-        probed = scored.withColumn("rn", F.row_number().over(qw)).filter(
-            F.col("rn") <= nprobe
-        )
-    else:
-        probed = _budgeted_probe_filter(
-            scored, qw, _cluster_sizes(store), candidate_frac
-        )
+    probed = scored.withColumn("rn", F.row_number().over(qw)).filter(
+        F.col("rn") <= nprobe
+    )
     q = probed.select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -3706,47 +3651,6 @@ def tx9_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_token_stats(docs, merges)
 
 
-# --- sim7: IVF x SQ8 over a TRAINED codebook --------------------------------
-# sim6 with the missing production piece: the coarse codebook comes
-# from MLlib KMeans (operators/similarity.py::train_ivf_codebook)
-# instead of the first-K demo pick. Same (centroid_id, cv, cn)
-# contract, same shared search tail (_ivf_sq8_topk), so the ONLY
-# delta is codebook quality — measured on the oracle corpus:
-# quantization tightens (mean centroid cosine up) and recall@5 vs
-# exact is >= sim6's at equal nprobe (tests/test_sim7.py pins both).
-#
-# UNREGISTERED and NO SQL ORACLE (KMeans training; the tx9 exception
-# class) — pinned by the quality/recall gates; benched in bench.py.
-
-_SIM7_CODEBOOK_CACHE: dict = {}
-
-
-def sim7_trained_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim6's search over a KMeans-trained codebook (trained once per
-    session — the tx9/tx10 model-artifact cache convention), with
-    MULTI-PROBE at sim6's nominal candidate budget nprobe/K (VERDICT
-    r6 #4): balanced trained clusters buy extra probes instead of
-    silently shrinking the candidate set, so recall at equal budget
-    is >= sim6's (pinned in tests/test_sim7.py)."""
-    from ..operators.similarity import train_ivf_codebook, vec_norm
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nrm", vec_norm("v"))
-    )
-    key = (sf_dir, _IVF_K)
-    cent = _SIM7_CODEBOOK_CACHE.get(key)
-    if cent is None:
-        cent = train_ivf_codebook(emb, k=_IVF_K).localCheckpoint(
-            eager=True
-        )
-        _SIM7_CODEBOOK_CACHE[key] = cent
-    return _ivf_sq8_topk(
-        emb, cent, candidate_frac=_IVF_NPROBE / _IVF_K
-    )
-
-
 # --- emb1: deterministic hashed document encoder ----------------------------
 # Embedding GENERATION plumbing: every semantic tier here (dd6, dd12,
 # sim*, cur7) consumes an embedding column that some encoder produced
@@ -4018,38 +3922,6 @@ def cur10_substring_decontamination(
     )
 
 
-# sim8 serving constants + the baked-codebook static oracle. Defined
-# ABOVE the battery because its @query decorator's oracle f-string
-# evaluates at import time; the sim8 operator section lives further
-# down in this file.
-_SIM8_M = 8
-_SIM8_KS = 16
-_SIM8_CAND = 100
-_SIM8_CB_CACHE: dict[str, list] = {}
-
-
-def _sim8_static_sql() -> str:
-    from ..operators.pq import pq_search_oracle_sql
-    from .sim8_model import SIM8_BATTERY_CB
-
-    return pq_search_oracle_sql(SIM8_BATTERY_CB, _SIM8_CAND)
-
-
-SIM8_STATIC_SQL = _sim8_static_sql()
-
-# The five static ANN branches' oracle rows are BAKED
-# (suite/sim_static_rows.py, generated by scripts/gen_sim_static_rows.py
-# from the same SIM{7,8,9,10,11}_STATIC_SQL these lines used to inline):
-# the inlined form was 1.18 MB of codebook VALUES arithmetic that OOMed
-# DuckDB under the driver's memory cap (VERDICT r11 #1). The full
-# static SQLs remain the authority — tests/test_battery_static_rows.py
-# re-derives the baked rows from them at both driver corpora on every
-# pytest run, and tests/test_pq.py keeps the live recomputed oracles.
-from .sim_static_rows import sim_static_expected_sql  # noqa: E402
-
-SIM_STATIC_EXPECTED_SQL = sim_static_expected_sql()
-
-
 # --- llm_ops_battery: registered composite for the r5/r6 tier ---------------
 # The 50-slot driver registry cannot grow (snapshot cap, round-4
 # convention), so the ten operators added in rounds 5-6 that still
@@ -4129,36 +4001,22 @@ def _melt_battery(df: DataFrame, chk: str, key_s, n, v) -> DataFrame:
                      CAST(neighbor_id AS VARCHAR)),
            rank, sim
     FROM ({SIM6_SQL})
-    UNION ALL
-    SELECT chk, key_s, n, v
-    FROM ({SIM_STATIC_EXPECTED_SQL})
     """,
 )
 def llm_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite driver-correctness battery for the fifteen
-    r5-r9 operators outside the 50-slot registry: dd10
-    duplicate spans, dd11 span scrub, dd12 SemDeDup, cur7 semantic
-    decontamination, cur8 DSIR selection, cur9 DSIR Gumbel-top-k
-    resample, cur10 substring decontamination, tx8 bigram-LM
-    perplexity, emb1 hashed doc encoder, sim6 IVF x SQ8 ANN, and the
-    five baked-model ANN tiers — sim8 PQ/ADC, sim7 trained-IVF
-    multi-probe, sim9 IVF-PQ residual multi-probe, sim10
-    trained-coarse IVF-PQ, sim11 OPQ-rotated IVF-PQ (r9) — each
-    under its frozen serving model (suite/sim*_model.py) with a
-    static oracle generated from the same constant (VERDICT r7 #2 +
-    the r8 sim10 tier + the r9 OPQ rung). As of r12 the oracle ships
-    the branches' BAKED expected rows (suite/sim_static_rows.py,
-    fingerprint-dispatched per corpus, re-derived from the full
-    static SQL on every pytest run) instead of inlining 1.18 MB of
-    codebook arithmetic that OOMed DuckDB at the driver's memory cap
-    (VERDICT r11 #1). Every
-    operator's complete value set is hashed (spans+window counts,
-    scrubbed-text md5, removal sets with similarities, DSIR weights
-    and Gumbel keys, contamination flags, per-doc logprobs, exact
-    encoder components, ranked neighbors); each sub-operator also
-    keeps its own standalone oracle test in tests/. The union is a
-    pure composition — each branch is the operator's registered-shape
-    plan unchanged, so the battery adds no shuffles beyond what the
+    """Composite correctness battery for the ten r5-r6
+    operators outside the 50-slot registry: dd10 duplicate spans,
+    dd11 span scrub, dd12 SemDeDup, cur7 semantic decontamination,
+    cur8 DSIR selection, cur9 DSIR Gumbel-top-k resample, cur10
+    substring decontamination, tx8 bigram-LM perplexity, emb1 hashed
+    doc encoder and sim6 IVF x SQ8 ANN. Every operator's complete
+    value set is hashed (spans+window counts, scrubbed-text md5,
+    removal sets with similarities, DSIR weights and Gumbel keys,
+    contamination flags, per-doc logprobs, exact encoder components,
+    ranked neighbors); each sub-operator also keeps its own
+    standalone oracle test in tests/. The union is a pure
+    composition — each branch is the operator's registered-shape plan
+    unchanged, so the battery adds no shuffles beyond what the
     operators themselves cost."""
     longn = F.lit(None).cast("long")
     dbln = F.lit(None).cast("double")
@@ -4172,11 +4030,6 @@ def llm_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx8 = tx8_lm_perplexity(spark, sf_dir)
     emb1 = emb1_hashed_encoder(spark, sf_dir)
     sim6 = sim6_ivf_sq8_ann(spark, sf_dir)
-    sim8 = sim8_static_pq_adc(spark, sf_dir)
-    sim7 = sim7_static_trained_ivf(spark, sf_dir)
-    sim9 = sim9_static_ivfpq(spark, sf_dir)
-    sim10 = sim10_static_ivfpq(spark, sf_dir)
-    sim11 = sim11_static_opq_ivfpq(spark, sf_dir)
     parts = [
         _melt_battery(
             dd10,
@@ -4257,874 +4110,7 @@ def llm_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sim"),
         )
     )
-    for chk, df in (
-        ("sim8", sim8),
-        ("sim7", sim7),
-        ("sim9", sim9),
-        ("sim10", sim10),
-        ("sim11", sim11),
-    ):
-        parts.append(
-            _melt_battery(
-                df,
-                chk,
-                F.concat_ws(
-                    ":",
-                    F.col("query_id").cast("string"),
-                    F.col("neighbor_id").cast("string"),
-                ),
-                F.col("rank"),
-                F.col("sim"),
-            )
-        )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-# --- sim8: product-quantization ANN (ADC) ----------------------------------
-# The memory-floor serving shape: PQ codes (operators/pq.py, Jégou et
-# al. 2011) store each 64-dim vector as m=8 4-bit-range codes — 32x
-# smaller than float32, 4x beyond sim5's SQ8 — and the search scan
-# never touches a float vector: a per-query m x ks lookup table of
-# sub-inner-products (ADC) turns each row's score into m array
-# lookups of pure unrolled JVM arithmetic (no UDF, no HOF lambda).
-# Top-C candidates under the ADC order are then reranked EXACTLY by
-# the shared _score_rank_top5 tail over only those C vectors per
-# query (the sim6 "reconstruct only probed candidates" discipline).
-#
-# Cross-engine: every expression downstream of the trained codebook
-# is emitted by one generator in two dialects with identical literal
-# text and left-associated order (operators/pq.py), so the codes and
-# the candidate SET are bit-identical between Spark and DuckDB by
-# construction — the oracle comparison pins the full pipeline, not a
-# rounded projection of it.
-#
-# UNREGISTERED (50-entry driver snapshot cap) — oracle-compared and
-# recall-gated in tests/test_pq.py, benched in bench.py.
-
-def _sim8_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import vec_norm
-
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .withColumn("nrm", vec_norm("v"))
-    )
-
-
-def _sim8_codebook(emb: DataFrame, key: str) -> list:
-    """Train-once PQ codebook per corpus (session cache, the
-    _TX7_WDF_CACHE convention): m sub-k-means on a bounded
-    deterministic sample — model artifacts are K-row driver state,
-    never corpus-sized."""
-    if key not in _SIM8_CB_CACHE:
-        from ..operators.pq import train_pq_codebook
-
-        _SIM8_CB_CACHE[key] = train_pq_codebook(
-            emb, m=_SIM8_M, ks=_SIM8_KS
-        )
-    return _SIM8_CB_CACHE[key]
-
-
-def sim8_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 cosine ANN over PQ codes with ADC candidate generation:
-    queries (vec_id < 8, full precision — the sim1/sim5 convention)
-    build their LUTs once; the corpus scan reads (vec_id, codes)
-    only; top-C=100 ADC candidates per query are fetched and reranked
-    exactly (C is a fixed serving constant: 20% of this demo corpus,
-    0.0001% of a 100M-vector shard).
-
-    Scale design: the scan side is 8 bytes of codes per row (100 TB
-    of float32 -> ~3 TB of codes); the LUT table is m*ks doubles per
-    query attached via a broadcast of the FEW-row query table (never
-    the model-array-crossJoin anti-pattern — the LUT is per-query
-    data, K-row sized); the candidate prune is the same two-phase
-    partial top-k _score_rank_top5 uses, so only ~C rows per query
-    cross the exchange; the exact rerank fetches full vectors for
-    C*queries rows via joins that broadcast the tiny side.
-    Plan-pinned in tests/test_pq.py: encoding has zero Exchange and
-    the ADC scan carries no Python boundary."""
-    emb = _sim8_emb(spark, sf_dir)
-    return _sim8_topk(emb, _sim8_codebook(emb, sf_dir))
-
-
-def sim8_static_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim8 under the BAKED serving codebook (suite/sim8_model.py):
-    the deployment shape — a quantizer is trained once and then
-    applied as a constant to whatever corpus arrives (the tx7/tx10
-    weights-as-artifact stance). Same search tail as sim8_pq_adc;
-    only the codebook source differs (the sim6-vs-sim7 convention).
-    This is the llm_ops_battery branch, so it carries a hard driver
-    CORRECTNESS row against the static oracle generated from the
-    same frozen constant."""
-    from .sim8_model import SIM8_BATTERY_CB
-
-    return _sim8_topk(_sim8_emb(spark, sf_dir), SIM8_BATTERY_CB)
-
-
-def _sim8_topk(emb: DataFrame, cb: list) -> DataFrame:
-    """The PQ/ADC search tail shared by sim8_pq_adc (per-corpus
-    trained codebook) and sim8_static_pq_adc (baked battery codebook)
-    — one implementation, so the two paths cannot drift.
-
-    PRODUCTION path (VERDICT r7 #1): the ADC scoring runs as one
-    Arrow scan over the codes store (operators/pq.py::
-    pq_adc_search_scan), replaying the unrolled JVM chains bit-
-    exactly in numpy — no janino 64 KB interpreted fallback, no
-    per-run Catalyst analysis of the ~1k-term literal expression.
-    Candidate sets are IDENTICAL to the JVM reference `_sim8_topk_ref`
-    (pinned in tests/test_pq.py at sf0.001/sf0.01). The query set
-    is a driver collect — Q-row bounded by the serving contract."""
-    from ..operators.pq import pq_adc_search_scan, pq_encode
-
-    codes = pq_encode(emb, cb)
-    # ONE driver collect serves both the scan's query list and the
-    # rerank side (r12): the old shape re-filtered the embedding
-    # table inside the q broadcast build — a second scan per search
-    q_rows = (
-        emb.filter(F.col("vec_id") < 8)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("nq"),
-        )
-        .collect()
-    )
-    queries = [(r["query_id"], list(r["qv"])) for r in q_rows]
-    q = local_df(
-        emb.sparkSession,
-        [(r["query_id"], list(r["qv"]), r["nq"]) for r in q_rows],
-        # nullable fields (ADVICE r12): downstream try_divide handles
-        # a null nq; don't raise at Arrow createDataFrame time
-        T.StructType(
-            [
-                T.StructField("query_id", T.LongType(), True),
-                T.StructField("qv", T.ArrayType(T.DoubleType()), True),
-                T.StructField("nq", T.DoubleType(), True),
-            ]
-        ),
-    )
-    scored = pq_adc_search_scan(codes, cb, queries, _SIM8_CAND)
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.desc_nulls_first("pq_score"), F.asc("vec_id")
-    )
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w_global))
-        .filter(F.col("rn") <= _SIM8_CAND)
-        .select("query_id", "vec_id")
-    )
-    # stream the embedding table; broadcast the C*Q-row candidate
-    # list and the Q-row query table (the dd2 finding: never let the
-    # planner build a driver-side broadcast of the full array-typed
-    # embedding projection — guide §3.1)
-    paired = (
-        emb.select("vec_id", "v", F.col("nrm").alias("nv"))
-        .join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(q), "query_id")
-    )
-    return _score_rank_top5(paired)
-
-
-def _sim8_topk_ref(emb: DataFrame, cb: list) -> DataFrame:
-    """JVM-expression REFERENCE form of the PQ/ADC search (the
-    pq_encode_ref convention): per-query LUT columns via the unrolled
-    literal expressions, ADC score as the pure-JVM lookup chain.
-    Kept as the cross-engine parity anchor — candidate sets must
-    match the Arrow production path bit for bit (tests/test_pq.py).
-    Slow in practice: the ~1k-term expressions exceed janino's 64 KB
-    method limit (interpreted fallback) and cost a Catalyst analysis
-    per run — the r7 bench's 2.4 s fixed overhead at sf0.1."""
-    from ..operators.pq import (
-        pq_adc_score_expr,
-        pq_encode,
-        pq_lut_arrays,
-    )
-
-    codes = pq_encode(emb, cb)
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("nq"),
-    )
-    qlut = q.select(
-        "query_id",
-        *[
-            F.expr(e).alias(f"lut_{j}")
-            for j, e in enumerate(pq_lut_arrays(cb, "spark", "qv"))
-        ],
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(qlut))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("pq_score", F.expr(pq_adc_score_expr(cb, "spark")))
-    )
-    order = [F.desc("pq_score"), F.asc("vec_id")]
-    w_local = Window.partitionBy("query_id", "pid").orderBy(*order)
-    w_global = Window.partitionBy("query_id").orderBy(*order)
-    cand = (
-        scored.withColumn("pid", F.spark_partition_id())
-        .withColumn("r_loc", F.row_number().over(w_local))
-        .filter(F.col("r_loc") <= _SIM8_CAND)
-        .withColumn("rn", F.row_number().over(w_global))
-        .filter(F.col("rn") <= _SIM8_CAND)
-        .select("query_id", "vec_id")
-    )
-    paired = cand.join(
-        emb.select("vec_id", "v", F.col("nrm").alias("nv")), "vec_id"
-    ).join(F.broadcast(q), "query_id")
-    return _score_rank_top5(paired)
-
-
-def sim8_oracle_sql(spark: SparkSession, sf_dir: str) -> str:
-    """The DuckDB mirror of sim8_pq_adc, generated from the SAME
-    trained codebook through the same two-dialect expression
-    generator — encode, LUT, ADC score, top-C cut and exact rerank
-    all replayed; only the final rerank cosine uses DuckDB's
-    list_cosine_similarity (the SIM5_SQL convention, compared at
-    round(sim, 4))."""
-    from ..operators.pq import pq_search_oracle_sql
-
-    emb = _sim8_emb(spark, sf_dir)
-    cb = _sim8_codebook(emb, sf_dir)
-    return pq_search_oracle_sql(cb, _SIM8_CAND)
-
-
-# --- sim9: IVF-PQ over residuals (the Faiss-canonical composite) ------------
-# sim6 contributes the candidate-fraction knob (probe nprobe/K of the
-# corpus), sim8 the memory floor (PQ codes + ADC); sim9 composes them
-# the way Jégou et al. 2011 / Faiss IVFPQ do: assign each vector to
-# its coarse centroid, PQ-encode the RESIDUAL v - cv (residuals
-# cluster tighter than raw vectors, so the same code budget buys less
-# quantization error), and serve with per-cluster ADC. The stored row
-# is (centroid_id, 8 codes, 1 reconstruction norm) ~ 16 bytes vs 256
-# of float32; the scan touches only probed clusters.
-#
-# Reconstruction is exact algebra, not approximation: ||cv + r_hat||^2
-# = ||cv||^2 + 2<cv, r_hat> + ||r_hat||^2, with the cross term a
-# per-cluster m x ks LUT (pq_lut_arrays over cv on the K-row centroid
-# table) and the residual norm from baked literal tables — all emitted
-# by the same two-dialect fixed-order generator as sim8 (including
-# dot_unrolled for the column-column dots), so given the same coarse
-# assignment (the sim6-green cosine-rank convention) the candidate set
-# is bit-identical between Spark and DuckDB.
-#
-# UNREGISTERED (50-entry driver snapshot cap) — oracle-compared and
-# recall-gated in tests/test_pq.py, benched in bench.py.
-
-_SIM9_CB_CACHE: dict[str, list] = {}
-# Multi-probe candidate budget (VERDICT r7 #3, the sim7 lesson):
-# sim6's nominal probe fraction nprobe/K becomes the CONTRACT — probe
-# clusters in centroid-score order until the cumulative size reaches
-# this fraction of the corpus, so skewed first-K coarse clusters buy
-# extra probes instead of silently shrinking recall.
-_SIM9_FRAC = _IVF_NPROBE / _IVF_K
-
-
-def _cluster_sizes(assigned: DataFrame) -> dict:
-    """THE K-row cluster-size collect (VERDICT r8 #6: one
-    implementation, shared by every budgeted-probe path): sizes come
-    from whatever ``(centroid_id, ...)`` table the caller ALREADY
-    materialized — the code store in production (`_sim9_topk`,
-    `_ivf_sq8_topk`), never a second full-corpus assignment scan."""
-    return {
-        r["centroid_id"]: r["n"]
-        for r in assigned.groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-
-
-def _sim9_residuals(
-    emb: DataFrame, cent: DataFrame | None = None
-) -> DataFrame:
-    """(vec_id, v, nrm, centroid_id, r): coarse assignment via the
-    shared _ivf_assign (Arrow argmax, bit-pinned to the JVM fold),
-    residual via the unrolled elementwise subtraction (one IEEE op
-    per element — identical in both engines). ``cent`` overrides the
-    first-K demo codebook (the baked-model battery branch)."""
-    from ..operators.pq import arr_sub
-
-    if cent is None:
-        cent = _ivf_centroids(emb)
-    return _ivf_assign(emb, centroids=cent).join(
-        F.broadcast(cent.select("centroid_id", "cv")), "centroid_id"
-    ).withColumn("r", F.expr(arr_sub("v", "cv", _EMB_DIM, "spark")))
-
-
-def _sim9_codebook(emb: DataFrame, key: str) -> list:
-    """Residual PQ codebook (train-once, session-cached): the same
-    deterministic sample-based trainer as sim8, fit on residuals —
-    which cluster tighter than raw vectors, the IVF-PQ win."""
-    if key not in _SIM9_CB_CACHE:
-        from ..operators.pq import train_pq_codebook
-
-        res = _sim9_residuals(emb).select(
-            "vec_id", F.col("r").alias("v")
-        )
-        _SIM9_CB_CACHE[key] = train_pq_codebook(
-            res, m=_SIM8_M, ks=_SIM8_KS
-        )
-    return _SIM9_CB_CACHE[key]
-
-
-def _sim9_probe(
-    emb: DataFrame,
-    cent: DataFrame,
-    nprobe: int = _IVF_NPROBE,
-    sizes: dict | None = None,
-    candidate_frac: float | None = None,
-) -> DataFrame:
-    """Per-query probe list (vec_id, centroid_id, v, csim): queries
-    vec_id 8..16 (the sim6 convention) ranked against the K-row
-    coarse codebook. Queries are few by definition — the
-    ranked-window shape is Q x K rows.
-
-    Probe policy (the _ivf_sq8_topk convention): with
-    ``candidate_frac=None`` each query probes exactly ``nprobe``
-    clusters. With ``candidate_frac`` set (sim9's default since r8 —
-    VERDICT r7 #3, the sim7 r7 lesson), probing is MULTI-PROBE:
-    centroids are taken in descending query-centroid cosine order
-    until the CUMULATIVE cluster size (from ``sizes``, a K-row
-    collect) reaches ``candidate_frac`` of the corpus — the candidate
-    BUDGET is the contract, so skewed coarse clusters buy extra
-    probes instead of silently shrinking recall."""
-    from ..operators.similarity import dot_product
-
-    qw = Window.partitionBy("vec_id").orderBy(
-        F.desc("csim"), F.asc("centroid_id")
-    )
-    scored = (
-        emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
-        .join(F.broadcast(cent))
-        .withColumn(
-            "csim",
-            F.try_divide(
-                dot_product("v", "cv"), F.col("nrm") * F.col("cn")
-            ),
-        )
-    )
-    if candidate_frac is None:
-        return scored.withColumn(
-            "rn", F.row_number().over(qw)
-        ).filter(F.col("rn") <= nprobe)
-    return _budgeted_probe_filter(scored, qw, sizes, candidate_frac)
-
-
-def sim9_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 cosine ANN over IVF-PQ residual codes: queries (vec_id
-    8..16, the sim6 convention) probe their nprobe=2 nearest coarse
-    clusters; only probed clusters' rows are ADC-scored (approximate
-    cosine from qip_c + residual LUT lookups over the exact
-    reconstruction norm); top-C=100 candidates rerank exactly through
-    the shared _score_rank_top5 tail.
-
-    PRODUCTION path (VERDICT r7 #1): the ADC scoring runs as one
-    Arrow scan over the (vec_id, centroid_id, codes) store
-    (operators/pq.py::pq_ivf_adc_search_scan) with the coarse
-    codebook and probe list collected driver-side (K-row and
-    Q*nprobe-row bounded) — the numpy replay is bit-exact to the JVM
-    reference `sim9_ivfpq_ann_ref`, so candidate sets are IDENTICAL
-    (pinned in tests/test_pq.py).
-
-    Scale design: the store is ~12 bytes/row (codes + centroid_id;
-    the reconstruction norm is recomputed from the codes inside the
-    scan — 16x less than float32) and the scan touches only probed
-    clusters' rows; candidate prune is per-batch partial top-C, so
-    only C x batches rows per query reach the single exchange."""
-    emb = _sim8_emb(spark, sf_dir)
-    return _sim9_topk(
-        emb, _sim9_codebook(emb, sf_dir), _ivf_centroids(emb)
-    )
-
-
-def _sim9_topk(
-    emb: DataFrame, cb: list, cent: DataFrame, rot: list | None = None
-) -> DataFrame:
-    """The Arrow IVF-PQ search tail shared by sim9_ivfpq_ann
-    (first-K demo coarse codebook + per-corpus residual codebook),
-    sim9_static_ivfpq (baked battery model), sim10 (trained coarse)
-    and sim11 (OPQ rotation) — one implementation, so the paths
-    cannot drift (the _sim8_topk convention).
-
-    ``rot`` (sim11): the OPQ rotation. Codes quantize the ROTATED
-    residual (pq_ivf_encode's rot step), and the scan's K-row/Q-row
-    model state — centroid vectors and probe query vectors — is
-    rotated driver-side through the same chains (`rot_apply`), so
-    the whole ADC computation runs consistently in rotated
-    coordinates (inner products and norms are rotation-invariant
-    mathematically; bit-exactness vs the oracle holds because BOTH
-    engines compute in the same rotated coordinates). Probe
-    SELECTION and the exact rerank stay in original space."""
-    from ..operators.pq import (
-        pq_ivf_encode,
-        pq_ivf_adc_search_scan,
-        rot_apply,
-    )
-
-    # materialize the code store once (the deployment shape — the
-    # store IS a persisted artifact) and derive the multi-probe
-    # cluster sizes from IT, instead of a second full-corpus
-    # assignment scan (the sizes are a K-row side artifact of the
-    # store build — _cluster_sizes, the one implementation).
-    # The build is the FUSED Arrow pass since r9 (VERDICT r8 #3):
-    # assign + residual + encode in one numpy scan, bit-equal to the
-    # compositional _sim9_residuals -> pq_encode path kept in
-    # sim9_ivfpq_ann_ref (pinned in tests/test_pq.py).
-    cents3 = sorted(
-        (r["centroid_id"], list(r["cv"]), r["cn"])
-        for r in cent.select("centroid_id", "cv", "cn").collect()
-    )
-    codes = pq_ivf_encode(emb, cents3, cb, rot=rot).localCheckpoint(
-        eager=True
-    )
-    sizes = _cluster_sizes(codes)
-    if rot is None:
-        cents = [(cid, cv) for cid, cv, _ in cents3]
-    else:
-        cents = [(cid, rot_apply(rot, cv)) for cid, cv, _ in cents3]
-    # the probe ranks queries against the K-row codebook ALREADY
-    # collected above — hand it back as a JVM LocalRelation instead of
-    # the `cent` DataFrame, whose broadcast build re-ran the embedding
-    # scan inside the exchange thread once per search (r12, guide
-    # §2.4: the collected doubles round-trip exactly, so csim and the
-    # probe order are bit-unchanged)
-    spark = emb.sparkSession
-    cent_local = local_df(
-        spark,
-        cents3,
-        # nullable fields (ADVICE r12): see _ivf_sq8_topk
-        T.StructType(
-            [
-                T.StructField("centroid_id", T.LongType(), True),
-                T.StructField("cv", T.ArrayType(T.DoubleType()), True),
-                T.StructField("cn", T.DoubleType(), True),
-            ]
-        ),
-    )
-    probe_rows = (
-        _sim9_probe(emb, cent_local, sizes=sizes, candidate_frac=_SIM9_FRAC)
-        .select("vec_id", "centroid_id", "v", "nrm")
-        .collect()
-    )
-    probes = [
-        (
-            r["vec_id"],
-            r["centroid_id"],
-            list(r["v"]) if rot is None else rot_apply(rot, list(r["v"])),
-        )
-        for r in probe_rows
-    ]
-    # probed-cluster filter BELOW the scan: rows of unprobed clusters
-    # can never score, and the literal IN over the K-row probe set is
-    # a pushable predicate — on a store partitioned/bucketed by
-    # centroid_id this is PARTITION PRUNING (only probed clusters'
-    # files are read), the sim6 "scan touches only probed clusters"
-    # claim made physical. Candidate sets unchanged by construction
-    # (the Arrow scan only scores rows whose cluster has probes).
-    probed_cids = sorted({int(qcl) for _, qcl, _ in probes})
-    pruned = codes.filter(F.col("centroid_id").isin(probed_cids))
-    scored = pq_ivf_adc_search_scan(pruned, cb, cents, probes, _SIM8_CAND)
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.desc_nulls_first("pq_score"), F.asc("vec_id")
-    )
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w_global))
-        .filter(F.col("rn") <= _SIM8_CAND)
-        .select("query_id", "vec_id")
-    )
-    # the query vectors (and their norms) already came back with the
-    # probe collect — build the Q-row rerank side as a LocalRelation
-    # instead of re-filtering the embedding table inside another
-    # broadcast build (values round-trip bit-exactly). ORIGINAL-space
-    # v/nrm: the probe select reads them off `emb` before any rotation.
-    q_seen: dict = {}
-    for r in probe_rows:
-        q_seen.setdefault(r["vec_id"], (list(r["v"]), r["nrm"]))
-    q = local_df(
-        spark,
-        [(vid, v, nrm) for vid, (v, nrm) in sorted(q_seen.items())],
-        # nullable fields (ADVICE r12): see _ivf_sq8_topk
-        T.StructType(
-            [
-                T.StructField("query_id", T.LongType(), True),
-                T.StructField("qv", T.ArrayType(T.DoubleType()), True),
-                T.StructField("nq", T.DoubleType(), True),
-            ]
-        ),
-    )
-    # rerank: STREAM the corpus-sized embedding table and broadcast
-    # the C*Q-row candidate list (two bounded builds), instead of
-    # letting the planner build a broadcast of the full array-typed
-    # embedding projection (the dd2 finding: driver-built broadcasts
-    # of array tables are the hidden fixed cost — guide §3.1)
-    paired = (
-        emb.select("vec_id", "v", F.col("nrm").alias("nv"))
-        .join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(q), "query_id")
-    )
-    return _score_rank_top5(paired)
-
-
-def sim9_ivfpq_ann_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-expression REFERENCE form of the IVF-PQ search (the
-    pq_encode_ref / _sim8_topk_ref convention): per-cluster LUTs and
-    reconstruction norms as unrolled literal expressions, ADC scoring
-    via broadcast joins. Kept as the cross-engine parity anchor —
-    candidate sets must match the Arrow production path bit for bit
-    (tests/test_pq.py)."""
-    from ..operators.pq import (
-        dot_unrolled,
-        pq_adc_ip_expr,
-        pq_encode,
-        pq_ivf_norm2_expr,
-        pq_lut_arrays,
-    )
-
-    emb = _sim8_emb(spark, sf_dir)
-    cb = _sim9_codebook(emb, sf_dir)
-    cent = _ivf_centroids(emb)
-    codes = pq_encode(
-        _sim9_residuals(emb),
-        cb,
-        vec_col="r",
-        carry_cols=("centroid_id",),
-    )
-    aux = cent.select(
-        "centroid_id",
-        F.expr(dot_unrolled("cv", "cv", _EMB_DIM, "spark")).alias("cvn2"),
-        *[
-            F.expr(e).alias(f"cvlut_{j}")
-            for j, e in enumerate(pq_lut_arrays(cb, "spark", "cv"))
-        ],
-    )
-    store = (
-        codes.join(F.broadcast(aux), "centroid_id")
-        .withColumn("n2", F.expr(pq_ivf_norm2_expr(cb, "spark")))
-        .select("vec_id", "centroid_id", "codes", "n2")
-    )
-    probe = _sim9_probe(
-        emb, cent, sizes=_cluster_sizes(codes), candidate_frac=_SIM9_FRAC
-    )
-    qlut = probe.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("centroid_id").alias("qcluster"),
-        F.expr(dot_unrolled("v", "cv", _EMB_DIM, "spark")).alias("qip_c"),
-        *[
-            F.expr(e).alias(f"lut_{j}")
-            for j, e in enumerate(pq_lut_arrays(cb, "spark", "v"))
-        ],
-    )
-    scored = store.join(
-        F.broadcast(qlut),
-        (F.col("centroid_id") == F.col("qcluster"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).withColumn(
-        "adc",
-        F.expr(
-            f"(qip_c + ({pq_adc_ip_expr(cb, 'spark')})) / sqrt(n2)"
-        ),
-    )
-    order = [F.desc("adc"), F.asc("vec_id")]
-    w_local = Window.partitionBy("query_id", "pid").orderBy(*order)
-    w_global = Window.partitionBy("query_id").orderBy(*order)
-    cand = (
-        scored.withColumn("pid", F.spark_partition_id())
-        .withColumn("r_loc", F.row_number().over(w_local))
-        .filter(F.col("r_loc") <= _SIM8_CAND)
-        .withColumn("rn", F.row_number().over(w_global))
-        .filter(F.col("rn") <= _SIM8_CAND)
-        .select("query_id", "vec_id")
-    )
-    q = emb.filter(
-        (F.col("vec_id") >= 8) & (F.col("vec_id") < 16)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("nq"),
-    )
-    paired = cand.join(
-        emb.select("vec_id", "v", F.col("nrm").alias("nv")), "vec_id"
-    ).join(F.broadcast(q), "query_id")
-    return _score_rank_top5(paired)
-
-
-def sim9_oracle_sql(spark: SparkSession, sf_dir: str) -> str:
-    """DuckDB mirror of sim9_ivfpq_ann from the SAME residual
-    codebook (pq_ivf_search_oracle_sql), including the budgeted
-    multi-probe rule."""
-    from ..operators.pq import pq_ivf_search_oracle_sql
-
-    emb = _sim8_emb(spark, sf_dir)
-    cb = _sim9_codebook(emb, sf_dir)
-    return pq_ivf_search_oracle_sql(
-        cb, _IVF_K, _IVF_NPROBE, _SIM8_CAND, multiprobe_frac=_SIM9_FRAC
-    )
-
-
-def sim10_trained_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ under a TRAINED coarse codebook — the full
-    Faiss-canonical IVFPQ composition (Jégou et al. 2011 §V: learned
-    coarse quantizer + PQ over its residuals), closing the
-    deliberate demo gap in sim9, whose coarse codebook is the
-    first-K convention. sim7 contributes the MLlib-KMeans coarse
-    quantizer (train-once, session-cached, the shared (centroid_id,
-    cv, cn) contract); the residual PQ codebook is trained on
-    residuals w.r.t. THOSE centroids (trained-coarse residuals
-    cluster tighter than first-K residuals — the same argument that
-    makes residual PQ beat raw PQ); the search is the identical
-    `_sim9_topk` Arrow tail (budgeted multi-probe, probed-cluster
-    prune, ADC, exact rerank), so the ONLY delta vs sim9 is model
-    quality — measured, not assumed, in tests/test_pq.py
-    (quantization error strictly below sim9's on the oracle corpus).
-
-    Oracle: the same two-dialect generator, with the trained
-    centroids emitted as literal VALUES (cent_values_sql) — candidate
-    sets bit-identical cross-engine given the rank-convention
-    assignment. UNREGISTERED (50-slot cap) — oracle-compared in
-    tests/test_pq.py, benched in bench.py."""
-    emb, cent, cb = _sim10_models(spark, sf_dir)
-    return _sim9_topk(emb, cb, cent)
-
-
-_SIM10_CB_CACHE: dict = {}
-
-
-def _sim10_models(spark: SparkSession, sf_dir: str):
-    """(emb, trained coarse codebook, residual PQ codebook) for sim10
-    — ONE train/cache path shared by the operator and its oracle
-    generator, so the two sides can never train different models."""
-    from ..operators.pq import train_pq_codebook
-    from ..operators.similarity import train_ivf_codebook
-
-    emb = _sim8_emb(spark, sf_dir)
-    ckey = (sf_dir, _IVF_K)
-    cent = _SIM7_CODEBOOK_CACHE.get(ckey)
-    if cent is None:
-        cent = train_ivf_codebook(emb, k=_IVF_K).localCheckpoint(
-            eager=True
-        )
-        _SIM7_CODEBOOK_CACHE[ckey] = cent
-    cb = _SIM10_CB_CACHE.get(ckey)
-    if cb is None:
-        cb = train_pq_codebook(
-            _sim9_residuals(emb, cent).select(
-                "vec_id", F.col("r").alias("v")
-            ),
-            m=_SIM8_M,
-            ks=_SIM8_KS,
-        )
-        _SIM10_CB_CACHE[ckey] = cb
-    return emb, cent, cb
-
-
-def sim10_oracle_sql(spark: SparkSession, sf_dir: str) -> str:
-    """DuckDB mirror of sim10 from the SAME trained models
-    (_sim10_models): coarse centroids as literal VALUES, residual
-    codebook through the two-dialect generator, budgeted
-    multi-probe."""
-    from ..operators.pq import (
-        cent_values_sql,
-        pq_ivf_search_oracle_sql,
-    )
-
-    _, cent, cb = _sim10_models(spark, sf_dir)
-    cents = [
-        (r["centroid_id"], list(r["cv"]))
-        for r in cent.select("centroid_id", "cv").collect()
-    ]
-    return pq_ivf_search_oracle_sql(
-        cb,
-        _IVF_K,
-        _IVF_NPROBE,
-        _SIM8_CAND,
-        multiprobe_frac=_SIM9_FRAC,
-        cent_sql=cent_values_sql(cents),
-    )
-
-
-def sim11_opq_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ with an OPQ-rotated residual quantizer — the standard
-    rung above sim10 (Ge et al., "Optimized Product Quantization",
-    CVPR 2013; Faiss's OPQ pre-transform, applied below the coarse
-    quantizer): sim10's trained coarse codebook and budgeted
-    multi-probe are UNCHANGED, but the residual PQ quantizes
-    ``R @ (v - cv)`` under a learned orthogonal rotation that spreads
-    variance across the m subspaces, cutting quantization error at
-    identical store bytes (rotation is free at serving time — it
-    folds into the per-query LUT construction and the one fused
-    build scan; the store is still m 4-bit codes + centroid_id).
-
-    Training alternates Lloyd fits with orthogonal-Procrustes
-    rotation updates on the SAME bounded residual sample sim10's
-    codebook trains on, keeping the best (R, codebook) by sample
-    error with the identity candidate included — so sim11's
-    quantization error <= sim10's BY CONSTRUCTION, and the measured
-    improvement is gated in tests/test_pq.py. Search is the shared
-    `_sim9_topk` tail with the rotation threaded (codes, centroid
-    vectors and query LUT vectors all in rotated coordinates — inner
-    products and norms are rotation-invariant, and the DuckDB oracle
-    computes in the SAME rotated coordinates via rot_vec_expr chains,
-    so candidate sets stay bit-identical cross-engine). Probe
-    selection and the exact rerank stay in original space.
-
-    UNREGISTERED (50-slot driver cap) — oracle-compared and
-    error/recall-gated in tests/test_pq.py, benched in bench.py."""
-    emb, cent, cb, rot = _sim11_models(spark, sf_dir)
-    return _sim9_topk(emb, cb, cent, rot=rot)
-
-
-_SIM11_CACHE: dict = {}
-
-
-def _sim11_models(spark: SparkSession, sf_dir: str):
-    """(emb, trained coarse, OPQ residual codebook, rotation) — ONE
-    train/cache path shared by the operator, its oracle generator and
-    the gate test, so no two sides can train different models. The
-    training sample is EXACTLY the one sim10's residual codebook fits
-    on (first 4096 residuals in vec_id order w.r.t. the shared
-    trained coarse), so the identity-rotation candidate reproduces
-    sim10's codebook and the error comparison is apples-to-apples."""
-    import numpy as np
-
-    from ..operators.pq import train_opq_rotation
-
-    emb, cent, _cb10 = _sim10_models(spark, sf_dir)
-    key = (sf_dir, _IVF_K)
-    got = _SIM11_CACHE.get(key)
-    if got is None:
-        rows = (
-            _sim9_residuals(emb, cent)
-            .select("vec_id", "r")
-            .orderBy("vec_id")
-            .limit(4096)
-            .collect()
-        )
-        X = np.array([list(r["r"]) for r in rows], dtype=np.float64)
-        got = train_opq_rotation(X, _SIM8_M, _SIM8_KS)
-        _SIM11_CACHE[key] = got
-    rot, cb, _err_opq, _err_id = got
-    return emb, cent, cb, rot
-
-
-def sim11_oracle_sql(spark: SparkSession, sf_dir: str) -> str:
-    """DuckDB mirror of sim11 from the SAME trained models: coarse
-    centroids as literal VALUES, residual codebook AND rotation
-    through the two-dialect generator (rot_vec_expr chains), budgeted
-    multi-probe."""
-    from ..operators.pq import (
-        cent_values_sql,
-        pq_ivf_search_oracle_sql,
-    )
-
-    _, cent, cb, rot = _sim11_models(spark, sf_dir)
-    cents = [
-        (r["centroid_id"], list(r["cv"]))
-        for r in cent.select("centroid_id", "cv").collect()
-    ]
-    return pq_ivf_search_oracle_sql(
-        cb,
-        _IVF_K,
-        _IVF_NPROBE,
-        _SIM8_CAND,
-        multiprobe_frac=_SIM9_FRAC,
-        cent_sql=cent_values_sql(cents),
-        rot=rot,
-    )
-
-
-def _baked_centroids(
-    spark: SparkSession, cents: list
-) -> DataFrame:
-    """A baked coarse codebook as the shared (centroid_id, cv, cn)
-    contract: literal Python floats -> exact doubles via
-    createDataFrame (no literal parsing on the Spark side), cn
-    through the same vec_norm expression the dynamic codebooks use."""
-    from ..operators.similarity import vec_norm
-
-    cdf = spark.createDataFrame(
-        [(int(cid), [float(x) for x in cv]) for cid, cv in cents],
-        "centroid_id bigint, cv array<double>",
-    )
-    return cdf.withColumn("cn", vec_norm("cv"))
-
-
-def sim7_static_trained_ivf(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """sim7 under the BAKED KMeans coarse codebook
-    (suite/sim7_model.py) — the deployment shape (train once, serve
-    as a constant; the sim8_static convention). Same budgeted
-    multi-probe search tail as sim7_trained_ivf_ann (_ivf_sq8_topk,
-    candidate_frac = nprobe/K); only the codebook source differs.
-    This is the llm_ops_battery sim7 branch, so it carries a hard
-    driver CORRECTNESS row against SIM7_STATIC_SQL (generated from
-    the same frozen constant)."""
-    from ..operators.similarity import vec_norm
-    from .sim7_model import SIM7_BATTERY_CENT
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .withColumn("nrm", vec_norm("v"))
-    )
-    return _ivf_sq8_topk(
-        emb,
-        _baked_centroids(spark, SIM7_BATTERY_CENT),
-        candidate_frac=_IVF_NPROBE / _IVF_K,
-    )
-
-
-def sim9_static_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim9 under the BAKED model (suite/sim9_model.py: frozen coarse
-    centroids + residual PQ codebook) — the deployment shape, and the
-    llm_ops_battery sim9 branch with a hard driver CORRECTNESS row
-    against SIM9_STATIC_SQL (both generated from the same frozen
-    constants through the same two-dialect expression generator, so
-    codes and ADC candidate sets match bit for bit)."""
-    from .sim9_model import SIM9_BATTERY_CB, SIM9_COARSE
-
-    return _sim9_topk(
-        _sim8_emb(spark, sf_dir),
-        SIM9_BATTERY_CB,
-        _baked_centroids(spark, SIM9_COARSE),
-    )
-
-
-def sim10_static_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim10 under the BAKED model — sim7's frozen KMeans coarse
-    codebook (suite/sim7_model.py) + the residual PQ codebook fit on
-    ITS residuals (suite/sim10_model.py) — the llm_ops_battery sim10
-    branch with a hard driver CORRECTNESS row against
-    SIM10_STATIC_SQL (same frozen constants, same generator)."""
-    from .sim10_model import SIM10_BATTERY_CB
-    from .sim7_model import SIM7_BATTERY_CENT
-
-    return _sim9_topk(
-        _sim8_emb(spark, sf_dir),
-        SIM10_BATTERY_CB,
-        _baked_centroids(spark, SIM7_BATTERY_CENT),
-    )
-
-
-def sim11_static_opq_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim11 under the BAKED model — sim7's frozen coarse codebook +
-    the frozen OPQ rotation and rotated-residual codebook
-    (suite/sim11_model.py) — the llm_ops_battery sim11 branch with a
-    hard driver CORRECTNESS row against SIM11_STATIC_SQL (same
-    frozen constants through the same generator, rotation chains
-    included)."""
-    from .sim11_model import SIM11_BATTERY_CB, SIM11_BATTERY_ROT
-    from .sim7_model import SIM7_BATTERY_CENT
-
-    return _sim9_topk(
-        _sim8_emb(spark, sf_dir),
-        SIM11_BATTERY_CB,
-        _baked_centroids(spark, SIM7_BATTERY_CENT),
-        rot=SIM11_BATTERY_ROT,
-    )

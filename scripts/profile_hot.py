@@ -90,29 +90,6 @@ def profile_dd2(spark):
     _t("prefix self-join + distinct (from checkpoint)", lambda: _noop(cand))
 
 
-def profile_sim9(spark):
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _ivf_centroids,
-        _sim8_emb,
-        _sim9_codebook,
-        sim9_ivfpq_ann,
-    )
-    from inpe_queimadas_etl_spark.operators.pq import pq_ivf_encode
-
-    print("sim9_ivfpq_ann phases:")
-    _t("full query", lambda: _noop(sim9_ivfpq_ann(spark, SF_DIR)))
-    emb = _sim8_emb(spark, SF_DIR)
-    cb = _sim9_codebook(emb, SF_DIR)
-    cent = _ivf_centroids(emb)
-    cents3 = sorted(
-        (r["centroid_id"], list(r["cv"]), r["cn"])
-        for r in cent.select("centroid_id", "cv", "cn").collect()
-    )
-    _t("emb load+norm materialize (noop)", lambda: _noop(emb))
-    _t("pq_ivf_encode + checkpoint",
-       lambda: pq_ivf_encode(emb, cents3, cb).localCheckpoint(eager=True))
-
-
 def profile_dd7(spark):
     from inpe_queimadas_etl_spark.suite.llmdata import (
         dd4_minhash_lsh_candidates,
@@ -167,10 +144,12 @@ def profile_dd9(spark):
 
 
 def profile_dd10(spark):
+    from inpe_queimadas_etl_spark.operators.rollhash import (
+        rolling_window_shingles,
+    )
     from inpe_queimadas_etl_spark.session import load_table
     from inpe_queimadas_etl_spark.suite.llmdata import (
         dd10_duplicate_spans,
-        rolling_window_shingles,
         _DD10_WIN,
     )
 
@@ -211,7 +190,6 @@ def profile_mm5(spark):
 
 PROFILES = {
     "dd2": profile_dd2,
-    "sim9": profile_sim9,
     "dd7": profile_dd7,
     "dd9": profile_dd9,
     "tx7b": profile_tx7b,

@@ -15,7 +15,7 @@ min of 2 timed full-pipeline runs per size (each run includes the
 parquet export and manifest aggregation — the real end-to-end cost).
 Exponent = log-log least-squares slope. Recorded in SCALING.md.
 
-Three variants are measured (VERDICT r6 #7, r7 #6):
+Two variants are measured (VERDICT r6 #7):
 - "base": the r5 default stack (curation -> repetition -> split ->
   pack -> export), refreshing the 0.79 exponent;
 - "full": every selection gate ON in the one invocation —
@@ -27,14 +27,6 @@ Three variants are measured (VERDICT r6 #7, r7 #6):
   with the corpus, so the composed exponent should stay ~linear or
   below; a super-linear exponent means a stage recomputes shared
   lineage.
-- "full_serve" (VERDICT r7 #6): "full" plus the post-export ANN
-  SERVING stage, so the end-to-end exponent covers curation -> pack
-  -> serve: embed the exported corpus (the emb1 hashed encoder, one
-  Arrow scan), train a PQ codebook on a bounded sample, materialize
-  the sim8 code store as parquet, and run the 8-query probed ADC
-  top-5 search through the production Arrow path
-  (pq_adc_search_scan) — every stage scan-shaped or sample-bounded,
-  so the composed exponent should stay sub-linear.
 
 Usage: python scripts/scaling_pipeline.py  [env: SPARK_GRAFT_CPUS]
 """
@@ -166,100 +158,26 @@ def main() -> None:
                 mixture_temperature=0.7,
             )
 
-        def serve(out_dir: str) -> None:
-            """Post-export ANN serving stage (VERDICT r7 #6): embed
-            the exported corpus, build + materialize the sim8 PQ
-            store, run the probed ADC top-5 through the production
-            Arrow search path."""
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-
-            from inpe_queimadas_etl_spark.operators.pq import (
-                pq_adc_search_scan,
-                pq_encode,
-                train_pq_codebook,
-            )
-            from inpe_queimadas_etl_spark.operators.similarity import (
-                vec_norm,
-            )
-            from inpe_queimadas_etl_spark.suite.llmdata import (
-                _score_rank_top5,
-                hashed_doc_vectors,
-            )
-
-            docs = spark.read.parquet(
-                os.path.join(out_dir, "corpus")
-            ).select("doc_id", "text")
-            # checkpoint: the embedding scan feeds FOUR actions
-            # (codebook sample, store write, query collect, rerank
-            # join) — uncached it would re-run per action and bill
-            # ~4x the embed cost into the timed serve stage
-            emb = (
-                hashed_doc_vectors(docs)  # dim 16 -> m=8, dsub=2
-                .select(F.col("doc_id").alias("vec_id"), "v")
-                .withColumn("nrm", vec_norm("v"))
-                .localCheckpoint(eager=True)
-            )
-            cb = train_pq_codebook(emb, m=8, ks=16)
-            store_path = os.path.join(out_dir, "pq_store")
-            pq_encode(emb, cb).write.mode("overwrite").parquet(
-                store_path
-            )
-            codes = spark.read.parquet(store_path)
-            q = (
-                emb.orderBy("vec_id")
-                .limit(8)
-                .select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("v").alias("qv"),
-                    F.col("nrm").alias("nq"),
-                )
-            )
-            queries = [
-                (r["query_id"], list(r["qv"]))
-                for r in q.select("query_id", "qv").collect()
-            ]
-            scored = pq_adc_search_scan(codes, cb, queries, 100)
-            w_g = Window.partitionBy("query_id").orderBy(
-                F.desc_nulls_first("pq_score"), F.asc("vec_id")
-            )
-            cand = (
-                scored.withColumn("rn", F.row_number().over(w_g))
-                .filter(F.col("rn") <= 100)
-                .select("query_id", "vec_id")
-            )
-            paired = cand.join(
-                emb.select("vec_id", "v", F.col("nrm").alias("nv")),
-                "vec_id",
-            ).join(F.broadcast(q), "query_id")
-            _score_rank_top5(paired).count()
-
-        def run(label: str, tag: str, post=None, **kw) -> dict:
+        def run(label: str, tag: str, **kw) -> dict:
             out = os.path.join(tmp, f"out_{label}_{tag}")
             try:
-                m = run_corpus_pipeline(spark, dirs[label], out, **kw)
-                if post is not None:
-                    post(out)
-                return m
+                return run_corpus_pipeline(spark, dirs[label], out, **kw)
             finally:
                 shutil.rmtree(out, ignore_errors=True)
 
         smallest = min(SIZES, key=SIZES.get)
         run(smallest, "warmup")  # JVM/codegen warm-up
-        run(smallest, "warmup_full", post=serve, **gates(smallest))
+        run(smallest, "warmup_full", **gates(smallest))
 
-        for variant in ("base", "full", "full_serve"):
+        for variant in ("base", "full"):
             times: dict[str, float] = {}
             kept: dict[str, int] = {}
             for label in SIZES:
                 kw = gates(label) if variant != "base" else {}
-                post = serve if variant == "full_serve" else None
                 samples = []
                 for i in range(2):
                     t0 = time.perf_counter()
-                    manifest = run(
-                        label, f"{variant}_r{i}", post=post, **kw
-                    )
+                    manifest = run(label, f"{variant}_r{i}", **kw)
                     samples.append(time.perf_counter() - t0)
                 times[label] = round(min(samples), 3)
                 kept[label] = sum(

@@ -191,6 +191,12 @@ class TestResume:
         bad = tmp_path / "bad.json"
         bad.write_text("{not json")
         assert pipeline.read_resume_state(str(bad)) == set()
+        # valid JSON of the wrong shape is no state either
+        for text in (
+            "[]", "null", '"x"', '{"days": null}', '{"days": [[1]]}'
+        ):
+            bad.write_text(text)
+            assert pipeline.read_resume_state(str(bad)) == set(), text
 
     def test_run_range_skips_done_days(self, spark, tmp_path):
         state = tmp_path / "state.json"

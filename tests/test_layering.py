@@ -5,13 +5,17 @@ tokenizer, the quality classifier) or the incremental dedup index.
 The dashboard query layer (``queries``) answers from the serving
 context's in-memory cube, so it must not import Spark at all.
 Every module of the package must be reachable by imports from its
-entry points, so code nothing runs cannot linger. Spark-free: the
+entry points, so code nothing runs cannot linger, and every package
+name that ``bench.py``, ``scripts/`` and ``perfbench/`` import must
+exist, so a deletion or a move cannot strand a script. Spark-free: the
 checks read each module's source, and the traced benchmark's wrap list
-is checked against the package's attributes."""
+and the scripts' imports are checked against the package's
+attributes."""
 
 from __future__ import annotations
 
 import ast
+import importlib
 from pathlib import Path
 
 import inpe_queimadas_etl_spark as pkg
@@ -147,6 +151,63 @@ def test_every_module_is_reachable_from_an_entry_point():
         for p in PKG_DIR.rglob("*.py")
     }
     assert sorted(modules - seen) == []
+
+
+REPO = PKG_DIR.parent
+SCRIPTS = (
+    REPO / "bench.py",
+    *sorted((REPO / "scripts").glob("*.py")),
+    *sorted((REPO / "perfbench").glob("*.py")),
+)
+
+
+def _package_name_imports(path: Path):
+    """``(line, module, names)`` for every absolute import of the
+    package in ``path``, function-local imports included."""
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.ImportFrom) and node.level == 0:
+            imports = [(node.module, [a.name for a in node.names])]
+        elif isinstance(node, ast.Import):
+            imports = [(a.name, []) for a in node.names]
+        else:
+            continue
+        for module, names in imports:
+            if module.split(".")[0] == PKG:
+                yield node.lineno, module, names
+
+
+def _missing_names(module: str, names: list[str]) -> list[str]:
+    """What of ``from module import names`` would fail: the module
+    itself, or each name that is neither an attribute nor a
+    submodule of it."""
+    try:
+        mod = importlib.import_module(module)
+    except ImportError:
+        return [module]
+    missing = []
+    for name in names:
+        if name == "*" or hasattr(mod, name):
+            continue
+        try:
+            importlib.import_module(f"{module}.{name}")
+        except ModuleNotFoundError:
+            missing.append(f"{module}.{name}")
+    return missing
+
+
+def test_scripts_import_only_existing_package_names():
+    checked = 0
+    broken = []
+    for path in SCRIPTS:
+        for line, module, names in _package_name_imports(path):
+            checked += 1
+            broken.extend(
+                f"{path.relative_to(REPO)}:{line}: {name}"
+                for name in _missing_names(module, names)
+            )
+    # the scan must find the scripts' imports, or it passes vacuously
+    assert checked > 50
+    assert broken == []
 
 
 def test_query_layer_does_not_import_spark():
