@@ -52,14 +52,11 @@ HEADLINE = [
     "dd2_ngram_jaccard_pairs",
     "dd3_minhash_signatures",
     "dd4_minhash_lsh_candidates",
-    "dd6_embedding_neardup",
     "dd7_dedup_clusters",
     "dd8_passage_dedup",
     "dd9_canonical_keeper",
     "dd10_duplicate_spans",
     "dd11_span_scrub",
-    "dd12_semantic_dedup",
-    "sim1_knn_cosine_topk",
     "tx2_token_counts",
     "tx6_ngram_topk",
     "pack1_token_packing",
@@ -68,7 +65,6 @@ HEADLINE = [
     "geo4_uf_choropleth_day",
     "cur5_mixture_resample",
     "cur6_leakfree_split",
-    "cur7_semantic_decontamination",
     "card1_corpus_manifest",
     "tx7_model_quality_score",
     "tx7_broadcast_quality_score",
@@ -76,10 +72,7 @@ HEADLINE = [
     "cur8_dsir_selection",
     "cur9_dsir_resample",
     "tx9_bpe_tokenize",
-    "emb1_hashed_encoder",
     "cur10_substring_decontamination",
-    "sim5_sq8_ann",
-    "sim6_ivf_sq8_ann",
     "mm5_simhash_neardup",
 ]
 
@@ -87,16 +80,10 @@ TRANSFORM_ROWS = 100_000
 
 # the two noisiest entries get a wider sample (VERDICT r4 #8): median
 # of 5 instead of 3, so one straggler run cannot move the recorded
-# number. sim5/sim6 joined for round 9 (VERDICT r8 #5): their
-# r7->r8 moves (+9-17 %) sat at the edge of 3-run spread bands on
-# refactor-only code — one round of unconditional 5-run sampling
-# re-anchors the band so sim6's 0.99->1.16 two-round drift can be
-# attributed (VM band vs real) in SCALING.md.
+# number.
 _EXTRA_RUNS = {
     "dd2_ngram_jaccard_pairs": 5,
     "transform_canonicalize_100k": 5,
-    "sim5_sq8_ann": 5,
-    "sim6_ivf_sq8_ann": 5,
 }
 
 # benched-but-unregistered queries (the suite registry is capped at 50
@@ -111,10 +98,8 @@ UNREGISTERED = (
     "dd9_canonical_keeper",
     "dd10_duplicate_spans",
     "dd11_span_scrub",
-    "dd12_semantic_dedup",
     "cur5_mixture_resample",
     "cur6_leakfree_split",
-    "cur7_semantic_decontamination",
     "card1_corpus_manifest",
     "tx7_model_quality_score",
     "tx7_broadcast_quality_score",
@@ -122,10 +107,7 @@ UNREGISTERED = (
     "cur8_dsir_selection",
     "cur9_dsir_resample",
     "tx9_bpe_tokenize",
-    "emb1_hashed_encoder",
     "cur10_substring_decontamination",
-    "sim5_sq8_ann",
-    "sim6_ivf_sq8_ann",
     "mm5_simhash_neardup",
 )
 
@@ -328,20 +310,15 @@ def main() -> None:
         cur5_mixture_resample,
         dd10_duplicate_spans,
         dd11_span_scrub,
-        dd12_semantic_dedup,
         cur6_leakfree_split,
-        cur7_semantic_decontamination,
         dd8_passage_dedup,
         dd9_canonical_keeper,
-        sim5_sq8_ann,
-        sim6_ivf_sq8_ann,
         tx7_broadcast_quality_score,
         tx7_model_quality_score,
         tx8_lm_perplexity,
         cur8_dsir_selection,
         cur9_dsir_resample,
         tx9_bpe_tokenize,
-        emb1_hashed_encoder,
         cur10_substring_decontamination,
     )
     from inpe_queimadas_etl_spark.suite.multimodal import mm5_simhash_neardup
@@ -359,31 +336,24 @@ def main() -> None:
     queries.setdefault("dd9_canonical_keeper", dd9_canonical_keeper)
     queries.setdefault("dd10_duplicate_spans", dd10_duplicate_spans)
     queries.setdefault("dd11_span_scrub", dd11_span_scrub)
-    queries.setdefault("dd12_semantic_dedup", dd12_semantic_dedup)
     queries.setdefault("cur5_mixture_resample", cur5_mixture_resample)
     queries.setdefault("cur6_leakfree_split", cur6_leakfree_split)
-    queries.setdefault(
-        "cur7_semantic_decontamination", cur7_semantic_decontamination
-    )
     queries.setdefault("card1_corpus_manifest", card1_corpus_manifest)
     queries.setdefault("tx7_model_quality_score", tx7_model_quality_score)
     queries.setdefault("tx8_lm_perplexity", tx8_lm_perplexity)
     queries.setdefault("cur8_dsir_selection", cur8_dsir_selection)
     queries.setdefault("cur9_dsir_resample", cur9_dsir_resample)
     queries.setdefault("tx9_bpe_tokenize", tx9_bpe_tokenize)
-    queries.setdefault("emb1_hashed_encoder", emb1_hashed_encoder)
     queries.setdefault("cur10_substring_decontamination", cur10_substring_decontamination)
     queries.setdefault(
         "tx7_broadcast_quality_score", tx7_broadcast_quality_score
     )
-    queries.setdefault("sim5_sq8_ann", sim5_sq8_ann)
-    queries.setdefault("sim6_ivf_sq8_ann", sim6_ivf_sq8_ann)
     queries.setdefault("mm5_simhash_neardup", mm5_simhash_neardup)
 
     # Warm the JVM / session (codegen, parquet footer reads) so the
     # first timed query measures the plan, not session startup; keeps
     # round-over-round numbers comparable (VERDICT r1 #10).
-    for warm_tbl in ("lineitem", "events", "documents", "embeddings"):
+    for warm_tbl in ("lineitem", "events", "documents"):
         load_table(spark, SF_DIR, warm_tbl).count()
 
     load_before = _loadavg()
@@ -483,9 +453,10 @@ def main() -> None:
         sf = float(sf_label)
     except ValueError:
         sf = sf_label
-    # the 14 queries present since round 1 — the anchor subset judged
-    # against the r1-recorded 22.09 s (new entries grow the headline
-    # total without regressing anything; this keeps rounds comparable)
+    # the queries present since round 1 that still exist (13 of the
+    # 14) — the anchor subset judged against the r1-recorded 22.09 s
+    # (new entries grow the headline total without regressing
+    # anything; this keeps rounds comparable)
     comparable = [
         "q1_pricing_summary", "q3_shipping_priority",
         "q5_local_supplier_volume", "a8_fact_cube",
@@ -493,7 +464,7 @@ def main() -> None:
         "p7_stable_event_hash", "dd1_exact_dedup",
         "dd2_ngram_jaccard_pairs", "dd3_minhash_signatures",
         "dd4_minhash_lsh_candidates", "dd7_dedup_clusters",
-        "sim1_knn_cosine_topk", "tx2_token_counts",
+        "tx2_token_counts",
     ]
     result = {
         "metric": "headline_suite_total",

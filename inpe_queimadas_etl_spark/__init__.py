@@ -8,8 +8,8 @@ into marts, published to a partitioned warehouse and served to a
 dashboard. Alongside it sits a training-corpus materialization
 (``corpus_pipeline`` over the ``corpus_ops`` dedup, curation, split,
 selection and packing operators) and the kernel suite: dedup,
-similarity-search, text-analysis and multimodal operators, each
-checked against a DuckDB oracle.
+text-analysis and multimodal operators, each checked against a
+DuckDB oracle.
 
 Layout
 ------
@@ -31,8 +31,7 @@ Layout
 - ``operators``  reusable distributed operators: geo joins and
                  geometry, BPE, rolling window hashes, mixture
                  resampling, pack materialization, passage dedup,
-                 similarity search (sign-LSH, IVF), multimodal
-                 column plumbing.
+                 multimodal column plumbing.
 - ``corpus_pipeline`` / ``corpus_ops``
                  the training-corpus materialization behind
                  ``corpus-curate`` and the operators it composes.

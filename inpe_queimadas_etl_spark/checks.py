@@ -15,16 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def check_counts_match(raw_n: int, curated_n: int) -> dict:
-    """backfill.py:97-101: raw count == curated count per day."""
-    return {
-        "name": "raw_equals_curated",
-        "ok": raw_n == curated_n,
-        "raw": raw_n,
-        "curated": curated_n,
-    }
-
-
 def check_mart_consistency(
     daily_mun: DataFrame, daily_uf: DataFrame, enriched: DataFrame
 ) -> dict:
@@ -62,22 +52,6 @@ def check_enrichment_coverage(
         "ok": mun_ratio >= min_mun_ratio and bio_ratio >= min_bioma_ratio,
         "mun_ratio": round(mun_ratio, 4),
         "bioma_ratio": round(bio_ratio, 4),
-    }
-
-
-def check_choropleth_complete(
-    dense_choro: DataFrame, expected_ufs: int
-) -> dict:
-    """sql/checks/010_superset_uf_choropleth.sql: exactly N UFs
-    present, no null values after zero-fill."""
-    n = dense_choro.count()
-    nulls = dense_choro.filter(F.col("n_focos").isNull()).count()
-    return {
-        "name": "choropleth_complete",
-        "ok": n == expected_ufs and nulls == 0,
-        "rows": n,
-        "nulls": nulls,
-        "expected": expected_ufs,
     }
 
 

@@ -1099,7 +1099,7 @@ def substring_contamination(
     Scale design: both sides reduce to 60-bit window fingerprints
     map-side (strings never shuffle); the eval side is distinct-
     reduced and BROADCAST into the corpus window stream (an eval
-    suite is tiny by definition — the cur2/cur7 argument), and the
+    suite is tiny by definition — the cur2 argument), and the
     per-doc rollup keys on doc_id so partials collapse in the scan
     partition. One corpus-sized exchange carrying final per-doc
     rows; zero SortMergeJoin (plan-pinned)."""

@@ -1,2 +1,2 @@
-"""Reusable distributed operators (geo joins, dedup, similarity,
-relational helpers, text analysis, multimodal plumbing)."""
+"""Reusable distributed operators (geo joins, dedup, relational
+helpers, text analysis, multimodal plumbing)."""

@@ -127,7 +127,6 @@ TABLE_NAMES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 

@@ -1,10 +1,10 @@
 """Training-data-pipeline suite: dedup, curation, text analysis,
-similarity, sampling, packing, sketches.
+sampling, packing, sketches.
 
 These are the large-scale LLM-data operators the engine adds beyond
 the reference's own surface (BASELINE.json north star). Each entry is
-an idiomatic, shuffle-minimal Spark plan over `documents` /
-`embeddings` paired with a DuckDB oracle.
+an idiomatic, shuffle-minimal Spark plan over `documents` paired
+with a DuckDB oracle.
 
 Scale notes (designed for ~100 TB, tested at sf<=0.1):
 - MinHash signatures are computed map-side with array higher-order
@@ -13,8 +13,6 @@ Scale notes (designed for ~100 TB, tested at sf<=0.1):
 - The n-gram Jaccard join shuffles on shingle hashes, not documents,
   and prunes pairs below the threshold before the expensive union
   size computation.
-- Brute-force cosine top-k broadcasts the (small) query set; the scale
-  path is the LSH/IVF bucketed variant in operators/similarity.py.
 """
 
 from __future__ import annotations
@@ -22,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..corpus_ops import (
     _CUR10_WIN,
@@ -63,7 +60,7 @@ from ..corpus_ops import (
     _TX8_VOCAB,
     _word_hash_spark,
 )
-from ..session import load_table, local_df
+from ..session import load_table
 from . import query
 
 # --- shared deterministic word->int hash -----------------------------------
@@ -631,219 +628,6 @@ def dd5_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_DIM = 64
-
-# dd6 contract: BANDED-LSH near-dup. Candidates are pairs that agree on
-# at least one of _DD6_BANDS sign-LSH band buckets (_DD6_BAND_BITS
-# disjoint hyperplanes each); candidates are then verified with the
-# exact cosine >= _DD6_THRESHOLD. This is declared recall-bounded (a
-# pair differing in every band is not reported) — the oracle states the
-# identical contract, so the check is exact. An unconditional all-pairs
-# scan at this low a threshold is a non-equi self-join (O(n^2) rows
-# scored), which does not survive a 100x scale-up; the banded form
-# joins on uniform equi keys and its per-bucket fan-in is tuned by
-# adding band bits as n grows.
-#
-# Band geometry (round-4 retune, measured in scripts/scaling_dedup.py;
-# round-5: auto-tuned from corpus size — VERDICT r4 #4):
-# a RANDOM pair collides in one k-bit band with probability ~2^-k, so
-# 4x4 bands admitted ~4/16 = 25 % of ALL pairs as candidates — a
-# quadratic candidate set by construction, measured as a t ~ n^1.6
-# cliff (5.1 s -> 197 s for 2k -> 20k vectors). 8x12 bands admit
-# ~8/4096 = 0.2 % of random pairs while keeping the banded-LSH
-# s-curve's high recall where near-dups live (per-plane agreement
-# 1 - theta/pi: recall ~99.9 % at cos 0.99, ~86 % at 0.9, fading below
-# ~0.8 — pairs near the 0.35 verify floor are only sampled).
-
-_DD6_THRESHOLD = 0.35
-_DD6_BANDS = 8
-_DD6_BAND_BITS = 12
-
-
-def _dd6_geometry(n_vecs: int) -> tuple[int, int]:
-    """(bands, band_bits) tuned to corpus size.
-
-    Per-bucket fan-in is n/2^bits, so bits must grow ~log2(n) to hold
-    the candidate volume linear; each +4 bits drops per-band recall at
-    cos 0.99 by the plane-agreement factor (0.955^4 ~ 0.83), so bands
-    grow alongside to keep the banded-OR recall >= 99 %. Quantized to
-    decade-wide steps so the whole driver/oracle scale range
-    (<= 30k vectors: sf0.001 through sf1.0 embeddings) keeps the
-    measured 8x12 geometry — the static DuckDB oracle states that
-    exact contract, and a data-dependent geometry inside one decade
-    would buy nothing but oracle drift. Analytic rates per step
-    (verified empirically in tests/test_dd6_geometry.py):
-
-      <=30k:  8x12 — random-collision ~0.2 %, recall@0.99 ~99.9 %
-      <=300k: 12x16 — ~0.02 %, ~99.96 %
-      <=3M:   16x20 — ~2e-5,  ~99.97 %
-      else:   20x24 — ~2e-6,  ~99.97 %
-    """
-    if n_vecs <= 30_000:
-        return (_DD6_BANDS, _DD6_BAND_BITS)
-    if n_vecs <= 300_000:
-        return (12, 16)
-    if n_vecs <= 3_000_000:
-        return (16, 20)
-    return (20, 24)
-
-
-def _emb_band_structs(n_bands: int, band_bits: int) -> list:
-    """(band_idx, band_bucket) structs over an array<double> column
-    named ``v`` — the JVM-expression REFERENCE form of the sign-LSH
-    banding (kept as the parity anchor for the Arrow fast path;
-    tests/test_similarity_fastpath.py pins the two bit-identical).
-    Production paths go through :func:`_emb_band_rows`."""
-    from ..operators.similarity import lsh_bucket
-
-    return [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            lsh_bucket(
-                "v", _EMB_DIM, band_bits, plane_offset=b * band_bits
-            ).alias("band_bucket"),
-        )
-        for b in range(n_bands)
-    ]
-
-
-def _emb_band_rows(
-    vecs: DataFrame,
-    id_col: str,
-    n_bands: int,
-    band_bits: int,
-) -> DataFrame:
-    """``(id_col, band_idx, band_bucket)`` rows over an array<double>
-    column named ``v`` — dd6's sign-LSH banding at ``_EMB_DIM``. Uses
-    the Arrow-batched
-    :func:`..operators.similarity.lsh_band_buckets` fast path —
-    bit-identical to the `_emb_band_structs` JVM expressions the
-    DuckDB oracle states, measured ~7x faster (the HOF folds are
-    interpreted per element; see lsh_band_buckets)."""
-    from ..operators.similarity import lsh_band_buckets
-
-    return vecs.select(
-        id_col,
-        F.posexplode(
-            lsh_band_buckets("v", _EMB_DIM, n_bands, band_bits)
-        ).alias("band_idx", "band_bucket"),
-    )
-
-
-def _dd6_candidate_pairs(emb: DataFrame, n_bands: int, band_bits: int) -> DataFrame:
-    """Banded sign-LSH candidate (vec_a, vec_b) pairs: agree on at
-    least one band bucket. The join keys are uniform equi hashes —
-    skew-free at any scale.
-
-    The band table is materialized before the self-join (r12 — the
-    mm5/dd4 signature-table convention, guide §2.4): each side of the
-    join otherwise re-runs the Arrow banding pass over the full corpus
-    inside its own scan, i.e. two hyperplane-projection passes for one
-    candidate build. Three narrow columns per row; at cluster scale
-    persist it to parquet instead.
-
-    Lifetime (ADVICE r12): the checkpointed blocks stay pinned until
-    the returned frame's RDD is garbage-collected — an eager unpersist
-    here would run BEFORE the lazy consumer executes. Callers that
-    run many queries in one session drain between queries (bench.py /
-    qbench.py trigger one JVM System.gc() per query, which lets
-    ContextCleaner drop the blocks once the Python refs are gone)."""
-    bands = _emb_band_rows(emb, "vec_id", n_bands, band_bits).localCheckpoint(
-        eager=True
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_bucket") == F.col("b.band_bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-
-
-def _dd6_oracle() -> str:
-    from ..operators.similarity import lsh_bucket_sql
-
-    band_rows = "\n        UNION ALL\n".join(
-        f"        SELECT vec_id, v, {b} AS band_idx,"
-        f" {lsh_bucket_sql('v', _EMB_DIM, _DD6_BAND_BITS, plane_offset=b * _DD6_BAND_BITS)} AS band_bucket"
-        " FROM e"
-        for b in range(_DD6_BANDS)
-    )
-    return f"""
-    WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    bands AS (
-{band_rows}
-    ),
-    cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b
-          ON a.band_idx = b.band_idx AND a.band_bucket = b.band_bucket
-         AND a.vec_id < b.vec_id
-    )
-    SELECT c.vec_a, c.vec_b,
-           round(list_cosine_similarity(ea.v, eb.v), 4) AS sim
-    FROM cand c
-    JOIN e ea ON ea.vec_id = c.vec_a
-    JOIN e eb ON eb.vec_id = c.vec_b
-    WHERE list_cosine_similarity(ea.v, eb.v) >= {_DD6_THRESHOLD}
-    """
-
-
-@query("dd6_embedding_neardup", oracle=_dd6_oracle())
-def dd6_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via banded sign-LSH:
-    bands x bits disjoint hyperplanes, candidates = pairs sharing any
-    band bucket, exact-cosine verification at >= 0.35. The candidate
-    join's only keys are (band_idx, band_bucket) — uniform equi keys,
-    no non-equi self-join anywhere in the plan. The geometry is
-    auto-tuned from the corpus's vector count (_dd6_geometry: bits ~
-    log2(n) to hold per-bucket fan-in, bands to hold recall >= 99 % at
-    cos 0.99), quantized so every corpus up to 30k vectors keeps the
-    measured 8x12 geometry the static oracle states — the tuning
-    changes behavior only beyond the oracle-checked decade."""
-    from ..operators.similarity import dot_product, vec_norm
-
-    # NOT spread (r13 A/B: 1.47 s vs 0.98 s — the banding checkpoint
-    # and verify joins dominate, not the scan-rooted hyperplane pass)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    n_bands, band_bits = _dd6_geometry(emb.count())
-    cand = _dd6_candidate_pairs(emb, n_bands, band_bits)
-    # norms are computed ONCE per vector, not per candidate pair:
-    # bit-identical to cosine()'s per-pair folds (the norm is the
-    # same double) at a third of the per-pair verify cost — and the
-    # pair verify stays JVM-side, co-located with the join (an Arrow
-    # cosine UDF here measured SLOWER: two 64-dim vectors per pair
-    # across the Python boundary outweigh the interpreted fold).
-    emb_n = emb.withColumn("nrm", vec_norm("v"))
-    ea = emb_n.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    eb = emb_n.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    sim = F.try_divide(dot_product("va", "vb"), F.col("na") * F.col("nb"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .withColumn("sim_raw", sim)
-        .filter(F.col("sim_raw") >= _DD6_THRESHOLD)
-        .select("vec_a", "vec_b", F.round("sim_raw", 4).alias("sim"))
-    )
-
-
 _DD7_ORACLE = (
     _MINHASH_SQL_BODY.replace("WITH sh AS", "WITH RECURSIVE sh AS")
     + _LSH_CAND_SQL
@@ -1275,379 +1059,6 @@ def tx4_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.withColumn("wh", _word_hash_spark(F.col("word")))
         .groupBy("doc_id")
         .agg(F.expr("bit_xor(wh * pos)").cast("long").alias("fingerprint"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Similarity search over embeddings
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "sim1_knn_cosine_topk",
-    oracle="""
-    WITH q AS (
-        SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        FROM embeddings WHERE vec_id < 8
-    ),
-    scored AS (
-        SELECT q.query_id, e.vec_id AS neighbor_id,
-               list_cosine_similarity(q.qv, CAST(e.embedding AS DOUBLE[])) AS sim
-        FROM q CROSS JOIN embeddings e
-        WHERE e.vec_id <> q.query_id
-    )
-    SELECT query_id, neighbor_id,
-           CAST(rank AS BIGINT) AS rank, round(sim, 4) AS sim
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank
-        FROM scored
-    ) WHERE rank <= 5
-    """,
-)
-def sim1_knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k ANN baseline: broadcast the query set,
-    JVM-side zip_with/aggregate dot products (no Python in the loop).
-    Norms are computed ONCE per corpus row / per query (not per pair),
-    and top-k runs in two phases — per-(query, input-partition) first,
-    then a global window over the surviving ≤ k·partitions rows — so
-    the heavy sort parallelizes over query×partition keys instead of
-    bottlenecking on one reducer per query (8 skewed keys at 100 TB
-    would serialize the whole corpus through 8 tasks)."""
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn("v", F.col("embedding").cast("array<double>"))
-        .withColumn("nv", norm("v"))
-    )
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("nq"),
-    )
-    return _cosine_top5(emb.select("vec_id", "v", "nv"), queries)
-
-
-def _cosine_top5(corpus: DataFrame, queries: DataFrame) -> DataFrame:
-    """Shared cosine two-phase top-5 over ``corpus`` (vec_id, v, nv)
-    against broadcast ``queries`` (query_id, qv, nq) — the scoring
-    tail of sim1, reused verbatim by sim5's quantized path so a
-    tie-break or k change can never drift between the exact and
-    compressed variants."""
-    paired = corpus.crossJoin(F.broadcast(queries)).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    return _score_rank_top5(paired)
-
-
-def _score_rank_top5(paired: DataFrame, k: int = 5) -> DataFrame:
-    """Score + rank ``(vec_id, v, nv, query_id, qv, nq)`` candidate
-    pairs: cosine via one zip_with fold, then the two-phase top-k
-    (per-partition prune, then global rank). Factored out of
-    _cosine_top5 so IVF-style paths (sim6), which pair by a cluster
-    equi-join instead of a crossJoin, share the EXACT same scoring
-    expression, tie-break and k — the drift-proofing VERDICT r5 #3
-    asks for. ``k`` defaults to the suite's top-5 contract."""
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # try_divide: a zero-norm embedding scores NULL instead of
-    # raising ANSI DIVIDE_BY_ZERO (same IEEE division otherwise)
-    scored = paired.withColumn(
-        "sim", F.try_divide(dot, F.col("nq") * F.col("nv"))
-    )
-    order = [F.desc("sim"), F.asc("vec_id")]
-    w_local = Window.partitionBy("query_id", "pid").orderBy(*order)
-    w_global = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("pid", F.spark_partition_id())
-        .withColumn("r_loc", F.row_number().over(w_local))
-        .filter(F.col("r_loc") <= k)
-        .withColumn("rank", F.row_number().over(w_global))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.round("sim", 4).alias("sim"),
-        )
-    )
-
-
-@query(
-    "sim2_embedding_stats",
-    oracle="""
-    SELECT label,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(max(len(embedding)) AS BIGINT) AS dim,
-           round(avg(sqrt(list_sum(list_transform(
-               CAST(embedding AS DOUBLE[]), x -> x * x)))), 4) AS avg_norm
-    FROM embeddings
-    GROUP BY label
-    """,
-)
-def sim2_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding stats (count, dimensionality, mean L2 norm)
-    — the profiling pass before index building; fully JVM-side."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    return (
-        emb.withColumn("nrm", norm)
-        .groupBy("label")
-        .agg(
-            F.count("*").alias("n"),
-            F.max(F.size("embedding")).cast("long").alias("dim"),
-            F.round(F.avg("nrm"), 4).alias("avg_norm"),
-        )
-    )
-
-
-_LSH_PLANES = 8  # bits per band
-_SIM3_BANDS = 16  # OR-amplification factor (r5: was a single band)
-
-
-def _sim3_oracle() -> str:
-    from ..operators.similarity import lsh_bucket_sql
-
-    band_rows = "\n        UNION ALL\n".join(
-        f"        SELECT vec_id, v, {b} AS band_idx,"
-        f" {lsh_bucket_sql('v', _EMB_DIM, _LSH_PLANES, plane_offset=b * _LSH_PLANES)} AS bucket"
-        " FROM e"
-        for b in range(_SIM3_BANDS)
-    )
-    return f"""
-    WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    bands AS (
-{band_rows}
-    ),
-    qb AS (SELECT vec_id AS query_id, band_idx, bucket FROM bands
-           WHERE vec_id < 8),
-    cand AS (
-        SELECT DISTINCT qb.query_id, b.vec_id AS neighbor_id
-        FROM bands b JOIN qb
-          ON b.band_idx = qb.band_idx AND b.bucket = qb.bucket
-         AND b.vec_id <> qb.query_id
-    ),
-    scored AS (
-        SELECT c.query_id, c.neighbor_id,
-               list_cosine_similarity(eq.v, en.v) AS sim
-        FROM cand c
-        JOIN e eq ON eq.vec_id = c.query_id
-        JOIN e en ON en.vec_id = c.neighbor_id
-    )
-    SELECT query_id, neighbor_id,
-           CAST(rank AS BIGINT) AS rank, round(sim, 4) AS sim
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank
-        FROM scored
-    ) WHERE rank <= 5
-    """
-
-
-@query("sim3_lsh_bucketed_ann", oracle=_sim3_oracle())
-def sim3_lsh_bucketed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN scale path: multi-band sign-LSH bucket join instead of a
-    cross join.
-
-    Every vector gets 16 map-side 8-bit band buckets from
-    deterministic integer hyperplanes (operators/similarity.py);
-    candidates are vectors sharing ANY band bucket with a query
-    (OR-amplification: P(candidate) = 1-(1-p^8)^16 for per-plane
-    agreement p), then exact cosine + per-query top-5 reranks. Each
-    band's bucket is a uniform 256-value shuffle key, so every task
-    scores ~n/256 of the corpus per band — the plan shape that
-    survives a 100x scale-up, unlike sim1's broadcast cross join.
-
-    r5: single-band recall measured ~0 on the testdata's natural
-    neighbor regime (true top-5 at cos 0.3-0.5, where one 8-plane
-    AND-conjunction almost never agrees); 16-band amplification lifts
-    recall to ~100 % at cos >= 0.95 and a measured floor on the hard
-    natural corpus while still scanning <~10 % of candidates
-    (tests/test_ann_recall.py documents both regimes)."""
-    from ..operators.similarity import (
-        dot_product,
-        lsh_band_buckets,
-        vec_norm,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    # one Arrow pass for all bands (bit-identical to the per-band
-    # lsh_bucket JVM expressions the oracle states)
-    bands = emb.select(
-        "vec_id",
-        F.posexplode(
-            lsh_band_buckets("v", _EMB_DIM, _SIM3_BANDS, _LSH_PLANES)
-        ).alias("band_idx", "bucket"),
-    )
-    qb = bands.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("band_idx").alias("q_band_idx"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    cand = (
-        bands.join(
-            F.broadcast(qb),
-            (F.col("band_idx") == F.col("q_band_idx"))
-            & (F.col("bucket") == F.col("q_bucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    emb_n = emb.withColumn("nrm", vec_norm("v"))
-    eq = emb_n.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    en = emb_n.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("nv"),
-        F.col("nrm").alias("nn"),
-    )
-    scored = (
-        cand.join(F.broadcast(eq.filter(F.col("query_id") < 8)), "query_id")
-        .join(en, "neighbor_id")
-        .withColumn(
-            "sim_raw",
-            F.try_divide(
-                dot_product("qv", "nv"), F.col("qn") * F.col("nn")
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_raw"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("sim_raw", 4).alias("sim"),
-        )
-    )
-
-
-_IVF_K = 4  # coarse centroids (vec_id < _IVF_K seed the codebook)
-_IVF_NPROBE = 2  # clusters probed per query (r5: was 1)
-
-
-def _sim4_oracle() -> str:
-    return f"""
-    WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cent AS (
-        SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < {_IVF_K}
-    ),
-    ranked AS (
-        SELECT e.vec_id, e.v, c.centroid_id,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv) DESC,
-                            c.centroid_id ASC) AS rn
-        FROM e CROSS JOIN cent c
-    ),
-    assigned AS (
-        SELECT vec_id, v, centroid_id FROM ranked WHERE rn = 1
-    ),
-    q AS (
-        SELECT vec_id AS query_id, v AS qv, centroid_id AS qcluster
-        FROM ranked
-        WHERE rn <= {_IVF_NPROBE} AND vec_id >= 8 AND vec_id < 16
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-           round(sim, 4) AS sim
-    FROM (
-        SELECT q.query_id, a.vec_id AS neighbor_id,
-               list_cosine_similarity(q.qv, a.v) AS sim,
-               row_number() OVER (
-                   PARTITION BY q.query_id
-                   ORDER BY list_cosine_similarity(q.qv, a.v) DESC,
-                            a.vec_id ASC) AS rank
-        FROM q JOIN assigned a
-          ON a.centroid_id = q.qcluster AND a.vec_id <> q.query_id
-    ) WHERE rank <= 5
-    """
-
-
-@query("sim4_ivf_ann", oracle=_sim4_oracle())
-def sim4_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: a tiny coarse codebook (first K vectors) is
-    broadcast, every vector is assigned to its nearest centroid
-    map-side (argmax over K cosines — no shuffle), and queries probe
-    their nprobe=2 nearest clusters (r5: nprobe=1 measured 0.25
-    recall@5 on the testdata's hard cos-0.3-0.5 neighbor regime;
-    probing the second cluster lifts it to 0.625 for ~2x the
-    candidate volume — tests/test_ann_recall.py). At 100 TB the
-    cluster id plays the same role as sim3's LSH bucket: a uniform
-    shuffle key that shrinks each candidate set to ~nprobe*n/K while
-    the codebook stays a broadcast."""
-    from ..operators.similarity import dot_product, vec_norm
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).withColumn("nrm", vec_norm("v"))
-    cent = emb.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    aw = Window.partitionBy("vec_id").orderBy(
-        F.desc("csim"), F.asc("centroid_id")
-    )
-    ranked = (
-        emb.join(F.broadcast(cent))
-        .withColumn(
-            "csim",
-            F.try_divide(dot_product("v", "cv"), F.col("nrm") * F.col("cn")),
-        )
-        .withColumn("rn", F.row_number().over(aw))
-    )
-    assigned = ranked.filter(F.col("rn") == 1).select(
-        "vec_id", "v", "nrm", "centroid_id"
-    )
-    q = ranked.filter(
-        (F.col("rn") <= _IVF_NPROBE)
-        & (F.col("vec_id") >= 8)
-        & (F.col("vec_id") < 16)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("centroid_id").alias("qcluster"),
-    )
-    sw = Window.partitionBy("query_id").orderBy(F.desc("sim_raw"), F.asc("vec_id"))
-    return (
-        assigned.join(
-            F.broadcast(q),
-            (F.col("centroid_id") == F.col("qcluster"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn(
-            "sim_raw",
-            F.try_divide(dot_product("qv", "v"), F.col("qn") * F.col("nrm")),
-        )
-        .withColumn("rank", F.row_number().over(sw))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.round("sim_raw", 4).alias("sim"),
-        )
     )
 
 
@@ -2239,13 +1650,19 @@ def card1_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TX7_BUCKETS = 64
 _TX7_BIG_BUCKETS = 1 << 18  # realistic vocab-hash size (broadcast path)
 _TX7_BIAS = -3.0  # dyadic, exact
+_SM64_MASK = (1 << 64) - 1
+
+
+def _splitmix64(x: int) -> int:
+    x = (x + 0x9E3779B97F4A7C15) & _SM64_MASK
+    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _SM64_MASK
+    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _SM64_MASK
+    return x ^ (x >> 31)
 
 
 def _tx7_weights(buckets: int = _TX7_BUCKETS) -> list[float]:
     """Deterministic per-bucket weights in [-1000, 1000]/1024 —
     dyadic rationals, so any summation order yields the same double."""
-    from ..operators.similarity import _splitmix64
-
     return [
         ((_splitmix64(7_777_777 + b) % 2001) - 1000) / 1024.0
         for b in range(buckets)
@@ -2380,434 +1797,6 @@ def tx7_broadcast_quality_score(
     )
 
 
-# --- sim5: int8 scalar-quantized ANN -------------------------------------
-# The memory-bounded similarity path: 100 TB of float64 embeddings is
-# 12.5 TB as int8 codes (8x), which is the difference between an index
-# that fits executor memory and one that spills. Per-vector min/max
-# scalar quantization (code = floor((x - vmin)/scale + 0.5)); search
-# dequantizes on the fly and reranks exactly like sim1. floor(x+0.5)
-# rather than round() keeps Spark and DuckDB bit-identical (their
-# round() tie rules differ), so the whole quantize -> dequantize ->
-# score pipeline is oracle-exact.
-#
-# UNREGISTERED (50-entry driver snapshot cap) — oracle-compared and
-# recall-gated in tests/test_suite_oracle.py.
-
-SIM5_SQL = """
-WITH q AS (
-    SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-    FROM embeddings WHERE vec_id < 8
-),
-enc AS (
-    SELECT vec_id, v, vmin,
-           CASE WHEN vmax > vmin THEN (vmax - vmin) / 255.0 ELSE 1.0 END
-               AS vscale
-    FROM (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-               list_min(CAST(embedding AS DOUBLE[])) AS vmin,
-               list_max(CAST(embedding AS DOUBLE[])) AS vmax
-        FROM embeddings
-    )
-),
-deq AS (
-    SELECT vec_id,
-           list_transform(v, x ->
-               vmin + floor((x - vmin) / vscale + 0.5) * vscale) AS dv
-    FROM enc
-),
-scored AS (
-    SELECT q.query_id, d.vec_id AS neighbor_id,
-           list_cosine_similarity(q.qv, d.dv) AS sim
-    FROM q CROSS JOIN deq d
-    WHERE d.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id,
-       CAST(rank AS BIGINT) AS rank, round(sim, 4) AS sim
-FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank
-    FROM scored
-) WHERE rank <= 5
-"""
-
-
-def sim5_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 cosine neighbors over int8 scalar-quantized embeddings:
-    queries stay full-precision, the corpus side is
-    quantize-dequantized (what a code-store index serves), scoring
-    mirrors sim1's two-phase top-k.
-
-    Scale design: encoding is a map-side array pass (min/max/
-    transform HOFs, no shuffle); the 8x-smaller code arrays are what
-    a 100-TB deployment materializes and scans — recall loss vs the
-    exact float path is measured and gated in
-    tests/test_suite_oracle.py rather than assumed."""
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "v", F.col("embedding").cast("array<double>")
-    )
-    vmin = F.array_min("v")
-    vmax = F.array_max("v")
-    vscale = F.when(vmax > vmin, (vmax - vmin) / 255.0).otherwise(F.lit(1.0))
-    enc = emb.select(
-        "vec_id",
-        "v",
-        vmin.alias("vmin"),
-        vscale.alias("vscale"),
-    )
-    dv = F.transform(
-        "v",
-        lambda x: F.col("vmin")
-        + F.floor((x - F.col("vmin")) / F.col("vscale") + 0.5)
-        * F.col("vscale"),
-    )
-    deq = enc.select("vec_id", dv.alias("v")).withColumn(
-        "nv", norm(F.col("v"))
-    )
-    queries = (
-        emb.filter(F.col("vec_id") < 8)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-        )
-        .withColumn("nq", norm(F.col("qv")))
-    )
-    return _cosine_top5(deq, queries)
-
-
-# --- sim6: IVF over SQ8 codes ----------------------------------------------
-# The composite 100-TB serving shape (VERDICT r5 #3): sim4's coarse
-# IVF probing to shrink the candidate set to ~nprobe*n/K, OVER sim5's
-# int8 code store so the scanned bytes are 8x smaller — probe nprobe
-# clusters, dequantize ONLY the probed candidates (the dequantize
-# expression lives in the post-join projection, never over the full
-# corpus), rerank with the same shared _score_rank_top5 tail sim1 and
-# sim5 use. The code store carries (codes, vmin, vscale, centroid_id,
-# nv) per vector — quantization, assignment, and the dequantized norm
-# are all computed map-side at build time; the float vector is
-# dropped, which is the 8x memory point.
-#
-# UNREGISTERED (50-entry driver snapshot cap) — oracle-compared and
-# recall-gated in tests/test_suite_oracle.py; plan pinned in
-# tests/test_plans.py.
-
-SIM6_SQL = f"""
-WITH e AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-cent AS (
-    SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < {_IVF_K}
-),
-ranked AS (
-    SELECT e.vec_id, e.v, c.centroid_id,
-           row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_cosine_similarity(e.v, c.cv) DESC,
-                        c.centroid_id ASC) AS rn
-    FROM e CROSS JOIN cent c
-),
-enc AS (
-    SELECT vec_id, centroid_id, v, vmin,
-           CASE WHEN vmax > vmin THEN (vmax - vmin) / 255.0 ELSE 1.0 END
-               AS vscale
-    FROM (
-        SELECT vec_id, centroid_id, v,
-               list_min(v) AS vmin, list_max(v) AS vmax
-        FROM ranked WHERE rn = 1
-    )
-),
-deq AS (
-    SELECT vec_id, centroid_id,
-           list_transform(v, x ->
-               vmin + floor((x - vmin) / vscale + 0.5) * vscale) AS dv
-    FROM enc
-),
-q AS (
-    SELECT vec_id AS query_id, v AS qv, centroid_id AS qcluster
-    FROM ranked
-    WHERE rn <= {_IVF_NPROBE} AND vec_id >= 8 AND vec_id < 16
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-       round(sim, 4) AS sim
-FROM (
-    SELECT q.query_id, a.vec_id AS neighbor_id,
-           list_cosine_similarity(q.qv, a.dv) AS sim,
-           row_number() OVER (
-               PARTITION BY q.query_id
-               ORDER BY list_cosine_similarity(q.qv, a.dv) DESC,
-                        a.vec_id ASC) AS rank
-    FROM q JOIN deq a
-      ON a.centroid_id = q.qcluster AND a.vec_id <> q.query_id
-) WHERE rank <= 5
-"""
-
-
-def _ivf_centroids(emb: DataFrame, k: int = _IVF_K) -> DataFrame:
-    """``(centroid_id, cv, cn)`` coarse codebook — the first ``k``
-    vectors, shared by sim6's build and probe sides so the scoring
-    columns and K can never drift between them. ``k`` defaults to the
-    oracle-stated demo codebook; the scaling sweep drives larger K
-    (candidate fraction = nprobe/K is THE serving knob — see
-    scripts/scaling_ann_media.py)."""
-    return emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-
-
-def _ivf_assign_ref(emb: DataFrame, k: int = _IVF_K) -> DataFrame:
-    """JVM-expression REFERENCE form of the nearest-centroid
-    assignment (kept as the parity anchor for the Arrow fast path —
-    tests/test_similarity_fastpath.py pins the two bit-identical; the
-    lsh_band_buckets convention): the K-row centroid table folds into
-    ONE array-of-structs row, attaches to the scan via a broadcast
-    crossJoin, and the argmax is an array_max over per-centroid
-    (csim, -centroid_id) structs — max cosine, ties to the LOWEST
-    centroid id, the exact (desc csim, asc centroid_id) order the
-    oracles state. No Window: the r6 first cut of sim6 ranked via
-    row_number over vec_id, which shuffles the K-times-expanded
-    corpus at build time — at 100 TB that is ~K x the corpus through
-    one exchange for an argmax each row can compute locally."""
-    cents = (
-        _ivf_centroids(emb, k)
-        .select(F.struct("centroid_id", "cv", "cn").alias("c"))
-        .agg(F.sort_array(F.collect_list("c")).alias("cents"))
-    )
-    best = F.expr(
-        "array_max(transform(cents, c -> struct("
-        "try_divide(aggregate(zip_with(v, c.cv, (a, b) -> a * b), 0D, "
-        "(acc, x) -> acc + x), nrm * c.cn) AS csim, "
-        "-c.centroid_id AS neg_id)))"
-    )
-    return (
-        emb.crossJoin(F.broadcast(cents))
-        .withColumn("best", best)
-        .select(
-            "vec_id",
-            "v",
-            "nrm",
-            (-F.col("best.neg_id")).cast("long").alias("centroid_id"),
-            F.col("best.csim").alias("csim"),
-        )
-    )
-
-
-def _ivf_assign(
-    emb: DataFrame, k: int = _IVF_K, centroids: DataFrame | None = None
-) -> DataFrame:
-    """Window-free nearest-centroid assignment over ``(vec_id, v,
-    nrm)``: ``(vec_id, v, nrm, centroid_id, csim)``.
-
-    Production path: the K-row codebook is collected to the driver
-    (K x dim doubles — the same artifact the reference form
-    broadcasts) and the per-row argmax runs as ONE Arrow-batched
-    numpy pass (:func:`..operators.similarity.nearest_centroid`),
-    bit-identical to the JVM reference form `_ivf_assign_ref` by IEEE
-    replay (pinned). Why: the interpreted HOF fold is n*K*dim per
-    scan — fine at the demo K=4, but SemDeDup runs K ~ n/10k and IVF
-    serving wants K in the thousands, where the fold is THE build
-    bottleneck and the numpy pass runs at memory bandwidth (the
-    lsh_band_buckets argument; measured in
-    scripts/scaling_ann_media.py). Zero corpus shuffle either way.
-    Shared by sim6's code store and dd12's semantic dedup so the
-    assignment convention can never drift between them. Plan-pinned
-    Window-free in tests/test_plans.py."""
-    from ..operators.similarity import nearest_centroid
-
-    if centroids is None:
-        centroids = _ivf_centroids(emb, k)
-    cents = sorted(
-        (r["centroid_id"], list(r["cv"]), r["cn"])
-        for r in centroids.collect()
-    )
-    dim = len(cents[0][1]) if cents else _EMB_DIM
-    return emb.select(
-        "vec_id",
-        "v",
-        "nrm",
-        nearest_centroid("v", "nrm", cents, dim).alias("best"),
-    ).select(
-        "vec_id",
-        "v",
-        "nrm",
-        F.col("best.centroid_id").alias("centroid_id"),
-        F.col("best.csim").alias("csim"),
-    )
-
-
-def sim6_code_store(
-    emb: DataFrame, k: int = _IVF_K, centroids: DataFrame | None = None
-) -> DataFrame:
-    """Build the IVF+SQ8 code store from ``(vec_id, v, nrm)``:
-    ``(vec_id, centroid_id, codes array<int>, vmin, vscale, nv)``.
-
-    Assignment is the shared window-free map-side argmax
-    (:func:`_ivf_assign`). Quantization and the DEQUANTIZED norm
-    (stored so search never recomputes it) are array passes in the
-    same projection. The float vector is dropped — this table is the
-    ~12.5 TB artifact a deployment materializes, bucketed by
-    centroid_id so the probe join needs no corpus shuffle.
-    Plan-pinned Window-free in tests/test_plans.py."""
-    assigned = _ivf_assign(emb, k, centroids).select(
-        "vec_id", "centroid_id", "v"
-    )
-    vmin = F.array_min("v")
-    vmax = F.array_max("v")
-    vscale = F.when(vmax > vmin, (vmax - vmin) / 255.0).otherwise(F.lit(1.0))
-    enc = assigned.select(
-        "vec_id",
-        "centroid_id",
-        "v",
-        vmin.alias("vmin"),
-        vscale.alias("vscale"),
-    )
-    codes = F.transform(
-        "v",
-        lambda x: F.floor((x - F.col("vmin")) / F.col("vscale") + 0.5).cast(
-            "int"
-        ),
-    )
-    store = enc.select(
-        "vec_id", "centroid_id", "vmin", "vscale", codes.alias("codes")
-    )
-    deq = _sim6_dequantize()
-    nv = F.sqrt(
-        F.aggregate(deq, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return store.withColumn("nv", nv)
-
-
-def _sim6_dequantize():
-    """codes -> dequantized double array (vmin + code * vscale); the
-    same reconstruction sim5 states, applied to stored int codes."""
-    return F.transform(
-        "codes", lambda c: F.col("vmin") + c * F.col("vscale")
-    )
-
-
-def sim6_ivf_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 cosine ANN probing IVF clusters over an int8 code store:
-    queries (vec_id 8..16, full precision, the sim4 convention) probe
-    their nprobe=2 nearest clusters; only the probed clusters'
-    candidates are dequantized and scored.
-
-    Scale design: the candidate set shrinks to ~nprobe*n/K BEFORE any
-    float reconstruction — the dequantize transform sits in the
-    projection AFTER the cluster equi-join (plan-pinned), so a 100-TB
-    deployment scans int8 codes, reconstructs only ~2/K of the
-    corpus, and reranks with the identical _score_rank_top5 tail as
-    sim1/sim5 (shared code, no drift). The probe join's stream side
-    is the code store partitioned by centroid_id (uniform small-K
-    key; at cluster scale, bucket the store by centroid_id and the
-    join is shuffle-free) with the query table broadcast."""
-    from ..operators.similarity import vec_norm
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nrm", vec_norm("v"))
-    )
-    return _ivf_sq8_topk(emb, _ivf_centroids(emb))
-
-
-def _ivf_sq8_topk(
-    emb: DataFrame,
-    cent: DataFrame,
-    k: int = _IVF_K,
-    nprobe: int = _IVF_NPROBE,
-) -> DataFrame:
-    """sim6's IVF+SQ8 search tail: build the code store under
-    ``cent``, probe each query's ``nprobe`` nearest centroids (the
-    oracle-stated contract), dequantize only probed candidates,
-    rerank with the shared _score_rank_top5."""
-    from ..operators.similarity import dot_product
-
-    # ONE collect per side serves every consumer (r12, guide
-    # §2.4/§3.1): previously the probe ranking and the q broadcast
-    # build each re-executed their source scan (a parquet scan of the
-    # embeddings table; the q build additionally re-ran the centroid
-    # join + ranking) inside the single-threaded BroadcastExchange
-    # thread. The K-row codebook and the 8-row query table come back
-    # once and are handed back as JVM LocalRelations — collected
-    # doubles round-trip bit-exactly, so csim, the probe order, and
-    # every downstream rank are unchanged (pinned by the sim6 oracle
-    # parity test).
-    spark = emb.sparkSession
-    cents3 = sorted(
-        (r["centroid_id"], list(r["cv"]), r["cn"]) for r in cent.collect()
-    )
-    # fields declared NULLABLE (ADVICE r12): a null collected value
-    # (e.g. a malformed embedding row's nrm) must reach the downstream
-    # try_divide/argmax logic that already handles nulls, not raise at
-    # Arrow createDataFrame time where the previous lazy distributed
-    # plan tolerated it. Same at every local_df site in this module.
-    cent_local = local_df(
-        spark,
-        cents3,
-        T.StructType(
-            [
-                T.StructField("centroid_id", T.LongType(), True),
-                T.StructField("cv", T.ArrayType(T.DoubleType()), True),
-                T.StructField("cn", T.DoubleType(), True),
-            ]
-        ),
-    )
-    store = sim6_code_store(emb, k, centroids=cent_local)
-
-    q_rows = (
-        emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
-        .select("vec_id", "v", "nrm")
-        .collect()
-    )
-    q_base = local_df(
-        spark,
-        [(r["vec_id"], list(r["v"]) if r["v"] is not None else None, r["nrm"]) for r in q_rows],
-        T.StructType(
-            [
-                T.StructField("vec_id", T.LongType(), True),
-                T.StructField("v", T.ArrayType(T.DoubleType()), True),
-                T.StructField("nrm", T.DoubleType(), True),
-            ]
-        ),
-    )
-    # query-side probe list: nearest centroids, full precision.
-    # Queries are few by definition, so the ranked-window shape is
-    # fine HERE (n_queries x K rows) — it is the CORPUS assignment in
-    # sim6_code_store that must stay window-free.
-    qw = Window.partitionBy("vec_id").orderBy(
-        F.desc("csim"), F.asc("centroid_id")
-    )
-    scored = q_base.join(F.broadcast(cent_local)).withColumn(
-        "csim",
-        F.try_divide(dot_product("v", "cv"), F.col("nrm") * F.col("cn")),
-    )
-    probed = scored.withColumn("rn", F.row_number().over(qw)).filter(
-        F.col("rn") <= nprobe
-    )
-    q = probed.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("nq"),
-        F.col("centroid_id").alias("qcluster"),
-    )
-    paired = store.join(
-        F.broadcast(q),
-        (F.col("centroid_id") == F.col("qcluster"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "vec_id",
-        _sim6_dequantize().alias("v"),
-        "nv",
-        "query_id",
-        "qv",
-        "nq",
-    )
-    return _score_rank_top5(paired)
-
-
 # --- dd10: unaligned duplicate-span detection ------------------------------
 # Exact-substring dedup in the Lee et al. 2021 ("Deduplicating
 # Training Data Makes Language Models Better") sense: find repeated
@@ -2927,411 +1916,6 @@ def dd11_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed once and shared; standalone, this recomputes dd10."""
     docs = load_table(spark, sf_dir, "documents")
     return remove_duplicate_spans(docs, dd10_duplicate_spans(spark, sf_dir))
-
-
-# --- dd12: semantic dedup (SemDeDup) ---------------------------------------
-# Abbas et al. 2023 ("SemDeDup: Data-efficient learning at web-scale
-# through semantic deduplication"): cluster the embedding space with a
-# small codebook, then prune near-duplicate PAIRS only WITHIN each
-# cluster — the pairwise cosine work drops from n^2 to ~n^2/K without
-# any LSH recall loss inside a cluster, and the keeper rule ("keep the
-# example FARTHEST from its centroid", i.e. lowest centroid cosine —
-# the paper's best-performing variant) falls out of columns the
-# assignment already computed. dd6 is the complementary design: global
-# sign-LSH recall at a fixed cosine floor; dd12 trades global recall
-# (cross-cluster near-dups are invisible BY DESIGN) for an exact
-# within-cluster sweep and a semantically meaningful keeper.
-#
-# Deterministic greedy form of the paper's rule: order each cluster by
-# (csim ASC, vec_id ASC); a vector is REMOVED iff some earlier vector
-# in its cluster has cosine >= tau with it. Output is the ACTION LIST
-# (the dd9/dd10 convention), never a corpus projection.
-#
-# Cross-engine stability: the precedence comparison is on raw csim
-# doubles computed independently by Spark and DuckDB (~1e-15 drift);
-# the minimum within-cluster csim gap on the test corpora is 6.3e-7,
-# and identical vectors tie at bit-equal csim in each engine and fall
-# to the vec_id tie-break, so the order never flips. tau = 0.40 sits
-# >= 1.2e-4 from every pair cosine at both oracle SFs (measured).
-#
-# UNREGISTERED (50-entry driver snapshot cap) — oracle-compared in
-# tests/test_suite_oracle.py, benched in bench.py.
-
-_DD12_TAU = 0.40
-
-
-def _dd12_sql(k: int = _IVF_K, tau: float = _DD12_TAU) -> str:
-    return f"""
-    WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cent AS (
-        SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < {k}
-    ),
-    ranked AS (
-        SELECT e.vec_id, e.v, c.centroid_id,
-               list_cosine_similarity(e.v, c.cv) AS csim,
-               row_number() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY list_cosine_similarity(e.v, c.cv) DESC,
-                            c.centroid_id ASC) AS rn
-        FROM e CROSS JOIN cent c
-    ),
-    a AS (SELECT vec_id, v, centroid_id, csim FROM ranked WHERE rn = 1)
-    SELECT y.vec_id, y.centroid_id,
-           CAST(count(*) AS BIGINT) AS n_dups,
-           round(max(list_cosine_similarity(x.v, y.v)), 4) AS max_sim
-    FROM a x JOIN a y
-      ON x.centroid_id = y.centroid_id
-     AND (x.csim < y.csim
-          OR (x.csim = y.csim AND x.vec_id < y.vec_id))
-     AND list_cosine_similarity(x.v, y.v) >= {tau}
-    GROUP BY y.vec_id, y.centroid_id
-    """
-
-
-DD12_SQL = _dd12_sql()
-
-
-def _semantic_dedup_removals_ref(
-    emb: DataFrame, k: int = _IVF_K, tau: float = _DD12_TAU
-) -> DataFrame:
-    """JVM-expression REFERENCE form of the SemDeDup sweep (the parity
-    anchor for the Arrow fast path — tests/test_similarity_fastpath.py
-    pins the two bit-identical; the _ivf_assign_ref convention): the
-    within-cluster self-join hashes both sides on centroid_id, the
-    greedy precedence is the join condition, and each surviving pair
-    pays one interpreted zip_with/fold cosine."""
-    from ..operators.similarity import dot_product
-
-    a = _ivf_assign(emb, k)
-    keep = a.select(
-        F.col("centroid_id").alias("kc"),
-        F.col("vec_id").alias("keep_id"),
-        F.col("v").alias("kv"),
-        F.col("nrm").alias("kn"),
-        F.col("csim").alias("kcsim"),
-    )
-    precedes = (F.col("kcsim") < F.col("csim")) | (
-        (F.col("kcsim") == F.col("csim"))
-        & (F.col("keep_id") < F.col("vec_id"))
-    )
-    sim = F.try_divide(dot_product("v", "kv"), F.col("nrm") * F.col("kn"))
-    return (
-        a.join(keep, (F.col("centroid_id") == F.col("kc")) & precedes)
-        .withColumn("sim_raw", sim)
-        .filter(F.col("sim_raw") >= tau)
-        .groupBy("vec_id", "centroid_id")
-        .agg(
-            F.count("*").cast("long").alias("n_dups"),
-            F.round(F.max("sim_raw"), 4).alias("max_sim"),
-        )
-    )
-
-
-def semantic_dedup_removals(
-    emb: DataFrame,
-    k: int = _IVF_K,
-    tau: float = _DD12_TAU,
-    block: int = 2048,
-) -> DataFrame:
-    """SemDeDup removal list over ``(vec_id, v, nrm)``: ``(vec_id,
-    centroid_id, n_dups, max_sim)`` — one row per PRUNED vector, with
-    how many preceding in-cluster near-dups justified the pruning and
-    the strongest of them.
-
-    Scale design: assignment is the shared window-free map-side
-    argmax (:func:`_ivf_assign` — zero corpus shuffle); the ONLY
-    corpus-sized exchange is the hash on centroid_id that forms the
-    cluster groups (plan-pinned: one Exchange, no join, no Window).
-    The cluster-scoped all-pairs sweep — the SemDeDup contract — runs
-    as ONE Arrow batch per cluster: each vector crosses the Python
-    boundary once and the (n_c)^2 cosines are blocked numpy work
-    (:func:`..operators.similarity.cosine_block`), IEEE-bit-identical
-    to the JVM join form `_semantic_dedup_removals_ref` (pinned).
-    Measured at the bench demo (2k vectors, K=4): 6.0 s JVM folds ->
-    the fold paid ~n_c^2*dim interpreted steps per cluster; the numpy
-    block pays the same flops at memory bandwidth. K is THE knob:
-    per-cluster pair volume is (n/K)^2 and the paper runs K ~ n/10k
-    (11k clusters for 100M embeddings) — cluster cardinality stays
-    ~constant as the corpus grows, so per-group memory (bounded to
-    ``block**2`` sims regardless of cluster size) and per-group time
-    hold; runaway clusters are re-sharded upstream, exactly as the
-    paper does."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    a = _ivf_assign(emb, k)
-    out_schema = T.StructType(
-        [
-            a.schema["vec_id"],
-            T.StructField("centroid_id", T.LongType()),
-            T.StructField("n_dups", T.LongType()),
-            T.StructField("max_sim", T.DoubleType()),
-        ]
-    )
-    empty = pd.DataFrame(
-        {
-            "vec_id": pd.Series([], dtype="int64"),
-            "centroid_id": pd.Series([], dtype="int64"),
-            "n_dups": pd.Series([], dtype="int64"),
-            "max_sim": pd.Series([], dtype="float64"),
-        }
-    )
-
-    def _sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..operators.similarity import cosine_block
-
-        # NULL-csim rows (zero-norm vectors) neither precede nor get
-        # removed in the JVM form (every comparison with NULL fails) —
-        # drop them from the greedy order entirely.
-        pdf = pdf[pdf["csim"].notna()]
-        n = len(pdf)
-        if n < 2:
-            return empty
-        # greedy order: (csim ASC, vec_id ASC) — mergesort is stable
-        # and the vec_id tie-break makes the order total.
-        pdf = pdf.sort_values(["csim", "vec_id"], kind="mergesort")
-        V = np.stack(pdf["v"].to_numpy()).astype(np.float64, copy=False)
-        nr = pdf["nrm"].to_numpy(dtype=np.float64)
-        n_dups = np.zeros(n, dtype=np.int64)
-        mx = np.full(n, -np.inf)
-        for jlo in range(1, n, block):  # order-first row is never pruned
-            jhi = min(jlo + block, n)
-            hits = np.zeros(jhi - jlo, dtype=np.int64)
-            cmax = np.full(jhi - jlo, -np.inf)
-            cols = np.arange(jlo, jhi)[None, :]
-            for ilo in range(0, jhi, block):
-                ihi = min(ilo + block, jhi)
-                sim = cosine_block(
-                    V[ilo:ihi], nr[ilo:ihi], V[jlo:jhi], nr[jlo:jhi]
-                )
-                # only strictly-earlier rows precede
-                sim[np.arange(ilo, ihi)[:, None] >= cols] = -np.inf
-                hits += (sim >= tau).sum(axis=0)
-                cmax = np.maximum(cmax, sim.max(axis=0))
-            n_dups[jlo:jhi] = hits
-            mx[jlo:jhi] = cmax
-        keep = n_dups > 0
-        if not keep.any():
-            return empty
-        return pd.DataFrame(
-            {
-                "vec_id": pdf["vec_id"].to_numpy()[keep],
-                "centroid_id": pdf["centroid_id"].to_numpy()[keep],
-                "n_dups": n_dups[keep],
-                "max_sim": mx[keep],
-            }
-        )
-
-    return (
-        a.groupBy("centroid_id")
-        .applyInPandas(_sweep, out_schema)
-        .select(
-            "vec_id",
-            "centroid_id",
-            "n_dups",
-            F.round("max_sim", 4).alias("max_sim"),
-        )
-    )
-
-
-def dd12_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over the embeddings table at the oracle-stated demo
-    geometry (K=_IVF_K first-vector codebook, tau=_DD12_TAU)."""
-    from ..operators.similarity import vec_norm
-
-    # NOT spread (r13 A/B: 1.26 s vs 1.11 s — the centroid-group
-    # exchange dominates; fanning the scan out first loses)
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .withColumn("nrm", vec_norm("v"))
-    )
-    return semantic_dedup_removals(emb)
-
-
-# --- cur7: semantic decontamination ----------------------------------------
-# cur2's embedding-space twin: cur2 catches benchmark leakage by exact
-# n-gram shingle overlap; cur7 catches PARAPHRASED leakage — training
-# documents semantically close to a held-out eval set — by cosine
-# against the eval embeddings (the screen production pipelines run
-# alongside string decontamination; same shape as Phi/Llama-style
-# "fuzzy decontamination"). Eval sets are small BY DEFINITION
-# (thousands of items), so the corpus side never shuffles: eval rows
-# broadcast, every (corpus x eval) cosine is scored JVM-side in the
-# scan stage, and the per-document rollup's groupBy key is the corpus
-# row key itself — every pair for a document lives in the partition
-# that scanned it, so the partial aggregate collapses map-side and
-# the exchange carries only the ~flagged-sized final rows.
-#
-# tau reuses dd6's 0.35 near-dup convention; the demo eval set is the
-# label-0 slice of the embeddings table (the oracle states it).
-#
-# UNREGISTERED (50-entry driver snapshot cap) — oracle-compared in
-# tests/test_suite_oracle.py, benched in bench.py.
-
-_CUR7_TAU = _DD6_THRESHOLD
-_CUR7_EVAL_LABEL = 0
-
-
-def _cur7_sql(tau: float = _CUR7_TAU, eval_label: int = _CUR7_EVAL_LABEL) -> str:
-    return f"""
-    WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings
-    ),
-    ev AS (SELECT v FROM e WHERE label = {eval_label}),
-    c AS (SELECT vec_id, v FROM e WHERE label <> {eval_label}),
-    s AS (
-        SELECT c.vec_id, list_cosine_similarity(c.v, ev.v) AS s
-        FROM c CROSS JOIN ev
-    )
-    SELECT vec_id,
-           CAST(count(*) FILTER (s >= {tau}) AS BIGINT) AS n_eval_hits,
-           round(max(s), 4) AS max_sim
-    FROM s GROUP BY vec_id HAVING max(s) >= {tau}
-    """
-
-
-CUR7_SQL = _cur7_sql()
-
-
-def _semantic_decontamination_ref(
-    corpus: DataFrame, eval_set: DataFrame, tau: float = _CUR7_TAU
-) -> DataFrame:
-    """JVM-expression REFERENCE form of the decontamination scorer
-    (the parity anchor for the Arrow fast path — bit-identical, pinned
-    in tests/test_similarity_fastpath.py): eval rows broadcast into a
-    nested-loop join, every pair pays one interpreted zip_with/fold,
-    and the per-document rollup keys on the corpus row id so partial
-    aggregation collapses map-side (one exchange of final rows)."""
-    from ..operators.similarity import dot_product
-
-    ev = eval_set.select(
-        F.col("v").alias("ev"), F.col("nrm").alias("en")
-    )
-    sim = F.try_divide(dot_product("v", "ev"), F.col("nrm") * F.col("en"))
-    return (
-        corpus.crossJoin(F.broadcast(ev))
-        .withColumn("s", sim)
-        .groupBy("vec_id")
-        .agg(
-            F.sum((F.col("s") >= tau).cast("long")).alias("n_eval_hits"),
-            F.max("s").alias("ms"),
-        )
-        .filter(F.col("ms") >= tau)
-        .select(
-            "vec_id",
-            "n_eval_hits",
-            F.round("ms", 4).alias("max_sim"),
-        )
-    )
-
-
-def semantic_decontamination(
-    corpus: DataFrame,
-    eval_set: DataFrame,
-    tau: float = _CUR7_TAU,
-    block: int = 4096,
-) -> DataFrame:
-    """Flag corpus vectors semantically close to a held-out eval set:
-    ``(vec_id, n_eval_hits, max_sim)`` — one row per CONTAMINATED
-    corpus vector (max cosine to any eval vector >= tau), with how
-    many eval items it hits. ``corpus``/``eval_set`` carry
-    ``(vec_id, v, nrm)``; the output is the drop/review action list a
-    pipeline anti-joins against the corpus (the dd9 convention).
-
-    Scale design: eval sets are small BY DEFINITION (thousands of
-    items), so the eval matrix is collected once (the same artifact
-    the reference form broadcasts) and the whole scorer runs INSIDE
-    the corpus scan as one Arrow pass per batch — each corpus vector
-    crosses the Python boundary once, the n x |eval| cosines are
-    blocked numpy work (:func:`..operators.similarity.cosine_block`,
-    IEEE-bit-identical to the broadcast-join form
-    `_semantic_decontamination_ref`, pinned), and each row's rollup
-    (hit count + max) completes in the batch that scanned it. ZERO
-    exchanges, zero joins (plan-pinned) — the reference form's one
-    final-rows exchange is gone because nothing needs grouping."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    ev_rows = eval_set.select("v", "nrm").collect()
-    out_schema = T.StructType(
-        [
-            corpus.schema["vec_id"],
-            T.StructField("n_eval_hits", T.LongType()),
-            T.StructField("max_sim", T.DoubleType()),
-        ]
-    )
-    src = corpus.select("vec_id", "v", "nrm")
-    if not ev_rows:
-        # JVM: crossJoin with an empty build side yields no pairs
-        return src.sparkSession.createDataFrame([], out_schema)
-    E = np.array([list(r["v"]) for r in ev_rows], dtype=np.float64)
-    en = np.array([r["nrm"] for r in ev_rows], dtype=np.float64)
-    m = len(ev_rows)
-
-    def _score(batches):
-        from ..operators.similarity import cosine_block
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(
-                np.float64, copy=False
-            )
-            nr = pdf["nrm"].to_numpy(dtype=np.float64)
-            hits = np.zeros(n, dtype=np.int64)
-            mx = np.full(n, -np.inf)
-            for elo in range(0, m, block):
-                ehi = min(elo + block, m)
-                sim = cosine_block(V, nr, E[elo:ehi], en[elo:ehi])
-                hits += (sim >= tau).sum(axis=1)
-                mx = np.maximum(mx, sim.max(axis=1))
-            keep = mx >= tau
-            if not keep.any():
-                continue
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[keep],
-                    "n_eval_hits": hits[keep],
-                    "max_sim": mx[keep],
-                }
-            )
-
-    return src.mapInPandas(_score, out_schema).select(
-        "vec_id",
-        "n_eval_hits",
-        F.round("max_sim", 4).alias("max_sim"),
-    )
-
-
-def cur7_semantic_decontamination(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Semantic decontamination at the oracle-stated demo split: eval
-    = the label-0 slice of the embeddings table, corpus = the rest."""
-    from ..operators.similarity import vec_norm
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            "label",
-            F.col("embedding").cast("array<double>").alias("v"),
-        )
-        .withColumn("nrm", vec_norm("v"))
-    )
-    return semantic_decontamination(
-        emb.filter(F.col("label") != _CUR7_EVAL_LABEL),
-        emb.filter(F.col("label") == _CUR7_EVAL_LABEL),
-    )
 
 
 # --- tx8: n-gram LM quality scoring ----------------------------------------
@@ -3651,194 +2235,10 @@ def tx9_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_token_stats(docs, merges)
 
 
-# --- emb1: deterministic hashed document encoder ----------------------------
-# Embedding GENERATION plumbing: every semantic tier here (dd6, dd12,
-# sim*, cur7) consumes an embedding column that some encoder produced
-# upstream. A real encoder is a model-serving call (stubbed in this
-# container by design — the mm* stance); emb1 is the deterministic
-# stand-in with the REAL Spark shape: one zero-shuffle projection
-# mapping text -> dim-vector via hashed word components (feature
-# hashing; Weinberger et al. 2009), mean-free SUM pooling.
-#
-#   comp(word, d) = ((hexint(md5(word ':' d/4)[8*(d%4) .. +8]) % 2001)
-#                    - 1000) / 1024          -- a dyadic rational
-#   v[d] = sum over words of comp(word, d)
-#
-# Components are dyadic (denominator 1024) and |comp| <= 1000/1024,
-# so every sum is EXACT in IEEE doubles in any order — the oracle
-# comparison is bit-for-bit without round() and the vector is
-# reproducible across engines, partitionings, and runs. One md5 per
-# (word, salt) yields FOUR components (8 hex chars each), so dim=16
-# costs 4 md5 calls per word occurrence.
-#
-# Output is the scalar digest (three fixed components + the exact L1
-# mass), not the array — the driver compare is scalar-typed; the
-# array form is `hashed_doc_vectors` for downstream composition.
-#
-# UNREGISTERED (50-entry driver snapshot cap) — oracle-compared in
-# tests/test_suite_oracle.py, benched in bench.py.
-
-_EMB1_DIM = 16
-
-
-def _emb1_comp_sql(d_expr: str) -> str:
-    """DuckDB: the component value for dim expression ``d_expr`` of
-    word column ``x`` — digit arithmetic with a DYNAMIC slice offset
-    (the _hex_to_int_sql pattern, offset depending on d)."""
-    h = f"md5(x || ':' || CAST(({d_expr}) // 4 AS VARCHAR))"
-    digits = "+".join(
-        f"(strpos('0123456789abcdef',"
-        f" substr({h}, (({d_expr}) % 4) * 8 + {i}, 1)) - 1)"
-        f" * {16 ** (8 - i)}"
-        for i in range(1, 9)
-    )
-    return f"((({digits}) % 2001) - 1000) / 1024.0"
-
-
-EMB1_SQL = f"""
-WITH w AS (
-    SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-tok AS (SELECT doc_id, unnest(w) AS x FROM w),
-comps AS (
-    SELECT doc_id, d.d AS d, {_emb1_comp_sql("d.d")} AS val
-    FROM tok CROSS JOIN (SELECT unnest(range({_EMB1_DIM})) AS d) d
-),
-dims AS (
-    SELECT doc_id, d, sum(val) AS vd FROM comps GROUP BY doc_id, d
-)
-SELECT doc_id,
-       sum(CASE WHEN d = 0 THEN vd ELSE 0 END) AS c0,
-       sum(CASE WHEN d = 7 THEN vd ELSE 0 END) AS c7,
-       sum(CASE WHEN d = 15 THEN vd ELSE 0 END) AS c15,
-       sum(abs(vd)) AS l1
-FROM dims GROUP BY doc_id
-"""
-
-
-def _hashed_doc_vectors_ref(
-    docs: DataFrame, dim: int = _EMB1_DIM
-) -> DataFrame:
-    """JVM-expression REFERENCE form of the hashed encoder (the
-    parity anchor — the lsh_band_buckets / nearest_centroid
-    convention): the whole dim x words fold as nested array HOFs.
-    Each word's md5 is bound to a lambda variable and SLICED four
-    ways (the first cut recomputed it per dim — measured 1.6x
-    slower; Spark does not CSE across HOF lambda bodies). Still the
-    slow path overall: HOF lambdas evaluate INTERPRETED, outside
-    whole-stage codegen — measured 3.6 s vs 0.66 s Arrow at the
-    bench demo (5.96 s for the per-dim-md5 first cut) — so production is the Arrow twin below; dyadic components
-    make the two bit-identical in ANY summation order."""
-    if dim % 4 != 0:
-        raise ValueError(f"dim must be a multiple of 4 (md5 slicing): {dim}")
-    comp = (
-        "(cast(conv(substr(h, i * 8 + 1, 8), 16, 10) as bigint)"
-        " % 2001 - 1000) / 1024D"
-    )
-    word_vec = (
-        f"flatten(transform(transform(sequence(0, {dim // 4 - 1}),"
-        " s -> md5(concat(x, ':', cast(s as string)))),"
-        f" h -> transform(sequence(0, 3), i -> {comp})))"
-    )
-    return docs.select(
-        "doc_id",
-        F.expr(
-            "aggregate(split(text, ' '),"
-            f" array_repeat(cast(0.0 as double), {dim}),"
-            f" (acc, x) -> zip_with(acc, {word_vec}, (a, b) -> a + b))"
-        ).alias("v"),
-    )
-
-
-def hashed_doc_vectors(docs: DataFrame, dim: int = _EMB1_DIM) -> DataFrame:
-    """``(doc_id, v array<double>)`` — the full hashed embedding:
-    ONE Arrow-batched mapInPandas scan, zero exchanges (plan-pinned).
-    Per batch, each DISTINCT word's component vector is computed once
-    (hashlib md5 + numpy, memoized — Zipf makes the memo the point)
-    and documents sum their words' vectors at memory bandwidth.
-    Bit-identical to :func:`_hashed_doc_vectors_ref` — components
-    are dyadic rationals, so sums are EXACT in every order and the
-    engine/backend cannot change a single bit (parity-pinned).
-    Drop-in input for dd6/dd12/sim* after a vec_norm column."""
-    if dim % 4 != 0:
-        raise ValueError(f"dim must be a multiple of 4 (md5 slicing): {dim}")
-
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        memo: dict = {}
-
-        def word_vec(w: str) -> "np.ndarray":
-            v = memo.get(w)
-            if v is None:
-                v = _hashed_word_components(w, dim)
-                memo[w] = v
-            return v
-
-        for pdf in batches:
-            out = []
-            for did, t in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(t, str):
-                    # a null/None text would die rows later in
-                    # t.split with an opaque executor stack — name
-                    # the doc and the contract instead (review r11)
-                    raise ValueError(
-                        f"doc {did}: text is {type(t).__name__}, "
-                        "not a string — the hashed encoder needs "
-                        "text; filter or fill nulls upstream"
-                    )
-                acc = np.zeros(dim, dtype=np.float64)
-                for w in t.split(" "):
-                    acc += word_vec(w)
-                out.append(acc.tolist())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "v": out})
-
-    return docs.select("doc_id", "text").mapInPandas(
-        encode, schema="doc_id long, v array<double>"
-    )
-
-
-def _hashed_word_components(w: str, dim: int):
-    """THE word-component formula of the hashed encoder used by the
-    Arrow corpus scan (`hashed_doc_vectors`)."""
-    import hashlib
-
-    import numpy as np
-
-    comps = []
-    for s in range(dim // 4):
-        h = hashlib.md5(f"{w}:{s}".encode()).hexdigest()
-        comps.extend(
-            ((int(h[i * 8 : i * 8 + 8], 16) % 2001) - 1000) / 1024.0
-            for i in range(4)
-        )
-    return np.array(comps, dtype=np.float64)
-
-
-def emb1_hashed_encoder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar digest of the hashed encoder over the documents table:
-    ``(doc_id, c0, c7, c15, l1)`` — exact dyadic sums, bit-identical
-    to the DuckDB oracle with no rounding."""
-    # NOT spread (r13 A/B: 0.88 s vs 0.69 s — the per-word memo makes
-    # the encoder cheap per byte at this shape; the exchange loses)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    v = hashed_doc_vectors(docs)
-    return v.select(
-        "doc_id",
-        F.element_at("v", 1).alias("c0"),
-        F.element_at("v", 8).alias("c7"),
-        F.element_at("v", 16).alias("c15"),
-        F.expr(
-            "aggregate(v, cast(0.0 as double), (a, x) -> a + abs(x))"
-        ).alias("l1"),
-    )
-
-
 # --- cur10: exact-substring decontamination ---------------------------------
-# The strictest of the three decontamination tiers: cur2 flags
-# 3-shingle overlap (recall-heavy), cur7 flags embedding cosine
-# (paraphrase), cur10 flags EXACT >= 13-token overlap — the GPT-3
+# The stricter of the two decontamination tiers: cur2 flags
+# 3-shingle overlap (recall-heavy), cur10 flags EXACT >= 13-token
+# overlap — the GPT-3
 # standard (Brown et al. 2020 filter eval leaks by 13-gram match) —
 # by pointing dd10's stride-1 window-fingerprint machinery at the
 # eval set instead of the corpus itself. 60-bit fingerprints (the
@@ -3923,19 +2323,18 @@ def cur10_substring_decontamination(
 
 
 # --- llm_ops_battery: registered composite for the r5/r6 tier ---------------
-# The 50-slot driver registry cannot grow (snapshot cap, round-4
-# convention), so the ten operators added in rounds 5-6 that still
-# lacked a hard driver-CORRECTNESS row — dd10, dd11, dd12, cur7, cur8,
-# cur9, cur10, tx8, emb1, sim6 — register through ONE composite entry,
+# The driver registry holds at most 50 entries (snapshot cap, round-4
+# convention), so the six operators added in rounds 5-6 that still
+# lacked a hard driver-CORRECTNESS row — dd10, dd11, cur8, cur9, cur10,
+# tx8 — register through ONE composite entry,
 # mirroring `micro_ops_battery` (suite/relational.py): each operator's
 # full output is melted to (chk, key_s, n, v) rows and unioned, and the
 # oracle unions the same per-operator DuckDB SQL (the exact constants
 # the pytest oracle suite already compares one by one), so a single
-# wrong span / weight / logprob / neighbor flips the battery's value
-# hash. It takes the registry slot j7_crossjoin_zerofill vacated this
-# round (J7 keeps its registered pass through geo4_uf_choropleth_day,
-# which shares the dense cross-join + zero-fill shape, plus its own
-# pytest oracle) — total stays EXACTLY 50.
+# wrong span / weight / logprob flips the battery's value hash. It
+# took the registry slot j7_crossjoin_zerofill vacated (J7 keeps its
+# registered pass through geo4_uf_choropleth_day, which shares the
+# dense cross-join + zero-fill shape, plus its own pytest oracle).
 
 
 def _melt_battery(df: DataFrame, chk: str, key_s, n, v) -> DataFrame:
@@ -3961,15 +2360,6 @@ def _melt_battery(df: DataFrame, chk: str, key_s, n, v) -> DataFrame:
            n_tokens_before, CAST(n_tokens_removed AS DOUBLE)
     FROM ({DD11_SQL})
     UNION ALL
-    SELECT 'dd12',
-           concat_ws(':', CAST(vec_id AS VARCHAR),
-                     CAST(centroid_id AS VARCHAR)),
-           n_dups, max_sim
-    FROM ({DD12_SQL})
-    UNION ALL
-    SELECT 'cur7', CAST(vec_id AS VARCHAR), n_eval_hits, max_sim
-    FROM ({CUR7_SQL})
-    UNION ALL
     SELECT 'cur8', CAST(doc_id AS VARCHAR), n_feats, dsir_logweight
     FROM ({CUR8_SQL})
     UNION ALL
@@ -3984,52 +2374,27 @@ def _melt_battery(df: DataFrame, chk: str, key_s, n, v) -> DataFrame:
     UNION ALL
     SELECT 'tx8', CAST(doc_id AS VARCHAR), n_bigrams, avg_logprob
     FROM ({TX8_SQL})
-    UNION ALL
-    SELECT e.chk, CAST(e.doc_id AS VARCHAR), CAST(NULL AS BIGINT), e.v
-    FROM (
-        SELECT doc_id, 'emb1_c0' AS chk, c0 AS v FROM ({EMB1_SQL})
-        UNION ALL
-        SELECT doc_id, 'emb1_c7', c7 FROM ({EMB1_SQL})
-        UNION ALL
-        SELECT doc_id, 'emb1_c15', c15 FROM ({EMB1_SQL})
-        UNION ALL
-        SELECT doc_id, 'emb1_l1', l1 FROM ({EMB1_SQL})
-    ) e
-    UNION ALL
-    SELECT 'sim6',
-           concat_ws(':', CAST(query_id AS VARCHAR),
-                     CAST(neighbor_id AS VARCHAR)),
-           rank, sim
-    FROM ({SIM6_SQL})
     """,
 )
 def llm_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite correctness battery for the ten r5-r6
-    operators outside the 50-slot registry: dd10 duplicate spans,
-    dd11 span scrub, dd12 SemDeDup, cur7 semantic decontamination,
-    cur8 DSIR selection, cur9 DSIR Gumbel-top-k resample, cur10
-    substring decontamination, tx8 bigram-LM perplexity, emb1 hashed
-    doc encoder and sim6 IVF x SQ8 ANN. Every operator's complete
-    value set is hashed (spans+window counts, scrubbed-text md5,
-    removal sets with similarities, DSIR weights and Gumbel keys,
-    contamination flags, per-doc logprobs, exact encoder components,
-    ranked neighbors); each sub-operator also keeps its own
+    """Composite correctness battery for the six r5-r6
+    operators outside the registry: dd10 duplicate spans, dd11 span
+    scrub, cur8 DSIR selection, cur9 DSIR Gumbel-top-k resample, cur10
+    substring decontamination and tx8 bigram-LM perplexity. Every
+    operator's complete value set is hashed (spans+window counts,
+    scrubbed-text md5, DSIR weights and Gumbel keys, contamination
+    flags, per-doc logprobs); each sub-operator also keeps its own
     standalone oracle test in tests/. The union is a pure
     composition — each branch is the operator's registered-shape plan
     unchanged, so the battery adds no shuffles beyond what the
     operators themselves cost."""
-    longn = F.lit(None).cast("long")
     dbln = F.lit(None).cast("double")
     dd10 = dd10_duplicate_spans(spark, sf_dir)
     dd11 = dd11_span_scrub(spark, sf_dir)
-    dd12 = dd12_semantic_dedup(spark, sf_dir)
-    cur7 = cur7_semantic_decontamination(spark, sf_dir)
     cur8 = cur8_dsir_selection(spark, sf_dir)
     cur9 = cur9_dsir_resample(spark, sf_dir)
     cur10 = cur10_substring_decontamination(spark, sf_dir)
     tx8 = tx8_lm_perplexity(spark, sf_dir)
-    emb1 = emb1_hashed_encoder(spark, sf_dir)
-    sim6 = sim6_ivf_sq8_ann(spark, sf_dir)
     parts = [
         _melt_battery(
             dd10,
@@ -4051,21 +2416,6 @@ def llm_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("n_tokens_before"),
             F.col("n_tokens_removed"),
-        ),
-        _melt_battery(
-            dd12,
-            "dd12",
-            F.concat_ws(
-                ":",
-                F.col("vec_id").cast("string"),
-                F.col("centroid_id").cast("string"),
-            ),
-            F.col("n_dups"),
-            F.col("max_sim"),
-        ),
-        _melt_battery(
-            cur7, "cur7", F.col("vec_id"), F.col("n_eval_hits"),
-            F.col("max_sim"),
         ),
         _melt_battery(
             cur8, "cur8", F.col("doc_id"), F.col("n_feats"),
@@ -4091,25 +2441,6 @@ def llm_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("avg_logprob"),
         ),
     ]
-    for comp in ("c0", "c7", "c15", "l1"):
-        parts.append(
-            _melt_battery(
-                emb1, f"emb1_{comp}", F.col("doc_id"), longn, F.col(comp)
-            )
-        )
-    parts.append(
-        _melt_battery(
-            sim6,
-            "sim6",
-            F.concat_ws(
-                ":",
-                F.col("query_id").cast("string"),
-                F.col("neighbor_id").cast("string"),
-            ),
-            F.col("rank"),
-            F.col("sim"),
-        )
-    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -1,24 +1,10 @@
-"""Scaling validation for the round-6 composites (sim6, mm5 r6
-geometry).
+"""Scaling validation for the round-6 mm5 geometry.
 
-Two measured claims, printed as one JSON line and recorded in
-SCALING.md:
-
-1. **sim6 serving scaling**: with the IVF+SQ8 code store PREBUILT
-   (the deployment shape — the store is a materialized artifact, like
-   an index), probe+dequantize+rerank wall time over 10k / 100k / 1M
-   vectors, against sim1-style full-precision brute force on the same
-   corpora as the foil. Both are O(n) scans by design; the artifact
-   is the RATIO (sim6 scores ~nprobe/K of the corpus from 8x smaller
-   codes) and the exponent staying ~linear with no cliff. At the demo
-   codebook (K=4, nprobe=2) the candidate fraction is only 1/2, so
-   the 1M tier ALSO measures K=64 — the serving knob is K, and the
-   fraction drops to 1/32.
-2. **mm5 geometry cliff foil**: candidate-pair volume and wall time
-   at 5k / 50k / 200k media items under (a) the auto-tuned geometry
-   and (b) the r5 fixed 4x16 geometry. The auto-tune holds candidates
-   roughly flat; the fixed geometry grows them quadratically — the
-   same decade cliff dd6's sweep documents.
+mm5 geometry cliff foil: candidate-pair volume and wall time at 5k /
+50k / 200k media items under (a) the auto-tuned geometry and (b) the
+r5 fixed 4x16 geometry. The auto-tune holds candidates roughly flat;
+the fixed geometry grows them quadratically. Printed as one JSON line
+and recorded in SCALING.md.
 
 Usage: python scripts/scaling_ann_media.py  [env: SPARK_GRAFT_CPUS]
 """
@@ -28,30 +14,9 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-EMB_DIM = 64
-SIM_SIZES = {"10k": 10_000, "100k": 100_000, "1M": 1_000_000}
 MM_SIZES = {"5k": 5_000, "50k": 50_000, "200k": 200_000}
-
-
-def gen_embeddings(n: int, seed: int) -> pa.Table:
-    rng = np.random.default_rng(seed)
-    vecs = rng.normal(0, 1, size=(n, EMB_DIM)).astype(np.float32)
-    return pa.table(
-        {
-            "vec_id": pa.array(range(n), type=pa.int64()),
-            "embedding": pa.array(list(vecs), type=pa.list_(pa.float32())),
-            "label": pa.array(
-                (np.arange(n) % 10).astype(np.int32), type=pa.int32()
-            ),
-        }
-    )
 
 
 def gen_media(n: int):
@@ -77,40 +42,18 @@ def gen_media(n: int):
     )
 
 
-def _t(fn, runs: int = 2) -> float:
-    fn()
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn()
-        samples.append(time.perf_counter() - t0)
-    return round(min(samples), 3)
-
-
 def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     sys.path.insert(0, os.path.dirname(here))
-    sys.path.insert(0, here)  # scaling_common, regardless of invoker cwd
-    from scaling_common import fit_exponent  # fail fast, not after the sweep
 
     from pyspark.sql import functions as F
 
-    from inpe_queimadas_etl_spark.operators.similarity import vec_norm
     from inpe_queimadas_etl_spark.session import get_spark
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _cosine_top5,
-        _score_rank_top5,
-        _sim6_dequantize,
-        sim6_code_store,
-        _ivf_centroids,
-        _IVF_NPROBE,
-    )
     from inpe_queimadas_etl_spark.suite.multimodal import (
         _mm5_candidate_pairs,
         _mm5_geometry,
         _mm5_signatures,
     )
-    from pyspark.sql import Window
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     spark = get_spark(
@@ -120,91 +63,6 @@ def main() -> None:
         extra_conf={"spark.driver.memory": "16g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from inpe_queimadas_etl_spark.operators.similarity import dot_product
-
-    def build_search(emb, k: int):
-        """(search_fn, brute_fn) over a prebuilt store at codebook
-        size k — the drain of sim6 minus the build."""
-        store = sim6_code_store(emb, k=k).localCheckpoint(eager=True)
-        cent = _ivf_centroids(emb, k=k)
-        qw = Window.partitionBy("vec_id").orderBy(
-            F.desc("csim"), F.asc("centroid_id")
-        )
-        lo, hi = max(8, k), max(8, k) + 8  # queries outside the codebook
-        q = (
-            emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-            .join(F.broadcast(cent))
-            .withColumn(
-                "csim",
-                F.try_divide(
-                    dot_product("v", "cv"), F.col("nrm") * F.col("cn")
-                ),
-            )
-            .withColumn("rn", F.row_number().over(qw))
-            .filter(F.col("rn") <= _IVF_NPROBE)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("v").alias("qv"),
-                F.col("nrm").alias("nq"),
-                F.col("centroid_id").alias("qcluster"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-        def search():
-            paired = store.join(
-                F.broadcast(q),
-                (F.col("centroid_id") == F.col("qcluster"))
-                & (F.col("vec_id") != F.col("query_id")),
-            ).select(
-                "vec_id",
-                _sim6_dequantize().alias("v"),
-                "nv",
-                "query_id",
-                "qv",
-                "nq",
-            )
-            _score_rank_top5(paired).collect()
-
-        def brute():
-            _cosine_top5(
-                emb.select("vec_id", "v", F.col("nrm").alias("nv")),
-                q.select("query_id", "qv", "nq").distinct(),
-            ).collect()
-
-        return search, brute
-
-    sim6_search: dict[str, float] = {}
-    sim1_brute: dict[str, float] = {}
-    sim6_k64_1m = None
-    with tempfile.TemporaryDirectory() as tmp:
-        for label, n in SIM_SIZES.items():
-            d = os.path.join(tmp, f"emb_{label}")
-            os.makedirs(d)
-            pq.write_table(
-                gen_embeddings(n, seed=9), os.path.join(d, "embeddings.parquet")
-            )
-            emb = (
-                spark.read.parquet(os.path.join(d, "embeddings.parquet"))
-                .select(
-                    "vec_id",
-                    F.col("embedding").cast("array<double>").alias("v"),
-                )
-                .withColumn("nrm", vec_norm("v"))
-            )
-            search, brute = build_search(emb, 4)
-            sim6_search[label] = _t(search)
-            sim1_brute[label] = _t(brute)
-            print(
-                f"# sim6 {label}: search {sim6_search[label]}s, "
-                f"brute {sim1_brute[label]}s",
-                file=sys.stderr,
-            )
-            if label == "1M":
-                search64, _ = build_search(emb, 64)
-                sim6_k64_1m = _t(search64)
-                print(f"# sim6 1M K=64: {sim6_k64_1m}s", file=sys.stderr)
 
     mm5_auto: dict[str, dict] = {}
     mm5_fixed: dict[str, dict] = {}
@@ -232,11 +90,6 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "sim6_search_sec": sim6_search,
-                "sim1_brute_sec": sim1_brute,
-                "sim6_search_1M_k64_sec": sim6_k64_1m,
-                "sim6_search_exponent": fit_exponent(SIM_SIZES, sim6_search),
-                "sim1_brute_exponent": fit_exponent(SIM_SIZES, sim1_brute),
                 "mm5_auto": mm5_auto,
                 "mm5_fixed_4x16": mm5_fixed,
             }

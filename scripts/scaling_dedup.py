@@ -2,7 +2,7 @@
 
 Generates synthetic corpora of the TESTDATA documents/embeddings shape
 at sf0.1 / sf~0.3 / sf1.0 row counts (5k / 15.8k / 50k documents; 2k /
-6.3k / 20k embeddings), runs dd1-dd7 at each size, and fits the
+6.3k / 20k embeddings), runs dd1-dd5 and dd7 at each size, and fits the
 wall-time-vs-rows scaling exponent per query (log-log least squares).
 Prints one JSON line; the measured exponents are recorded in
 SCALING.md.
@@ -46,7 +46,6 @@ DD_QUERIES = [
     "dd3_minhash_signatures",
     "dd4_minhash_lsh_candidates",
     "dd5_simhash",
-    "dd6_embedding_neardup",
     "dd7_dedup_clusters",
 ]
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import ast
 import importlib
+from collections import Counter
 from pathlib import Path
 
 import inpe_queimadas_etl_spark as pkg
@@ -208,6 +209,60 @@ def test_scripts_import_only_existing_package_names():
     # the scan must find the scripts' imports, or it passes vacuously
     assert checked > 50
     assert broken == []
+
+
+REPO_PYTHON = (
+    *sorted(PKG_DIR.rglob("*.py")),
+    *sorted((REPO / "tests").glob("*.py")),
+    *SCRIPTS,
+)
+
+
+def _referenced_names(node: ast.AST) -> list[str]:
+    """Every name ``node`` mentions: variable names, attribute names,
+    imported names and identifier-shaped string constants (getattr
+    targets, wrap lists)."""
+    out = []
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.append(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.append(n.attr)
+        elif isinstance(n, ast.alias):
+            out.extend(n.name.split("."))
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if n.value.isidentifier():
+                out.append(n.value)
+    return out
+
+
+def test_every_top_level_definition_is_used():
+    """Every undecorated top-level function or class of the package is
+    named somewhere in the repo's Python outside its own body, so a
+    deletion cannot leave a helper behind. Decorated definitions are
+    exempt: ``@query`` registers them."""
+    counts: Counter[str] = Counter()
+    defs = []
+    for path in REPO_PYTHON:
+        tree = ast.parse(path.read_text())
+        counts.update(_referenced_names(tree))
+        if path.is_relative_to(PKG_DIR):
+            defs.extend(
+                (path, node)
+                for node in tree.body
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+            )
+    # the scan must see the package's definitions, or it passes vacuously
+    assert len(defs) > 200
+    orphans = [
+        f"{path.relative_to(REPO)}:{node.lineno}: {node.name}"
+        for path, node in defs
+        if not node.decorator_list
+        and counts[node.name] == _referenced_names(node).count(node.name)
+    ]
+    assert orphans == []
 
 
 def test_query_layer_does_not_import_spark():

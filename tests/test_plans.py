@@ -6,7 +6,7 @@ design must survive refactors, not just the small-SF results.
 - small dims join as BroadcastHashJoin (no fact-side shuffle);
 - no suite query silently degrades to CartesianProduct, and nested-
   loop joins appear only where a bounded cross product is the plan
-  (zero-fill dim x dim, the labeled brute-force ANN baseline).
+  (zero-fill dim x dim, single-row aggregates).
 """
 
 from __future__ import annotations
@@ -25,21 +25,13 @@ SF0001 = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 # Bounded, intentional cross products only:
-#   j7/geo4/geo7 zero-fill a small day x dim grid; sim1 is the labeled
-#   brute-force baseline next to its bucketed scale variants (sim3/4);
-#   sim4 scores every vector against the K-row broadcast codebook;
-#   a11 joins two single-row aggregates; a13 spans legend breaks over
-#   a handful of driver-built rows.
+#   j7/geo4/geo7 zero-fill a small day x dim grid; a11 joins two
+#   single-row aggregates; a13 spans legend breaks over a handful of
+#   driver-built rows.
 NESTED_LOOP_OK = {
     "j7_crossjoin_zerofill",
-    # the battery unions cur7's plan, whose K-row eval-matrix broadcast
-    # crossJoin is the intentional BNLJ pinned by
-    # test_cur7_plan_single_exchange_no_join below
-    "llm_ops_battery",
     "geo4_uf_choropleth_day",
     "geo7_mun_choropleth_day",
-    "sim1_knn_cosine_topk",
-    "sim4_ivf_ann",
     "a11_summary_totals",
     "a13_legend_breaks",
 }
@@ -212,52 +204,6 @@ def test_tx7_model_eval_shuffle_free(spark):
     assert "Exchange" not in plan, f"tx7 gained a shuffle:\n{plan}"
 
 
-def test_sim5_broadcasts_queries_like_sim1(spark):
-    """sim5 must keep sim1's scale shape: the query side broadcast
-    (BroadcastNestedLoopJoin from the crossJoin), never a shuffled
-    join or unbroadcast cartesian of corpus x queries."""
-    from inpe_queimadas_etl_spark.suite.llmdata import sim5_sq8_ann
-
-    plan = _plan(sim5_sq8_ann(spark, SF0001), "simple")
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
-def test_sim6_dequantizes_only_probed_candidates(spark):
-    """sim6's 100-TB contract: the scoring-time reconstruction
-    (zip_with(qv, transform(codes, ...))) must sit ABOVE the cluster
-    probe join — only probed candidates are dequantized — and the
-    probe join must broadcast the query table, never shuffle the code
-    store. Below the join, the corpus side carries only build-time
-    encode work (quantize + stored norm), which a deployment pays
-    once at index build, not per query."""
-    from inpe_queimadas_etl_spark.suite.llmdata import sim6_ivf_sq8_ann
-
-    df = sim6_ivf_sq8_ann(spark, SF0001)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    lines = plan.split("\n")
-    probe_join = next(
-        i for i, l in enumerate(lines) if "Join" in l and "qcluster" in l
-    )
-    assert "strategy=broadcast" in lines[probe_join], lines[probe_join]
-    score_deq = next(
-        i
-        for i, l in enumerate(lines)
-        if "zip_with" in l and "transform(codes" in l
-    )
-    # smaller index = closer to the plan root = above the join
-    assert score_deq < probe_join, (
-        f"scoring dequantize at line {score_deq} is NOT above the probe "
-        f"join at {probe_join}:\n{plan}"
-    )
-    # and the physical plan keeps the store side shuffle-free into the
-    # probe join (queries broadcast; no SortMergeJoin anywhere)
-    phys = _plan(df, "simple")
-    assert "SortMergeJoin" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
-
-
 def test_tx7_broadcast_lookup_plan_shape(spark):
     """tx7's 2^18-bucket variant: the model table joins as a
     BroadcastHashJoin (O(1) bucket probe per word — never a shuffled
@@ -284,35 +230,6 @@ def test_tx7_broadcast_lookup_plan_shape(spark):
     assert "partial_sum" in plan or "HashAggregate" in plan, plan
 
 
-def test_sim6_code_store_build_is_window_free(spark):
-    """sim6's index BUILD must not rank the K-times-expanded corpus
-    through a window (that shuffles ~K x the corpus at build time):
-    the nearest-centroid argmax is a per-row array_max over the
-    collected codebook, so the only shuffle exchange left is the
-    K-row centroid fold itself."""
-    from pyspark.sql import functions as F
-
-    from inpe_queimadas_etl_spark.session import load_table
-    from inpe_queimadas_etl_spark.suite.llmdata import sim6_code_store
-
-    from inpe_queimadas_etl_spark.operators.similarity import vec_norm
-
-    emb = (
-        load_table(spark, SF0001, "embeddings")
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .withColumn("nrm", vec_norm("v"))
-    )
-    plan = _plan(sim6_code_store(emb), "simple")
-    assert "Window" not in plan, f"build ranks via window:\n{plan}"
-    assert "SortMergeJoin" not in plan, plan
-    # one exchange pair for the K-row centroid fold (partial + final
-    # single-partition agg), nothing corpus-sized
-    n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert n_shuffles <= 1, f"corpus-sized exchange in build:\n{plan}"
-
-
 def test_dd10_shuffles_on_uniform_hash_and_doc(spark):
     """dd10's two shuffles must be the designed ones: repeat
     detection partitions on the 60-bit window hash (uniform — no hot
@@ -324,64 +241,6 @@ def test_dd10_shuffles_on_uniform_hash_and_doc(spark):
     assert "CartesianProduct" not in plan, plan
     assert "hashpartitioning(whash" in plan, plan
     assert "hashpartitioning(doc_id" in plan, plan
-
-
-def test_dd12_one_exchange_no_join(spark):
-    """dd12's 100-TB contract: assignment is map-side (collected
-    codebook, Arrow argmax — no join, no Window), and the ONLY
-    corpus-sized exchange is the hash on centroid_id that forms the
-    cluster groups for the Arrow sweep (FlatMapGroupsInPandas). The
-    (n_c)^2 pair volume never materializes as rows — it lives inside
-    the per-cluster numpy block."""
-    from inpe_queimadas_etl_spark.suite.llmdata import dd12_semantic_dedup
-
-    plan = _plan(dd12_semantic_dedup(spark, SF0001), "simple")
-    assert "CartesianProduct" not in plan, plan
-    assert "Window" not in plan, plan
-    assert "Join" not in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
-    assert "hashpartitioning(centroid_id" in plan, plan
-    n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert n_shuffles == 1, f"expected only the grouping exchange:\n{plan}"
-
-
-def test_dd12_ref_pairs_only_within_clusters(spark):
-    """The JVM parity anchor keeps ITS contract too: the only
-    corpus-sized join is the within-cluster self-join — an equi hash
-    on centroid_id, never a global cartesian."""
-    from inpe_queimadas_etl_spark.operators.similarity import vec_norm
-    from inpe_queimadas_etl_spark.session import load_table
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _semantic_dedup_removals_ref,
-    )
-
-    emb = (
-        load_table(spark, SF0001, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nrm", vec_norm("v"))
-    )
-    plan = _plan(_semantic_dedup_removals_ref(emb), "simple")
-    assert "CartesianProduct" not in plan, plan
-    assert "Window" not in plan, plan
-    assert "centroid_id" in plan, plan
-
-
-def test_cur7_zero_exchange_scan_side_scorer(spark):
-    """cur7's 100-TB contract: the eval matrix is collected (small by
-    definition) and the whole scorer — every n x |eval| cosine AND the
-    per-document rollup — runs inside the corpus scan as one Arrow
-    pass (MapInPandas). ZERO exchanges, zero joins: nothing needs
-    grouping because each row's rollup completes in the batch that
-    scanned it."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        cur7_semantic_decontamination,
-    )
-
-    plan = _plan(cur7_semantic_decontamination(spark, SF0001), "simple")
-    assert "Join" not in plan, plan
-    assert "MapInPandas" in plan, plan
-    n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert n_shuffles == 0, f"expected a pure scan-side plan:\n{plan}"
 
 
 def test_tx8_model_joins_broadcast_corpus_never_token_shuffled(spark):
@@ -451,26 +310,6 @@ def test_cur9_takeordered_no_global_sort(spark):
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
-
-
-def test_emb1_encoder_is_zero_exchange_scan(spark):
-    """emb1's 100-TB contract, both forms: the Arrow production path
-    is ONE mapInPandas scan and the JVM reference form is pure
-    expressions — zero exchanges and no explode-induced row blowup
-    in either."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _hashed_doc_vectors_ref,
-        hashed_doc_vectors,
-    )
-    from inpe_queimadas_etl_spark.session import load_table
-
-    docs = load_table(spark, SF0001, "documents").select("doc_id", "text")
-    plan = _plan(hashed_doc_vectors(docs), "simple")
-    assert "Exchange" not in plan, plan
-    assert "MapInPandas" in plan, plan
-    ref_plan = _plan(_hashed_doc_vectors_ref(docs), "simple")
-    assert "Exchange" not in ref_plan, ref_plan
-    assert "MapInPandas" not in ref_plan, ref_plan
 
 
 def test_cur10_eval_broadcasts_corpus_rolls_up_once(spark):

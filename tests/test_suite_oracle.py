@@ -95,9 +95,11 @@ def test_rows_only_queries_run(spark, name):
 
 def test_registry_fits_driver_snapshot_cap():
     """The driver's correctness snapshot records at most 50 queries
-    (VERDICT r3: 58 registered, 50 recorded); the registry must stay at
-    exactly 50 so every registered query gets a driver-green row."""
-    assert len(QUERIES) == 50, sorted(QUERIES)
+    (VERDICT r3: 58 registered, 50 recorded), so every registered query
+    gets a driver-green row only while the registry holds at most 50.
+    The count is pinned exactly, so a registration that appears or
+    vanishes by accident fails here."""
+    assert len(QUERIES) == 45, sorted(QUERIES)
 
 
 def _compare_to_oracle(spark, name, fn, sql):
@@ -325,39 +327,6 @@ def test_tx7_scores_discriminate(spark):
     assert 0 < pdf["quality_pass"].sum() < len(pdf)
 
 
-def test_sim5_sq8_ann_matches_oracle(spark):
-    """sim5 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: int8 scalar-quantized cosine top-k; floor(x+0.5) rounding
-    keeps the quantize->dequantize->score pipeline bit-identical."""
-    from inpe_queimadas_etl_spark.suite.llmdata import SIM5_SQL, sim5_sq8_ann
-
-    _compare_to_oracle(spark, "sim5_sq8_ann", sim5_sq8_ann, SIM5_SQL)
-
-
-def test_sim5_recall_vs_exact(spark):
-    """Measured quality of the 8x-compressed path: top-5 recall vs
-    sim1's exact float results. int8 quantization error is tiny next
-    to the corpus's cos 0.3-0.5 neighbor gaps, so recall should be
-    near-perfect — gate at >= 0.9 overall and require the top-1
-    neighbor to survive for every query."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        sim1_knn_cosine_topk,
-        sim5_sq8_ann,
-    )
-
-    exact = sim1_knn_cosine_topk(spark, SF0001).toPandas()
-    sq = sim5_sq8_ann(spark, SF0001).toPandas()
-    hits = total = 0
-    for qid, grp in exact.groupby("query_id"):
-        want = set(grp["neighbor_id"])
-        got = set(sq[sq["query_id"] == qid]["neighbor_id"])
-        hits += len(want & got)
-        total += len(want)
-        top1 = grp.sort_values("rank").iloc[0]["neighbor_id"]
-        assert top1 in got, (qid, top1, got)
-    assert hits / total >= 0.9, f"sq8 recall {hits}/{total}"
-
-
 def test_mm5_simhash_neardup_matches_oracle(spark):
     """mm5 is unregistered (50-entry snapshot cap) but oracle-checked
     here: frame-level SimHash near-dup over binary payloads, banded
@@ -411,17 +380,6 @@ def test_mm5_finds_exact_and_near_payload_dups(spark):
     assert (0, 2) in pairs.index or (1, 2) in pairs.index
     for b in (0, 1, 2):
         assert (b, 3) not in pairs.index and (3, b) not in pairs.index
-
-def test_sim6_ivf_sq8_matches_oracle(spark):
-    """sim6 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: IVF probing over an int8 code store, dequantize only the
-    probed candidates, shared rerank tail (VERDICT r5 #3)."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        SIM6_SQL,
-        sim6_ivf_sq8_ann,
-    )
-
-    _compare_to_oracle(spark, "sim6_ivf_sq8_ann", sim6_ivf_sq8_ann, SIM6_SQL)
 
 def test_tx7_broadcast_path_matches_literal_and_oracle(spark):
     """The broadcast-lookup tx7 (VERDICT r5 #4) is value-identical to
@@ -574,37 +532,6 @@ def test_dd11_scrubs_exactly_the_planted_run(spark, tmp_path):
         assert r["n_tokens_before"] - r["n_tokens_removed"] == len(
             r["clean_text"].split(" ")
         ) if r["clean_text"] else True
-
-
-def test_dd12_semantic_dedup_matches_oracle(spark):
-    """dd12 is unregistered (50-entry snapshot cap) but oracle-checked
-    here and benched in bench.py: SemDeDup cluster-scoped near-dup
-    pruning with the paper's farthest-from-centroid keeper."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        DD12_SQL,
-        dd12_semantic_dedup,
-    )
-
-    _compare_to_oracle(
-        spark, "dd12_semantic_dedup", dd12_semantic_dedup, DD12_SQL
-    )
-
-
-def test_cur7_semantic_decontamination_matches_oracle(spark):
-    """cur7 is unregistered (50-entry snapshot cap) but oracle-checked
-    here and benched in bench.py: embedding-space decontamination
-    against the label-0 eval slice (cur2's paraphrase-leak twin)."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        CUR7_SQL,
-        cur7_semantic_decontamination,
-    )
-
-    _compare_to_oracle(
-        spark,
-        "cur7_semantic_decontamination",
-        cur7_semantic_decontamination,
-        CUR7_SQL,
-    )
 
 
 def test_tx8_lm_perplexity_matches_oracle(spark):
@@ -883,88 +810,6 @@ def test_cur9_matches_pure_python_mirror(spark):
     assert {d for d, *_ in draw("dsir")} != {
         d for d, *_ in draw("dsir-seed2")
     }, "two salts drew the identical sample on this corpus"
-
-
-def test_emb1_hashed_encoder_matches_oracle(spark):
-    """emb1 is unregistered (50-entry snapshot cap) but oracle-checked
-    here and benched in bench.py: deterministic hashed document
-    encoder digest — dyadic components, so the compare is bit-exact
-    with NO rounding anywhere."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        EMB1_SQL,
-        emb1_hashed_encoder,
-    )
-
-    _compare_to_oracle(
-        spark, "emb1_hashed_encoder", emb1_hashed_encoder, EMB1_SQL
-    )
-
-
-def test_emb1_vectors_compose_with_similarity_tier(spark):
-    """hashed_doc_vectors is a drop-in embedding source: identical
-    texts get identical vectors, distinct texts differ, and the dd12
-    assignment path consumes it unchanged."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from inpe_queimadas_etl_spark.operators.similarity import vec_norm
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _ivf_assign,
-        hashed_doc_vectors,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [0, 1, 2, 3],
-            "text": [
-                "the cat sat on the mat",
-                "the cat sat on the mat",
-                "a completely different document body",
-                "yet another unrelated text here",
-            ],
-        }
-    )
-    v = hashed_doc_vectors(spark.createDataFrame(pdf)).toPandas()
-    vecs = {r["doc_id"]: list(r["v"]) for _, r in v.iterrows()}
-    assert vecs[0] == vecs[1]
-    assert vecs[0] != vecs[2] != vecs[3]
-    assert all(len(x) == 16 for x in vecs.values())
-
-    emb = (
-        hashed_doc_vectors(spark.createDataFrame(pdf))
-        .select(F.col("doc_id").alias("vec_id"), "v")
-        .withColumn("nrm", vec_norm("v"))
-    )
-    assigned = _ivf_assign(emb, 2).toPandas()
-    assert len(assigned) == 4
-    # identical texts land in the same cluster with the same csim
-    byid = assigned.set_index("vec_id")
-    assert byid.loc[0, "centroid_id"] == byid.loc[1, "centroid_id"]
-    assert byid.loc[0, "csim"] == byid.loc[1, "csim"]
-
-
-def test_emb1_arrow_matches_jvm_ref_bitwise(spark):
-    """The Arrow production encoder replays the JVM reference form
-    bit-for-bit: dyadic components make every summation order yield
-    the identical doubles (the lsh_band_buckets parity convention) —
-    asserted with EXACT equality, no tolerance."""
-    from inpe_queimadas_etl_spark.session import load_table
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _hashed_doc_vectors_ref,
-        hashed_doc_vectors,
-    )
-
-    docs = load_table(spark, SF0001, "documents").select("doc_id", "text")
-    fast = {
-        r["doc_id"]: list(r["v"])
-        for r in hashed_doc_vectors(docs).collect()
-    }
-    ref = {
-        r["doc_id"]: list(r["v"])
-        for r in _hashed_doc_vectors_ref(docs).collect()
-    }
-    assert fast == ref
 
 
 def test_tx8_heldout_reference_matches_mirror(spark):
