@@ -127,6 +127,7 @@ TABLE_NAMES = (
     "lineitem",
     "events",
     "documents",
+    "embeddings",
 )
 
 

@@ -49,7 +49,7 @@ def load_all() -> None:
     registration order and historically capped at 50 rows (VERDICT r3
     "What's wrong" #1), so the SURVEY §2 reference-surface modules
     (relational, geo, geomarts) register before the LLM-data-pipeline
-    extensions. The registry holds 45 entries, within that cap
+    extensions. The registry holds 46 entries, within that cap
     (tests/test_suite_oracle.py pins the count).
     """
     from . import relational  # noqa: F401,I001

@@ -1063,6 +1063,40 @@ def tx4_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Embedding profiling
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "sim2_embedding_stats",
+    oracle="""
+    SELECT label,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(max(len(embedding)) AS BIGINT) AS dim,
+           round(avg(sqrt(list_sum(list_transform(
+               CAST(embedding AS DOUBLE[]), x -> x * x)))), 4) AS avg_norm
+    FROM embeddings
+    GROUP BY label
+    """,
+)
+def sim2_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label embedding stats (count, dimensionality, mean L2 norm)
+    — a plain profiling aggregate; fully JVM-side."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    v = F.col("embedding").cast("array<double>")
+    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+    return (
+        emb.withColumn("nrm", norm)
+        .groupBy("label")
+        .agg(
+            F.count("*").alias("n"),
+            F.max(F.size("embedding")).cast("long").alias("dim"),
+            F.round(F.avg("nrm"), 4).alias("avg_norm"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
 # Curation extensions: repetition gates, sampling, packing, PII, heavy
 # hitters — the remaining operators a production training-data pipeline
 # runs between dedup and tokenization.

@@ -54,7 +54,7 @@ def main() -> None:
             if fn is not None:
                 registry.setdefault(name, fn)
 
-    for warm_tbl in ("documents",):
+    for warm_tbl in ("documents", "embeddings"):
         load_table(spark, SF_DIR, warm_tbl).count()
     bench._bw_sample()
 

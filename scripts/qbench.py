@@ -58,7 +58,7 @@ def main() -> None:
     )
     registry.setdefault("j7_crossjoin_zerofill", rel.j7_crossjoin_zerofill)
 
-    for warm_tbl in ("lineitem", "events", "documents"):
+    for warm_tbl in ("lineitem", "events", "documents", "embeddings"):
         load_table(spark, SF_DIR, warm_tbl).count()
 
     bench._bw_sample()  # build + warm the probe kernel

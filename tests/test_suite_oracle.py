@@ -99,7 +99,7 @@ def test_registry_fits_driver_snapshot_cap():
     gets a driver-green row only while the registry holds at most 50.
     The count is pinned exactly, so a registration that appears or
     vanishes by accident fails here."""
-    assert len(QUERIES) == 45, sorted(QUERIES)
+    assert len(QUERIES) == 46, sorted(QUERIES)
 
 
 def _compare_to_oracle(spark, name, fn, sql):
