@@ -1,4 +1,4 @@
-"""Assertion check suites over DataFrames (reference §5).
+"""Assertion check suites over the warehouse tables (reference §5).
 
 Mirrors the reference's layered runtime validation: SQL assertion
 checks (sql/checks/*.sql), per-day pipeline invariants
@@ -11,18 +11,34 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def check_mart_consistency(
-    daily_mun: DataFrame, daily_uf: DataFrame, enriched: DataFrame
-) -> dict:
+_CHECKED = ("mun_checked", "bioma_checked", "uc_checked", "ti_checked")
+
+
+def event_counts(enriched: DataFrame) -> dict:
+    """The event-grain counts the three table checks read, in one
+    aggregate: rows, rows with a municipality and with a biome, and
+    per dimension the rows not marked checked."""
+    row = enriched.agg(
+        F.count("*").alias("n"),
+        F.count("mun_cd_mun").alias("n_mun"),
+        F.count("cd_bioma").alias("n_bio"),
+        *[F.sum(F.when(F.col(c), 0).otherwise(1)).alias(c) for c in _CHECKED],
+    ).collect()[0]
+    return {k: v or 0 for k, v in row.asDict().items()}
+
+
+def check_mart_consistency(daily_mun: pa.Table, daily_uf: pa.Table, events: dict) -> dict:
     """backfill.py:111-123: sum(marts_mun) == sum(marts_uf) ==
-    enriched rows with municipality."""
-    s_mun = daily_mun.agg(F.coalesce(F.sum("n_focos"), F.lit(0))).collect()[0][0]
-    s_uf = daily_uf.agg(F.coalesce(F.sum("n_focos"), F.lit(0))).collect()[0][0]
-    with_mun = enriched.filter(F.col("mun_cd_mun").isNotNull()).count()
+    enriched rows with municipality (``event_counts``)."""
+    s_mun = pc.sum(daily_mun["n_focos"]).as_py() or 0
+    s_uf = pc.sum(daily_uf["n_focos"]).as_py() or 0
+    with_mun = events["n_mun"]
     return {
         "name": "mart_sums_consistent",
         "ok": int(s_mun) == int(s_uf) == int(with_mun),
@@ -33,20 +49,15 @@ def check_mart_consistency(
 
 
 def check_enrichment_coverage(
-    enriched: DataFrame,
+    events: dict,
     min_mun_ratio: float = 0.99,
     min_bioma_ratio: float = 0.90,
 ) -> dict:
     """sql/checks/040_enriched_full_coverage.sql:23-43: >=99% rows
-    attributed to a municipality, >=90% to a biome."""
-    row = enriched.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("mun_cd_mun").isNotNull(), 1).otherwise(0)).alias("n_mun"),
-        F.sum(F.when(F.col("cd_bioma").isNotNull(), 1).otherwise(0)).alias("n_bio"),
-    ).collect()[0]
-    n = row["n"] or 0
-    mun_ratio = (row["n_mun"] or 0) / n if n else 1.0
-    bio_ratio = (row["n_bio"] or 0) / n if n else 1.0
+    attributed to a municipality, >=90% to a biome (``event_counts``)."""
+    n = events["n"]
+    mun_ratio = events["n_mun"] / n if n else 1.0
+    bio_ratio = events["n_bio"] / n if n else 1.0
     return {
         "name": "enrichment_coverage",
         "ok": mun_ratio >= min_mun_ratio and bio_ratio >= min_bioma_ratio,
@@ -55,17 +66,11 @@ def check_enrichment_coverage(
     }
 
 
-def check_checked_flags(enriched: DataFrame) -> dict:
+def check_checked_flags(events: dict) -> dict:
     """sql/enrich/21:54-59 outcome: after an enrich pass every row is
-    marked checked for every dimension, hit or miss."""
-    row = enriched.agg(
-        F.count("*").alias("n"),
-        *[
-            F.sum(F.when(F.col(c), 0).otherwise(1)).alias(c)
-            for c in ("mun_checked", "bioma_checked", "uc_checked", "ti_checked")
-        ],
-    ).collect()[0]
-    bad = sum(row[c] or 0 for c in ("mun_checked", "bioma_checked", "uc_checked", "ti_checked"))
+    marked checked for every dimension, hit or miss
+    (``event_counts``)."""
+    bad = sum(events[c] for c in _CHECKED)
     return {"name": "checked_flags", "ok": bad == 0, "unchecked_rows": int(bad)}
 
 

@@ -140,7 +140,19 @@ def cmd_run(args) -> int:
     )
     for r in results:
         log.info("run ok | %s", json.dumps(r, default=str))
-    return 0
+    failed = [
+        r["report_json"]
+        for r in results
+        if "report_json" in r and not _report_ok(r["report_json"])
+    ]
+    for path in failed:
+        log.error("checks failed | report_json=%s", path)
+    return 1 if failed else 0
+
+
+def _report_ok(report_json: str) -> bool:
+    """The overall status of a written validation report."""
+    return json.loads(Path(report_json).read_text(encoding="utf-8"))["ok"]
 
 
 def cmd_checks(args) -> int:
@@ -152,6 +164,9 @@ def cmd_checks(args) -> int:
     paths = write_validation_report(spark, wh)
     if paths is None:
         log.error("nothing to validate: warehouse has no enriched table")
+        return 1
+    if not _report_ok(paths[1]):
+        log.error("checks failed | report_md=%s report_json=%s", *paths)
         return 1
     log.info("checks ok | report_md=%s report_json=%s", *paths)
     return 0

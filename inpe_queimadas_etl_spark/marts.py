@@ -1,19 +1,28 @@
-"""Mart builders: daily/monthly/period aggregates + trend + fact MV.
+"""Mart builders: the fact MV, daily/monthly aggregates and the trend.
 
 The marts are a tree of rollups (reference sql/marts/*.sql,
-sqlm/marts/canonical/*.sql); each builder is a pure DataFrame
-function of the level below it:
+sqlm/marts/canonical/*.sql). Its root is ``day_cube``, the one Spark
+aggregate: the enriched events of the affected days counted at the
+fact MV's grain (event day x full dimension tuple,
+sqlm/marts/canonical/065_mv_focos_day_dim.sql), with the
+municipality's area, collected with ``toArrow()``. Every level below
+it is a pure pyarrow function of the level above:
 
-- events (the enriched rows of the affected days) -> the five daily
-  marts and the serving fact MV;
+- day cube -> the five daily marts and the serving fact MV;
 - daily municipality / UF marts -> the monthly marts (counts summed,
   names, UF and areas carried by ``max``);
 - daily UF mart -> the moving-average trend and the period stats.
 
-The pipeline persists them partitioned by day/month with dynamic
-partition overwrite — the Spark analog of the reference's
+Each builder returns a table with an explicit schema: the columns,
+types and nullability Spark gave these tables (a ``count(*)`` is
+non-null, a sum read back from parquet is not), so Spark and Arrow
+readers see the same tables whichever engine wrote them. The pipeline
+publishes them partitioned by day/month, replacing exactly the
+partitions they cover — the analog of the reference's
 delete+insert-by-day idempotency (K2/K3).
 
+Rounding parity: ``round_half_up`` rounds like Spark's ``round`` on
+doubles.
 Density formula parity (A1/A3): round(100 * n / nullif(area, 0), 4)
 (sql/marts/10_focos_diario_municipio.sql:44-47).
 Peak tie-break parity (A5/J9): order by n desc, day asc — earliest
@@ -24,79 +33,204 @@ Trend parity (W1): ROWS frames, not RANGE — gaps shrink the window
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the fact MV's grain, in enriched_focos column names
+CUBE_KEYS = (
+    "event_day",
+    "mun_uf",
+    "mun_cd_mun",
+    "mun_nm_mun",
+    "bioma_enr",
+    "cd_bioma",
+    "uc_nome",
+    "cd_cnuc",
+    "ti_nome",
+    "terrai_cod",
+)
 
-def _density(n, area):
-    return F.round(
-        F.lit(100.0) * n / F.when(area == 0, None).otherwise(area), 4
+_STR, _F64, _I64 = pa.string(), pa.float64(), pa.int64()
+
+
+def _counted(nullable: bool) -> pa.Field:
+    return pa.field("n_focos", _I64, nullable)
+
+
+def _mun_schema(key: str, nullable_count: bool) -> pa.Schema:
+    return pa.schema(
+        [
+            (key, pa.date32()),
+            ("mun_cd_mun", _STR),
+            ("mun_nm_mun", _STR),
+            ("mun_uf", _STR),
+            ("mun_area_km2", _F64),
+            _counted(nullable_count),
+            ("focos_por_100km2", _F64),
+        ]
     )
 
 
-def _by_municipality(df: DataFrame, key, n) -> DataFrame:
-    """Count ``n`` per (key, municipality), with the municipality's
+def _uf_schema(key: str, nullable_count: bool) -> pa.Schema:
+    return pa.schema(
+        [
+            (key, pa.date32()),
+            ("uf", _STR),
+            _counted(nullable_count),
+            ("uf_area_km2", _F64),
+            ("focos_por_100km2", _F64),
+        ]
+    )
+
+
+DIARIO_MUNICIPIO = _mun_schema("day", nullable_count=False)
+MENSAL_MUNICIPIO = _mun_schema("month", nullable_count=True)
+DIARIO_UF = _uf_schema("day", nullable_count=False)
+MENSAL_UF = _uf_schema("month", nullable_count=True)
+DIARIO_DIM = pa.schema(
+    [("day", pa.date32()), ("code", _STR), ("name", _STR), pa.field("focos", pa.int32(), False)]
+)
+MV_FOCOS_DAY_DIM = pa.schema(
+    [("day", pa.date32())]
+    + [(c, _STR) for c in ("uf", "cd_mun", "mun_nm_mun", "bioma", "cd_bioma")]
+    + [(c, _STR) for c in ("uc_nome", "cd_cnuc", "ti_nome", "terrai_cod")]
+    + [_counted(False)]
+)
+PERIODO_UF = pa.schema(
+    [
+        ("uf", _STR),
+        ("total_focos", _I64),
+        ("media_diaria", _F64),
+        ("max_diario", _I64),
+        pa.field("dias_com_focos", _I64, False),
+        ("dia_pico", pa.date32()),
+        ("focos_pico", _I64),
+    ]
+)
+DIARIO_UF_TREND = pa.schema(
+    [("day", pa.date32()), ("uf", _STR), _counted(True), ("ma7", _F64), ("ma30", _F64)]
+)
+
+# BigDecimal-like: enough digits that no quantize overflows
+_DECIMAL = Context(prec=400, rounding=ROUND_HALF_UP)
+
+
+def round_half_up(values: pa.Array | pa.ChunkedArray, digits: int) -> pa.Array:
+    """Spark's ``round`` on doubles: HALF_UP on the decimal of each
+    value's shortest repr (``java.math.BigDecimal.valueOf``), so
+    ``1.005`` rounds to ``1.01`` although its binary value lies below
+    the tie. Scaled arithmetic decides every value that is not within
+    a few ulps of a tie; those go through the decimal itself."""
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    x = pc.fill_null(values, 0.0).to_numpy(zero_copy_only=False)
+    scale = 10.0**digits
+    with np.errstate(invalid="ignore"):
+        y = np.abs(x) * scale
+        whole = np.floor(y)
+        frac = y - whole
+        # + 0.0: Spark's decimal has no negative zero
+        out = np.copysign((whole + (frac > 0.5)) / scale, x) + 0.0
+        exact = (np.abs(frac - 0.5) > y * 1e-14) & (y < 2.0**52)
+    quantum = Decimal(1).scaleb(-digits)
+    for i in np.flatnonzero(~exact):
+        v = float(x[i])
+        if math.isfinite(v):
+            out[i] = float(Decimal(repr(v)).quantize(quantum, context=_DECIMAL)) + 0.0
+    return pa.array(out, _F64, mask=values.is_null().to_numpy(zero_copy_only=False))
+
+
+def _density(n, area) -> pa.Array:
+    area = pc.if_else(pc.equal(area, 0.0), pa.scalar(None, _F64), area)
+    return round_half_up(pc.divide(pc.multiply(100.0, pc.cast(n, _F64)), area), 4)
+
+
+def _group(rows: pa.Table, keys: dict[str, str], **aggs: tuple) -> dict:
+    """``rows`` grouped by the ``keys`` columns, as output column ->
+    column. ``keys`` maps output to input names; each keyword is an
+    output column given as a pyarrow aggregation ``(column, function[,
+    options])``."""
+    g = rows.group_by(list(keys.values())).aggregate(list(aggs.values()))
+    return {out: g[col] for out, col in keys.items()} | {
+        out: g[f"{agg[0]}_{agg[1]}"] for out, agg in aggs.items()
+    }
+
+
+def _with_month(daily: pa.Table) -> pa.Table:
+    return daily.append_column("month", pc.floor_temporal(daily["day"], unit="month"))
+
+
+def day_cube(enriched: DataFrame) -> pa.Table:
+    """The marts' one Spark aggregate: ``enriched`` counted per event
+    day and full dimension tuple (CUBE_KEYS), with the largest
+    municipality area of each group, collected with ``toArrow()``."""
+    return (
+        enriched.groupBy(*CUBE_KEYS)
+        .agg(F.count("*").alias("n_focos"), F.max("mun_area_km2").alias("mun_area_km2"))
+        .toArrow()
+    )
+
+
+def _by_municipality(rows: pa.Table, key: str, source_key: str, schema: pa.Schema) -> pa.Table:
+    """Sum ``n_focos`` per (key, municipality), with the municipality's
     name, UF, area and density."""
-    area = F.max("mun_area_km2")
-    return df.groupBy(key, "mun_cd_mun").agg(
-        F.max("mun_nm_mun").alias("mun_nm_mun"),
-        F.max("mun_uf").alias("mun_uf"),
-        area.alias("mun_area_km2"),
-        n.alias("n_focos"),
-        _density(n, area).alias("focos_por_100km2"),
+    cols = _group(
+        rows,
+        {key: source_key, "mun_cd_mun": "mun_cd_mun"},
+        mun_nm_mun=("mun_nm_mun", "max"),
+        mun_uf=("mun_uf", "max"),
+        mun_area_km2=("mun_area_km2", "max"),
+        n_focos=("n_focos", "sum"),
     )
+    cols["focos_por_100km2"] = _density(cols["n_focos"], cols["mun_area_km2"])
+    return pa.table(cols, schema=schema)
 
 
-def focos_diario_municipio(enriched: DataFrame) -> DataFrame:
+def focos_diario_municipio(cube: pa.Table) -> pa.Table:
     """A1 (sql/marts/10_focos_diario_municipio.sql:37-51)."""
-    return _by_municipality(
-        enriched.filter(F.col("mun_cd_mun").isNotNull()),
-        F.col("event_day").alias("day"),
-        F.count("*"),
-    )
+    rows = cube.filter(pc.is_valid(cube["mun_cd_mun"]))
+    return _by_municipality(rows, "day", "event_day", DIARIO_MUNICIPIO)
 
 
-def focos_mensal_municipio(daily_mun: DataFrame) -> DataFrame:
+def focos_mensal_municipio(daily_mun: pa.Table) -> pa.Table:
     """A2 (sql/marts/11_focos_mensal_municipio.sql:37-51), rolled up
     from the daily municipality mart rows of the months it covers."""
-    return _by_municipality(
-        daily_mun, F.trunc("day", "month").alias("month"), F.sum("n_focos")
-    )
+    return _by_municipality(_with_month(daily_mun), "month", "month", MENSAL_MUNICIPIO)
 
 
-def _with_uf_density(df: DataFrame, key: str) -> DataFrame:
-    return df.select(
-        key,
-        "uf",
-        "n_focos",
-        "uf_area_km2",
-        _density(F.col("n_focos"), F.col("uf_area_km2")).alias("focos_por_100km2"),
-    )
+def _with_uf_density(cols: dict, schema: pa.Schema) -> pa.Table:
+    cols["focos_por_100km2"] = _density(cols["n_focos"], cols["uf_area_km2"])
+    return pa.table(cols, schema=schema)
 
 
-def focos_diario_uf(enriched: DataFrame, uf_area: DataFrame) -> DataFrame:
+def focos_diario_uf(cube: pa.Table, uf_area: pa.Table) -> pa.Table:
     """A3 (sql/marts/20_focos_diario_uf.sql:30-43): count per UF joined
     to the UF-area dim (J5) for density."""
-    counts = (
-        enriched.filter(F.col("mun_uf").isNotNull())
-        .groupBy(F.col("event_day").alias("day"), F.col("mun_uf").alias("uf"))
-        .agg(F.count("*").alias("n_focos"))
-    )
-    joined = counts.join(
-        F.broadcast(uf_area.withColumnRenamed("area_km2", "uf_area_km2")), "uf", "left"
-    )
-    return _with_uf_density(joined, "day")
+    rows = cube.filter(pc.is_valid(cube["mun_uf"]))
+    counts = _group(rows, {"day": "event_day", "uf": "mun_uf"}, n_focos=("n_focos", "sum"))
+    areas = uf_area.select(["uf", "area_km2"]).rename_columns(["uf", "uf_area_km2"])
+    joined = pa.table(counts).join(areas, "uf", join_type="left outer")
+    cols = {c: joined[c] for c in ("day", "uf", "n_focos", "uf_area_km2")}
+    return _with_uf_density(cols, DIARIO_UF)
 
 
-def focos_mensal_uf(daily_uf: DataFrame) -> DataFrame:
+def focos_mensal_uf(daily_uf: pa.Table) -> pa.Table:
     """A3 monthly (sql/marts/21_focos_mensal_uf.sql:30-43), rolled up
     from the daily UF mart rows of the months it covers; the UF area
     is the one the daily rows carry."""
-    rolled = daily_uf.groupBy(F.trunc("day", "month").alias("month"), "uf").agg(
-        F.sum("n_focos").alias("n_focos"),
-        F.max("uf_area_km2").alias("uf_area_km2"),
+    cols = _group(
+        _with_month(daily_uf),
+        {"month": "month", "uf": "uf"},
+        n_focos=("n_focos", "sum"),
+        uf_area_km2=("uf_area_km2", "max"),
     )
-    return _with_uf_density(rolled, "month")
+    return _with_uf_density(cols, MENSAL_UF)
 
 
 def ref_uf_area(municipios_dim: DataFrame) -> DataFrame:
@@ -112,75 +246,92 @@ def ref_uf_area(municipios_dim: DataFrame) -> DataFrame:
     )
 
 
-def _focos_by_dim(enriched: DataFrame, code_col: str, name_col: str) -> DataFrame:
+def _focos_by_dim(cube: pa.Table, code_col: str, name_col: str) -> pa.Table:
     """A4 (sql/marts/40/50/60): daily count per biome/UC/TI."""
-    return (
-        enriched.filter(F.col(code_col).isNotNull())
-        .groupBy(F.col("event_day").alias("day"), F.col(code_col).alias("code"))
-        .agg(
-            F.max(name_col).alias("name"),
-            F.count("*").cast("int").alias("focos"),
-        )
+    rows = cube.filter(pc.is_valid(cube[code_col]))
+    cols = _group(
+        rows,
+        {"day": "event_day", "code": code_col},
+        name=(name_col, "max"),
+        focos=("n_focos", "sum"),
     )
+    return pa.table(cols, schema=DIARIO_DIM)
 
 
-def focos_diario_bioma(enriched: DataFrame) -> DataFrame:
-    return _focos_by_dim(enriched, "cd_bioma", "bioma_enr")
+def focos_diario_bioma(cube: pa.Table) -> pa.Table:
+    return _focos_by_dim(cube, "cd_bioma", "bioma_enr")
 
 
-def focos_diario_uc(enriched: DataFrame) -> DataFrame:
-    return _focos_by_dim(enriched, "cd_cnuc", "uc_nome")
+def focos_diario_uc(cube: pa.Table) -> pa.Table:
+    return _focos_by_dim(cube, "cd_cnuc", "uc_nome")
 
 
-def focos_diario_ti(enriched: DataFrame) -> DataFrame:
-    return _focos_by_dim(enriched, "terrai_cod", "ti_nome")
+def focos_diario_ti(cube: pa.Table) -> pa.Table:
+    return _focos_by_dim(cube, "terrai_cod", "ti_nome")
 
 
-def focos_periodo_uf(daily_uf: DataFrame) -> DataFrame:
+def focos_periodo_uf(daily_uf: pa.Table) -> pa.Table:
     """A5 + J9 (sql/marts/40_focos_periodo_uf.sql:22-73): period stats
-    with peak day, earliest day winning count ties."""
-    stats = daily_uf.groupBy("uf").agg(
-        F.sum("n_focos").alias("total_focos"),
-        F.round(F.avg("n_focos"), 2).alias("media_diaria"),
-        F.max("n_focos").alias("max_diario"),
-        F.count("*").alias("dias_com_focos"),
+    with peak day, earliest day winning count ties: the first row of
+    each UF in (n desc, day asc) order."""
+    ranked = daily_uf.sort_by(
+        [("uf", "ascending"), ("n_focos", "descending"), ("day", "ascending")]
     )
-    w = Window.partitionBy("uf").orderBy(F.desc("n_focos"), F.asc("day"))
-    peaks = (
-        daily_uf.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("uf", F.col("day").alias("dia_pico"), F.col("n_focos").alias("focos_pico"))
+    g = ranked.group_by("uf", use_threads=False).aggregate(
+        [
+            ("n_focos", "sum"),
+            ("n_focos", "max"),
+            ("n_focos", "count", pc.CountOptions(mode="all")),
+            ("day", "first"),
+            ("n_focos", "first"),
+        ]
     )
-    return stats.join(peaks, "uf")
+    total, days = g["n_focos_sum"], g["n_focos_count"]
+    mean = pc.divide(pc.cast(total, _F64), pc.cast(days, _F64))
+    cols = {
+        "uf": g["uf"],
+        "total_focos": total,
+        "media_diaria": round_half_up(mean, 2),
+        "max_diario": g["n_focos_max"],
+        "dias_com_focos": days,
+        "dia_pico": g["day_first"],
+        "focos_pico": g["n_focos_first"],
+    }
+    return pa.table(cols, schema=PERIODO_UF)
 
 
-def focos_diario_uf_trend(daily_uf: DataFrame) -> DataFrame:
+def focos_diario_uf_trend(daily_uf: pa.Table) -> pa.Table:
     """W1 (sql/marts/30_focos_diario_uf_trend.sql:27-36): 7/30-day
-    moving averages over ROWS frames."""
-    w7 = Window.partitionBy("uf").orderBy("day").rowsBetween(-6, 0)
-    w30 = Window.partitionBy("uf").orderBy("day").rowsBetween(-29, 0)
-    return daily_uf.select(
-        "day",
-        "uf",
-        "n_focos",
-        F.round(F.avg("n_focos").over(w7), 2).alias("ma7"),
-        F.round(F.avg("n_focos").over(w30), 2).alias("ma30"),
+    moving averages over ROWS frames, per UF in day order."""
+    rows = daily_uf.select(["day", "uf", "n_focos"]).sort_by(
+        [("uf", "ascending"), ("day", "ascending")]
     )
+    ufs = rows["uf"].to_numpy(zero_copy_only=False)
+    n = rows["n_focos"].to_numpy(zero_copy_only=False).astype(np.int64)
+    i = np.arange(len(n))
+    first = np.ones(len(n), dtype=bool)
+    first[1:] = ufs[1:] != ufs[:-1]
+    start = np.maximum.accumulate(np.where(first, i, 0))
+    csum = np.concatenate([[0], np.cumsum(n)])
+
+    def moving_avg(width: int) -> pa.Array:
+        lo = np.maximum(i - (width - 1), start)
+        return round_half_up(pa.array((csum[i + 1] - csum[lo]) / (i + 1 - lo), _F64), 2)
+
+    cols = {
+        "day": rows["day"],
+        "uf": rows["uf"],
+        "n_focos": rows["n_focos"],
+        "ma7": moving_avg(7),
+        "ma30": moving_avg(30),
+    }
+    return pa.table(cols, schema=DIARIO_UF_TREND)
 
 
-def mv_focos_day_dim(enriched: DataFrame) -> DataFrame:
+def mv_focos_day_dim(cube: pa.Table) -> pa.Table:
     """A8 (sqlm/marts/canonical/065_mv_focos_day_dim.sql:5-20): the
-    serving fact MV — count by day x full dimension tuple. The API
-    queries read this table, never the event table."""
-    return enriched.groupBy(
-        F.col("event_day").alias("day"),
-        F.col("mun_uf").alias("uf"),
-        F.col("mun_cd_mun").alias("cd_mun"),
-        "mun_nm_mun",
-        F.col("bioma_enr").alias("bioma"),
-        "cd_bioma",
-        "uc_nome",
-        "cd_cnuc",
-        "ti_nome",
-        "terrai_cod",
-    ).agg(F.count("*").alias("n_focos"))
+    serving fact MV — count by day x full dimension tuple, which is
+    the cube's own grain. The API queries read this table, never the
+    event table."""
+    names = zip(MV_FOCOS_DAY_DIM.names, (*CUBE_KEYS, "n_focos"))
+    return pa.table({out: cube[col] for out, col in names}, schema=MV_FOCOS_DAY_DIM)

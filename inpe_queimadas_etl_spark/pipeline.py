@@ -22,16 +22,17 @@ A batch runs in four steps:
    result (``localCheckpoint``) once. When ``curated_focos`` exists,
    the pinned rows are anti-joined on ``event_hash`` against its
    partitions of the batch's file dates, and the new rows are pinned
-   too. One group-by collect gives the new rows per event day;
+   too. ``marts.day_cube`` counts them at the fact MV's grain into an
+   Arrow table, which gives the new-row count and the affected event
+   days;
 2. the new rows are merged with the prior rows of the affected event
-   days (``enriched_days``, pinned);
-3. the tables are published in two waves of concurrent Spark jobs
-   (``_run_concurrently``): first ``enriched_focos``, the five daily
-   marts and the fact MV, each from ``enriched_days``; then the two
-   monthly marts, which roll up the published daily marts of the
-   affected months, and the trend over the whole daily UF mart. The
-   waves are separated by a barrier, and each wave's tables are
-   independent of each other;
+   days (``enriched_days``, pinned), and those are cubed again;
+3. two driver threads publish (``_run_concurrently``): one Spark job
+   writes ``enriched_focos`` from ``enriched_days``; pyarrow rolls the
+   cube up into the five daily marts and the fact MV, then the
+   published daily marts of the affected months into the two monthly
+   marts, and the whole daily UF mart into the trend, and publishes
+   each without Spark. Both finish before an error surfaces;
 4. ``curated_focos`` is appended alone and last.
 
 ``run_range`` feeds a multi-day date range through the same
@@ -50,6 +51,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,7 +226,7 @@ class Warehouse:
         if not (tmp / "_SUCCESS").exists():
             raise PublishAuditError(
                 f"staged write for {table!r} has no _SUCCESS marker: "
-                "the Spark job did not commit; live table untouched"
+                "the write did not commit; live table untouched"
             )
         import pyarrow.parquet as pq
 
@@ -245,28 +248,36 @@ class Warehouse:
             d for d in tmp.iterdir() if d.is_dir() and "=" in d.name
         )
 
-    def overwrite_partitions(self, df: DataFrame, table: str, partition_col: str) -> None:
-        """K2/K3: replace only the partitions present in df, via
+    def overwrite_partitions(
+        self, rows: DataFrame | pa.Table, table: str, partition_col: str
+    ) -> None:
+        """K2/K3: replace only the partitions present in ``rows``, via
         write-audit-publish. Each partition directory swaps in with
         two atomic renames (old -> _trash, staged -> live); a crash
         between swaps leaves every partition either fully-old or
-        fully-new, never partial."""
+        fully-new, never partial. An Arrow table is staged without
+        Spark, and its audit also checks its exact row count."""
         import shutil
 
         self._gc_stale(table)
         tmp = self._stage_dir(table)
-        # staging dir is fresh, so static overwrite is correct — and
-        # unlike the dynamic committer it writes the _SUCCESS marker
-        # the audit requires as commit evidence. One task per partition
-        # value writes one file per partition.
-        (
-            df.repartition(partition_col)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(partition_col)
-            .parquet(str(tmp))
-        )
-        staged_parts = self._audit_staged(tmp, table)
+        expected_rows = None
+        if isinstance(rows, pa.Table):
+            _stage_arrow(rows, tmp, partition_col)
+            expected_rows = rows.num_rows
+        else:
+            # staging dir is fresh, so static overwrite is correct — and
+            # unlike the dynamic committer it writes the _SUCCESS marker
+            # the audit requires as commit evidence. One task per
+            # partition value writes one file per partition.
+            (
+                rows.repartition(partition_col)
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "static")
+                .partitionBy(partition_col)
+                .parquet(str(tmp))
+            )
+        staged_parts = self._audit_staged(tmp, table, expected_rows)
         # Publish-phase marker: from here the staged output is audited
         # good, so _gc_stale rolls an interrupted swap loop FORWARD
         # (completes the remaining swaps) instead of discarding it —
@@ -294,16 +305,23 @@ class Warehouse:
             w = df.repartition(partition_col).write.mode("append").partitionBy(partition_col)
         w.parquet(self.path(table))
 
-    def overwrite(self, df: DataFrame, table: str) -> None:
+    def overwrite(self, rows: DataFrame | pa.Table, table: str) -> None:
         """K5 truncate+reload, via write-audit-publish: the staged dir
         swaps in whole (old table -> _trash, staged -> live) so readers
-        see the old table until the instant the new one is complete."""
+        see the old table until the instant the new one is complete. An
+        Arrow table is staged without Spark, and its audit also checks
+        its exact row count."""
         import shutil
 
         self._gc_stale(table)
         tmp = self._stage_dir(table)
-        df.write.mode("overwrite").parquet(str(tmp))
-        self._audit_staged(tmp, table)
+        expected_rows = None
+        if isinstance(rows, pa.Table):
+            _stage_arrow(rows, tmp)
+            expected_rows = rows.num_rows
+        else:
+            rows.write.mode("overwrite").parquet(str(tmp))
+        self._audit_staged(tmp, table, expected_rows)
 
         live = self.root / table
         trash = self.root / "_trash" / tmp.name
@@ -312,6 +330,41 @@ class Warehouse:
             live.rename(trash)
         tmp.rename(live)
         shutil.rmtree(trash, ignore_errors=True)
+
+
+def _stage_arrow(rows: pa.Table, tmp: Path, partition_col: str | None = None) -> None:
+    """Write ``rows`` into the fresh staging dir ``tmp`` as Spark lays
+    a table out: one zstd parquet file per ``partition_col=value``
+    directory (the column itself lives in the directory name), or one
+    file, then the ``_SUCCESS`` commit marker."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    name = f"part-00000-{uuid.uuid4()}.c000.zstd.parquet"
+    tmp.mkdir(parents=True)
+    if partition_col is None:
+        pq.write_table(rows, tmp / name, compression="zstd")
+    else:
+        keys = rows[partition_col]
+        body = rows.drop_columns([partition_col])
+        for value in pc.unique(keys).to_pylist():
+            part = tmp / f"{partition_col}={value}"
+            part.mkdir()
+            pq.write_table(body.filter(pc.equal(keys, value)), part / name, compression="zstd")
+    (tmp / "_SUCCESS").touch()
+
+
+def _read_arrow(warehouse: Warehouse, table: str, where=None) -> pa.Table | None:
+    """A day-partitioned table read with ``pyarrow.dataset``, only the
+    partitions that ``where`` (an expression on ``day``) selects; None
+    while the table has no file."""
+    import pyarrow.dataset as ds
+
+    if not warehouse.exists(table):
+        return None
+    day = ds.partitioning(pa.schema([("day", pa.date32())]), flavor="hive")
+    return ds.dataset(warehouse.path(table), partitioning=day).to_table(filter=where)
 
 
 def _run_concurrently(tasks: list) -> list:
@@ -401,8 +454,8 @@ def process_batch(
     if existing is not None:
         file_dates = sorted({d for d, _ in day_files})
         enriched_new = not_loaded(batch, existing, file_dates).localCheckpoint(eager=True)
-    new_per_day = enriched_new.groupBy("event_day").count().collect()
-    n_new = sum(r["count"] for r in new_per_day)
+    cube = marts.day_cube(enriched_new)
+    n_new = pc.sum(cube["n_focos"]).as_py() or 0
 
     metrics = {
         "rows_in_batch": n_new if existing is None else batch.count(),
@@ -414,7 +467,7 @@ def process_batch(
     fresh = enriched_new.select(*CURATED_FOCOS.names)
 
     # spillover: recompute every event day touched by this batch
-    affected_days = sorted(r["event_day"] for r in new_per_day)
+    affected_days = sorted(set(cube["event_day"].to_pylist()))
     day_strs = [str(d) for d in affected_days]
     prior = warehouse.read(spark, "enriched_focos")
     if prior is not None:
@@ -432,57 +485,49 @@ def process_batch(
         )
     else:
         enriched_days = enriched_new
-
-    def publish_days(build, table: str, *args):
-        return lambda: warehouse.overwrite_partitions(
-            build(enriched_days, *args), table, "day"
-        )
-
-    # wave 1: the tables of the affected days, each from enriched_days,
-    # which holds exactly what the enriched partitions now hold
-    _run_concurrently(
-        [
-            lambda: warehouse.overwrite_partitions(
-                enriched_days, "enriched_focos", "event_day"
-            ),
-            publish_days(marts.focos_diario_municipio, "focos_diario_municipio"),
-            publish_days(marts.focos_diario_uf, "focos_diario_uf", dims["uf_area"]),
-            publish_days(marts.focos_diario_bioma, "focos_diario_bioma"),
-            publish_days(marts.focos_diario_uc, "focos_diario_uc"),
-            publish_days(marts.focos_diario_ti, "focos_diario_ti"),
-            publish_days(marts.mv_focos_day_dim, "mv_focos_day_dim"),
-        ]
-    )
-
-    # wave 2: roll up the daily marts wave 1 published. A daily mart
-    # that has no file yet (every batch so far unattributed: Spark
-    # writes no file for an empty partitioned frame) has nothing to
-    # roll up.
     affected_months = sorted({dt.date(d.year, d.month, 1) for d in affected_days})
-    month_strs = [str(m) for m in affected_months]
 
-    def monthly(build, daily: str, table: str):
-        def publish():
-            rows = warehouse.read(spark, daily)
+    def publish_marts():
+        # the pinned rows, never enriched_focos: its partitions are being
+        # swapped by the concurrent publish
+        days_cube = cube if prior is None else marts.day_cube(enriched_days)
+        daily = {
+            "focos_diario_municipio": marts.focos_diario_municipio(days_cube),
+            "focos_diario_uf": marts.focos_diario_uf(days_cube, dims["uf_area"].toArrow()),
+            "focos_diario_bioma": marts.focos_diario_bioma(days_cube),
+            "focos_diario_uc": marts.focos_diario_uc(days_cube),
+            "focos_diario_ti": marts.focos_diario_ti(days_cube),
+            "mv_focos_day_dim": marts.mv_focos_day_dim(days_cube),
+        }
+        for table, rows in daily.items():
+            warehouse.overwrite_partitions(rows, table, "day")
+        # the monthly marts roll up the published daily rows of the
+        # affected months. A daily mart that has no file yet (every
+        # batch so far unattributed) has nothing to roll up.
+        day = pc.field("day")
+        in_months = None
+        for m in affected_months:
+            end = dt.date(m.year + m.month // 12, m.month % 12 + 1, 1)
+            month = (day >= m) & (day < end)
+            in_months = month if in_months is None else in_months | month
+        for build, source, table in (
+            (marts.focos_mensal_municipio, "focos_diario_municipio", "focos_mensal_municipio"),
+            (marts.focos_mensal_uf, "focos_diario_uf", "focos_mensal_uf"),
+        ):
+            rows = _read_arrow(warehouse, source, in_months)
             if rows is not None:
-                in_months = F.trunc("day", "month").cast("string").isin(month_strs)
-                warehouse.overwrite_partitions(build(rows.filter(in_months)), table, "month")
-
-        return publish
-
-    def trend():
+                warehouse.overwrite_partitions(build(rows), table, "month")
         # full recompute over the whole daily UF mart — a small aggregate
-        daily_uf = warehouse.read(spark, "focos_diario_uf")
+        daily_uf = _read_arrow(warehouse, "focos_diario_uf")
         if daily_uf is not None:
             warehouse.overwrite(marts.focos_diario_uf_trend(daily_uf), "focos_diario_uf_trend")
 
+    # Spark publishes the events while the driver publishes the marts;
+    # both finish before an error surfaces
     _run_concurrently(
         [
-            monthly(
-                marts.focos_mensal_municipio, "focos_diario_municipio", "focos_mensal_municipio"
-            ),
-            monthly(marts.focos_mensal_uf, "focos_diario_uf", "focos_mensal_uf"),
-            trend,
+            lambda: warehouse.overwrite_partitions(enriched_days, "enriched_focos", "event_day"),
+            publish_marts,
         ]
     )
 
@@ -492,7 +537,7 @@ def process_batch(
     metrics.update(
         {
             "affected_days": day_strs,
-            "affected_months": month_strs,
+            "affected_months": [str(m) for m in affected_months],
             "seconds": round(time.perf_counter() - t0, 3),
         }
     )
@@ -541,39 +586,40 @@ def write_validation_report(
     """Post-run check sweep + artifact write (reference
     validate_marts.py:81-122,283-301): runs the table-level checks over
     the warehouse and leaves docs/validation_last_run.md +
-    logs/last_run.json under the warehouse root. Returns both paths, or
-    None when no enriched table exists yet (nothing to validate)."""
+    logs/last_run.json under the warehouse root. The event-grain
+    checks read one Spark aggregate of ``enriched_focos``; the mart
+    sums and last-day counts come from the two daily marts, read as
+    Arrow. Returns both paths, or None when no enriched table exists
+    yet (nothing to validate)."""
     from . import checks as C
 
     enriched = warehouse.read(spark, "enriched_focos")
     if enriched is None:
         return None
 
-    def daily_mart(table: str) -> DataFrame:
+    def daily_mart(table: str) -> pa.Table:
         # no file yet (every batch so far unattributed): an empty mart
-        mart = warehouse.read(spark, table)
-        return spark.createDataFrame([], "day date, n_focos long") if mart is None else mart
+        mart = _read_arrow(warehouse, table)
+        if mart is None:
+            empty = {"day": pa.array([], pa.date32()), "n_focos": pa.array([], pa.int64())}
+            return pa.table(empty)
+        return mart
 
     daily_mun = daily_mart("focos_diario_municipio")
     daily_uf = daily_mart("focos_diario_uf")
+    events = C.event_counts(enriched)
+    results = [
+        C.check_mart_consistency(daily_mun, daily_uf, events),
+        C.check_enrichment_coverage(events),
+        C.check_checked_flags(events),
+    ]
 
-    def last_day_rows(daily: DataFrame):
-        def count():
-            day = daily.agg(F.max("day")).collect()[0][0]
-            return day, daily.filter(F.col("day") == day).count()
+    def last_day_rows(daily: pa.Table):
+        # last-day counts section (validate_marts.py _fetch_counts analog)
+        day = pc.max(daily["day"])
+        return day.as_py(), pc.sum(pc.equal(daily["day"], day)).as_py() or 0
 
-        return count
-
-    *results, (uf_day, uf_rows), (mun_day, mun_rows) = _run_concurrently(
-        [
-            lambda: C.check_mart_consistency(daily_mun, daily_uf, enriched),
-            lambda: C.check_enrichment_coverage(enriched),
-            lambda: C.check_checked_flags(enriched),
-            # last-day counts section (validate_marts.py _fetch_counts analog)
-            last_day_rows(daily_uf),
-            last_day_rows(daily_mun),
-        ]
-    )
+    (uf_day, uf_rows), (mun_day, mun_rows) = last_day_rows(daily_uf), last_day_rows(daily_mun)
     report = C.run_checks(results)
     counts = {"uf_day": uf_day, "uf_rows": uf_rows, "mun_day": mun_day, "mun_rows": mun_rows}
     return C.write_run_report(

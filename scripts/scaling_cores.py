@@ -45,15 +45,11 @@ SF01 = "/root/testdata/sf0.1"
 def _gen_big(dir_: str) -> None:
     import pyarrow.parquet as pq_
 
-    from scaling_dedup import EMB_RATIO, gen_documents, gen_embeddings
+    from scaling_dedup import gen_documents
 
     pq_.write_table(
         gen_documents(BIG_DOCS, seed=42),
         os.path.join(dir_, "documents.parquet"),
-    )
-    pq_.write_table(
-        gen_embeddings(int(BIG_DOCS * EMB_RATIO), seed=42),
-        os.path.join(dir_, "embeddings.parquet"),
     )
 
 

@@ -1,8 +1,8 @@
 """sf1.0 scaling validation for the dedup family (VERDICT r3 #5).
 
-Generates synthetic corpora of the TESTDATA documents/embeddings shape
-at sf0.1 / sf~0.3 / sf1.0 row counts (5k / 15.8k / 50k documents; 2k /
-6.3k / 20k embeddings), runs dd1-dd5 and dd7 at each size, and fits the
+Generates synthetic corpora of the TESTDATA documents shape at sf0.1 /
+sf~0.3 / sf1.0 row counts (5k / 15.8k / 50k documents), runs dd1-dd5
+and dd7 at each size, and fits the
 wall-time-vs-rows scaling exponent per query (log-log least squares).
 Prints one JSON line; the measured exponents are recorded in
 SCALING.md.
@@ -38,8 +38,6 @@ VOCAB = [f"w{i}" for i in range(10_000)]
 ZIPF_A = 1.3
 LANGS = ["en", "en", "en", "es", "fr", "pt", "zh"]  # en-heavy, 5 distinct
 SIZES = {"0.1": 5_000, "0.3": 15_811, "1.0": 50_000}
-EMB_RATIO = 0.4  # embeddings rows = 0.4 * documents rows (testdata shape)
-EMB_DIM = 64
 DD_QUERIES = [
     "dd1_exact_dedup",
     "dd2_ngram_jaccard_pairs",
@@ -84,35 +82,6 @@ def gen_documents(n: int, seed: int) -> pa.Table:
     )
 
 
-def gen_embeddings(n: int, seed: int) -> pa.Table:
-    rng = np.random.default_rng(seed + 1)
-    labels = rng.integers(0, 10, size=n)
-    centroids = rng.normal(0, 1, size=(10, EMB_DIM))
-    # Cluster spread calibrated so same-cluster cosine sits BELOW the
-    # dd6 verify floor (~c^2/(c^2+sigma^2) ~ 0.29 at sigma=1.55): the
-    # near-dup output is then the injected 2 % jittered-copy tail, i.e.
-    # O(n), matching the driver testdata's ~0.8 % pair rate. Tighter
-    # clusters make the OUTPUT itself quadratic (measured: sigma=1.0
-    # yields millions of genuinely >= 0.35 pairs at 20k vectors) — at
-    # that point no candidate structure can save the operator, which is
-    # the adversarial regime recorded in SCALING.md.
-    vecs = centroids[labels] + rng.normal(0, 1.55, size=(n, EMB_DIM))
-    # 2% near-dup vectors: tiny jitter of an earlier vector
-    n_dup = n // 50
-    src = rng.integers(0, max(1, n - n_dup), size=n_dup)
-    vecs[n - n_dup :] = vecs[src] + rng.normal(0, 1e-3, size=(n_dup, EMB_DIM))
-    return pa.table(
-        {
-            "vec_id": pa.array(range(n), type=pa.int64()),
-            "embedding": pa.array(
-                [v.astype(np.float32) for v in vecs],
-                type=pa.list_(pa.float32()),
-            ),
-            "label": pa.array(labels.astype(np.int32), type=pa.int32()),
-        }
-    )
-
-
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from inpe_queimadas_etl_spark.session import get_spark
@@ -137,10 +106,6 @@ def main() -> None:
             d = os.path.join(tmp, f"sf{sf}")
             os.makedirs(d)
             pq.write_table(gen_documents(n, seed=42), os.path.join(d, "documents.parquet"))
-            pq.write_table(
-                gen_embeddings(int(n * EMB_RATIO), seed=42),
-                os.path.join(d, "embeddings.parquet"),
-            )
             dirs[sf] = d
 
         # JVM/codegen warm-up at the smallest size

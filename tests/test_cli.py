@@ -148,6 +148,45 @@ def test_run_single_day_then_resume_and_checks(spark, dims_dir, tmp_path):
     assert cli.main(["checks", "--warehouse", wh_dir]) == 0
 
 
+def test_checks_fail_when_the_report_fails(spark, dims_dir, tmp_path):
+    """`checks` and `run --checks` exit 1 when the report they just
+    wrote is not ok, as `validate-repo` does."""
+    import shutil
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    # every row attributed; the last one is an event of the day before
+    write_fixture_csv(
+        str(landing / "focos_diario_br_20240502.csv"),
+        G.FOCOS_HEADER,
+        G.FOCOS_ROWS[:8],
+        sep=";",
+    )
+    wh_dir = str(tmp_path / "wh")
+    run = [
+        "run",
+        "--date",
+        "2024-05-02",
+        "--landing-dir",
+        str(landing),
+        "--warehouse",
+        wh_dir,
+        "--dims-dir",
+        dims_dir,
+        "--checks",
+    ]
+    assert cli.main(run) == 0
+    assert cli.main(["checks", "--warehouse", wh_dir]) == 0
+
+    # the UF mart loses a day: its sum no longer matches the others
+    shutil.rmtree(Warehouse(wh_dir).root / "focos_diario_uf" / "day=2024-05-01")
+    assert cli.main(["checks", "--warehouse", wh_dir]) == 1
+    report = json.loads((Warehouse(wh_dir).root / "logs" / "last_run.json").read_text())
+    assert not report["ok"]
+    # a replay publishes nothing and writes the same failing report
+    assert cli.main(run) == 1
+
+
 def test_run_errors_without_files_or_range(tmp_path, dims_dir):
     empty = tmp_path / "empty"
     empty.mkdir()

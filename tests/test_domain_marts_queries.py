@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -32,8 +33,18 @@ def uf_area(spark):
 
 
 @pytest.fixture(scope="module")
-def fact_df(enriched):
-    return marts.mv_focos_day_dim(enriched).cache()
+def day_cube(enriched):
+    return marts.day_cube(enriched)
+
+
+@pytest.fixture(scope="module")
+def uf_area_arrow(uf_area):
+    return uf_area.toArrow()
+
+
+@pytest.fixture(scope="module")
+def fact_df(spark, day_cube):
+    return spark.createDataFrame(marts.mv_focos_day_dim(day_cube)).cache()
 
 
 @pytest.fixture(scope="module")
@@ -53,20 +64,20 @@ def cube(fact_df, all_ufs, enriched):
     return fact_cube(fact_df, all_ufs, enriched)
 
 
-def test_daily_municipio_counts_and_density(enriched):
-    daily = marts.focos_diario_municipio(enriched)
-    m100 = daily.filter("mun_cd_mun = 'm100' and day = date'2024-05-02'").collect()[0]
+def test_daily_municipio_counts_and_density(day_cube):
+    daily = marts.focos_diario_municipio(day_cube).to_pylist()
+    [m100] = [r for r in daily if r["mun_cd_mun"] == "m100" and r["day"] == dt.date(2024, 5, 2)]
     assert m100["n_focos"] == 4  # 0.55, 0.30, empty-ts, KNN point
     assert m100["focos_por_100km2"] == round(100.0 * 4 / 100.0, 4)
     # zero-area municipality -> null density (nullif semantics)
-    m103 = daily.filter("mun_cd_mun = 'm103'").collect()[0]
+    [m103] = [r for r in daily if r["mun_cd_mun"] == "m103"]
     assert m103["focos_por_100km2"] is None
 
 
-def test_daily_uf_counts(enriched, uf_area):
-    daily = marts.focos_diario_uf(enriched, uf_area)
+def test_daily_uf_counts(day_cube, uf_area_arrow):
+    daily = marts.focos_diario_uf(day_cube, uf_area_arrow)
     rows = {
-        (str(r["day"]), r["uf"]): r["n_focos"] for r in daily.collect()
+        (str(r["day"]), r["uf"]): r["n_focos"] for r in daily.to_pylist()
     }
     assert rows[("2024-05-02", "AA")] == 6  # m100x3 + m101 + m103 + knn
     assert rows[("2024-05-01", "AA")] == 1  # spillover day
@@ -74,48 +85,77 @@ def test_daily_uf_counts(enriched, uf_area):
     assert rows[("2024-05-02", "CC")] == 2
 
 
-def test_mart_sum_invariant(enriched, uf_area):
-    from inpe_queimadas_etl_spark.checks import check_mart_consistency
+def test_mart_sum_invariant(enriched, day_cube, uf_area_arrow):
+    from inpe_queimadas_etl_spark.checks import check_mart_consistency, event_counts
 
     res = check_mart_consistency(
-        marts.focos_diario_municipio(enriched),
-        marts.focos_diario_uf(enriched, uf_area),
-        enriched,
+        marts.focos_diario_municipio(day_cube),
+        marts.focos_diario_uf(day_cube, uf_area_arrow),
+        event_counts(enriched),
     )
     assert res["ok"], res
 
 
-def test_periodo_peak_tie_earliest_day(spark):
+def _daily_uf(rows: list[tuple]) -> pa.Table:
+    """Daily UF mart rows (day, uf, n_focos)."""
+    day, uf, n = zip(*rows)
+    return pa.table(
+        {"day": pa.array(day, pa.date32()), "uf": list(uf), "n_focos": pa.array(n, pa.int64())}
+    )
+
+
+def test_periodo_peak_tie_earliest_day():
     """J9 tie-break: equal counts on two days -> earliest day wins
     (sql/marts/40_focos_periodo_uf.sql:41-47)."""
-    daily = spark.createDataFrame(
+    daily = _daily_uf(
         [
             (dt.date(2024, 5, 3), "AA", 5),
             (dt.date(2024, 5, 1), "AA", 5),
             (dt.date(2024, 5, 2), "AA", 2),
-        ],
-        "day date, uf string, n_focos long",
+        ]
     )
-    row = marts.focos_periodo_uf(daily).collect()[0]
+    row = marts.focos_periodo_uf(daily).to_pylist()[0]
     assert str(row["dia_pico"]) == "2024-05-01"
     assert row["total_focos"] == 12
     assert row["media_diaria"] == 4.0
 
 
-def test_trend_rows_frame_with_gap(spark):
+def test_trend_rows_frame_with_gap():
     """W1: ROWS frame means a gap day shrinks the window, it does not
     zero-fill (sql/marts/30:27-36)."""
-    daily = spark.createDataFrame(
+    daily = _daily_uf(
         [
             (dt.date(2024, 5, 1), "AA", 2),
             (dt.date(2024, 5, 2), "AA", 4),
             # gap on 05-03
             (dt.date(2024, 5, 4), "AA", 6),
-        ],
-        "day date, uf string, n_focos long",
+        ]
     )
-    rows = {str(r["day"]): r for r in marts.focos_diario_uf_trend(daily).collect()}
+    rows = {str(r["day"]): r for r in marts.focos_diario_uf_trend(daily).to_pylist()}
     assert rows["2024-05-04"]["ma7"] == 4.0  # (2+4+6)/3 over ROWS, not days
+
+
+@pytest.mark.parametrize("digits", [2, 4])
+def test_round_half_up_matches_spark_round(spark, digits):
+    """The Arrow builders round like Spark's round on doubles: HALF_UP
+    on the value's shortest decimal (Spark gives 1.01 for 1.005, 0.29
+    for 0.285 and 12.3457 for 12.34565 at 4 digits, though each lies
+    below its tie in binary), exact binary ties (0.125, 0.21875) away
+    from zero; nulls stay null."""
+    import random
+
+    rnd = random.Random(7)
+    values = [1.005, 0.285, 12.34565, 0.125, 0.21875, -0.125, -1.005, 2.5, 0.0, -0.001, None]
+    values += [100.0 * rnd.randint(1, 60) / round(rnd.uniform(0.5, 9000.0), 3) for _ in range(300)]
+    values += [rnd.randint(1, 400) / rnd.randint(1, 30) for _ in range(300)]
+    want = [
+        r[0]
+        for r in spark.createDataFrame([(v,) for v in values], "x double")
+        .select(F.round("x", digits))
+        .collect()
+    ]
+    got = marts.round_half_up(pa.array(values, pa.float64()), digits).to_pylist()
+    assert got == want
 
 
 def test_timeseries_granularity_thresholds():
