@@ -125,25 +125,16 @@ def round_half_up(values: pa.Array | pa.ChunkedArray, digits: int) -> pa.Array:
     """Spark's ``round`` on doubles: HALF_UP on the decimal of each
     value's shortest repr (``java.math.BigDecimal.valueOf``), so
     ``1.005`` rounds to ``1.01`` although its binary value lies below
-    the tie. Scaled arithmetic decides every value that is not within
-    a few ulps of a tie; those go through the decimal itself."""
-    if isinstance(values, pa.ChunkedArray):
-        values = values.combine_chunks()
-    x = pc.fill_null(values, 0.0).to_numpy(zero_copy_only=False)
-    scale = 10.0**digits
-    with np.errstate(invalid="ignore"):
-        y = np.abs(x) * scale
-        whole = np.floor(y)
-        frac = y - whole
-        # + 0.0: Spark's decimal has no negative zero
-        out = np.copysign((whole + (frac > 0.5)) / scale, x) + 0.0
-        exact = (np.abs(frac - 0.5) > y * 1e-14) & (y < 2.0**52)
+    the tie. Nulls, NaN and infinities pass through."""
     quantum = Decimal(1).scaleb(-digits)
-    for i in np.flatnonzero(~exact):
-        v = float(x[i])
-        if math.isfinite(v):
-            out[i] = float(Decimal(repr(v)).quantize(quantum, context=_DECIMAL)) + 0.0
-    return pa.array(out, _F64, mask=values.is_null().to_numpy(zero_copy_only=False))
+
+    def one(v):
+        if v is None or not math.isfinite(v):
+            return v
+        # + 0.0: Spark's decimal has no negative zero
+        return float(Decimal(repr(v)).quantize(quantum, context=_DECIMAL)) + 0.0
+
+    return pa.array([one(v) for v in values.to_pylist()], _F64)
 
 
 def _density(n, area) -> pa.Array:

@@ -305,23 +305,17 @@ class Warehouse:
             w = df.repartition(partition_col).write.mode("append").partitionBy(partition_col)
         w.parquet(self.path(table))
 
-    def overwrite(self, rows: DataFrame | pa.Table, table: str) -> None:
+    def overwrite(self, rows: pa.Table, table: str) -> None:
         """K5 truncate+reload, via write-audit-publish: the staged dir
         swaps in whole (old table -> _trash, staged -> live) so readers
-        see the old table until the instant the new one is complete. An
-        Arrow table is staged without Spark, and its audit also checks
-        its exact row count."""
+        see the old table until the instant the new one is complete.
+        The audit also checks the staged row count."""
         import shutil
 
         self._gc_stale(table)
         tmp = self._stage_dir(table)
-        expected_rows = None
-        if isinstance(rows, pa.Table):
-            _stage_arrow(rows, tmp)
-            expected_rows = rows.num_rows
-        else:
-            rows.write.mode("overwrite").parquet(str(tmp))
-        self._audit_staged(tmp, table, expected_rows)
+        _stage_arrow(rows, tmp)
+        self._audit_staged(tmp, table, rows.num_rows)
 
         live = self.root / table
         trash = self.root / "_trash" / tmp.name
@@ -346,25 +340,34 @@ def _stage_arrow(rows: pa.Table, tmp: Path, partition_col: str | None = None) ->
     if partition_col is None:
         pq.write_table(rows, tmp / name, compression="zstd")
     else:
-        keys = rows[partition_col]
+        # one stable sort, then each partition is a slice of it. Nulls
+        # sort last and are written nowhere: the row-count audit fails.
+        rows = rows.sort_by(partition_col)
         body = rows.drop_columns([partition_col])
-        for value in pc.unique(keys).to_pylist():
-            part = tmp / f"{partition_col}={value}"
-            part.mkdir()
-            pq.write_table(body.filter(pc.equal(keys, value)), part / name, compression="zstd")
+        start = 0
+        for run in pc.value_counts(rows[partition_col]).to_pylist():
+            if run["values"] is not None:
+                part = tmp / f"{partition_col}={run['values']}"
+                part.mkdir()
+                pq.write_table(body.slice(start, run["counts"]), part / name, compression="zstd")
+            start += run["counts"]
     (tmp / "_SUCCESS").touch()
 
 
-def _read_arrow(warehouse: Warehouse, table: str, where=None) -> pa.Table | None:
-    """A day-partitioned table read with ``pyarrow.dataset``, only the
-    partitions that ``where`` (an expression on ``day``) selects; None
-    while the table has no file."""
+def _read_arrow(
+    warehouse: Warehouse, table: str, where=None, columns: list[str] | None = None
+) -> pa.Table | None:
+    """A day-partitioned table read with ``pyarrow.dataset``: only the
+    partitions that ``where`` (an expression on ``day``) selects, and
+    only ``columns`` when given; None while the table has no file."""
     import pyarrow.dataset as ds
 
     if not warehouse.exists(table):
         return None
     day = ds.partitioning(pa.schema([("day", pa.date32())]), flavor="hive")
-    return ds.dataset(warehouse.path(table), partitioning=day).to_table(filter=where)
+    return ds.dataset(warehouse.path(table), partitioning=day).to_table(
+        columns=columns, filter=where
+    )
 
 
 def _run_concurrently(tasks: list) -> list:
@@ -599,7 +602,7 @@ def write_validation_report(
 
     def daily_mart(table: str) -> pa.Table:
         # no file yet (every batch so far unattributed): an empty mart
-        mart = _read_arrow(warehouse, table)
+        mart = _read_arrow(warehouse, table, columns=["day", "n_focos"])
         if mart is None:
             empty = {"day": pa.array([], pa.date32()), "n_focos": pa.array([], pa.int64())}
             return pa.table(empty)

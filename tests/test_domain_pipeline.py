@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -600,14 +601,14 @@ class TestWriteAuditPublish:
         """Same for overwrite(): live renamed to _trash but the staged
         table never swapped in — the whole-table backup restores."""
         wh = self._seed(spark, tmp_path)
-        df = spark.createDataFrame([("x", 1)], "a string, b int")
+        df = pa.table({"a": ["x"], "b": pa.array([1], pa.int32())})
         wh.overwrite(df, "trend")
         live = wh.root / "trend"
         trash = wh.root / "_trash" / ("trend__" + "c" * 32)
         trash.parent.mkdir(parents=True, exist_ok=True)
         live.rename(trash)
         assert not live.exists()
-        df2 = spark.createDataFrame([("y", 2)], "a string, b int")
+        df2 = pa.table({"a": ["y"], "b": pa.array([2], pa.int32())})
         # _gc_stale runs first: restores the backup, then the new
         # overwrite replaces it normally
         wh.overwrite(df2, "trend")
@@ -638,10 +639,6 @@ class TestWriteAuditPublish:
         it publishes like a Spark write, and a row that lands in no
         partition (a null partition value) fails the row-count audit
         with the live table untouched."""
-        import datetime as dt
-
-        import pyarrow as pa
-
         from inpe_queimadas_etl_spark.pipeline import PublishAuditError
 
         wh = self._seed(spark, tmp_path)
@@ -864,10 +861,10 @@ class TestWriteAuditPublish:
 
     def test_full_overwrite_swaps_whole_table(self, spark, tmp_path):
         wh = self._seed(spark, tmp_path)
-        df = spark.createDataFrame([("x", 1)], "a string, b int")
+        df = pa.table({"a": ["x"], "b": pa.array([1], pa.int32())})
         wh.overwrite(df, "trend")
         assert wh.read(spark, "trend").count() == 1
-        df2 = spark.createDataFrame([("y", 2), ("z", 3)], "a string, b int")
+        df2 = pa.table({"a": ["y", "z"], "b": pa.array([2, 3], pa.int32())})
         wh.overwrite(df2, "trend")
         got = {(r["a"], r["b"]) for r in wh.read(spark, "trend").collect()}
         assert got == {("y", 2), ("z", 3)}
