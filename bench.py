@@ -60,9 +60,6 @@ HEADLINE = [
     "tx2_token_counts",
     "tx6_ngram_topk",
     "pack1_token_packing",
-    "geo1_point_in_polygon_grid",
-    "geo8_dense_pip",
-    "geo4_uf_choropleth_day",
     "cur5_mixture_resample",
     "cur6_leakfree_split",
     "card1_corpus_manifest",
@@ -73,7 +70,6 @@ HEADLINE = [
     "cur9_dsir_resample",
     "tx9_bpe_tokenize",
     "cur10_substring_decontamination",
-    "mm5_simhash_neardup",
 ]
 
 TRANSFORM_ROWS = 100_000
@@ -93,7 +89,6 @@ _EXTRA_RUNS = {
 UNREGISTERED = (
     "p7_stable_event_hash",
     "j7_crossjoin_zerofill",
-    "geo8_dense_pip",
     "dd8_passage_dedup",
     "dd9_canonical_keeper",
     "dd10_duplicate_spans",
@@ -108,7 +103,6 @@ UNREGISTERED = (
     "cur9_dsir_resample",
     "tx9_bpe_tokenize",
     "cur10_substring_decontamination",
-    "mm5_simhash_neardup",
 )
 
 
@@ -300,11 +294,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
-    # p7 and geo8 are benched but intentionally unregistered (the suite
-    # registry is capped at 50 entries to fit the driver's correctness
-    # snapshot; p7 is value-checked inside micro_ops_battery, geo8 in
-    # tests/test_suite_oracle.py).
-    from inpe_queimadas_etl_spark.suite.geo import geo8_dense_pip
+    # p7 is benched but intentionally unregistered (the suite registry
+    # is capped at 50 entries to fit the driver's correctness snapshot;
+    # p7 is value-checked inside micro_ops_battery).
     from inpe_queimadas_etl_spark.suite.llmdata import (
         card1_corpus_manifest,
         cur5_mixture_resample,
@@ -321,7 +313,6 @@ def main() -> None:
         tx9_bpe_tokenize,
         cur10_substring_decontamination,
     )
-    from inpe_queimadas_etl_spark.suite.multimodal import mm5_simhash_neardup
     from inpe_queimadas_etl_spark.suite.relational import (
         j7_crossjoin_zerofill,
         p7_stable_event_hash,
@@ -331,7 +322,6 @@ def main() -> None:
     # j7 left the 50-slot registry in round 7 (slot went to
     # llm_ops_battery) but stays benched as an r1-comparable anchor
     queries.setdefault("j7_crossjoin_zerofill", j7_crossjoin_zerofill)
-    queries.setdefault("geo8_dense_pip", geo8_dense_pip)
     queries.setdefault("dd8_passage_dedup", dd8_passage_dedup)
     queries.setdefault("dd9_canonical_keeper", dd9_canonical_keeper)
     queries.setdefault("dd10_duplicate_spans", dd10_duplicate_spans)
@@ -348,7 +338,6 @@ def main() -> None:
     queries.setdefault(
         "tx7_broadcast_quality_score", tx7_broadcast_quality_score
     )
-    queries.setdefault("mm5_simhash_neardup", mm5_simhash_neardup)
 
     # Warm the JVM / session (codegen, parquet footer reads) so the
     # first timed query measures the plan, not session startup; keeps

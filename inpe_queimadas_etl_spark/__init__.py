@@ -7,9 +7,9 @@ curated and deduplicated, enriched by point-in-polygon, rolled up
 into marts, published to a partitioned warehouse and served to a
 dashboard. Alongside it sits a training-corpus materialization
 (``corpus_pipeline`` over the ``corpus_ops`` dedup, curation, split,
-selection and packing operators) and the kernel suite: dedup,
-text-analysis and multimodal operators, each checked against a
-DuckDB oracle.
+selection and packing operators) and the kernel suite: relational,
+dedup and text-analysis operators, each checked against a DuckDB
+oracle.
 
 Layout
 ------
@@ -25,13 +25,14 @@ Layout
                  curation, spatial attribution and the mart rollups.
 - ``pipeline``   the batch orchestration and the warehouse publish.
 - ``queries`` / ``geoqueries`` / ``api`` / ``serving_cache``
-                 the dashboard read path and its HTTP front.
+                 the dashboard read path and its HTTP front;
+                 ``geoprep`` builds the UF shapes it draws from the
+                 web municipality shapes.
 - ``cli``        ``run``, ``checks``, ``validate-repo`` and
                  ``corpus-curate``.
 - ``operators``  reusable distributed operators: geo joins and
                  geometry, BPE, rolling window hashes, mixture
-                 resampling, pack materialization, passage dedup,
-                 multimodal column plumbing.
+                 resampling, pack materialization, passage dedup.
 - ``corpus_pipeline`` / ``corpus_ops``
                  the training-corpus materialization behind
                  ``corpus-curate`` and the operators it composes.

@@ -19,6 +19,9 @@ In-process, like the reference's API process. Building an
 (queries.FactCube); every request then answers from that cube without
 a Spark job, and keeps answering from it after a later publish
 replaces the files it was read from. A new context sees the new data.
+The geometry routes read the PolyFeature dims the context is given
+(``feats``, ``mun_web_feats``) in Python, so they start no Spark job
+either.
 """
 
 from __future__ import annotations
@@ -33,7 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import geoqueries as GQ
 from . import queries as Q
-from .geoprep import latest_uf_geometry
+from .geoprep import build_uf_geo_chain
+from .operators.geometry import coords_json
 from .serving_cache import ServingCache, cache_key_params, cached, points_cache_key
 
 
@@ -41,21 +45,21 @@ from .serving_cache import ServingCache, cache_key_params, cached, points_cache_
 class ApiContext:
     """Everything the endpoints read. ``feats`` maps entity kind
     ('uf' | 'mun' | 'uc' | 'ti') to its PolyFeature list (the geometry
-    dims); entities without geometry may be absent. Construction
-    collects ``fact``, ``all_ufs``, the points columns of ``enriched``
-    and the latest UF shapes of ``chart_uf`` into ``cube`` and
-    ``uf_geometry``; the endpoints read those, never the DataFrames."""
+    dims); entities without geometry may be absent, and
+    /api/lookup/mun reads ``feats['mun']``. Construction collects
+    ``fact``, ``all_ufs`` and the points columns of ``enriched`` into
+    ``cube``; the endpoints read it, never the DataFrames.
+
+    ``mun_web_feats`` (the web municipality PolyFeature list,
+    geoprep.municipios_web) opts both choropleths into GeoJSON: the
+    municipal map draws it, and construction derives ``uf_geometry``
+    (uf -> poly_coords JSON) from it through the prereq chain."""
 
     spark: SparkSession
     fact: DataFrame  # mv_focos_day_dim shape
     all_ufs: DataFrame  # one row per UF (zero-fill dim)
     enriched: DataFrame | None = None  # for /api/points
     feats: dict[str, list] = field(default_factory=dict)
-    mun_web: DataFrame | None = None  # for /api/lookup/mun
-    # optional geometry tables for GeoJSON choropleths: the
-    # v_chart_uf_choropleth_day view (uf, day, n_focos, poly_coords)
-    # and the web municipality PolyFeature list
-    chart_uf: DataFrame | None = None
     mun_web_feats: list | None = None
     cache: ServingCache = field(default_factory=ServingCache)
     cube: Q.FactCube = field(init=False, repr=False)
@@ -64,10 +68,10 @@ class ApiContext:
     def __post_init__(self):
         self.cube = fact_cube(self.fact, self.all_ufs, self.enriched)
         self.uf_geometry = None
-        if self.chart_uf is not None:
+        if self.mun_web_feats is not None:
             self.uf_geometry = {
-                r["uf"]: r["poly_coords"]
-                for r in latest_uf_geometry(self.chart_uf).collect()
+                uf: coords_json(c)
+                for uf, c in build_uf_geo_chain(self.mun_web_feats).items()
             }
 
 
@@ -224,9 +228,10 @@ def _ep_choropleth_mun(ctx: ApiContext, params: dict) -> dict:
 
 
 def _ep_lookup_mun(ctx: ApiContext, params: dict) -> dict:
-    if ctx.mun_web is None:
+    feats = ctx.feats.get("mun")
+    if not feats:
         raise LookupError("municipality geometry table not loaded")
-    return GQ.lookup_mun(ctx.mun_web, ctx.cube, params.get("key", ""))
+    return GQ.lookup_mun(feats, ctx.cube, params.get("key", ""))
 
 
 def _ep_bounds(ctx: ApiContext, params: dict) -> dict:
@@ -383,7 +388,7 @@ def serve(
 
     Handler threads come from a fixed ``max_workers`` pool rather than
     ThreadingHTTPServer's thread-per-connection: a slow handler (a
-    large points payload, a geometry union, the lookup's dim probe)
+    large points payload, a geometry union)
     makes further requests queue (cheap socket + task entry) instead
     of stacking an unbounded pile of handler threads in one process
     (VERDICT r4 #8)."""

@@ -74,74 +74,6 @@ def check_checked_flags(events: dict) -> dict:
     return {"name": "checked_flags", "ok": bad == 0, "unchecked_rows": int(bad)}
 
 
-def check_uf_polycoords_superset(polycoords: DataFrame, expected_ufs: int) -> dict:
-    """sql/checks/010 check A: exactly N UFs in the polycoords MV (27
-    in production; the fixture count here), none with a null ring."""
-    n = polycoords.count()
-    nulls = polycoords.filter(F.col("poly_coords").isNull()).count()
-    return {
-        "name": "uf_polycoords_superset",
-        "ok": n == expected_ufs and nulls == 0,
-        "rows": n,
-        "nulls": nulls,
-        "expected": expected_ufs,
-    }
-
-
-def check_chart_uf_days(
-    chart_uf: DataFrame, daily_uf: DataFrame, expected_ufs: int
-) -> dict:
-    """sql/checks/010 checks B-D over the UF choropleth chart view:
-    every day carries exactly N UF rows (B), poly_coords never null
-    (C), and the view's latest-day total equals the mart table's (D)."""
-    bad_days = (
-        chart_uf.groupBy("day")
-        .count()
-        .filter(F.col("count") != expected_ufs)
-        .count()
-    )
-    nulls = chart_uf.filter(F.col("poly_coords").isNull()).count()
-    last_day = daily_uf.agg(F.max("day")).collect()[0][0]
-    sum_tbl = (
-        daily_uf.filter(F.col("day") == last_day)
-        .agg(F.coalesce(F.sum("n_focos"), F.lit(0)))
-        .collect()[0][0]
-    )
-    sum_view = (
-        chart_uf.filter(F.col("day") == last_day)
-        .agg(F.coalesce(F.sum("n_focos"), F.lit(0)))
-        .collect()[0][0]
-    )
-    return {
-        "name": "chart_uf_days",
-        "ok": bad_days == 0 and nulls == 0 and int(sum_tbl) == int(sum_view),
-        "bad_days": int(bad_days),
-        "null_polycoords": int(nulls),
-        "last_day": str(last_day),
-        "sum_table": int(sum_tbl),
-        "sum_view": int(sum_view),
-    }
-
-
-def check_mun_polycoords(chart_mun: DataFrame) -> dict:
-    """sql/checks/020 + 060 over the municipality choropleth chart
-    view: the latest day has >= 1 municipality, zero null poly_coords,
-    and the viz column populated."""
-    last_day = chart_mun.agg(F.max("day")).collect()[0][0]
-    last = chart_mun.filter(F.col("day") == last_day)
-    n_mun = last.select("cd_mun").distinct().count()
-    nulls = last.filter(F.col("poly_coords").isNull()).count()
-    n_viz = last.filter(F.col("n_focos_viz").isNotNull()).count()
-    return {
-        "name": "mun_polycoords",
-        "ok": n_mun >= 1 and nulls == 0 and n_viz >= 1,
-        "last_day": str(last_day),
-        "distinct_mun": int(n_mun),
-        "null_polycoords": int(nulls),
-        "viz_rows": int(n_viz),
-    }
-
-
 # Tables a fully-run warehouse must carry — the Spark analog of the
 # reference's REQUIRED_SQL_FILES manifest (validate_repo.py:25-53: its
 # SQL files ARE its executable surface; here the surface is these

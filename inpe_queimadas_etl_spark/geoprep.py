@@ -1,6 +1,6 @@
-"""Geometry prep pipeline + geometry-bearing marts (dim side).
+"""Geometry prep chain (dim side), pure Python.
 
-Spark analog of the reference's geometry build chain:
+Analog of the reference's geometry build chain:
 
 - `ref.ibge_municipios_web`: simplified municipality polygons
   (sql/ref/00_ref_geo_prepare.sql:17-33, st_simplifypreservetopology
@@ -12,47 +12,32 @@ Spark analog of the reference's geometry build chain:
 - `marts.mv_uf_mainland_poly_noholes`: exterior ring only
   (sqlm/marts/prereq/020:8-20);
 - `marts.mv_uf_polycoords_polygon_superset`: GeoJSON coordinates per
-  UF (sqlm/marts/prereq/030:4);
-- `marts.v_chart_uf_choropleth_day` / `v_chart_mun_choropleth_day`
-  (sqlm/marts/canonical/040,050);
-- `marts.geo_focos_diario_municipio` / `_uf` (sql/marts/90,91 — J6).
+  UF (sqlm/marts/prereq/030:4).
 
-Split of labor, by size: polygon geometry ops (simplify, dissolve,
-mainland, holes, coords emit) run DRIVER-side on the <=5,570-feature
-dims via operators/geometry.py — the exact analog of the reference
-doing this work once, dim-side, in PostGIS, never per-fact-row. The
-emitted small tables (uf, poly_coords / bbox / area) become
-DataFrames that join facts via broadcast; the fact side stays
-partitioned and shuffles only for its own aggregates.
+The polygon ops (simplify, dissolve, mainland, holes, coords emit) run
+on the driver over the <=5,570-feature dims via operators/geometry.py,
+the analog of the reference doing this work once, dim-side, in
+PostGIS, never per fact row. The serving context takes the UF shapes
+from :func:`build_uf_geo_chain`; the reference's chart view carries
+the same shapes on every day row (sqlm/marts/canonical/040), so the
+latest row per UF there is the chain's output here.
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 from .operators.geo import PolyFeature
-from .session import local_df
 from .operators.geometry import (
     canonicalize_feature,
-    coords_json,
     dissolve,
     drop_holes,
-    feature_area_m2,
     largest_part,
     polygon_coords,
     simplify_feature,
 )
 
 WEB_SIMPLIFY_TOL_DEG = 0.001  # sql/ref/00_ref_geo_prepare.sql:31
-
-
-# ---------------------------------------------------------------------------
-# driver-side dim builders (PolyFeature -> PolyFeature)
-# ---------------------------------------------------------------------------
 
 
 def municipios_web(
@@ -114,204 +99,7 @@ def uf_polycoords(noholes: dict[str, PolyFeature]) -> dict[str, list]:
     }
 
 
-def build_uf_geo_chain(
-    muns: list[PolyFeature], tol_deg: float = WEB_SIMPLIFY_TOL_DEG
-) -> dict[str, list]:
-    """municipality dims -> web -> dissolve -> mainland -> noholes ->
-    poly_coords, the full prereq MV chain."""
-    return uf_polycoords(
-        uf_mainland_noholes(uf_geom_mainland(ufs_web(municipios_web(muns, tol_deg))))
-    )
-
-
-# ---------------------------------------------------------------------------
-# dim DataFrames (the broadcastable outputs)
-# ---------------------------------------------------------------------------
-
-_POLYCOORDS_SCHEMA = T.StructType(
-    [
-        T.StructField("uf", T.StringType(), False),
-        T.StructField("poly_coords", T.StringType(), False),
-    ]
-)
-
-
-def uf_polycoords_df(spark: SparkSession, coords: dict[str, list]) -> DataFrame:
-    """marts.mv_uf_polycoords_polygon_superset as a DataFrame
-    (uf, poly_coords JSON string)."""
-    rows = [(uf, coords_json(c)) for uf, c in sorted(coords.items())]
-    return local_df(spark, rows, _POLYCOORDS_SCHEMA)
-
-
-_MUN_WEB_SCHEMA = T.StructType(
-    [
-        T.StructField("cd_mun", T.StringType(), False),
-        T.StructField("nm_mun", T.StringType(), True),
-        T.StructField("uf", T.StringType(), True),
-        T.StructField("area_km2", T.DoubleType(), True),
-        T.StructField("poly_coords", T.StringType(), False),
-    ]
-)
-
-
-def mun_web_df(spark: SparkSession, mun_web: list[PolyFeature]) -> DataFrame:
-    """ref.ibge_municipios_web as a DataFrame. Multi-part
-    municipalities are reduced to their largest-part exterior ring
-    exactly like the chart view's inline largest-part subquery
-    (050_v_chart_mun_choropleth_day.sql:17-31)."""
-    by_id: dict[str, list[PolyFeature]] = defaultdict(list)
-    for f in mun_web:
-        by_id[f.poly_id].append(f)
-    rows = []
-    for cd_mun, parts in sorted(by_id.items()):
-        best = drop_holes(largest_part(parts))
-        p = parts[0].props
-        rows.append(
-            (
-                cd_mun,
-                p.get("nm_mun"),
-                None if p.get("uf") is None else str(p.get("uf")),
-                None if p.get("area_km2") is None else float(p.get("area_km2")),
-                coords_json(polygon_coords(canonicalize_feature(best))),
-            )
-        )
-    return local_df(spark, rows, _MUN_WEB_SCHEMA)
-
-
-def ufs_web_df(
-    spark: SparkSession, ufs: dict[str, list[PolyFeature]]
-) -> DataFrame:
-    """ref.ibge_ufs_web as a DataFrame (uf, area_km2, poly_coords of
-    the multipolygon parts)."""
-    from .operators.geometry import multipolygon_coords
-
-    rows = []
-    for uf, parts in sorted(ufs.items()):
-        area = parts[0].props.get("area_km2")
-        coords = multipolygon_coords([canonicalize_feature(p) for p in parts])
-        rows.append(
-            (uf, None if area is None else float(area), coords_json(coords))
-        )
-    schema = T.StructType(
-        [
-            T.StructField("uf", T.StringType(), False),
-            T.StructField("area_km2", T.DoubleType(), True),
-            T.StructField("poly_coords", T.StringType(), False),
-        ]
-    )
-    return local_df(spark, rows, schema)
-
-
-# ---------------------------------------------------------------------------
-# chart views + geo marts (Spark side)
-# ---------------------------------------------------------------------------
-
-
-def v_chart_uf_choropleth_day(
-    daily_uf: DataFrame, polycoords: DataFrame
-) -> DataFrame:
-    """J7 + geometry (sqlm/marts/canonical/040): distinct days x the
-    27-UF polycoords superset, left-joined facts, zero-fill, and the
-    0.000001 log-scale viz floor. The polycoords side is dim-sized ->
-    broadcast; the only shuffle is the distinct over days."""
-    days = daily_uf.select("day").distinct()
-    dense = (
-        days.crossJoin(F.broadcast(polycoords))
-        .join(daily_uf.select("day", "uf", "n_focos"), ["day", "uf"], "left")
-        .withColumn("n_focos", F.coalesce(F.col("n_focos"), F.lit(0)).cast("long"))
-    )
-    return dense.select(
-        "day",
-        "uf",
-        "n_focos",
-        F.when(F.col("n_focos") == 0, F.lit(0.000001))
-        .otherwise(F.col("n_focos").cast("double"))
-        .alias("n_focos_viz"),
-        "poly_coords",
-    )
-
-
-def v_chart_mun_choropleth_day(
-    daily_mun: DataFrame, mun_web: DataFrame
-) -> DataFrame:
-    """sqlm/marts/canonical/050: daily municipality mart joined to the
-    web geometry dim (largest-part no-holes poly_coords), n_focos > 0
-    rows only, with the same viz floor."""
-    base = (
-        daily_mun.filter(F.col("n_focos").isNotNull() & (F.col("n_focos") > 0))
-        .select(
-            "day",
-            F.col("mun_cd_mun").alias("cd_mun"),
-            F.col("n_focos").cast("long").alias("n_focos"),
-        )
-        .join(
-            F.broadcast(
-                mun_web.select(
-                    F.col("cd_mun"),
-                    F.col("nm_mun").alias("mun_nm_mun"),
-                    "poly_coords",
-                )
-            ),
-            "cd_mun",
-        )
-    )
-    return base.select(
-        "day",
-        "cd_mun",
-        "mun_nm_mun",
-        "poly_coords",
-        "n_focos",
-        F.when(F.col("n_focos") == 0, F.lit(0.000001))
-        .otherwise(F.col("n_focos").cast("double"))
-        .alias("n_focos_viz"),
-    )
-
-
-def geo_focos_diario_municipio(
-    daily_mun: DataFrame, mun_web: DataFrame
-) -> DataFrame:
-    """J6 (sql/marts/90_geo_focos_diario_municipio.sql): daily mun mart
-    joined to web geometries — broadcast equi join on cd_mun."""
-    return (
-        daily_mun.select(
-            "day",
-            F.col("mun_cd_mun").alias("cd_mun"),
-            F.col("n_focos").cast("int").alias("n_focos"),
-        )
-        .join(F.broadcast(mun_web), "cd_mun")
-        .select(
-            "day", "uf", "cd_mun", "nm_mun", "n_focos", "poly_coords", "area_km2"
-        )
-    )
-
-
-def geo_focos_diario_uf(daily_uf: DataFrame, ufs_web: DataFrame) -> DataFrame:
-    """J6 UF variant (sql/marts/91_geo_focos_diario_uf.sql)."""
-    return (
-        daily_uf.select("day", "uf", F.col("n_focos").cast("int").alias("n_focos"))
-        .join(F.broadcast(ufs_web), "uf")
-        .select(
-            "day",
-            "uf",
-            F.lit(None).cast("string").alias("cd_mun"),
-            F.lit(None).cast("string").alias("nm_mun"),
-            "n_focos",
-            "poly_coords",
-            "area_km2",
-        )
-    )
-
-
-def latest_uf_geometry(chart_uf: DataFrame) -> DataFrame:
-    """J10 (api/app/main.py:961-968): `distinct on (uf) ...
-    order by uf, day desc` over the chart view -> one latest
-    poly_coords row per UF via a row_number window."""
-    w = Window.partitionBy("uf").orderBy(F.desc("day"))
-    return (
-        chart_uf.filter(
-            F.col("uf").isNotNull() & F.col("poly_coords").isNotNull()
-        )
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("uf", "poly_coords")
-    )
+def build_uf_geo_chain(mun_web: list[PolyFeature]) -> dict[str, list]:
+    """web municipality polygons (:func:`municipios_web`) -> dissolve
+    -> mainland -> noholes -> poly_coords, the prereq MV chain."""
+    return uf_polycoords(uf_mainland_noholes(uf_geom_mainland(ufs_web(mun_web))))

@@ -10,13 +10,12 @@ its union->makevalid->simplify QA pipeline).
 The polygon work runs driver-side on the dim features (<= 5,570
 shapes, exactly the scale PostGIS handled per request); fact
 aggregates read the serving context's fact cube (queries.FactCube)
-with the same range/filter rules as the non-geometry endpoints. Only
-the municipality lookup probes a DataFrame (the geometry dim).
-Divergence
-note: the reference's bbox_ratio divides a degree-squared bbox area
-by a m^2 polygon area (main.py:781-783); this engine computes both in
-m^2 so the ratio is the dimensionless bbox-overestimate factor the
->50 warning was plainly intended to test.
+with the same range/filter rules as the non-geometry endpoints; no
+query here touches Spark. Divergence note: the reference's bbox_ratio
+divides a degree-squared bbox area by a m^2 polygon area
+(main.py:781-783); this engine computes both in m^2 so the ratio is
+the dimensionless bbox-overestimate factor the >50 warning was
+plainly intended to test.
 """
 
 from __future__ import annotations
@@ -25,9 +24,6 @@ import datetime as dt
 import hashlib
 import json
 import math
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .functions.geojson import to_feature
 from .functions.labels import clean_display_label
@@ -97,29 +93,23 @@ def bounds(feats: list[PolyFeature], key: str, uf: str | None = None) -> dict:
     }
 
 
-def lookup_mun(mun_web: DataFrame, cube: FactCube, key: str) -> dict:
-    """/api/lookup/mun (main.py:1133-1208): geometry-dim key probe,
-    named by the fact's max(mun_nm_mun) for the key over all days (the
-    reference's left join, main.py:1165-1180); UF upper-cased."""
-    key_norm = (key or "").strip()
+def lookup_mun(mun_feats: list[PolyFeature], cube: FactCube, key: str) -> dict:
+    """/api/lookup/mun (main.py:1133-1208): geometry-dim key probe over
+    the municipality features, named by the fact's max(mun_nm_mun) for
+    the key over all days (the reference's left join,
+    main.py:1165-1180); UF from the feature, upper-cased."""
+    key_norm, sel = _key_feats(mun_feats, key)
     if not key_norm:
         raise ValueError("key is required")
-    rows = (
-        mun_web.filter(F.col("cd_mun").cast("string") == key_norm)
-        .select(F.col("cd_mun").cast("string").alias("mun"), "uf")
-        .limit(1)
-        .collect()
-    )
-    if not rows:
+    if not sel:
         raise LookupError("municipality not found")
-    row = rows[0]
     _, mun_nome = cube.dims["mun"].code_total(slice(None), cube.n, key_norm)
-    uf = (row["uf"] or "").upper()
+    uf = str(sel[0].props.get("uf") or "").upper()
     if not uf:
         raise LookupError("municipality uf not found")
     return {
-        "mun": str(row["mun"]),
-        "mun_nome": str(mun_nome or row["mun"]),
+        "mun": key_norm,
+        "mun_nome": str(mun_nome or key_norm),
         "uf": uf,
         "uf_nome": uf,
     }
@@ -290,10 +280,11 @@ def choropleth_uf_geo(
 ) -> tuple[list[dict], dict]:
     """/api/choropleth/uf with geometry (main.py:930-1017): the latest
     poly_coords per UF (J10, ``uf_geometry``: uf -> poly_coords JSON,
-    geoprep.latest_uf_geometry collected) left-joined to the filtered
-    aggregate, zero-filled, mean_per_day over the range. Returns the
-    rows (uf, n_focos, mean_per_day, poly_coords ordered by uf) plus
-    the {geojson, legend} response dict."""
+    which ApiContext builds with geoprep.build_uf_geo_chain)
+    left-joined to the filtered aggregate, zero-filled, mean_per_day
+    over the range. Returns the rows (uf, n_focos, mean_per_day,
+    poly_coords ordered by uf) plus the {geojson, legend} response
+    dict."""
     days = max(1, (to - from_date).days)
     agg = uf_totals(cube, from_date, to, filters)
     rows = [

@@ -1,2 +1,2 @@
-"""Reusable distributed operators (geo joins, dedup, relational
-helpers, text analysis, multimodal plumbing)."""
+"""Reusable distributed operators (geo joins and geometry, dedup,
+text analysis, corpus packing and mixture)."""

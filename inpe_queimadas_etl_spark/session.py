@@ -43,7 +43,8 @@ def get_spark(
       replaces that day's partition (reference's delete+insert by day).
     - UTC session timezone so date/timestamp semantics are stable and
       match the DuckDB oracle.
-    - Arrow enabled for the pandas-UDF operators (geo, multimodal).
+    - Arrow enabled for the pandas-UDF passes (the batch pass, geo,
+      corpus).
     """
     cpus = _cpus()
     master = master or f"local[{cpus}]"

@@ -47,15 +47,12 @@ def load_all() -> None:
 
     Order matters: the driver's correctness snapshot records queries in
     registration order and historically capped at 50 rows (VERDICT r3
-    "What's wrong" #1), so the SURVEY §2 reference-surface modules
-    (relational, geo, geomarts) register before the LLM-data-pipeline
-    extensions. The registry holds 46 entries, within that cap
+    "What's wrong" #1), so the SURVEY §2 reference-surface module
+    (relational) registers before the LLM-data-pipeline extensions.
+    The registry holds 35 entries, within that cap
     (tests/test_suite_oracle.py pins the count).
     """
     from . import relational  # noqa: F401,I001
-    from . import geo  # noqa: F401,I001
-    from . import geomarts  # noqa: F401,I001
-    from . import multimodal  # noqa: F401,I001
     from . import llmdata  # noqa: F401,I001
 
 

@@ -34,7 +34,6 @@ def main() -> None:
     from inpe_queimadas_etl_spark.suite import all_queries
     import inpe_queimadas_etl_spark.corpus_ops as ops
     import inpe_queimadas_etl_spark.suite.llmdata as llm
-    import inpe_queimadas_etl_spark.suite.multimodal as mmod
     import inpe_queimadas_etl_spark.suite.relational as rel
 
     spark = get_spark(
@@ -45,10 +44,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     registry = all_queries()
-    from inpe_queimadas_etl_spark.suite.geo import geo8_dense_pip
-
-    registry.setdefault("geo8_dense_pip", geo8_dense_pip)
-    for mod in (llm, mmod, rel):
+    for mod in (llm, rel):
         for name in bench.UNREGISTERED:
             fn = getattr(mod, name, None)
             if fn is not None:

@@ -39,8 +39,6 @@ def main() -> None:
         mod_candidates = (
             "inpe_queimadas_etl_spark.suite.llmdata",
             "inpe_queimadas_etl_spark.suite.relational",
-            "inpe_queimadas_etl_spark.suite.geo",
-            "inpe_queimadas_etl_spark.suite.multimodal",
         )
         for m in mod_candidates:
             mod = importlib.import_module(m)

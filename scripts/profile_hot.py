@@ -168,26 +168,6 @@ def profile_dd11(spark):
     _t("full query", lambda: _noop(dd11_span_scrub(spark, SF_DIR)))
 
 
-def profile_mm5(spark):
-    from inpe_queimadas_etl_spark.session import load_table
-    from inpe_queimadas_etl_spark.suite.multimodal import (
-        media_from_documents,
-        mm5_simhash_neardup,
-        _mm5_signatures,
-        _mm5_geometry,
-    )
-    from pyspark.sql import functions as F
-
-    print("mm5_simhash_neardup phases:")
-    _t("full query", lambda: _noop(mm5_simhash_neardup(spark, SF_DIR)))
-    docs = load_table(spark, SF_DIR, "documents")
-    media = media_from_documents(docs).filter(F.length("payload") > 0)
-    n = docs.filter(F.length("text") > 0).count()
-    _, band_bits = _mm5_geometry(n)
-    _t("signature pass + checkpoint",
-       lambda: _mm5_signatures(media, band_bits).localCheckpoint(eager=True))
-
-
 PROFILES = {
     "dd2": profile_dd2,
     "dd7": profile_dd7,
@@ -198,7 +178,6 @@ PROFILES = {
     "tx8": profile_tx8,
     "dd10": profile_dd10,
     "dd11": profile_dd11,
-    "mm5": profile_mm5,
 }
 
 

@@ -43,12 +43,9 @@ def main() -> None:
     registry = all_queries()
     # resolve unregistered entries the same way bench.main does
     import inpe_queimadas_etl_spark.suite.llmdata as llm
-    import inpe_queimadas_etl_spark.suite.multimodal as mmod
     import inpe_queimadas_etl_spark.suite.relational as rel
-    from inpe_queimadas_etl_spark.suite.geo import geo8_dense_pip
 
-    registry.setdefault("geo8_dense_pip", geo8_dense_pip)
-    for mod in (llm, mmod, rel):
+    for mod in (llm, rel):
         for name in bench.UNREGISTERED:
             fn = getattr(mod, name, None)
             if fn is not None:

@@ -35,7 +35,6 @@ def ctx(spark, tmp_path_factory):
     mun_feats = G.municipios()
     ufs_web = geoprep.ufs_web(geoprep.municipios_web(mun_feats))
     uf_feats = [p for parts in ufs_web.values() for p in parts]
-    mun_web = geoprep.mun_web_df(spark, geoprep.municipios_web(mun_feats))
     return ApiContext(
         spark=spark,
         fact=fact,
@@ -47,7 +46,6 @@ def ctx(spark, tmp_path_factory):
             "uc": G.ucs(),
             "ti": G.tis(),
         },
-        mun_web=mun_web,
     )
 
 
@@ -231,32 +229,17 @@ def test_error_mapping(spark, base_url):
     assert status == 200 and len(body["items"]) == 10
 
 
-def test_choropleth_geojson_variants(spark, ctx):
+def test_choropleth_geojson_variants(ctx):
     """With geometry tables in the context, both choropleth endpoints
     return the reference's full GeoJSON response (zero-filled features,
     per-feature n_focos/mean_per_day, quantile legend) instead of the
     items-only shape."""
     import dataclasses
 
-    from pyspark.sql import functions as F
-
     from inpe_queimadas_etl_spark.serving_cache import ServingCache
 
-    mun_feats = G.municipios()
-    web = geoprep.municipios_web(mun_feats)
-    ufs = geoprep.ufs_web(web)
-    chain = geoprep.uf_polycoords(
-        geoprep.uf_mainland_noholes(geoprep.uf_geom_mainland(ufs))
-    )
-    daily_uf = ctx.fact.groupBy("day", "uf").agg(
-        F.sum("n_focos").alias("n_focos")
-    )
-    chart_uf = geoprep.v_chart_uf_choropleth_day(
-        daily_uf, geoprep.uf_polycoords_df(spark, chain)
-    )
-    geo_ctx = dataclasses.replace(
-        ctx, chart_uf=chart_uf, mun_web_feats=web, cache=ServingCache()
-    )
+    web = geoprep.municipios_web(G.municipios())
+    geo_ctx = dataclasses.replace(ctx, mun_web_feats=web, cache=ServingCache())
 
     status, body = handle_request(
         geo_ctx, "/api/choropleth/uf", {"from": FROM, "to": TO}
@@ -278,6 +261,27 @@ def test_choropleth_geojson_variants(spark, ctx):
     # ordered n_focos desc, key asc (reference ordering)
     ns = [f["properties"]["n_focos"] for f in mun_feats_out]
     assert ns == sorted(ns, reverse=True)
+
+
+def test_lookup_from_municipality_features_alone(spark, ctx, base_url):
+    """A context shaped like the benchmark's (geometry dims in
+    ``feats``, no other geometry input) serves /api/lookup/mun with
+    the same body as the HTTP walk's."""
+    bench_shaped = ApiContext(
+        spark=spark,
+        fact=ctx.fact,
+        all_ufs=ctx.all_ufs,
+        enriched=ctx.enriched,
+        feats={"mun": G.municipios(), "uc": G.ucs(), "ti": G.tis()},
+    )
+    want = _get(base_url, "/api/lookup/mun?key=m100")
+    assert want[0] == 200
+    assert handle_request(bench_shaped, "/api/lookup/mun", {"key": "m100"}) == want
+    # without municipality features the route 404s, as before
+    bare = ApiContext(spark=spark, fact=ctx.fact, all_ufs=ctx.all_ufs)
+    status, body = handle_request(bare, "/api/lookup/mun", {"key": "m100"})
+    assert status == 404
+    assert body["detail"] == "municipality geometry table not loaded"
 
 
 def test_caching_second_hit_serves_from_cache(ctx):

@@ -1,6 +1,7 @@
 """Geometry prep chain (geoprep), geometry serving queries
-(geoqueries: bounds / lookup / overlay / choropleth-geometry), geo
-marts 90/91, and the geometry checks — on the grid fixtures."""
+(geoqueries: bounds / lookup / overlay / choropleth-geometry), and the
+reference's geometry checks (sql/checks/010, 020, 060) on what the
+serving context returns — on the grid fixtures."""
 
 from __future__ import annotations
 
@@ -8,15 +9,27 @@ import datetime as dt
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
-from inpe_queimadas_etl_spark import checks, geoprep, geoqueries
+from inpe_queimadas_etl_spark import geoprep, geoqueries
+from inpe_queimadas_etl_spark.api import ApiContext
 from inpe_queimadas_etl_spark.queries import FactCube
 from inpe_queimadas_etl_spark.operators.geometry import ring_signed_area_deg2
 
 from . import fixtures_geo as G
 
 D1, D2 = dt.date(2024, 5, 1), dt.date(2024, 5, 2)
+ONE_DAY = dt.timedelta(days=1)
+
+# minimal mv_focos_day_dim slice: (day, uf, cd_mun, mun_nm_mun,
+# n_focos); CC has no rows on D2 (zero-fill case)
+FACT_ROWS = [
+    (D1, "AA", "m100", "Mun m100", 3),
+    (D1, "AA", "m101", "Mun m101", 2),
+    (D1, "BB", "m200", "Mun m200", 1),
+    (D1, "CC", "m300", "Mun m300", 4),
+    (D2, "AA", "m100", "Mun m100", 5),
+    (D2, "BB", "m202", "Mun m202", 2),
+]
 
 
 @pytest.fixture(scope="module")
@@ -25,37 +38,20 @@ def mun_feats():
 
 
 @pytest.fixture(scope="module")
-def ufs(mun_feats):
-    return geoprep.ufs_web(geoprep.municipios_web(mun_feats))
+def mun_web(mun_feats):
+    return geoprep.municipios_web(mun_feats)
 
 
 @pytest.fixture(scope="module")
-def polycoords_df(spark, ufs):
-    chain = geoprep.uf_polycoords(
-        geoprep.uf_mainland_noholes(geoprep.uf_geom_mainland(ufs))
-    )
-    return geoprep.uf_polycoords_df(spark, chain)
-
-
-@pytest.fixture(scope="module")
-def mun_web(spark, mun_feats):
-    return geoprep.mun_web_df(spark, geoprep.municipios_web(mun_feats))
+def ufs(mun_web):
+    return geoprep.ufs_web(mun_web)
 
 
 @pytest.fixture(scope="module")
 def fact(spark):
-    # minimal mv_focos_day_dim slice: (day, uf, cd_mun, mun_nm_mun,
-    # n_focos); CC has no rows on D2 (zero-fill case)
-    rows = [
-        (D1, "AA", "m100", "Mun m100", 3),
-        (D1, "AA", "m101", "Mun m101", 2),
-        (D1, "BB", "m200", "Mun m200", 1),
-        (D1, "CC", "m300", "Mun m300", 4),
-        (D2, "AA", "m100", "Mun m100", 5),
-        (D2, "BB", "m202", "Mun m202", 2),
-    ]
     return spark.createDataFrame(
-        rows, "day date, uf string, cd_mun string, mun_nm_mun string, n_focos long"
+        FACT_ROWS,
+        "day date, uf string, cd_mun string, mun_nm_mun string, n_focos long",
     )
 
 
@@ -66,22 +62,15 @@ def cube(fact):
 
 
 @pytest.fixture(scope="module")
-def daily_uf(fact):
-    return fact.groupBy("day", "uf").agg(F.sum("n_focos").alias("n_focos"))
-
-
-@pytest.fixture(scope="module")
-def chart_uf(daily_uf, polycoords_df):
-    return geoprep.v_chart_uf_choropleth_day(daily_uf, polycoords_df).cache()
-
-
-@pytest.fixture(scope="module")
-def uf_geometry(chart_uf):
-    """uf -> latest poly_coords, as the serving context collects it."""
-    return {
-        r["uf"]: r["poly_coords"]
-        for r in geoprep.latest_uf_geometry(chart_uf).collect()
-    }
+def uf_geometry(spark, fact, mun_web):
+    """uf -> poly_coords JSON, as the serving context builds it."""
+    ctx = ApiContext(
+        spark=spark,
+        fact=fact,
+        all_ufs=spark.createDataFrame([(u,) for u in G.UFS], "uf string"),
+        mun_web_feats=mun_web,
+    )
+    return ctx.uf_geometry
 
 
 class TestGeoPrep:
@@ -101,28 +90,12 @@ class TestGeoPrep:
                 )
             )
 
-    def test_polycoords_are_lattice_rings(self, polycoords_df):
-        rows = {r["uf"]: json.loads(r["poly_coords"]) for r in polycoords_df.collect()}
+    def test_polycoords_are_lattice_rings(self, uf_geometry):
+        rows = {uf: json.loads(c) for uf, c in uf_geometry.items()}
         assert sorted(rows) == ["AA", "BB", "CC"]
         ring = rows["AA"][0]
         assert ring[0] == [0.0, 0.0] and ring[-1] == [0.0, 0.0]
         assert [4.0, 0.0] in ring and [4.0, 1.0] in ring
-
-    def test_chart_view_zero_fill_and_viz_floor(self, chart_uf):
-        assert chart_uf.count() == 6  # 2 days x 3 UFs
-        cc2 = chart_uf.filter(
-            (F.col("uf") == "CC") & (F.col("day") == D2)
-        ).collect()[0]
-        assert cc2["n_focos"] == 0
-        assert cc2["n_focos_viz"] == pytest.approx(0.000001)
-        assert cc2["poly_coords"] is not None
-
-    def test_mun_web_df_largest_part_noholes(self, mun_web):
-        assert mun_web.count() == 12
-        r = mun_web.filter("cd_mun = 'm100'").collect()[0]
-        assert r["uf"] == "AA"
-        coords = json.loads(r["poly_coords"])
-        assert len(coords) == 1 and len(coords[0]) == 5
 
 
 class TestBoundsLookup:
@@ -143,8 +116,8 @@ class TestBoundsLookup:
         with pytest.raises(LookupError):
             geoqueries.bounds(mun_feats, "m201", uf="AA")
 
-    def test_lookup_mun(self, mun_web, cube):
-        out = geoqueries.lookup_mun(mun_web, cube, "m100")
+    def test_lookup_mun(self, mun_feats, cube):
+        out = geoqueries.lookup_mun(mun_feats, cube, "m100")
         assert out == {
             "mun": "m100",
             "mun_nome": "Mun m100",
@@ -152,14 +125,14 @@ class TestBoundsLookup:
             "uf_nome": "AA",
         }
 
-    def test_lookup_mun_no_fact_rows_falls_back_to_key(self, mun_web, cube):
-        out = geoqueries.lookup_mun(mun_web, cube, "m301")
+    def test_lookup_mun_no_fact_rows_falls_back_to_key(self, mun_feats, cube):
+        out = geoqueries.lookup_mun(mun_feats, cube, "m301")
         assert out["mun_nome"] == "m301"
         assert out["uf"] == "CC"
 
-    def test_lookup_mun_missing(self, mun_web, cube):
+    def test_lookup_mun_missing(self, mun_feats, cube):
         with pytest.raises(LookupError):
-            geoqueries.lookup_mun(mun_web, cube, "nope")
+            geoqueries.lookup_mun(mun_feats, cube, "nope")
 
 
 class TestGeoOverlay:
@@ -221,10 +194,9 @@ class TestChoroplethGeo:
         rows = {r["uf"]: r["n_focos"] for r in dense}
         assert rows == {"AA": 0, "BB": 3, "CC": 0}  # zero-filled others
 
-    def test_mun_choropleth_geo(self, cube, mun_feats):
-        web = geoprep.municipios_web(mun_feats)
+    def test_mun_choropleth_geo(self, cube, mun_web):
         resp = geoqueries.choropleth_mun_geo(
-            cube, web, D1, dt.date(2024, 5, 3), uf="AA"
+            cube, mun_web, D1, dt.date(2024, 5, 3), uf="AA"
         )
         feats = resp["geojson"]["features"]
         assert len(feats) == 4  # all AA municipalities, zero-filled
@@ -240,32 +212,35 @@ class TestChoroplethGeo:
             )
 
 
-class TestGeoMarts:
-    def test_geo_focos_diario_municipio(self, fact, mun_web):
-        daily_mun = fact.select(
-            "day", F.col("cd_mun").alias("mun_cd_mun"), "n_focos"
+class TestServedGeometryChecks:
+    """The reference's geometry checks, on the served responses."""
+
+    @pytest.mark.parametrize("day", [D1, D2])
+    def test_uf_choropleth_day_is_dense(self, cube, uf_geometry, day):
+        """FIXTURES.md §5 invariant 3 (sql/checks/010 B-D): each single
+        day's UF map carries exactly N_UF features, each with
+        coordinates, and its total equals the day's daily UF mart
+        total. On D2 CC has no rows and is zero-filled."""
+        _dense, resp = geoqueries.choropleth_uf_geo(
+            cube, uf_geometry, day, day + ONE_DAY
         )
-        out = geoprep.geo_focos_diario_municipio(daily_mun, mun_web)
-        r = out.filter("cd_mun = 'm100' and day = date'2024-05-01'").collect()[0]
-        assert r["uf"] == "AA" and r["n_focos"] == 3
-        assert r["poly_coords"] is not None and r["area_km2"] == 100.0
+        feats = resp["geojson"]["features"]
+        assert len(feats) == len(G.UFS)
+        assert all(f["geometry"]["coordinates"] for f in feats)
+        daily_uf_total = sum(r[4] for r in FACT_ROWS if r[0] == day)
+        assert sum(f["properties"]["n_focos"] for f in feats) == daily_uf_total
 
-    def test_geo_focos_diario_uf(self, spark, daily_uf, ufs):
-        out = geoprep.geo_focos_diario_uf(daily_uf, geoprep.ufs_web_df(spark, ufs))
-        r = out.filter("uf = 'AA' and day = date'2024-05-01'").collect()[0]
-        assert r["n_focos"] == 5
-        assert r["cd_mun"] is None
-        assert json.loads(r["poly_coords"])  # multipolygon parts
-
-
-class TestGeometryChecks:
-    def test_checks_green(self, polycoords_df, chart_uf, daily_uf, fact, mun_web):
-        c1 = checks.check_uf_polycoords_superset(polycoords_df, 3)
-        c2 = checks.check_chart_uf_days(chart_uf, daily_uf, 3)
-        daily_mun = fact.select(
-            "day", F.col("cd_mun").alias("mun_cd_mun"), "n_focos"
-        )
-        chart_mun = geoprep.v_chart_mun_choropleth_day(daily_mun, mun_web)
-        c3 = checks.check_mun_polycoords(chart_mun)
-        report = checks.run_checks([c1, c2, c3])
-        assert report["ok"], report
+    def test_mun_choropleth_latest_day_has_shapes(self, cube, mun_web):
+        """sql/checks/020 + 060: on the latest day at least one
+        municipality has fires, and no municipality feature lacks
+        coordinates."""
+        latest = max(r[0] for r in FACT_ROWS)
+        feats = [
+            f
+            for uf in G.UFS
+            for f in geoqueries.choropleth_mun_geo(
+                cube, mun_web, latest, latest + ONE_DAY, uf=uf
+            )["geojson"]["features"]
+        ]
+        assert sum(1 for f in feats if f["properties"]["n_focos"] > 0) >= 1
+        assert all(f["geometry"]["coordinates"] for f in feats)

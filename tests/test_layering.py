@@ -272,6 +272,17 @@ def test_query_layer_does_not_import_spark():
     assert not sorted(n for n in names if n.split(".")[0] == "pyspark")
 
 
+def test_geometry_serving_does_not_import_spark():
+    """The UF shapes and the municipality lookup are served from the
+    geometry dims in Python, so the geometry query layer and the
+    prep chain it reads import no Spark."""
+    for module in ("geoqueries", "geoprep"):
+        names = _imported_modules(module)
+        # the scan must see the module's imports, or the guard is vacuous
+        assert f"{PKG}.operators.geometry" in names, module
+        assert not sorted(n for n in names if n.split(".")[0] == "pyspark"), module
+
+
 class _RecordingTracer:
     """Stands in for perfbench's tracer: records what it is asked to
     wrap and wraps nothing."""

@@ -25,13 +25,11 @@ SF0001 = "/root/testdata/sf0.001"
 QUERIES = all_queries()
 
 # Bounded, intentional cross products only:
-#   j7/geo4/geo7 zero-fill a small day x dim grid; a11 joins two
+#   j7 zero-fills a small day x dim grid; a11 joins two
 #   single-row aggregates; a13 spans legend breaks over a handful of
 #   driver-built rows.
 NESTED_LOOP_OK = {
     "j7_crossjoin_zerofill",
-    "geo4_uf_choropleth_day",
-    "geo7_mun_choropleth_day",
     "a11_summary_totals",
     "a13_legend_breaks",
 }

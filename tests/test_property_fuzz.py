@@ -19,7 +19,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from inpe_queimadas_etl_spark.functions.legend import compute_breaks
-from inpe_queimadas_etl_spark.operators.multimodal import nn_resize
 from inpe_queimadas_etl_spark.transform import (
     _canonicalize_batch,
     _canonicalize_rows_reference,
@@ -201,31 +200,6 @@ def test_compute_breaks_invariants_fuzz(values, k, zero_class):
             assert positives and any(v <= 0 for v in values)
     # deterministic
     assert compute_breaks(values, k=k, zero_class=zero_class) == out
-
-
-# -- nn_resize gather invariants --------------------------------------------
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    src_h=st.integers(min_value=1, max_value=24),
-    src_w=st.integers(min_value=1, max_value=24),
-    dst_h=st.integers(min_value=1, max_value=24),
-    dst_w=st.integers(min_value=1, max_value=24),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_nn_resize_invariants_fuzz(src_h, src_w, dst_h, dst_w, seed):
-    rng = np.random.default_rng(seed)
-    arr = rng.integers(0, 256, size=(src_h, src_w), dtype=np.uint8)
-    out = nn_resize(arr, dst_h, dst_w)
-    assert out.shape == (dst_h, dst_w)
-    # pure gather: every output pixel exists in the source
-    assert set(np.unique(out)) <= set(np.unique(arr))
-    # identity when shapes match
-    if (dst_h, dst_w) == (src_h, src_w):
-        assert (out == arr).all()
-    # corner anchoring: top-left always maps to source top-left
-    assert out[0, 0] == arr[0, 0]
 
 
 # --- GeoJSON geometry part-splitting -----------------------------------

@@ -99,7 +99,7 @@ def test_registry_fits_driver_snapshot_cap():
     gets a driver-green row only while the registry holds at most 50.
     The count is pinned exactly, so a registration that appears or
     vanishes by accident fails here."""
-    assert len(QUERIES) == 46, sorted(QUERIES)
+    assert len(QUERIES) == 35, sorted(QUERIES)
 
 
 def _compare_to_oracle(spark, name, fn, sql):
@@ -197,14 +197,6 @@ def test_dd8_removes_planted_boilerplate(spark):
     assert out.loc[0, "n_removed"] == 1 and out.loc[1, "n_removed"] == 1
     assert out.loc[2, "clean_text"] == rows[2][1]
     assert out.loc[2, "n_removed"] == 0
-
-
-def test_geo8_dense_pip_matches_oracle(spark):
-    """geo8 is unregistered (50-entry snapshot cap; geo1 carries the J2
-    driver row) but stays oracle-checked here and benched in bench.py."""
-    from inpe_queimadas_etl_spark.suite.geo import GEO8_SQL, geo8_dense_pip
-
-    _compare_to_oracle(spark, "geo8_dense_pip", geo8_dense_pip, GEO8_SQL)
 
 
 def test_cur5_mixture_resample_matches_oracle(spark):
@@ -326,60 +318,6 @@ def test_tx7_scores_discriminate(spark):
     assert pdf["logit"].nunique() > 10
     assert 0 < pdf["quality_pass"].sum() < len(pdf)
 
-
-def test_mm5_simhash_neardup_matches_oracle(spark):
-    """mm5 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: frame-level SimHash near-dup over binary payloads, banded
-    candidates + exact Hamming verification."""
-    from inpe_queimadas_etl_spark.suite.multimodal import (
-        MM5_SQL,
-        mm5_simhash_neardup,
-    )
-
-    _compare_to_oracle(spark, "mm5_simhash_neardup", mm5_simhash_neardup, MM5_SQL)
-
-
-def test_mm5_finds_exact_and_near_payload_dups(spark):
-    """Identical payloads pair at hamming 0; a payload sharing most
-    frames pairs within the threshold; unrelated payloads do not."""
-    import os
-    import random
-    import tempfile
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.suite.multimodal import mm5_simhash_neardup
-
-    rng = random.Random(5)
-    # 367 frames: a one-frame edit moves only bits with tiny majority
-    # margins — probed hamming for this seed is 1, safely inside the
-    # declared threshold. (The round-6 version used ~92 EVEN frames
-    # at boundary hamming 3, a pass the constant tie rule assisted:
-    # mutually-tied bits always agreed, understating the true
-    # distance. The r7 content-hash tie-break randomizes tied bits
-    # per item, so an even-tiny-frame near-pair honestly drifts —
-    # the test now uses the odd, dilution-backed regime.)
-    base = " ".join(f"w{rng.randrange(1000)}" for _ in range(2400))
-    near = base[:-8] + "x" * 8
-    other = " ".join(f"z{rng.randrange(1000)}" for _ in range(2400))
-    pdf = pd.DataFrame(
-        [(0, base), (1, base), (2, near), (3, other)],
-        columns=["doc_id", "text"],
-    )
-    pdf["n_chars"] = pdf["text"].str.len()
-    with tempfile.TemporaryDirectory() as tmp:
-        spark.createDataFrame(pdf).write.parquet(
-            os.path.join(tmp, "documents.parquet")
-        )
-        pairs = (
-            mm5_simhash_neardup(spark, tmp)
-            .toPandas()
-            .set_index(["media_a", "media_b"])
-        )
-    assert pairs.loc[(0, 1), "hamming"] == 0
-    assert (0, 2) in pairs.index or (1, 2) in pairs.index
-    for b in (0, 1, 2):
-        assert (b, 3) not in pairs.index and (3, b) not in pairs.index
 
 def test_tx7_broadcast_path_matches_literal_and_oracle(spark):
     """The broadcast-lookup tx7 (VERDICT r5 #4) is value-identical to
@@ -993,9 +931,8 @@ def test_cur10_oracle_with_planted_signal(spark, tmp_path):
 
 
 def test_j7_crossjoin_zerofill_matches_oracle(spark):
-    """j7 gave up its registry slot to llm_ops_battery in round 7
-    (J7's dense cross-join + zero-fill shape keeps a registered driver
-    row via geo4_uf_choropleth_day); its own full oracle comparison
+    """j7 gave up its registry slot to llm_ops_battery in round 7; its
+    full oracle comparison of J7's dense cross-join + zero-fill shape
     lives on here."""
     from inpe_queimadas_etl_spark.suite.relational import (
         J7_SQL,
