@@ -10,27 +10,30 @@ checks (sql/checks/*.sql), per-day pipeline invariants
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Iterable
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 _CHECKED = ("mun_checked", "bioma_checked", "uc_checked", "ti_checked")
+# the enriched_focos columns event_counts reads
+EVENT_COLUMNS = ("mun_cd_mun", "cd_bioma", *_CHECKED)
 
 
-def event_counts(enriched: DataFrame) -> dict:
+def event_counts(batches: Iterable[pa.RecordBatch]) -> dict:
     """The event-grain counts the three table checks read, in one
-    aggregate: rows, rows with a municipality and with a biome, and
-    per dimension the rows not marked checked."""
-    row = enriched.agg(
-        F.count("*").alias("n"),
-        F.count("mun_cd_mun").alias("n_mun"),
-        F.count("cd_bioma").alias("n_bio"),
-        *[F.sum(F.when(F.col(c), 0).otherwise(1)).alias(c) for c in _CHECKED],
-    ).collect()[0]
-    return {k: v or 0 for k, v in row.asDict().items()}
+    streamed pass over Arrow record batches of ``EVENT_COLUMNS``:
+    rows, rows with a municipality and with a biome, and per dimension
+    the rows not marked checked (false or null)."""
+    counts = dict.fromkeys(("n", "n_mun", "n_bio", *_CHECKED), 0)
+    for b in batches:
+        counts["n"] += b.num_rows
+        counts["n_mun"] += b.num_rows - b.column("mun_cd_mun").null_count
+        counts["n_bio"] += b.num_rows - b.column("cd_bioma").null_count
+        for c in _CHECKED:
+            counts[c] += b.num_rows - (pc.sum(b.column(c)).as_py() or 0)
+    return counts
 
 
 def check_mart_consistency(daily_mun: pa.Table, daily_uf: pa.Table, events: dict) -> dict:

@@ -1,12 +1,13 @@
 """Mart builders: the fact MV, daily/monthly aggregates and the trend.
 
 The marts are a tree of rollups (reference sql/marts/*.sql,
-sqlm/marts/canonical/*.sql). Its root is ``day_cube``, the one Spark
-aggregate: the enriched events of the affected days counted at the
-fact MV's grain (event day x full dimension tuple,
-sqlm/marts/canonical/065_mv_focos_day_dim.sql), with the
-municipality's area, collected with ``toArrow()``. Every level below
-it is a pure pyarrow function of the level above:
+sqlm/marts/canonical/*.sql). Its root is ``day_cube``: the enriched
+events of the affected days, already on the driver as an Arrow table,
+counted at the fact MV's grain (event day x full dimension tuple,
+sqlm/marts/canonical/065_mv_focos_day_dim.sql) with the
+municipality's area, by a pyarrow ``group_by``. No level starts a
+Spark job; every level below the root is a pure pyarrow function of
+the level above:
 
 - day cube -> the five daily marts and the serving fact MV;
 - daily municipality / UF marts -> the monthly marts (counts summed,
@@ -157,15 +158,17 @@ def _with_month(daily: pa.Table) -> pa.Table:
     return daily.append_column("month", pc.floor_temporal(daily["day"], unit="month"))
 
 
-def day_cube(enriched: DataFrame) -> pa.Table:
-    """The marts' one Spark aggregate: ``enriched`` counted per event
-    day and full dimension tuple (CUBE_KEYS), with the largest
-    municipality area of each group, collected with ``toArrow()``."""
-    return (
-        enriched.groupBy(*CUBE_KEYS)
-        .agg(F.count("*").alias("n_focos"), F.max("mun_area_km2").alias("mun_area_km2"))
-        .toArrow()
+def day_cube(enriched: pa.Table) -> pa.Table:
+    """The root of the marts: ``enriched`` counted per event day and
+    full dimension tuple (CUBE_KEYS, nulls a group of their own), with
+    the largest municipality area of each group."""
+    cols = _group(
+        enriched,
+        {k: k for k in CUBE_KEYS},
+        n_focos=("event_day", "count", pc.CountOptions(mode="all")),
+        mun_area_km2=("mun_area_km2", "max"),
     )
+    return pa.table(cols)
 
 
 def _by_municipality(rows: pa.Table, key: str, source_key: str, schema: pa.Schema) -> pa.Table:

@@ -18,28 +18,29 @@ A batch runs in four steps:
 1. one Python pass reads, curates, dedups and enriches the batch's
    landed files: a single ``mapInPandas`` with one task per
    ``file_date`` (``transform.curate_file``, then
-   ``enrich.enrich_batch``). The JVM adds ``event_day`` and pins the
-   result (``localCheckpoint``) once. When ``curated_focos`` exists,
-   the pinned rows are anti-joined on ``event_hash`` against its
-   partitions of the batch's file dates, and the new rows are pinned
-   too. ``marts.day_cube`` counts them at the fact MV's grain into an
-   Arrow table, which gives the new-row count and the affected event
-   days;
-2. the new rows are merged with the prior rows of the affected event
-   days (``enriched_days``, pinned), and those are cubed again;
-3. two driver threads publish (``_run_concurrently``): one Spark job
-   writes ``enriched_focos`` from ``enriched_days``; pyarrow rolls the
-   cube up into the five daily marts and the fact MV, then the
-   published daily marts of the affected months into the two monthly
-   marts, and the whole daily UF mart into the trend, and publishes
-   each without Spark. Both finish before an error surfaces;
-4. ``curated_focos`` is appended alone and last.
+   ``enrich.enrich_batch``), collected once with ``toArrow()``. Before
+   enriching, each task drops the rows whose ``event_hash`` its own
+   ``file_date`` partition of ``curated_focos`` already holds (a
+   pyarrow read), so a replay enriches nothing;
+2. with history, the prior rows of the affected event days are read
+   from ``enriched_focos`` with pyarrow, minus the batch's hashes, and
+   merged with the new rows; ``marts.day_cube`` counts them at the
+   fact MV's grain with a pyarrow ``group_by``;
+3. pyarrow publishes ``enriched_focos``, then rolls the cube up into
+   the five daily marts and the fact MV, the published daily marts of
+   the affected months into the two monthly marts, and the whole daily
+   UF mart into the trend, publishing each in turn;
+4. ``curated_focos`` is appended last, as staged files renamed into
+   their partitions.
 
-``run_range`` feeds a multi-day date range through the same
-``process_batch`` as one batch, so there is no per-day loop. The hash
-payload starts with ``file_date``, so a row can only repeat one of the
-same date: dedup within one task, and pruning the anti-join to the
-batch's dates, are exact.
+After the pass, Spark only collects the small UF-area dim; every write
+is ``_stage_arrow``, an audit, then renames.
+
+``run_range`` feeds a date range through ``process_batch`` one
+calendar month of file dates at a time, which bounds the events the
+driver holds. The hash payload starts with ``file_date``, so a row can
+only repeat one of the same date: dedup within one task, and the
+anti-join against that date's partition, are exact.
 """
 
 from __future__ import annotations
@@ -47,15 +48,14 @@ from __future__ import annotations
 import datetime as dt
 import json
 import time
-from concurrent.futures import ThreadPoolExecutor
+from itertools import groupby
 from pathlib import Path
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark import inheritable_thread_target
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import marts
 from .enrich import BATCH_SCHEMA, ENRICHED_LAYOUT, enrich_batch, enrich_dims
@@ -82,15 +82,16 @@ class Warehouse:
     the Spark analog of the reference's B-tree-on-day indexes,
     SURVEY.md §4), monthly tables by month.
 
-    Overwrites follow write-audit-publish (VERDICT r3 "Next round" #3
-    — the Spark analog of the reference's delete+insert inside one
-    Postgres transaction, sql_runner.py:132-157): the job writes to
-    ``<root>/_tmp/<table>__<uuid>``, the staged output is audited
-    (_SUCCESS commit marker + every parquet footer readable, plus an
-    optional expected-row-count match), and only then do partition
-    directories swap into the live table via atomic renames. A failure
-    at ANY point before publish — including a Spark job dying
-    mid-write — leaves the live table byte-identical; readers never
+    Every write follows write-audit-publish (VERDICT r3 "Next round"
+    #3 — the Spark analog of the reference's delete+insert inside one
+    Postgres transaction, sql_runner.py:132-157): pyarrow stages the
+    rows under ``<root>/_tmp/<table>__<uuid>`` (``_stage_arrow``), the
+    staged output is audited (_SUCCESS commit marker + every parquet
+    footer readable + the exact row count), and only then do atomic
+    renames move it into the live table: whole partition directories
+    for an overwrite, single files for an append. A failure at ANY
+    point before publish — including a write dying mid-way — leaves
+    the live table byte-identical; readers never
     see a half-written partition because staging lives outside every
     table path. The publish itself is atomic ACROSS partitions: once
     the audit passes an ``_AUDITED`` marker commits the intent, and a
@@ -216,13 +217,13 @@ class Warehouse:
     def _audit_staged(
         tmp: Path, table: str, expected_rows: int | None = None
     ) -> list[Path]:
-        """Audit a staged write before any live mutation: the Spark
-        commit marker must exist (the job finished every task) and
-        every staged file's parquet footer must be readable (pyarrow,
-        metadata only — a truncated/corrupt task output fails here).
-        When the caller knows the intended row count, ``expected_rows``
-        additionally asserts the footers sum to it. Returns the staged
-        partition directories (possibly empty for an empty input)."""
+        """Audit a staged write before any live mutation: the commit
+        marker must exist (the write finished every file) and every
+        staged file's parquet footer must be readable (metadata only —
+        a truncated/corrupt file fails here). When the caller knows the
+        intended row count, ``expected_rows`` additionally asserts the
+        footers sum to it. Returns the staged partition directories
+        (possibly empty for an empty input)."""
         if not (tmp / "_SUCCESS").exists():
             raise PublishAuditError(
                 f"staged write for {table!r} has no _SUCCESS marker: "
@@ -248,36 +249,18 @@ class Warehouse:
             d for d in tmp.iterdir() if d.is_dir() and "=" in d.name
         )
 
-    def overwrite_partitions(
-        self, rows: DataFrame | pa.Table, table: str, partition_col: str
-    ) -> None:
+    def overwrite_partitions(self, rows: pa.Table, table: str, partition_col: str) -> None:
         """K2/K3: replace only the partitions present in ``rows``, via
         write-audit-publish. Each partition directory swaps in with
         two atomic renames (old -> _trash, staged -> live); a crash
         between swaps leaves every partition either fully-old or
-        fully-new, never partial. An Arrow table is staged without
-        Spark, and its audit also checks its exact row count."""
+        fully-new, never partial."""
         import shutil
 
         self._gc_stale(table)
         tmp = self._stage_dir(table)
-        expected_rows = None
-        if isinstance(rows, pa.Table):
-            _stage_arrow(rows, tmp, partition_col)
-            expected_rows = rows.num_rows
-        else:
-            # staging dir is fresh, so static overwrite is correct — and
-            # unlike the dynamic committer it writes the _SUCCESS marker
-            # the audit requires as commit evidence. One task per
-            # partition value writes one file per partition.
-            (
-                rows.repartition(partition_col)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy(partition_col)
-                .parquet(str(tmp))
-            )
-        staged_parts = self._audit_staged(tmp, table, expected_rows)
+        _stage_arrow(rows, tmp, partition_col)
+        staged_parts = self._audit_staged(tmp, table, rows.num_rows)
         # Publish-phase marker: from here the staged output is audited
         # good, so _gc_stale rolls an interrupted swap loop FORWARD
         # (completes the remaining swaps) instead of discarding it —
@@ -298,12 +281,26 @@ class Warehouse:
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(trash, ignore_errors=True)
 
-    def append(self, df: DataFrame, table: str, partition_col: str | None = None) -> None:
-        w = df.write.mode("append")
-        if partition_col:
-            # one file per partition, as overwrite_partitions writes
-            w = df.repartition(partition_col).write.mode("append").partitionBy(partition_col)
-        w.parquet(self.path(table))
+    def append(self, rows: pa.Table, table: str, partition_col: str | None = None) -> None:
+        """Add ``rows`` as new files, via write-audit-publish: one
+        staged file per partition, audited for the exact row count,
+        then each renamed into its live partition. A failure before the
+        renames leaves the live table byte-identical, and each rename
+        lands one partition's file whole. No ``_AUDITED`` marker is
+        written: recovery must never swap an append's staged
+        partitions in for the live ones."""
+        import shutil
+
+        self._gc_stale(table)
+        tmp = self._stage_dir(table)
+        _stage_arrow(rows, tmp, partition_col)
+        self._audit_staged(tmp, table, rows.num_rows)
+        live = self.root / table
+        for f in sorted(tmp.rglob("*.parquet")):
+            target = live / f.relative_to(tmp)
+            target.parent.mkdir(parents=True, exist_ok=True)
+            f.rename(target)
+        shutil.rmtree(tmp, ignore_errors=True)
 
     def overwrite(self, rows: pa.Table, table: str) -> None:
         """K5 truncate+reload, via write-audit-publish: the staged dir
@@ -355,34 +352,31 @@ def _stage_arrow(rows: pa.Table, tmp: Path, partition_col: str | None = None) ->
 
 
 def _read_arrow(
-    warehouse: Warehouse, table: str, where=None, columns: list[str] | None = None
+    warehouse: Warehouse,
+    table: str,
+    where=None,
+    columns: list[str] | None = None,
+    key: str = "day",
 ) -> pa.Table | None:
-    """A day-partitioned table read with ``pyarrow.dataset``: only the
-    partitions that ``where`` (an expression on ``day``) selects, and
-    only ``columns`` when given; None while the table has no file."""
-    import pyarrow.dataset as ds
-
+    """A date-partitioned table read with ``pyarrow.dataset``: only the
+    partitions that ``where`` (an expression on the partition column
+    ``key``) selects, and only ``columns`` when given; None while the
+    table has no file."""
     if not warehouse.exists(table):
         return None
-    day = ds.partitioning(pa.schema([("day", pa.date32())]), flavor="hive")
-    return ds.dataset(warehouse.path(table), partitioning=day).to_table(
+    parts = ds.partitioning(pa.schema([(key, pa.date32())]), flavor="hive")
+    return ds.dataset(warehouse.path(table), partitioning=parts).to_table(
         columns=columns, filter=where
     )
 
 
-def _run_concurrently(tasks: list) -> list:
-    """Run each thunk on a thread of its own and return their results
-    in order. Every thunk finishes before the first error, in
-    submission order, is raised, so nothing is still writing when the
-    caller sees it. Each thread inherits the caller's Spark job group
-    and local properties."""
-    session = SparkSession.getActiveSession()
-    inherit = inheritable_thread_target
-    if session is not None:
-        inherit = inheritable_thread_target(session)
-    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        futures = [pool.submit(inherit(task)) for task in tasks]
-    return [f.result() for f in futures]
+def loaded_hashes(curated: str, file_date: dt.date) -> list[str]:
+    """The ``event_hash`` values that the ``curated_focos`` table at
+    ``curated`` holds for ``file_date``: a pyarrow read of that one
+    partition's files, empty when it has none."""
+    files = [str(f) for f in (Path(curated) / f"file_date={file_date}").glob("*.parquet")]
+    hashes = ds.dataset(files, pa.schema([("event_hash", pa.string())]), format="parquet")
+    return hashes.to_table()["event_hash"].to_pylist()
 
 
 def batch_pass(
@@ -390,11 +384,17 @@ def batch_pass(
     day_files: list[tuple[dt.date, str]],
     dims: dict,
     monthly: bool = False,
+    curated: str | None = None,
+    rows_in=None,
 ) -> DataFrame:
     """The batch's rows, read, curated, deduped and enriched in one
     mapInPandas with one task per distinct ``file_date``, in
     ENRICHED_LAYOUT. A date's files are curated in the given order and
-    deduped together. ``monthly``: each file is a monthly archive."""
+    deduped together. ``monthly``: each file is a monthly archive.
+    ``curated``: the ``curated_focos`` path; each task drops the rows
+    already loaded for its date (``loaded_hashes``) before enriching.
+    ``rows_in``: an accumulator that each task adds its deduped row
+    count to, before that anti-join."""
     paths_by_date: dict[dt.date, list[str]] = {}
     for file_date, path in day_files:
         paths_by_date.setdefault(file_date, []).append(path)
@@ -409,6 +409,10 @@ def batch_pass(
                     [curate_file(p, file_date, monthly) for p in paths], ignore_index=True
                 )
                 rows = rows[~rows["event_hash"].duplicated()]
+                if rows_in is not None:
+                    rows_in.add(len(rows))
+                if curated is not None:
+                    rows = rows[~rows["event_hash"].isin(loaded_hashes(curated, file_date))]
                 if len(rows):
                     yield enrich_batch(rows, edims)
 
@@ -418,14 +422,6 @@ def batch_pass(
         .withColumn("event_day", event_day("view_ts", "file_date"))
         .select(*ENRICHED_LAYOUT)
     )
-
-
-def not_loaded(batch: DataFrame, curated: DataFrame, file_dates: list[dt.date]) -> DataFrame:
-    """J1/K1: the batch's rows whose ``event_hash`` is not in
-    ``curated``. A row's hash covers its file date, so only the
-    ``file_dates`` partitions of ``curated`` are read."""
-    done = curated.filter(F.col("file_date").isin(file_dates)).select("event_hash")
-    return batch.join(done, "event_hash", "left_anti").select(*batch.columns)
 
 
 def process_batch(
@@ -446,100 +442,70 @@ def process_batch(
     the rerun's anti-join and is enriched and published whole.
     """
     t0 = time.perf_counter()
-    # localCheckpoint pins the pass once, so the files are read, curated
-    # and enriched once. The new rows are pinned too: a recomputation
-    # after the append would re-list curated_focos, find the rows there
-    # and silently empty the batch (the read-your-own-append hazard). On
-    # a cluster this would be a staging-table write instead.
-    batch = batch_pass(spark, day_files, dims, monthly).localCheckpoint(eager=True)
-    existing = warehouse.read(spark, "curated_focos")
-    enriched_new = batch
-    if existing is not None:
-        file_dates = sorted({d for d, _ in day_files})
-        enriched_new = not_loaded(batch, existing, file_dates).localCheckpoint(eager=True)
-    cube = marts.day_cube(enriched_new)
-    n_new = pc.sum(cube["n_focos"]).as_py() or 0
-
-    metrics = {
-        "rows_in_batch": n_new if existing is None else batch.count(),
-        "rows_new": n_new,
-    }
-    if n_new == 0:
+    # the pass's one Spark job: the new rows, collected to the driver,
+    # so nothing after it recomputes the pass or re-reads curated_focos
+    rows_in = spark.sparkContext.accumulator(0)
+    curated = warehouse.path("curated_focos")
+    new = batch_pass(spark, day_files, dims, monthly, curated, rows_in).toArrow()
+    metrics = {"rows_in_batch": rows_in.value, "rows_new": new.num_rows}
+    if new.num_rows == 0:
         metrics["seconds"] = round(time.perf_counter() - t0, 3)
         return metrics
-    fresh = enriched_new.select(*CURATED_FOCOS.names)
 
     # spillover: recompute every event day touched by this batch
-    affected_days = sorted(set(cube["event_day"].to_pylist()))
-    day_strs = [str(d) for d in affected_days]
-    prior = warehouse.read(spark, "enriched_focos")
-    if prior is not None:
-        # a rerun after a crash past the enriched publish finds the
-        # batch's rows published already: the batch's copy replaces them
-        prior_affected = (
-            prior.filter(F.col("event_day").cast("string").isin(day_strs))
-            .join(enriched_new.select("event_hash"), "event_hash", "left_anti")
-            .select(*prior.columns)
-        )
-        # materialize before overwriting the same partitions we read
-        enriched_days = (
-            prior_affected.unionByName(enriched_new.select(*prior.columns))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        enriched_days = enriched_new
+    affected_days = sorted(pc.unique(new["event_day"]).to_pylist())
+    # a rerun after a crash past the enriched publish finds the batch's
+    # rows published already: the batch's copy replaces them
+    prior = _read_arrow(
+        warehouse,
+        "enriched_focos",
+        pc.field("event_day").isin(affected_days) & ~pc.field("event_hash").isin(new["event_hash"]),
+        new.column_names,
+        key="event_day",
+    )
+    enriched_days = new if prior is None else pa.concat_tables([prior, new])
     affected_months = sorted({dt.date(d.year, d.month, 1) for d in affected_days})
 
-    def publish_marts():
-        # the pinned rows, never enriched_focos: its partitions are being
-        # swapped by the concurrent publish
-        days_cube = cube if prior is None else marts.day_cube(enriched_days)
-        daily = {
-            "focos_diario_municipio": marts.focos_diario_municipio(days_cube),
-            "focos_diario_uf": marts.focos_diario_uf(days_cube, dims["uf_area"].toArrow()),
-            "focos_diario_bioma": marts.focos_diario_bioma(days_cube),
-            "focos_diario_uc": marts.focos_diario_uc(days_cube),
-            "focos_diario_ti": marts.focos_diario_ti(days_cube),
-            "mv_focos_day_dim": marts.mv_focos_day_dim(days_cube),
-        }
-        for table, rows in daily.items():
-            warehouse.overwrite_partitions(rows, table, "day")
-        # the monthly marts roll up the published daily rows of the
-        # affected months. A daily mart that has no file yet (every
-        # batch so far unattributed) has nothing to roll up.
-        day = pc.field("day")
-        in_months = None
-        for m in affected_months:
-            end = dt.date(m.year + m.month // 12, m.month % 12 + 1, 1)
-            month = (day >= m) & (day < end)
-            in_months = month if in_months is None else in_months | month
-        for build, source, table in (
-            (marts.focos_mensal_municipio, "focos_diario_municipio", "focos_mensal_municipio"),
-            (marts.focos_mensal_uf, "focos_diario_uf", "focos_mensal_uf"),
-        ):
-            rows = _read_arrow(warehouse, source, in_months)
-            if rows is not None:
-                warehouse.overwrite_partitions(build(rows), table, "month")
-        # full recompute over the whole daily UF mart — a small aggregate
-        daily_uf = _read_arrow(warehouse, "focos_diario_uf")
-        if daily_uf is not None:
-            warehouse.overwrite(marts.focos_diario_uf_trend(daily_uf), "focos_diario_uf_trend")
+    warehouse.overwrite_partitions(enriched_days, "enriched_focos", "event_day")
 
-    # Spark publishes the events while the driver publishes the marts;
-    # both finish before an error surfaces
-    _run_concurrently(
-        [
-            lambda: warehouse.overwrite_partitions(enriched_days, "enriched_focos", "event_day"),
-            publish_marts,
-        ]
-    )
+    cube = marts.day_cube(enriched_days)
+    daily = {
+        "focos_diario_municipio": marts.focos_diario_municipio(cube),
+        "focos_diario_uf": marts.focos_diario_uf(cube, dims["uf_area"].toArrow()),
+        "focos_diario_bioma": marts.focos_diario_bioma(cube),
+        "focos_diario_uc": marts.focos_diario_uc(cube),
+        "focos_diario_ti": marts.focos_diario_ti(cube),
+        "mv_focos_day_dim": marts.mv_focos_day_dim(cube),
+    }
+    for table, rows in daily.items():
+        warehouse.overwrite_partitions(rows, table, "day")
+    # the monthly marts roll up the published daily rows of the
+    # affected months. A daily mart that has no file yet (every batch
+    # so far unattributed) has nothing to roll up.
+    day = pc.field("day")
+    in_months = None
+    for m in affected_months:
+        end = dt.date(m.year + m.month // 12, m.month % 12 + 1, 1)
+        month = (day >= m) & (day < end)
+        in_months = month if in_months is None else in_months | month
+    for build, source, table in (
+        (marts.focos_mensal_municipio, "focos_diario_municipio", "focos_mensal_municipio"),
+        (marts.focos_mensal_uf, "focos_diario_uf", "focos_mensal_uf"),
+    ):
+        rows = _read_arrow(warehouse, source, in_months)
+        if rows is not None:
+            warehouse.overwrite_partitions(build(rows), table, "month")
+    # full recompute over the whole daily UF mart — a small aggregate
+    daily_uf = _read_arrow(warehouse, "focos_diario_uf")
+    if daily_uf is not None:
+        warehouse.overwrite(marts.focos_diario_uf_trend(daily_uf), "focos_diario_uf_trend")
 
-    # last, alone: the batch is done
-    warehouse.append(fresh, "curated_focos", partition_col="file_date")
+    # last: the batch is done
+    warehouse.append(new.select(CURATED_FOCOS.names), "curated_focos", "file_date")
 
     metrics.update(
         {
-            "affected_days": day_strs,
+            "affected_days": [str(d) for d in affected_days],
             "affected_months": [str(m) for m in affected_months],
             "seconds": round(time.perf_counter() - t0, 3),
         }
@@ -590,14 +556,14 @@ def write_validation_report(
     validate_marts.py:81-122,283-301): runs the table-level checks over
     the warehouse and leaves docs/validation_last_run.md +
     logs/last_run.json under the warehouse root. The event-grain
-    checks read one Spark aggregate of ``enriched_focos``; the mart
-    sums and last-day counts come from the two daily marts, read as
-    Arrow. Returns both paths, or None when no enriched table exists
-    yet (nothing to validate)."""
+    checks count one streamed pyarrow scan of the six columns they need
+    over all of ``enriched_focos``; the mart sums and last-day counts
+    come from the two daily marts, read as Arrow. Nothing here starts
+    a Spark job. Returns both paths, or None when no enriched table
+    exists yet (nothing to validate)."""
     from . import checks as C
 
-    enriched = warehouse.read(spark, "enriched_focos")
-    if enriched is None:
+    if not warehouse.exists("enriched_focos"):
         return None
 
     def daily_mart(table: str) -> pa.Table:
@@ -610,7 +576,8 @@ def write_validation_report(
 
     daily_mun = daily_mart("focos_diario_municipio")
     daily_uf = daily_mart("focos_diario_uf")
-    events = C.event_counts(enriched)
+    enriched = ds.dataset(warehouse.path("enriched_focos"), format="parquet")
+    events = C.event_counts(enriched.to_batches(columns=list(C.EVENT_COLUMNS)))
     results = [
         C.check_mart_consistency(daily_mun, daily_uf, events),
         C.check_enrichment_coverage(events),
@@ -657,33 +624,46 @@ def run_range(
     state_path: str | None = None,
     write_report: bool = True,
 ) -> list[dict]:
-    """Multi-day backfill as ONE batch per call, resuming from the S8
-    state file: days recorded as done by a previous run are skipped
-    before any read (reference backfill.py:47-66,151-162 keeps and
-    re-reads the JSON marker; the anti-join append additionally makes
-    accidental replays harmless)."""
+    """Multi-day backfill, resuming from the S8 state file: days
+    recorded as done by a previous run are skipped before any read
+    (reference backfill.py:47-66,151-162 keeps and re-reads the JSON
+    marker; the anti-join append additionally makes accidental replays
+    harmless).
+
+    The rest runs as one ``process_batch`` per calendar month of file
+    dates, so the driver holds at most a month of events; the files of
+    one date share a batch. The state file is written after each
+    batch, and the report once, after the last. Returns one result:
+    counts and seconds summed over the batches, day and month lists
+    merged, with ``batches`` the number of batches."""
     done = read_resume_state(state_path)
     skipped = [str(d) for d, _ in day_files if str(d) in done]
     todo = [(d, p) for d, p in day_files if str(d) not in done]
     if not todo:
         return [{"rows_in_batch": 0, "rows_new": 0, "days_skipped": skipped}]
-    result = process_batch(spark, warehouse, todo, dims)
+    result: dict = {"batches": 0}
+    for _, batch in groupby(sorted(todo, key=lambda f: f[0]), key=lambda f: f[0].replace(day=1)):
+        batch = list(batch)
+        metrics = process_batch(spark, warehouse, batch, dims)
+        for k, v in metrics.items():
+            if isinstance(v, list):
+                result[k] = sorted(set(result.get(k, [])) | set(v))
+            else:
+                result[k] = round(result.get(k, 0) + v, 3)
+        result["batches"] += 1
+        if state_path:
+            done |= {str(d) for d, _ in batch}
+            all_done = sorted(done)
+            Path(state_path).write_text(
+                json.dumps(
+                    {"last_done": all_done[-1], "days": all_done, "metrics": metrics},
+                    default=str,
+                )
+            )
     if skipped:
         result["days_skipped"] = skipped
     if write_report:
         report_paths = write_validation_report(spark, warehouse)
         if report_paths:
             result["report_md"], result["report_json"] = report_paths
-    if state_path:
-        all_done = sorted(done | {str(d) for d, _ in todo})
-        Path(state_path).write_text(
-            json.dumps(
-                {
-                    "last_done": all_done[-1],
-                    "days": all_done,
-                    "metrics": result,
-                },
-                default=str,
-            )
-        )
     return [result]

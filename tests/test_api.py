@@ -30,7 +30,7 @@ def ctx(spark, tmp_path_factory):
     write_fixture_csv(path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
     dims = {"municipios": G.municipios(), "biomas": G.biomas(), "ucs": G.ucs(), "tis": G.tis()}
     enriched = batch_pass(spark, [(FILE_DATE, path)], dims).cache()
-    fact = spark.createDataFrame(marts.mv_focos_day_dim(marts.day_cube(enriched))).cache()
+    fact = spark.createDataFrame(marts.mv_focos_day_dim(marts.day_cube(enriched.toArrow()))).cache()
     all_ufs = spark.createDataFrame([(u,) for u in G.UFS], "uf string")
     mun_feats = G.municipios()
     ufs_web = geoprep.ufs_web(geoprep.municipios_web(mun_feats))

@@ -70,7 +70,7 @@ def test_uc_ti_hits(enriched):
 def test_checked_flags_all_true(enriched):
     from inpe_queimadas_etl_spark.checks import check_checked_flags, event_counts
 
-    assert check_checked_flags(event_counts(enriched))["ok"]
+    assert check_checked_flags(event_counts(enriched.toArrow().to_batches()))["ok"]
 
 
 def test_event_day_spillover(enriched):
@@ -83,5 +83,6 @@ def test_coverage_check(enriched):
 
     # 12/13 municipality (far point misses), 12/13 biome -> thresholds
     # tuned to the fixture (FIXTURES.md designs data to hit >=90%)
-    res = check_enrichment_coverage(event_counts(enriched), min_mun_ratio=0.9, min_bioma_ratio=0.9)
+    events = event_counts(enriched.toArrow().to_batches())
+    res = check_enrichment_coverage(events, min_mun_ratio=0.9, min_bioma_ratio=0.9)
     assert res["ok"], res

@@ -34,7 +34,7 @@ def uf_area(spark):
 
 @pytest.fixture(scope="module")
 def day_cube(enriched):
-    return marts.day_cube(enriched)
+    return marts.day_cube(enriched.toArrow())
 
 
 @pytest.fixture(scope="module")
@@ -91,7 +91,7 @@ def test_mart_sum_invariant(enriched, day_cube, uf_area_arrow):
     res = check_mart_consistency(
         marts.focos_diario_municipio(day_cube),
         marts.focos_diario_uf(day_cube, uf_area_arrow),
-        event_counts(enriched),
+        event_counts(enriched.toArrow().to_batches()),
     )
     assert res["ok"], res
 

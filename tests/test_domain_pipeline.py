@@ -4,6 +4,7 @@ incremental append (K1/K2/K3 semantics)."""
 from __future__ import annotations
 
 import datetime as dt
+from pathlib import Path
 
 import pyarrow as pa
 import pytest
@@ -145,51 +146,9 @@ def test_rerun_completes_a_failed_batch(spark, tmp_path, dims, monkeypatch, modu
     assert daily_uf.agg(F.sum("n_focos")).collect()[0][0] == 12
 
 
-def test_run_concurrently_waits_for_every_task_before_raising():
-    """Spark-free: results come back in submission order, and the first
-    error (in submission order) is raised only after a slower sibling
-    finished."""
-    import threading
-    import time
-
-    from inpe_queimadas_etl_spark.pipeline import _run_concurrently
-
-    assert _run_concurrently([lambda: 1, lambda: time.sleep(0.05) or 2, lambda: 3]) == [1, 2, 3]
-
-    finished = threading.Event()
-
-    def slow():
-        time.sleep(0.3)
-        finished.set()
-
-    def fails(msg):
-        def run():
-            raise RuntimeError(msg)
-
-        return run
-
-    with pytest.raises(RuntimeError, match="first"):
-        _run_concurrently([fails("first"), slow, fails("second")])
-    assert finished.is_set()
-
-
-def test_run_concurrently_keeps_the_callers_job_group(spark):
-    """Jobs started on the worker threads run in the caller's job group."""
-    from inpe_queimadas_etl_spark.pipeline import _run_concurrently
-
-    sc = spark.sparkContext
-    sc.setJobGroup("concurrent-publish", "job group probe")
-    try:
-        counts = _run_concurrently([lambda: spark.range(10).count()] * 3)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert counts == [10, 10, 10]
-    assert len(sc.statusTracker().getJobIdsForGroup("concurrent-publish")) >= 3
-
-
 def test_transform_runs_once_per_batch(spark, tmp_path, dims, monkeypatch):
-    """The batch pass is pinned once: each landed file is read and
-    curated once per run_day, not again for the batch's counts."""
+    """The batch pass runs once: each landed file is read and curated
+    once per run_day, not again for the batch's counts."""
     from inpe_queimadas_etl_spark import pipeline
     from inpe_queimadas_etl_spark.sources.csv_ingest import read_landed_csv
 
@@ -251,26 +210,137 @@ def test_unattributed_first_batch_completes(spark, tmp_path, dims):
 def test_batch_reads_enriched_once(spark, tmp_path, dims, monkeypatch):
     """The marts aggregate the batch's own rows: enriched_focos is read
     once per batch (the prior partitions it merges with), never again
-    after the batch publishes it."""
+    after the batch publishes it. Spark reads and Arrow reads both
+    count."""
+    from inpe_queimadas_etl_spark import pipeline
+
     csv1 = str(tmp_path / "focos_20240502.csv")
     write_fixture_csv(csv1, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
     wh = Warehouse(str(tmp_path / "wh"))
     run_day(spark, wh, csv1, FILE_DATE, dims)
 
     reads = []
-    real_read = Warehouse.read
+    real_read, real_read_arrow = Warehouse.read, pipeline._read_arrow
 
     def spy(self, spark_, table):
         reads.append(table)
         return real_read(self, spark_, table)
 
+    def spy_arrow(warehouse, table, *args, **kwargs):
+        reads.append(table)
+        return real_read_arrow(warehouse, table, *args, **kwargs)
+
     monkeypatch.setattr(Warehouse, "read", spy)
+    monkeypatch.setattr(pipeline, "_read_arrow", spy_arrow)
     rows = [["0.5", "0.5", "2024-05-02 18:00:00", "AQUA_M-T", "Mun m100", "AA", "Amazonia", "1.0"]]
     csv2 = str(tmp_path / "focos_20240503.csv")
     write_fixture_csv(csv2, G.FOCOS_HEADER, rows, sep=";")
     metrics = run_day(spark, wh, csv2, dt.date(2024, 5, 3), dims)
     assert metrics["rows_new"] == 1
     assert reads.count("enriched_focos") == 1
+
+
+def test_replay_enriches_no_row(spark, tmp_path, dims, monkeypatch):
+    """A replayed day's rows are dropped inside the pass, before
+    enrichment: the replay enriches 0 rows, and still counts the day's
+    curated rows as the batch's rows."""
+    from inpe_queimadas_etl_spark import pipeline
+
+    csv_path = str(tmp_path / "focos_20240502.csv")
+    write_fixture_csv(csv_path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    wh = Warehouse(str(tmp_path / "wh"))
+    assert run_day(spark, wh, csv_path, FILE_DATE, dims)["rows_new"] == G.N_VALID_UNIQUE
+
+    enriched_rows = spark.sparkContext.accumulator(0)
+    real = pipeline.enrich_batch
+
+    def counting(rows, *args):
+        enriched_rows.add(len(rows))
+        return real(rows, *args)
+
+    monkeypatch.setattr(pipeline, "enrich_batch", counting)
+    metrics = run_day(spark, wh, csv_path, FILE_DATE, dims)
+    assert (metrics["rows_in_batch"], metrics["rows_new"]) == (G.N_VALID_UNIQUE, 0)
+    assert enriched_rows.value == 0
+
+
+def _tree(root) -> dict:
+    """Every file under ``root``, relative path -> bytes."""
+    return {str(p.relative_to(root)): p.read_bytes() for p in sorted(root.rglob("*")) if p.is_file()}
+
+
+def test_failed_append_leaves_curated_intact(spark, tmp_path, dims, monkeypatch):
+    """The curated append is staged and audited: a write that dies
+    after its first partition's file, or a staged row count that does
+    not match, raises and leaves the live curated_focos byte-identical,
+    with no new file under its path."""
+    from inpe_queimadas_etl_spark.pipeline import PublishAuditError, _read_arrow
+
+    csv_path = str(tmp_path / "focos_20240502.csv")
+    write_fixture_csv(csv_path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    wh = Warehouse(str(tmp_path / "wh"))
+    run_day(spark, wh, csv_path, FILE_DATE, dims)
+    live = wh.root / "curated_focos"
+    before = _tree(live)
+
+    rows = _read_arrow(wh, "curated_focos", key="file_date")
+    half = rows.num_rows // 2
+    dates = [dt.date(2024, 5, 3)] * half + [dt.date(2024, 5, 4)] * (rows.num_rows - half)
+    moved = rows.set_column(rows.schema.get_field_index("file_date"), "file_date", pa.array(dates))
+    written = _dies_after_first_file(monkeypatch)
+    with pytest.raises(RuntimeError, match="mid-write kill"):
+        wh.append(moved, "curated_focos", "file_date")
+    assert len(written) == 1
+    assert _tree(live) == before
+    monkeypatch.undo()
+
+    lost = moved.set_column(
+        moved.schema.get_field_index("file_date"), "file_date", pa.array([None, *dates[1:]], pa.date32())
+    )
+    with pytest.raises(PublishAuditError, match="row count"):
+        wh.append(lost, "curated_focos", "file_date")
+    assert _tree(live) == before
+
+
+def test_range_resumes_after_its_last_finished_month(spark, tmp_path, dims, monkeypatch):
+    """A range runs one batch per calendar month of file dates and
+    records each finished batch in the state file: when the second
+    month's batch crashes, the state names the first month's days, and
+    the rerun skips their files before any read."""
+    import json
+
+    from inpe_queimadas_etl_spark import marts
+    from inpe_queimadas_etl_spark.pipeline import run_range
+
+    files = []
+    for day, spill in (("2024-07-31", "2024-07-30"), ("2024-08-01", "2024-07-31")):
+        path = tmp_path / f"focos_{day}.csv"
+        write_fixture_csv(str(path), G.FOCOS_HEADER, _month_rows(day, spill), sep=";")
+        files.append((dt.date.fromisoformat(day), str(path)))
+    real = marts.focos_diario_bioma
+    calls = {"n": 0}
+
+    def fails_second(*args, **kwargs):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("simulated crash")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(marts, "focos_diario_bioma", fails_second)
+    wh = Warehouse(str(tmp_path / "wh"))
+    state = tmp_path / "state.json"
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_range(spark, wh, files, dims, state_path=str(state))
+    assert json.loads(state.read_text())["days"] == ["2024-07-31"]
+    assert wh.read(spark, "curated_focos").count() == G.N_VALID_UNIQUE
+
+    monkeypatch.undo()
+    Path(files[0][1]).unlink()  # a read of the done day's file would fail
+    [result] = run_range(spark, wh, files, dims, state_path=str(state))
+    assert result["days_skipped"] == ["2024-07-31"]
+    assert (result["batches"], result["rows_new"]) == (1, G.N_VALID_UNIQUE)
+    assert json.loads(state.read_text())["days"] == ["2024-07-31", "2024-08-01"]
+    assert wh.read(spark, "enriched_focos").count() == 2 * G.N_VALID_UNIQUE
 
 
 def _month_rows(day: str, spill: str) -> list[list]:
@@ -491,22 +561,44 @@ def test_marts_match_a_spark_recomputation_over_history(spark, tmp_path, dims):
         assert_marts_match()
 
 
+def _day_rows(*rows: tuple) -> pa.Table:
+    """(day, n, v) rows as a table of day string, n int, v string."""
+    day, n, v = zip(*rows)
+    return pa.table({"day": list(day), "n": pa.array(n, pa.int32()), "v": list(v)})
+
+
+def _dies_after_first_file(monkeypatch):
+    """Make pyarrow's parquet writer raise after it wrote one file: a
+    write dying mid-way, after its first partition's file landed."""
+    import pyarrow.parquet as pq
+
+    real = pq.write_table
+    written = []
+
+    def write_table(*args, **kwargs):
+        if written:
+            raise RuntimeError("mid-write kill")
+        written.append(real(*args, **kwargs))
+
+    monkeypatch.setattr(pq, "write_table", write_table)
+    return written
+
+
 class TestWriteAuditPublish:
-    """VERDICT r3 #3: overwrites are write-audit-publish — a Spark job
-    dying mid-write must leave the live partition byte-identical."""
+    """VERDICT r3 #3: overwrites are write-audit-publish — a write
+    dying mid-way must leave the live partition byte-identical."""
 
     @staticmethod
     def _seed(spark, tmp_path, name="wap_wh"):
         wh = Warehouse(str(tmp_path / name))
-        df = spark.createDataFrame(
-            [("2024-05-01", i, f"v{i}") for i in range(10)]
-            + [("2024-05-02", i, f"w{i}") for i in range(10)],
-            "day string, n int, v string",
+        df = _day_rows(
+            *[("2024-05-01", i, f"v{i}") for i in range(10)],
+            *[("2024-05-02", i, f"w{i}") for i in range(10)],
         )
         wh.overwrite_partitions(df, "t", "day")
         return wh
 
-    def test_killed_write_leaves_old_partitions_intact(self, spark, tmp_path):
+    def test_killed_write_leaves_old_partitions_intact(self, spark, tmp_path, monkeypatch):
         wh = self._seed(spark, tmp_path)
         before = {
             (r["day"], r["n"], r["v"]) for r in wh.read(spark, "t").collect()
@@ -515,24 +607,13 @@ class TestWriteAuditPublish:
             str(p.relative_to(wh.root)) for p in wh.root.rglob("*.parquet")
         )
 
-        # a genuinely dying Spark job: one task raises after others
-        # have already written their staged files
-        @F.udf("string")
-        def boom(day):
-            if day == "2024-05-02":
-                raise RuntimeError("mid-write kill")
-            return day
-
-        bad = (
-            spark.createDataFrame(
-                [("2024-05-01", 99, "NEW"), ("2024-05-02", 99, "NEW")],
-                "day string, n int, v string",
-            )
-            .repartition(2, "day")
-            .withColumn("day", boom(F.col("day")))
-        )
-        with pytest.raises(Exception):
+        # a dying write: it raises after the first partition's staged
+        # file was written
+        written = _dies_after_first_file(monkeypatch)
+        bad = _day_rows(("2024-05-01", 99, "NEW"), ("2024-05-02", 99, "NEW"))
+        with pytest.raises(RuntimeError, match="mid-write kill"):
             wh.overwrite_partitions(bad, "t", "day")
+        assert len(written) == 1
 
         after = {
             (r["day"], r["n"], r["v"]) for r in wh.read(spark, "t").collect()
@@ -558,9 +639,7 @@ class TestWriteAuditPublish:
 
     def test_successful_overwrite_cleans_staging(self, spark, tmp_path):
         wh = self._seed(spark, tmp_path)
-        df = spark.createDataFrame(
-            [("2024-05-02", 7, "z7")], "day string, n int, v string"
-        )
+        df = _day_rows(("2024-05-02", 7, "z7"))
         wh.overwrite_partitions(df, "t", "day")
         rows = {
             (str(r["day"]), r["n"], r["v"]) for r in wh.read(spark, "t").collect()
@@ -586,9 +665,7 @@ class TestWriteAuditPublish:
         assert not (live / "day=2024-05-01").exists()
 
         # next publish (for a DIFFERENT day) heals the lost partition
-        df = spark.createDataFrame(
-            [("2024-05-02", 7, "z7")], "day string, n int, v string"
-        )
+        df = _day_rows(("2024-05-02", 7, "z7"))
         wh.overwrite_partitions(df, "t", "day")
         rows = {
             (str(r["day"]), r["n"], r["v"]) for r in wh.read(spark, "t").collect()
@@ -619,17 +696,11 @@ class TestWriteAuditPublish:
     def test_audit_expected_rows_mismatch_refuses_publish(self, spark, tmp_path):
         from inpe_queimadas_etl_spark.pipeline import PublishAuditError
 
+        from inpe_queimadas_etl_spark.pipeline import _stage_arrow
+
         wh = self._seed(spark, tmp_path)
         tmp = wh._stage_dir("t")
-        df = spark.createDataFrame(
-            [("2024-05-03", 1, "a")], "day string, n int, v string"
-        )
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")  # _SUCCESS marker
-            .partitionBy("day")
-            .parquet(str(tmp))
-        )
+        _stage_arrow(_day_rows(("2024-05-03", 1, "a")), tmp, "day")  # _SUCCESS marker
         assert wh._audit_staged(tmp, "t", expected_rows=1)
         with pytest.raises(PublishAuditError):
             wh._audit_staged(tmp, "t", expected_rows=2)
@@ -684,10 +755,7 @@ class TestWriteAuditPublish:
         # staged->live per partition); cover every failure position
         for fail_at in range(1, 5):
             wh = self._seed(spark, tmp_path, name=f"wap_crash_{fail_at}")
-            df_new = spark.createDataFrame(
-                [("2024-05-01", 99, "N1"), ("2024-05-02", 99, "N2")],
-                "day string, n int, v string",
-            )
+            df_new = _day_rows(("2024-05-01", 99, "N1"), ("2024-05-02", 99, "N2"))
             calls = {"n": 0}
 
             def exploding(pself, target, _real=real_rename, _c=calls, _f=fail_at):
@@ -704,13 +772,7 @@ class TestWriteAuditPublish:
                 pathlib.Path.rename = real_rename
 
             # next publish (unrelated day) triggers recovery first
-            wh.overwrite_partitions(
-                spark.createDataFrame(
-                    [("2024-05-03", 1, "x")], "day string, n int, v string"
-                ),
-                "t",
-                "day",
-            )
+            wh.overwrite_partitions(_day_rows(("2024-05-03", 1, "x")), "t", "day")
             rows = {
                 (str(r["day"]), r["n"], r["v"])
                 for r in wh.read(spark, "t").collect()
@@ -733,10 +795,7 @@ class TestWriteAuditPublish:
 
         real_rename = pathlib.Path.rename
         wh = self._seed(spark, tmp_path)
-        df_new = spark.createDataFrame(
-            [("2024-05-01", 99, "N1"), ("2024-05-02", 99, "N2")],
-            "day string, n int, v string",
-        )
+        df_new = _day_rows(("2024-05-01", 99, "N1"), ("2024-05-02", 99, "N2"))
         # first publish dies at rename #1 (old->trash of partition 1)
         calls = {"n": 0}
 
@@ -762,25 +821,12 @@ class TestWriteAuditPublish:
         pathlib.Path.rename = explode_at(1)
         try:
             with pytest.raises(OSError):
-                wh.overwrite_partitions(
-                    spark.createDataFrame(
-                        [("2024-05-03", 1, "x")],
-                        "day string, n int, v string",
-                    ),
-                    "t",
-                    "day",
-                )
+                wh.overwrite_partitions(_day_rows(("2024-05-03", 1, "x")), "t", "day")
         finally:
             pathlib.Path.rename = real_rename
 
         # third publish completes recovery, then its own write
-        wh.overwrite_partitions(
-            spark.createDataFrame(
-                [("2024-05-03", 1, "x")], "day string, n int, v string"
-            ),
-            "t",
-            "day",
-        )
+        wh.overwrite_partitions(_day_rows(("2024-05-03", 1, "x")), "t", "day")
         rows = {
             (str(r["day"]), r["n"], r["v"])
             for r in wh.read(spark, "t").collect()
@@ -803,9 +849,7 @@ class TestWriteAuditPublish:
         names also start with 't__') — staged names are matched as
         <table>__<32-hex> exactly."""
         wh = self._seed(spark, tmp_path)
-        other = spark.createDataFrame(
-            [("2024-05-01", 1, "ARCH")], "day string, n int, v string"
-        )
+        other = _day_rows(("2024-05-01", 1, "ARCH"))
         # an interrupted, audited publish of the SIBLING table
         tmp = wh.root / "_tmp" / ("t__archive__" + "a" * 32)
         part = tmp / "day=2024-05-01"

@@ -24,12 +24,10 @@ SF0001 = "/root/testdata/sf0.001"
 
 QUERIES = all_queries()
 
-# Bounded, intentional cross products only:
-#   j7 zero-fills a small day x dim grid; a11 joins two
-#   single-row aggregates; a13 spans legend breaks over a handful of
-#   driver-built rows.
+# Bounded, intentional cross products only: a11 joins two single-row
+#   aggregates; a13 spans legend breaks over a handful of driver-built
+#   rows.
 NESTED_LOOP_OK = {
-    "j7_crossjoin_zerofill",
     "a11_summary_totals",
     "a13_legend_breaks",
 }
@@ -327,7 +325,8 @@ def test_cur10_eval_broadcasts_corpus_rolls_up_once(spark):
 
 
 # the enriched table's layout: existing enriched_focos partitions and
-# process_batch's select(*prior.columns) depend on it
+# process_batch's read of the prior rows in the pass's column order
+# depend on it
 ENRICHED_LAYOUT = [
     ("terrai_cod", "string"),
     ("cd_cnuc", "string"),
@@ -358,7 +357,7 @@ ENRICHED_LAYOUT = [
 
 
 def test_batch_is_one_map_in_pandas_pass(spark, tmp_path):
-    """The plan process_batch pins reads, curates, dedups and enriches
+    """The plan process_batch collects reads, curates, dedups and enriches
     the landed files in a single mapInPandas over one row per file date:
     no CSV scan, no Window for the dedup, no Exchange, no join for the
     names, and the enriched table keeps its column layout."""
@@ -389,21 +388,22 @@ def test_batch_is_one_map_in_pandas_pass(spark, tmp_path):
 
 
 def test_new_rows_scan_only_the_batch_file_dates(spark, tmp_path):
-    """The idempotency anti-join reads curated_focos through partition
-    filters on the batch's file dates, never the whole table."""
+    """The idempotency anti-join runs inside each pass task, which reads
+    only its own date's partition of curated_focos, never the whole
+    table: here the other date's file is unreadable, and an absent
+    date reads nothing."""
     import datetime as dt
 
-    from inpe_queimadas_etl_spark.pipeline import not_loaded
+    from inpe_queimadas_etl_spark.pipeline import loaded_hashes
 
     curated = tmp_path / "curated_focos"
     spark.createDataFrame(
-        [("a", dt.date(2024, 5, 1)), ("b", dt.date(2024, 5, 2))],
+        [("a", dt.date(2024, 5, 1)), ("b", dt.date(2024, 5, 2)), ("c", dt.date(2024, 5, 2))],
         "event_hash string, file_date date",
     ).write.partitionBy("file_date").parquet(str(curated))
-    batch = spark.createDataFrame([("b", 1.0), ("c", 2.0)], "event_hash string, lat double")
-    out = not_loaded(batch, spark.read.parquet(str(curated)), [dt.date(2024, 5, 2)])
-    plan = _plan(out)
-    scans = [p for p in plan.split("PartitionFilters: ")[1:] if "file_date" in p.split("]")[0]]
-    assert scans, plan
-    assert out.columns == batch.columns
-    assert sorted(r["event_hash"] for r in out.collect()) == ["c"]
+    other = list((curated / "file_date=2024-05-01").glob("*.parquet"))
+    assert other
+    for f in other:
+        f.write_bytes(b"not parquet")
+    assert sorted(loaded_hashes(str(curated), dt.date(2024, 5, 2))) == ["b", "c"]
+    assert loaded_hashes(str(curated), dt.date(2024, 5, 3)) == []
