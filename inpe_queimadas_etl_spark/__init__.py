@@ -7,9 +7,8 @@ curated and deduplicated, enriched by point-in-polygon, rolled up
 into marts, published to a partitioned warehouse and served to a
 dashboard. Alongside it sits a training-corpus materialization
 (``corpus_pipeline`` over the ``corpus_ops`` dedup, curation, split,
-selection and packing operators) and the kernel suite: relational,
-dedup and text-analysis operators, each checked against a DuckDB
-oracle.
+selection and packing operators) and the kernel suite: dedup and
+text-analysis operators, each checked against a DuckDB oracle.
 
 Layout
 ------
@@ -40,7 +39,7 @@ Layout
                  foreachBatch over the landing dir that runs the batch
                  pipeline step per landed daily CSV.
 - ``suite``      the kernel suite: name -> (Spark callable, DuckDB
-                 oracle SQL), timed by bench.py.
+                 oracle SQL), checked by tests/test_suite_oracle.py.
 """
 
 __version__ = "0.1.0"

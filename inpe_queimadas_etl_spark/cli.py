@@ -20,6 +20,7 @@ import argparse
 import datetime as dt
 import json
 import logging
+import math
 import sys
 from pathlib import Path
 
@@ -56,12 +57,14 @@ def load_dims(spark, dims_dir: str) -> dict:
     be a shapefile (<name>.shp+.dbf) or a GeoJSON FeatureCollection
     (<name>.geojson) — the two ogr2ogr-style formats the reference's
     dim loader accepts — and formats can mix within one directory."""
-    from .marts import ref_uf_area
+    from pyspark.sql import types as T
+
+    from .session import local_df
     from .sources.geojson_source import features_from_geojson
     from .sources.shapefile import (
         MUNICIPIO_FIELDS,
         features_from_shapefile,
-        municipios_dim,
+        municipio_rows,
     )
 
     d = Path(dims_dir)
@@ -77,7 +80,19 @@ def load_dims(spark, dims_dir: str) -> dict:
             raise FileNotFoundError(
                 f"missing dim: {shp} (or {gj.name}) in {dims_dir}"
             )
-    dims["uf_area"] = ref_uf_area(municipios_dim(spark, dims["municipios"]))
+    # A6 (sql/ref/05_ref_uf_area.sql:10-18): sum(area_km2) group by uf
+    # over the typed municipality rows, null UFs dropped. fsum is exact,
+    # then rounded once, so no core count or row order moves the last
+    # digit.
+    by_uf: dict[str, list[float]] = {}
+    for _, _, uf, area in municipio_rows(dims["municipios"]):
+        if uf is not None:
+            by_uf.setdefault(uf, []).append(area)
+    dims["uf_area"] = local_df(
+        spark,
+        [(uf, math.fsum(v)) for uf, v in by_uf.items()],
+        T.StructType.fromDDL("uf string, area_km2 double not null"),
+    )
     return dims
 
 

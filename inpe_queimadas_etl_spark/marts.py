@@ -12,7 +12,7 @@ the level above:
 - day cube -> the five daily marts and the serving fact MV;
 - daily municipality / UF marts -> the monthly marts (counts summed,
   names, UF and areas carried by ``max``);
-- daily UF mart -> the moving-average trend and the period stats.
+- daily UF mart -> the moving-average trend.
 
 Each builder returns a table with an explicit schema: the columns,
 types and nullability Spark gave these tables (a ``count(*)`` is
@@ -26,8 +26,6 @@ Rounding parity: ``round_half_up`` rounds like Spark's ``round`` on
 doubles.
 Density formula parity (A1/A3): round(100 * n / nullif(area, 0), 4)
 (sql/marts/10_focos_diario_municipio.sql:44-47).
-Peak tie-break parity (A5/J9): order by n desc, day asc — earliest
-day wins (sql/marts/40_focos_periodo_uf.sql:41-47).
 Trend parity (W1): ROWS frames, not RANGE — gaps shrink the window
 (sql/marts/30_focos_diario_uf_trend.sql:27-36).
 """
@@ -40,8 +38,6 @@ from decimal import ROUND_HALF_UP, Context, Decimal
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # the fact MV's grain, in enriched_focos column names
 CUBE_KEYS = (
@@ -102,17 +98,6 @@ MV_FOCOS_DAY_DIM = pa.schema(
     + [(c, _STR) for c in ("uf", "cd_mun", "mun_nm_mun", "bioma", "cd_bioma")]
     + [(c, _STR) for c in ("uc_nome", "cd_cnuc", "ti_nome", "terrai_cod")]
     + [_counted(False)]
-)
-PERIODO_UF = pa.schema(
-    [
-        ("uf", _STR),
-        ("total_focos", _I64),
-        ("media_diaria", _F64),
-        ("max_diario", _I64),
-        pa.field("dias_com_focos", _I64, False),
-        ("dia_pico", pa.date32()),
-        ("focos_pico", _I64),
-    ]
 )
 DIARIO_UF_TREND = pa.schema(
     [("day", pa.date32()), ("uf", _STR), _counted(True), ("ma7", _F64), ("ma30", _F64)]
@@ -227,19 +212,6 @@ def focos_mensal_uf(daily_uf: pa.Table) -> pa.Table:
     return _with_uf_density(cols, MENSAL_UF)
 
 
-def ref_uf_area(municipios_dim: DataFrame) -> DataFrame:
-    """A6 (sql/ref/05_ref_uf_area.sql:10-18): UF area dim rebuilt from
-    the municipality dim — `sum(area_km2) group by uf`, null UFs
-    dropped, null sums coalesced to 0. The reference upserts by uf
-    (`on conflict do update`); the dim is tiny, so the Spark analog is
-    a full recompute + overwrite (K4)."""
-    return (
-        municipios_dim.filter(F.col("uf").isNotNull())
-        .groupBy("uf")
-        .agg(F.coalesce(F.sum("area_km2"), F.lit(0.0)).alias("area_km2"))
-    )
-
-
 def _focos_by_dim(cube: pa.Table, code_col: str, name_col: str) -> pa.Table:
     """A4 (sql/marts/40/50/60): daily count per biome/UC/TI."""
     rows = cube.filter(pc.is_valid(cube[code_col]))
@@ -262,36 +234,6 @@ def focos_diario_uc(cube: pa.Table) -> pa.Table:
 
 def focos_diario_ti(cube: pa.Table) -> pa.Table:
     return _focos_by_dim(cube, "terrai_cod", "ti_nome")
-
-
-def focos_periodo_uf(daily_uf: pa.Table) -> pa.Table:
-    """A5 + J9 (sql/marts/40_focos_periodo_uf.sql:22-73): period stats
-    with peak day, earliest day winning count ties: the first row of
-    each UF in (n desc, day asc) order."""
-    ranked = daily_uf.sort_by(
-        [("uf", "ascending"), ("n_focos", "descending"), ("day", "ascending")]
-    )
-    g = ranked.group_by("uf", use_threads=False).aggregate(
-        [
-            ("n_focos", "sum"),
-            ("n_focos", "max"),
-            ("n_focos", "count", pc.CountOptions(mode="all")),
-            ("day", "first"),
-            ("n_focos", "first"),
-        ]
-    )
-    total, days = g["n_focos_sum"], g["n_focos_count"]
-    mean = pc.divide(pc.cast(total, _F64), pc.cast(days, _F64))
-    cols = {
-        "uf": g["uf"],
-        "total_focos": total,
-        "media_diaria": round_half_up(mean, 2),
-        "max_diario": g["n_focos_max"],
-        "dias_com_focos": days,
-        "dia_pico": g["day_first"],
-        "focos_pico": g["n_focos_first"],
-    }
-    return pa.table(cols, schema=PERIODO_UF)
 
 
 def focos_diario_uf_trend(daily_uf: pa.Table) -> pa.Table:

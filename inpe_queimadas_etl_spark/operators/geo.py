@@ -76,22 +76,6 @@ def make_polygon(poly_id: str, exterior, holes=(), **props) -> PolyFeature:
     return PolyFeature(poly_id=poly_id, rings=tuple(rings), props=dict(props))
 
 
-def grid_cells(
-    x0: float, y0: float, x1: float, y1: float, step: float, prefix: str = "cell"
-) -> list[PolyFeature]:
-    """Axis-aligned grid-cell polygons covering [x0,x1) x [y0,y1)."""
-    cells = []
-    nx = int(round((x1 - x0) / step))
-    ny = int(round((y1 - y0) / step))
-    for ix in range(nx):
-        for iy in range(ny):
-            cx0, cy0 = x0 + ix * step, y0 + iy * step
-            cx1, cy1 = cx0 + step, cy0 + step
-            ring = [(cx0, cy0), (cx1, cy0), (cx1, cy1), (cx0, cy1), (cx0, cy0)]
-            cells.append(make_polygon(f"{prefix}_{ix}_{iy}", ring))
-    return cells
-
-
 # points x segments broadcast blocks are capped at this many elements
 # (~32 MB of float64 per temporary) so dense rings never blow task memory
 _BLOCK_ELEMS = 4_000_000

@@ -118,98 +118,13 @@ def get_spark(
     return spark
 
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-# Testdata columns written with parquet TIMESTAMP(NANOS), which Spark
-# only reads as raw longs (spark.sql.legacy.parquet.nanosAsLong).
-_NANO_TS_COLS = {"ts", "o_orderdate", "l_shipdate"}
+# the synthetic testdata tables (TESTDATA.md) the suite's oracles read
+TABLE_NAMES = ("documents", "embeddings")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-provided parquet table (TESTDATA.md).
-
-    Nanosecond-precision timestamp columns are read as nano-longs and
-    normalized to TIMESTAMP (microsecond truncation — matching how
-    DuckDB reads the same files for the oracle)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    for field in df.schema.fields:
-        if field.name in _NANO_TS_COLS and isinstance(field.dataType, T.LongType):
-            # Keep the raw int64 column (renamed __{col}_ns): a filter
-            # on the reconstructed timestamp is a post-scan expression
-            # Catalyst cannot push into parquet, but day_filter()
-            # rewrites date bounds onto the raw long, which DOES reach
-            # the scan (PushedFilters -> row-group min/max pruning).
-            raw = f"__{field.name}_ns"
-            df = df.withColumnRenamed(field.name, raw).withColumn(
-                field.name,
-                F.timestamp_micros(F.expr(f"`{raw}` div 1000")),
-            )
-    return df
-
-
-_NS_PER_DAY = 86_400 * 1_000_000_000
-
-
-def _date_ns(day: str) -> int:
-    """UTC midnight of YYYY-MM-DD as nanoseconds since the epoch."""
-    import datetime as dt
-
-    d = dt.datetime.strptime(day, "%Y-%m-%d").replace(tzinfo=dt.timezone.utc)
-    return int(d.timestamp()) * 1_000_000_000
-
-
-def day_filter(df, col: str, op: str, day: str):
-    """Date-granularity predicate on a timestamp fact column that
-    reaches the parquet scan as a pushed filter (row-group min/max
-    pruning on a date-clustered fact table, vs the full scan a
-    `to_date(col) <= lit` wrapper forces — Catalyst cannot push a
-    filter through the cast). `to_date(ts) <= D` is exactly
-    `ts < midnight(D+1)` under the UTC session timezone. For nano
-    columns the bound is expressed on the raw int64 sibling kept by
-    load_table; typed timestamp columns compare directly against a
-    timestamp literal. Ops: < <= > >= on to_date(col)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    raw = f"__{col}_ns"
-    if raw in df.columns:
-        c = F.col(raw)
-        lo = _date_ns(day)
-        return {
-            "<": c < lo,
-            "<=": c < lo + _NS_PER_DAY,
-            ">": c >= lo + _NS_PER_DAY,
-            ">=": c >= lo,
-        }[op]
-    nxt = (
-        dt.datetime.strptime(day, "%Y-%m-%d") + dt.timedelta(days=1)
-    ).strftime("%Y-%m-%d")
-    dtype = {f.name: f.dataType.simpleString() for f in df.schema.fields}[col]
-    c = F.col(col)
-    bound = lambda d: F.lit(d).cast(dtype)  # noqa: E731
-    return {
-        "<": c < bound(day),
-        "<=": c < bound(nxt),
-        ">": c >= bound(nxt),
-        ">=": c >= bound(day),
-    }[op]
+    """Read one synthetic testdata parquet table (TESTDATA.md)."""
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def local_df(spark: SparkSession, rows, schema: T.StructType):

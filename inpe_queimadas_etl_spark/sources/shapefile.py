@@ -279,29 +279,34 @@ MUNICIPIO_FIELDS = {
 }
 
 
-def municipios_dim(spark: SparkSession, feats: list[PolyFeature]) -> DataFrame:
-    """Typed municipality dim (cd_mun, nm_mun, uf, area_km2) from
-    features loaded with :data:`MUNICIPIO_FIELDS` — the Spark analog of
-    the reference's typed insert after its ogr2ogr load
-    (ensure_ref_ibge.py:185-254). Names come from the first feature of
-    an id; the area follows operators.geometry.area_km2_by_id, whose
-    geodesic fallback stands in for ``st_area(geography)/1e6`` when the
-    source has no area column."""
-    from pyspark.sql import types as T
-
-    from ..session import local_df
-
+def municipio_rows(feats: list[PolyFeature]) -> list[tuple]:
+    """One ``(cd_mun, nm_mun, uf, area_km2)`` row per municipality of
+    features loaded with :data:`MUNICIPIO_FIELDS`. Names come from the
+    first feature of an id; the area follows
+    operators.geometry.area_km2_by_id, whose geodesic fallback stands
+    in for ``st_area(geography)/1e6`` when the source has no area
+    column."""
     areas = area_km2_by_id(feats)
     first: dict[str, dict] = {}
     for f in feats:
         first.setdefault(f.poly_id, f.props)
-    rows = [
+    return [
         (pid, props.get("nm_mun"), props.get("uf"), areas[pid])
         for pid, props in first.items()
     ]
+
+
+def municipios_dim(spark: SparkSession, feats: list[PolyFeature]) -> DataFrame:
+    """Typed municipality dim (cd_mun, nm_mun, uf, area_km2) — the Spark
+    analog of the reference's typed insert after its ogr2ogr load
+    (ensure_ref_ibge.py:185-254)."""
+    from pyspark.sql import types as T
+
+    from ..session import local_df
+
     return local_df(
         spark,
-        rows,
+        municipio_rows(feats),
         T.StructType.fromDDL(
             "cd_mun string, nm_mun string, uf string, area_km2 double"
         ),

@@ -1,8 +1,7 @@
 """Declared query suite: name -> Spark callable + DuckDB oracle SQL.
 
-Every operator claimed as implemented (SURVEY.md §2 inventory + the
-training-data-pipeline extensions) registers here; ``bench.py`` times
-the registry and ``tests/test_suite_oracle.py`` runs each Spark query
+The dedup and text-analysis operators of the training-data pipeline
+register here; ``tests/test_suite_oracle.py`` runs each Spark query
 against its oracle SQL (row count + schema + order-insensitive
 values).
 
@@ -28,15 +27,14 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a suite query; ``oracle=None`` -> rows-only check."""
+def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Register a suite query with its DuckDB oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate suite query {name!r}")
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco
@@ -45,15 +43,10 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 def load_all() -> None:
     """Import every suite module so registration side effects run.
 
-    Order matters: the driver's correctness snapshot records queries in
-    registration order and historically capped at 50 rows (VERDICT r3
-    "What's wrong" #1), so the SURVEY §2 reference-surface module
-    (relational) registers before the LLM-data-pipeline extensions.
-    The registry holds 35 entries, within that cap
-    (tests/test_suite_oracle.py pins the count).
+    The registry holds 20 entries, within the correctness snapshot's
+    50-query cap (tests/test_suite_oracle.py pins the count).
     """
-    from . import relational  # noqa: F401,I001
-    from . import llmdata  # noqa: F401,I001
+    from . import llmdata  # noqa: F401
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -700,11 +700,11 @@ def dd9_canonical_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table projected to two columns.
 
     Unregistered (the suite registry is capped at 50 driver-snapshot
-    rows); oracle-compared in tests/test_suite_oracle.py and benched
-    in bench.py. Reference anchor: the reference keeps first-seen rows
-    within a file (transform/inpe_focos_diario.py:166-169); dd9 is the
-    corpus-scale generalization where "first" is replaced by an
-    explicit quality policy."""
+    rows); oracle-compared in tests/test_suite_oracle.py. Reference
+    anchor: the reference keeps first-seen rows within a file
+    (transform/inpe_focos_diario.py:166-169); dd9 is the corpus-scale
+    generalization where "first" is replaced by an explicit quality
+    policy."""
     clusters = dd7_dedup_clusters(spark, sf_dir).filter(
         F.col("cluster_size") >= 2
     )
@@ -733,8 +733,7 @@ def dd9_canonical_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nowhere near any jaccard threshold.
 #
 # UNREGISTERED (the driver registry is capped at 50) — oracle-compared
-# in tests/test_suite_oracle.py (the geo8 pattern) and benched in
-# bench.py.
+# in tests/test_suite_oracle.py (the geo8 pattern).
 
 _DD8_CHUNK_WORDS = 8
 _DD8_MIN_DOCS = 2
@@ -1488,7 +1487,7 @@ def sk1_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # All three are UNREGISTERED (the driver registry is capped at 50
 # snapshot rows) — oracle-compared in tests/test_suite_oracle.py (the
-# geo8/dd8 pattern) and benched in bench.py.
+# geo8/dd8 pattern).
 
 
 def _hash_frac_sql(expr: str) -> str:
@@ -1974,7 +1973,7 @@ def dd11_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus; a production run would reserve a non-text sentinel).
 #
 # UNREGISTERED (50-entry driver snapshot cap) — oracle-compared in
-# tests/test_suite_oracle.py, benched in bench.py.
+# tests/test_suite_oracle.py.
 
 
 def _tx8_sql(vocab_size: int = _TX8_VOCAB) -> str:
@@ -2061,7 +2060,7 @@ def tx8_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # English-likeness and must separate the langs (pinned).
 #
 # UNREGISTERED (50-entry driver snapshot cap) — oracle-compared in
-# tests/test_suite_oracle.py, benched in bench.py.
+# tests/test_suite_oracle.py.
 
 _CUR8_TARGET_LANG = "en"
 
@@ -2177,7 +2176,7 @@ def cur8_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # makes ties measure-zero; pinned in test_cur9_boundary_gap).
 #
 # UNREGISTERED (50-entry driver snapshot cap) — oracle-compared in
-# tests/test_suite_oracle.py, benched in bench.py.
+# tests/test_suite_oracle.py.
 
 
 def _cur9_sql(
@@ -2234,8 +2233,7 @@ def cur9_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # UNREGISTERED and NO SQL ORACLE: greedy iterative merging is not
 # ANSI-SQL-expressible (the documented exception class) — correctness
 # is pinned by the pure-Python mirror, the paper's worked example, and
-# the reconstruction invariant in tests/test_bpe.py; benched in
-# bench.py.
+# the reconstruction invariant in tests/test_bpe.py.
 
 _TX9_TOP_K = 2000
 _TX9_MERGES = 200
@@ -2243,8 +2241,8 @@ _TX9_MERGES = 200
 # trained merge table per (sf_dir, geometry) — the model is a
 # train-once artifact exactly like tx7's weight table (_TX7_WDF_CACHE
 # convention): a deployment trains one tokenizer and scores every
-# corpus pass with it, so the bench's repeated runs time the SCORING
-# scan, not a re-train per run
+# corpus pass with it, so repeated runs time the SCORING scan, not a
+# re-train per run
 _TX9_MERGE_CACHE: dict = {}
 
 
@@ -2289,7 +2287,7 @@ def tx9_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hit-window counts on both engines.
 #
 # UNREGISTERED (50-entry driver snapshot cap) — oracle-compared in
-# tests/test_suite_oracle.py, benched in bench.py.
+# tests/test_suite_oracle.py.
 
 
 def _cur10_sql(win: int = _CUR10_WIN) -> str:
@@ -2360,15 +2358,11 @@ def cur10_substring_decontamination(
 # The driver registry holds at most 50 entries (snapshot cap, round-4
 # convention), so the six operators added in rounds 5-6 that still
 # lacked a hard driver-CORRECTNESS row — dd10, dd11, cur8, cur9, cur10,
-# tx8 — register through ONE composite entry,
-# mirroring `micro_ops_battery` (suite/relational.py): each operator's
+# tx8 — register through ONE composite entry: each operator's
 # full output is melted to (chk, key_s, n, v) rows and unioned, and the
 # oracle unions the same per-operator DuckDB SQL (the exact constants
 # the pytest oracle suite already compares one by one), so a single
-# wrong span / weight / logprob flips the battery's value hash. It
-# took the registry slot j7_crossjoin_zerofill vacated (J7 keeps its
-# registered pass through geo4_uf_choropleth_day, which shares the
-# dense cross-join + zero-fill shape, plus its own pytest oracle).
+# wrong span / weight / logprob flips the battery's value hash.
 
 
 def _melt_battery(df: DataFrame, chk: str, key_s, n, v) -> DataFrame:

@@ -23,6 +23,17 @@ def _cell(x0, y0, w=1.0, h=1.0):
     return [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h), (x0, y0)]
 
 
+def grid_cells(x0, y0, x1, y1, step, prefix="cell"):
+    """Axis-aligned grid-cell polygons covering [x0,x1) x [y0,y1)."""
+    nx = int(round((x1 - x0) / step))
+    ny = int(round((y1 - y0) / step))
+    return [
+        make_polygon(f"{prefix}_{ix}_{iy}", _cell(x0 + ix * step, y0 + iy * step, step, step))
+        for ix in range(nx)
+        for iy in range(ny)
+    ]
+
+
 def municipios():
     feats = []
     for row, uf in enumerate(UFS):

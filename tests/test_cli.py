@@ -407,6 +407,38 @@ def test_load_dims_mixed_formats(spark, dims_dir, tmp_path):
     assert got_area == pytest.approx(ref_area)
 
 
+def test_uf_area_is_the_exact_sum(spark, dims_dir, tmp_path):
+    """Every left-to-right or tree-shaped float sum of these three areas
+    reads 1518.2510000000002; the UF area is their exact sum rounded
+    once (math.fsum), whatever the core count. A municipality counts
+    once however many parts it has, and a null UF is dropped."""
+    import math
+    import shutil
+
+    from inpe_queimadas_etl_spark.operators.geo import make_polygon
+    from inpe_queimadas_etl_spark.sources.geojson_source import write_geojson
+
+    d = tmp_path / "exact_dims"
+    d.mkdir()
+    for name in ("biomas", "ucs", "tis"):
+        for ext in (".shp", ".dbf"):
+            shutil.copy(f"{dims_dir}/{name}{ext}", d / f"{name}{ext}")
+    areas = [8.893, 587.955, 921.403]
+    assert areas[0] + areas[1] + areas[2] != math.fsum(areas)
+    feats = [
+        make_polygon(f"m{i}", G._cell(float(i), 0.0), nm_mun=f"M{i}", uf="AA", area_km2=a)
+        for i, a in enumerate(areas)
+    ]
+    feats += [
+        make_polygon("m0", G._cell(0.0, 1.0), nm_mun="M0", uf="AA", area_km2=areas[0]),
+        make_polygon("m9", G._cell(9.0, 0.0), nm_mun="M9", uf=None, area_km2=5.0),
+    ]
+    write_geojson(str(d / "municipios.geojson"), feats, id_field="cd_mun")
+    dims = cli.load_dims(spark, str(d))
+    assert dims["uf_area"].schema.simpleString() == "struct<uf:string,area_km2:double>"
+    assert [tuple(r) for r in dims["uf_area"].collect()] == [("AA", math.fsum(areas))]
+
+
 @pytest.mark.parametrize("fmt", ["shp", "geojson"])
 def test_enriched_area_falls_back_to_geometry(spark, dims_dir, tmp_path, fmt):
     """A municipality dim without an area column: enrichment takes the

@@ -104,22 +104,6 @@ def _daily_uf(rows: list[tuple]) -> pa.Table:
     )
 
 
-def test_periodo_peak_tie_earliest_day():
-    """J9 tie-break: equal counts on two days -> earliest day wins
-    (sql/marts/40_focos_periodo_uf.sql:41-47)."""
-    daily = _daily_uf(
-        [
-            (dt.date(2024, 5, 3), "AA", 5),
-            (dt.date(2024, 5, 1), "AA", 5),
-            (dt.date(2024, 5, 2), "AA", 2),
-        ]
-    )
-    row = marts.focos_periodo_uf(daily).to_pylist()[0]
-    assert str(row["dia_pico"]) == "2024-05-01"
-    assert row["total_focos"] == 12
-    assert row["media_diaria"] == 4.0
-
-
 def test_trend_rows_frame_with_gap():
     """W1: ROWS frame means a gap day shrinks the window, it does not
     zero-fill (sql/marts/30:27-36)."""

@@ -10,7 +10,7 @@ import math
 import numpy as np
 import pytest
 
-from inpe_queimadas_etl_spark.operators.geo import grid_cells, make_polygon
+from inpe_queimadas_etl_spark.operators.geo import make_polygon
 from inpe_queimadas_etl_spark.operators.geometry import (
     _DEG_M,
     bbox_center,
@@ -28,6 +28,8 @@ from inpe_queimadas_etl_spark.operators.geometry import (
     simplify_feature,
     simplify_ring,
 )
+
+from . import fixtures_geo as G
 
 
 def _square(x0, y0, size):
@@ -142,7 +144,7 @@ class TestSimplify:
 
 class TestDissolve:
     def test_grid_tiling_merges_to_one_square(self):
-        cells = grid_cells(0, 0, 2, 2, 1.0)  # 2x2 unit cells
+        cells = G.grid_cells(0, 0, 2, 2, 1.0)  # 2x2 unit cells
         out = dissolve(cells, "UF1")
         assert len(out) == 1
         assert out[0].poly_id == "UF1"
@@ -152,7 +154,7 @@ class TestDissolve:
 
     def test_tiling_with_missing_center_gets_hole(self):
         cells = [
-            c for c in grid_cells(0, 0, 3, 3, 1.0) if c.poly_id != "cell_1_1"
+            c for c in G.grid_cells(0, 0, 3, 3, 1.0) if c.poly_id != "cell_1_1"
         ]
         out = dissolve(cells, "UF2")
         assert len(out) == 1

@@ -6,16 +6,18 @@ The dashboard query layer (``queries``) answers from the serving
 context's in-memory cube, so it must not import Spark at all.
 Every module of the package must be reachable by imports from its
 entry points, so code nothing runs cannot linger, and every package
-name that ``bench.py``, ``scripts/`` and ``perfbench/`` import must
-exist, so a deletion or a move cannot strand a script. Spark-free: the
-checks read each module's source, and the traced benchmark's wrap list
-and the scripts' imports are checked against the package's
-attributes."""
+name and repository module that ``scripts/`` and ``perfbench/``
+import must exist, so a deletion or a move cannot strand a script.
+Spark-free: the checks read each module's source, and the traced
+benchmark's wrap list and the scripts' imports are checked against
+the package's attributes and the repository modules' sources."""
 
 from __future__ import annotations
 
 import ast
 import importlib
+import importlib.util
+import sys
 from collections import Counter
 from pathlib import Path
 
@@ -105,7 +107,7 @@ def test_fire_path_does_not_import_vector_search_modules():
     assert not offenders, offenders
 
 
-# ``suite`` is the kernel-suite registry that bench.py times and
+# ``suite`` is the kernel-suite registry that
 # tests/test_suite_oracle.py checks against its DuckDB oracles
 ENTRY_POINTS = (
     "__main__",
@@ -155,11 +157,8 @@ def test_every_module_is_reachable_from_an_entry_point():
 
 
 REPO = PKG_DIR.parent
-SCRIPTS = (
-    REPO / "bench.py",
-    *sorted((REPO / "scripts").glob("*.py")),
-    *sorted((REPO / "perfbench").glob("*.py")),
-)
+SCRIPT_DIRS = (REPO / "scripts", REPO / "perfbench")
+SCRIPTS = tuple(p for d in SCRIPT_DIRS for p in sorted(d.glob("*.py")))
 
 
 def _package_name_imports(path: Path):
@@ -207,7 +206,72 @@ def test_scripts_import_only_existing_package_names():
                 for name in _missing_names(module, names)
             )
     # the scan must find the scripts' imports, or it passes vacuously
-    assert checked > 50
+    assert checked > 30
+    assert broken == []
+
+
+# the top-level modules a script may import by bare name: its
+# launcher puts the repo root, scripts/ and perfbench/ on sys.path
+REPO_MODULES = {
+    p.stem: p for d in (REPO, *SCRIPT_DIRS) for p in sorted(d.glob("*.py"))
+}
+
+
+def _top_level_names(path: Path) -> set[str]:
+    """Names a ``from <module> import name`` of ``path`` can bind:
+    its top-level definitions, assignments and imports."""
+    out: set[str] = set()
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out.update(n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            out.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return out
+
+
+def _is_installed(name: str) -> bool:
+    """Whether ``name`` imports from the standard library or an
+    installed distribution, not from a file of this repository."""
+    if name in sys.stdlib_module_names:
+        return True
+    spec = importlib.util.find_spec(name)
+    origin = Path(spec.origin).resolve() if spec and spec.origin else None
+    return spec is not None and not (origin and origin.is_relative_to(REPO))
+
+
+def test_scripts_import_only_existing_repo_modules():
+    """A bare-name import in a script (``import gen``, ``from
+    scaling_dedup import gen_documents``, function-local ones too) that
+    is neither installed nor the package must name a module at the
+    repo root, in scripts/ or in perfbench/, and each imported name
+    must be defined at that module's top level."""
+    checked = 0
+    broken = []
+    for path in SCRIPTS:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and node.level == 0:
+                imports = [(node.module, [a.name for a in node.names])]
+            elif isinstance(node, ast.Import):
+                imports = [(a.name, []) for a in node.names]
+            else:
+                continue
+            for module, names in imports:
+                top = module.split(".")[0]
+                if top == PKG or (top not in REPO_MODULES and _is_installed(top)):
+                    continue
+                checked += 1
+                where = f"{path.relative_to(REPO)}:{node.lineno}"
+                if module not in REPO_MODULES:
+                    broken.append(f"{where}: {module}")
+                    continue
+                defined = _top_level_names(REPO_MODULES[module])
+                broken.extend(f"{where}: {module}.{n}" for n in names if n not in defined)
+    # the scan must find the scripts' repo-module imports, or it passes
+    # vacuously
+    assert checked > 10
     assert broken == []
 
 
