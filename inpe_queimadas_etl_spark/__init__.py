@@ -7,8 +7,7 @@ curated and deduplicated, enriched by point-in-polygon, rolled up
 into marts, published to a partitioned warehouse and served to a
 dashboard. Alongside it sits a training-corpus materialization
 (``corpus_pipeline`` over the ``corpus_ops`` dedup, curation, split,
-selection and packing operators) and the kernel suite: dedup and
-text-analysis operators, each checked against a DuckDB oracle.
+selection and packing operators).
 
 Layout
 ------
@@ -31,15 +30,13 @@ Layout
                  ``corpus-curate``.
 - ``operators``  reusable distributed operators: geo joins and
                  geometry, BPE, rolling window hashes, mixture
-                 resampling, pack materialization, passage dedup.
+                 resampling, pack materialization.
 - ``corpus_pipeline`` / ``corpus_ops``
                  the training-corpus materialization behind
                  ``corpus-curate`` and the operators it composes.
 - ``streaming``  the landing stream: a Structured Streaming
                  foreachBatch over the landing dir that runs the batch
                  pipeline step per landed daily CSV.
-- ``suite``      the kernel suite: name -> (Spark callable, DuckDB
-                 oracle SQL), checked by tests/test_suite_oracle.py.
 """
 
 __version__ = "0.1.0"

@@ -4,10 +4,9 @@ packing, duplicate-span removal, the bigram-LM gate, DSIR selection
 and substring decontamination.
 
 Each operator is a shuffle-minimal Spark plan over ``(doc_id, text,
-...)`` frames. ``suite/llmdata.py`` wraps each one as a kernel-suite
-query with its DuckDB oracle SQL; tests/test_suite_oracle.py checks
-them against it (or a pure-Python mirror) and tests/test_plans.py pins
-their plan shapes.
+...)`` frames. tests/corpus_oracles.py states each one as DuckDB
+oracle SQL; tests/test_suite_oracle.py checks them against it (or a
+pure-Python mirror) and tests/test_plans.py pins their plan shapes.
 """
 
 from __future__ import annotations
@@ -523,12 +522,11 @@ _TX5_PHONE_RE = "\\b[0-9]{3}-[0-9]{4}\\b"
 
 
 def pii_redact(docs: DataFrame) -> DataFrame:
-    """The APPLYING form of tx5 over ``(doc_id, text)``: ``(doc_id,
-    text, n_pii)`` with emails/phones replaced by <EMAIL>/<PHONE>
-    placeholders and the match count carried for auditing. Same JVM
-    regex expressions as the tx5 report — scan-shaped, zero shuffle,
-    pipelines with whatever stage follows (corpus-curate --scrub-pii
-    consumes it)."""
+    """PII scrub (tx5) over ``(doc_id, text)``: ``(doc_id, text,
+    n_pii)`` with emails/phones replaced by <EMAIL>/<PHONE>
+    placeholders and the match count carried for auditing. JVM regex
+    expressions — scan-shaped, zero shuffle, pipelines with whatever
+    stage follows (corpus-curate --scrub-pii consumes it)."""
     redacted = F.regexp_replace(
         F.regexp_replace("text", _TX5_EMAIL_RE, "<EMAIL>"),
         _TX5_PHONE_RE,
@@ -558,7 +556,7 @@ def split_from_content(
 ) -> DataFrame:
     """DataFrame-level body of cur6_leakfree_split — injectable so
     corpus_pipeline's ``split_by="content"`` mode shares the exact
-    registered semantics (the cheaper split for ALREADY-DEDUPED
+    oracle-checked semantics (the cheaper split for ALREADY-DEDUPED
     corpora, where near-dup closure has nothing left to close)."""
     lo, hi = bounds
     if not 0.0 <= lo <= hi <= 1.0:

@@ -27,8 +27,7 @@ No SQL oracle: greedy iterative merging is not expressible in ANSI
 SQL — correctness is pinned by a pure-Python mirror (the same
 algorithm run outside Spark), the paper's worked example, and the
 reconstruction invariant (concatenating a word's subword tokens
-reproduces the word). The suite query (tx9) is therefore
-benched-but-unregistered with a rows-only driver check.
+reproduces the word), all in tests/test_bpe.py.
 """
 
 from __future__ import annotations

@@ -1,9 +1,9 @@
 """Domain-mixture resampling: downsample a corpus to a target mixture
 of sources under an optional token budget.
 
-This is the parameterized, library-grade form of the suite's
-``cur5_mixture_resample`` (uniform weights, no budget — see
-suite/llmdata.py, whose DuckDB oracle pins the shared semantics).
+This is the parameterized, library-grade form of cur5 (uniform
+weights, no budget — see tests/corpus_oracles.py, whose DuckDB oracle
+pins the shared semantics).
 Training-data pipelines rarely want uniform: they want "30 % web,
 30 % code, 20 % books, 20 % academic, capped at 2T tokens". That is a
 WEIGHTED target with a BUDGET, and because upsampling is out of scope

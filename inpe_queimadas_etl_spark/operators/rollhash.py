@@ -37,8 +37,8 @@ fingerprints are only ever compared WITHIN a run, never against the
 DuckDB oracle, whose md5 convention pins the same span/contamination
 OUTPUT coordinates).
 
-Reference parity: the md5-window form stays in suite/llmdata.py as the
-JVM-side anchor (`_md5_window_shingles`); tests/test_rollhash.py pins
+Reference parity: the md5-window form stays in tests/corpus_oracles.py
+as the JVM-side anchor (`_md5_window_shingles`); tests/test_rollhash.py pins
 (a) the vectorized math against a pure-Python big-int mirror and (b)
 span-output equality of the two shingle generators on real and planted
 corpora, hypothesis-fuzzed.

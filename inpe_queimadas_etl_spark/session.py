@@ -118,10 +118,6 @@ def get_spark(
     return spark
 
 
-# the synthetic testdata tables (TESTDATA.md) the suite's oracles read
-TABLE_NAMES = ("documents", "embeddings")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one synthetic testdata parquet table (TESTDATA.md)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

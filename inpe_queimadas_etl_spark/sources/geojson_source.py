@@ -1,5 +1,4 @@
-"""GeoJSON dim source: FeatureCollection -> PolyFeature lists / typed
-municipality dim.
+"""GeoJSON dim source: FeatureCollection -> PolyFeature lists.
 
 The reference loads IBGE geo dims through ogr2ogr, which accepts both
 shapefiles and GeoJSON (ensure_ref_ibge.py:185-254); our shapefile
@@ -95,14 +94,6 @@ def features_from_geojson(
                 PolyFeature(poly_id=str(pid), rings=tuple(part), props=dict(props))
             )
     return feats
-
-
-def municipios_dim_from_geojson(spark, path: str):
-    """Typed municipality dim from a GeoJSON FeatureCollection — same
-    fields and rules as shapefile.municipios_dim_from_shapefile."""
-    from .shapefile import MUNICIPIO_FIELDS, municipios_dim
-
-    return municipios_dim(spark, features_from_geojson(path, **MUNICIPIO_FIELDS))
 
 
 def write_geojson(

@@ -42,7 +42,6 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.geo import PolyFeature
 from ..operators.geometry import area_km2_by_id, ring_signed_area_deg2
@@ -294,36 +293,6 @@ def municipio_rows(feats: list[PolyFeature]) -> list[tuple]:
         (pid, props.get("nm_mun"), props.get("uf"), areas[pid])
         for pid, props in first.items()
     ]
-
-
-def municipios_dim(spark: SparkSession, feats: list[PolyFeature]) -> DataFrame:
-    """Typed municipality dim (cd_mun, nm_mun, uf, area_km2) — the Spark
-    analog of the reference's typed insert after its ogr2ogr load
-    (ensure_ref_ibge.py:185-254)."""
-    from pyspark.sql import types as T
-
-    from ..session import local_df
-
-    return local_df(
-        spark,
-        municipio_rows(feats),
-        T.StructType.fromDDL(
-            "cd_mun string, nm_mun string, uf string, area_km2 double"
-        ),
-    )
-
-
-def municipios_dim_from_shapefile(
-    spark: SparkSession,
-    shp_path: str,
-    dbf_path: str | None = None,
-    encoding: str = "latin-1",
-) -> DataFrame:
-    """Typed municipality dim from an IBGE-style shapefile."""
-    feats = features_from_shapefile(
-        shp_path, dbf_path, encoding=encoding, **MUNICIPIO_FIELDS
-    )
-    return municipios_dim(spark, feats)
 
 
 # ---------------------------------------------------------------------------

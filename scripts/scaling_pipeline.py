@@ -4,12 +4,12 @@
 The composed materialization (dd7 labels -> curation -> repetition ->
 mixture -> split -> pack -> export) should scale like its dominant
 stage — dd7's banded label propagation (measured exponent ~0.88 in
-scaling_dedup.py) — because every other stage is scan-shaped or
-K-row driver math and the labels are computed ONCE and shared. A
-super-linear pipeline exponent would mean a stage recomputes or
-joins something it should share.
+the retired scaling_dedup.py sweep) — because every other stage is
+scan-shaped or K-row driver math and the labels are computed ONCE and
+shared. A super-linear pipeline exponent would mean a stage recomputes
+or joins something it should share.
 
-Protocol: the same realistic Zipfian generator as scaling_dedup.py at
+Protocol: a realistic Zipfian generator (``_gen_documents``) at
 5k / 15.8k / 50k docs; one warm-up run at the smallest size, then the
 min of 2 timed full-pipeline runs per size (each run includes the
 parquet export and manifest aggregation — the real end-to-end cost).
@@ -40,23 +40,71 @@ import sys
 import tempfile
 import time
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scaling_common import fit_exponent  # noqa: E402
-from scaling_dedup import gen_documents as _gen_documents  # noqa: E402
 
 SIZES = {"5k": 5_000, "15k": 15_811, "50k": 50_000}
+
+# Realistic corpus vocabulary: 10k words drawn Zipfian, like natural
+# text. This matters for what the sweep measures: the driver testdata's
+# ~30-word vocabulary makes every PPJoin prefix useless (every document
+# contains every word, so the df histogram is flat and prefix pruning
+# cannot discard anything) — that adversarial regime is measured
+# separately and recorded in SCALING.md, but the scaling exponents
+# should describe realistic corpora.
+VOCAB = [f"w{i}" for i in range(10_000)]
+ZIPF_A = 1.3
+LANGS = ["en", "en", "en", "es", "fr", "pt", "zh"]  # en-heavy, 5 distinct
+
+
+def _gen_documents(n: int, seed: int) -> pa.Table:
+    rng = np.random.default_rng(seed)
+    lens = rng.integers(8, 100, size=n)
+    nv = len(VOCAB)
+    texts = [
+        " ".join(
+            VOCAB[int(w)]
+            for w in np.minimum(rng.zipf(ZIPF_A, size=ln) - 1, nv - 1)
+        )
+        for ln in lens
+    ]
+    # deterministic duplicate tail: 2% exact copies, 3% near copies
+    # (one word appended), always of an EARLIER doc so clusters form
+    n_exact = n // 50
+    n_near = (3 * n) // 100
+    dup_src = rng.integers(0, max(1, n - n_exact - n_near), size=n_exact + n_near)
+    for i in range(n_exact):
+        texts[n - 1 - i] = texts[dup_src[i]]
+    for i in range(n_near):
+        j = n - 1 - n_exact - i
+        texts[j] = texts[dup_src[n_exact + i]] + " extra"
+    langs = [LANGS[int(x)] for x in rng.integers(0, len(LANGS), size=n)]
+    sources = [f"src{int(x)}" for x in rng.integers(0, 20, size=n)]
+    return pa.table(
+        {
+            "doc_id": pa.array(range(n), type=pa.int64()),
+            "text": pa.array(texts, type=pa.string()),
+            "lang": pa.array(langs, type=pa.string()),
+            "source": pa.array(sources, type=pa.string()),
+            "n_chars": pa.array([len(t) for t in texts], type=pa.int64()),
+        }
+    )
+
 
 _STOPS = ["the", "a", "of", "and", "to", "in"]
 
 
 def gen_documents(n: int, seed: int):
-    """scaling_dedup's Zipfian corpus, made curation-compatible. Two
-    deterministic rewrites (identical for exact-dup copies, so the
-    dup tail the dedup stages chew on is preserved):
+    """The Zipfian corpus of ``_gen_documents``, made
+    curation-compatible. Two deterministic rewrites (identical for
+    exact-dup copies, so the dup tail the dedup stages chew on is
+    preserved):
 
     - interleave English stopwords (every 4th word) — the w0..w9999
       vocabulary carries none, so cur1's language heuristic (>= 2
@@ -65,8 +113,6 @@ def gen_documents(n: int, seed: int):
       Zipf draw gives the top word a ~25 % share (real text: ~5 %),
       so cur3's top-word gate would otherwise flag ~97 % of docs and
       the sweep would time a near-empty materialization."""
-    import pyarrow as pa
-
     tbl = _gen_documents(n, seed)
     texts = []
     for t in tbl.column("text").to_pylist():
@@ -116,8 +162,6 @@ def main() -> None:
         # full-stack side inputs: an eval set carved from corpus text
         # (so the decontamination joins flag real rows) and a
         # same-distribution DSIR target slice per size
-        import pyarrow as pa
-
         eval_dir = os.path.join(tmp, "eval")
         os.makedirs(eval_dir)
         small = gen_documents(200, seed=42)

@@ -119,13 +119,20 @@ def test_spark_parity_and_compression(spark):
     assert got[3][2] is None or got[3][2] != got[3][2]
 
 
+def _tx9_bpe_tokenize(spark):
+    """BPE accounting over the testdata documents at the demo geometry:
+    trained on the top-2000-word table, 200 merges."""
+    from inpe_queimadas_etl_spark.session import load_table
+
+    docs = load_table(spark, SF0001, "documents").select("doc_id", "text")
+    return bpe_token_stats(docs, train_bpe(corpus_word_counts(docs, 2000), 200))
+
+
 def test_tx9_apply_is_zero_exchange_scan(spark):
     """The 100-TB contract: after the (driver-side, K-row) training
     collect, the encoding pass is ONE mapInPandas scan with zero
     exchanges — the merge table rides the UDF closure."""
-    from inpe_queimadas_etl_spark.suite.llmdata import tx9_bpe_tokenize
-
-    df = tx9_bpe_tokenize(spark, SF0001)
+    df = _tx9_bpe_tokenize(spark)
     import contextlib
     import io
 
@@ -138,9 +145,7 @@ def test_tx9_apply_is_zero_exchange_scan(spark):
 
 
 def test_tx9_runs_at_demo_geometry(spark):
-    from inpe_queimadas_etl_spark.suite.llmdata import tx9_bpe_tokenize
-
-    pdf = tx9_bpe_tokenize(spark, SF0001).toPandas()
+    pdf = _tx9_bpe_tokenize(spark).toPandas()
     assert len(pdf) == 500
     assert (pdf["n_bpe_tokens"] >= pdf["n_ws_tokens"] * 0).all()
     # trained merges must compress the corpus it was trained on

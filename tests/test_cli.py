@@ -442,13 +442,13 @@ def test_uf_area_is_the_exact_sum(spark, dims_dir, tmp_path):
 @pytest.mark.parametrize("fmt", ["shp", "geojson"])
 def test_enriched_area_falls_back_to_geometry(spark, dims_dir, tmp_path, fmt):
     """A municipality dim without an area column: enrichment takes the
-    typed dim's fallback (summed geodesic part area / 1e6) instead of
+    municipality rows' fallback (summed geodesic part area / 1e6) instead of
     leaving mun_area_km2, and with it the municipal density, null."""
     import shutil
 
     from inpe_queimadas_etl_spark.pipeline import batch_pass
     from inpe_queimadas_etl_spark.sources.geojson_source import (
-        municipios_dim_from_geojson,
+        features_from_geojson,
         write_geojson,
     )
 
@@ -473,10 +473,14 @@ def test_enriched_area_falls_back_to_geometry(spark, dims_dir, tmp_path, fmt):
             [("CD_MUN", "C", 10, 0), ("NM_MUN", "C", 20, 0), ("UF", "C", 2, 0)],
             lambda f: {"cd_mun": f.poly_id, **f.props},
         )
-        typed = shp.municipios_dim_from_shapefile(spark, str(d / "municipios.shp"))
+        loaded = shp.features_from_shapefile(
+            str(d / "municipios.shp"), **shp.MUNICIPIO_FIELDS
+        )
     else:
         write_geojson(str(d / "municipios.geojson"), feats, id_field="cd_mun")
-        typed = municipios_dim_from_geojson(spark, str(d / "municipios.geojson"))
+        loaded = features_from_geojson(
+            str(d / "municipios.geojson"), **shp.MUNICIPIO_FIELDS
+        )
     dims = cli.load_dims(spark, str(d))
 
     # one fire at the centre of every municipality cell
@@ -492,7 +496,7 @@ def test_enriched_area_falls_back_to_geometry(spark, dims_dir, tmp_path, fmt):
         r["mun_cd_mun"]: r["mun_area_km2"]
         for r in enriched.select("mun_cd_mun", "mun_area_km2").collect()
     }
-    want = {r["cd_mun"]: r["area_km2"] for r in typed.collect()}
+    want = {cd_mun: area for cd_mun, _, _, area in shp.municipio_rows(loaded)}
     assert len(want) == len(feats)
     assert all(a > 0 for a in want.values())
     assert got == want

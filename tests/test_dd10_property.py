@@ -12,7 +12,7 @@ from collections import Counter
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
-from inpe_queimadas_etl_spark.suite.llmdata import duplicate_spans
+from inpe_queimadas_etl_spark.corpus_ops import duplicate_spans
 
 WIN = 4
 VOCAB = ["aa", "bb", "cc"]

@@ -13,8 +13,11 @@ import pytest
 from inpe_queimadas_etl_spark import cli
 from inpe_queimadas_etl_spark.sources.geojson_source import (
     features_from_geojson,
-    municipios_dim_from_geojson,
     write_geojson,
+)
+from inpe_queimadas_etl_spark.sources.shapefile import (
+    MUNICIPIO_FIELDS,
+    municipio_rows,
 )
 
 from . import fixtures_geo as G
@@ -89,13 +92,18 @@ def test_multipolygon_splits_parts_and_drops_bad_rings(tmp_path):
     assert tri.shape[0] == 4 and (tri[0] == tri[-1]).all()
 
 
-def test_municipios_dim_matches_shapefile_contract(spark, mun_geojson):
-    dim = {r["cd_mun"]: r for r in municipios_dim_from_geojson(spark, mun_geojson).collect()}
+def _municipio_rows(path):
+    """The municipality rows cli.load_dims reads from a GeoJSON dim."""
+    return municipio_rows(features_from_geojson(path, **MUNICIPIO_FIELDS))
+
+
+def test_municipios_dim_matches_shapefile_contract(mun_geojson):
+    dim = {cd_mun: (uf, area) for cd_mun, _, uf, area in _municipio_rows(mun_geojson)}
     for f in G.municipios():
-        r = dim[f.poly_id]
-        assert r["uf"] == f.props["uf"]
+        uf, area_km2 = dim[f.poly_id]
+        assert uf == f.props["uf"]
         # fixture carries area_km2 as an attribute string: wins outright
-        assert r["area_km2"] == pytest.approx(float(f.props["area_km2"]))
+        assert area_km2 == pytest.approx(float(f.props["area_km2"]))
 
 
 def test_cli_load_dims_accepts_geojson_dir(spark, tmp_path):
@@ -113,7 +121,7 @@ def test_cli_load_dims_accepts_geojson_dir(spark, tmp_path):
     assert uf_area == pytest.approx(dict(G.uf_area_rows()))
 
 
-def test_municipios_dim_ibge_attribute_fallbacks(spark, tmp_path):
+def test_municipios_dim_ibge_attribute_fallbacks(tmp_path):
     """An ogr2ogr export carrying GEOCODIGO/NM_MUNICIP/SIGLA_UF (the
     older IBGE vintage the shapefile loader already accepts,
     shapefile.py:265-288) must load identically."""
@@ -140,10 +148,8 @@ def test_municipios_dim_ibge_attribute_fallbacks(spark, tmp_path):
         ],
     }
     p.write_text(json.dumps(doc))
-    rows = municipios_dim_from_geojson(spark, str(p)).collect()
+    rows = _municipio_rows(str(p))
     assert len(rows) == 1
-    r = rows[0]
-    assert (r["cd_mun"], r["nm_mun"], r["uf"]) == (
-        "3550308", "Sao Paulo", "SP"
-    )
-    assert r["area_km2"] == pytest.approx(1521.11)
+    cd_mun, nm_mun, uf, area_km2 = rows[0]
+    assert (cd_mun, nm_mun, uf) == ("3550308", "Sao Paulo", "SP")
+    assert area_km2 == pytest.approx(1521.11)

@@ -78,7 +78,8 @@ def test_uniform_no_budget_matches_cur5(spark):
     import pandas as pd
 
     from inpe_queimadas_etl_spark.session import load_table
-    from inpe_queimadas_etl_spark.suite.llmdata import cur5_mixture_resample
+
+    from .corpus_oracles import cur5_mixture_resample
 
     docs = load_table(spark, SF0001, "documents")
     got = (

@@ -1,8 +1,8 @@
 """Physical-plan guardrails: the properties that carry the 100 TB
 design must survive refactors, not just the small-SF results.
 
-- no suite query silently degrades to CartesianProduct or a
-  nested-loop join;
+- no oracle-checked corpus query silently degrades to
+  CartesianProduct or a nested-loop join;
 - the scan-shaped passes stay shuffle-free, and small model tables
   join as BroadcastHashJoin (no corpus-side shuffle);
 - the batch pass is one mapInPandas, and its anti-join reads only its
@@ -17,11 +17,20 @@ import re
 
 import pytest
 
-from inpe_queimadas_etl_spark.suite import all_queries
+from inpe_queimadas_etl_spark.corpus_ops import _tx8_map_to_vocab
+
+from .corpus_oracles import (
+    CHECKS,
+    cur5_mixture_resample,
+    cur6_leakfree_split,
+    cur8_dsir_selection,
+    cur9_dsir_resample,
+    cur10_substring_decontamination,
+    dd10_duplicate_spans,
+    tx8_lm_perplexity,
+)
 
 SF0001 = "/root/testdata/sf0.001"
-
-QUERIES = all_queries()
 
 
 def _plan(df, mode: str = "formatted") -> str:
@@ -31,9 +40,10 @@ def _plan(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
+# tx5 is a projection, pinned exchange-free below
+@pytest.mark.parametrize("name", sorted(set(CHECKS) - {"tx5_pii_scrub"}))
 def test_no_unintended_cross_products(spark, name):
-    plan = _plan(QUERIES[name](spark, SF0001), "simple")
+    plan = _plan(CHECKS[name][0](spark, SF0001), "simple")
     assert "CartesianProduct" not in plan, f"{name} degraded to CartesianProduct"
     assert "BroadcastNestedLoopJoin" not in plan, (
         f"{name} has a nested-loop join:\n{plan}"
@@ -41,54 +51,26 @@ def test_no_unintended_cross_products(spark, name):
 
 
 def test_map_side_curation_ops_shuffle_free(spark):
-    """cur3/cur4/tx5 are scan-shaped passes: any Exchange appearing in
-    their plans means a refactor broke the zero-shuffle property that
-    makes them free at 100 TB."""
-    for name in (
-        "cur3_repetition_filter",
-        "cur4_stratified_sample",
-        "tx5_pii_scrub",
-    ):
-        plan = _plan(QUERIES[name](spark, SF0001), "simple")
+    """cur3 and the PII scrub are scan-shaped passes: any Exchange
+    appearing in their plans means a refactor broke the zero-shuffle
+    property that makes them free at 100 TB."""
+    for name in ("cur3_repetition_filter", "tx5_pii_scrub"):
+        plan = _plan(CHECKS[name][0](spark, SF0001), "simple")
         assert "Exchange" not in plan, f"{name} gained a shuffle:\n{plan}"
 
 
 def test_pack1_single_exchange_shared_partitioning(spark):
     """pack1's rollup groups on the window's partition keys, so the
     groupBy must reuse the window exchange (exactly one shuffle)."""
-    plan = _plan(QUERIES["pack1_token_packing"](spark, SF0001), "simple")
+    plan = _plan(CHECKS["pack1_token_packing"][0](spark, SF0001), "simple")
     assert plan.count("Exchange") == 1, (
         f"pack1 expected exactly 1 exchange:\n{plan}"
     )
 
 
-def test_tx6_topk_is_take_ordered(spark):
-    """The corpus top-50 must plan as TakeOrderedAndProject (heap +
-    driver merge), never a global Sort of the distinct-gram space."""
-    plan = _plan(QUERIES["tx6_ngram_topk"](spark, SF0001), "simple")
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "Sort " not in plan, f"tx6 planned a global sort:\n{plan}"
-
-
-def test_dd2_lsh_route_is_equi_join_only(spark):
-    """The saturated-vocab fallback (dd2 prefix_order='lsh') must stay
-    an equi bucket join — the whole point of routing away from the
-    prefix path is bounded candidate volume, which a silent
-    cartesian/nested-loop degradation would void."""
-    from inpe_queimadas_etl_spark.suite.llmdata import dd2_ngram_jaccard_pairs
-
-    plan = _plan(
-        dd2_ngram_jaccard_pairs(spark, SF0001, prefix_order="lsh"), "simple"
-    )
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 def test_cur6_split_shuffle_free(spark):
     """cur6 is a pure scan-shaped projection (two md5s + CASE): any
     Exchange means the leak-free split stopped being free at 100 TB."""
-    from inpe_queimadas_etl_spark.suite.llmdata import cur6_leakfree_split
-
     plan = _plan(cur6_leakfree_split(spark, SF0001), "simple")
     assert "Exchange" not in plan, f"cur6 gained a shuffle:\n{plan}"
 
@@ -97,8 +79,6 @@ def test_cur5_rates_broadcast_corpus_never_shuffled(spark):
     """cur5's keep decision must join the K-row rate table via
     broadcast; a SortMergeJoin here would shuffle the whole corpus on
     `source` (few, skewed keys) — the exact 100-TB anti-plan."""
-    from inpe_queimadas_etl_spark.suite.llmdata import cur5_mixture_resample
-
     plan = _plan(cur5_mixture_resample(spark, SF0001), "simple")
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, (
@@ -106,49 +86,11 @@ def test_cur5_rates_broadcast_corpus_never_shuffled(spark):
     )
 
 
-def test_tx7_model_eval_shuffle_free(spark):
-    """tx7's whole model evaluation is an array transform + fold per
-    row: any Exchange means the classifier stopped being a free gate
-    in the curation scan."""
-    from inpe_queimadas_etl_spark.suite.llmdata import tx7_model_quality_score
-
-    plan = _plan(tx7_model_quality_score(spark, SF0001), "simple")
-    assert "Exchange" not in plan, f"tx7 gained a shuffle:\n{plan}"
-
-
-def test_tx7_broadcast_lookup_plan_shape(spark):
-    """tx7's 2^18-bucket variant: the model table joins as a
-    BroadcastHashJoin (O(1) bucket probe per word — never a shuffled
-    join of the exploded corpus against the model), and the only
-    shuffle is the per-document re-aggregation, whose rows are
-    map-side-combined (doc_id, n_words, partial) triples — one per
-    document, independent of model size. The rejected shapes are
-    documented in the operator: the single-row array attach memcpys
-    the whole model per row; a SortMergeJoin would shuffle every
-    exploded word."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        tx7_broadcast_quality_score,
-    )
-
-    plan = _plan(tx7_broadcast_quality_score(spark, SF0001), "simple")
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    # exactly one shuffle: the doc_id re-agg (plus the model table's
-    # BroadcastExchange, which is the point)
-    n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert n_shuffles == 1, f"expected exactly the re-agg shuffle:\n{plan}"
-    # and it is preceded by a partial aggregate (map-side combine)
-    assert "partial_sum" in plan or "HashAggregate" in plan, plan
-
-
 def test_dd10_shuffles_on_uniform_hash_and_doc(spark):
     """dd10's two shuffles must be the designed ones: repeat
     detection partitions on the 60-bit window hash (uniform — no hot
     key can exist) and the span merge partitions on doc_id (per-doc
     row count bounded by doc length). No cartesian anywhere."""
-    from inpe_queimadas_etl_spark.suite.llmdata import dd10_duplicate_spans
-
     plan = _plan(dd10_duplicate_spans(spark, SF0001))
     assert "CartesianProduct" not in plan, plan
     assert "hashpartitioning(whash" in plan, plan
@@ -161,8 +103,6 @@ def test_tx8_model_joins_broadcast_corpus_never_token_shuffled(spark):
     model-side join BROADCASTS — the corpus is never hashed on a
     token key. The only exchanges carry map-side-combined partials
     over distinct keys (vocab, C1, C2) and final per-doc score rows."""
-    from inpe_queimadas_etl_spark.suite.llmdata import tx8_lm_perplexity
-
     plan = _plan(tx8_lm_perplexity(spark, SF0001), "simple")
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -186,8 +126,6 @@ def test_tx8_vocab_mapping_refuses_unknown_column(spark):
     """The InSet vocab mapping must fail fast on a misspelled column
     (the broadcast-join form it replaced raised on one) instead of
     silently returning the column unmapped."""
-    from inpe_queimadas_etl_spark.suite.llmdata import _tx8_map_to_vocab
-
     df = spark.createDataFrame([("a", "b")], "w1 string, w2 string")
     with pytest.raises(ValueError, match="w3"):
         _tx8_map_to_vocab(df, ["a"], "w1", "w3")
@@ -202,8 +140,6 @@ def test_cur8_model_broadcasts_corpus_never_feature_shuffled(spark):
     The only exchanges carry map-side-combined partials over <= B
     distinct keys (tc, rc), single-row totals (nt, nr), or final
     per-document score rows (the doc_id rollup)."""
-    from inpe_queimadas_etl_spark.suite.llmdata import cur8_dsir_selection
-
     plan = _plan(cur8_dsir_selection(spark, SF0001), "simple")
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -215,8 +151,6 @@ def test_cur9_takeordered_no_global_sort(spark):
     """cur9's selection is TakeOrdered — per-partition k-row heaps
     merged on the driver — never a full corpus sort, and it inherits
     cur8's broadcast-only model joins."""
-    from inpe_queimadas_etl_spark.suite.llmdata import cur9_dsir_resample
-
     plan = _plan(cur9_dsir_resample(spark, SF0001), "simple")
     assert "TakeOrderedAndProject" in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -230,10 +164,6 @@ def test_cur10_eval_broadcasts_corpus_rolls_up_once(spark):
     60-bit fingerprints before any exchange), no SortMergeJoin for
     the hit join, and the per-doc rollup carries map-side partials.
     The final zero-fill left join keys on doc_id."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        cur10_substring_decontamination,
-    )
-
     plan = _plan(cur10_substring_decontamination(spark, SF0001), "simple")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan

@@ -127,7 +127,8 @@ def test_rolling_spans_equal_md5_reference_on_corpus(spark):
     real sf0.001 documents table, at dd10's win=20 and cur10's
     win=13."""
     from inpe_queimadas_etl_spark.session import load_table
-    from inpe_queimadas_etl_spark.suite.llmdata import _md5_window_shingles
+
+    from .corpus_oracles import _md5_window_shingles
 
     docs = load_table(spark, SF0001, "documents").select("doc_id", "text")
     for win in (13, 20):
@@ -139,7 +140,7 @@ def test_rolling_spans_equal_md5_reference_on_corpus(spark):
 def test_rolling_dd10_finds_planted_overlap(spark, tmp_path):
     """A 30-token run planted in two documents at different offsets
     must surface as the same spans dd10 reported in round 6."""
-    from inpe_queimadas_etl_spark.suite.llmdata import duplicate_spans
+    from inpe_queimadas_etl_spark.corpus_ops import duplicate_spans
 
     run = " ".join(f"dup{i}" for i in range(30))
     pad_a = " ".join(f"a{i}" for i in range(7))

@@ -107,9 +107,18 @@ def test_pip_join_from_shapefile_dims(spark, two_mun_shapefile):
     assert got.get("outside") is None
 
 
-def test_municipios_dim_area_fallback(spark, two_mun_shapefile):
-    dim = shp.municipios_dim_from_shapefile(spark, str(two_mun_shapefile))
-    rows = {r["cd_mun"]: r for r in dim.collect()}
+def _municipios(shp_path):
+    """cd_mun -> the municipality row cli.load_dims reads from a
+    shapefile."""
+    feats = shp.features_from_shapefile(shp_path, **shp.MUNICIPIO_FIELDS)
+    return {
+        cd_mun: {"nm_mun": nm_mun, "uf": uf, "area_km2": area_km2}
+        for cd_mun, nm_mun, uf, area_km2 in shp.municipio_rows(feats)
+    }
+
+
+def test_municipios_dim_area_fallback(two_mun_shapefile):
+    rows = _municipios(str(two_mun_shapefile))
     assert set(rows) == {"1100015", "1100023"}
     assert rows["1100015"]["uf"] == "RO"
     # no AREA_KM2 attr -> shoelace-geodesic fallback; the donut+island
@@ -140,7 +149,7 @@ def test_bad_magic(tmp_path):
         shp.read_shp(str(p))
 
 
-def test_area_attr_not_polluted_by_attrless_record(spark, tmp_path):
+def test_area_attr_not_polluted_by_attrless_record(tmp_path):
     """Same municipality split across records where only the FIRST
     carries AREA_KM2: the attribute value wins outright; the
     attribute-less record's shoelace area must NOT stack on top."""
@@ -153,6 +162,8 @@ def test_area_attr_not_polluted_by_attrless_record(spark, tmp_path):
         [("CD_MUN", "C", 7, 0), ("AREA_KM2", "N", 12, 3)],
         [{"cd_mun": "77", "area_km2": 100.0}, {"cd_mun": "77"}],
     )
-    dim = shp.municipios_dim_from_shapefile(spark, str(tmp_path / "m.shp"))
-    rows = {r["cd_mun"]: r["area_km2"] for r in dim.collect()}
+    rows = {
+        cd_mun: r["area_km2"]
+        for cd_mun, r in _municipios(str(tmp_path / "m.shp")).items()
+    }
     assert rows["77"] == pytest.approx(100.0)

@@ -1,32 +1,67 @@
-"""Local replica of the driver's correctness gate: run every declared
-suite query on Spark and its oracle SQL on DuckDB, then compare
-row count, column names, and values (order-insensitive, columns sorted
-by name) — stricter than the driver's hash (exact equality, with a
-float fallback report)."""
+"""DuckDB oracle checks of the corpus operators (``corpus_ops``): run
+each Spark query of tests/corpus_oracles.py and its oracle SQL on
+DuckDB, then compare row count, column names and values
+(order-insensitive, columns sorted by name, exact equality). Planted
+corpora and pure-Python mirrors check what the testdata corpus leaves
+thin."""
 
 from __future__ import annotations
 
+import hashlib
 import math
+import random
+from collections import Counter
 
 import duckdb
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from inpe_queimadas_etl_spark.session import TABLE_NAMES
-from inpe_queimadas_etl_spark.suite import all_oracles, all_queries
+from inpe_queimadas_etl_spark.corpus_ops import (
+    _CUR9_K,
+    _CUR9_SALT,
+    _CUR10_WIN,
+    _DD10_WIN,
+    dsir_gumbel_topk,
+    ngram_lm_scores,
+    substring_contamination,
+)
+from inpe_queimadas_etl_spark.session import load_table
+
+from .corpus_oracles import (
+    _CUR8_CTE,
+    CHECKS,
+    CUR5_SQL,
+    CUR6_SQL,
+    CUR8_SQL,
+    CUR9_SQL,
+    CUR10_SQL,
+    DD10_SQL,
+    DD11_SQL,
+    TX8_SQL,
+    _hex_to_int_sql,
+    cluster_aware_split,
+    cur5_mixture_resample,
+    cur6_leakfree_split,
+    cur8_dsir_selection,
+    cur9_dsir_resample,
+    cur10_substring_decontamination,
+    dd10_duplicate_spans,
+    dd11_span_scrub,
+    dsir_logweights,
+    tx8_lm_perplexity,
+)
 
 SF0001 = "/root/testdata/sf0.001"
-
-QUERIES = all_queries()
-ORACLES = all_oracles()
 
 
 def _duck(sf_dir: str, sql: str) -> pd.DataFrame:
     con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
-        )
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/documents.parquet')"
+    )
     return con.execute(sql).df()
 
 
@@ -63,41 +98,11 @@ def _values_equal(a, b) -> bool:
     return a == b
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, name):
-    sdf = QUERIES[name](spark, SF0001).toPandas()
-    odf = _duck(SF0001, ORACLES[name])
-    assert sorted(sdf.columns) == sorted(odf.columns), (
-        f"{name}: column mismatch {sorted(sdf.columns)} vs {sorted(odf.columns)}"
-    )
-    assert len(sdf) == len(odf), f"{name}: rowcount {len(sdf)} vs {len(odf)}"
-    s = _normalize(sdf)
-    o = _normalize(odf)
-    mismatches = []
-    for col in s.columns:
-        sv, ov = s[col].tolist(), o[col].tolist()
-        for i, (x, y) in enumerate(zip(sv, ov)):
-            if not _values_equal(x, y):
-                mismatches.append((col, i, x, y))
-                if len(mismatches) > 5:
-                    break
-        if len(mismatches) > 5:
-            break
-    assert not mismatches, f"{name}: value mismatches {mismatches}"
-
-
-def test_registry_fits_driver_snapshot_cap():
-    """The driver's correctness snapshot records at most 50 queries
-    (VERDICT r3: 58 registered, 50 recorded), so every registered query
-    gets a driver-green row only while the registry holds at most 50.
-    The count is pinned exactly, so a registration that appears or
-    vanishes by accident fails here."""
-    assert len(QUERIES) == 20, sorted(QUERIES)
-
-
-def _compare_to_oracle(spark, name, fn, sql):
-    sdf = fn(spark, SF0001).toPandas()
-    odf = _duck(SF0001, sql)
+def _compare_to_oracle(spark, name, fn, sql, sf_dir: str = SF0001) -> pd.DataFrame:
+    """Assert ``fn(spark, sf_dir)`` equals ``sql`` on DuckDB over the
+    same ``documents``; returns the Spark rows."""
+    sdf = fn(spark, sf_dir).toPandas()
+    odf = _duck(sf_dir, sql)
     assert sorted(sdf.columns) == sorted(odf.columns), (
         f"{name}: column mismatch {sorted(sdf.columns)} vs {sorted(odf.columns)}"
     )
@@ -114,93 +119,18 @@ def _compare_to_oracle(spark, name, fn, sql):
         if len(mismatches) > 5:
             break
     assert not mismatches, f"{name}: value mismatches {mismatches}"
+    return sdf
 
 
-def test_dd8_passage_dedup_matches_oracle(spark):
-    """dd8 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: cross-document duplicate-passage
-    removal with order-preserving reassembly."""
-    from inpe_queimadas_etl_spark.suite.llmdata import DD8_SQL, dd8_passage_dedup
-
-    _compare_to_oracle(spark, "dd8_passage_dedup", dd8_passage_dedup, DD8_SQL)
-
-
-def test_dd9_canonical_keeper_matches_oracle(spark):
-    """dd9 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: quality-aware keeper per dup
-    cluster (longest member wins, ties to lowest doc_id)."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        DD9_SQL,
-        dd9_canonical_keeper,
-    )
-
-    _compare_to_oracle(spark, "dd9_canonical_keeper", dd9_canonical_keeper, DD9_SQL)
-
-
-def test_dd9_keeps_exactly_one_per_cluster(spark):
-    from inpe_queimadas_etl_spark.suite.llmdata import dd9_canonical_keeper
-
-    pdf = dd9_canonical_keeper(spark, SF0001).toPandas()
-    if len(pdf) == 0:
-        pytest.skip("no dup clusters at this sf")
-    by_cluster = pdf.groupby("cluster_id")
-    # exactly one keeper per cluster, and it is its own keeper_doc_id
-    assert (by_cluster["keep"].sum() == 1).all()
-    keepers = pdf[pdf["keep"]]
-    assert (keepers["doc_id"] == keepers["keeper_doc_id"]).all()
-    # every member of a cluster points at the same keeper
-    assert (by_cluster["keeper_doc_id"].nunique() == 1).all()
-    # only dup clusters appear
-    assert (by_cluster.size() >= 2).all()
-
-
-def test_dd8_removes_planted_boilerplate(spark):
-    """A verbatim 8-word passage planted into several docs is removed
-    from every one; untouched docs round-trip byte-identically."""
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _DD8_CHUNK_WORDS,
-        dd8_passage_dedup,
-    )
-
-    boiler = " ".join(f"b{i}" for i in range(_DD8_CHUNK_WORDS))
-    rows = [
-        # boilerplate at a chunk boundary in two docs
-        (0, boiler + " alpha beta gamma delta epsilon zeta eta theta"),
-        (1, boiler + " one two three four five six seven eight"),
-        (2, "unique words only in this particular document here now"),
-    ]
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as tmp:
-        spark.createDataFrame(pdf).write.parquet(
-            os.path.join(tmp, "documents.parquet")
-        )
-        out = (
-            dd8_passage_dedup(spark, tmp)
-            .toPandas()
-            .set_index("doc_id")
-            .sort_index()
-        )
-    assert boiler not in out.loc[0, "clean_text"]
-    assert boiler not in out.loc[1, "clean_text"]
-    assert out.loc[0, "n_removed"] == 1 and out.loc[1, "n_removed"] == 1
-    assert out.loc[2, "clean_text"] == rows[2][1]
-    assert out.loc[2, "n_removed"] == 0
+@pytest.mark.parametrize("name", sorted(CHECKS))
+def test_query_matches_oracle(spark, name):
+    fn, sql = CHECKS[name]
+    _compare_to_oracle(spark, name, fn, sql)
 
 
 def test_cur5_mixture_resample_matches_oracle(spark):
-    """cur5 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: domain-mixture rebalancing with
-    deterministic hash-threshold sampling."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        CUR5_SQL,
-        cur5_mixture_resample,
-    )
-
+    """Domain-mixture rebalancing with deterministic hash-threshold
+    sampling."""
     _compare_to_oracle(spark, "cur5_mixture_resample", cur5_mixture_resample, CUR5_SQL)
 
 
@@ -209,8 +139,6 @@ def test_cur5_mixture_properties(spark):
     fractions are < 1 by construction); every rate is in (0, 1]; kept
     token mass per source lands within a 4-sigma Bernoulli band of
     the uniform target."""
-    from inpe_queimadas_etl_spark.suite.llmdata import cur5_mixture_resample
-
     pdf = cur5_mixture_resample(spark, SF0001).toPandas()
     per = pdf.groupby("source").agg(
         rate=("keep_rate", "first"),
@@ -229,8 +157,6 @@ def test_cur5_mixture_properties(spark):
         # homogeneous-length sigma is far too tight at 25 docs/source);
         # 6 sigma + one max-doc of slack keeps the deterministic hash
         # draw inside the band without making the check vacuous
-        import math
-
         lens = pdf.loc[pdf["source"] == src, "n_tokens"]
         sigma = math.sqrt(row["rate"] * (1 - row["rate"]) * (lens**2).sum())
         slack = 6 * sigma + lens.max()
@@ -238,21 +164,13 @@ def test_cur5_mixture_properties(spark):
 
 
 def test_cur6_leakfree_split_matches_oracle(spark):
-    """cur6 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: content-hash 80/10/10 split."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        CUR6_SQL,
-        cur6_leakfree_split,
-    )
-
+    """Content-hash 80/10/10 split."""
     _compare_to_oracle(spark, "cur6_leakfree_split", cur6_leakfree_split, CUR6_SQL)
 
 
 def test_cur6_duplicates_never_straddle(spark):
     """Byte-identical texts always land in the same split, and all
     three splits are populated with roughly 80/10/10 mass."""
-    from inpe_queimadas_etl_spark.suite.llmdata import cur6_leakfree_split
-
     pdf = cur6_leakfree_split(spark, SF0001).toPandas()
     assert (pdf.groupby("content_hash")["split"].nunique() == 1).all()
     fracs = pdf["split"].value_counts(normalize=True)
@@ -265,8 +183,6 @@ def test_cluster_aware_split_closure(spark):
     """Near-dup closure: every dd7 cluster maps to exactly one split
     (no train/eval straddle for near-duplicates), the assignment is
     total over the corpus, and it agrees with hashing cluster_id."""
-    from inpe_queimadas_etl_spark.suite.llmdata import cluster_aware_split
-
     pdf = cluster_aware_split(spark, SF0001).toPandas()
     docs = _duck(SF0001, "SELECT count(*) AS n FROM documents")["n"][0]
     assert len(pdf) == docs
@@ -276,92 +192,9 @@ def test_cluster_aware_split_closure(spark):
     assert (pdf.groupby("cluster_id").size() >= 2).any()
 
 
-def test_card1_corpus_manifest_matches_oracle(spark):
-    """card1 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: per source x lang data-card
-    manifest."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        CARD1_SQL,
-        card1_corpus_manifest,
-    )
-
-    _compare_to_oracle(spark, "card1_corpus_manifest", card1_corpus_manifest, CARD1_SQL)
-
-
-def test_tx7_model_quality_score_matches_oracle(spark):
-    """tx7 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: hashed-linear quality classifier; dyadic weights make the
-    fold order-independent and bit-identical across engines."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        TX7_SQL,
-        tx7_model_quality_score,
-    )
-
-    _compare_to_oracle(
-        spark, "tx7_model_quality_score", tx7_model_quality_score, TX7_SQL
-    )
-
-
-def test_tx7_scores_discriminate(spark):
-    """The classifier is non-degenerate on the corpus: both classes
-    occur, logits vary, and n_words matches the whitespace split."""
-    from inpe_queimadas_etl_spark.suite.llmdata import tx7_model_quality_score
-
-    pdf = tx7_model_quality_score(spark, SF0001).toPandas()
-    assert pdf["logit"].nunique() > 10
-    assert 0 < pdf["quality_pass"].sum() < len(pdf)
-
-
-def test_tx7_broadcast_path_matches_literal_and_oracle(spark):
-    """The broadcast-lookup tx7 (VERDICT r5 #4) is value-identical to
-    the literal-array path at the demo K (same weights, same fold),
-    oracle-green at the demo K, and produces sane finite logits at
-    the realistic 2^18 K."""
-    import math
-
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _TX7_BUCKETS,
-        TX7_SQL,
-        tx7_broadcast_quality_score,
-        tx7_model_quality_score,
-    )
-
-    lit = (
-        tx7_model_quality_score(spark, SF0001)
-        .toPandas()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    bc = (
-        tx7_broadcast_quality_score(spark, SF0001, buckets=_TX7_BUCKETS)
-        .toPandas()
-        .sort_values("doc_id", ignore_index=True)
-    )
-    pd.testing.assert_frame_equal(lit, bc)  # bit-exact, dyadic weights
-
-    _compare_to_oracle(
-        spark,
-        "tx7_broadcast_quality_score",
-        lambda s, d: tx7_broadcast_quality_score(s, d, buckets=_TX7_BUCKETS),
-        TX7_SQL,
-    )
-
-    big = tx7_broadcast_quality_score(spark, SF0001).toPandas()
-    assert len(big) == 500
-    assert big["logit"].map(math.isfinite).all()
-    # 2^18 buckets spread the same words over far more weights: the
-    # scores must actually differ from the demo-K model (the lookup
-    # is genuinely indexing the big table, not clamping)
-    assert (big["logit"] != bc["logit"]).any()
-
 def test_dd10_duplicate_spans_matches_oracle(spark):
-    """dd10 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: unaligned duplicate-span detection via stride-1 window
+    """Unaligned duplicate-span detection via stride-1 window
     fingerprints + gaps-and-islands merge."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        DD10_SQL,
-        dd10_duplicate_spans,
-    )
-
     _compare_to_oracle(
         spark, "dd10_duplicate_spans", dd10_duplicate_spans, DD10_SQL
     )
@@ -373,15 +206,6 @@ def test_dd10_finds_unaligned_repeats_dd8_misses(spark, tmp_path):
     sees different chunks) is found with exact token boundaries; a
     document with no repeated run of >= win tokens reports nothing;
     and within-doc repetition is flagged too."""
-    import random
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _DD10_WIN,
-        dd10_duplicate_spans,
-    )
-
     rng = random.Random(17)
 
     def words(n, tag):
@@ -413,25 +237,13 @@ def test_dd10_finds_unaligned_repeats_dd8_misses(spark, tmp_path):
     assert _DD10_WIN <= 30
 
 def test_dd11_span_scrub_matches_oracle(spark):
-    """dd11 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: the Lee et al. all-occurrences span removal."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        DD11_SQL,
-        dd11_span_scrub,
-    )
-
+    """The Lee et al. all-occurrences span removal."""
     _compare_to_oracle(spark, "dd11_span_scrub", dd11_span_scrub, DD11_SQL)
 
 
 def test_dd11_scrubs_exactly_the_planted_run(spark, tmp_path):
     """Planted duplicated run removed from BOTH carriers token-exact;
     clean docs untouched; token accounting adds up."""
-    import random
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.suite.llmdata import dd11_span_scrub
-
     rng = random.Random(23)
 
     def words(n, tag):
@@ -466,14 +278,8 @@ def test_dd11_scrubs_exactly_the_planted_run(spark, tmp_path):
 
 
 def test_tx8_lm_perplexity_matches_oracle(spark):
-    """tx8 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: CCNet-shaped bigram-LM quality
-    scoring (Laplace-smoothed, top-V vocab, OOV -> <unk>)."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        TX8_SQL,
-        tx8_lm_perplexity,
-    )
-
+    """CCNet-shaped bigram-LM quality scoring (Laplace-smoothed, top-V
+    vocab, OOV -> <unk>)."""
     _compare_to_oracle(
         spark, "tx8_lm_perplexity", tx8_lm_perplexity, TX8_SQL
     )
@@ -484,13 +290,6 @@ def test_tx8_matches_pure_python_mirror(spark, tmp_path):
     vocab cut ties (count DESC, token ASC), OOV folding to <unk> on
     BOTH bigram sides, Laplace denominators, and the <2-token doc
     emitting no row."""
-    import math
-    from collections import Counter
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.suite.llmdata import ngram_lm_scores
-
     texts = {
         0: "the cat sat on the mat",
         1: "the dog sat on the log",
@@ -535,14 +334,8 @@ def test_tx8_matches_pure_python_mirror(spark, tmp_path):
 
 
 def test_cur8_dsir_selection_matches_oracle(spark):
-    """cur8 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: DSIR hashed-ngram importance
-    weighting (Xie et al. 2023) with target = the 'en' slice."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        CUR8_SQL,
-        cur8_dsir_selection,
-    )
-
+    """DSIR hashed-ngram importance weighting (Xie et al. 2023) with
+    target = the 'en' slice."""
     _compare_to_oracle(
         spark, "cur8_dsir_selection", cur8_dsir_selection, CUR8_SQL
     )
@@ -553,14 +346,6 @@ def test_cur8_matches_pure_python_mirror(spark):
     unigram+bigram OCCURRENCE features, md5-prefix bucket hashing,
     Laplace-smoothed target/raw bucket distributions, and the
     log-ratio sum."""
-    import hashlib
-    import math
-    from collections import Counter
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.suite.llmdata import dsir_logweights
-
     B = 32
     texts = {
         0: "the cat sat on the mat",
@@ -607,9 +392,6 @@ def test_cur8_separates_target_language(spark):
     """The demo geometry's point: with target = the 'en' slice, the
     mean DSIR log-weight of 'en' documents must exceed every other
     language's mean (the paper's discrimination property)."""
-    from inpe_queimadas_etl_spark.suite.llmdata import cur8_dsir_selection
-    from inpe_queimadas_etl_spark.session import load_table
-
     scores = cur8_dsir_selection(spark, SF0001).toPandas()
     langs = (
         load_table(spark, SF0001, "documents")
@@ -625,14 +407,8 @@ def test_cur8_separates_target_language(spark):
 
 
 def test_cur9_dsir_resample_matches_oracle(spark):
-    """cur9 is unregistered (50-entry snapshot cap) but oracle-checked
-    here: deterministic Gumbel-top-k draw over
-    the DSIR importance weights (Xie et al. 2023 selection step)."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        CUR9_SQL,
-        cur9_dsir_resample,
-    )
-
+    """Deterministic Gumbel-top-k draw over the DSIR importance
+    weights (Xie et al. 2023 selection step)."""
     _compare_to_oracle(
         spark, "cur9_dsir_resample", cur9_dsir_resample, CUR9_SQL
     )
@@ -643,29 +419,15 @@ def test_cur9_boundary_gap(spark):
     and (k+1)-th sample key must clear the ~1e-13 summation-order +
     ln-ulp drift band by orders of magnitude (measured 2.5e-2 at
     sf0.001; continuous Gumbel noise makes exact ties measure-zero)."""
-    import duckdb
-
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _CUR9_K,
-        _CUR9_SALT,
-        _cur8_cte,
-        _hex_to_int_sql,
-    )
-
     h = _hex_to_int_sql(
         f"substr(md5('{_CUR9_SALT}:' || CAST(doc_id AS VARCHAR)),1,8)"
     )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF0001}/documents.parquet')"
-    )
-    q = f"""WITH {_cur8_cte()},
+    q = f"""WITH {_CUR8_CTE},
     keyed AS (SELECT doc_id,
                      lw + (-ln(-ln((({h}) + 0.5) / 4294967296.0))) AS key
               FROM scored)
     SELECT key FROM keyed ORDER BY key DESC LIMIT 2 OFFSET {_CUR9_K - 1}"""
-    top, nxt = (r[0] for r in con.execute(q).fetchall())
+    top, nxt = _duck(SF0001, q)["key"]
     assert top - nxt > 1e-6, (top, nxt)
 
 
@@ -673,14 +435,6 @@ def test_cur9_matches_pure_python_mirror(spark):
     """Planted corpus vs a pure-Python Gumbel-top-k mirror: salted
     md5 uniform, inverse-CDF Gumbel, raw-double selection order, and
     a different salt drawing a different sample."""
-    import hashlib
-    import math
-    from collections import Counter
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.suite.llmdata import dsir_gumbel_topk
-
     B = 32
     texts = {
         0: "the cat sat on the mat",
@@ -748,13 +502,6 @@ def test_tx8_heldout_reference_matches_mirror(spark):
     slice and only scores the corpus — checked against a pure-Python
     mirror including Laplace zero counts for bigrams/unigrams the
     reference never saw."""
-    import math
-    from collections import Counter
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.suite.llmdata import ngram_lm_scores
-
     texts = {
         0: "the cat sat on the mat",
         1: "the dog sat on the log",
@@ -803,15 +550,8 @@ def test_tx8_heldout_reference_matches_mirror(spark):
 
 
 def test_cur10_substring_decontamination_matches_oracle(spark):
-    """cur10 is unregistered (50-entry snapshot cap) but
-    oracle-checked here: exact >= 13-token
-    overlap decontamination (the GPT-3 standard), 60-bit window
-    fingerprints on both engines."""
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        CUR10_SQL,
-        cur10_substring_decontamination,
-    )
-
+    """Exact >= 13-token overlap decontamination (the GPT-3 standard),
+    60-bit window fingerprints on both engines."""
     _compare_to_oracle(
         spark,
         "cur10_substring_decontamination",
@@ -824,12 +564,6 @@ def test_cur10_finds_planted_exact_overlap(spark):
     """A 13-token run planted verbatim from an eval doc into two
     corpus docs flags exactly those two; a 12-token overlap (one
     short of the window) does NOT flag."""
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        substring_contamination,
-    )
-
     leak = " ".join(f"e{i}" for i in range(13))
     near = " ".join(f"e{i}" for i in range(12))  # 12 tokens only
     corpus = pd.DataFrame(
@@ -860,20 +594,12 @@ def test_cur10_finds_planted_exact_overlap(spark):
 
 
 def test_cur10_oracle_with_planted_signal(spark, tmp_path):
-    """VERDICT r6 finding #1 (cur10's oracle regime was nearly
-    signal-free: 3 hits at sf0.001, ZERO at sf0.01): re-run the FULL
-    Spark-vs-DuckDB comparison on an sf0.01-shaped corpus with
-    >= 13-gram eval overlaps planted, so the oracle path pins
+    """cur10's oracle regime is nearly signal-free (3 hits at
+    sf0.001, none at sf0.01): re-run the FULL Spark-vs-DuckDB
+    comparison on an sf0.01-shaped corpus with >= 13-gram eval
+    overlaps planted, so the oracle path pins
     non-empty output — per-doc hit-window counts included — not just
     the empty set."""
-    import pyarrow.parquet as pq
-
-    from inpe_queimadas_etl_spark.suite.llmdata import (
-        _CUR10_WIN,
-        CUR10_SQL,
-        cur10_substring_decontamination,
-    )
-
     pdf = pq.read_table(
         "/root/testdata/sf0.01/documents.parquet"
     ).to_pandas()
@@ -891,25 +617,17 @@ def test_cur10_oracle_with_planted_signal(spark, tmp_path):
         pdf.at[idx, "text"] = " ".join(toks[:mid] + [run] + toks[mid:])
         planted_ids.append(int(pdf.at[idx, "doc_id"]))
     pdf["n_chars"] = pdf["text"].str.len()
-    import pyarrow as pa
 
     out = tmp_path / "documents.parquet"
     pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), out)
 
-    sdf = cur10_substring_decontamination(spark, str(tmp_path)).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{out}')"
+    sdf = _compare_to_oracle(
+        spark,
+        "cur10_substring_decontamination",
+        cur10_substring_decontamination,
+        CUR10_SQL,
+        str(tmp_path),
     )
-    odf = con.execute(CUR10_SQL).df()
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    assert len(sdf) == len(odf)
-    s, o = _normalize(sdf), _normalize(odf)
-    for col in s.columns:
-        assert all(
-            _values_equal(x, y)
-            for x, y in zip(s[col].tolist(), o[col].tolist())
-        ), col
     flagged = sdf[sdf.contaminated]
     # every planted doc flagged, with the full ladder of hit windows
     # (a WIN+2-token run yields 3 stride-1 windows) — and the signal
