@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from inpe_queimadas_etl_spark.corpus_ops import (
@@ -46,6 +46,7 @@ from inpe_queimadas_etl_spark.corpus_ops import (
     _TX8_VOCAB,
     _dsir_scores_raw,
     _hash_frac_spark,
+    _word_hash_spark,
     curation_decisions,
     dd3_minhash_signatures,
     dd4_minhash_lsh_candidates,
@@ -96,7 +97,8 @@ _STOP_SQL = ", ".join(repr(s) for s in _STOPWORDS)
 
 # ---------------------------------------------------------------------------
 # near-duplicate clustering: dd3 signatures, dd4 LSH candidates, dd7
-# connected components, cur1 curation over them
+# connected components, cur1 curation and the dd9 keeper over them,
+# cur1's language heuristic alone (tx3)
 # ---------------------------------------------------------------------------
 
 # distinct 3-word shingles per document (corpus_ops._shingles_spark)
@@ -238,8 +240,82 @@ def cur1_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation_decisions(docs, dd7_dedup_clusters(spark, sf_dir))
 
 
+# dd7's clusters of size >= 2 with a longest-member keeper (n_chars
+# DESC, ties to the lowest doc_id): a second consumer of dd7's
+# membership and sizes
+DD9_SQL = f"""
+WITH d7 AS ({DD7_SQL}),
+m AS (
+    SELECT d7.doc_id, d7.cluster_id, doc.n_chars
+    FROM d7 JOIN documents doc ON doc.doc_id = d7.doc_id
+    WHERE d7.cluster_size >= 2
+)
+SELECT doc_id, cluster_id,
+       first_value(doc_id) OVER w AS keeper_doc_id,
+       (doc_id = first_value(doc_id) OVER w) AS keep
+FROM m
+WINDOW w AS (
+    PARTITION BY cluster_id ORDER BY n_chars DESC, doc_id ASC
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+)
+"""
+
+
+def dd9_canonical_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Keep/drop per member of each dd7 cluster of size >= 2: the
+    longest member is the keeper and every member points at it via
+    ``keeper_doc_id``."""
+    clusters = dd7_dedup_clusters(spark, sf_dir).filter(
+        F.col("cluster_size") >= 2
+    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    w = (
+        Window.partitionBy("cluster_id")
+        .orderBy(F.desc("n_chars"), F.asc("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    keeper = F.first("doc_id").over(w)
+    return clusters.join(docs, "doc_id").select(
+        "doc_id",
+        "cluster_id",
+        keeper.alias("keeper_doc_id"),
+        (F.col("doc_id") == keeper).alias("keep"),
+    )
+
+
+TX3_SQL = f"""
+    SELECT doc_id, lang,
+           CASE
+             WHEN len(list_filter(string_split(text, ' '),
+                     w -> w IN ({_STOP_SQL}))) >= 2
+               THEN 'en'
+             WHEN length(text) < 20 THEN 'short'
+             ELSE 'unk'
+           END AS pred_lang
+    FROM documents
+"""
+
+
+def tx3_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """curation_decisions' stopword language heuristic on its own,
+    next to the declared ``lang``: every document is its own cluster,
+    so no near-dup decision is involved."""
+    docs = load_table(spark, sf_dir, "documents")
+    singletons = docs.select(
+        "doc_id",
+        F.col("doc_id").alias("cluster_id"),
+        F.lit(1).alias("cluster_size"),
+    )
+    return (
+        curation_decisions(docs, singletons)
+        .join(docs.select("doc_id", "lang"), "doc_id")
+        .select("doc_id", "lang", "pred_lang")
+    )
+
+
 # ---------------------------------------------------------------------------
-# registered scan and rollup operators: cur2, cur3, pack1, tx5
+# registered scan and rollup operators: cur2, cur3, pack1, tx5, and
+# the word hash (tx4)
 # ---------------------------------------------------------------------------
 
 # eval set = the doc_id % 41 == 0 slice, corpus = the rest
@@ -399,6 +475,37 @@ def tx5_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return pii_redact(docs.select("doc_id", aug.alias("text"))).select(
         "doc_id", "n_pii", F.md5("text").alias("redacted_hash")
+    )
+
+
+# corpus_ops._word_hash_spark (the word hash of the DSIR features,
+# _hash_frac_spark and the Gumbel draw) over every word of the corpus,
+# folded per document as a position-weighted XOR: one word that hashes
+# differently from the oracle changes its document's value
+TX4_SQL = f"""
+    WITH words AS (
+        SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS pos
+        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
+    )
+    SELECT doc_id,
+           CAST(bit_xor(({_hex_to_int_sql("substr(md5(word),1,8)")}) * pos)
+                AS BIGINT) AS fingerprint
+    FROM words
+    GROUP BY doc_id
+"""
+
+
+def tx4_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """XOR of (word hash x 1-based position) per document."""
+    docs = load_table(spark, sf_dir, "documents")
+    words = docs.select(
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "word"),
+    ).withColumn("pos", F.col("pos0") + 1)
+    return (
+        words.withColumn("wh", _word_hash_spark(F.col("word")))
+        .groupBy("doc_id")
+        .agg(F.expr("bit_xor(wh * pos)").cast("long").alias("fingerprint"))
     )
 
 
@@ -898,5 +1005,7 @@ CHECKS: dict[str, tuple[QueryFn, str]] = {
     "dd7_dedup_clusters": (dd7_dedup_clusters, DD7_SQL),
     "llm_ops_battery": (llm_ops_battery, BATTERY_SQL),
     "pack1_token_packing": (pack1_token_packing, PACK1_SQL),
+    "tx3_lang_id": (tx3_lang_id, TX3_SQL),
+    "tx4_doc_fingerprint": (tx4_doc_fingerprint, TX4_SQL),
     "tx5_pii_scrub": (tx5_pii_scrub, TX5_SQL),
 }

@@ -40,8 +40,7 @@ def _plan(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-# tx5 is a projection, pinned exchange-free below
-@pytest.mark.parametrize("name", sorted(set(CHECKS) - {"tx5_pii_scrub"}))
+@pytest.mark.parametrize("name", sorted(CHECKS))
 def test_no_unintended_cross_products(spark, name):
     plan = _plan(CHECKS[name][0](spark, SF0001), "simple")
     assert "CartesianProduct" not in plan, f"{name} degraded to CartesianProduct"

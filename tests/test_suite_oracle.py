@@ -37,6 +37,7 @@ from .corpus_oracles import (
     CUR8_SQL,
     CUR9_SQL,
     CUR10_SQL,
+    DD9_SQL,
     DD10_SQL,
     DD11_SQL,
     TX8_SQL,
@@ -47,6 +48,7 @@ from .corpus_oracles import (
     cur8_dsir_selection,
     cur9_dsir_resample,
     cur10_substring_decontamination,
+    dd9_canonical_keeper,
     dd10_duplicate_spans,
     dd11_span_scrub,
     dsir_logweights,
@@ -126,6 +128,34 @@ def _compare_to_oracle(spark, name, fn, sql, sf_dir: str = SF0001) -> pd.DataFra
 def test_query_matches_oracle(spark, name):
     fn, sql = CHECKS[name]
     _compare_to_oracle(spark, name, fn, sql)
+
+
+def test_registry_fits_driver_snapshot_cap():
+    """CHECKS is the registry of oracle-checked queries. Its size is
+    pinned exactly, so a check that appears or vanishes by accident
+    fails here."""
+    assert len(CHECKS) == 11, sorted(CHECKS)
+
+
+def test_dd9_canonical_keeper_matches_oracle(spark):
+    """Quality-aware keeper per dup cluster (longest member wins, ties
+    to lowest doc_id)."""
+    _compare_to_oracle(spark, "dd9_canonical_keeper", dd9_canonical_keeper, DD9_SQL)
+
+
+def test_dd9_keeps_exactly_one_per_cluster(spark):
+    pdf = dd9_canonical_keeper(spark, SF0001).toPandas()
+    if len(pdf) == 0:
+        pytest.skip("no dup clusters at this sf")
+    by_cluster = pdf.groupby("cluster_id")
+    # exactly one keeper per cluster, and it is its own keeper_doc_id
+    assert (by_cluster["keep"].sum() == 1).all()
+    keepers = pdf[pdf["keep"]]
+    assert (keepers["doc_id"] == keepers["keeper_doc_id"]).all()
+    # every member of a cluster points at the same keeper
+    assert (by_cluster["keeper_doc_id"].nunique() == 1).all()
+    # only dup clusters appear
+    assert (by_cluster.size() >= 2).all()
 
 
 def test_cur5_mixture_resample_matches_oracle(spark):
