@@ -6,8 +6,8 @@ an idiomatic Spark DataFrame/SQL engine: daily CSVs are ingested,
 curated and deduplicated, enriched by point-in-polygon, rolled up
 into marts, published to a partitioned warehouse and served to a
 dashboard. Alongside it sits a training-corpus materialization
-(``corpus_pipeline`` over the ``corpus_ops`` dedup, curation, split,
-selection and packing operators).
+(``corpus_pipeline`` over the ``corpus_ops`` dedup, curation,
+decontamination, split and packing operators).
 
 Layout
 ------
@@ -29,7 +29,7 @@ Layout
 - ``cli``        ``run``, ``checks``, ``validate-repo`` and
                  ``corpus-curate``.
 - ``operators``  reusable distributed operators: geo joins and
-                 geometry, BPE, rolling window hashes, mixture
+                 geometry, rolling window hashes, mixture
                  resampling, pack materialization.
 - ``corpus_pipeline`` / ``corpus_ops``
                  the training-corpus materialization behind

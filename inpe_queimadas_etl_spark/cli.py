@@ -228,12 +228,6 @@ def cmd_corpus_curate(args) -> int:
         split_by=args.split_by,
         scrub_spans=args.scrub_spans,
         scrub_pii=args.scrub_pii,
-        min_lm_logprob=args.min_lm_logprob,
-        dsir_target_dir=args.dsir_target_dir,
-        dsir_keep=args.dsir_keep,
-        bpe_merges=args.bpe_merges,
-        bpe_tokenizer=args.bpe_tokenizer,
-        export_format=args.export_format,
     )
     log.info("corpus-curate | manifest | %s", json.dumps(manifest, default=str))
     return 0
@@ -299,7 +293,9 @@ def build_parser() -> argparse.ArgumentParser:
     cur.add_argument(
         "--weights",
         help='JSON source->weight mixture target, e.g. \'{"src0": 2, '
-        '"src1": 1}\' (default: uniform over sources)',
+        '"src1": 1}\'; without it the pipeline does not resample unless '
+        "--token-budget (uniform over sources) or --mixture-temperature "
+        "is given",
     )
     cur.add_argument(
         "--mixture-temperature",
@@ -337,55 +333,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="also remove duplicated token runs (>= 20 tokens, any "
         "offset) from surviving documents before mixture/packing — "
         "the Lee et al. exact-substring scrub (dd10/dd11 semantics)",
-    )
-    cur.add_argument(
-        "--min-lm-logprob",
-        type=float,
-        default=None,
-        help="bigram-LM quality gate (tx8/CCNet semantics): drop "
-        "documents whose average bigram log-probability under a "
-        "self-trained LM falls below this; sub-2-token docs carry "
-        "no score and are dropped too",
-    )
-    cur.add_argument(
-        "--dsir-target-dir",
-        help="dir holding a target-domain documents.parquet; keeps "
-        "only the --dsir-keep documents drawn ~ exp(DSIR importance "
-        "weight) toward it (deterministic Gumbel-top-k)",
-    )
-    cur.add_argument(
-        "--dsir-keep",
-        type=int,
-        default=None,
-        help="sample size for --dsir-target-dir (required with it)",
-    )
-    cur.add_argument(
-        "--export-format",
-        choices=("parquet", "jsonl"),
-        default="parquet",
-        help="corpus/packs output format: split-partitioned sharded "
-        "parquet (default) or JSON-lines shards (the interchange "
-        "format tokenizer/training workers stream)",
-    )
-    cur.add_argument(
-        "--bpe-merges",
-        type=int,
-        default=None,
-        help="train a tx9 BPE merge table of this size on the final "
-        "kept documents and pack in BPE subword tokens instead of "
-        "whitespace tokens (--pack-budget becomes model tokens); "
-        "the trained tokenizer is persisted to OUT_DIR/tokenizer.json "
-        "and the manifest records its path + sha256 and the measured "
-        "compression",
-    )
-    cur.add_argument(
-        "--bpe-tokenizer",
-        default=None,
-        help="encode under a FROZEN tokenizer artifact from a prior "
-        "--bpe-merges run (path to its tokenizer.json) instead of "
-        "retraining — the id space is guaranteed identical "
-        "(hash-verifiable via the manifest fingerprint); mutually "
-        "exclusive with --bpe-merges",
     )
     cur.add_argument(
         "--split-by",

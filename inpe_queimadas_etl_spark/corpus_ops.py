@@ -1,7 +1,6 @@
 """Corpus operators that ``corpus_pipeline`` composes: near-duplicate
 clustering (dd7), curation, repetition and PII passes, splits, token
-packing, duplicate-span removal, the bigram-LM gate, DSIR selection
-and substring decontamination.
+packing, duplicate-span removal and substring decontamination.
 
 Each operator is a shuffle-minimal Spark plan over ``(doc_id, text,
 ...)`` frames. tests/corpus_oracles.py states each one as DuckDB
@@ -36,38 +35,21 @@ _MH_ROWS = 2  # rows per band (k = bands * rows)
 
 
 def _spread(df: DataFrame) -> DataFrame:
-    """Unlock scan parallelism on under-split inputs before a
-    CPU-heavy deterministic map pass (r13, guide §2.5/§6 "one huge
-    unsplittable file ... repartition immediately after the read").
+    """Spread an under-split input over the session's default
+    parallelism before a CPU-heavy deterministic map pass.
 
-    The local testdata tables are ONE parquet file with ONE row group,
-    and Spark cannot split a row group across tasks — so every
-    scan-rooted stage (shingling, minhash, rolling hashes, explodes,
-    Arrow encode passes) ran as ONE task regardless of core count.
-    That was the measured cause of the suite's flat 8-vs-32-core
-    scaling (scripts/scaling_cores.py, SCALING.md r13): the map work
-    was serialized by input layout, not by the operators.
-
-    Scale-adaptive by construction: the round-robin repartition only
-    fires when the scan yields fewer splits than the session's default
-    parallelism. At cluster scale the input is many files/row groups
-    (splits >= parallelism) and this is a no-op; locally it costs one
-    exchange rooted at the single scan task — the full rows are
-    serialized through that one task either way, so the spread only
-    pays where downstream per-row compute dominates the exchange.
-    Every candidate site was decided by a same-process alternating
-    A/B (scripts/ab_spread.py; plans/r13/ab_spread_*.txt): KEPT at
-    dd3's minhash signature pass (0.51 s vs 0.77 s, and dd4/dd7/dd9
-    inherit it through the signature build: 0.97/0.81/0.94 ratios)
-    and mm5's SimHash signature pass (0.67 s vs 1.15 s); measured and
-    REJECTED everywhere else (dd2, dd5, dd8, dd10, dd11, cur8, cur9,
-    cur10, tx8, tx9, emb1, dd6, dd12, geo1, geo8 — ratios 1.14-1.51,
-    per-site notes at the call sites). A keyed repartition(doc_id)
-    variant measured even with round-robin (0.54 vs 0.53), so the
-    generic keyless form stays. Values are partitioning-independent
-    at every site: per-row hash/array math only, no rand(), no
-    partition-seeded sampling; trained-model float-aggregation paths
-    (sim7/sim10/sim11/tx10) are out of scope by policy."""
+    A small parquet table (the testdata ``documents`` is one file with
+    one row group) scans as one task, and Spark cannot split a row
+    group, so every scan-rooted stage after it would run on one core.
+    The round-robin repartition fires only when the scan yields fewer
+    partitions than the default parallelism; an input of many files or
+    row groups passes through unchanged. Locally it costs one exchange
+    rooted at the single scan task, so it is used only where the
+    per-row work downstream outweighs that exchange: the MinHash
+    signature pass of ``dd3_minhash_signatures``, which
+    ``dd4_minhash_lsh_candidates`` and ``dd7_dedup_clusters`` build
+    on. Values do not depend on the partitioning: the pass is per-row
+    hash and array math, with no rand() and no sampling."""
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
@@ -337,11 +319,12 @@ def _dd7_assemble(docs: DataFrame, labels: DataFrame) -> DataFrame:
 
 
 def curation_decisions(docs: DataFrame, clusters: DataFrame) -> DataFrame:
-    """DataFrame-level body of cur1 (see its docstring): ``clusters``
-    is dd7's label frame, injectable so a pipeline computing labels
-    once can share them across curation, keeper selection, and the
-    split (corpus_pipeline.py) instead of re-running the iterative
-    component labeling per stage."""
+    """Keep/drop per document (cur1): the 10-1000-word gate, the
+    stopword language heuristic (``pred_lang``) and one keeper per
+    near-dup cluster (the lowest doc_id that passes the gates), with
+    the first failing reason as ``drop_reason``. ``clusters`` is dd7's
+    label frame, passed in so a pipeline computes the labels once and
+    shares them with the split (corpus_pipeline.py)."""
     words = F.split(F.col("text"), " ")
     n_words = F.size(words)
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
@@ -378,12 +361,11 @@ def curation_decisions(docs: DataFrame, clusters: DataFrame) -> DataFrame:
 def decontamination_report(
     corpus_docs: DataFrame, eval_docs: DataFrame
 ) -> DataFrame:
-    """DataFrame-level body of cur2 over an EXPLICIT eval set (see its
-    docstring for the scale design): per corpus doc, how many distinct
-    3-word shingles it shares with any eval doc and how many eval docs
-    they touch, plus the boolean ``contaminated`` verdict. Injectable
-    so a pipeline can decontaminate against its real benchmark suite
-    (corpus_pipeline.py's eval_dir stage)."""
+    """Shingle decontamination (cur2) against ``eval_docs``: per corpus
+    doc, how many distinct 3-word shingles it shares with any eval doc
+    and how many eval docs they touch, plus the boolean
+    ``contaminated`` verdict. Both sides reduce to xxhash64 shingle
+    keys before the join (corpus_pipeline.py's eval_dir stage)."""
     bench_sh = (
         _shingles_spark(eval_docs)
         .select(
@@ -422,8 +404,10 @@ def decontamination_report(
 
 
 def repetition_stats(docs: DataFrame) -> DataFrame:
-    """DataFrame-level body of cur3 (see its docstring) — injectable
-    for pipeline composition (corpus_pipeline.py)."""
+    """Gopher-style repetition flags (cur3) per document of at least
+    3 words: ``top_word_flag`` when the most frequent word is over a
+    tenth of the words, ``dup_3gram_flag`` when any word 3-gram
+    repeats, ``repetitive`` when either holds. Map-side only."""
     w = F.split(F.col("text"), " ")
     d = (
         docs.withColumn("w", w)
@@ -478,28 +462,16 @@ def pack_doc_assignments(
     budget: int = _PACK_BUDGET,
     shards: int = _PACK_SHARDS,
     group_cols: tuple[str, ...] = ("lang",),
-    tokens_col: str | None = None,
 ) -> DataFrame:
     """Per-document pack assignment: ``(doc_id, *group_cols, shard,
     tokens, cum, pack_id)`` — the cumulative-sum packing pack1 rolls
     up, exposed row-level so a pipeline can materialize the packed
-    corpus (corpus_pipeline.py writes one file group per pack). The
-    window partitions on (*group_cols, pmod(doc_id, shards)), so a
-    dominant group cannot serialize into one reducer. pmod, not %:
-    corpus_pipeline synthesizes xxhash64 doc_ids for JSONL input,
-    and half of those are negative — % would yield 2*shards-1
-    distinct shard values (ADVICE r5).
-
-    ``tokens_col``: pack in a caller-supplied token unit (e.g. tx9
-    BPE subword counts from the pipeline's --bpe-merges stage)
-    instead of the default whitespace count — the budget a trainer
-    cares about is MODEL tokens, and a whitespace budget under- or
-    over-fills packs by the corpus's measured BPE compression."""
-    tokens = (
-        F.col(tokens_col).cast("int")
-        if tokens_col is not None
-        else F.size(F.split(F.col("text"), " "))
-    )
+    corpus (corpus_pipeline.py writes one file group per pack).
+    ``tokens`` is the whitespace token count. The window partitions
+    on (*group_cols, pmod(doc_id, shards)), so a dominant group cannot
+    serialize into one reducer. pmod, not %: a negative doc_id under
+    % would yield 2*shards-1 distinct shard values."""
+    tokens = F.size(F.split(F.col("text"), " "))
     t = docs.select(
         "doc_id",
         *group_cols,
@@ -554,10 +526,10 @@ _CUR6_BOUNDS = (0.8, 0.9)  # train < 0.8 <= validation < 0.9 <= test
 def split_from_content(
     docs: DataFrame, bounds: tuple[float, float] = _CUR6_BOUNDS
 ) -> DataFrame:
-    """DataFrame-level body of cur6_leakfree_split — injectable so
-    corpus_pipeline's ``split_by="content"`` mode shares the exact
-    oracle-checked semantics (the cheaper split for ALREADY-DEDUPED
-    corpora, where near-dup closure has nothing left to close)."""
+    """Content-hash split (cur6): each document's split is a hash
+    fraction of md5(text), so byte-identical documents share a split.
+    The cheaper split of corpus_pipeline's ``split_by="content"``
+    mode, for corpora that arrive already near-dup-deduped."""
     lo, hi = bounds
     if not 0.0 <= lo <= hi <= 1.0:
         raise ValueError(f"split bounds must satisfy 0<=lo<=hi<=1: {bounds}")
@@ -575,9 +547,9 @@ def split_from_content(
 def split_from_clusters(
     labels: DataFrame, bounds: tuple[float, float] = _CUR6_BOUNDS
 ) -> DataFrame:
-    """DataFrame-level body of cluster_aware_split over an existing
-    dd7 label frame — injectable so a pipeline shares one label
-    computation across stages (corpus_pipeline.py). ``bounds`` are
+    """Cluster-closed split over a dd7 label frame: each document's
+    split is a hash fraction of its cluster_id, so a near-dup cluster
+    never straddles splits (corpus_pipeline.py). ``bounds`` are
     the hash-fraction cut points: train < bounds[0] <= validation <
     bounds[1] <= test (default 80/10/10)."""
     lo, hi = bounds
@@ -721,358 +693,6 @@ def remove_duplicate_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
         F.concat_ws(" ", kept).alias("clean_text"),
         F.size(toks).cast("long").alias("n_tokens_before"),
         (F.size(toks) - F.size(kept)).cast("long").alias("n_tokens_removed"),
-    )
-
-
-_TX8_VOCAB = 512
-_TX8_UNK = "<unk>"
-
-
-def _tx8_map_to_vocab(
-    df: DataFrame, vocab_toks: list[str], *cols: str
-) -> DataFrame:
-    """Replace each of ``cols`` with '<unk>' where the value is not in
-    ``vocab_toks`` — a codegen'd InSet hash-set probe per column (r13;
-    the driver already holds the top-V list from the TakeOrdered, so
-    no join is needed). The r12 form was one broadcast LEFT join per
-    column; two BroadcastHashJoins on string keys measured 2.09 s vs
-    1.75 s for the full tx8 against this expression (alternating A/B,
-    checksum MATCH at sf0.001/0.01/0.1 — guide §3.1/§2.4: the best
-    join is no join). V is vocab-gated (512), far past the In→InSet
-    conversion threshold (10), so each probe is O(1). The V literals
-    are inlined into the plan once per mapped column, so plan size
-    (not only the probe) scales with the vocab gate. A name in
-    ``cols`` that is not a column of ``df`` raises ValueError."""
-    missing = sorted(set(cols) - set(df.columns))
-    if missing:
-        raise ValueError(f"_tx8_map_to_vocab: no such column(s) {missing}")
-    return df.select(
-        *[
-            (
-                F.when(F.col(c).isin(vocab_toks), F.col(c))
-                .otherwise(F.lit(_TX8_UNK))
-                .alias(c)
-                if c in cols
-                else F.col(c)
-            )
-            for c in df.columns
-        ]
-    )
-
-
-def ngram_lm_scores(
-    docs: DataFrame,
-    vocab_size: int = _TX8_VOCAB,
-    reference: DataFrame | None = None,
-) -> DataFrame:
-    """Bigram-LM quality score per document over ``(doc_id, text)``:
-    ``(doc_id, n_bigrams, avg_logprob)`` — higher = more typical of
-    the training slice; documents with < 2 tokens carry no bigram and
-    emit no row (the tx6 convention).
-
-    Scale design: the model is SMALL BY CONSTRUCTION — top-V vocab
-    (TakeOrdered: per-partition heaps + a V-row driver merge, never a
-    global sort), <= (V+1)^2 observed bigram rows — so every
-    model-side join BROADCASTS and the corpus never shuffles on a
-    token key during scoring. Four exchanges total, each carrying
-    map-side-combined partials over distinct keys (vocab build, C1,
-    C2) or final per-doc rows (the score rollup, keyed on doc_id so
-    partials collapse in the scan partition — plan-pinned: zero
-    SortMergeJoin, partial aggs). Train/score is inherently two-pass;
-    a deployment trains the model on a small held-out reference slice
-    — the paper's shape — and only the single scoring pass reads the
-    full corpus. Raising V past broadcast range turns the scoring
-    join into a hash shuffle on (w1, w2); the vocab gate exists
-    precisely to avoid that regime.
-
-    ``reference`` (optional, ``(doc_id, text)``) is the held-out
-    slice the model trains on — the CCNet deployment shape: the
-    vocab, C1, and C2 counts come from the reference and only the
-    scoring pass reads ``docs``. Default None = self-scoring (the
-    oracle-stated demo)."""
-    train = docs if reference is None else reference
-    w = docs.select("doc_id", F.split(F.col("text"), " ").alias("w"))
-    tw = train.select(F.split(F.col("text"), " ").alias("w"))
-    ttoks = tw.select(F.explode("w").alias("t"))
-    # Materialize the train token COUNT table once (r12 — it, not just
-    # the vocab list, is the model artifact): the top-V vocab is a
-    # TakeOrdered over it, the unigram table C1 is read straight off
-    # it driver-side (the top-V rows keep their counts; every other
-    # occurrence folds into the '<unk>' row as total - sum(vocab)), so
-    # the separate map-to-vocab + groupBy unigram pass over the train
-    # corpus is gone. <= V+1 rows ship back as a LOCAL relation.
-    tok_counts = (
-        ttoks.groupBy("t")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    vocab_rows = (
-        tok_counts.orderBy(F.desc("c"), F.asc("t"))
-        .limit(vocab_size)
-        .collect()
-    )
-    vocab_toks = [r["t"] for r in vocab_rows]
-    total_toks = tok_counts.agg(F.sum("c")).first()[0] or 0
-    c1 = {r["t"]: r["c"] for r in vocab_rows}
-    n_unk = total_toks - sum(c1.values())
-    if n_unk > 0:
-        # merge with an in-vocab literal '<unk>' token if one exists —
-        # exactly what the mapped groupBy produced
-        c1[_TX8_UNK] = c1.get(_TX8_UNK, 0) + n_unk
-    uni = docs.sparkSession.createDataFrame(
-        [(t, c) for t, c in sorted(c1.items())], "t string, c1 bigint"
-    )
-    vt = F.lit(len(vocab_toks) + 1)
-
-    def _bigrams(frame):
-        return frame.filter(F.size("w") >= 2).select(
-            *[c for c in frame.columns if c != "w"],
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(w) - 2),"
-                    " i -> struct(w[i] AS w1, w[i + 1] AS w2))"
-                )
-            ).alias("g"),
-        )
-
-    # Per-document vocab-mapped bigram HISTOGRAM (r12): one scoring
-    # pass over the corpus, checkpointed; both the self-scored bigram
-    # model C2 (a <= (V+1)^2-row rollup of the histogram) and the
-    # scoring join read it, so the corpus bigram explode runs ONCE per
-    # invocation instead of twice. At 100 TB this is the
-    # materialize-to-parquet artifact; with a held-out ``reference``
-    # the C2 build stays its own sample-sized pass.
-    mbig_hist = (
-        _tx8_map_to_vocab(
-            _bigrams(w).select("doc_id", "g.w1", "g.w2"),
-            vocab_toks,
-            "w1",
-            "w2",
-        )
-        .groupBy("doc_id", "w1", "w2")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    if reference is None:
-        bi = mbig_hist.groupBy("w1", "w2").agg(F.sum("c").alias("c2"))
-    else:
-        tbig = _tx8_map_to_vocab(
-            _bigrams(tw).select("g.w1", "g.w2"), vocab_toks, "w1", "w2"
-        )
-        bi = tbig.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
-    scored = (
-        # LEFT joins: a scored bigram/unigram the reference never saw
-        # carries a Laplace zero count (self-scoring makes every key
-        # match, so the demo oracle is unchanged)
-        mbig_hist.join(F.broadcast(bi), ["w1", "w2"], "left")
-        .join(F.broadcast(uni), uni["t"] == mbig_hist["w1"], "left")
-        .select(
-            "doc_id",
-            "c",
-            F.log(
-                (F.coalesce(F.col("c2"), F.lit(0)) + F.lit(1.0))
-                / (F.coalesce(F.col("c1"), F.lit(0)) + vt)
-            ).alias("lp"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.sum("c").alias("n_bigrams"),
-        F.round(
-            F.sum(F.col("c") * F.col("lp")) / F.sum("c"), 4
-        ).alias("avg_logprob"),
-    )
-
-
-_CUR8_BUCKETS = 1024
-
-
-def _dsir_features(
-    docs: DataFrame, buckets: int, carry: tuple = ()
-) -> DataFrame:
-    """Hashed unigram+bigram feature stream over ``(doc_id, text)``:
-    ``(doc_id, b)`` with b in [0, buckets) — one row per feature
-    OCCURRENCE (DSIR counts occurrences, not types). Map-side only.
-    ``carry`` names extra per-doc columns to ride along (the fused
-    target-flag path)."""
-    w = docs.select("doc_id", *carry, F.split(F.col("text"), " ").alias("w"))
-    uni = w.select("doc_id", *carry, F.explode("w").alias("f"))
-    bi = w.filter(F.size("w") >= 2).select(
-        "doc_id",
-        *carry,
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(w) - 2),"
-                " i -> concat_ws(' ', w[i], w[i+1]))"
-            )
-        ).alias("f"),
-    )
-    return uni.unionByName(bi).select(
-        "doc_id",
-        *carry,
-        (_word_hash_spark(F.col("f")) % buckets).alias("b"),
-    )
-
-
-def _dsir_scores_raw(
-    corpus: DataFrame,
-    target: DataFrame | None,
-    buckets: int = _CUR8_BUCKETS,
-    target_flag: str | None = None,
-) -> DataFrame:
-    """DSIR log importance weight per corpus document: ``(doc_id,
-    n_feats, lw)`` over ``(doc_id, text)`` inputs, lw UNROUNDED —
-    higher = more target-like. ``target`` is the (small) domain
-    sample whose distribution the selection should match; ``corpus``
-    is both the raw distribution and the scored set (the paper's
-    shape). When the target is a SLICE of the corpus, pass
-    ``target_flag`` naming a boolean corpus column instead of a
-    separate frame (``target=None``): the target bucket counts then
-    ride the corpus histogram pass and the corpus text is featurized
-    exactly once.
-
-    Scale design (r12 — one corpus pass, down from two): the corpus
-    feature stream folds map-side into a per-document bucket
-    HISTOGRAM ``(doc_id, b, c)`` — at most min(feats, B) rows per doc
-    — which is localCheckpointed and feeds every downstream consumer,
-    so the text is split/hashed ONCE per invocation. The model stays
-    B rows BY CONSTRUCTION: bucket totals are a <= B-row aggregate
-    OVER THE HISTOGRAM (map-side-combined partials over <= B distinct
-    keys), collected once and turned into a B-row LOCAL log-ratio
-    relation (totals are its column sums; the tx8 vocab pattern) that
-    broadcasts into the scoring pass, so the corpus is never hashed
-    on a feature key and never re-scanned to build the model
-    (plan-pinned: zero SortMergeJoin). The scoring rollup keys on
-    doc_id — every histogram row of a document lives in the partition
-    that scanned it, so partials collapse map-side and the one
-    corpus-sized exchange carries final per-document rows. At 100 TB
-    the histogram is the materialize-to-parquet artifact; the
-    separate-target pass (generic form) stays sample-sized."""
-    import math
-
-    if target_flag is None:
-        hist = (
-            _dsir_features(corpus, buckets)
-            .groupBy("doc_id", "b")
-            .agg(F.count("*").alias("c"))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        # the per-doc target flag rides the feature stream and the
-        # histogram groupBy (constant per doc, so key cardinality is
-        # unchanged and partials still collapse in the scan partition)
-        hist = (
-            _dsir_features(
-                corpus.select(
-                    "doc_id",
-                    F.col(target_flag).alias("__tgt"),
-                    "text",
-                ),
-                buckets,
-                carry=("__tgt",),
-            )
-            .groupBy("doc_id", "__tgt", "b")
-            .agg(F.count("*").alias("c"))
-            .localCheckpoint(eager=True)
-        )
-    # Bucket-count model tables from the checkpointed histogram (<= B
-    # rows out, map-side-combined partials): ONE tiny collect for the
-    # corpus counts — and, under target_flag, the target counts share
-    # the same job via a flag-conditional sum. The log-ratio
-    # arithmetic runs driver-side over B rows — Python's
-    # correctly-rounded int/int division and libm ln produce the same
-    # doubles the in-plan F.log form did (pinned by the pure-Python
-    # mirror and the round(4) oracle).
-    if target_flag is not None:
-        rows = (
-            hist.groupBy("b")
-            .agg(
-                F.sum("c").alias("cr"),
-                F.sum(F.when(F.col("__tgt"), F.col("c"))).alias("ct"),
-            )
-            .collect()
-        )
-        tc = {r["b"]: r["ct"] or 0 for r in rows}
-        rc = {r["b"]: r["cr"] for r in rows}
-        hist = hist.drop("__tgt")
-    else:
-        tc = {
-            r["b"]: r["ct"]
-            for r in _dsir_features(target, buckets)
-            .groupBy("b")
-            .agg(F.count("*").alias("ct"))
-            .collect()
-        }
-        rc = {
-            r["b"]: r["cr"]
-            for r in hist.groupBy("b").agg(F.sum("c").alias("cr")).collect()
-        }
-    nt = sum(tc.values())
-    nr = sum(rc.values())
-    model = corpus.sparkSession.createDataFrame(
-        [
-            (
-                b,
-                math.log((tc.get(b, 0) + 1) / (nt + buckets))
-                - math.log((cr + 1) / (nr + buckets)),
-            )
-            for b, cr in sorted(rc.items())
-        ],
-        "b bigint, lr double",
-    )
-    return (
-        hist.join(F.broadcast(model), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").alias("n_feats"),
-            F.sum(F.col("c") * F.col("lr")).alias("lw"),
-        )
-    )
-
-
-_CUR9_K = 150
-_CUR9_SALT = "dsir"
-
-
-def dsir_gumbel_topk(
-    corpus: DataFrame,
-    target: DataFrame | None,
-    k: int = _CUR9_K,
-    buckets: int = _CUR8_BUCKETS,
-    salt: str = _CUR9_SALT,
-    target_flag: str | None = None,
-) -> DataFrame:
-    """Draw k documents ~ exp(dsir_logweight) without replacement via
-    deterministic Gumbel-top-k over :func:`_dsir_scores_raw`:
-    ``(doc_id, n_feats, dsir_logweight, sample_key)``, the drawn
-    sample. ``salt`` is the draw's seed — a new salt is a fresh
-    independent sample over the same weights.
-
-    Scale design: everything cur8 establishes (B-row model broadcasts,
-    corpus never feature-shuffled) plus the noise is a scan-side salted
-    md5 over doc_id ((h + 0.5) / 2^32 is exact in doubles, so both
-    engines feed ln the same bits) and the selection is TakeOrdered —
-    per-partition k-row heaps merged on the driver, no global sort
-    (plan-pinned)."""
-    u = (
-        _word_hash_spark(
-            F.concat_ws(
-                ":", F.lit(salt), F.col("doc_id").cast("string")
-            )
-        )
-        + F.lit(0.5)
-    ) / F.lit(4294967296.0)
-    keyed = _dsir_scores_raw(corpus, target, buckets, target_flag).withColumn(
-        "key", F.col("lw") + (-F.log(-F.log(u)))
-    )
-    return (
-        keyed.orderBy(F.desc("key"), F.asc("doc_id"))
-        .limit(k)
-        .select(
-            "doc_id",
-            "n_feats",
-            F.round("lw", 4).alias("dsir_logweight"),
-            F.round("key", 4).alias("sample_key"),
-        )
     )
 
 

@@ -1,40 +1,40 @@
-"""End-to-end training-corpus materialization: one pass from a raw
-document table to a packed, split-partitioned, sharded export.
+"""End-to-end training-corpus materialization: one pass from a
+``documents.parquet`` table to a packed, split-partitioned, sharded
+parquet export.
 
-The training-data operators are individually oracle-checked
-(corpus_ops.py); this module composes them the way a real pipeline
-runs them, sharing expensive intermediates instead of recomputing:
+The operators are oracle-checked one by one (corpus_ops.py); this
+module composes them, sharing the expensive intermediates:
 
-1. **dd7 labels once** — the iterative near-dup component labeling is
-   the most expensive stage, and THREE downstream stages consume it
-   (curation's cluster-aware keep, the leak-free split, and the audit
-   manifest). The labels are computed once and localCheckpointed;
-   at cluster scale they would be persisted parquet, bucketed by
-   doc_id, making every downstream join shuffle-free.
-2. **Curation** (cur1 semantics via ``curation_decisions``): quality
-   gate + language heuristic + lowest-id-gate-passing-member-per-
-   cluster dedup, with per-row drop_reason lineage.
-3. **Repetition gate** (cur3 semantics via ``repetition_stats``):
-   Gopher-style top-word/dup-3gram flags — map-side, fused into the
-   survivor scan.
+1. **dd7 labels once**: the near-dup component labeling is the most
+   expensive stage, and curation, the split and the manifest all read
+   it. The labels are computed once and localCheckpointed.
+2. **Curation** (``curation_decisions``): the quality gate, the
+   language heuristic and one keeper per near-dup cluster, with a
+   per-row drop_reason.
+3. **Repetition gate** (``repetition_stats``): Gopher-style top-word
+   and duplicate-3-gram flags, map-side. Then the optional gates, each
+   off by default: (3a) eval-set decontamination by 3-word shingles,
+   exact 13-token substrings or both, (3b) PII redaction and (3c) the
+   duplicate-span scrub.
 4. **Mixture** (operators/mixture.py, optional): weighted
-   water-filling downsampling under an optional token budget,
-   deterministic salted hash thresholds. Runs only when weights or a
-   budget are given — the default materialization never downsamples.
-5. **Split** (cur6 semantics via ``split_from_clusters``): near-dup-
-   closed train/validation/test over the SHARED dd7 labels — a
-   near-dup pair can never straddle eval and train.
-6. **Packing** (pack1 semantics via ``pack_doc_assignments``): token-
-   budget pack ids within (split, lang, shard).
+   water-filling downsampling under an optional token budget. It runs
+   only when weights, a temperature or a budget are given, so the
+   default materialization never downsamples.
+5. **Split** (``split_from_clusters``, or ``split_from_content``):
+   train/validation/test closed over the shared dd7 labels, so a
+   near-dup pair never straddles eval and train.
+6. **Packing** (``pack_doc_assignments``): whitespace-token budget
+   pack ids within (split, lang, shard).
 7. **Export** (export.py): parquet partitioned by split, shard-count
-   and shard-size bounded, plus a ``_manifest.json`` audit trail with
-   per-stage counts and per-split token mass.
+   and shard-size bounded, optionally with the materialized packs,
+   plus a ``_manifest.json`` with per-stage counts and per-split
+   token mass.
 
-Scale shape: two corpus-sized shuffles total (dd7's banding join and
-the packing window; curation's cluster window rides dd7's
-partitioning), everything else is scan-shaped or K-row driver math.
-The audit aggregates are three extra small jobs over already-computed
-frames — the price of a manifest, paid once per materialization.
+Scale shape: two corpus-sized shuffles (dd7's banding join and the
+packing window; curation's cluster window rides dd7's partitioning);
+everything else is scan-shaped or K-row driver math. The audit
+aggregates are small extra jobs over already-computed frames, the
+price of a manifest, paid once per materialization.
 """
 
 from __future__ import annotations
@@ -42,10 +42,10 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .export import export_jsonl, export_sharded_parquet
+from .export import export_sharded_parquet
 from .operators.mixture import mixture_resample
 from .session import load_table
 from .corpus_ops import (
@@ -57,154 +57,6 @@ from .corpus_ops import (
     split_from_clusters,
     split_from_content,
 )
-
-
-def _jsonl_doc_ids(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Long doc_ids for a JSONL corpus, deterministic across
-    machines and session configs (doc_id feeds every downstream join,
-    the mixture keep-hash, and dd7's min-id keeper choice, so an id
-    scheme that shifts with partition planning would change the KEPT
-    SET between environments):
-
-    - no doc_id field: synthesize xxhash64(file, position-in-file).
-      Position is derived SPLIT-ROBUSTLY from the hidden ``_metadata``
-      file-source column: order by ``_metadata.file_block_start`` (the
-      byte offset of the split the row was read from), then
-      ``monotonically_increasing_id()`` (byte order within a split).
-      This makes the position a pure function of the file bytes even
-      when a plain >maxPartitionBytes ``.jsonl`` shard is cut into
-      several splits — the r5 scheme ordered by mono-id alone, which
-      rides FilePartition's size-descending bin packing and is only
-      offset-ordered by the accident of a stable sort (VERDICT r5
-      "What's wrong" #2); ``file_block_start`` is offset order by
-      construction, independent of ``maxPartitionBytes`` and packing.
-    - integral doc_id: cast to long; NULLs are refused loudly (a NULL
-      key silently vanishes from every equi-join downstream);
-    - string doc_id (urn/uuid-style): map to xxhash64 of the string,
-      keeping the original as ``source_doc_id`` lineage; a 64-bit
-      collision between two DISTINCT source ids is refused loudly
-      (the pair would silently merge in every downstream join, dedup
-      keeper choice, and split assignment — ADVICE r5)."""
-    from pyspark.sql import Window, types as T
-
-    if "doc_id" not in df.columns:
-        w = Window.partitionBy(F.col("_metadata.file_path")).orderBy(
-            F.col("_metadata.file_block_start"),
-            F.monotonically_increasing_id(),
-        )
-        return (
-            df.withColumn(
-                "doc_id",
-                F.xxhash64(
-                    F.col("_metadata.file_path"), F.row_number().over(w)
-                ),
-            )
-            # the hidden struct materializes once referenced — drop it
-            # so the staged table carries only corpus columns
-            .drop("_metadata")
-        )
-    n_null = df.filter(F.col("doc_id").isNull()).count()
-    if n_null:
-        raise ValueError(
-            f"JSONL corpus has {n_null} rows with null doc_id: a NULL "
-            "key silently drops out of every downstream join. Fill or "
-            "remove the field (absent = positional ids are synthesized)."
-        )
-    if isinstance(df.schema["doc_id"].dataType, (T.StringType,)):
-        hashed = df.withColumn(
-            "source_doc_id", F.col("doc_id")
-        ).withColumn("doc_id", F.xxhash64(F.col("doc_id")))
-        _assert_no_id_collisions(hashed)
-        return hashed
-    return df.withColumn("doc_id", F.col("doc_id").cast("long"))
-
-
-def _assert_no_id_collisions(hashed: DataFrame) -> None:
-    """Refuse 64-bit hash collisions between DISTINCT source ids
-    loudly — the pair would otherwise silently merge in every
-    downstream join, dedup keeper choice, and split assignment
-    (ADVICE r5; null doc_ids were already checked loudly while a
-    collision was not). One staging-time map-side-combined agg, paid
-    once per materialization; the collider listing runs on the error
-    path only."""
-    n = hashed.agg(
-        F.countDistinct("doc_id").alias("ids"),
-        F.countDistinct("source_doc_id").alias("src"),
-    ).first()
-    if n["ids"] != n["src"]:
-        colliding = (
-            hashed.groupBy("doc_id")
-            .agg(F.collect_set("source_doc_id").alias("srcs"))
-            .filter(F.size("srcs") > 1)
-            .limit(5)
-            .collect()
-        )
-        pairs = "; ".join(
-            f"{r['doc_id']} <- {sorted(r['srcs'])}" for r in colliding
-        )
-        raise ValueError(
-            "xxhash64 collision between distinct string doc_ids — "
-            "the documents would silently merge in every downstream "
-            f"join/dedup/split. Colliding (first 5): {pairs}. "
-            "Rename the affected source ids or pre-assign integral "
-            "doc_ids."
-        )
-
-
-def _resolve_corpus(
-    spark: SparkSession, corpus_dir: str, out_dir: str
-) -> tuple[DataFrame, str]:
-    """(documents frame, table dir) for ``corpus_dir``.
-
-    A dir holding ``documents.parquet`` (the testdata layout) is used
-    as-is. Any OTHER input — a parquet dir (``batch_id``-partitioned
-    ones included) or a dir of JSONL shards (`*.jsonl`/`*.jsonl.gz`, the
-    crawl-dump interchange format; must carry ``text``, with
-    ``doc_id`` synthesized from the line position when absent) — is
-    normalized once into ``out_dir/_staged/documents.parquet``:
-    sink bookkeeping (batch_id) dropped, missing optional columns
-    filled (lang 'und', source 'unknown', n_chars from the text), so
-    the corpus operators (which read the table layout) run unchanged.
-    The staging write is one corpus copy, paid once per
-    materialization; a deployment running this daily at scale would
-    point corpus_dir at a maintained table instead."""
-    if os.path.exists(os.path.join(corpus_dir, "documents.parquet")):
-        return load_table(spark, corpus_dir, "documents"), corpus_dir
-    listing = os.listdir(corpus_dir) if os.path.isdir(corpus_dir) else []
-    jsonl = [e for e in listing if e.endswith((".jsonl", ".jsonl.gz"))]
-    has_parquet = any(
-        e.endswith(".parquet") or e.startswith("batch_id=") for e in listing
-    )
-    if jsonl and not has_parquet:
-        # *.jsonl / *.jsonl.gz only, and only when the dir holds no
-        # parquet — a stray JSON sidecar in a parquet corpus must not
-        # flip the whole dir to the JSONL reader
-        df = spark.read.json([os.path.join(corpus_dir, e) for e in jsonl])
-        if "text" not in df.columns:
-            raise ValueError(
-                f"JSONL corpus {corpus_dir!r} has no 'text' field "
-                f"(columns: {df.columns})"
-            )
-        df = _jsonl_doc_ids(spark, df)
-    else:
-        # pathGlobFilter: a sidecar (stats.jsonl, notes.json, ...)
-        # sitting next to the parquet files must not break the scan
-        df = spark.read.option("pathGlobFilter", "*.parquet").parquet(
-            corpus_dir
-        )
-    if "batch_id" in df.columns:
-        df = df.drop("batch_id")
-    if "lang" not in df.columns:
-        df = df.withColumn("lang", F.lit("und"))
-    if "source" not in df.columns:
-        df = df.withColumn("source", F.lit("unknown"))
-    if "n_chars" not in df.columns:
-        df = df.withColumn("n_chars", F.length("text").cast("long"))
-    staged = os.path.join(out_dir, "_staged")
-    df.write.mode("overwrite").parquet(
-        os.path.join(staged, "documents.parquet")
-    )
-    return load_table(spark, staged, "documents"), staged
 
 
 def run_corpus_pipeline(
@@ -223,17 +75,11 @@ def run_corpus_pipeline(
     write_packs: bool = False,
     split_by: str = "clusters",
     scrub_spans: bool = False,
-    min_lm_logprob: float | None = None,
-    dsir_target_dir: str | None = None,
-    dsir_keep: int | None = None,
     mixture_temperature: float | None = None,
     scrub_pii: bool = False,
     decontaminate_by: str = "shingles",
-    bpe_merges: int | None = None,
-    bpe_tokenizer: str | None = None,
-    export_format: str = "parquet",
 ) -> dict:
-    """Materialize ``corpus_dir``'s documents table into
+    """Materialize ``corpus_dir/documents.parquet`` into
     ``out_dir/corpus`` (parquet, partitioned by split) and return the
     audit manifest (also written to ``out_dir/_manifest.json``).
 
@@ -275,29 +121,14 @@ def run_corpus_pipeline(
             )
     if token_budget is not None and token_budget < 0:
         raise ValueError(f"negative token_budget {token_budget}")
-    if (dsir_target_dir is None) != (dsir_keep is None):
-        raise ValueError(
-            "dsir_target_dir and dsir_keep must be given together"
-        )
-    if dsir_keep is not None and dsir_keep <= 0:
-        raise ValueError(f"dsir_keep must be positive, got {dsir_keep}")
-    if bpe_merges is not None and bpe_merges <= 0:
-        raise ValueError(f"bpe_merges must be positive, got {bpe_merges}")
-    if bpe_merges is not None and bpe_tokenizer is not None:
-        raise ValueError(
-            "pass bpe_merges (train a fresh tokenizer) OR "
-            "bpe_tokenizer (encode under a frozen artifact), not both"
-        )
-    if export_format not in ("parquet", "jsonl"):
-        raise ValueError(
-            "export_format must be 'parquet' or 'jsonl', got "
-            f"{export_format!r}"
-        )
+    documents = os.path.join(corpus_dir, "documents.parquet")
+    if not os.path.exists(documents):
+        raise ValueError(f"corpus dir has no documents table: {documents}")
     os.makedirs(out_dir, exist_ok=True)
-    docs, table_dir = _resolve_corpus(spark, corpus_dir, out_dir)
+    docs = load_table(spark, corpus_dir, "documents")
 
     # stage 1: near-dup component labels, computed once and shared
-    labels = dd7_dedup_clusters(spark, table_dir).localCheckpoint(
+    labels = dd7_dedup_clusters(spark, corpus_dir).localCheckpoint(
         eager=True
     )
 
@@ -312,7 +143,7 @@ def run_corpus_pipeline(
     )
     survivors = docs.join(kept, "doc_id", "left_semi")
 
-    # stage 3b (optional): benchmark decontamination — drop any doc
+    # stage 3a (optional): benchmark decontamination — drop any doc
     # leaking eval content, by the selected tier(s): "shingles"
     # (cur2 semantics, ANY shared 3-word shingle — recall-heavy),
     # "substrings" (cur10 semantics, exact >= 13-token overlap — the
@@ -346,7 +177,7 @@ def run_corpus_pipeline(
         n_contaminated = contam.count()
         survivors = survivors.join(contam, "doc_id", "left_anti")
 
-    # stage 3b2 (optional): PII redaction (tx5 semantics, applying
+    # stage 3b (optional): PII redaction (tx5 semantics, applying
     # form): emails/phones replaced with placeholders IN the surviving
     # text, before any stage that reads or counts tokens. Scan-shaped
     # JVM regexes, zero shuffle; off by default — rewriting text is a
@@ -374,35 +205,7 @@ def run_corpus_pipeline(
             .withColumn("n_chars", F.length("text").cast("long"))
         )
 
-    # stage 3c (optional): bigram-LM quality gate (tx8 semantics,
-    # the CCNet-shaped perplexity filter): keep only docs whose
-    # avg bigram log-probability under a model trained on the
-    # surviving corpus itself clears the threshold. Self-training is
-    # the demo shape — a deployment trains on a held-out reference
-    # slice (ngram_lm_scores takes any (doc_id, text) frame) — and
-    # docs too short to carry a bigram score no row, so the gate
-    # DROPS them (sub-2-token docs are noise under any LM gate).
-    lm_stats = {"enabled": False, "dropped": 0}
-    if min_lm_logprob is not None:
-        from .corpus_ops import ngram_lm_scores
-
-        passed = (
-            ngram_lm_scores(survivors.select("doc_id", "text"))
-            .filter(F.col("avg_logprob") >= min_lm_logprob)
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-        )
-        n_lm_dropped = survivors.join(
-            passed, "doc_id", "left_anti"
-        ).count()
-        survivors = survivors.join(passed, "doc_id", "left_semi")
-        lm_stats = {
-            "enabled": True,
-            "dropped": n_lm_dropped,
-            "min_lm_logprob": min_lm_logprob,
-        }
-
-    # stage 3d (optional): unaligned duplicate-span scrub (dd10/dd11
+    # stage 3c (optional): unaligned duplicate-span scrub (dd10/dd11
     # semantics) over the CURATED survivors — whole-doc dedup already
     # removed exact/near duplicate documents above; this removes
     # repeated RUNS (boilerplate, licence blocks, navigation chrome)
@@ -444,38 +247,6 @@ def run_corpus_pipeline(
             )
             .withColumn("n_chars", F.length("text").cast("long"))
         )
-
-    # stage 3e (optional): DSIR domain selection (cur8/cur9
-    # semantics): keep the dsir_keep-document Gumbel-top-k draw
-    # ~ exp(importance weight) toward the target directory's
-    # documents table. Runs AFTER the scrub so the weights see final
-    # text, BEFORE mixture so the token accounting sees the drawn
-    # set. The draw is deterministic (salted-md5 Gumbel), so
-    # re-running reproduces the same corpus.
-    dsir_stats = {"enabled": False, "dropped": 0}
-    if dsir_target_dir is not None:
-        from .corpus_ops import dsir_gumbel_topk
-
-        target = load_table(spark, dsir_target_dir, "documents").select(
-            "doc_id", "text"
-        )
-        drawn = (
-            dsir_gumbel_topk(
-                survivors.select("doc_id", "text"), target, k=dsir_keep
-            )
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-        )
-        n_dsir_dropped = survivors.join(
-            drawn, "doc_id", "left_anti"
-        ).count()
-        survivors = survivors.join(drawn, "doc_id", "left_semi")
-        dsir_stats = {
-            "enabled": True,
-            "dropped": n_dsir_dropped,
-            "target_dir": dsir_target_dir,
-            "keep": dsir_keep,
-        }
 
     # stage 4 (optional): mixture downsampling. Runs ONLY when the
     # caller asked for a mixture (weights) or a cap (token_budget) —
@@ -544,122 +315,14 @@ def run_corpus_pipeline(
             labels.select("doc_id", "cluster_id"), "doc_id"
         )
 
-    # stage 5b (optional): tx9 trained-BPE tokenization. The merge
-    # table is trained on the documents that will ACTUALLY be packed
-    # (post-every-gate — training on pre-gate text would burn merges
-    # on junk the pipeline just dropped), then packing proceeds in
-    # MODEL tokens: a trainer's sequence budget is subword tokens,
-    # and a whitespace budget mis-fills packs by exactly the corpus's
-    # BPE compression ratio. Training is one TakeOrdered word count
-    # (K rows leave the cluster, tx9's shape); the per-doc subword
-    # counts are one zero-exchange Arrow scan, checkpointed because
-    # the packing window, the manifest aggregate, and the export all
-    # consume them. The tokenizer is a PERSISTED artifact
-    # (out_dir/tokenizer.json, sha256 in the manifest); pass
-    # bpe_tokenizer=<path> to encode a later corpus under the frozen
-    # table instead of retraining (VERDICT r7 #4).
-    tok_stats: dict = {"enabled": False}
-    tokens_col = None
-    has_token_ids = False
-    if bpe_merges is not None or bpe_tokenizer is not None:
-        from .operators.bpe import (
-            bpe_encode_ids,
-            bpe_token_stats,
-            bpe_vocab,
-            corpus_word_counts,
-            save_tokenizer,
-            load_tokenizer,
-            train_bpe,
-        )
-
-        if bpe_tokenizer is not None:
-            # FROZEN tokenizer (VERDICT r7 #4): encode under a prior
-            # run's artifact — no training pass, and the id space is
-            # guaranteed identical to the run that produced it
-            # (hash-verifiable via the manifest fingerprint)
-            merges, vocab = load_tokenizer(bpe_tokenizer)
-            # re-save a co-located copy into out_dir (ADVICE r8): the
-            # caller's path may be relative or later moved/deleted,
-            # and the export must be self-contained — a downstream
-            # consumer gets a resolvable artifact to verify against
-            # the manifest sha256, not just the fingerprint. The
-            # canonical payload is identical, so the copy's sha256
-            # equals the source's by construction.
-            artifact = save_tokenizer(
-                os.path.join(out_dir, "tokenizer.json"), merges, vocab
-            )
-            artifact["source_path"] = bpe_tokenizer
-            artifact["trained"] = False
-        else:
-            counts = corpus_word_counts(final.select("doc_id", "text"))
-            merges = train_bpe(counts, bpe_merges)
-            vocab = bpe_vocab(counts, merges)
-            # persist the trained tokenizer next to the export so a
-            # later run encodes new documents under THIS table, never
-            # a retrain
-            artifact = save_tokenizer(
-                os.path.join(out_dir, "tokenizer.json"), merges, vocab
-            )
-            artifact["trained"] = True
-        vocab_size = len(vocab)
-        if write_packs:
-            # packs will carry trainer-ready id sequences, so encode
-            # ids once (counts come free as their lengths)
-            enc = bpe_encode_ids(
-                final.select("doc_id", "text"), merges, vocab
-            ).localCheckpoint(eager=True)
-            ws_row = final.agg(
-                F.sum(
-                    F.size(
-                        F.filter(
-                            F.split(F.col("text"), " "),
-                            lambda w: w != "",
-                        )
-                    ).cast("long")
-                ).alias("ws")
-            ).first()
-            bpe_row = enc.agg(F.sum("n_bpe_tokens").alias("bpe")).first()
-            trow = {"ws": ws_row["ws"], "bpe": bpe_row["bpe"]}
-            final = final.join(
-                enc.select("doc_id", "token_ids", "n_bpe_tokens"),
-                "doc_id",
-            )
-            has_token_ids = True
-        else:
-            bstats = bpe_token_stats(
-                final.select("doc_id", "text"), merges
-            ).localCheckpoint(eager=True)
-            trow = bstats.agg(
-                F.sum("n_ws_tokens").alias("ws"),
-                F.sum("n_bpe_tokens").alias("bpe"),
-            ).first()
-            final = final.join(
-                bstats.select("doc_id", "n_bpe_tokens"), "doc_id"
-            )
-        ws, bpe = int(trow["ws"] or 0), int(trow["bpe"] or 0)
-        tokens_col = "n_bpe_tokens"
-        tok_stats = {
-            "enabled": True,
-            "merges_requested": bpe_merges,
-            "merges_learned": len(merges),
-            "vocab_size": vocab_size,
-            "ws_tokens": ws,
-            "bpe_tokens": bpe,
-            "compression": round(ws / bpe, 4) if bpe else None,
-            "tokenizer": artifact,
-        }
-
     # stage 6: pack assignment within (split, lang, shard)
     packed = pack_doc_assignments(
         final,
         budget=pack_budget,
         shards=pack_shards,
         group_cols=("split", "lang"),
-        tokens_col=tokens_col,
     ).select("doc_id", "shard", "tokens", "pack_id")
-    # drop the raw BPE count after the join: `tokens` (from packed)
-    # carries the same value and is the lineage column consumers read
-    out = final.join(packed, "doc_id").drop("n_bpe_tokens")
+    out = final.join(packed, "doc_id")
 
     # stage 7: export, partitioned by split, ordered so each pack's
     # docs are contiguous within a shard file. pack_id is only unique
@@ -670,16 +333,8 @@ def run_corpus_pipeline(
     # by the partition column unless the data already arrives ordered
     # by it — a trailing split would silently shuffle pack runs apart
     corpus_path = os.path.join(out_dir, "corpus")
-    # per-doc id arrays stay out of the corpus export (they would
-    # roughly double it); the packs artifact is where trainers read
-    # token ids, already concatenated per sequence
-    exporter = (
-        export_sharded_parquet
-        if export_format == "parquet"
-        else export_jsonl
-    )
-    exporter(
-        out.drop("token_ids") if has_token_ids else out,
+    export_sharded_parquet(
+        out,
         corpus_path,
         n_shards=n_shards,
         max_records_per_file=max_records_per_file,
@@ -694,10 +349,8 @@ def run_corpus_pipeline(
     if write_packs:
         from .operators.packing import materialize_packs
 
-        exporter(
-            materialize_packs(
-                out, ids_col="token_ids" if has_token_ids else None
-            ),
+        export_sharded_parquet(
+            materialize_packs(out),
             os.path.join(out_dir, "packs"),
             n_shards=n_shards,
             max_records_per_file=max_records_per_file,
@@ -715,11 +368,7 @@ def run_corpus_pipeline(
     from pyspark.errors import AnalysisException
 
     try:
-        written = (
-            spark.read.parquet(corpus_path)
-            if export_format == "parquet"
-            else spark.read.json(corpus_path)
-        )
+        written = spark.read.parquet(corpus_path)
         per_split = {
             r["split"]: {"docs": r["docs"], "tokens": r["tokens"]}
             for r in written.groupBy("split")
@@ -746,19 +395,13 @@ def run_corpus_pipeline(
         "repetition_dropped": int(
             drop_counts.get("kept", 0)
             - n_contaminated
-            - lm_stats["dropped"]
-            - dsir_stats["dropped"]
             - mix_stats["in"]
         ),
         "contaminated_dropped": n_contaminated,
         "decontaminate_by": decontaminate_by if eval_dir else None,
         "pii_scrub": pii_stats,
-        "lm_gate": lm_stats,
-        "dsir": dsir_stats,
         "mixture": mix_stats,
         "span_scrub": scrub_stats,
-        "tokenizer": tok_stats,
-        "export_format": export_format,
         "split_by": split_by,
         "splits": per_split,
         "pack_budget": pack_budget,

@@ -1,4 +1,4 @@
-"""Corpus export sinks: sharded, pruning-friendly bulk writes.
+"""Corpus export sink: sharded, pruning-friendly parquet writes.
 
 The domain pipeline's warehouse writes (pipeline.py) are
 day/month-partitioned with dynamic overwrite; this module is the
@@ -12,10 +12,9 @@ the file LAYOUT is the contract:
   guard: ``n_shards`` repartitions to exactly that many tasks);
 - ``order_cols`` range-repartitions + sorts within shards, so the
   written row groups carry tight min/max stats on those columns and
-  later scans with range predicates prune files without an index;
-- JSONL mirrors the parquet layout for line-oriented consumers.
+  later scans with range predicates prune files without an index.
 
-At 100 TB both writers are single-shuffle (the optional
+At 100 TB the writer is single-shuffle (the optional
 range-repartition); the write itself is embarrassingly parallel.
 """
 
@@ -60,28 +59,3 @@ def export_sharded_parquet(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)
-
-
-def export_jsonl(
-    df: DataFrame,
-    path: str,
-    n_shards: int | None = None,
-    max_records_per_file: int | None = None,
-    order_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    compression: str | None = None,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """Write ``df`` as JSON-lines shards (the interchange format
-    tokenizer/training workers consume), same layout controls as the
-    parquet exporter. ``compression=None`` (default) keeps shards
-    seekable plain text; pass ``"gzip"``/``"zstd"`` when the consumer
-    streams compressed shards."""
-    writer = _shaped(df, n_shards, order_cols).write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    if compression:
-        writer = writer.option("compression", compression)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.json(path)

@@ -1,2 +1,2 @@
-"""Reusable distributed operators (geo joins and geometry, BPE,
-rolling window hashes, corpus packing and mixture)."""
+"""Reusable distributed operators (geo joins and geometry, rolling
+window hashes, corpus packing and mixture)."""

@@ -37,7 +37,6 @@ def materialize_packs(
     id_col: str = "doc_id",
     text_col: str = "text",
     tokens_col: str = "tokens",
-    ids_col: str | None = None,
 ) -> DataFrame:
     """One row per pack: ``(*keys, n_docs, total_tokens, doc_ids,
     member_tokens, token_offsets, text)`` with member texts joined by
@@ -53,25 +52,12 @@ def materialize_packs(
     boundary list a trainer needs for document-level attention /
     loss masks over packed sequences. Computed in-row (HOF prefix
     sum; packs hold a handful of members by construction, so the
-    quadratic slice cost is bounded by the pack budget).
-
-    ``ids_col``: when the docs carry subword id sequences (the
-    pipeline's --bpe-merges + --write-packs path), each pack also
-    emits ``token_ids`` — the members' id sequences concatenated in
-    the same ascending ``id_col`` order — so a trainer reads the pack
-    row directly: token_ids is the training sequence, token_offsets
-    its document boundaries (in the same BPE token unit, since the
-    pipeline packs in model tokens whenever ids exist)."""
-    fields = [
+    quadratic slice cost is bounded by the pack budget)."""
+    member = F.struct(
         F.col(id_col).alias("i"),
         F.coalesce(F.col(text_col), F.lit("")).alias("t"),
         F.col(tokens_col).cast("long").alias("k"),
-    ]
-    if ids_col is not None:
-        # ids LAST: array_sort orders structs field-by-field, and the
-        # leading unique doc_id must stay the sort key
-        fields.append(F.col(ids_col).alias("ids"))
-    member = F.struct(*fields)
+    )
     out = (
         assigned_docs.groupBy(*keys)
         .agg(
@@ -89,13 +75,6 @@ def materialize_packs(
                 "transform(ms, (x, j) -> aggregate(slice(ms, 1, j),"
                 " cast(0 as long), (a, y) -> a + y.k))"
             ).alias("token_offsets"),
-            *(
-                [F.expr("flatten(transform(ms, x -> x.ids))").alias(
-                    "token_ids"
-                )]
-                if ids_col is not None
-                else []
-            ),
             F.array_join(F.expr("transform(ms, x -> x.t)"), sep).alias(
                 "text"
             ),

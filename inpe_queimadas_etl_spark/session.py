@@ -52,22 +52,19 @@ def get_spark(
         shuffle_partitions = max(cpus, 8)
 
     # Driver heap sized to the role it plays: in local[N] mode the
-    # driver JVM IS every executor, and Spark's unconfigured default
-    # (1g) leaves ~420 MB of unified memory for N concurrent tasks
-    # plus every localCheckpoint block — measured at N=32/sf0.1 as GC
-    # thrash that doubled suite-tail query times (r12, guide §5).
-    # Env-overridable; on a real cluster submit sets driver/executor
-    # memory explicitly and this default is irrelevant (a driver that
-    # only plans and collects bounded results needs far less).
+    # driver JVM is every executor, and Spark's unconfigured default
+    # (1g) leaves about 420 MB of unified memory for N concurrent
+    # tasks plus every localCheckpoint block (the corpus pipeline
+    # checkpoints its dd7 labels and gate outputs), which runs the
+    # JVM into GC thrash. Env-overridable; on a real cluster submit
+    # sets driver/executor memory explicitly and this default is
+    # irrelevant.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    # Throughput collector for the batch role (r13, guide §5/§9): in
-    # local[N] the driver JVM is every executor, and G1 (the JDK
-    # default) develops an aged-heap pathology on allocation-burst
-    # reducers — measured on the 25-query bench prefix: the hot-key
-    # collect_set query read 5.1 s under aged G1 vs 2.0 s in a fresh
-    # JVM vs 1.5 s under ParallelGC, and 24 of 27 prefix queries ran
-    # at or below their G1 times under ParallelGC (geomean -11 %,
-    # full table in OPTIMIZATION_r13.md). Env-overridable (set
+    # Throughput collector: in local[N] the driver JVM is every
+    # executor, and its tasks allocate in bursts (aggregation and
+    # collect_set reducers). G1, the JDK default, degrades on an aged
+    # heap under such bursts: one collect_set-heavy aggregation read
+    # 5.1 s under aged G1 and 1.5 s under ParallelGC. Env-overridable (set
     # SPARK_GRAFT_DRIVER_GC="" to keep the JVM default); on a real
     # cluster submit-time executor JVM options override this, same as
     # driver memory. Like spark.driver.memory, only effective when

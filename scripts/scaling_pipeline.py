@@ -20,10 +20,8 @@ Two variants are measured (VERDICT r6 #7):
   pack -> export), refreshing the 0.79 exponent;
 - "full": every selection gate ON in the one invocation —
   decontaminate-by both (20-doc eval set carved from corpus text so
-  the broadcast joins have real work), scrub-pii, min-lm-logprob
-  (permissive threshold: the cost is the corpus-wide scoring, not
-  the drops), scrub-spans, DSIR toward an n/10-doc target slice with
-  keep=0.4n, and mixture-temperature 0.7. Every gate's cost scales
+  the broadcast joins have real work), scrub-pii, scrub-spans and
+  mixture-temperature 0.7. Every gate's cost scales
   with the corpus, so the composed exponent should stay ~linear or
   below; a super-linear exponent means a stage recomputes shared
   lineage.
@@ -159,9 +157,8 @@ def main() -> None:
             )
             dirs[label] = d
 
-        # full-stack side inputs: an eval set carved from corpus text
-        # (so the decontamination joins flag real rows) and a
-        # same-distribution DSIR target slice per size
+        # full-stack side input: an eval set carved from corpus text
+        # (so the decontamination joins flag real rows)
         eval_dir = os.path.join(tmp, "eval")
         os.makedirs(eval_dir)
         small = gen_documents(200, seed=42)
@@ -180,27 +177,13 @@ def main() -> None:
             ),
             os.path.join(eval_dir, "documents.parquet"),
         )
-        tdirs = {}
-        for label, n in SIZES.items():
-            td = os.path.join(tmp, f"target_{label}")
-            os.makedirs(td)
-            pq.write_table(
-                gen_documents(max(200, n // 10), seed=7),
-                os.path.join(td, "documents.parquet"),
-            )
-            tdirs[label] = td
-
-        def gates(label: str) -> dict:
-            return dict(
-                eval_dir=eval_dir,
-                decontaminate_by="both",
-                scrub_pii=True,
-                min_lm_logprob=-20.0,
-                scrub_spans=True,
-                dsir_target_dir=tdirs[label],
-                dsir_keep=max(1, int(0.4 * SIZES[label])),
-                mixture_temperature=0.7,
-            )
+        gates = dict(
+            eval_dir=eval_dir,
+            decontaminate_by="both",
+            scrub_pii=True,
+            scrub_spans=True,
+            mixture_temperature=0.7,
+        )
 
         def run(label: str, tag: str, **kw) -> dict:
             out = os.path.join(tmp, f"out_{label}_{tag}")
@@ -211,13 +194,13 @@ def main() -> None:
 
         smallest = min(SIZES, key=SIZES.get)
         run(smallest, "warmup")  # JVM/codegen warm-up
-        run(smallest, "warmup_full", **gates(smallest))
+        run(smallest, "warmup_full", **gates)
 
         for variant in ("base", "full"):
             times: dict[str, float] = {}
             kept: dict[str, int] = {}
             for label in SIZES:
-                kw = gates(label) if variant != "base" else {}
+                kw = gates if variant != "base" else {}
                 samples = []
                 for i in range(2):
                     t0 = time.perf_counter()

@@ -27,9 +27,6 @@ from pyspark.sql import functions as F
 
 from inpe_queimadas_etl_spark.corpus_ops import (
     _CUR6_BOUNDS,
-    _CUR8_BUCKETS,
-    _CUR9_K,
-    _CUR9_SALT,
     _CUR10_WIN,
     _DD10_WIN,
     _MH_A,
@@ -42,9 +39,6 @@ from inpe_queimadas_etl_spark.corpus_ops import (
     _STOPWORDS,
     _TX5_EMAIL_RE,
     _TX5_PHONE_RE,
-    _TX8_UNK,
-    _TX8_VOCAB,
-    _dsir_scores_raw,
     _hash_frac_spark,
     _word_hash_spark,
     curation_decisions,
@@ -52,9 +46,7 @@ from inpe_queimadas_etl_spark.corpus_ops import (
     dd4_minhash_lsh_candidates,
     dd7_dedup_clusters,
     decontamination_report,
-    dsir_gumbel_topk,
     duplicate_spans,
-    ngram_lm_scores,
     pack_doc_assignments,
     pii_redact,
     remove_duplicate_spans,
@@ -478,8 +470,8 @@ def tx5_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# corpus_ops._word_hash_spark (the word hash of the DSIR features,
-# _hash_frac_spark and the Gumbel draw) over every word of the corpus,
+# corpus_ops._word_hash_spark (the hash behind _hash_frac_spark, which
+# the splits and the mixture keep-draw use) over every word of the corpus,
 # folded per document as a position-weighted XOR: one word that hashes
 # differently from the oracle changes its document's value
 TX4_SQL = f"""
@@ -731,166 +723,7 @@ def _md5_window_shingles(docs: DataFrame, win: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# selection: tx8 bigram LM, cur8 DSIR weights, cur9 DSIR Gumbel-top-k
-# ---------------------------------------------------------------------------
-
-# Laplace-smoothed bigram LM over the top-V vocabulary (OOV ->
-# '<unk>'), trained on and scoring the whole corpus
-TX8_SQL = f"""
-    WITH w AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ),
-    tok AS (SELECT doc_id, unnest(w) AS t FROM w),
-    vocab AS (
-        SELECT t FROM tok GROUP BY t
-        ORDER BY count(*) DESC, t LIMIT {_TX8_VOCAB}
-    ),
-    vt AS (SELECT count(*) + 1 AS vt FROM vocab),
-    mtok AS (
-        SELECT doc_id,
-               CASE WHEN t IN (SELECT t FROM vocab)
-                    THEN t ELSE '{_TX8_UNK}' END AS t
-        FROM tok
-    ),
-    uni AS (SELECT t, count(*) AS c1 FROM mtok GROUP BY t),
-    big AS (
-        SELECT doc_id,
-               unnest(list_transform(generate_series(1, len(w) - 1),
-                                     i -> w[i])) AS r1,
-               unnest(list_transform(generate_series(1, len(w) - 1),
-                                     i -> w[i + 1])) AS r2
-        FROM w WHERE len(w) >= 2
-    ),
-    mbig AS (
-        SELECT doc_id,
-               CASE WHEN r1 IN (SELECT t FROM vocab)
-                    THEN r1 ELSE '{_TX8_UNK}' END AS w1,
-               CASE WHEN r2 IN (SELECT t FROM vocab)
-                    THEN r2 ELSE '{_TX8_UNK}' END AS w2
-        FROM big
-    ),
-    bi AS (SELECT w1, w2, count(*) AS c2 FROM mbig GROUP BY w1, w2)
-    SELECT m.doc_id,
-           CAST(count(*) AS BIGINT) AS n_bigrams,
-           round(avg(ln((bi.c2 + 1.0) / (uni.c1 + vt.vt))), 4)
-               AS avg_logprob
-    FROM mbig m
-    JOIN bi ON bi.w1 = m.w1 AND bi.w2 = m.w2
-    JOIN uni ON uni.t = m.w1
-    CROSS JOIN vt
-    GROUP BY m.doc_id
-"""
-
-
-def tx8_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_lm_scores(docs.select("doc_id", "text"))
-
-
-# DSIR toward the corpus's 'en' slice, raw = the whole corpus; the CTE
-# chain ends in ``scored(doc_id, n_feats, lw)`` with lw unrounded
-_CUR8_TARGET_LANG = "en"
-_CUR8_CTE = f"""w AS (
-        SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
-    ),
-    feats AS (
-        SELECT doc_id, lang,
-               ({_hex_to_int_sql("substr(md5(f),1,8)")}) % {_CUR8_BUCKETS} AS b
-        FROM (
-            SELECT doc_id, lang, unnest(w) AS f FROM w
-            UNION ALL
-            SELECT doc_id, lang,
-                   unnest(list_transform(generate_series(1, len(w) - 1),
-                          i -> w[i] || ' ' || w[i + 1])) AS f
-            FROM w WHERE len(w) >= 2
-        )
-    ),
-    tc AS (
-        SELECT b, count(*) AS ct FROM feats
-        WHERE lang = '{_CUR8_TARGET_LANG}' GROUP BY b
-    ),
-    rc AS (SELECT b, count(*) AS cr FROM feats GROUP BY b),
-    nt AS (
-        SELECT count(*) AS nt FROM feats WHERE lang = '{_CUR8_TARGET_LANG}'
-    ),
-    nr AS (SELECT count(*) AS nr FROM feats),
-    model AS (
-        SELECT rc.b,
-               ln((coalesce(tc.ct, 0) + 1.0) / (nt.nt + {_CUR8_BUCKETS}))
-             - ln((rc.cr + 1.0) / (nr.nr + {_CUR8_BUCKETS})) AS lr
-        FROM rc LEFT JOIN tc ON rc.b = tc.b
-        CROSS JOIN nt CROSS JOIN nr
-    ),
-    scored AS (
-        SELECT f.doc_id,
-               CAST(count(*) AS BIGINT) AS n_feats,
-               sum(m.lr) AS lw
-        FROM feats f JOIN model m ON f.b = m.b
-        GROUP BY f.doc_id
-    )"""
-
-CUR8_SQL = f"""
-    WITH {_CUR8_CTE}
-    SELECT doc_id, n_feats, round(lw, 4) AS dsir_logweight FROM scored
-"""
-
-
-def dsir_logweights(
-    corpus: DataFrame,
-    target: DataFrame | None,
-    buckets: int = _CUR8_BUCKETS,
-    target_flag: str | None = None,
-) -> DataFrame:
-    """``(doc_id, n_feats, dsir_logweight)``: corpus_ops._dsir_scores_raw
-    rounded to 4 dp."""
-    return _dsir_scores_raw(corpus, target, buckets, target_flag).select(
-        "doc_id",
-        "n_feats",
-        F.round("lw", 4).alias("dsir_logweight"),
-    )
-
-
-def _dsir_flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents with the target slice as a boolean column."""
-    return load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        (F.col("lang") == _CUR8_TARGET_LANG).alias("is_tgt"),
-    )
-
-
-def cur8_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dsir_logweights(
-        _dsir_flagged(spark, sf_dir), None, target_flag="is_tgt"
-    )
-
-
-_CUR9_H = _hex_to_int_sql(
-    f"substr(md5('{_CUR9_SALT}:' || CAST(doc_id AS VARCHAR)),1,8)"
-)
-
-CUR9_SQL = f"""
-    WITH {_CUR8_CTE},
-    keyed AS (
-        SELECT doc_id, n_feats, lw,
-               lw + (-ln(-ln((({_CUR9_H}) + 0.5) / 4294967296.0))) AS key
-        FROM scored
-    )
-    SELECT doc_id, n_feats,
-           round(lw, 4) AS dsir_logweight,
-           round(key, 4) AS sample_key
-    FROM keyed ORDER BY key DESC, doc_id LIMIT {_CUR9_K}
-"""
-
-
-def cur9_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dsir_gumbel_topk(
-        _dsir_flagged(spark, sf_dir), None, target_flag="is_tgt"
-    )
-
-
-# ---------------------------------------------------------------------------
-# llm_ops_battery: dd10, dd11, cur8, cur9, cur10 and tx8 melted to
+# llm_ops_battery: dd10, dd11 and cur10 melted to
 # (chk, key_s, n, v) rows and unioned, against the union of their oracles
 # ---------------------------------------------------------------------------
 
@@ -906,20 +739,11 @@ BATTERY_SQL = f"""
            n_tokens_before, CAST(n_tokens_removed AS DOUBLE)
     FROM ({DD11_SQL})
     UNION ALL
-    SELECT 'cur8', CAST(doc_id AS VARCHAR), n_feats, dsir_logweight
-    FROM ({CUR8_SQL})
-    UNION ALL
-    SELECT 'cur9', CAST(doc_id AS VARCHAR), n_feats, sample_key
-    FROM ({CUR9_SQL})
-    UNION ALL
     SELECT 'cur10',
            concat_ws(':', CAST(doc_id AS VARCHAR),
                      CAST(contaminated AS VARCHAR)),
            n_hit_windows, CAST(NULL AS DOUBLE)
     FROM ({CUR10_SQL})
-    UNION ALL
-    SELECT 'tx8', CAST(doc_id AS VARCHAR), n_bigrams, avg_logprob
-    FROM ({TX8_SQL})
 """
 
 
@@ -956,20 +780,6 @@ def llm_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_tokens_removed"),
         ),
         _melt_battery(
-            cur8_dsir_selection(spark, sf_dir),
-            "cur8",
-            F.col("doc_id"),
-            F.col("n_feats"),
-            F.col("dsir_logweight"),
-        ),
-        _melt_battery(
-            cur9_dsir_resample(spark, sf_dir),
-            "cur9",
-            F.col("doc_id"),
-            F.col("n_feats"),
-            F.col("sample_key"),
-        ),
-        _melt_battery(
             cur10_substring_decontamination(spark, sf_dir),
             "cur10",
             F.concat_ws(
@@ -979,13 +789,6 @@ def llm_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("n_hit_windows"),
             F.lit(None).cast("double"),
-        ),
-        _melt_battery(
-            tx8_lm_perplexity(spark, sf_dir),
-            "tx8",
-            F.col("doc_id"),
-            F.col("n_bigrams"),
-            F.col("avg_logprob"),
         ),
     ]
     out = parts[0]

@@ -245,6 +245,70 @@ def test_run_errors_without_files_or_range(tmp_path, dims_dir):
     assert rc == 2
 
 
+def test_corpus_curate_flags_bind_and_documents_table_required(
+    tmp_path, monkeypatch
+):
+    """Every corpus-curate flag reaches run_corpus_pipeline as a
+    keyword its signature accepts, and the pipeline refuses a corpus
+    dir without documents.parquet before it touches Spark. Spark-free:
+    the session and the pipeline are replaced by recorders."""
+    import argparse
+    import inspect
+
+    from inpe_queimadas_etl_spark import corpus_pipeline, session
+
+    run_corpus_pipeline = corpus_pipeline.run_corpus_pipeline
+    calls = []
+    monkeypatch.setattr(session, "get_spark", lambda **kw: "spark")
+    monkeypatch.setattr(
+        corpus_pipeline,
+        "run_corpus_pipeline",
+        lambda *a, **kw: calls.append((a, kw)) or {},
+    )
+    monkeypatch.setattr(cli, "_setup_logging", lambda log_dir: None)
+    argv = [
+        "corpus-curate",
+        "--corpus-dir", str(tmp_path / "in"),
+        "--out-dir", str(tmp_path / "out"),
+        "--eval-dir", str(tmp_path / "eval"),
+        "--decontaminate-by", "both",
+        "--weights", '{"src0": 2}',
+        "--mixture-temperature", "0.5",
+        "--token-budget", "100",
+        "--pack-budget", "64",
+        "--write-packs",
+        "--scrub-pii",
+        "--scrub-spans",
+        "--split-by", "content",
+        "--log-dir", str(tmp_path / "logs"),
+    ]
+    subparsers = next(
+        a
+        for a in cli.build_parser()._actions
+        if isinstance(a, argparse._SubParsersAction)
+    )
+    flags = {
+        s
+        for a in subparsers.choices["corpus-curate"]._actions
+        for s in a.option_strings
+        if s != "--help" and s.startswith("--")
+    }
+    assert flags == {a for a in argv if a.startswith("--")}
+
+    assert cli.main(argv) == 0
+    [(args, kwargs)] = calls
+    inspect.signature(run_corpus_pipeline).bind(*args, **kwargs)
+    assert args == ("spark", str(tmp_path / "in"), str(tmp_path / "out"))
+    assert kwargs["weights"] == {"src0": 2}
+    assert kwargs["split_by"] == "content"
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(ValueError, match="documents.parquet"):
+        run_corpus_pipeline(None, str(empty), str(tmp_path / "o"))
+    assert not (tmp_path / "o").exists()
+
+
 def test_validate_repo_structure_and_warehouse(spark, dims_dir, tmp_path):
     """validate-repo (reference validate_repo.py analog) needs a
     warehouse: the check fails on an empty warehouse, passes after a

@@ -231,44 +231,6 @@ def test_pack_rows_are_contiguous_within_files(pipeline_out):
     assert checked > 0
 
 
-def test_drain_accepted_sink_feeds_pipeline(spark, tmp_path):
-    """A batch_id-partitioned parquet dir with the minimal doc schema
-    (the shape of an upstream sink that writes one partition per
-    batch) is a valid corpus_dir: the pipeline stages it into the
-    table layout, fills the optional columns, and materializes
-    normally."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    stops = "the a of and to in"
-    accepted = tmp_path / "accepted"
-    for batch, ids in ((0, (1, 2, 3)), (1, (10, 11))):
-        d = accepted / f"batch_id={batch}"
-        d.mkdir(parents=True)
-        pq.write_table(
-            pa.Table.from_pandas(
-                pd.DataFrame(
-                    {
-                        "doc_id": list(ids),
-                        "text": [
-                            f"{stops} doc{z} body words here extra tail {z}"
-                            for z in ids
-                        ],
-                    }
-                ),
-                preserve_index=False,
-            ),
-            str(d / "part.parquet"),
-        )
-    out = str(tmp_path / "out")
-    manifest = run_corpus_pipeline(spark, str(accepted), out)
-    assert manifest["input_docs"] == 5
-    written = spark.read.parquet(os.path.join(out, "corpus"))
-    assert written.count() == manifest["mixture"]["kept"] > 0
-    assert {r["lang"] for r in written.select("lang").collect()} == {"und"}
-
-
 def test_custom_split_bounds_and_written_packs(spark, tmp_path):
     """split_bounds reshape the hash cut points (90/5/5 here) and
     write_packs materializes out/packs with conserved token mass."""
@@ -306,184 +268,6 @@ def test_cheap_params_validated_before_expensive_stages(spark, tmp_path):
     with pytest.raises(ValueError, match="negative token_budget"):
         run_corpus_pipeline(spark, SF0001, out, token_budget=-1)
     assert not os.path.exists(os.path.join(out, "corpus"))
-
-
-def test_jsonl_corpus_input(spark, tmp_path):
-    """A dir of JSONL shards (crawl-dump interchange) is a valid
-    corpus_dir: text required, doc_id synthesized when absent,
-    optional columns defaulted, pipeline materializes normally."""
-    import gzip
-    import json as json_mod
-
-    stops = "the a of and to in"
-    src = tmp_path / "dump"
-    src.mkdir()
-    with open(src / "part0.jsonl", "w", encoding="utf-8") as f:
-        for z in range(4):
-            f.write(
-                json_mod.dumps(
-                    {"text": f"{stops} shard0 doc{z} unique words {z}"}
-                )
-                + "\n"
-            )
-    with gzip.open(src / "part1.jsonl.gz", "wt", encoding="utf-8") as f:
-        for z in range(4, 7):
-            f.write(
-                json_mod.dumps(
-                    {"text": f"{stops} shard1 doc{z} other words {z}"}
-                )
-                + "\n"
-            )
-    out = str(tmp_path / "out")
-    manifest = run_corpus_pipeline(spark, str(src), out)
-    assert manifest["input_docs"] == 7
-    written = spark.read.parquet(os.path.join(out, "corpus"))
-    assert written.count() == manifest["mixture"]["kept"] > 0
-    assert written.select("doc_id").distinct().count() == written.count()
-
-    # a dump without text fails loudly
-    bad = tmp_path / "bad"
-    bad.mkdir()
-    with open(bad / "x.jsonl", "w", encoding="utf-8") as f:
-        f.write('{"body": "no text field"}\n')
-    with pytest.raises(ValueError, match="no 'text' field"):
-        run_corpus_pipeline(spark, str(bad), str(tmp_path / "out2"))
-
-
-def test_jsonl_id_policy(spark, tmp_path):
-    """String doc_ids map to stable hashed longs (original kept as
-    source_doc_id lineage); null doc_ids are refused loudly; a JSON
-    sidecar inside a parquet corpus does not flip the reader."""
-    import json as json_mod
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    stops = "the a of and to in"
-    # string ids
-    src = tmp_path / "sdump"
-    src.mkdir()
-    with open(src / "a.jsonl", "w", encoding="utf-8") as f:
-        for z in range(3):
-            f.write(
-                json_mod.dumps(
-                    {
-                        "doc_id": f"urn:uuid:{z}",
-                        "text": f"{stops} stringid doc words {z}",
-                    }
-                )
-                + "\n"
-            )
-    out = str(tmp_path / "out")
-    manifest = run_corpus_pipeline(spark, str(src), out)
-    assert manifest["input_docs"] == 3
-    written = spark.read.parquet(os.path.join(out, "corpus"))
-    assert "source_doc_id" in written.columns
-    got = {r["source_doc_id"] for r in written.collect()}
-    assert got <= {f"urn:uuid:{z}" for z in range(3)}
-
-    # null ids refused
-    bad = tmp_path / "ndump"
-    bad.mkdir()
-    with open(bad / "a.jsonl", "w", encoding="utf-8") as f:
-        f.write(json_mod.dumps({"doc_id": 1, "text": "x y"}) + "\n")
-        f.write(json_mod.dumps({"doc_id": None, "text": "y z"}) + "\n")
-    with pytest.raises(ValueError, match="null doc_id"):
-        run_corpus_pipeline(spark, str(bad), str(tmp_path / "out2"))
-
-    # sidecar json next to parquet: parquet wins
-    mixed = tmp_path / "mixed"
-    mixed.mkdir()
-    pq.write_table(
-        pa.Table.from_pandas(
-            pd.DataFrame(
-                {
-                    "doc_id": [1, 2],
-                    "text": [f"{stops} pq doc one", f"{stops} pq doc two"],
-                }
-            ),
-            preserve_index=False,
-        ),
-        str(mixed / "part.parquet"),
-    )
-    (mixed / "stats.jsonl").write_text('{"rows": 2}\n')
-    m2 = run_corpus_pipeline(spark, str(mixed), str(tmp_path / "out3"))
-    assert m2["input_docs"] == 2
-
-
-def test_jsonl_ids_split_robust(spark, tmp_path):
-    """The synthesized positional doc_ids are a pure function of the
-    file bytes: reading the SAME oversized plain .jsonl shard under a
-    tiny maxPartitionBytes (many splits) and under the default (one
-    split) yields IDENTICAL ids (VERDICT r5 "What's wrong" #2 — the
-    r5 scheme rode FilePartition's size-descending bin packing; the
-    _metadata.file_block_start ordering is offset order by
-    construction)."""
-    import json as json_mod
-
-    from inpe_queimadas_etl_spark.corpus_pipeline import _jsonl_doc_ids
-
-    src = tmp_path / "dump"
-    src.mkdir()
-    path = str(src / "big.jsonl")
-    with open(path, "w", encoding="utf-8") as f:
-        for z in range(4000):
-            f.write(
-                json_mod.dumps({"text": f"line {z:05d} " + "pad " * 16})
-                + "\n"
-            )
-
-    def read_ids(max_bytes: str, open_cost: str) -> tuple[dict, int]:
-        old_mb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        old_oc = spark.conf.get("spark.sql.files.openCostInBytes")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", max_bytes)
-        spark.conf.set("spark.sql.files.openCostInBytes", open_cost)
-        try:
-            df = spark.read.json(path)
-            n_parts = df.rdd.getNumPartitions()
-            rows = (
-                _jsonl_doc_ids(spark, df)
-                .select("text", "doc_id")
-                .collect()
-            )
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", old_mb)
-            spark.conf.set("spark.sql.files.openCostInBytes", old_oc)
-        ids = {r["text"]: r["doc_id"] for r in rows}
-        assert len(ids) == 4000  # texts unique, no id lost
-        return ids, n_parts
-
-    split_ids, split_parts = read_ids("65536", "0")
-    whole_ids, _ = read_ids("134217728", "4194304")
-    # the small setting must actually cut the shard, else the test
-    # proves nothing
-    assert split_parts > 1
-    assert split_ids == whole_ids
-    assert len(set(split_ids.values())) == 4000
-
-
-def test_string_id_collision_guard(spark):
-    """Two distinct source ids landing on the same 64-bit doc_id are
-    refused loudly (ADVICE r5): constructed colliding rows trip the
-    guard; distinct ids pass."""
-    import pytest as _pytest
-
-    from inpe_queimadas_etl_spark.corpus_pipeline import (
-        _assert_no_id_collisions,
-    )
-
-    ok = spark.createDataFrame(
-        [(1, "urn:a"), (2, "urn:b")], "doc_id long, source_doc_id string"
-    )
-    _assert_no_id_collisions(ok)  # no raise
-
-    collided = spark.createDataFrame(
-        [(1, "urn:a"), (1, "urn:b"), (2, "urn:c")],
-        "doc_id long, source_doc_id string",
-    )
-    with _pytest.raises(ValueError, match="collision.*urn:a.*urn:b"):
-        _assert_no_id_collisions(collided)
 
 
 def test_split_by_content_mode(spark, tmp_path):
@@ -609,105 +393,6 @@ def test_scrub_spans_stage(spark, tmp_path):
         "docs_scrubbed": 0,
         "tokens_removed": 0,
     }
-
-
-def test_lm_gate_and_dsir_selection_stages(spark, tmp_path):
-    """--min-lm-logprob + --dsir-target-dir/--dsir-keep: the bigram-LM
-    gate drops the incoherent docs, the DSIR draw then keeps k
-    target-like ones, and the manifest arithmetic stays consistent
-    with both gates accounted."""
-    import random
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.corpus_ops import ngram_lm_scores
-
-    rng = random.Random(97)
-    # 100 fixed word PAIRS: fluent docs draw 25 pairs each, so pair
-    # bigrams recur across docs (predictable transitions = high LM
-    # score) while whole-shingle overlap between any two docs stays
-    # far below near-dup range. All tokens distinct within a doc (no
-    # repeated 3-grams, top-word frac ~1/52 -> survives cur3).
-    pairs = [(f"a{i}", f"b{i}") for i in range(100)]
-    fluent = []
-    for i in range(20):
-        sel = rng.sample(pairs, 25)
-        fluent.append("the a " + " ".join(w for p in sel for w in p))
-    # junk: unique one-off tokens -> every bigram unseen elsewhere
-    junk = [
-        "the a " + " ".join(f"j{i}x{k}" for k in range(50))
-        for i in range(5)
-    ]
-    texts = fluent + junk
-    pdf = pd.DataFrame(
-        {"doc_id": range(len(texts)), "text": texts}
-    )
-    pdf["n_chars"] = pdf["text"].str.len()
-    pdf["lang"] = "en"
-    pdf["source"] = "src0"
-    src = tmp_path / "corpus"
-    src.mkdir()
-    pdf.to_parquet(src / "documents.parquet")
-
-    # target domain: fresh draws from the same pair vocabulary
-    tgt = pd.DataFrame(
-        {
-            "doc_id": range(1000, 1008),
-            "text": [
-                "the a "
-                + " ".join(w for p in rng.sample(pairs, 25) for w in p)
-                for _ in range(8)
-            ],
-        }
-    )
-    tdir = tmp_path / "target"
-    tdir.mkdir()
-    tgt.to_parquet(tdir / "documents.parquet")
-
-    # threshold: midpoint of the (asserted) fluent/junk separation
-    scores = (
-        ngram_lm_scores(
-            spark.createDataFrame(pdf[["doc_id", "text"]])
-        )
-        .toPandas()
-        .set_index("doc_id")["avg_logprob"]
-    )
-    fluent_min = scores.loc[range(20)].min()
-    junk_max = scores.loc[range(20, 25)].max()
-    assert fluent_min > junk_max, (fluent_min, junk_max)
-    thresh = (fluent_min + junk_max) / 2
-
-    out = str(tmp_path / "out")
-    manifest = run_corpus_pipeline(
-        spark,
-        str(src),
-        out,
-        min_lm_logprob=thresh,
-        dsir_target_dir=str(tdir),
-        dsir_keep=10,
-    )
-    assert manifest["lm_gate"]["enabled"]
-    assert manifest["lm_gate"]["dropped"] == 5
-    assert manifest["dsir"]["enabled"]
-    assert manifest["dsir"]["dropped"] == 10  # 20 fluent -> 10 drawn
-    assert (
-        manifest["mixture"]["in"]
-        == manifest["curation"]["kept"]
-        - manifest["repetition_dropped"]
-        - manifest["contaminated_dropped"]
-        - manifest["lm_gate"]["dropped"]
-        - manifest["dsir"]["dropped"]
-    )
-    written = spark.read.parquet(os.path.join(out, "corpus"))
-    ids = {r["doc_id"] for r in written.select("doc_id").collect()}
-    assert len(ids) == 10
-    assert ids <= set(range(20)), ids  # every junk doc is gone
-
-    # the two gates must be asked for together
-    with pytest.raises(ValueError, match="together"):
-        run_corpus_pipeline(
-            spark, str(src), str(tmp_path / "o2"), dsir_keep=5
-        )
 
 
 def test_mixture_temperature_pipeline_flag(spark, tmp_path):
@@ -867,25 +552,19 @@ def test_decontaminate_by_substrings_mode(spark, tmp_path):
 
 
 def test_full_selection_stack_single_invocation(spark, tmp_path):
-    """VERDICT r6 #7: the ENTIRE selection tier in one corpus-curate
-    invocation — --decontaminate-by both + --scrub-pii +
-    --min-lm-logprob + --scrub-spans + --dsir-* +
+    """Every optional gate in one corpus-curate invocation —
+    --decontaminate-by both + --scrub-pii + --scrub-spans +
     --mixture-temperature on the same corpus — with the manifest
     arithmetic holding across the whole stack and each stage's effect
     visible in the written corpus. Each gate is designed to fire on a
     DISTINCT planted slice so the per-stage counts are exact:
     curation keeps everything, decontam drops the two leak docs, PII
-    redacts three, the LM gate drops the five junk docs, the span
-    scrub rewrites the six boilerplate carriers, DSIR drops four, and
-    the temperature mixture downsamples the dominant source."""
+    redacts three, the span scrub rewrites the six boilerplate
+    carriers, and the temperature mixture downsamples the dominant
+    source."""
     import random
 
     import pandas as pd
-
-    from inpe_queimadas_etl_spark.corpus_ops import (
-        ngram_lm_scores,
-        pii_redact,
-    )
 
     rng = random.Random(41)
     stops = "the a"
@@ -902,10 +581,6 @@ def test_full_selection_stack_single_invocation(spark, tmp_path):
         if i < 3:  # three carry PII (email + phone = 2 matches each)
             text += f" contact u{i}@example.com or 555-0199 now"
         rows.append((i, text, "big"))
-    for i in range(20, 25):  # junk: every bigram unseen elsewhere
-        rows.append(
-            (i, f"{stops} " + " ".join(f"j{i}x{k}" for k in range(50)), "big")
-        )
     rows.append(  # shares ONE 3-shingle of the eval run
         (25, f"{stops} e0 e1 e2 " + " ".join(f"w25x{k}" for k in range(30)), "big")
     )
@@ -913,9 +588,6 @@ def test_full_selection_stack_single_invocation(spark, tmp_path):
         (26, f"{stops} {leak} " + " ".join(f"w26x{k}" for k in range(30)), "big")
     )
     for i in range(27, 31):  # scarce source, same fluent vocabulary
-        # (the mixture keys on the `source` label, not the text; a
-        # private vocabulary would recur only ~2x across 4 docs and
-        # score junk-like under the self-trained LM)
         body = [w for p in rng.sample(pairs, 18) for w in p]
         rows.append((i, f"{stops} " + " ".join(body), "small"))
     pdf = pd.DataFrame(rows, columns=["doc_id", "text", "source"])
@@ -931,34 +603,6 @@ def test_full_selection_stack_single_invocation(spark, tmp_path):
         {"doc_id": [900], "text": [f"prefix {leak} suffix"]}
     ).to_parquet(ed / "documents.parquet")
 
-    tdir = tmp_path / "target"  # DSIR target: fresh fluent draws
-    tdir.mkdir()
-    pd.DataFrame(
-        {
-            "doc_id": range(1000, 1008),
-            "text": [
-                f"{stops} "
-                + " ".join(w for p in rng.sample(pairs, 15) for w in p)
-                for _ in range(8)
-            ],
-        }
-    ).to_parquet(tdir / "documents.parquet")
-
-    # LM threshold: replicate the pipeline prefix exactly (decontam
-    # removes 25/26, PII redaction rewrites the text the LM sees),
-    # assert the fluent/junk separation, take the midpoint
-    surv = pdf[~pdf.doc_id.isin([25, 26])]
-    red = pii_redact(
-        spark.createDataFrame(surv[["doc_id", "text"]])
-    ).select("doc_id", "text")
-    scores = (
-        ngram_lm_scores(red).toPandas().set_index("doc_id")["avg_logprob"]
-    )
-    fluent_min = scores.loc[list(range(20)) + list(range(27, 31))].min()
-    junk_max = scores.loc[range(20, 25)].max()
-    assert fluent_min > junk_max, (fluent_min, junk_max)
-    thresh = (fluent_min + junk_max) / 2
-
     out = str(tmp_path / "out")
     manifest = run_corpus_pipeline(
         spark,
@@ -967,10 +611,7 @@ def test_full_selection_stack_single_invocation(spark, tmp_path):
         eval_dir=str(ed),
         decontaminate_by="both",
         scrub_pii=True,
-        min_lm_logprob=thresh,
         scrub_spans=True,
-        dsir_target_dir=str(tdir),
-        dsir_keep=20,
         mixture_temperature=0.5,
     )
 
@@ -979,11 +620,12 @@ def test_full_selection_stack_single_invocation(spark, tmp_path):
     assert manifest["contaminated_dropped"] == 2
     assert manifest["pii_scrub"]["docs_redacted"] == 3
     assert manifest["pii_scrub"]["matches"] == 6
-    assert manifest["lm_gate"]["dropped"] == 5
     assert manifest["span_scrub"]["docs_scrubbed"] == 6
     assert manifest["span_scrub"]["tokens_removed"] >= 6 * 20
-    assert manifest["dsir"]["dropped"] == 4
-    assert manifest["mixture"]["in"] == 20
+    # 20 fluent + 2 leak + 4 scarce docs, all kept by curation and
+    # the repetition gate; decontamination drops the 2 leaks
+    assert manifest["input_docs"] == 26
+    assert manifest["mixture"]["in"] == 24
     assert manifest["mixture"]["temperature"] == 0.5
     assert not manifest["mixture"]["skipped"]
 
@@ -993,8 +635,6 @@ def test_full_selection_stack_single_invocation(spark, tmp_path):
         == manifest["curation"]["kept"]
         - manifest["repetition_dropped"]
         - manifest["contaminated_dropped"]
-        - manifest["lm_gate"]["dropped"]
-        - manifest["dsir"]["dropped"]
     )
 
     # written corpus reflects every stage
@@ -1003,7 +643,7 @@ def test_full_selection_stack_single_invocation(spark, tmp_path):
     assert n_written == manifest["mixture"]["kept"]
     assert sum(s["docs"] for s in manifest["splits"].values()) == n_written
     ids = {r["doc_id"] for r in written.select("doc_id").collect()}
-    assert not ids & set(range(20, 27)), ids  # junk + leaks all gone
+    assert not ids & {25, 26}, ids  # both leaks gone
     assert (
         written.filter(
             written.text.contains("@example.com")
@@ -1021,287 +661,3 @@ def test_full_selection_stack_single_invocation(spark, tmp_path):
     )
     for col in ("split", "cluster_id", "shard", "pack_id", "tokens"):
         assert col in written.columns, col
-
-
-def test_bpe_merges_packing_stage(spark, tmp_path):
-    """--bpe-merges: the pipeline trains a tx9 merge table on the
-    final kept documents, packs in BPE subword tokens, writes the BPE
-    count as the `tokens` lineage, and records the measured
-    compression in the manifest."""
-    import random
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.operators.bpe import (
-        bpe_token_stats,
-        corpus_word_counts,
-        train_bpe,
-    )
-
-    rng = random.Random(67)
-    stops = "the a"
-    # 60 repeated word FORMS (so BPE has pairs worth merging), drawn
-    # per doc in independent random order (so 3-gram shingle overlap
-    # stays far below near-dup range and every doc survives curation)
-    vocab = [
-        "".join(rng.choice("abcdef") for _ in range(rng.randrange(4, 9)))
-        for _ in range(60)
-    ]
-    rows = []
-    for i in range(20):
-        body = rng.sample(vocab, 35)
-        rows.append((i, f"{stops} " + " ".join(body)))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    pdf["n_chars"] = pdf["text"].str.len()
-    pdf["lang"] = "en"
-    pdf["source"] = "src0"
-    src = tmp_path / "corpus"
-    src.mkdir()
-    pdf.to_parquet(src / "documents.parquet")
-
-    out = str(tmp_path / "out")
-    manifest = run_corpus_pipeline(
-        spark, str(src), out, bpe_merges=60, pack_budget=64
-    )
-    tok = manifest["tokenizer"]
-    assert tok["enabled"]
-    assert tok["merges_requested"] == 60
-    assert 0 < tok["merges_learned"] <= 60
-    assert tok["bpe_tokens"] > tok["ws_tokens"] > 0  # subwords >= words
-    assert tok["compression"] == round(
-        tok["ws_tokens"] / tok["bpe_tokens"], 4
-    )
-
-    # written `tokens` lineage equals per-doc BPE counts under the
-    # same trainer run on the same survivor set (everything survives
-    # here, so retraining reproduces the merge table exactly)
-    docs_sdf = spark.createDataFrame(pdf[["doc_id", "text"]])
-    merges = train_bpe(corpus_word_counts(docs_sdf), 60)
-    assert len(merges) == tok["merges_learned"]
-    expect = {
-        r["doc_id"]: r["n_bpe_tokens"]
-        for r in bpe_token_stats(docs_sdf, merges).collect()
-    }
-    written = spark.read.parquet(os.path.join(out, "corpus")).toPandas()
-    assert len(written) == 20
-    for _, r in written.iterrows():
-        assert r["tokens"] == expect[r["doc_id"]], r["doc_id"]
-    assert "n_bpe_tokens" not in written.columns
-
-    # pack assignment property in BPE units: within each
-    # (split, lang, shard) group ordered by doc_id,
-    # pack_id == floor(tokens-before-doc / budget)
-    for (_, _, _), grp in written.groupby(["split", "lang", "shard"]):
-        grp = grp.sort_values("doc_id")
-        cum_before = grp["tokens"].cumsum() - grp["tokens"]
-        assert (grp["pack_id"] == cum_before // 64).all()
-
-    # manifest split token masses are in BPE units too
-    assert sum(
-        s["tokens"] for s in manifest["splits"].values()
-    ) == sum(expect.values())
-
-    # default: stage off
-    m2 = run_corpus_pipeline(spark, str(src), str(tmp_path / "o2"))
-    assert m2["tokenizer"] == {"enabled": False}
-
-    with pytest.raises(ValueError, match="bpe_merges"):
-        run_corpus_pipeline(
-            spark, str(src), str(tmp_path / "o3"), bpe_merges=0
-        )
-
-
-def test_bpe_packs_carry_token_ids(spark, tmp_path):
-    """--bpe-merges + --write-packs: pack rows carry trainer-ready
-    token_ids — members' subword id sequences concatenated in doc_id
-    order — aligned with member_tokens/token_offsets in the same BPE
-    unit; the corpus export does NOT carry per-doc id arrays; the
-    manifest records the vocab size."""
-    import random
-
-    import pandas as pd
-
-    rng = random.Random(71)
-    stops = "the a"
-    vocab_words = [
-        "".join(rng.choice("abcdef") for _ in range(rng.randrange(4, 9)))
-        for _ in range(60)
-    ]
-    rows = []
-    for i in range(20):
-        body = rng.sample(vocab_words, 35)
-        rows.append((i, f"{stops} " + " ".join(body)))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    pdf["n_chars"] = pdf["text"].str.len()
-    pdf["lang"] = "en"
-    pdf["source"] = "src0"
-    src = tmp_path / "corpus"
-    src.mkdir()
-    pdf.to_parquet(src / "documents.parquet")
-
-    out = str(tmp_path / "out")
-    manifest = run_corpus_pipeline(
-        spark,
-        str(src),
-        out,
-        bpe_merges=60,
-        pack_budget=64,
-        write_packs=True,
-    )
-    assert manifest["tokenizer"]["vocab_size"] > 0
-
-    written = spark.read.parquet(os.path.join(out, "corpus"))
-    assert "token_ids" not in written.columns
-
-    packs = spark.read.parquet(os.path.join(out, "packs")).toPandas()
-    assert len(packs) > 0
-    assert "token_ids" in packs.columns
-    per_doc = {
-        r["doc_id"]: r["tokens"]
-        for _, r in written.toPandas().iterrows()
-    }
-    for _, p in packs.iterrows():
-        ids = list(p["token_ids"])
-        mt = list(p["member_tokens"])
-        offs = list(p["token_offsets"])
-        assert len(ids) == p["total_tokens"] == sum(mt)
-        # offsets are the exclusive prefix sum of member lengths
-        acc = 0
-        for k, m in zip(offs, mt):
-            assert k == acc
-            acc += m
-        # members appear in ascending doc_id order with their own
-        # BPE lengths (the written per-doc `tokens` lineage)
-        dids = list(p["doc_ids"])
-        assert dids == sorted(dids)
-        for d, m in zip(dids, mt):
-            assert per_doc[d] == m
-
-
-def test_export_format_jsonl(spark, tmp_path):
-    """--export-format jsonl: the corpus (and packs) write as
-    split-partitioned JSON-lines shards — the interchange format
-    tokenizer/training workers stream — with the same manifest
-    accounting, read back from what was actually written."""
-    import glob
-
-    out = str(tmp_path / "out")
-    manifest = run_corpus_pipeline(
-        spark, SF0001, out, export_format="jsonl", write_packs=True
-    )
-    assert manifest["export_format"] == "jsonl"
-    files = glob.glob(os.path.join(out, "corpus", "split=*", "*.json"))
-    assert files, os.listdir(os.path.join(out, "corpus"))
-    assert not glob.glob(
-        os.path.join(out, "corpus", "split=*", "*.parquet")
-    )
-    written = spark.read.json(os.path.join(out, "corpus"))
-    assert written.count() == manifest["mixture"]["kept"]
-    assert {"doc_id", "text", "tokens", "pack_id", "split"} <= set(
-        written.columns
-    )
-    # first line of a shard is a JSON object with the lineage keys
-    with open(files[0], encoding="utf-8") as f:
-        row = json.loads(f.readline())
-    assert "doc_id" in row and "text" in row
-    packs = spark.read.json(os.path.join(out, "packs"))
-    assert packs.count() > 0 and "token_offsets" in packs.columns
-
-    with pytest.raises(ValueError, match="export_format"):
-        run_corpus_pipeline(
-            spark, SF0001, str(tmp_path / "o2"), export_format="orc"
-        )
-
-
-def test_bpe_tokenizer_artifact_and_frozen_reuse(spark, tmp_path):
-    """VERDICT r7 #4: a --bpe-merges run PERSISTS the tokenizer
-    (out_dir/tokenizer.json + manifest path/sha256); a later run over
-    a DIFFERENT corpus with --bpe-tokenizer encodes under the frozen
-    table — no retrain, same fingerprint, token counts exactly what
-    the frozen table produces."""
-    import random
-
-    import pandas as pd
-
-    from inpe_queimadas_etl_spark.operators.bpe import (
-        bpe_token_stats,
-        load_tokenizer,
-        tokenizer_sha256,
-    )
-
-    rng = random.Random(41)
-    vocab = [
-        "".join(rng.choice("abcdef") for _ in range(rng.randrange(4, 9)))
-        for _ in range(60)
-    ]
-
-    def mk_corpus(path, n, seed_off):
-        rows = []
-        r2 = random.Random(seed_off)
-        for i in range(n):
-            rows.append((i, "the a " + " ".join(r2.sample(vocab, 35))))
-        pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-        pdf["n_chars"] = pdf["text"].str.len()
-        pdf["lang"] = "en"
-        pdf["source"] = "src0"
-        path.mkdir()
-        pdf.to_parquet(path / "documents.parquet")
-        return pdf
-
-    mk_corpus(tmp_path / "corpus_a", 20, 7)
-    mk_corpus(tmp_path / "corpus_b", 15, 99)
-
-    out_a = str(tmp_path / "out_a")
-    m_a = run_corpus_pipeline(
-        spark, str(tmp_path / "corpus_a"), out_a, bpe_merges=60
-    )
-    art = m_a["tokenizer"]["tokenizer"]
-    assert art["trained"] is True
-    assert os.path.exists(art["path"])
-    assert art["path"] == os.path.join(out_a, "tokenizer.json")
-    merges, voc = load_tokenizer(art["path"])
-    assert tokenizer_sha256(merges, voc) == art["sha256"]
-    assert m_a["tokenizer"]["vocab_size"] == len(voc)
-
-    # frozen reuse over corpus B: no retrain, same fingerprint
-    out_b = str(tmp_path / "out_b")
-    m_b = run_corpus_pipeline(
-        spark,
-        str(tmp_path / "corpus_b"),
-        out_b,
-        bpe_tokenizer=art["path"],
-    )
-    art_b = m_b["tokenizer"]["tokenizer"]
-    assert art_b["trained"] is False
-    assert art_b["sha256"] == art["sha256"]
-    assert m_b["tokenizer"]["merges_requested"] is None
-    assert m_b["tokenizer"]["merges_learned"] == len(merges)
-    # the frozen path re-saves a CO-LOCATED copy so the export is
-    # self-contained (ADVICE r8): same canonical payload, same sha,
-    # with the caller's source path recorded alongside
-    assert art_b["path"] == os.path.join(out_b, "tokenizer.json")
-    assert art_b["source_path"] == art["path"]
-    m2, v2 = load_tokenizer(art_b["path"])
-    assert tokenizer_sha256(m2, v2) == art["sha256"]
-
-    # written token lineage == counts under the FROZEN table
-    docs_b = spark.read.parquet(
-        str(tmp_path / "corpus_b" / "documents.parquet")
-    ).select("doc_id", "text")
-    expect = {
-        r["doc_id"]: r["n_bpe_tokens"]
-        for r in bpe_token_stats(docs_b, merges).collect()
-    }
-    written = spark.read.parquet(os.path.join(out_b, "corpus")).toPandas()
-    for _, r in written.iterrows():
-        assert r["tokens"] == expect[r["doc_id"]], r["doc_id"]
-
-    # train-vs-freeze are mutually exclusive
-    with pytest.raises(ValueError, match="not both"):
-        run_corpus_pipeline(
-            spark,
-            str(tmp_path / "corpus_b"),
-            str(tmp_path / "o_x"),
-            bpe_merges=10,
-            bpe_tokenizer=art["path"],
-        )

@@ -1,17 +1,13 @@
-"""Export sinks: shard caps, range clustering, and round-trip
+"""Export sink: shard caps, range clustering, and round-trip
 fidelity are the layout contract a downstream trainer relies on."""
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 import pyarrow.parquet as pq
 
-from inpe_queimadas_etl_spark.export import (
-    export_jsonl,
-    export_sharded_parquet,
-)
+from inpe_queimadas_etl_spark.export import export_sharded_parquet
 from inpe_queimadas_etl_spark.session import load_table
 
 SF0001 = "/root/testdata/sf0.001"
@@ -60,20 +56,3 @@ def test_partitioned_export_writes_partition_dirs(spark, tmp_path):
     expect = {r["lang"] for r in docs.select("lang").distinct().collect()}
     assert langs == expect
     assert spark.read.parquet(out).count() == docs.count()
-
-
-def test_jsonl_roundtrip(spark, tmp_path):
-    docs = load_table(spark, SF0001, "documents").select(
-        "doc_id", "text", "lang"
-    )
-    out = str(tmp_path / "jsonl")
-    export_jsonl(docs, out, n_shards=2)
-    rows = []
-    for f in Path(out).glob("part-*"):
-        with open(f, encoding="utf-8") as fh:
-            rows.extend(json.loads(line) for line in fh if line.strip())
-    assert len(rows) == docs.count()
-    sample = {r["doc_id"]: r["text"] for r in rows}
-    probe = docs.limit(5).collect()
-    for r in probe:
-        assert sample[r["doc_id"]] == r["text"]

@@ -17,17 +17,12 @@ import re
 
 import pytest
 
-from inpe_queimadas_etl_spark.corpus_ops import _tx8_map_to_vocab
-
 from .corpus_oracles import (
     CHECKS,
     cur5_mixture_resample,
     cur6_leakfree_split,
-    cur8_dsir_selection,
-    cur9_dsir_resample,
     cur10_substring_decontamination,
     dd10_duplicate_spans,
-    tx8_lm_perplexity,
 )
 
 SF0001 = "/root/testdata/sf0.001"
@@ -94,67 +89,6 @@ def test_dd10_shuffles_on_uniform_hash_and_doc(spark):
     assert "CartesianProduct" not in plan, plan
     assert "hashpartitioning(whash" in plan, plan
     assert "hashpartitioning(doc_id" in plan, plan
-
-
-def test_tx8_model_joins_broadcast_corpus_never_token_shuffled(spark):
-    """tx8's 100-TB contract: the model is small by construction
-    (top-V vocab via TakeOrdered, <= (V+1)^2 bigram rows), so every
-    model-side join BROADCASTS — the corpus is never hashed on a
-    token key. The only exchanges carry map-side-combined partials
-    over distinct keys (vocab, C1, C2) and final per-doc score rows."""
-    plan = _plan(tx8_lm_perplexity(spark, SF0001), "simple")
-    assert "SortMergeJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    # r12: C1 is read off the driver-side token-count collect (no
-    # corpus pass, no exchange) and the corpus bigram stream folds
-    # into ONE checkpointed per-doc histogram whose build exchange
-    # lives behind the Scan ExistingRDD below — the visible plan
-    # keeps only the C2 rollup (<= (V+1)^2 keys off the histogram)
-    # and the per-doc score rollup
-    assert n_shuffles == 2, f"C2 + per-doc rollup:\n{plan}"
-    # the vocab is a materialized local relation, never re-derived
-    # inside broadcast build sides (each re-derivation would be a
-    # full corpus token scan at 100 TB)
-    assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan, plan
-    assert "partial" in plan.lower(), plan
-
-
-def test_tx8_vocab_mapping_refuses_unknown_column(spark):
-    """The InSet vocab mapping must fail fast on a misspelled column
-    (the broadcast-join form it replaced raised on one) instead of
-    silently returning the column unmapped."""
-    df = spark.createDataFrame([("a", "b")], "w1 string, w2 string")
-    with pytest.raises(ValueError, match="w3"):
-        _tx8_map_to_vocab(df, ["a"], "w1", "w3")
-    mapped = _tx8_map_to_vocab(df, ["a"], "w1", "w2").collect()
-    assert [tuple(r) for r in mapped] == [("a", "<unk>")]
-
-
-def test_cur8_model_broadcasts_corpus_never_feature_shuffled(spark):
-    """cur8's 100-TB contract: the model is B rows by construction, so
-    the B-row log-ratio table BROADCASTS into the scoring pass and the
-    corpus feature stream is never hashed on a bucket key for a join.
-    The only exchanges carry map-side-combined partials over <= B
-    distinct keys (tc, rc), single-row totals (nt, nr), or final
-    per-document score rows (the doc_id rollup)."""
-    plan = _plan(cur8_dsir_selection(spark, SF0001), "simple")
-    assert "SortMergeJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    assert "partial" in plan.lower(), plan
-
-
-def test_cur9_takeordered_no_global_sort(spark):
-    """cur9's selection is TakeOrdered — per-partition k-row heaps
-    merged on the driver — never a full corpus sort, and it inherits
-    cur8's broadcast-only model joins."""
-    plan = _plan(cur9_dsir_resample(spark, SF0001), "simple")
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_cur10_eval_broadcasts_corpus_rolls_up_once(spark):

@@ -7,10 +7,8 @@ thin."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 import random
-from collections import Counter
 
 import duckdb
 import pandas as pd
@@ -19,40 +17,26 @@ import pyarrow.parquet as pq
 import pytest
 
 from inpe_queimadas_etl_spark.corpus_ops import (
-    _CUR9_K,
-    _CUR9_SALT,
     _CUR10_WIN,
     _DD10_WIN,
-    dsir_gumbel_topk,
-    ngram_lm_scores,
     substring_contamination,
 )
-from inpe_queimadas_etl_spark.session import load_table
 
 from .corpus_oracles import (
-    _CUR8_CTE,
     CHECKS,
     CUR5_SQL,
     CUR6_SQL,
-    CUR8_SQL,
-    CUR9_SQL,
     CUR10_SQL,
     DD9_SQL,
     DD10_SQL,
     DD11_SQL,
-    TX8_SQL,
-    _hex_to_int_sql,
     cluster_aware_split,
     cur5_mixture_resample,
     cur6_leakfree_split,
-    cur8_dsir_selection,
-    cur9_dsir_resample,
     cur10_substring_decontamination,
     dd9_canonical_keeper,
     dd10_duplicate_spans,
     dd11_span_scrub,
-    dsir_logweights,
-    tx8_lm_perplexity,
 )
 
 SF0001 = "/root/testdata/sf0.001"
@@ -305,278 +289,6 @@ def test_dd11_scrubs_exactly_the_planted_run(spark, tmp_path):
         assert r["n_tokens_before"] - r["n_tokens_removed"] == len(
             r["clean_text"].split(" ")
         ) if r["clean_text"] else True
-
-
-def test_tx8_lm_perplexity_matches_oracle(spark):
-    """CCNet-shaped bigram-LM quality scoring (Laplace-smoothed, top-V
-    vocab, OOV -> <unk>)."""
-    _compare_to_oracle(
-        spark, "tx8_lm_perplexity", tx8_lm_perplexity, TX8_SQL
-    )
-
-
-def test_tx8_matches_pure_python_mirror(spark, tmp_path):
-    """Planted corpus vs an independent pure-Python bigram-LM mirror:
-    vocab cut ties (count DESC, token ASC), OOV folding to <unk> on
-    BOTH bigram sides, Laplace denominators, and the <2-token doc
-    emitting no row."""
-    texts = {
-        0: "the cat sat on the mat",
-        1: "the dog sat on the log",
-        2: "cat dog cat dog cat",
-        3: "zebra",  # 1 token -> no bigrams -> no row
-        4: "the the the",
-    }
-    V = 4
-
-    toks = {d: t.split(" ") for d, t in texts.items()}
-    cnt = Counter(t for ts in toks.values() for t in ts)
-    vocab = {
-        t
-        for t, _ in sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:V]
-    }
-    vt = len(vocab) + 1
-    m = lambda t: t if t in vocab else "<unk>"  # noqa: E731
-    uni = Counter(m(t) for ts in toks.values() for t in ts)
-    bi = Counter(
-        (m(a), m(b)) for ts in toks.values() for a, b in zip(ts, ts[1:])
-    )
-    expect = {}
-    for d, ts in toks.items():
-        grams = [(m(a), m(b)) for a, b in zip(ts, ts[1:])]
-        if not grams:
-            continue
-        lps = [
-            math.log((bi[g] + 1) / (uni[g[0]] + vt)) for g in grams
-        ]
-        expect[d] = (len(grams), round(sum(lps) / len(lps), 4))
-
-    pdf = pd.DataFrame(
-        {"doc_id": list(texts), "text": list(texts.values())}
-    )
-    docs = spark.createDataFrame(pdf)
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["avg_logprob"])
-        for r in ngram_lm_scores(docs, vocab_size=V).collect()
-    }
-    assert got == expect
-    assert 3 not in got
-
-
-def test_cur8_dsir_selection_matches_oracle(spark):
-    """DSIR hashed-ngram importance weighting (Xie et al. 2023) with
-    target = the 'en' slice."""
-    _compare_to_oracle(
-        spark, "cur8_dsir_selection", cur8_dsir_selection, CUR8_SQL
-    )
-
-
-def test_cur8_matches_pure_python_mirror(spark):
-    """Planted corpus vs an independent pure-Python DSIR mirror:
-    unigram+bigram OCCURRENCE features, md5-prefix bucket hashing,
-    Laplace-smoothed target/raw bucket distributions, and the
-    log-ratio sum."""
-    B = 32
-    texts = {
-        0: "the cat sat on the mat",
-        1: "le chat noir dort",
-        2: "the dog ate the cat",
-        3: "chat",
-        4: "the the the",
-    }
-    target_ids = {0, 2, 4}
-
-    def feats(text):
-        ws = text.split(" ")
-        return ws + [f"{a} {b}" for a, b in zip(ws, ws[1:])]
-
-    def bucket(f):
-        return int(hashlib.md5(f.encode()).hexdigest()[:8], 16) % B
-
-    per_doc = {d: [bucket(f) for f in feats(t)] for d, t in texts.items()}
-    tc = Counter(b for d in target_ids for b in per_doc[d])
-    rc = Counter(b for d in texts for b in per_doc[d])
-    nt = sum(tc.values())
-    nr = sum(rc.values())
-    lr = {
-        b: math.log((tc.get(b, 0) + 1) / (nt + B))
-        - math.log((cr + 1) / (nr + B))
-        for b, cr in rc.items()
-    }
-    expect = {
-        d: (len(bs), round(sum(lr[b] for b in bs), 4))
-        for d, bs in per_doc.items()
-    }
-
-    pdf = pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
-    corpus = spark.createDataFrame(pdf)
-    target = corpus.filter(corpus.doc_id.isin(list(target_ids)))
-    got = {
-        r["doc_id"]: (r["n_feats"], r["dsir_logweight"])
-        for r in dsir_logweights(corpus, target, buckets=B).collect()
-    }
-    assert got == expect
-
-
-def test_cur8_separates_target_language(spark):
-    """The demo geometry's point: with target = the 'en' slice, the
-    mean DSIR log-weight of 'en' documents must exceed every other
-    language's mean (the paper's discrimination property)."""
-    scores = cur8_dsir_selection(spark, SF0001).toPandas()
-    langs = (
-        load_table(spark, SF0001, "documents")
-        .select("doc_id", "lang")
-        .toPandas()
-    )
-    means = scores.merge(langs, on="doc_id").groupby("lang")[
-        "dsir_logweight"
-    ].mean()
-    assert means.idxmax() == "en", means.to_dict()
-    others = means.drop("en")
-    assert (means["en"] > others).all(), means.to_dict()
-
-
-def test_cur9_dsir_resample_matches_oracle(spark):
-    """Deterministic Gumbel-top-k draw over the DSIR importance
-    weights (Xie et al. 2023 selection step)."""
-    _compare_to_oracle(
-        spark, "cur9_dsir_resample", cur9_dsir_resample, CUR9_SQL
-    )
-
-
-def test_cur9_boundary_gap(spark):
-    """The cross-engine stability argument: the gap between the k-th
-    and (k+1)-th sample key must clear the ~1e-13 summation-order +
-    ln-ulp drift band by orders of magnitude (measured 2.5e-2 at
-    sf0.001; continuous Gumbel noise makes exact ties measure-zero)."""
-    h = _hex_to_int_sql(
-        f"substr(md5('{_CUR9_SALT}:' || CAST(doc_id AS VARCHAR)),1,8)"
-    )
-    q = f"""WITH {_CUR8_CTE},
-    keyed AS (SELECT doc_id,
-                     lw + (-ln(-ln((({h}) + 0.5) / 4294967296.0))) AS key
-              FROM scored)
-    SELECT key FROM keyed ORDER BY key DESC LIMIT 2 OFFSET {_CUR9_K - 1}"""
-    top, nxt = _duck(SF0001, q)["key"]
-    assert top - nxt > 1e-6, (top, nxt)
-
-
-def test_cur9_matches_pure_python_mirror(spark):
-    """Planted corpus vs a pure-Python Gumbel-top-k mirror: salted
-    md5 uniform, inverse-CDF Gumbel, raw-double selection order, and
-    a different salt drawing a different sample."""
-    B = 32
-    texts = {
-        0: "the cat sat on the mat",
-        1: "le chat noir dort",
-        2: "the dog ate the cat",
-        3: "chat",
-        4: "the the the",
-        5: "el perro come la carne",
-        6: "the mat sat on the dog",
-    }
-    target_ids = {0, 2, 4, 6}
-    K = 3
-
-    def feats(text):
-        ws = text.split(" ")
-        return ws + [f"{a} {b}" for a, b in zip(ws, ws[1:])]
-
-    def bucket(f):
-        return int(hashlib.md5(f.encode()).hexdigest()[:8], 16) % B
-
-    per_doc = {d: [bucket(f) for f in feats(t)] for d, t in texts.items()}
-    tc = Counter(b for d in target_ids for b in per_doc[d])
-    rc = Counter(b for d in texts for b in per_doc[d])
-    nt, nr = sum(tc.values()), sum(rc.values())
-    lr = {
-        b: math.log((tc.get(b, 0) + 1) / (nt + B))
-        - math.log((cr + 1) / (nr + B))
-        for b, cr in rc.items()
-    }
-
-    def draw(salt):
-        keyed = []
-        for d, bs in per_doc.items():
-            lw = sum(lr[b] for b in bs)
-            h = int(
-                hashlib.md5(f"{salt}:{d}".encode()).hexdigest()[:8], 16
-            )
-            g = -math.log(-math.log((h + 0.5) / 4294967296.0))
-            keyed.append((lw + g, -d, d, lw, len(bs)))
-        keyed.sort(reverse=True)
-        return [
-            (d, nf, round(lw, 4), round(key, 4))
-            for key, _, d, lw, nf in keyed[:K]
-        ]
-
-    pdf = pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
-    corpus = spark.createDataFrame(pdf)
-    target = corpus.filter(corpus.doc_id.isin(list(target_ids)))
-
-    for salt in ("dsir", "dsir-seed2"):
-        got = [
-            (r["doc_id"], r["n_feats"], r["dsir_logweight"], r["sample_key"])
-            for r in dsir_gumbel_topk(
-                corpus, target, k=K, buckets=B, salt=salt
-            ).collect()
-        ]
-        assert got == draw(salt), (salt, got, draw(salt))
-    assert {d for d, *_ in draw("dsir")} != {
-        d for d, *_ in draw("dsir-seed2")
-    }, "two salts drew the identical sample on this corpus"
-
-
-def test_tx8_heldout_reference_matches_mirror(spark):
-    """The deployment shape: the LM trains on a held-out reference
-    slice and only scores the corpus — checked against a pure-Python
-    mirror including Laplace zero counts for bigrams/unigrams the
-    reference never saw."""
-    texts = {
-        0: "the cat sat on the mat",
-        1: "the dog sat on the log",
-        2: "totally novel words appearing nowhere else",
-        3: "the cat ate the dog",
-    }
-    ref_ids = {0, 1}
-    V = 6
-
-    toks = {d: t.split(" ") for d, t in texts.items()}
-    ref_toks = [toks[d] for d in sorted(ref_ids)]
-    cnt = Counter(t for ts in ref_toks for t in ts)
-    vocab = {
-        t
-        for t, _ in sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:V]
-    }
-    vt = len(vocab) + 1
-    m = lambda t: t if t in vocab else "<unk>"  # noqa: E731
-    uni = Counter(m(t) for ts in ref_toks for t in ts)
-    bi = Counter(
-        (m(a), m(b)) for ts in ref_toks for a, b in zip(ts, ts[1:])
-    )
-    expect = {}
-    for d, ts in toks.items():
-        grams = [(m(a), m(b)) for a, b in zip(ts, ts[1:])]
-        if not grams:
-            continue
-        lps = [
-            math.log((bi.get(g, 0) + 1) / (uni.get(g[0], 0) + vt))
-            for g in grams
-        ]
-        expect[d] = (len(grams), round(sum(lps) / len(lps), 4))
-
-    pdf = pd.DataFrame(
-        {"doc_id": list(texts), "text": list(texts.values())}
-    )
-    docs = spark.createDataFrame(pdf)
-    ref = docs.filter(docs.doc_id.isin(list(ref_ids)))
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["avg_logprob"])
-        for r in ngram_lm_scores(
-            docs, vocab_size=V, reference=ref
-        ).collect()
-    }
-    assert got == expect
 
 
 def test_cur10_substring_decontamination_matches_oracle(spark):
